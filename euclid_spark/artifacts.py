@@ -155,10 +155,13 @@ def save_frame(
 
 def stat_min_max(name: str, fp: str, column: str) -> "tuple":
     """(MIN, MAX) of a column across a served artifact's parquet FOOTER
-    statistics — the stat_max discipline for both bounds at once (the
-    day-tile faces need the tile span; an `agg(min, max)` on the frame
-    scans every tile row, which grows with the corpus). Returns
-    (None, None) when the artifact is empty or carries no stats."""
+    statistics — O(row groups) metadata reads, never a data scan. The
+    served-metadata fetch every tile-tree and day-tile query needs (its
+    max level / max block / tile span): an `agg(min, max)` on the
+    artifact frame scans every tile row, which GROWS WITH THE CORPUS and
+    quietly breaks the O(log range) query-cost claim; the footer
+    already holds the answer. Returns (None, None) when the artifact is
+    empty or carries no stats."""
     import pyarrow.parquet as pq
 
     lo = hi = None
@@ -190,32 +193,6 @@ def served_span(frame: "DataFrame", name: str, fp: str, column: str):
             F.min(column).alias("lo"), F.max(column).alias("hi")
         ).collect()[0]
         return row["lo"], row["hi"]
-
-
-def stat_max(name: str, fp: str, column: str):
-    """MAX of a column across a served artifact's parquet FOOTER
-    statistics — O(row groups) metadata reads, never a data scan. The
-    served-metadata fetch every tile-tree query needs (its max level /
-    max block): an `agg(max(...))` on the artifact frame scans every
-    tile row, which GROWS WITH THE CORPUS and quietly breaks the
-    O(log range) query-cost claim; the footer already holds the answer.
-    Returns None when the artifact is empty or carries no stats."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    best = None
-    for p in glob.glob(os.path.join(_path(name, fp), "*.parquet")):
-        md = pq.ParquetFile(p).metadata
-        for i in range(md.num_row_groups):
-            rg = md.row_group(i)
-            for j in range(rg.num_columns):
-                col = rg.column(j)
-                if col.path_in_schema == column:
-                    st = col.statistics
-                    if st is not None and st.has_min_max:
-                        best = st.max if best is None else max(best, st.max)
-    return best
 
 
 def serve_frame(

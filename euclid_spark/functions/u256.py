@@ -348,7 +348,7 @@ def u256_carry_hex(s0: Column, s1: Column, s2: Column, s3: Column) -> Column:
     trick: SUM each limb independently — map-side combinable — then
     carry-normalize ONCE here, mod 2²⁵⁶). Shared by A13's total fold
     (operators/merkle._owner_rewards_from_leaves) and the streaming
-    reward view (streaming/faces.stream_erc20_rewards)."""
+    reward view (the stream_erc20_rewards row of streaming/faces.py)."""
     two64 = F.lit(str(2**64)).cast(DEC38)
     limbs: list[Column] = []
     carry: Column = F.lit(0).cast(DEC38)

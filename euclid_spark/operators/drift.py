@@ -27,7 +27,7 @@ estimate); the final PSI is ROUND(·, 6).  Hash-checked end to end.
 Scale shape (the r13 plan lesson: a first draft that re-referenced a
 shared events subframe planned TWENTY scans — every DataFrame re-use
 re-expands its lineage): the split day comes from PARQUET FOOTER
-STATISTICS (O(row groups) metadata, never a data scan — the stat_max
+STATISTICS (O(row groups) metadata, never a data scan — the stat_min_max
 discipline), the reference bounds are ONE scan whose ts < split
 predicate PUSHES DOWN to the parquet reader (row-group / partition
 pruning: at 100 TB the baseline window is usually a thin recent

@@ -137,7 +137,7 @@ def merkle_levels(
 def _served_depth(nodes: DataFrame, name: str, fp: str) -> "int | None":
     """Tree depth (max level) of a SERVED node artifact from its parquet
     FOOTER statistics — O(row groups) metadata reads, no Spark job (the
-    range_tree.stat_max discipline: the previous `agg(max(level))` here
+    artifacts.stat_min_max discipline: the previous `agg(max(level))` here
     scanned every node row on EVERY query call, a per-call job whose
     cost grows with the corpus). Falls back to the frame aggregate on
     remote/unstatable artifact roots, where footers aren't a local
@@ -145,7 +145,7 @@ def _served_depth(nodes: DataFrame, name: str, fp: str) -> "int | None":
     from euclid_spark import artifacts
 
     try:
-        ml = artifacts.stat_max(name, fp, "level")
+        ml = artifacts.stat_min_max(name, fp, "level")[1]
     except Exception:  # remote artifact store — resolve through Spark
         ml = nodes.agg(F.max("level")).collect()[0][0]
     return None if ml is None else int(ml)

@@ -245,8 +245,8 @@ def serve_range_commitments(
     )
     # served metadata from parquet footers — a frame agg(max) would
     # scan every node row, which grows with the corpus
-    md = artifacts.stat_max(f"rr_{family}_celltree", fp, "level")
-    icd = artifacts.stat_max(f"rr_{family}_incell", fp, "level")
+    md = artifacts.stat_min_max(f"rr_{family}_celltree", fp, "level")[1]
+    icd = artifacts.stat_min_max(f"rr_{family}_incell", fp, "level")[1]
     return (
         leaves,
         incell,

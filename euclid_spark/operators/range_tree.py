@@ -173,14 +173,13 @@ def range_tree_agg(
     from euclid_spark import artifacts
 
     tiles = serve_range_tree(spark, sf_dir)
-    # served metadata from parquet FOOTER statistics (the stat_max
-    # discipline — the previous two-scalar agg scanned every tile row
-    # per call, a job that grows with the corpus); Spark fallback for
-    # remote artifact roots
+    # served metadata from parquet FOOTER statistics (the previous
+    # two-scalar agg scanned every tile row per call, a job that grows
+    # with the corpus); Spark fallback for remote artifact roots
     try:
         fp = _range_tree_fp(sf_dir)
-        ml = artifacts.stat_max("range_tree_tiles", fp, "level")
-        mb = artifacts.stat_max("range_tree_tiles", fp, "max_block")
+        ml = artifacts.stat_min_max("range_tree_tiles", fp, "level")[1]
+        mb = artifacts.stat_min_max("range_tree_tiles", fp, "max_block")[1]
     except Exception:  # remote artifact store — resolve through Spark
         meta = tiles.agg(
             F.max("level").alias("ml"), F.max(F.col("max_block")).alias("mb")
@@ -417,7 +416,9 @@ def _served_max_block(spark: SparkSession, sf_dir: str) -> int:
     from euclid_spark import artifacts
 
     serve_range_tree(spark, sf_dir)
-    mb = artifacts.stat_max("range_tree_tiles", _range_tree_fp(sf_dir), "max_block")
+    mb = artifacts.stat_min_max(
+        "range_tree_tiles", _range_tree_fp(sf_dir), "max_block"
+    )[1]
     return int(mb or 0)
 
 
@@ -522,7 +523,9 @@ def q2_range_tree_topl(
     # served metadata from the parquet footer — an agg(max) here would
     # scan every tile row and grow with the corpus (measured: the 100×
     # probe's residual slope was exactly this fetch)
-    ml = artifacts.stat_max("q2_key_tiles", _q2_key_fp(sf_dir, contract), "level")
+    ml = artifacts.stat_min_max(
+        "q2_key_tiles", _q2_key_fp(sf_dir, contract), "level"
+    )[1]
     if ml is None:  # no qualifying entries anywhere
         return spark.createDataFrame(
             [],
@@ -790,11 +793,11 @@ def erc20_range_tree_reward(
 
     tiles = serve_erc20_reward_tree(spark, sf_dir, rewards_rate, contract)
     # footer-stats metadata fetch — see q2_range_tree_topl's note
-    ml = artifacts.stat_max(
+    ml = artifacts.stat_min_max(
         "erc20_reward_tiles",
         _erc20_tree_fp(sf_dir, rewards_rate, contract),
         "level",
-    )
+    )[1]
     if ml is None:
         return spark.createDataFrame([], _ERC20_EMPTY)
     max_level = int(ml)

@@ -1,87 +1,34 @@
 """Registry faces for the streaming twins (SURVEY.md §2.D25 / r6).
 
-The incremental structures (D15-D24) were until now verified only by
+The incremental structures (D15-D24) were until r6 verified only by
 pytest: the driver's DuckDB gate runs `queries()` entries, and a
 streaming sink is not a DataFrame expression. These faces close that
-gap: each one REALLY RUNS the Structured Streaming sink — the input
-table split into adversarial micro-batches (hash-split, NOT
-time-ordered, so late/out-of-order data exercises the merge), a real
-file-source stream with `maxFilesPerTrigger=1`, a real checkpoint —
-and returns the FINAL MAINTAINED STATE as a DataFrame. Because every
-maintained structure is designed so that incremental == batch (the
-IVC property of the reference's block DB, mr-plonky2-circuits/src/
-block/mod.rs: proof_{n+1} = step(proof_n, block_{n+1}) must equal the
-from-scratch proof), the batch SQL is a valid oracle for the streamed
-result — the driver's gate now checks the streaming engine itself.
+gap: each one REALLY RUNS a Structured Streaming sink — the input
+written as N_SPLITS feed files (hash-split, NOT time-ordered, so
+late/out-of-order data exercises the merge), a real file-source stream
+with `maxFilesPerTrigger=1`, a real checkpoint — and returns the FINAL
+MAINTAINED STATE as a DataFrame. Because every maintained structure is
+designed so that incremental == batch (the IVC property of the
+reference's block DB, mr-plonky2-circuits/src/block/mod.rs:
+proof_{n+1} = step(proof_n, block_{n+1}) must equal the from-scratch
+proof), the batch SQL in ORACLES is a valid oracle for the streamed
+result — the driver's gate checks the streaming engine itself.
 
-Faces:
+Declared, not hand-run (the Structured Streaming idea: the user
+declares the query, the engine owns the incremental run):
 
-- `stream_ivm_view`       — D19 maintained (user, day) count/sum/digest
-                            view.  Oracle: the plain GROUP BY.  Sums are
-                            DECIMAL so partial-merge order cannot drift
-                            a float at a rounding boundary.
-- `stream_state_rollup`   — D19 with the A7 argmax-by-event-id monoid
-                            (the reference's account-state DB).
-                            Oracle: A7's max_by SQL.
-- `stream_block_db_chain` — D5's IncrementalDigest chain commitment
-                            (the IVC step function itself). Oracle: the
-                            whole-table digest — chain ≡ batch because
-                            the fold is associative+commutative.
-- `stream_dedup_pairs`    — D21 incremental MinHash/LSH index: the
-                            append-only pair ledger after ingesting the
-                            corpus in 3 adversarial batches.  Oracle:
-                            C2's batch LSH pair SQL (the induction
-                            argument in streaming/dedup_stream.py is
-                            what makes this a theorem, the gate makes
-                            it a checked theorem).
-- `stream_curation_kept`  — D22 streaming curation pipeline: the
-                            maintained curated set (kept ∖ revoked).
-                            Oracle: the C25 composition with the
-                            keep-list computed over the LSH candidate
-                            pair closure (the pair set D21 maintains),
-                            as a recursive CTE.
-- `stream_substring_verdicts` — D24 incremental substring-span index
-                            (retroactive re-scoring). Oracle: C28.
-- `stream_mpt_entries`    — D15 park/resume MPT walk fed in node-hash
-                            order. Oracle: A16's derivation SQL.
-- `stream_ss_join`        — D13 watermarked stream-stream range join,
-                            TIME-ORDERED feed (watermark eviction makes
-                            arbitrary-order feeds out of contract —
-                            see _write_time_splits). Oracle: the batch
-                            range join.
-- `stream_windowed_counts` — D4 watermarked tumbling-window standing
-                            aggregation, complete mode, DECIMAL sums.
-                            Oracle: the batch per-(hour, type) rollup.
-- `stream_range_tree_tiles` — (r7) the A25 segment-tree tile store
-                            maintained per micro-batch; oracle = the
-                            batch per-(chunk, level, cell) SQL.
-- `stream_hdr_quantile_tiles` — (r7) B47's per-day integer quantile-
-                            histogram tiles; oracle = the batch bucket
-                            SQL.
-- `stream_lc_distinct_tiles` — (r7) B48's per-day distinct bitmaps
-                            (idempotent bit_or); oracle = the batch
-                            bitmap SQL.
-- `stream_erc20_rewards`  — (r7) A13's u256 reward view maintained
-                            incrementally (leaf circuit per batch,
-                            limb-sum monoid, carry at read); oracle =
-                            A13's HUGEINT SQL.
-- `stream_ivf_assign`     — (r7, D27) the IVF inverted-list store
-                            maintained incrementally: each batch of new
-                            embeddings assigned to its nearest centroid
-                            and merged into that cid's list partition.
-                            Model pinned to a SQL-expressible seed so
-                            the gate hash-checks the maintained store;
-                            oracle = the batch argmin-cosine SQL.
-- `stream_leakage_splits`  — (r7, D28) C46's dedup-aware train/valid/
-                            test split served from the INCREMENTALLY
-                            maintained component labels (D21): a newly
-                            arrived near-dup inherits its partner's
-                            split. Oracle = the same md5 rule over the
-                            LSH-pair recursive closure.
-- `stream_ohlc_bars`      — (r7) B56's per-(user, hour) OHLC bars as a
-                            SELECTION monoid (state carries each
-                            selection's order key), maintained per
-                            micro-batch; oracle = the batch window SQL.
+- `MAINTAINED` is a table of the 14 D19 faces — each a (partial, merge)
+  monoid kept by `ivm.MaintainedAggregate`. A row declares the artifact
+  name, fingerprint params, source frame, split key, partial, merge,
+  partition key, empty-result DDL and read transform; the row comment
+  says why the face is shaped the way it is. `_serve_maintained` is the
+  one builder that runs a row.
+- The other 10 faces drive their own sinks (the digest chain, dedup,
+  curation, spans, MPT, shards, the watermarked join and window).
+- Every face shares the same three pieces: `_write_feed` (the feed
+  files), `_run_stream` (wait, then fail loudly on a timeout or a
+  missing micro-batch) and `_serve_streamed` (`artifacts.serve_frame`
+  around a scratch dir). Oracle SQL stays per face.
 
 Cost model: a face pays the full streaming run ONCE per corpus version
 — the final state is a fingerprint-keyed disk artifact
@@ -92,19 +39,36 @@ queries read its committed output.
 
 from __future__ import annotations
 
+import functools
+import glob
 import os
 import shutil
 import tempfile
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from euclid_spark.catalog import cached_parquet
 
 from euclid_spark import artifacts
 from euclid_spark.functions.hashing import DIGEST_PRIME, MIX, digest_agg, digest_term
+from euclid_spark.operators import curation, dedup, euclid, mpt_ingest, timeseries
+# IVF_FACE_K: seed-centroid count for the gate-checkable IVF model — one
+# constant with the batch search face (similarity.sim_ivf_pinned_topk),
+# so the maintained lists and the pinned search path describe one model
+from euclid_spark.operators.similarity import N_QUERIES, SEED_K as IVF_FACE_K
+from euclid_spark.sources import eth_proof, jsonl
+from euclid_spark.streaming import parity as _p
+from euclid_spark.streaming.ivm import (
+    _rollup_merge,
+    _rollup_partial,
+    run_maintained_aggregate,
+)
 
 N_SPLITS = 3
+STREAM_TIMEOUT_S = 600
 
 
 def _serve_streamed(
@@ -113,97 +77,172 @@ def _serve_streamed(
     fp: str,
     build: "Callable[[str], DataFrame]",
 ) -> DataFrame:
-    """serve_frame with a scratch dir: `build(tmp)` may use `tmp` for
-    the feed files / checkpoint / view; the directory is removed once
-    the result is committed to the artifact store."""
-    cached = artifacts.load_frame(spark, name, fp)
-    if cached is not None:
-        return cached
-    tmp = tempfile.mkdtemp(prefix=f"euclid_{name}_")
-    try:
-        artifacts.save_frame(build(tmp), name, fp)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    out = artifacts.load_frame(spark, name, fp)
-    assert out is not None
-    return out
+    """`artifacts.serve_frame` around a scratch dir: `build(tmp)` may use
+    `tmp` for the feed files / checkpoint / view; the directory is
+    removed once the result is committed to the artifact store."""
+    with tempfile.TemporaryDirectory(
+        prefix=f"euclid_{name}_", ignore_cleanup_errors=True
+    ) as tmp:
+        return artifacts.serve_frame(spark, name, fp, lambda: build(tmp))
 
 
-def _write_splits(df: DataFrame, feed_dir: str, key: str) -> int:
-    """Split `df` into N_SPLITS parquet files by hash of `key` — a
-    deterministic, deliberately NOT time-ordered partition of the
-    input, so each micro-batch carries rows from the whole time range
-    (the adversarial order the monoid merges must tolerate).
+def _write_feed(
+    df: DataFrame,
+    feed_dir: str,
+    key: str,
+    by_time: bool = False,
+    fmt: str = "parquet",
+) -> int:
+    """Write `df` as N_SPLITS feed files b0 < b1 < b2 (mtime = batch
+    order) into the flat directory the file source lists.
 
-    Spark-native (no driver-side materialization — the input never
-    leaves the executors): each split is a filtered write, its single
-    part file moved into the flat feed directory the file source
-    lists. Files land in batch order b0 < b1 < b2 by mtime. In
-    production there is no feed construction at all — the stream IS
-    the arrival order; this harness only manufactures an adversarial
-    one.
+    Default split: by hash of `key` — a deterministic, deliberately NOT
+    time-ordered partition, so each micro-batch carries rows from the
+    whole time range (the adversarial order the monoid merges must
+    tolerate). `by_time`: N_SPLITS consecutive equal-width ranges of the
+    timestamp column `key` — the approximately-ordered arrival a
+    watermarked operator is specified against; its bounds come from one
+    broadcast stats row, the only split that pays an extra job.
+
+    Spark-native (the input never leaves the executors): each split is
+    a filtered write, its single part file moved into the feed
+    directory. In production there is no feed construction at all — the
+    stream IS the arrival order; this harness only manufactures one.
 
     Returns the number of feed files ACTUALLY written (r7 ADVICE): an
-    empty hash bucket (empty/degenerate corpus) may produce no part
-    file, and whether a zero-row write emits one is an undocumented
-    engine behavior — callers pass this count to _run_stream instead
-    of assuming N_SPLITS micro-batches will fire."""
-    import glob
-
+    empty bucket may produce no part file — whether a zero-row write
+    emits one is an undocumented engine behavior — so callers hand this
+    count to _run_stream instead of assuming N_SPLITS micro-batches."""
     os.makedirs(feed_dir, exist_ok=True)
-    bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(N_SPLITS))
+    cols = df.columns
+    if by_time:
+        # NTZ has no direct numeric cast — go through TIMESTAMP (UTC session)
+        sec = F.col(key).cast("timestamp").cast("double")
+        stats = df.agg(F.min(sec).alias("lo"), F.max(sec).alias("hi"))
+        frac = (sec - F.col("lo")) / (F.col("hi") - F.col("lo") + F.lit(1e-9))
+        df = df.join(F.broadcast(stats))
+        bucket = F.least(F.lit(N_SPLITS - 1), F.floor(frac * N_SPLITS).cast("int"))
+    else:
+        bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(N_SPLITS))
     written = 0
     for i in range(N_SPLITS):
         part_dir = os.path.join(feed_dir, f"_tmp{i}")
-        df.filter(bucket == i).coalesce(1).write.mode("overwrite").parquet(
-            part_dir
-        )
-        parts = glob.glob(os.path.join(part_dir, "part-*.parquet"))
+        df.filter(bucket == i).select(*cols).coalesce(1).write.mode(
+            "overwrite"
+        ).format(fmt).save(part_dir)
+        parts = glob.glob(os.path.join(part_dir, "part-*"))
         if parts:
-            os.replace(parts[0], os.path.join(feed_dir, f"b{i}.parquet"))
+            ext = os.path.splitext(parts[0])[1]
+            os.replace(parts[0], os.path.join(feed_dir, f"b{i}{ext}"))
             written += 1
         shutil.rmtree(part_dir, ignore_errors=True)
     return written
 
 
-def _write_time_splits(df: DataFrame, feed_dir: str, ts_col: str) -> None:
-    """Split into N_SPLITS consecutive event-time ranges (equal-width
-    over [min, max]) — the approximately-ordered arrival a watermarked
-    operator is specified against. Same executor-side mechanics as
-    _write_splits; the range bounds come from one broadcast stats row."""
-    import glob
-
-    os.makedirs(feed_dir, exist_ok=True)
-    # NTZ has no direct numeric cast — go through TIMESTAMP (UTC session)
-    sec = F.col(ts_col).cast("timestamp").cast("double")
-    stats = df.agg(
-        F.min(sec).alias("lo"), F.max(sec).alias("hi")
+def _read_feed(
+    spark: SparkSession, feed_dir: str, schema, fmt: str = "parquet"
+) -> DataFrame:
+    """File-source stream over a feed directory, one file per trigger."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .format(fmt)
+        .load(feed_dir)
     )
-    frac = (sec - F.col("lo")) / (F.col("hi") - F.col("lo") + F.lit(1e-9))
-    withb = df.join(F.broadcast(stats)).withColumn(
-        "_b", F.least(F.lit(N_SPLITS - 1), F.floor(frac * N_SPLITS).cast("int"))
-    )
-    for i in range(N_SPLITS):
-        part_dir = os.path.join(feed_dir, f"_tmp{i}")
-        withb.filter(F.col("_b") == i).drop("_b", "lo", "hi").coalesce(
-            1
-        ).write.mode("overwrite").parquet(part_dir)
-        parts = glob.glob(os.path.join(part_dir, "part-*.parquet"))
-        if parts:
-            os.replace(parts[0], os.path.join(feed_dir, f"b{i}.parquet"))
-        shutil.rmtree(part_dir, ignore_errors=True)
 
 
-def _run_stream(q, sink, n_expected: int) -> None:
-    q.awaitTermination(600)
-    if sink.last_batch_id < n_expected - 1:
+def _run_stream(q, n_files: int, sink=None) -> None:
+    """Wait for an availableNow query to drain its feed, and refuse to
+    serve a partial state: raise when the query does not quiesce within
+    STREAM_TIMEOUT_S, and when fewer micro-batches were applied than
+    feed files were written (one file per trigger). Applied batches are
+    the sink's own watermark when it keeps one (`last_batch_id`), else
+    the progress entries whose source offset advanced."""
+    if not q.awaitTermination(STREAM_TIMEOUT_S):
+        q.stop()
         raise RuntimeError(
-            f"stream face: only {sink.last_batch_id + 1}/{n_expected} "
-            "micro-batches applied before timeout"
+            f"stream face: did not quiesce within {STREAM_TIMEOUT_S} s"
+        )
+    if sink is not None:
+        applied = sink.last_batch_id + 1
+    else:
+        applied = sum(
+            any(s["startOffset"] != s["endOffset"] for s in p["sources"])
+            for p in q.recentProgress
+        )
+    if applied < n_files:
+        raise RuntimeError(
+            f"stream face: only {applied}/{n_files} micro-batches applied"
         )
 
 
-# ---------------------------------------------------------------- D19 faces
+# ------------------------------------------------- table-driven D19 faces
+
+def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events table as the feed carries it: `ts` cast to the
+    session-zoned TIMESTAMP (UTC) the partials are written against."""
+    return cached_parquet(spark, f"{sf_dir}/events.parquet").withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
+
+
+@dataclass(frozen=True)
+class Maintained:
+    """One maintained-aggregate face: feed `source` through the
+    (partial, merge) monoid sink, then `read` the face's rows off the
+    maintained view (default: the `empty` DDL's columns)."""
+
+    name: str  # artifact name
+    params: dict  # fingerprint params (op, v, ...); n=N_SPLITS is added
+    partial: Callable[..., DataFrame]
+    merge: Callable[[DataFrame, DataFrame], DataFrame]
+    empty: str  # result DDL when nothing was merged (empty corpus)
+    read: "Callable[[DataFrame], DataFrame] | None" = None
+    table: str = "events"  # the fingerprinted corpus table
+    # resolved at CALL time, cached or not — so a fixture an oracle
+    # reads (the eth capture) is served even when the face is cached
+    source: Callable[[SparkSession, str], DataFrame] = _events
+    split: str = "event_id"  # hash-split key of the feed
+    key_col: str = "day"  # the view's partition column
+    fmt: str = "parquet"  # feed file format
+    # a static up-front model fitted from the source before the stream
+    # starts, handed to partial(batch, model=...)
+    model: "Callable[[DataFrame], DataFrame] | None" = None
+
+
+def _serve_maintained(spark: SparkSession, sf_dir: str, face: Maintained) -> DataFrame:
+    """The one builder for the MAINTAINED table: write the feed, run the
+    IVM sink to quiescence, read the face's rows off the view, and serve
+    the result as a fingerprint-keyed artifact."""
+    src = face.source(spark, sf_dir)
+    fp = artifacts.corpus_fingerprint(
+        [f"{sf_dir}/{face.table}.parquet"], n=N_SPLITS, **face.params
+    )
+
+    def build(tmp: str) -> DataFrame:
+        feed, view, ck = (os.path.join(tmp, d) for d in ("feed", "view", "ck"))
+        n_files = _write_feed(src, feed, face.split, fmt=face.fmt)
+        partial = face.partial
+        if face.model is not None:
+            partial = functools.partial(partial, model=face.model(src))
+        q, sink = run_maintained_aggregate(
+            _read_feed(spark, feed, src.schema, face.fmt),
+            view,
+            ck,
+            partial,
+            face.merge,
+            face.key_col,
+        )
+        _run_stream(q, n_files, sink)
+        if not os.path.exists(view):  # zero-row corpus: nothing merged
+            return spark.createDataFrame([], face.empty)
+        v = sink.view(spark)
+        if face.read is not None:
+            return face.read(v)
+        return v.select(*(c.split()[0] for c in face.empty.split(",")))
+
+    return _serve_streamed(spark, face.name, fp, build)
+
 
 def _dec_partial(events: DataFrame) -> DataFrame:
     """The D19 count/sum/digest partials with DECIMAL value sums:
@@ -236,105 +275,407 @@ def _dec_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
     )
 
 
-def stream_ivm_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D19 face — the maintained (user, day) view after streaming the
-    events table through the IVM sink in N_SPLITS adversarial batches."""
-    from euclid_spark.streaming.block_db import read_event_stream
-    from euclid_spark.streaming.ivm import MaintainedAggregate
+_PSI_DDL = (
+    "event_type string, n_ref bigint, n_cur bigint,"
+    " n_buckets bigint, psi double, drifted boolean"
+)
 
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="stream_ivm_view", n=N_SPLITS, v=2
+
+def _psi_from_tiles(tiles: DataFrame) -> DataFrame:
+    """The drift READ: PSI per event_type off the maintained tile
+    store. Split day = the tile store's own day span midpoint (one
+    bounded fold over index-sized tiles — never the raw events);
+    smoothing runs over the per-type OBSERVED bucket support (HDR's
+    bucket universe is open-ended, so there is no fixed B to close
+    over — supp is part of the output so the reader sees the support
+    the statistic was computed on)."""
+    import datetime as _dt
+
+    from euclid_spark.operators.drift import PSI_ALERT
+
+    row = tiles.agg(F.min("day").alias("d0"), F.max("day").alias("d1")).collect()[0]
+    if row["d0"] is None:
+        return tiles.sparkSession.createDataFrame([], _PSI_DDL)
+    split = row["d0"] + _dt.timedelta(days=(row["d1"] - row["d0"]).days // 2)
+    split_lit = F.to_date(F.lit(split.isoformat()))
+    perb = tiles.groupBy("event_type", "nbits", "sub").agg(
+        F.sum(
+            F.when(F.col("day") < split_lit, F.col("cnt")).otherwise(F.lit(0))
+        ).alias("cnt_ref"),
+        F.sum(
+            F.when(F.col("day") < split_lit, F.lit(0)).otherwise(F.col("cnt"))
+        ).alias("cnt_cur"),
+    )
+    w = Window.partitionBy("event_type")
+    wt = perb.select(
+        "*",
+        F.sum("cnt_ref").over(w).alias("n_ref"),
+        F.sum("cnt_cur").over(w).alias("n_cur"),
+        F.count(F.lit(1)).over(w).alias("supp"),
+    )
+    pr = (F.col("cnt_ref") + F.lit(0.5)) / (F.col("n_ref") + F.col("supp") / F.lit(2.0))
+    pc = (F.col("cnt_cur") + F.lit(0.5)) / (F.col("n_cur") + F.col("supp") / F.lit(2.0))
+    term = F.round((pc - pr) * F.log(pc / pr), 9).cast("decimal(38,9)")
+    return (
+        wt.select("event_type", "n_ref", "n_cur", "supp", term.alias("term"))
+        .groupBy("event_type")
+        .agg(
+            F.first("n_ref").alias("n_ref"),
+            F.first("n_cur").alias("n_cur"),
+            F.first("supp").alias("n_buckets"),
+            F.round(F.sum("term").cast("double"), 6).alias("psi"),
+        )
+        .filter(F.col("n_ref") > 0)
+        .select(
+            "event_type", "n_ref", "n_cur", "n_buckets", "psi",
+            (F.col("psi") > F.lit(PSI_ALERT)).alias("drifted"),
+        )
     )
 
-    def build(tmp: str) -> DataFrame:
-        feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
-            cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "event_id"
+
+def _jsonl_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.read.text(jsonl.jsonl_fixture_path(spark, sf_dir))
+
+
+def _jsonl_partial(lines: DataFrame) -> DataFrame:
+    """Each micro-batch parsed PERMISSIVE with the batch reader's
+    corrupt-record contract (from_json carries columnNameOfCorruptRecord),
+    folded to the per-(quarantined, source) count/char-mass ledger."""
+    d = F.from_json(
+        "value",
+        jsonl._DOC_SCHEMA,
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
+    )
+    return (
+        lines.select(d.alias("d"))
+        .select(
+            F.col("d._corrupt").isNotNull().alias("quarantined"),
+            F.col("d.source").alias("source"),
+            F.col("d.n_chars").alias("n_chars"),
         )
-        view, ck = os.path.join(tmp, "view"), os.path.join(tmp, "ck")
-        os.makedirs(ck, exist_ok=True)
-        sink = MaintainedAggregate(
-            view_path=view,
-            state_path=os.path.join(ck, "ivm_state.json"),
-            partial_fn=_dec_partial,
-            merge_fn=_dec_merge,
+        .groupBy("quarantined", "source")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("n_chars").alias("sum_chars"),
         )
-        q = (
-            read_event_stream(spark, feed)
-            .writeStream.foreachBatch(sink.process)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+    )
+
+
+def _jsonl_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
+    return (
+        old.unionByName(partial)
+        .groupBy("quarantined", "source")
+        .agg(
+            F.sum("n_rows").alias("n_rows"),
+            F.sum("sum_chars").alias("sum_chars"),
         )
-        _run_stream(q, sink, n_feeds)
-        if not os.path.exists(view):  # zero-row corpus: nothing merged
-            return spark.createDataFrame(
-                [],
-                "user_id long, day date, n_events bigint, "
-                "total_value double, digest bigint",
-            )
-        return sink.view(spark).select(
-            "user_id",
-            "day",
-            "n_events",
+    )
+
+
+def _cell_roots(view: DataFrame, leaves: str, leaf_hash, n_col: str) -> DataFrame:
+    """The in-cell Merkle fold both cell-root faces read off their
+    maintained per-(owner, cell) leaf sets: leaves → merkle_levels →
+    top-level root, joined to the per-cell leaf count."""
+    from euclid_spark.cache import persist_tracked
+    from euclid_spark.operators.merkle import merkle_levels
+
+    lv = persist_tracked(
+        view.select("owner", "cell", F.posexplode(leaves).alias("pos", "lf"))
+        .select(
+            F.concat_ws("|", "owner", "cell").alias("group_key"),
+            "owner", "cell", "pos",
+            leaf_hash.alias("node_hash"),
+        )
+    )
+    nodes, _ = merkle_levels(lv.select("group_key", "pos", "node_hash"))
+    wl = Window.partitionBy("group_key")
+    roots = (
+        nodes.withColumn("ml", F.max("level").over(wl))
+        .filter(F.col("level") == F.col("ml"))
+        .select("group_key", F.col("node_hash").alias("root"))
+    )
+    meta = lv.groupBy("group_key", "owner", "cell").agg(
+        F.count(F.lit(1)).alias(n_col)
+    )
+    return meta.join(roots, "group_key").select("owner", "cell", n_col, "root")
+
+
+def _ivf_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (
+        cached_parquet(spark, f"{sf_dir}/embeddings.parquet")
+        .filter(F.col("vec_id") >= N_QUERIES)
+        .select("vec_id", "embedding")
+    )
+
+
+def _ivf_seed(corpus: DataFrame) -> DataFrame:
+    """The fixed up-front model: the IVF_FACE_K lowest-vec_id corpus
+    vectors (bounded parameter fetch, broadcast into every batch)."""
+    rows = (
+        corpus.orderBy("vec_id").limit(IVF_FACE_K)
+        .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb"))
+        .collect()
+    )
+    return corpus.sparkSession.createDataFrame(
+        [(r["cid"], [float(x) for x in r["cemb"]]) for r in rows],
+        "cid long, cemb array<double>",
+    )
+
+
+def _ivf_assign(batch: DataFrame, model: DataFrame) -> DataFrame:
+    """Each arriving vector to its nearest centroid — C5's rule: rounded
+    cosine, (csim DESC, cid ASC) tiebreak, zero-norm guarded."""
+    from euclid_spark.functions.vectors import cosine
+
+    scored = batch.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
+    ).crossJoin(F.broadcast(model)).select(
+        "cid",
+        "neighbor_id",
+        F.round(cosine(F.col("ce").cast("array<double>"), F.col("cemb")), 6)
+        .alias("csim"),
+    )
+    w = Window.partitionBy("neighbor_id").orderBy(F.desc("csim"), "cid")
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("cid", "neighbor_id", "csim")
+    )
+
+
+def _eth_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The events feed; also serves the BATCH eth_getProof capture the
+    oracle compares against (cheap load when cached)."""
+    eth_proof.eth_proof_fixture(spark, sf_dir)
+    return _events(spark, sf_dir)
+
+
+def _erc20_read(view: DataFrame) -> DataFrame:
+    from euclid_spark.functions.u256 import u256_carry_hex
+
+    return view.select(
+        "owner",
+        u256_carry_hex(F.col("s0"), F.col("s1"), F.col("s2"), F.col("s3"))
+        .alias("reward_hex"),
+        F.col("zs").alias("n_zero_supply"),
+        F.col("of").alias("n_overflow"),
+    )
+
+
+MAINTAINED: "dict[str, Maintained]" = {
+    # D30 streamed: the eth_getProof capture's ACCOUNT-STATE COMMITMENTS
+    # maintained as blocks arrive. State = the distinct (owner,
+    # mapping-key) ledger, an idempotent set-union monoid partitioned by
+    # owner bucket; at read each account's SECURE storage trie rebuilds
+    # from its key set (the level-batched keccak builder the batch
+    # capture uses), and the roots must equal the capture's storageHash.
+    "stream_eth_account_state": Maintained(
+        "stream_eth_state",
+        dict(op="stream_eth_state", slot=eth_proof.MAPPING_SLOT, v=1),
+        _p._eth_pairs_partial,
+        _p._eth_pairs_merge,
+        "address string, nonce long, balance long, storage_root string",
+        read=lambda v: eth_proof.account_state_rows(
+            v.select("user_id", "token_id")
+        ),
+        source=_eth_source,
+        key_col="pb",
+    ),
+    # D19: the maintained (user, day) count/sum/digest view. Sums are
+    # DECIMAL so partial-merge order cannot drift a float at a rounding
+    # boundary; served as double, as the oracle computes it.
+    "stream_ivm_view": Maintained(
+        "stream_ivm_view",
+        dict(op="stream_ivm_view", v=2),
+        _dec_partial,
+        _dec_merge,
+        "user_id long, day date, n_events bigint, total_value double, "
+        "digest bigint",
+        read=lambda v: v.select(
+            "user_id", "day", "n_events",
             F.col("total_value").cast("double").alias("total_value"),
             "digest",
-        )
-
-    return _serve_streamed(spark, "stream_ivm_view", fp, build)
-
-
-def stream_state_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D19 face with the A7 argmax-by-event-id monoid: the maintained
-    per-(account, day) latest-state snapshot — the reference's state DB
-    (state/lpn/) fed incrementally, compared against the batch rollup."""
-    from euclid_spark.streaming.block_db import read_event_stream
-    from euclid_spark.streaming.ivm import (
-        MaintainedAggregate,
-        _rollup_merge,
+        ),
+    ),
+    # D19 with A7's argmax-by-event-id monoid: the per-(account, day)
+    # latest-state snapshot — the reference's state DB (state/lpn/).
+    # v=3: r8 changed the NULL-write semantics (skip-NULL argmax,
+    # last_nn_id state column) — caches of the old monoid rebuild.
+    "stream_state_rollup": Maintained(
+        "stream_state_rollup",
+        dict(op="stream_state_rollup", v=3),
         _rollup_partial,
-    )
+        _rollup_merge,
+        "user_id long, day date, last_value double, last_event_id bigint, "
+        "n_events bigint",
+    ),
+    # A25's range-tree tiles, the streamed analog of
+    # query2/block/partial_node.rs: appending blocks updates one path of
+    # tiles, not the tree. The gate compares the FULL tile store with
+    # every (chunk, level, cell) tile computed from raw events.
+    "stream_range_tree_tiles": Maintained(
+        "stream_range_tree_tiles",
+        dict(op="stream_range_tree", v=1),
+        _p._range_tree_partial,
+        _p._range_tree_merge,
+        "day int, level int, cell long, n_events bigint, sum_value double, "
+        "min_block long, max_block long, digest bigint",
+        read=lambda v: v.select(
+            "day", "level", "cell", "n_events",
+            F.col("sum_value").cast("double").alias("sum_value"),
+            "min_block", "max_block", "digest",
+        ),
+    ),
+    # A26's Query2 FIRST-L distinct-key tiles (query2/block/full_node.rs).
+    # Per-batch TRUNCATED partials must re-merge to the from-scratch
+    # first-L: a dropped key is larger than ≥L keys of its own slice, so
+    # no truncation evicts a key the answer needs. Read explodes to
+    # (tile, pos, token_id) so the oracle's ROW_NUMBER compares exactly.
+    "stream_q2_key_tiles": Maintained(
+        "stream_q2_key_tiles",
+        dict(op="stream_q2_key_tiles", v=1),
+        _p._q2_tiles_partial,
+        _p._q2_tiles_merge,
+        "day int, level int, cell long, owner long, pos int, token_id long",
+        read=lambda v: v.select(
+            "day", "level", "cell", "owner",
+            F.posexplode("keys").alias("pos0", "token_id"),
+        ).select(
+            "day", "level", "cell", "owner",
+            (F.col("pos0") + 1).cast("int").alias("pos"),
+            "token_id",
+        ),
+    ),
+    # B47's per-day integer log-histogram tiles — the mergeable-sketch
+    # path a 100 TB deployment serves quantiles from.
+    "stream_hdr_quantile_tiles": Maintained(
+        "stream_hdr_quantile_tiles",
+        dict(op="stream_hdr_tiles", v=1),
+        _p._hdr_partial,
+        _p._hdr_merge,
+        "day date, nbits int, sub long, cnt bigint",
+    ),
+    # B48's per-day distinct-user bitmaps: bit_or is idempotent, so
+    # replay is free.
+    "stream_lc_distinct_tiles": Maintained(
+        "stream_lc_distinct_tiles",
+        dict(op="stream_lc_tiles", v=1),
+        _p._lc_partial,
+        _p._lc_merge,
+        "day date, word_idx int, word bigint",
+    ),
+    # D32: the drift monitor SERVED FROM MAINTAINED STATE — per-(type,
+    # day) HDR tiles (the 18th D20 spec `drift_tiles`; bins are split-
+    # invariant by construction, which is what makes PSI maintainable),
+    # PSI read off the tiles: cost ∝ tiles, never a history rescan.
+    # v=2 (r14): the RESERVED UNDERFLOW bucket (nbits=0, sub=0) joined
+    # the tiles, so batch B59 and the streamed monitor bin the same rows.
+    "stream_drift_psi": Maintained(
+        "stream_drift_psi",
+        dict(op="stream_drift_psi", v=2),
+        _p._drift_partial,
+        _p._drift_merge,
+        _PSI_DDL,
+        read=_psi_from_tiles,
+    ),
+    # D33, D31's streaming twin: the damaged-JSONL crawl tail arrives as
+    # a text-file stream; the ledger is partitioned by the quarantine
+    # flag. Same oracle as D31, so the gate binds stream parse →
+    # quarantine → merge against the parquet ground truth.
+    "stream_jsonl_ingest": Maintained(
+        "stream_jsonl_ingest",
+        dict(op="stream_jsonl_ingest", v=1),
+        _jsonl_partial,
+        _jsonl_merge,
+        "quarantined boolean, source string, n_rows bigint, sum_chars bigint",
+        # the Hive-style partition directory round-trips the flag
+        # through partition-value inference — pin it back to boolean
+        read=lambda v: v.select(
+            F.col("quarantined").cast("boolean").alias("quarantined"),
+            "source", "n_rows", "sum_chars",
+        ),
+        table="documents",
+        source=_jsonl_source,
+        split="value",
+        key_col="quarantined",
+        fmt="text",
+    ),
+    # A13's u256 reward view (query_erc20 + block/mod.rs): the leaf
+    # circuit runs per micro-batch, per-owner limb sums form a plain
+    # monoid, and the carry normalizes at read into A13's reward_hex.
+    "stream_erc20_rewards": Maintained(
+        "stream_erc20_rewards",
+        dict(op="stream_erc20_rewards", v=1),
+        _p._erc20_partial,
+        _p._erc20_merge,
+        "owner long, reward_hex string, n_zero_supply long, n_overflow long",
+        read=_erc20_read,
+    ),
+    # A31's response commitments: the per-(owner, cell) in-cell Merkle
+    # leaf sets of the rr_erc20 trees, folded to CELL ROOTS at read —
+    # a live ingest maintains the structure responses open into.
+    "stream_erc20_cell_roots": Maintained(
+        "stream_erc20_cell_roots",
+        dict(op="stream_erc20_cell_roots", v=1),
+        _p._rr_cell_leaves_partial,
+        _p._rr_cell_leaves_merge,
+        "owner long, cell long, n_entries long, root string",
+        read=lambda v: _cell_roots(
+            v, "leaves", F.col("lf.node_hash"), "n_entries"
+        ),
+    ),
+    # The Q2 twin (A30): per-(owner, cell) DISTINCT-KEY leaf sets
+    # (idempotent set union — 16th D20 spec), leaf = sha256(token_id).
+    # With the ERC-20 row, both reference query families' response
+    # commitments have gate-checked incremental maintenance.
+    "stream_q2_cell_roots": Maintained(
+        "stream_q2_cell_roots",
+        dict(op="stream_q2_cell_roots", v=1),
+        _p._rr_q2_cell_leaves_partial,
+        _p._rr_q2_cell_leaves_merge,
+        "owner long, cell long, n_keys long, root string",
+        read=lambda v: _cell_roots(
+            v, "tokens", F.sha2(F.col("lf").cast("string"), 256), "n_keys"
+        ),
+    ),
+    # B56's per-(user, hour) OHLC bars as a SELECTION monoid: the state
+    # carries each selection's (ts, event_id) order key beside its
+    # value, so the argmin/argmax lattice re-merges under any split.
+    "stream_ohlc_bars": Maintained(
+        "stream_ohlc_bars",
+        dict(op="stream_ohlc_bars", v=1),
+        _p._ohlc_partial,
+        _p._ohlc_merge,
+        "user_id long, hour_start timestamp, open double, high double, "
+        "low double, close double, n_ticks bigint",
+        read=lambda v: v.select(
+            "user_id", "hour_start",
+            F.col("o.v").alias("open"), "high", "low",
+            F.col("c.v").alias("close"), "n_ticks",
+        ),
+    ),
+    # D27: the IVF inverted-list store — each batch's vectors assigned
+    # to their nearest centroid and merged into that cid's list
+    # partition (a batch touches only the lists it lands in). The model
+    # is pinned to a SQL-expressible seed so the gate can hash-check
+    # the store; vec_ids are disjoint across batches, so the merge is a
+    # plain union (replays are excluded by the per-cid watermark).
+    "stream_ivf_assign": Maintained(
+        "stream_ivf_assign",
+        dict(op="stream_ivf_assign", k=IVF_FACE_K, v=1),
+        _ivf_assign,
+        DataFrame.unionByName,
+        "cid long, neighbor_id long, csim double",
+        table="embeddings",
+        source=_ivf_corpus,
+        split="vec_id",
+        key_col="cid",
+        model=_ivf_seed,
+    ),
+}
 
-    fp = artifacts.corpus_fingerprint(
-        # v=3: r8 changed _rollup_partial/_rollup_merge NULL-write
-        # semantics (skip-NULL argmax, last_nn_id state column) — bump so
-        # caches built with the old monoid rebuild instead of serving stale
-        [f"{sf_dir}/events.parquet"], op="stream_state_rollup", n=N_SPLITS, v=3
-    )
 
-    def build(tmp: str) -> DataFrame:
-        feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
-            cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "event_id"
-        )
-        view, ck = os.path.join(tmp, "view"), os.path.join(tmp, "ck")
-        os.makedirs(ck, exist_ok=True)
-        sink = MaintainedAggregate(
-            view_path=view,
-            state_path=os.path.join(ck, "ivm_state.json"),
-            partial_fn=_rollup_partial,
-            merge_fn=_rollup_merge,
-        )
-        q = (
-            read_event_stream(spark, feed)
-            .writeStream.foreachBatch(sink.process)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _run_stream(q, sink, n_feeds)
-        if not os.path.exists(view):  # zero-row corpus: nothing merged
-            return spark.createDataFrame(
-                [],
-                "user_id long, day date, last_value double, "
-                "last_event_id bigint, n_events bigint",
-            )
-        return sink.view(spark).select(
-            "user_id", "day", "last_value", "last_event_id", "n_events"
-        )
-
-    return _serve_streamed(spark, "stream_state_rollup", fp, build)
-
+# ------------------------------------------------------- hand-run faces
 
 def stream_block_db_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D5 face — the IncrementalDigest chain commitment after folding
@@ -349,13 +690,13 @@ def stream_block_db_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(tmp: str) -> DataFrame:
         feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
+        n_files = _write_feed(
             cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "event_id"
         )
         q, sink = run_digest_chain(
             read_event_stream(spark, feed), os.path.join(tmp, "ck")
         )
-        _run_stream(q, sink, n_feeds)
+        _run_stream(q, n_files, sink)
         return spark.createDataFrame(
             [(sink.chain, sink.n_rows)], "chain_digest long, n_rows long"
         )
@@ -363,17 +704,13 @@ def stream_block_db_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _serve_streamed(spark, "stream_block_db_chain", fp, build)
 
 
-# ---------------------------------------------------------------- D21 face
-
 def _streamed_dedup_state(
     spark: SparkSession, sf_dir: str
 ) -> "tuple[DataFrame, DataFrame]":
     """Run the D21 incremental dedup stream ONCE per corpus version and
     serve BOTH of its maintained outputs — the pair ledger and the
     component labels — under one shared fingerprint. In production
-    there is one maintained index with many consumers; before this
-    refactor the pairs face and the splits face each ran their own
-    stream over the same corpus."""
+    there is one maintained index with many consumers."""
     from euclid_spark.operators import dedup as _d
     from euclid_spark.streaming.dedup_stream import (
         read_document_stream,
@@ -393,10 +730,11 @@ def _streamed_dedup_state(
     labels = artifacts.load_frame(spark, "stream_dedup_labels", fp)
     if pairs is not None and labels is not None:
         return pairs, labels
-    tmp = tempfile.mkdtemp(prefix="euclid_stream_dedup_state_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="euclid_stream_dedup_state_", ignore_cleanup_errors=True
+    ) as tmp:
         feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
+        n_files = _write_feed(
             cached_parquet(spark, f"{sf_dir}/documents.parquet").select(
                 "doc_id", "text"
             ),
@@ -406,11 +744,9 @@ def _streamed_dedup_state(
         q, sink = run_incremental_dedup(
             read_document_stream(spark, feed), os.path.join(tmp, "state")
         )
-        _run_stream(q, sink, n_feeds)
+        _run_stream(q, n_files, sink)
         artifacts.save_frame(sink.pairs(), "stream_dedup_pairs", fp)
         artifacts.save_frame(sink.labels(), "stream_dedup_labels", fp)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     pairs = artifacts.load_frame(spark, "stream_dedup_pairs", fp)
     labels = artifacts.load_frame(spark, "stream_dedup_labels", fp)
     assert pairs is not None and labels is not None
@@ -424,36 +760,35 @@ def stream_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every pair is found when its younger member arrives); the oracle
     is C2's SQL, so the gate verifies the induction on real data.
     Served from the SHARED streamed-state build (_streamed_dedup_state
-    — one stream run feeds this face and stream_leakage_splits)."""
+    — one stream run feeds this face and the two label consumers)."""
     pairs, _ = _streamed_dedup_state(spark, sf_dir)
     return pairs
 
 
-def stream_leakage_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D28 face — C46's leakage-safe train/valid/test split computed
-    from the INCREMENTALLY MAINTAINED component labels (D21's streamed
-    labeling after ingesting the corpus in N_SPLITS adversarial
-    batches): the assignment a live ingestion pipeline would serve,
-    where a newly arrived near-duplicate is pulled into its partner's
-    component and therefore its partner's split — eval sets stay clean
-    without re-running the batch dedup. Split rule identical to C46
-    (md5-bucket of the component, fixed thresholds); oracle = the same
-    rule over the LSH-pair recursive closure (the pair universe D21
-    maintains — the stream_curation_kept precedent).
-
-    Labels come from the SHARED streamed-state build
-    (_streamed_dedup_state): ONE stream run per corpus version feeds
-    this face and stream_dedup_pairs — the production
-    one-index-many-consumers shape; the split projection itself is
-    row-local over that served scan (no second stream, no extra
-    artifact)."""
-    from euclid_spark.operators.curation import SPLIT_TRAIN, SPLIT_VALID
-
+def _streamed_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every document with its INCREMENTALLY MAINTAINED component label
+    (the shared D21 streamed state); a doc no pair touched is its own
+    component. Row-local over the served label scan — no second stream,
+    no extra artifact."""
     _, labels = _streamed_dedup_state(spark, sf_dir)
     docs = cached_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
-    assigned = docs.join(labels, "doc_id", "left").withColumn(
+    return docs.join(labels, "doc_id", "left").withColumn(
         "component", F.coalesce(F.col("component"), F.col("doc_id"))
     )
+
+
+def stream_leakage_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """D28 face — C46's leakage-safe train/valid/test split computed
+    from the incrementally maintained component labels: the assignment
+    a live ingestion pipeline would serve, where a newly arrived
+    near-duplicate is pulled into its partner's component and therefore
+    its partner's split — eval sets stay clean without re-running the
+    batch dedup. Split rule identical to C46 (md5-bucket of the
+    component, fixed thresholds); oracle = the same rule over the
+    LSH-pair recursive closure (the pair universe D21 maintains)."""
+    from euclid_spark.operators.curation import SPLIT_TRAIN, SPLIT_VALID
+
+    assigned = _streamed_components(spark, sf_dir)
     bucket = F.pmod(
         F.conv(
             F.substring(
@@ -481,33 +816,28 @@ def stream_leakage_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def stream_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """D35 face (r15) — C54's soft-dedup TRAINING WEIGHTS computed from
+    the incrementally maintained component labels (the third consumer
+    of the shared streamed dedup state): as near-duplicates stream in,
+    cluster sizes grow and every member's weight 1/|cluster| decays
+    WITHOUT re-running batch dedup — the sampling weights a soft-dedup
+    trainer (Abbas et al. 2023, SemDeDup-style down-weighting practice)
+    reads stay fresh against a growing corpus. Two aggregates over the
+    served label scan (groupBy component, then an equi-join on the same
+    key — one exchange, reused); oracle = the same 1/|component| rule
+    over the LSH-pair recursive closure."""
+    assigned = _streamed_components(spark, sf_dir)
+    sizes = assigned.groupBy("component").agg(
+        F.count(F.lit(1)).alias("cluster_size")
+    )
+    return assigned.join(sizes, "component").select(
+        "doc_id",
+        "component",
+        "cluster_size",
+        F.round(F.lit(1.0) / F.col("cluster_size"), 9).alias("weight"),
+    )
 
-def _leakage_splits_sql() -> str:
-    from euclid_spark.operators.curation import SPLIT_TRAIN, SPLIT_VALID
-
-    return f"""
-        WITH RECURSIVE
-        {_lsh_closure_ctes()},
-        assign AS (
-            SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
-            FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-        ),
-        b AS (
-            SELECT doc_id, component,
-                   CAST('0x' || substr(md5('split|' ||
-                        CAST(component AS VARCHAR)), 1, 8) AS BIGINT)
-                   % 100 AS bucket
-            FROM assign
-        )
-        SELECT doc_id, component, CAST(bucket AS BIGINT) AS bucket,
-               CASE WHEN bucket < {SPLIT_TRAIN} THEN 'train'
-                    WHEN bucket < {SPLIT_VALID} THEN 'valid'
-                    ELSE 'test' END AS split
-        FROM b
-    """
-
-
-# ---------------------------------------------------------------- D22 face
 
 def stream_curation_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D22 face — the maintained curated training set (kept ∖ revoked)
@@ -516,6 +846,7 @@ def stream_curation_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the oracle composes sample/repetition/contamination with the
     recursive-CTE closure over the LSH pair set."""
     from euclid_spark.operators import dedup as _d
+    from euclid_spark.operators.quality_model import quality_model_weights
     from euclid_spark.operators.textops import BENCH_SOURCES, benchmark_shingles
     from euclid_spark.streaming.curation_stream import run_streaming_curation
 
@@ -532,9 +863,8 @@ def stream_curation_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(tmp: str) -> DataFrame:
         docs = cached_parquet(spark, f"{sf_dir}/documents.parquet")
         feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
-            docs.select("doc_id", "text", "lang", "source"), feed, "doc_id"
-        )
+        cols = docs.select("doc_id", "text", "lang", "source")
+        n_files = _write_feed(cols, feed, "doc_id")
         # the STATIC held-out benchmark index (the streaming contract:
         # the eval suite is fixed up front) — same set the batch
         # operator derives from the corpus's bench sources
@@ -543,24 +873,18 @@ def stream_curation_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # the C61 model is STATIC too (offline-trained on the reference
         # corpus, served weights handed to the sink up front — r15)
-        from euclid_spark.operators.quality_model import quality_model_weights
-
         model = quality_model_weights(spark, sf_dir)
-        stream = (
-            spark.readStream.schema("doc_id long, text string, lang string, source string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
         q, sink = run_streaming_curation(
-            stream, os.path.join(tmp, "state"), bench, model
+            _read_feed(spark, feed, cols.schema),
+            os.path.join(tmp, "state"),
+            bench,
+            model,
         )
-        _run_stream(q, sink, n_feeds)
+        _run_stream(q, n_files, sink)
         return sink.kept()
 
     return _serve_streamed(spark, "stream_curation_kept", fp, build)
 
-
-# ---------------------------------------------------------------- D24 face
 
 def stream_substring_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D24 face — the incremental substring-span index's verdict table
@@ -569,6 +893,7 @@ def stream_substring_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrives later), so the final table equals batch C28 — the oracle is
     C28's SQL, making the retroactive re-scoring gate-checked."""
     from euclid_spark.operators import dedup as _d
+    from euclid_spark.streaming.dedup_stream import read_document_stream
     from euclid_spark.streaming.spans_stream import run_incremental_spans
 
     fp = artifacts.corpus_fingerprint(
@@ -582,26 +907,21 @@ def stream_substring_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(tmp: str) -> DataFrame:
         feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
+        n_files = _write_feed(
             cached_parquet(spark, f"{sf_dir}/documents.parquet").select(
                 "doc_id", "text"
             ),
             feed,
             "doc_id",
         )
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
+        q, sink = run_incremental_spans(
+            read_document_stream(spark, feed), os.path.join(tmp, "state")
         )
-        q, sink = run_incremental_spans(stream, os.path.join(tmp, "state"))
-        _run_stream(q, sink, n_feeds)
+        _run_stream(q, n_files, sink)
         return sink.verdicts()
 
     return _serve_streamed(spark, "stream_substring_verdicts", fp, build)
 
-
-# ---------------------------------------------------------------- D15 face
 
 def stream_mpt_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D15 face — the incremental MPT reassembly's entries store after
@@ -624,13 +944,13 @@ def stream_mpt_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed = os.path.join(tmp, "feed")
         # hash-split on the content address: a child can arrive batches
         # before its parent and vice versa (structure-ignoring scatter)
-        n_feeds = _write_splits(
+        n_files = _write_feed(
             synthesize_owner_tries(spark, sf_dir), feed, "node_hash"
         )
         q, sink = run_incremental_mpt(
             read_node_stream(spark, feed), os.path.join(tmp, "state")
         )
-        _run_stream(q, sink, n_feeds)
+        _run_stream(q, n_files, sink)
         if not sink.pending().isEmpty():
             raise RuntimeError("stream_mpt_entries: cursors still parked")
         return sink.entries()
@@ -638,16 +958,14 @@ def stream_mpt_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _serve_streamed(spark, "stream_mpt_entries", fp, build)
 
 
-# ---------------------------------------------------------------- D13 face
-
 def stream_ss_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D13 face — the watermarked STREAM-STREAM range join (purchase ⋈
     prior same-user clicks within 30 min) run as a real streaming
-    query over the 3-batch adversarial feed, results landed by the
-    parquet sink. Inner stream-stream joins emit on match, so once
-    every batch is processed the landed pairs equal the batch range
-    join — the oracle. The time-range predicate is what bounds both
-    join states at scale (O(rate × window), not stream lifetime)."""
+    query over the 3-batch feed, results landed by the parquet sink.
+    Inner stream-stream joins emit on match, so once every batch is
+    processed the landed pairs equal the batch range join — the oracle.
+    The time-range predicate is what bounds both join states at scale
+    (O(rate × window), not stream lifetime)."""
     from euclid_spark.streaming.block_db import read_event_stream
     from euclid_spark.streaming.joins import purchases_with_clicks
 
@@ -663,8 +981,9 @@ def stream_ss_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # is) — the 1-hour watermark absorbs the boundary raggedness.
         # The monoid faces tolerate arbitrary order; eviction-based
         # operators define correctness only within their lateness bound.
-        _write_time_splits(
-            cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "ts"
+        n_files = _write_feed(
+            cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "ts",
+            by_time=True,
         )
         out = os.path.join(tmp, "out")
         q = (
@@ -676,25 +995,21 @@ def stream_ss_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        if not q.awaitTermination(600):
-            raise RuntimeError("stream_ss_join: did not quiesce in time")
+        _run_stream(q, n_files)
         schema = "purchase_id long, click_id long, p_user long, p_value double"
-        import glob as _g
-
-        if not _g.glob(os.path.join(out, "part-*")):  # no pairs landed
+        if not glob.glob(os.path.join(out, "part-*")):  # no pairs landed
             return spark.createDataFrame([], schema)
         return spark.read.schema(schema).parquet(out)
 
     return _serve_streamed(spark, "stream_ss_join", fp, build)
 
 
-# ---------------------------------------------------------------- D4 face
-
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D4 face — the WATERMARKED TUMBLING-WINDOW aggregation (the
     standing query over the append stream) run as a real streaming
-    query in complete mode over the time-split feed; the final state
-    must equal the batch per-(hour, type) aggregate. DECIMAL sums so
+    query in complete mode over the time-split feed (time-ordered for
+    the same watermark reason as stream_ss_join); the final state must
+    equal the batch per-(hour, type) aggregate. DECIMAL sums so
     streamed partial merges and the one-pass oracle agree exactly."""
     from euclid_spark.streaming.block_db import read_event_stream
 
@@ -704,8 +1019,9 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(tmp: str) -> DataFrame:
         feed = os.path.join(tmp, "feed")
-        _write_time_splits(
-            cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "ts"
+        n_files = _write_feed(
+            cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "ts",
+            by_time=True,
         )
         agg = (
             read_event_stream(spark, feed)
@@ -727,8 +1043,7 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        if not q.awaitTermination(600):
-            raise RuntimeError("stream_windowed_counts: did not quiesce")
+        _run_stream(q, n_files)
         return spark.table(qname).select(
             F.col("window.start").alias("win_start"),
             "event_type",
@@ -737,6 +1052,41 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return _serve_streamed(spark, "stream_windowed_counts", fp, build)
+
+
+def stream_epoch_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """D34 face (r15) — the epoch-shard manifest served from the
+    INCREMENTALLY MAINTAINED bucket-keyed shard-row store after
+    streaming the corpus through the D34 sink in N_SPLITS adversarial
+    hash-split batches (shard_stream.py: per-doc tokenize+hash paid
+    once at ingest, appends touch only the hash-buckets a batch hits).
+    The gate compares the maintained manifest against C55's own batch
+    SQL over the full corpus — incremental ≡ batch for the exact
+    artifact a training dataloader consumes (the D19/D20 discipline)."""
+    from euclid_spark.operators.curation import EPOCH_SEED, SHARD_TOKENS
+    from euclid_spark.streaming.dedup_stream import read_document_stream
+    from euclid_spark.streaming.shard_stream import run_streaming_shards
+
+    fp = artifacts.corpus_fingerprint(
+        [f"{sf_dir}/documents.parquet"],
+        op="stream_epoch_shards",
+        n=N_SPLITS,
+        seed=EPOCH_SEED,
+        budget=SHARD_TOKENS,
+        v=1,
+    )
+
+    def build(tmp: str) -> DataFrame:
+        docs = cached_parquet(spark, f"{sf_dir}/documents.parquet")
+        feed = os.path.join(tmp, "feed")
+        n_files = _write_feed(docs.select("doc_id", "text"), feed, "doc_id")
+        q, sink = run_streaming_shards(
+            read_document_stream(spark, feed), os.path.join(tmp, "state")
+        )
+        _run_stream(q, n_files, sink)
+        return sink.manifest()
+
+    return _serve_streamed(spark, "stream_epoch_shards", fp, build)
 
 
 # ---------------------------------------------------------------- oracles
@@ -809,10 +1159,53 @@ def _lsh_closure_ctes() -> str:
     """
 
 
-def _dedup_pairs_sql() -> str:
-    from euclid_spark.operators.dedup import ORACLES as _DO
+def _components_ctes() -> str:
+    """_lsh_closure_ctes plus `assign`: every document with its
+    component (a doc no pair touched is its own) — the oracle side of
+    _streamed_components."""
+    return f"""
+        {_lsh_closure_ctes()},
+        assign AS (
+            SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
+            FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
+        )
+    """
 
-    return _DO["dedup_minhash_lsh"]
+
+def _leakage_splits_sql() -> str:
+    from euclid_spark.operators.curation import SPLIT_TRAIN, SPLIT_VALID
+
+    return f"""
+        WITH RECURSIVE
+        {_components_ctes()},
+        b AS (
+            SELECT doc_id, component,
+                   CAST('0x' || substr(md5('split|' ||
+                        CAST(component AS VARCHAR)), 1, 8) AS BIGINT)
+                   % 100 AS bucket
+            FROM assign
+        )
+        SELECT doc_id, component, CAST(bucket AS BIGINT) AS bucket,
+               CASE WHEN bucket < {SPLIT_TRAIN} THEN 'train'
+                    WHEN bucket < {SPLIT_VALID} THEN 'valid'
+                    ELSE 'test' END AS split
+        FROM b
+    """
+
+
+def _soft_dedup_weights_sql() -> str:
+    return f"""
+        WITH RECURSIVE
+        {_components_ctes()},
+        csize AS (
+            SELECT component, COUNT(*) AS cluster_size
+            FROM comp GROUP BY component
+        )
+        SELECT a.doc_id, a.component,
+               CAST(COALESCE(s.cluster_size, 1) AS BIGINT) AS cluster_size,
+               ROUND(1.0 / COALESCE(s.cluster_size, 1), 9) AS weight
+        FROM assign a LEFT JOIN csize s ON a.component = s.component
+    """
 
 
 def _curation_kept_sql() -> str:
@@ -845,146 +1238,6 @@ def _curation_kept_sql() -> str:
               SELECT doc_id FROM comp WHERE doc_id <> component
           )
     """
-
-
-def _spans_sql() -> str:
-    from euclid_spark.operators.dedup import ORACLES as _DO
-
-    return _DO["dedup_substring_spans"]
-
-
-def _mpt_sql() -> str:
-    from euclid_spark.operators.mpt_ingest import ORACLES as _MO
-
-    return _MO["euclid_mpt_reassemble"]
-
-
-def stream_range_tree_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D19 face with the A25 RANGE-TREE TILE monoid (r7): the
-    hierarchical partial-aggregate store maintained per micro-batch
-    over the adversarial hash-split feed — the streamed analog of
-    `query2/block/partial_node.rs` (appending blocks updates one path
-    of tiles, not the tree). The gate compares the FULL maintained tile
-    store against the batch SQL computing every (chunk, level, cell)
-    tile from the events table directly — incremental ≡ batch for the
-    exact structure the O(log-range) query face reads."""
-    from euclid_spark.streaming.block_db import read_event_stream
-    from euclid_spark.streaming.ivm import MaintainedAggregate
-    from euclid_spark.streaming.parity import (
-        _range_tree_merge,
-        _range_tree_partial,
-    )
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="stream_range_tree", n=N_SPLITS, v=1
-    )
-
-    def build(tmp: str) -> DataFrame:
-        feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
-            cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "event_id"
-        )
-        view, ck = os.path.join(tmp, "view"), os.path.join(tmp, "ck")
-        os.makedirs(ck, exist_ok=True)
-        sink = MaintainedAggregate(
-            view_path=view,
-            state_path=os.path.join(ck, "ivm_state.json"),
-            partial_fn=_range_tree_partial,
-            merge_fn=_range_tree_merge,
-        )
-        q = (
-            read_event_stream(spark, feed)
-            .writeStream.foreachBatch(sink.process)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _run_stream(q, sink, n_feeds)
-        if not os.path.exists(view):  # zero-row corpus: nothing merged
-            return spark.createDataFrame(
-                [],
-                "day int, level int, cell long, n_events bigint, "
-                "sum_value double, min_block long, max_block long, "
-                "digest bigint",
-            )
-        return sink.view(spark).select(
-            "day",
-            "level",
-            "cell",
-            "n_events",
-            F.col("sum_value").cast("double").alias("sum_value"),
-            "min_block",
-            "max_block",
-            "digest",
-        )
-
-    return _serve_streamed(spark, "stream_range_tree_tiles", fp, build)
-
-
-def stream_q2_key_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D19 face with the A26 QUERY2 KEY-TILE monoid (r8): the
-    per-(chunk, level, cell, owner) FIRST-L distinct-key tiles — the
-    bounded min-L selection lattice of `query2/block/full_node.rs` —
-    maintained per micro-batch over the adversarial hash-split feed.
-    The interesting incremental property the gate checks: per-batch
-    TRUNCATED partials must re-merge to exactly the from-scratch
-    first-L (a dropped key is larger than ≥L keys of its own slice, so
-    no truncation can ever evict a key the final answer needs). Output
-    is the exploded (tile, pos, token_id) form so the oracle's
-    ROW_NUMBER replay compares value-exactly."""
-    from euclid_spark.streaming.block_db import read_event_stream
-    from euclid_spark.streaming.ivm import MaintainedAggregate
-    from euclid_spark.streaming.parity import (
-        _q2_tiles_merge,
-        _q2_tiles_partial,
-    )
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="stream_q2_key_tiles",
-        n=N_SPLITS, v=1,
-    )
-
-    def build(tmp: str) -> DataFrame:
-        feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
-            cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "event_id"
-        )
-        view, ck = os.path.join(tmp, "view"), os.path.join(tmp, "ck")
-        os.makedirs(ck, exist_ok=True)
-        sink = MaintainedAggregate(
-            view_path=view,
-            state_path=os.path.join(ck, "ivm_state.json"),
-            partial_fn=_q2_tiles_partial,
-            merge_fn=_q2_tiles_merge,
-        )
-        q = (
-            read_event_stream(spark, feed)
-            .writeStream.foreachBatch(sink.process)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _run_stream(q, sink, n_feeds)
-        if not os.path.exists(view):  # zero-row corpus: nothing merged
-            return spark.createDataFrame(
-                [],
-                "day int, level int, cell long, owner long, pos int, "
-                "token_id long",
-            )
-        return (
-            sink.view(spark)
-            .select(
-                "day", "level", "cell", "owner",
-                F.posexplode("keys").alias("pos0", "token_id"),
-            )
-            .select(
-                "day", "level", "cell", "owner",
-                (F.col("pos0") + 1).cast("int").alias("pos"),
-                "token_id",
-            )
-        )
-
-    return _serve_streamed(spark, "stream_q2_key_tiles", fp, build)
 
 
 def _q2_key_tiles_sql() -> str:
@@ -1036,220 +1289,6 @@ def _range_tree_tiles_sql() -> str:
         CROSS JOIN (SELECT unnest(range(0, {_RT_LEVELS + 1})) AS level) g
         GROUP BY 1, 2, 3
     """
-
-
-def stream_hdr_quantile_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D19 face with the B47 QUANTILE-SKETCH monoid (r7): per-day
-    integer log-histogram tiles maintained per micro-batch; the gate
-    compares the full maintained tile store against the batch SQL
-    computing the same buckets from the events table — the mergeable-
-    sketch path a 100 TB deployment serves quantiles from."""
-    from euclid_spark.streaming.block_db import read_event_stream
-    from euclid_spark.streaming.ivm import MaintainedAggregate
-    from euclid_spark.streaming.parity import _hdr_merge, _hdr_partial
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="stream_hdr_tiles", n=N_SPLITS, v=1
-    )
-
-    def build(tmp: str) -> DataFrame:
-        feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
-            cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "event_id"
-        )
-        view, ck = os.path.join(tmp, "view"), os.path.join(tmp, "ck")
-        os.makedirs(ck, exist_ok=True)
-        sink = MaintainedAggregate(
-            view_path=view,
-            state_path=os.path.join(ck, "ivm_state.json"),
-            partial_fn=_hdr_partial,
-            merge_fn=_hdr_merge,
-        )
-        q = (
-            read_event_stream(spark, feed)
-            .writeStream.foreachBatch(sink.process)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _run_stream(q, sink, n_feeds)
-        if not os.path.exists(view):
-            return spark.createDataFrame(
-                [], "day date, nbits int, sub long, cnt bigint"
-            )
-        return sink.view(spark).select("day", "nbits", "sub", "cnt")
-
-    return _serve_streamed(spark, "stream_hdr_quantile_tiles", fp, build)
-
-
-def stream_lc_distinct_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D19 face with the B48 LINEAR-COUNTING bitmap monoid (r7):
-    per-day distinct-user bitmaps maintained per micro-batch (bit_or
-    merge — idempotent, so replay is free); gate = the batch bitmap
-    SQL per day."""
-    from euclid_spark.streaming.block_db import read_event_stream
-    from euclid_spark.streaming.ivm import MaintainedAggregate
-    from euclid_spark.streaming.parity import _lc_merge, _lc_partial
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="stream_lc_tiles", n=N_SPLITS, v=1
-    )
-
-    def build(tmp: str) -> DataFrame:
-        feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
-            cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "event_id"
-        )
-        view, ck = os.path.join(tmp, "view"), os.path.join(tmp, "ck")
-        os.makedirs(ck, exist_ok=True)
-        sink = MaintainedAggregate(
-            view_path=view,
-            state_path=os.path.join(ck, "ivm_state.json"),
-            partial_fn=_lc_partial,
-            merge_fn=_lc_merge,
-        )
-        q = (
-            read_event_stream(spark, feed)
-            .writeStream.foreachBatch(sink.process)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _run_stream(q, sink, n_feeds)
-        if not os.path.exists(view):
-            return spark.createDataFrame(
-                [], "day date, word_idx int, word bigint"
-            )
-        return sink.view(spark).select("day", "word_idx", "word")
-
-    return _serve_streamed(spark, "stream_lc_distinct_tiles", fp, build)
-
-
-
-
-def _psi_from_tiles(spark: SparkSession, tiles: DataFrame) -> DataFrame:
-    """The drift READ: PSI per event_type off the maintained tile
-    store. Split day = the tile store's own day span midpoint (one
-    bounded fold over index-sized tiles — never the raw events);
-    smoothing runs over the per-type OBSERVED bucket support (HDR's
-    bucket universe is open-ended, so there is no fixed B to close
-    over — supp is part of the output so the reader sees the support
-    the statistic was computed on)."""
-    import datetime as _dt
-
-    from pyspark.sql import Window
-
-    from euclid_spark.operators.drift import PSI_ALERT
-
-    row = tiles.agg(F.min("day").alias("d0"), F.max("day").alias("d1")).collect()[0]
-    empty = spark.createDataFrame(
-        [],
-        "event_type string, n_ref bigint, n_cur bigint,"
-        " n_buckets bigint, psi double, drifted boolean",
-    )
-    if row["d0"] is None:
-        return empty
-    split = row["d0"] + _dt.timedelta(days=(row["d1"] - row["d0"]).days // 2)
-    split_lit = F.to_date(F.lit(split.isoformat()))
-    perb = tiles.groupBy("event_type", "nbits", "sub").agg(
-        F.sum(
-            F.when(F.col("day") < split_lit, F.col("cnt")).otherwise(F.lit(0))
-        ).alias("cnt_ref"),
-        F.sum(
-            F.when(F.col("day") < split_lit, F.lit(0)).otherwise(F.col("cnt"))
-        ).alias("cnt_cur"),
-    )
-    w = Window.partitionBy("event_type")
-    wt = perb.select(
-        "*",
-        F.sum("cnt_ref").over(w).alias("n_ref"),
-        F.sum("cnt_cur").over(w).alias("n_cur"),
-        F.count(F.lit(1)).over(w).alias("supp"),
-    )
-    pr = (F.col("cnt_ref") + F.lit(0.5)) / (F.col("n_ref") + F.col("supp") / F.lit(2.0))
-    pc = (F.col("cnt_cur") + F.lit(0.5)) / (F.col("n_cur") + F.col("supp") / F.lit(2.0))
-    term = F.round((pc - pr) * F.log(pc / pr), 9).cast("decimal(38,9)")
-    return (
-        wt.select("event_type", "n_ref", "n_cur", "supp", term.alias("term"))
-        .groupBy("event_type")
-        .agg(
-            F.first("n_ref").alias("n_ref"),
-            F.first("n_cur").alias("n_cur"),
-            F.first("supp").alias("n_buckets"),
-            F.round(F.sum("term").cast("double"), 6).alias("psi"),
-        )
-        .filter(F.col("n_ref") > 0)
-        .select(
-            "event_type", "n_ref", "n_cur", "n_buckets", "psi",
-            (F.col("psi") > F.lit(PSI_ALERT)).alias("drifted"),
-        )
-    )
-
-
-def stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D32 — the drift monitor SERVED FROM MAINTAINED STATE (r13): the
-    B59 idea re-based on the D19 sink so a 100 TB deployment never
-    rescans history to re-check drift — per-(event_type, day) HDR
-    integer log-bucket tiles advance per micro-batch (additive count
-    monoid, 18th D20 spec `drift_tiles`; bins are split-invariant by
-    construction, unlike B59's reference-window-fitted bins, which is
-    what makes the statistic maintainable), and the face READS the
-    two-half-window PSI off the tile store: bounded per-type folds,
-    cost ∝ tiles, not events. Gate = the identical derivation from raw
-    events in DuckDB — binding partial → merge → read end to end.
-
-    POPULATION CONTRACT (ADVICE r13, CLOSED r14): the tile store's
-    original fixed-point filter (v = floor(value·100) ≥ 1) excluded
-    values below 0.01 — zeros and negatives — from both windows, while
-    batch B59 clamps every non-null value into bin 0, so the two
-    monitors measured different populations. The tiles now carry a
-    RESERVED UNDERFLOW bucket (nbits=0, sub=0 — one more additive
-    tile row; same design as the r14 quantile-edge batch variant's
-    key 0, drift.py _hdr_key), so batch and streamed monitoring see
-    the identical row set and n_ref/n_cur agree. Tile schema bump =
-    the v=2 fingerprint below (one rebuild per corpus version)."""
-    from euclid_spark.streaming.block_db import read_event_stream
-    from euclid_spark.streaming.ivm import MaintainedAggregate
-    from euclid_spark.streaming.parity import _drift_merge, _drift_partial
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="stream_drift_psi", n=N_SPLITS,
-        v=2,  # r14: underflow bucket joined the tile universe
-    )
-
-    def build(tmp: str) -> DataFrame:
-        feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
-            cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "event_id"
-        )
-        view, ck = os.path.join(tmp, "view"), os.path.join(tmp, "ck")
-        os.makedirs(ck, exist_ok=True)
-        sink = MaintainedAggregate(
-            view_path=view,
-            state_path=os.path.join(ck, "ivm_state.json"),
-            partial_fn=_drift_partial,
-            merge_fn=_drift_merge,
-        )
-        q = (
-            read_event_stream(spark, feed)
-            .writeStream.foreachBatch(sink.process)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _run_stream(q, sink, n_feeds)
-        if not os.path.exists(view):
-            return spark.createDataFrame(
-                [],
-                "event_type string, n_ref bigint, n_cur bigint,"
-                " n_buckets bigint, psi double, drifted boolean",
-            )
-        tiles = sink.view(spark).select(
-            "event_type", "day", "nbits", "sub", "cnt"
-        )
-        return _psi_from_tiles(spark, tiles)
-
-    return _serve_streamed(spark, "stream_drift_psi", fp, build)
 
 
 def _drift_psi_sql() -> str:
@@ -1319,387 +1358,65 @@ def _drift_psi_sql() -> str:
     """
 
 
-def stream_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D33 — D31's STREAMING TWIN (r13): the damaged-JSONL feed arrives
-    as a file stream (the tail of a crawl dump), each micro-batch is
-    parsed PERMISSIVE with the same corrupt-record contract as the
-    batch reader (from_json carries columnNameOfCorruptRecord), and the
-    per-(quarantined, source) ingest ledger advances through the D19
-    maintained-aggregate sink (additive count/char-mass monoid,
-    partition key = the quarantine flag — a batch only rewrites the
-    buckets it touches). The maintained ledger must equal the BATCH
-    D31 summary over everything ingested — same oracle, so the gate
-    binds stream parse → quarantine → merge against the parquet ground
-    truth end to end."""
-    from euclid_spark.sources.jsonl import _DOC_SCHEMA, jsonl_fixture_path
-    from euclid_spark.streaming.ivm import MaintainedAggregate
+def _cell_roots_sql(base: str, order: str, leaf: str, n_col: str) -> str:
+    """The in-cell Merkle fold replayed in SQL over `base` (owner, cell,
+    ...): leaves in `order`, then one halving CTE per tree level —
+    pairs hash, an unpaired tail promotes unchanged — down to the root;
+    a cell holds ≤ TILE_SIZE leaves, so log2(TILE_SIZE) halvings reach it."""
+    from euclid_spark.operators.range_tree import TILE_SIZE
 
-    fixture = jsonl_fixture_path(spark, sf_dir)
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"], op="stream_jsonl_ingest",
-        n=N_SPLITS, v=1,
+    depth = TILE_SIZE.bit_length() - 1
+    halvings = ",\n".join(
+        f"""l{k} AS (
+  SELECT owner, cell, pos // 2 AS pos,
+         CASE WHEN count(*) = 2
+              THEN sha256(string_agg(node_hash, '' ORDER BY pos))
+              ELSE min(node_hash) END AS node_hash
+  FROM l{k - 1} GROUP BY owner, cell, pos // 2
+)"""
+        for k in range(1, depth + 1)
     )
-
-    def _partial(lines: DataFrame) -> DataFrame:
-        d = F.from_json(
-            "value",
-            _DOC_SCHEMA,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-        )
-        parsed = lines.select(d.alias("d"))
-        return (
-            parsed.select(
-                F.col("d._corrupt").isNotNull().alias("quarantined"),
-                F.col("d.source").alias("source"),
-                F.col("d.n_chars").alias("n_chars"),
-            )
-            .groupBy("quarantined", "source")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("n_chars").alias("sum_chars"),
-            )
-        )
-
-    def _merge(old: DataFrame, partial: DataFrame) -> DataFrame:
-        return (
-            old.unionByName(partial)
-            .groupBy("quarantined", "source")
-            .agg(
-                F.sum("n_rows").alias("n_rows"),
-                F.sum("sum_chars").alias("sum_chars"),
-            )
-        )
-
-    def build(tmp: str) -> DataFrame:
-        feed = os.path.join(tmp, "feed")
-        os.makedirs(feed, exist_ok=True)
-        lines = spark.read.text(fixture)
-        n_feeds = N_SPLITS
-        for i in range(n_feeds):
-            lines.filter(
-                F.pmod(
-                    F.conv(F.substring(F.md5("value"), 1, 8), 16, 10)
-                    .cast("long"),
-                    F.lit(n_feeds),
-                )
-                == i
-            ).coalesce(1).write.mode("overwrite").text(
-                os.path.join(feed, f"split_{i}")
-            )
-        view, ck = os.path.join(tmp, "view"), os.path.join(tmp, "ck")
-        os.makedirs(ck, exist_ok=True)
-        sink = MaintainedAggregate(
-            view_path=view,
-            state_path=os.path.join(ck, "ivm_state.json"),
-            partial_fn=_partial,
-            merge_fn=_merge,
-            key_col="quarantined",
-        )
-        q = (
-            spark.readStream.option("maxFilesPerTrigger", 1)
-            .text(os.path.join(feed, "split_*"))
-            .writeStream.foreachBatch(sink.process)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _run_stream(q, sink, n_feeds)
-        if not os.path.exists(view):
-            return spark.createDataFrame(
-                [],
-                "quarantined boolean, source string,"
-                " n_rows bigint, sum_chars bigint",
-            )
-        return sink.view(spark).select(
-            # the Hive-style partition directory round-trips the flag
-            # through partition-value inference — pin it back to boolean
-            F.col("quarantined").cast("boolean").alias("quarantined"),
-            "source",
-            "n_rows",
-            "sum_chars",
-        )
-
-    return _serve_streamed(spark, "stream_jsonl_ingest", fp, build)
-
-
-def stream_erc20_rewards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D19 face with the ERC-20 u256 REWARD monoid (r7): A13's query
-    maintained incrementally — the reference's IVC story applied to
-    its own second query family (query_erc20 + block/mod.rs: each new
-    block's entries fold into the running result). The leaf circuit
-    runs per micro-batch; the maintained per-owner limb sums carry-
-    normalize at read into the same reward_hex A13's HUGEINT oracle
-    checks."""
-    from euclid_spark.functions.u256 import u256_carry_hex
-    from euclid_spark.streaming.block_db import read_event_stream
-    from euclid_spark.streaming.ivm import MaintainedAggregate
-    from euclid_spark.streaming.parity import _erc20_merge, _erc20_partial
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="stream_erc20_rewards", n=N_SPLITS, v=1
-    )
-
-    def build(tmp: str) -> DataFrame:
-        feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
-            cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "event_id"
-        )
-        view, ck = os.path.join(tmp, "view"), os.path.join(tmp, "ck")
-        os.makedirs(ck, exist_ok=True)
-        sink = MaintainedAggregate(
-            view_path=view,
-            state_path=os.path.join(ck, "ivm_state.json"),
-            partial_fn=_erc20_partial,
-            merge_fn=_erc20_merge,
-        )
-        q = (
-            read_event_stream(spark, feed)
-            .writeStream.foreachBatch(sink.process)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _run_stream(q, sink, n_feeds)
-        if not os.path.exists(view):
-            return spark.createDataFrame(
-                [],
-                "owner long, reward_hex string, n_zero_supply long, "
-                "n_overflow long",
-            )
-        return sink.view(spark).select(
-            "owner",
-            u256_carry_hex(
-                F.col("s0"), F.col("s1"), F.col("s2"), F.col("s3")
-            ).alias("reward_hex"),
-            F.col("zs").alias("n_zero_supply"),
-            F.col("of").alias("n_overflow"),
-        )
-
-    return _serve_streamed(spark, "stream_erc20_rewards", fp, build)
-
-
-def _erc20_rewards_sql() -> str:
-    from euclid_spark.operators import euclid as _e
-
-    return _e.ORACLES["euclid_erc20_weighted_sum_u256"]
-
-
-def stream_erc20_cell_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D19 face with the A31 RESPONSE-COMMITMENT monoid (r9): the
-    per-(owner, cell) in-cell Merkle leaf sets of the arbitrary-range
-    verifiable responses (range_response.serve_range_commitments'
-    rr_erc20 trees) maintained per micro-batch over the adversarial
-    hash-split feed, folded to CELL ROOTS at read — the reference's
-    IVC story applied to the r9 response artifacts: a live ingest
-    maintains the commitment structure responses open into, and the
-    gate checks the maintained roots equal the from-raw-rows
-    derivation (DuckDB replays the leaf circuit + the promotion
-    pairing over 8 halving CTEs)."""
-    from pyspark.sql import Window
-
-    from euclid_spark.cache import persist_tracked
-    from euclid_spark.operators.merkle import merkle_levels
-    from euclid_spark.streaming.block_db import read_event_stream
-    from euclid_spark.streaming.ivm import MaintainedAggregate
-    from euclid_spark.streaming.parity import (
-        _rr_cell_leaves_merge,
-        _rr_cell_leaves_partial,
-    )
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="stream_erc20_cell_roots",
-        n=N_SPLITS, v=1,
-    )
-
-    def build(tmp: str) -> DataFrame:
-        feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
-            cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "event_id"
-        )
-        view, ck = os.path.join(tmp, "view"), os.path.join(tmp, "ck")
-        os.makedirs(ck, exist_ok=True)
-        sink = MaintainedAggregate(
-            view_path=view,
-            state_path=os.path.join(ck, "ivm_state.json"),
-            partial_fn=_rr_cell_leaves_partial,
-            merge_fn=_rr_cell_leaves_merge,
-        )
-        q = (
-            read_event_stream(spark, feed)
-            .writeStream.foreachBatch(sink.process)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _run_stream(q, sink, n_feeds)
-        empty_schema = "owner long, cell long, n_entries long, root string"
-        if not os.path.exists(view):  # zero-row corpus: nothing merged
-            return spark.createDataFrame([], empty_schema)
-        lv = (
-            sink.view(spark)
-            .select(
-                "owner", "cell",
-                F.posexplode("leaves").alias("pos", "lf"),
-            )
-            .select(
-                F.concat_ws("|", "owner", "cell").alias("group_key"),
-                "owner", "cell", "pos",
-                F.col("lf.node_hash").alias("node_hash"),
-            )
-        )
-        lv = persist_tracked(lv)
-        nodes, _ = merkle_levels(lv.select("group_key", "pos", "node_hash"))
-        wl = Window.partitionBy("group_key")
-        roots = (
-            nodes.withColumn("ml", F.max("level").over(wl))
-            .filter(F.col("level") == F.col("ml"))
-            .select("group_key", F.col("node_hash").alias("root"))
-        )
-        meta = lv.groupBy("group_key", "owner", "cell").agg(
-            F.count(F.lit(1)).alias("n_entries")
-        )
-        return meta.join(roots, "group_key").select(
-            "owner", "cell", "n_entries", "root"
-        )
-
-    return _serve_streamed(spark, "stream_erc20_cell_roots", fp, build)
-
-
-def stream_q2_cell_roots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Q2 twin of stream_erc20_cell_roots (r9): the per-(owner,
-    cell) DISTINCT-KEY leaf sets of the A30 Query2 range-response
-    commitments maintained per micro-batch (idempotent set union —
-    16th D20 spec rr_q2_cell_leaves), folded to in-cell roots at read.
-    With the ERC-20 face this closes the pair: BOTH reference query
-    families' response commitments now have gate-checked incremental
-    maintenance."""
-    from pyspark.sql import Window
-
-    from euclid_spark.cache import persist_tracked
-    from euclid_spark.operators.merkle import merkle_levels
-    from euclid_spark.streaming.block_db import read_event_stream
-    from euclid_spark.streaming.ivm import MaintainedAggregate
-    from euclid_spark.streaming.parity import (
-        _rr_q2_cell_leaves_merge,
-        _rr_q2_cell_leaves_partial,
-    )
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="stream_q2_cell_roots",
-        n=N_SPLITS, v=1,
-    )
-
-    def build(tmp: str) -> DataFrame:
-        feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
-            cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "event_id"
-        )
-        view, ck = os.path.join(tmp, "view"), os.path.join(tmp, "ck")
-        os.makedirs(ck, exist_ok=True)
-        sink = MaintainedAggregate(
-            view_path=view,
-            state_path=os.path.join(ck, "ivm_state.json"),
-            partial_fn=_rr_q2_cell_leaves_partial,
-            merge_fn=_rr_q2_cell_leaves_merge,
-        )
-        q = (
-            read_event_stream(spark, feed)
-            .writeStream.foreachBatch(sink.process)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _run_stream(q, sink, n_feeds)
-        empty_schema = "owner long, cell long, n_keys long, root string"
-        if not os.path.exists(view):  # zero-row corpus: nothing merged
-            return spark.createDataFrame([], empty_schema)
-        lv = (
-            sink.view(spark)
-            .select(
-                "owner", "cell",
-                F.posexplode("tokens").alias("pos", "token_id"),
-            )
-            .select(
-                F.concat_ws("|", "owner", "cell").alias("group_key"),
-                "owner", "cell", "pos",
-                F.sha2(F.col("token_id").cast("string"), 256)
-                .alias("node_hash"),
-            )
-        )
-        lv = persist_tracked(lv)
-        nodes, _ = merkle_levels(lv.select("group_key", "pos", "node_hash"))
-        wl = Window.partitionBy("group_key")
-        roots = (
-            nodes.withColumn("ml", F.max("level").over(wl))
-            .filter(F.col("level") == F.col("ml"))
-            .select("group_key", F.col("node_hash").alias("root"))
-        )
-        meta = lv.groupBy("group_key", "owner", "cell").agg(
-            F.count(F.lit(1)).alias("n_keys")
-        )
-        return meta.join(roots, "group_key").select(
-            "owner", "cell", "n_keys", "root"
-        )
-
-    return _serve_streamed(spark, "stream_q2_cell_roots", fp, build)
+    return f"""
+WITH base AS ({base}),
+l0 AS (
+  SELECT owner, cell,
+         row_number() OVER (PARTITION BY owner, cell
+                            ORDER BY {order}) - 1 AS pos,
+         {leaf} AS node_hash
+  FROM base
+),
+{halvings},
+counts AS (
+  SELECT owner, cell, count(*) AS {n_col} FROM l0 GROUP BY owner, cell
+)
+SELECT c.owner, c.cell, CAST(c.{n_col} AS BIGINT) AS {n_col},
+       r.node_hash AS root
+FROM counts c JOIN l{depth} r ON r.owner = c.owner AND r.cell = c.cell
+"""
 
 
 def _q2_cell_roots_sql() -> str:
     from euclid_spark.operators.euclid import _TOKEN
     from euclid_spark.operators.range_tree import TILE_SIZE
 
-    halvings = []
-    for k in range(1, 9):
-        halvings.append(
-            f"""l{k} AS (
-  SELECT owner, cell, pos // 2 AS pos,
-         CASE WHEN count(*) = 2
-              THEN sha256(string_agg(node_hash, '' ORDER BY pos))
-              ELSE min(node_hash) END AS node_hash
-  FROM l{k - 1} GROUP BY owner, cell, pos // 2
-)"""
-        )
-    return f"""
-WITH base AS (
+    return _cell_roots_sql(
+        f"""
   SELECT DISTINCT user_id AS owner, {_TOKEN} AS token_id,
          event_id // {TILE_SIZE} AS cell
   FROM events
-  WHERE event_type = 'purchase' AND {_TOKEN} IS NOT NULL
-),
-l0 AS (
-  SELECT owner, cell,
-         row_number() OVER (PARTITION BY owner, cell
-                            ORDER BY token_id) - 1 AS pos,
-         sha256(token_id::VARCHAR) AS node_hash
-  FROM base
-),
-{', '.join(halvings)},
-counts AS (
-  SELECT owner, cell, count(*) AS n_keys FROM l0 GROUP BY owner, cell
-)
-SELECT c.owner, c.cell, CAST(c.n_keys AS BIGINT) AS n_keys,
-       r.node_hash AS root
-FROM counts c JOIN l8 r ON r.owner = c.owner AND r.cell = c.cell
-"""
+  WHERE event_type = 'purchase' AND {_TOKEN} IS NOT NULL""",
+        "token_id",
+        "sha256(token_id::VARCHAR)",
+        "n_keys",
+    )
 
 
 def _erc20_cell_roots_sql() -> str:
     from euclid_spark.operators.euclid import REWARDS_RATE, _TOKEN
     from euclid_spark.operators.range_tree import TILE_SIZE
 
-    halvings = []
-    for k in range(1, 9):  # 2^8 = TILE_SIZE: a cell holds ≤ 256 entries
-        halvings.append(
-            f"""l{k} AS (
-  SELECT owner, cell, pos // 2 AS pos,
-         CASE WHEN count(*) = 2
-              THEN sha256(string_agg(node_hash, '' ORDER BY pos))
-              ELSE min(node_hash) END AS node_hash
-  FROM l{k - 1} GROUP BY owner, cell, pos // 2
-)"""
-        )
-    return f"""
-WITH base AS (
+    return _cell_roots_sql(
+        f"""
   SELECT user_id AS owner, event_id,
          lpad(lower(to_hex(
              CASE WHEN tok IS NULL OR tok = 0 THEN CAST(0 AS HUGEINT)
@@ -1709,207 +1426,15 @@ WITH base AS (
              END)), 64, '0') AS entry_reward_hex,
          event_id // {TILE_SIZE} AS cell
   FROM (SELECT user_id, event_id, value, {_TOKEN} AS tok FROM events
-        WHERE event_type = 'purchase' AND value IS NOT NULL)
-),
-l0 AS (
-  SELECT owner, cell,
-         row_number() OVER (PARTITION BY owner, cell
-                            ORDER BY event_id) - 1 AS pos,
-         sha256(event_id::VARCHAR || ':' || entry_reward_hex) AS node_hash
-  FROM base
-),
-{', '.join(halvings)},
-counts AS (
-  SELECT owner, cell, count(*) AS n_entries FROM l0 GROUP BY owner, cell
-)
-SELECT c.owner, c.cell, CAST(c.n_entries AS BIGINT) AS n_entries,
-       r.node_hash AS root
-FROM counts c JOIN l8 r ON r.owner = c.owner AND r.cell = c.cell
-"""
-
-
-def stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D19 face with the B56 OHLC SELECTION monoid (late r7): per-
-    (user, hour) open/high/low/close bars maintained per micro-batch —
-    the candle-from-ticks pipeline. The maintained state carries each
-    selection's (ts, event_id) order key beside its value, so the
-    argmin/argmax lattice re-merges identically under any batch split;
-    oracle = B56's batch window SQL."""
-    from euclid_spark.streaming.block_db import read_event_stream
-    from euclid_spark.streaming.ivm import MaintainedAggregate
-    from euclid_spark.streaming.parity import _ohlc_merge, _ohlc_partial
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="stream_ohlc_bars", n=N_SPLITS, v=1
+        WHERE event_type = 'purchase' AND value IS NOT NULL)""",
+        "event_id",
+        "sha256(event_id::VARCHAR || ':' || entry_reward_hex)",
+        "n_entries",
     )
-
-    def build(tmp: str) -> DataFrame:
-        feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
-            cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "event_id"
-        )
-        view, ck = os.path.join(tmp, "view"), os.path.join(tmp, "ck")
-        os.makedirs(ck, exist_ok=True)
-        sink = MaintainedAggregate(
-            view_path=view,
-            state_path=os.path.join(ck, "ivm_state.json"),
-            partial_fn=_ohlc_partial,
-            merge_fn=_ohlc_merge,
-        )
-        q = (
-            read_event_stream(spark, feed)
-            .writeStream.foreachBatch(sink.process)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _run_stream(q, sink, n_feeds)
-        if not os.path.exists(view):
-            return spark.createDataFrame(
-                [],
-                "user_id long, hour_start timestamp, open double, "
-                "high double, low double, close double, n_ticks bigint",
-            )
-        return sink.view(spark).select(
-            "user_id",
-            "hour_start",
-            F.col("o.v").alias("open"),
-            "high",
-            "low",
-            F.col("c.v").alias("close"),
-            "n_ticks",
-        )
-
-    return _serve_streamed(spark, "stream_ohlc_bars", fp, build)
-
-
-def _ohlc_bars_sql() -> str:
-    from euclid_spark.operators import timeseries as _t
-
-    return _t.ORACLES["rel_ohlc_resample"]
-
-
-# ---------------------------------------------------------------- D27 face
-
-# seed-centroid count for the gate-checkable model — one constant with
-# the batch search face (operators/similarity.sim_ivf_pinned_topk), so
-# the maintained lists and the pinned search path describe the same model
-from euclid_spark.operators.similarity import SEED_K as IVF_FACE_K  # noqa: E402
-
-
-def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D27 face — the IVF INVERTED-LIST STORE maintained incrementally:
-    new corpus embeddings stream in and each micro-batch is assigned to
-    its nearest centroid and merged into that centroid's list partition
-    (the view is partitioned BY cid — a batch touches only the lists
-    its vectors land in, the `day`-economics of D19 with the index's
-    own key). This is how a 100 TB ANN index stays fresh: the model is
-    trained once up front, arrivals are assigned incrementally, and
-    the serving lists never need a rebuild scan.
-
-    The MODEL here is pinned to a deterministic, SQL-expressible seed —
-    the IVF_FACE_K lowest-vec_id corpus vectors — precisely so the
-    DuckDB gate can hash-check the maintained store (the production
-    path serves the k-means artifact via `similarity.ivf_centroids`;
-    `sim_ivf_topk(centroids=...)` accepts any external model, and
-    k-means itself is engine-side by design — C6/C12 are recall-gated
-    instead). Assignment rule mirrors C5: rounded cosine, (csim DESC,
-    cid ASC) tiebreak, zero-norm guarded."""
-    from euclid_spark.functions.vectors import cosine
-    from euclid_spark.operators.similarity import N_QUERIES
-    from euclid_spark.streaming.ivm import MaintainedAggregate
-    from pyspark.sql import Window
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/embeddings.parquet"],
-        op="stream_ivf_assign",
-        n=N_SPLITS,
-        k=IVF_FACE_K,
-        v=1,
-    )
-
-    def build(tmp: str) -> DataFrame:
-        corpus = cached_parquet(spark, f"{sf_dir}/embeddings.parquet").filter(
-            F.col("vec_id") >= N_QUERIES
-        )
-        # the fixed up-front model: K lowest-vec_id corpus vectors
-        # (bounded parameter fetch, broadcast into every batch)
-        seed = corpus.orderBy("vec_id").limit(IVF_FACE_K).select(
-            F.col("vec_id").alias("cid"), F.col("embedding").alias("cemb")
-        )
-        seed_rows = seed.collect()
-        if not seed_rows:
-            return spark.createDataFrame(
-                [], "cid long, neighbor_id long, csim double"
-            )
-        cent = spark.createDataFrame(
-            [(r["cid"], [float(x) for x in r["cemb"]]) for r in seed_rows],
-            "cid long, cemb array<double>",
-        )
-
-        def assign_partial(batch: DataFrame) -> DataFrame:
-            scored = batch.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("ce"),
-            ).crossJoin(F.broadcast(cent)).select(
-                "cid",
-                "neighbor_id",
-                F.round(
-                    cosine(
-                        F.col("ce").cast("array<double>"), F.col("cemb")
-                    ),
-                    6,
-                ).alias("csim"),
-            )
-            w = Window.partitionBy("neighbor_id").orderBy(
-                F.desc("csim"), "cid"
-            )
-            return (
-                scored.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .select("cid", "neighbor_id", "csim")
-            )
-
-        def merge_lists(old: DataFrame, partial: DataFrame) -> DataFrame:
-            # vec_ids are disjoint across batches (append-only corpus):
-            # the per-list merge is a plain union; re-delivered batches
-            # are excluded by the per-cid applied watermark upstream
-            return old.unionByName(partial)
-
-        feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
-            corpus.select("vec_id", "embedding"), feed, "vec_id"
-        )
-        view, ck = os.path.join(tmp, "view"), os.path.join(tmp, "ck")
-        os.makedirs(ck, exist_ok=True)
-        sink = MaintainedAggregate(
-            view_path=view,
-            state_path=os.path.join(ck, "ivm_state.json"),
-            partial_fn=assign_partial,
-            merge_fn=merge_lists,
-            key_col="cid",
-        )
-        q = (
-            spark.readStream.schema("vec_id long, embedding array<float>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-            .writeStream.foreachBatch(sink.process)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _run_stream(q, sink, n_feeds)
-        if not os.path.exists(view):
-            return spark.createDataFrame(
-                [], "cid long, neighbor_id long, csim double"
-            )
-        return sink.view(spark).select("cid", "neighbor_id", "csim")
-
-    return _serve_streamed(spark, "stream_ivf_assign", fp, build)
 
 
 def _ivf_assign_sql() -> str:
-    from euclid_spark.operators.similarity import _DOT, _NC, _NQ, N_QUERIES
+    from euclid_spark.operators.similarity import _DOT, _NC, _NQ
 
     dot = _DOT.replace("qe", "cemb")
     nq = _NQ.replace("qe", "cemb")
@@ -1972,97 +1497,13 @@ def _lc_tiles_sql() -> str:
     """
 
 
-def stream_eth_account_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D30 streamed (the 20th face) — the eth_getProof capture's
-    ACCOUNT-STATE COMMITMENTS maintained as blocks arrive: the IVC
-    property (block/mod.rs: step(commitment_n, batch) ≡ from-scratch)
-    applied to the r11 real-chain surface. The maintained state is the
-    distinct (owner, mapping-key) ledger — an idempotent set-union
-    monoid, partition-pruned by owner bucket so a micro-batch rewrites
-    only the buckets it touches; at read, each account's SECURE
-    storage trie rebuilds from its maintained key set (the distributed
-    level-batched keccak builder shared with the batch capture) and
-    the roots must equal the BATCH capture's storageHash — the oracle
-    reads the served eth_proof_fixture and re-derives nonce/balance
-    relationally from raw events."""
-    from euclid_spark.streaming.block_db import read_event_stream
-    from euclid_spark.streaming.ivm import MaintainedAggregate
-    from euclid_spark.sources.eth_proof import (
-        MAPPING_SLOT,
-        account_state_rows,
-        eth_proof_fixture,
-    )
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="stream_eth_state",
-        n=N_SPLITS, slot=MAPPING_SLOT, v=1,
-    )
-    # the oracle compares against the batch capture — make sure it is
-    # served (cheap load when cached; one-time build otherwise)
-    eth_proof_fixture(spark, sf_dir)
-
-    def _partial(batch: DataFrame) -> DataFrame:
-        tok = F.get_json_object("props", "$.k").cast("long")
-        return (
-            batch.filter(F.col("event_type") == "purchase")
-            .select(F.col("user_id"), tok.alias("token_id"))
-            .filter(F.col("token_id").isNotNull())
-            .withColumn(
-                "pb", F.pmod(F.col("user_id"), F.lit(16)).cast("int")
-            )
-            .select("pb", "user_id", "token_id")
-            .distinct()
-        )
-
-    def _merge(old: DataFrame, part: DataFrame) -> DataFrame:
-        return old.unionByName(part).distinct()
-
-    def build(tmp: str) -> DataFrame:
-        feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(
-            cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "event_id"
-        )
-        view, ck = os.path.join(tmp, "view"), os.path.join(tmp, "ck")
-        os.makedirs(ck, exist_ok=True)
-        sink = MaintainedAggregate(
-            view_path=view,
-            state_path=os.path.join(ck, "eth_state.json"),
-            partial_fn=_partial,
-            merge_fn=_merge,
-            key_col="pb",
-        )
-        q = (
-            read_event_stream(spark, feed)
-            .writeStream.foreachBatch(sink.process)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _run_stream(q, sink, n_feeds)
-        if not os.path.exists(view):  # zero-row corpus
-            return spark.createDataFrame(
-                [],
-                "address string, nonce long, balance long, "
-                "storage_root string",
-            )
-        pairs = sink.view(spark).select("user_id", "token_id")
-        return account_state_rows(pairs)
-
-    return _serve_streamed(spark, "stream_eth_state", fp, build)
-
-
 def _eth_state_sql(sf_dir: str) -> str:
     """Oracle: the BATCH capture's commitments joined to relational
     expectations — streamed trie roots must equal the from-scratch
     capture's storageHash (the IVC gate)."""
-    import os as _os
-
-    from euclid_spark import artifacts as _arts
-    from euclid_spark.sources.eth_proof import _fixture_fp
-
-    path = _os.path.join(
-        _arts.artifact_dir(),
-        f"eth_proof_fixture_{_fixture_fp(sf_dir)}.parquet",
+    path = os.path.join(
+        artifacts.artifact_dir(),
+        f"eth_proof_fixture_{eth_proof._fixture_fp(sf_dir)}.parquet",
     )
     tok = "CAST(json_extract_string(props, '$.k') AS BIGINT)"
     return f"""
@@ -2087,104 +1528,19 @@ def _eth_state_sql(sf_dir: str) -> str:
     """
 
 
-def stream_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D35 face (r15) — C54's soft-dedup TRAINING WEIGHTS computed from
-    the INCREMENTALLY MAINTAINED component labels (the third consumer
-    of the shared streamed dedup state, after D21's pair ledger and
-    D28's leakage-safe splits — the production one-index-many-consumers
-    shape): as near-duplicates stream in, cluster sizes grow and every
-    member's weight 1/|cluster| decays WITHOUT re-running batch dedup —
-    the sampling weights a soft-dedup trainer (Abbas et al. 2023,
-    SemDeDup-style down-weighting practice) reads stay fresh against a
-    growing corpus. Projection is two aggregates over the served label
-    scan (groupBy component, then an equi-join on the same key — one
-    exchange, reused); oracle = the same 1/|component| rule over the
-    LSH-pair recursive closure (the pair universe D21 maintains)."""
-    _, labels = _streamed_dedup_state(spark, sf_dir)
-    docs = cached_parquet(spark, f"{sf_dir}/documents.parquet").select("doc_id")
-    assigned = docs.join(labels, "doc_id", "left").withColumn(
-        "component", F.coalesce(F.col("component"), F.col("doc_id"))
-    )
-    sizes = assigned.groupBy("component").agg(
-        F.count(F.lit(1)).alias("cluster_size")
-    )
-    return assigned.join(sizes, "component").select(
-        "doc_id",
-        "component",
-        "cluster_size",
-        F.round(F.lit(1.0) / F.col("cluster_size"), 9).alias("weight"),
-    )
+def _maintained_face(key: str) -> Callable[[SparkSession, str], DataFrame]:
+    face = MAINTAINED[key]
 
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return _serve_maintained(spark, sf_dir, face)
 
-def _soft_dedup_weights_sql() -> str:
-    return f"""
-        WITH RECURSIVE
-        {_lsh_closure_ctes()},
-        csize AS (
-            SELECT component, COUNT(*) AS cluster_size
-            FROM comp GROUP BY component
-        ),
-        assign AS (
-            SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS component
-            FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-        )
-        SELECT a.doc_id, a.component,
-               CAST(COALESCE(s.cluster_size, 1) AS BIGINT) AS cluster_size,
-               ROUND(1.0 / COALESCE(s.cluster_size, 1), 9) AS weight
-        FROM assign a LEFT JOIN csize s ON a.component = s.component
-    """
-
-
-def stream_epoch_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D34 face (r15) — the epoch-shard manifest served from the
-    INCREMENTALLY MAINTAINED bucket-keyed shard-row store after
-    streaming the corpus through the D34 sink in N_SPLITS adversarial
-    hash-split batches (shard_stream.py: per-doc tokenize+hash paid
-    once at ingest, appends touch only the hash-buckets a batch hits).
-    The gate compares the maintained manifest against C55's own batch
-    SQL over the full corpus — incremental ≡ batch for the exact
-    artifact a training dataloader consumes (the D19/D20 discipline)."""
-    from euclid_spark.operators.curation import EPOCH_SEED, SHARD_TOKENS
-    from euclid_spark.streaming.shard_stream import run_streaming_shards
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="stream_epoch_shards",
-        n=N_SPLITS,
-        seed=EPOCH_SEED,
-        budget=SHARD_TOKENS,
-        v=1,
-    )
-
-    def build(tmp: str) -> DataFrame:
-        docs = cached_parquet(spark, f"{sf_dir}/documents.parquet")
-        feed = os.path.join(tmp, "feed")
-        n_feeds = _write_splits(docs.select("doc_id", "text"), feed, "doc_id")
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(feed)
-        )
-        q, sink = run_streaming_shards(stream, os.path.join(tmp, "state"))
-        _run_stream(q, sink, n_feeds)
-        return sink.manifest()
-
-    return _serve_streamed(spark, "stream_epoch_shards", fp, build)
-
-
-def _epoch_shards_sql() -> str:
-    from euclid_spark.operators.curation import ORACLES as _CO
-
-    return _CO["curation_epoch_shards"]
+    run.__name__ = key
+    return run
 
 
 DYNAMIC_ORACLES = {"stream_eth_account_state": _eth_state_sql}
 
-
-QUERIES = {
-    "stream_eth_account_state": stream_eth_account_state,
-    "stream_ivm_view": stream_ivm_view,
-    "stream_state_rollup": stream_state_rollup,
+_HAND_RUN = {
     "stream_block_db_chain": stream_block_db_chain,
     "stream_dedup_pairs": stream_dedup_pairs,
     "stream_curation_kept": stream_curation_kept,
@@ -2192,46 +1548,64 @@ QUERIES = {
     "stream_mpt_entries": stream_mpt_entries,
     "stream_ss_join": stream_ss_join,
     "stream_windowed_counts": stream_windowed_counts,
-    "stream_range_tree_tiles": stream_range_tree_tiles,
-    "stream_q2_key_tiles": stream_q2_key_tiles,
-    "stream_hdr_quantile_tiles": stream_hdr_quantile_tiles,
-    "stream_lc_distinct_tiles": stream_lc_distinct_tiles,
-    "stream_erc20_rewards": stream_erc20_rewards,
-    "stream_erc20_cell_roots": stream_erc20_cell_roots,
-    "stream_q2_cell_roots": stream_q2_cell_roots,
-    "stream_ivf_assign": stream_ivf_assign,
     "stream_leakage_splits": stream_leakage_splits,
-    "stream_ohlc_bars": stream_ohlc_bars,
-    "stream_drift_psi": stream_drift_psi,
-    "stream_jsonl_ingest": stream_jsonl_ingest,
     "stream_epoch_shards": stream_epoch_shards,
     "stream_soft_dedup_weights": stream_soft_dedup_weights,
 }
 
+# registry order (the driver's key windows depend on it)
+QUERIES = {
+    k: _HAND_RUN[k] if k in _HAND_RUN else _maintained_face(k)
+    for k in (
+        "stream_eth_account_state",
+        "stream_ivm_view",
+        "stream_state_rollup",
+        "stream_block_db_chain",
+        "stream_dedup_pairs",
+        "stream_curation_kept",
+        "stream_substring_verdicts",
+        "stream_mpt_entries",
+        "stream_ss_join",
+        "stream_windowed_counts",
+        "stream_range_tree_tiles",
+        "stream_q2_key_tiles",
+        "stream_hdr_quantile_tiles",
+        "stream_lc_distinct_tiles",
+        "stream_erc20_rewards",
+        "stream_erc20_cell_roots",
+        "stream_q2_cell_roots",
+        "stream_ivf_assign",
+        "stream_leakage_splits",
+        "stream_ohlc_bars",
+        "stream_drift_psi",
+        "stream_jsonl_ingest",
+        "stream_epoch_shards",
+        "stream_soft_dedup_weights",
+    )
+}
+
 ORACLES = {
-    "stream_epoch_shards": _epoch_shards_sql(),
+    "stream_epoch_shards": curation.ORACLES["curation_epoch_shards"],
     "stream_soft_dedup_weights": _soft_dedup_weights_sql(),
     "stream_range_tree_tiles": _range_tree_tiles_sql(),
     "stream_q2_key_tiles": _q2_key_tiles_sql(),
     "stream_hdr_quantile_tiles": _hdr_tiles_sql(),
     "stream_lc_distinct_tiles": _lc_tiles_sql(),
-    "stream_erc20_rewards": _erc20_rewards_sql(),
+    "stream_erc20_rewards": euclid.ORACLES["euclid_erc20_weighted_sum_u256"],
     "stream_erc20_cell_roots": _erc20_cell_roots_sql(),
     "stream_q2_cell_roots": _q2_cell_roots_sql(),
     "stream_ivf_assign": _ivf_assign_sql(),
     "stream_leakage_splits": _leakage_splits_sql(),
-    "stream_ohlc_bars": _ohlc_bars_sql(),
+    "stream_ohlc_bars": timeseries.ORACLES["rel_ohlc_resample"],
     "stream_drift_psi": _drift_psi_sql(),
-    "stream_jsonl_ingest": __import__(
-        "euclid_spark.sources.jsonl", fromlist=["ORACLES"]
-    ).ORACLES["src_jsonl_quarantine"],
+    "stream_jsonl_ingest": jsonl.ORACLES["src_jsonl_quarantine"],
     "stream_ivm_view": _IVM_SQL,
     "stream_state_rollup": _ROLLUP_SQL,
     "stream_block_db_chain": _CHAIN_SQL,
-    "stream_dedup_pairs": _dedup_pairs_sql(),
+    "stream_dedup_pairs": dedup.ORACLES["dedup_minhash_lsh"],
     "stream_curation_kept": _curation_kept_sql(),
-    "stream_substring_verdicts": _spans_sql(),
-    "stream_mpt_entries": _mpt_sql(),
+    "stream_substring_verdicts": dedup.ORACLES["dedup_substring_spans"],
+    "stream_mpt_entries": mpt_ingest.ORACLES["euclid_mpt_reassemble"],
     "stream_ss_join": """
         SELECT p.event_id AS purchase_id, c.event_id AS click_id,
                p.user_id AS p_user, p.value AS p_value

@@ -205,13 +205,25 @@ class MaintainedAggregate:
 
 
 def run_maintained_aggregate(
-    stream: DataFrame, view_path: str, checkpoint: str
+    stream: DataFrame,
+    view_path: str,
+    checkpoint: str,
+    partial_fn: "Callable[[DataFrame], DataFrame] | None" = None,
+    merge_fn: "Callable[[DataFrame, DataFrame], DataFrame] | None" = None,
+    key_col: str = "day",
 ) -> tuple[StreamingQuery, MaintainedAggregate]:
-    """Attach the IVM sink to a streaming events frame."""
+    """Attach the IVM sink to a streaming frame: one availableNow
+    foreachBatch run maintaining the (partial_fn, merge_fn) monoid at
+    `view_path`, partitioned by `key_col` (defaults: the count/sum/
+    digest view by day). Every maintained-aggregate stream — the state
+    rollup, the parity harness, the registry faces — attaches here."""
     os.makedirs(checkpoint, exist_ok=True)
     sink = MaintainedAggregate(
         view_path=view_path,
         state_path=os.path.join(checkpoint, "ivm_state.json"),
+        partial_fn=partial_fn,
+        merge_fn=merge_fn,
+        key_col=key_col,
     )
     q = (
         stream.writeStream.foreachBatch(sink.process)
@@ -268,20 +280,9 @@ def run_maintained_state_rollup(
     """The A7 state rollup (latest per-account state per day) as an
     incrementally maintained view — the streaming form of the
     reference's state DB append."""
-    os.makedirs(checkpoint, exist_ok=True)
-    sink = MaintainedAggregate(
-        view_path=view_path,
-        state_path=os.path.join(checkpoint, "ivm_state.json"),
-        partial_fn=_rollup_partial,
-        merge_fn=_rollup_merge,
+    return run_maintained_aggregate(
+        stream, view_path, checkpoint, _rollup_partial, _rollup_merge
     )
-    q = (
-        stream.writeStream.foreachBatch(sink.process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, sink
 
 
 def rollup_batch_oracle(spark: SparkSession, src_dir: str) -> DataFrame:

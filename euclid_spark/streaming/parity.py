@@ -44,11 +44,11 @@ from pyspark.sql import functions as F
 from euclid_spark.functions.hashing import DIGEST_PRIME, digest_agg, digest_term
 from euclid_spark.streaming.block_db import EVENTS_NS_SCHEMA, read_event_stream
 from euclid_spark.streaming.ivm import (
-    MaintainedAggregate,
     _merge,
     _partial,
     _rollup_merge,
     _rollup_partial,
+    run_maintained_aggregate,
 )
 
 
@@ -102,7 +102,6 @@ def run_parity(
     view = os.path.join(workdir, "view")
     ck = os.path.join(workdir, "ck")
     os.makedirs(src, exist_ok=True)
-    os.makedirs(ck, exist_ok=True)
 
     pdf = events_pdf.copy()
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")  # Spark's µs NTZ reader
@@ -116,19 +115,13 @@ def run_parity(
             os.path.join(src, f"split_{point}.parquet"), index=False
         )
         # fresh sink per point = a restart: watermark + checkpoint reload
-        sink = MaintainedAggregate(
-            view_path=view,
-            state_path=os.path.join(ck, "ivm_state.json"),
-            partial_fn=spec.partial_fn,
-            merge_fn=spec.merge_fn,
-            key_col=spec.key_col,
-        )
-        q = (
-            read_event_stream(spark, src)
-            .writeStream.foreachBatch(sink.process)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
+        q, sink = run_maintained_aggregate(
+            read_event_stream(spark, src),
+            view,
+            ck,
+            spec.partial_fn,
+            spec.merge_fn,
+            spec.key_col,
         )
         q.awaitTermination(240)
 

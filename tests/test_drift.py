@@ -353,7 +353,9 @@ def test_stream_drift_psi_served_and_stable(spark):
     """The streamed face serves a deterministic PSI table: repeat call
     == first call (artifact-served), schema pinned, and every row
     satisfies the same invariants as the batch monitor."""
-    from euclid_spark.streaming.faces import stream_drift_psi
+    from euclid_spark.streaming.faces import QUERIES
+
+    stream_drift_psi = QUERIES["stream_drift_psi"]
 
     a = sorted(
         (tuple(r) for r in stream_drift_psi(spark, SF_SMOKE).collect()),

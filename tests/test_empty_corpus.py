@@ -130,18 +130,26 @@ def test_operators_tolerate_empty_corpus(spark, empty_sf, monkeypatch, tmp_path)
 
 
 def test_streaming_faces_tolerate_empty_corpus(spark, empty_sf, monkeypatch, tmp_path):
-    """The streaming faces must run their sinks to quiescence over an
-    empty feed and return empty frames, not crash on never-created
-    state paths."""
+    """Every streaming face must run its sink to quiescence over an
+    empty feed and return an empty frame, not crash on never-created
+    state paths. The digest chain is the one scalar: the empty fold is
+    the (0, 0) commitment."""
+    from euclid_spark.streaming import faces
+
     monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path / "_arts"))
     qs = registry.queries()
-    for name in ("stream_ivm_view", "stream_state_rollup", "stream_ss_join",
-                 "stream_dedup_pairs", "stream_range_tree_tiles",
-                 "stream_ivf_assign", "stream_leakage_splits",
-                 "stream_ohlc_bars", "stream_epoch_shards"):
-        rows = qs[name](spark, empty_sf).collect()
-        assert rows == [], name
-        release_all()
+    failures = []
+    for name in faces.QUERIES:
+        want = [(0, 0)] if name == "stream_block_db_chain" else []
+        try:
+            rows = [tuple(r) for r in qs[name](spark, empty_sf).collect()]
+            if rows != want:
+                failures.append(f"{name}: {rows[:3]} (want {want})")
+        except Exception as ex:  # noqa: BLE001
+            failures.append(f"{name}: raised {type(ex).__name__}: {ex}"[:200])
+        finally:
+            release_all()
+    assert not failures, "\n".join(failures)
 
 
 def test_scalar_queries_return_defined_row(spark, empty_sf):

@@ -9,6 +9,7 @@ same rows bit-for-bit."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from euclid_spark.streaming import faces
@@ -22,7 +23,7 @@ def _rows(df):
 
 def test_ivm_face_matches_batch(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path / "a1"))
-    streamed = faces.stream_ivm_view(spark, SF_SMOKE)
+    streamed = faces.QUERIES["stream_ivm_view"](spark, SF_SMOKE)
     assert set(streamed.columns) == {
         "user_id", "day", "n_events", "total_value", "digest",
     }
@@ -39,9 +40,14 @@ def test_ivm_face_matches_batch(spark, tmp_path, monkeypatch):
     assert _rows(streamed) == _rows(batch)
 
 
-def test_face_serves_artifact_without_rerun(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize(
+    # a hand-run face and a MAINTAINED-table face: both paths share the
+    # one stream runner, so poisoning it pins both cache hits
+    "key", ["stream_block_db_chain", "stream_hdr_quantile_tiles"]
+)
+def test_face_serves_artifact_without_rerun(spark, tmp_path, monkeypatch, key):
     monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path / "a1"))
-    first = _rows(faces.stream_block_db_chain(spark, SF_SMOKE))
+    first = _rows(faces.QUERIES[key](spark, SF_SMOKE))
     # second call must serve the artifact: make a re-run impossible to
     # miss by timing-independent means — poison the stream runner
     monkeypatch.setattr(
@@ -49,7 +55,7 @@ def test_face_serves_artifact_without_rerun(spark, tmp_path, monkeypatch):
             AssertionError("stream re-ran despite existing artifact")
         )
     )
-    assert _rows(faces.stream_block_db_chain(spark, SF_SMOKE)) == first
+    assert _rows(faces.QUERIES[key](spark, SF_SMOKE)) == first
 
 
 def test_face_rebuild_is_deterministic(spark, tmp_path, monkeypatch):
@@ -125,7 +131,7 @@ def test_ivf_assign_face_matches_batch(spark, tmp_path, monkeypatch):
     from pyspark.sql import Window
 
     monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path / "a1"))
-    streamed = faces.stream_ivf_assign(spark, SF_SMOKE)
+    streamed = faces.QUERIES["stream_ivf_assign"](spark, SF_SMOKE)
     assert set(streamed.columns) == {"cid", "neighbor_id", "csim"}
 
     corpus = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet").filter(
