@@ -6,6 +6,13 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 value-hash → CORRECTNESS_r{N}.json).
 
 Implementation lives in ``euclid_spark/`` (see SURVEY.md).
+
+Cache pins: ``queries()`` returns lazy frames, and operators that pin an
+intermediate (``euclid_spark.cache``) register it under the CALLER's
+current cache scope — the shared default scope unless the caller entered
+``with cache.scope():``. The caller owns the release: after collecting a
+frame it calls ``cache.release_all()`` or leaves its scope. A caller that
+does neither keeps those pins for the life of the session.
 """
 
 from __future__ import annotations

@@ -1,124 +1,102 @@
-"""Session-wide cache lifecycle (ADVICE r1; owner scoping ADVICE r4).
+"""Cache lifecycle: one owner-scoped registry for every pin.
 
-Operators persist intermediates that are read more than once inside one
-query (LSH signature tables, shingle inverted indexes, per-round labels).
-A bare `.persist()` with no owner leaks: repeated invocations from a
-bench loop or a long test session accumulate cached partitions for the
-session lifetime. Rule here: operators register every persist through
-`persist_tracked`, and the *caller* that owns the terminal action
-(bench.py per query, tests per test via an autouse fixture) calls
-`release_all()` once the results are materialized.
+Operators pin intermediates that are read more than once inside one
+query (LSH signature tables, shingle inverted indexes, per-round
+labels). A bare `.persist()` or `.localCheckpoint()` leaks: nothing
+unpersists it until JVM GC + ContextCleaner get around to it, so a bench
+loop or a long test session accumulates cached partitions. Rule here:
+every pin goes through `persist_tracked` or `local_checkpoint_tracked`,
+which register it under the CURRENT OWNER, and whoever owns the terminal
+action releases that owner's pins once the results are materialized.
 
-Concurrency (ADVICE r4): foreachBatch sinks (streaming/ivm.py,
-streaming/mpt_stream.py) run on streaming-query threads, concurrently
-with each other and with driver-thread operator builds. Two rules make
-that safe:
+The owner lives in a `contextvars.ContextVar`:
 
-- local-checkpoint RDD ids are read DIRECTLY off the checkpointed
-  DataFrame's LogicalRDD plan node — no before/after diff of the
-  persistent-RDD registry, so a concurrent checkpoint on another thread
-  cannot be misattributed;
-- checkpoint tracking is scoped per OWNER key: a sink passes its own
-  key and releases only its own checkpoints
-  (`release_checkpoints(owner)`), so it can never unpersist a
-  still-needed truncated-lineage RDD belonging to a concurrent query.
-  `release_all()` / `release_checkpoints(None)` keep the
-  drain-everything semantics for single-threaded terminal callers
-  (bench loop, test teardown).
+- `with scope():` enters a fresh owner and releases everything
+  registered under it on exit, exception or not. Streaming sinks run
+  each micro-batch in one scope (`@scope()` on `process`): they execute
+  on streaming-query threads beside driver-thread queries, and a scope
+  keeps their pins — truncated-lineage checkpoints among them, which
+  cannot be recomputed — out of every other caller's reach;
+- every thread that has not entered a scope shares one default owner,
+  so single-threaded terminal callers (bench loop, test teardown, tools,
+  `__spark_entry__` callers) just call `release_all()` after each query.
 
-All registry mutation is behind a lock. Double-unpersist is harmless
-(Spark no-ops), so releasing a frame the operator already unpersisted
-(per-round loop frames) is safe.
+`release_all()` releases only the current owner's registrations, newest
+first. Double-unpersist is harmless (Spark no-ops), so releasing a frame
+the operator already unpersisted (per-round loop frames) is safe.
 """
 
 from __future__ import annotations
 
 import threading
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-DEFAULT_OWNER = "__default__"
+__all__ = ["persist_tracked", "local_checkpoint_tracked", "scope", "release_all"]
 
-_LOCK = threading.RLock()
-_TRACKED: list[DataFrame] = []
-# owner key → [(scala SparkContext, rdd id), ...] from local_checkpoint_tracked
-_CKPT_IDS: dict[str, list[tuple[object, int]]] = {}
+_OWNER: ContextVar[object] = ContextVar("cache_owner", default=None)
+_LOCK = threading.Lock()
+# owner → release callbacks, in registration order
+_REGISTRY: dict[object, list[Callable[[], object]]] = {}
+
+
+def _register(release: Callable[[], object]) -> None:
+    with _LOCK:
+        _REGISTRY.setdefault(_OWNER.get(), []).append(release)
 
 
 def persist_tracked(
     df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
 ) -> DataFrame:
-    """Persist `df` and register it for later release_all()."""
+    """Persist `df` under the current owner."""
     df.persist(level)
-    with _LOCK:
-        _TRACKED.append(df)
+    _register(df.unpersist)
     return df
 
 
-def local_checkpoint_tracked(
-    df: DataFrame, owner: str = DEFAULT_OWNER, eager: bool = True
-) -> DataFrame:
-    """`df.localCheckpoint(eager)` with deterministic release.
+def local_checkpoint_tracked(df: DataFrame, eager: bool = True) -> DataFrame:
+    """`df.localCheckpoint(eager)` under the current owner.
 
     A local checkpoint persists its RDD outside the DataFrame cache
-    manager; nothing unpersists it until JVM GC + ContextCleaner get
-    around to it, so iterative operators (components, merkle levels,
-    trie walks) would strand one persisted RDD per round for the life
-    of a long session. The checkpointed DataFrame's analyzed plan is a
-    LogicalRDD wrapping exactly the persisted RDD — record that id under
-    `owner` and unpersist it in release_checkpoints(owner).
+    manager, so iterative operators (components, merkle levels, trie
+    walks) would strand one persisted RDD per round. The checkpointed
+    frame's analyzed plan is a LogicalRDD wrapping exactly the persisted
+    RDD; its release callback unpersists that RDD.
 
     `eager=False` defers materialization to the caller's NEXT action
     over the returned frame (local checkpoints cache their partitions
     as that job computes them, then truncate lineage) — an iterative
     operator that needs a per-round scalar anyway (frontier count)
     fuses checkpoint + fetch into ONE Spark job instead of two."""
-    jsc = df.sparkSession.sparkContext._jsc.sc()
     out = df.localCheckpoint(eager=eager)
-    rid = out._jdf.queryExecution().analyzed().rdd().id()
-    with _LOCK:
-        _CKPT_IDS.setdefault(owner, []).append((jsc, rid))
+    rdd = out._jdf.queryExecution().analyzed().rdd()
+    _register(lambda: rdd.unpersist(False))
     return out
 
 
-def release_checkpoints(owner: str | None = None) -> None:
-    """Unpersist tracked local-checkpoint RDDs (newest first).
-
-    `owner=None` drains EVERY owner — session-teardown semantics for
-    single-threaded terminal callers only. A concurrent owner (streaming
-    sink) must pass its own key."""
-    with _LOCK:
-        if owner is None:
-            items = [e for lst in _CKPT_IDS.values() for e in lst]
-            _CKPT_IDS.clear()
-        else:
-            items = _CKPT_IDS.pop(owner, [])
-    for jsc, rid in reversed(items):
-        try:
-            opt = jsc.getPersistentRDDs().get(rid)
-            if opt.isDefined():
-                opt.get().unpersist(False)
-        except Exception:  # session already stopped — nothing to release
-            pass
+@contextmanager
+def scope() -> Iterator[None]:
+    """Run the body under a fresh owner; release its pins on exit."""
+    token = _OWNER.set(object())
+    try:
+        yield
+    finally:
+        release_all()
+        _OWNER.reset(token)
 
 
 def release_all() -> None:
-    """Unpersist every tracked frame (newest first). Call after the
+    """Release the current owner's pins (newest first). Call after the
     terminal action of a query, not before — unpersisting a lazy result's
     inputs early just forfeits the reuse the persist bought."""
-    while True:
-        with _LOCK:
-            if not _TRACKED:
-                break
-            df = _TRACKED.pop()
+    with _LOCK:
+        releases = _REGISTRY.pop(_OWNER.get(), [])
+    for release in reversed(releases):
         try:
-            df.unpersist()
+            release()
         except Exception:  # session already stopped — nothing to release
             pass
-    release_checkpoints()
-
-
-def n_tracked() -> int:
-    with _LOCK:
-        return len(_TRACKED)

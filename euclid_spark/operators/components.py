@@ -47,13 +47,12 @@ MAX_ROUNDS = 20
 def connected_components(
     edges: DataFrame,
     max_rounds: int = MAX_ROUNDS,
-    ckpt_owner: "str | None" = None,
 ) -> DataFrame:
     """edges: (doc_a, doc_b) undirected. Returns (doc_id, component) with
-    component = min doc_id reachable. `ckpt_owner` scopes the per-round
-    local-checkpoint registration (cache.py): a streaming sink passes its
-    own key so a concurrent thread's release cannot unpersist this
-    loop's still-needed truncated-lineage RDDs."""
+    component = min doc_id reachable. The edge pin and the per-round
+    local checkpoints register under the caller's cache scope (cache.py),
+    so a streaming sink's batch scope owns them and no concurrent
+    thread's release can unpersist this loop's truncated-lineage RDDs."""
     sym = persist_tracked(
         edges.selectExpr("doc_a AS src", "doc_b AS dst").unionAll(
             edges.selectExpr("doc_b AS src", "doc_a AS dst")
@@ -72,11 +71,6 @@ def connected_components(
         # when lazy — keep both call sites eager on a cluster
         _ckpt = lambda df: df.checkpoint(eager=True)  # noqa: E731
         _ckpt_lazy = _ckpt
-    elif ckpt_owner is not None:
-        _ckpt = lambda df: local_checkpoint_tracked(df, owner=ckpt_owner)  # noqa: E731
-        _ckpt_lazy = lambda df: local_checkpoint_tracked(  # noqa: E731
-            df, owner=ckpt_owner, eager=False
-        )
     else:
         _ckpt = local_checkpoint_tracked
         _ckpt_lazy = lambda df: local_checkpoint_tracked(df, eager=False)  # noqa: E731

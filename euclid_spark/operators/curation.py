@@ -173,7 +173,9 @@ def _training_mix(
         )
         surv = surv.join(mdl_ok, "doc_id", "left_semi")
     survivors = persist_tracked(surv)
-    packed = textops.pack_stream(survivors.select("doc_id", "n_tokens"))
+    # the pinned frame itself, not a projection: pack_stream reads its
+    # cache instead of pinning a second copy of the same rows
+    packed = textops.pack_stream(survivors)
     return packed.join(survivors.select("doc_id", "lang"), "doc_id")
 
 
@@ -629,8 +631,9 @@ def _assignments_from_rows(
     (3 corpus passes). The pin is the narrow shard-row proxy (~60 B
     per doc); the streaming sink's manifest() path pins its already-
     materialized store rows, which costs one narrow cache instead of
-    three parquet re-reads. Terminal callers release via
-    cache.release_all() (bench loop / test fixtures / sink readers)."""
+    three parquet re-reads. Both pins register under the caller's cache
+    scope (cache.py); the caller's release_all() or scope exit frees
+    them after its terminal action."""
     t = persist_tracked(t)
     btot = persist_tracked(
         t.groupBy("bucket").agg(F.sum("n_tokens").alias("btot"))

@@ -168,8 +168,8 @@ def _build_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # both sides of the self-join read the signature table: persist it so
     # the shingle→md5 pipeline runs once (at scale: a checkpointed
-    # signature table reused across dedup runs); lifecycle owned by the
-    # caller via cache.release_all()
+    # signature table reused across dedup runs); registered under the
+    # caller's cache scope, freed by its release_all() or scope exit
     bands = persist_tracked(bands)
     a, b = bands.alias("a"), bands.alias("b")
     return (

@@ -189,10 +189,10 @@ def data_drift_psi(
 
     Cache ownership note (ADVICE r15): edges='quantile' registers ONE
     small persisted aggregate (≤ types × 2 × ~1100 rows) via
-    cache.persist_tracked; the caller that owns the terminal action
-    must call cache.release_all() afterwards (bench loop and test
-    fixtures already do) — a long-lived external caller that never
-    releases accumulates one bounded cached frame per call."""
+    cache.persist_tracked, under the caller's cache scope; the caller's
+    release_all() or scope exit frees it after the terminal action — a
+    long-lived caller that does neither accumulates one bounded cached
+    frame per call."""
     if edges not in ("width", "quantile"):
         raise ValueError(f"edges must be width|quantile, got {edges!r}")
     if split_day is None:

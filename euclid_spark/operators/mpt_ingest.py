@@ -174,8 +174,6 @@ def walk_tries(
     decoded: DataFrame,
     frontier0: DataFrame,
     park_missing: bool = False,
-    ckpt_owner: str | None = None,
-    persist_nodes: bool = True,
 ) -> "tuple[DataFrame, DataFrame]":
     """Level-synchronous trie walk over ALL tries at once.
     `frontier0`: (owner, node_hash, prefix) cursors. Returns
@@ -207,33 +205,23 @@ def walk_tries(
     round-boundary checkpoint still prevents. Warm sf0.1 wall for the
     batch query: 5.4 s (per-level) → 3.2 s (batched), same hash.
 
-    `ckpt_owner` scopes the local-checkpoint registration (cache.py):
-    streaming sinks pass their own key so they release only their own
-    pinned RDDs. `persist_nodes=False` hands node-table cache lifecycle
-    to the caller (a streaming sink persists per batch and unpersists
-    after its writes — the release_all-tracked persist here would
-    accumulate across batches)."""
+    Pins and round checkpoints register under the caller's cache scope
+    (cache.py): a streaming sink's batch scope releases them with its
+    writes, a batch caller's release_all() after its terminal action."""
     spark = decoded.sparkSession
     if spark.sparkContext.getCheckpointDir():
         # reliable checkpoints write files on a SEPARATE recomputation
         # when lazy — keep them eager (the round below still saves the
         # isEmpty job by reading the frontier count off the count call)
         _ckpt = lambda df: df.checkpoint(eager=True)  # noqa: E731
-    elif ckpt_owner is not None:
-        _ckpt = lambda df: local_checkpoint_tracked(  # noqa: E731
-            df, owner=ckpt_owner, eager=False
-        )
     else:
         _ckpt = lambda df: local_checkpoint_tracked(df, eager=False)  # noqa: E731
 
-    if persist_nodes:
-        # caller-owned lifecycle (cache.release_all): the emitted frames
-        # read this cache lazily until the caller's terminal action — an
-        # in-scope unpersist would silently re-run the decode per level
-        dec = persist_tracked(decoded)
-        dec.count()  # materialize once; every round joins the cache
-    else:
-        dec = decoded  # caller manages the node-table cache
+    # caller-owned lifecycle (cache.py): the emitted frames read this
+    # cache lazily until the caller's terminal action — an in-scope
+    # unpersist would silently re-run the decode per level
+    dec = persist_tracked(decoded)
+    dec.count()  # materialize once; every round joins the cache
 
     # walk state: cursor rows (node_hash set), emit rows (em, prefix =
     # full key nibbles, value set), parked rows (pk, cursor shape)

@@ -58,6 +58,22 @@ from euclid_spark.operators.euclid import (
 )
 
 
+def _corpus_pin_level() -> StorageLevel:
+    """EUCLID_CORPUS_PIN_LEVEL, checked against the StorageLevel
+    constants that store data (NONE does not)."""
+    name = os.environ.get("EUCLID_CORPUS_PIN_LEVEL", "MEMORY_AND_DISK")
+    valid = sorted(
+        k for k, v in vars(StorageLevel).items()
+        if isinstance(v, StorageLevel) and v != StorageLevel.NONE
+    )
+    if name not in valid:
+        raise ValueError(
+            f"EUCLID_CORPUS_PIN_LEVEL={name!r} is not a data-storing "
+            f"StorageLevel; valid values: {', '.join(valid)}"
+        )
+    return getattr(StorageLevel, name)
+
+
 def preprocessing_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A19 — Mapping → LengthMatch → Storage → DigestEqual →
     BlockLinking → State → BlockDB as one composed query. One row per
@@ -89,10 +105,7 @@ def preprocessing_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # backed, still partitioned on (day, owner), so the shared-exchange
     # plan shape is identical — proven by the plan guards running under
     # both levels in tests/test_plans.py).
-    pin_level = getattr(
-        StorageLevel,
-        os.environ.get("EUCLID_CORPUS_PIN_LEVEL", "MEMORY_AND_DISK"),
-    )
+    pin_level = _corpus_pin_level()
     entries = persist_tracked(
         ev.filter(tok.isNotNull())
         .select(

@@ -13,6 +13,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 from euclid_spark.catalog import cached_parquet
 
 from euclid_spark.cache import persist_tracked
@@ -606,13 +607,14 @@ def pack_stream(toks: DataFrame) -> DataFrame:
     pin is the lightweight proxy (doc_id, n_tokens, bucket — ~24 B/doc
     whatever the document size); `btot` (one row per 4096 docs) is
     pinned too so its own double reference costs bounded rows, not two
-    more passes over the proxy. Caller releases via cache.release_all()
-    per the repo's cache-ownership convention."""
-    toks = persist_tracked(
-        toks.withColumn(
-            "bucket", F.shiftright(F.col("doc_id"), PACK_BUCKET_BITS)
-        )
-    )
+    more passes over the proxy. An input the caller has already pinned
+    (C32's survivor set) is read through its own cache instead — a proxy
+    pin of the same rows would only add a second cache build. Both pins
+    register under the caller's cache scope (cache.py)."""
+    pinned = toks.storageLevel != StorageLevel.NONE
+    toks = toks.withColumn("bucket", F.shiftright(F.col("doc_id"), PACK_BUCKET_BITS))
+    if not pinned:
+        toks = persist_tracked(toks)
     btot = persist_tracked(
         toks.groupBy("bucket").agg(F.sum("n_tokens").alias("btot"))
     )

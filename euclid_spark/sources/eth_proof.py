@@ -52,6 +52,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from euclid_spark.cache import persist_tracked, scope
 from euclid_spark.functions.keccak import keccak256
 from euclid_spark.functions.rlp import (
     build_tries_batch,
@@ -297,7 +298,6 @@ def eth_proof_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     from euclid_spark import artifacts
 
     fp = _fixture_fp(sf_dir)
-    pinned: "list[DataFrame]" = []  # build-scoped persist, released below
 
     def build() -> DataFrame:
         from euclid_spark.catalog import load_events
@@ -461,12 +461,9 @@ def eth_proof_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
             yield pd.DataFrame(rows)
 
-        acc2 = (
-            accounts.repartition("prefix")
-            .mapInPandas(stage2, _STAGE2_SCHEMA)
-            .persist()
+        acc2 = persist_tracked(
+            accounts.repartition("prefix").mapInPandas(stage2, _STAGE2_SCHEMA)
         )
-        pinned.append(acc2)
         # BOUNDED driver fold: one row per non-empty prefix (≤256,
         # independent of |accounts|) — every group's sub-root encoding
         # is sub_proof[0] of each of its members (roots are stored by
@@ -529,9 +526,8 @@ def eth_proof_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    out = artifacts.serve_frame(spark, "eth_proof_fixture", fp, build)
-    for df in pinned:  # serve_frame has written the artifact by now
-        df.unpersist()
+    with scope():  # the build's pins go once serve_frame has written
+        out = artifacts.serve_frame(spark, "eth_proof_fixture", fp, build)
     artifacts.publish_manifest(
         "eth_proof_fixture", fp, "eth_state",
         [f"{sf_dir}/events.parquet"],

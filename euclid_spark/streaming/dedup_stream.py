@@ -79,7 +79,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from euclid_spark.cache import local_checkpoint_tracked, release_checkpoints
+from euclid_spark.cache import local_checkpoint_tracked, scope
 from euclid_spark.operators.dedup import (
     MAX_BUCKET,
     N_HASHES,
@@ -116,7 +116,6 @@ class IncrementalDedupIndex:
         self.revoked_path = os.path.join(state_dir, "revoked")
         self.meta_path = os.path.join(state_dir, "meta.json")
         os.makedirs(state_dir, exist_ok=True)
-        self._owner = f"dedup_stream:{id(self)}"
         self.last_batch_id = -1
         self.labels_version = -1  # -1: no labels snapshot yet
         if os.path.exists(self.meta_path):
@@ -145,6 +144,7 @@ class IncrementalDedupIndex:
             return self.spark.read.schema(schema).parquet(path)
         return self.spark.createDataFrame([], schema)
 
+    @scope()  # one cache scope per micro-batch (cache.py)
     def process(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= self.last_batch_id:
             return  # checkpoint replay after restart — already applied
@@ -156,8 +156,7 @@ class IncrementalDedupIndex:
         new_sigs = local_checkpoint_tracked(
             minhash_signatures(batch_df).join(
                 store.select("doc_id"), "doc_id", "left_anti"
-            ),
-            owner=self._owner,
+            )
         )
         if not new_sigs.isEmpty():
             new_sigs.write.mode("append").parquet(self.sigs_path)
@@ -173,7 +172,6 @@ class IncrementalDedupIndex:
         if batch_sigs.isEmpty():  # empty micro-batch
             self.last_batch_id = batch_id
             self._save_meta()
-            release_checkpoints(self._owner)
             return
 
         # ONE bucket join: batch bands probe the full index. The
@@ -197,8 +195,7 @@ class IncrementalDedupIndex:
                 F.least(F.col("n.doc_id"), F.col("a.doc_id")).alias("doc_a"),
                 F.greatest(F.col("n.doc_id"), F.col("a.doc_id")).alias("doc_b"),
             )
-            .distinct(),
-            owner=self._owner,
+            .distinct()
         )
         # a pair can re-collide in a later batch through another band —
         # the ledger keeps each pair once
@@ -215,7 +212,6 @@ class IncrementalDedupIndex:
         self.last_batch_id = batch_id
         self._save_meta()
         self._prune_label_versions()
-        release_checkpoints(self._owner)
 
     def _merge_labels(self, cand: DataFrame, batch_id: int) -> None:
         """Relabel ONLY the components touched by this batch's candidate
@@ -243,12 +239,9 @@ class IncrementalDedupIndex:
         star = affected.filter(F.col("doc_id") != F.col("component")).selectExpr(
             "doc_id AS doc_a", "component AS doc_b"
         )
-        sub = connected_components(
-            cand.unionByName(star), ckpt_owner=self._owner
-        )
+        sub = connected_components(cand.unionByName(star))
         merged = local_checkpoint_tracked(
-            labels.join(sub, "doc_id", "left_anti").unionByName(sub),
-            owner=self._owner,
+            labels.join(sub, "doc_id", "left_anti").unionByName(sub)
         )
         merged.write.mode("overwrite").parquet(self._labels_path(batch_id))
         self.labels_version = batch_id

@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from euclid_spark.cache import local_checkpoint_tracked, release_checkpoints
+from euclid_spark.cache import local_checkpoint_tracked, scope
 from euclid_spark.functions.hashing import DIGEST_PRIME, digest_agg, digest_term
 
 # The maintained query: per (user, day) event count, value total, and
@@ -112,9 +112,6 @@ class MaintainedAggregate:
         if self.state_path and os.path.exists(self.state_path):
             with open(self.state_path) as fh:
                 self.last_batch_id = json.load(fh)["last_batch_id"]
-        # checkpoint owner key: this sink runs on a streaming-query
-        # thread — release only its OWN pinned RDDs (cache owner scoping)
-        self._owner = f"ivm:{id(self)}"
 
     def _save(self) -> None:
         if not self.state_path:
@@ -124,6 +121,9 @@ class MaintainedAggregate:
             json.dump({"last_batch_id": self.last_batch_id}, fh)
         os.replace(tmp, self.state_path)
 
+    # one cache scope per micro-batch (cache.py): the batch's pins live
+    # until its writes land, whatever another thread releases meanwhile
+    @scope()
     def process(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= self.last_batch_id:
             return  # fast path: watermark file says already merged
@@ -144,7 +144,7 @@ class MaintainedAggregate:
             # prune with an IN filter on the partition column. The
             # partial is pinned first so the day list and the merged
             # rows come from ONE evaluation of the batch frame.
-            partial = local_checkpoint_tracked(partial, owner=self._owner)
+            partial = local_checkpoint_tracked(partial)
             kc = self.key_col
             days = [r[kc] for r in partial.select(kc).distinct().collect()]
             view = spark.read.parquet(self.view_path).filter(F.col(kc).isin(days))
@@ -165,7 +165,6 @@ class MaintainedAggregate:
             if not todo:
                 self.last_batch_id = batch_id
                 self._save()
-                release_checkpoints(self._owner)
                 return
             old = view.filter(F.col(kc).isin(todo)).drop("applied_batch_id")
             merged = (self.merge_fn or _merge)(
@@ -180,7 +179,7 @@ class MaintainedAggregate:
 
         # pin the merge result BEFORE the write: the plan reads the very
         # parquet directory the write below replaces (self-overwrite)
-        merged = local_checkpoint_tracked(merged, owner=self._owner)
+        merged = local_checkpoint_tracked(merged)
 
         # dynamic partition overwrite: only the day= directories present
         # in `merged` are replaced; untouched days are left as-is.
@@ -193,10 +192,6 @@ class MaintainedAggregate:
         )
         self.last_batch_id = batch_id
         self._save()
-        # the pinned partial/merge frames are on disk in the view now —
-        # release their checkpoint RDDs rather than stranding them
-        # (owner-scoped: concurrent queries' checkpoints untouched)
-        release_checkpoints(self._owner)
 
     def view(self, spark: SparkSession) -> DataFrame:
         """The maintained view WITHOUT the applied_batch_id bookkeeping

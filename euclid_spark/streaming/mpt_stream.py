@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from euclid_spark.cache import local_checkpoint_tracked, release_checkpoints
+from euclid_spark.cache import local_checkpoint_tracked, scope
 from euclid_spark.operators.mpt_ingest import (
     NODE_SCHEMA,
     decode_mpt_nodes,
@@ -91,10 +91,6 @@ class IncrementalMptReassembly:
         self.entries_path = os.path.join(state_dir, "entries")
         self.meta_path = os.path.join(state_dir, "meta.json")
         os.makedirs(state_dir, exist_ok=True)
-        # checkpoint owner key: this sink runs on a streaming-query
-        # thread, concurrently with other queries — it must release only
-        # its OWN pinned RDDs (cache.py owner scoping, ADVICE r4)
-        self._owner = f"mpt_stream:{id(self)}"
         self.last_batch_id = -1
         if os.path.exists(self.meta_path):
             with open(self.meta_path) as fh:
@@ -111,6 +107,11 @@ class IncrementalMptReassembly:
             return self.spark.read.schema(schema).parquet(path)
         return self.spark.createDataFrame([], schema)
 
+    # one cache scope per micro-batch (cache.py): this batch's pins (new
+    # decoded nodes, the walk's node store and round frontiers, emit
+    # frames) are all flushed to parquet by the end, and a concurrent
+    # query's pins are never touched
+    @scope()
     def process(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= self.last_batch_id:
             return  # checkpoint replay after restart — already applied
@@ -130,7 +131,7 @@ class IncrementalMptReassembly:
                 "left_anti",
             )
         )
-        dec_new = local_checkpoint_tracked(dec_new, owner=self._owner)
+        dec_new = local_checkpoint_tracked(dec_new)
         if not dec_new.isEmpty():
             dec_new.write.mode("append").parquet(self.nodes_path)
         # re-read AFTER append so this batch's nodes are visible to the walk
@@ -164,24 +165,13 @@ class IncrementalMptReassembly:
         active = local_checkpoint_tracked(
             self._read_or_empty(self.frontier_path, FRONTIER_SCHEMA)
             .unionByName(new_roots)
-            .dropDuplicates(["owner", "node_hash", "prefix"]),
-            owner=self._owner,
+            .dropDuplicates(["owner", "node_hash", "prefix"])
         )
 
         # the walk itself is the shared multi-level-batched engine
         # (operators/mpt_ingest.walk_tries): park_missing returns cursors
         # whose node has not arrived yet — the next batch's frontier.
-        # The store cache is batch-scoped: persist here, unpersist after
-        # the writes (walk_tries's release_all-tracked persist would
-        # accumulate across micro-batches).
-        store = store.persist()
-        out, frontier = walk_tries(
-            store,
-            active,
-            park_missing=True,
-            ckpt_owner=self._owner,
-            persist_nodes=False,
-        )
+        out, frontier = walk_tries(store, active, park_missing=True)
         ent = out.select(
             "owner",
             F.conv(_nibbles_to_hex(F.col("key_nibbles")), 16, 10)
@@ -189,24 +179,17 @@ class IncrementalMptReassembly:
             .alias("token_id"),
             F.lower(F.hex("value")).alias("value_hex"),
         )
-        ent = local_checkpoint_tracked(ent, owner=self._owner)
+        ent = local_checkpoint_tracked(ent)
         if not ent.isEmpty():
             ent.write.mode("append").parquet(self.entries_path)
 
         # walk_tries returned round-checkpointed slices — pin the union
         # so overwriting the directory it was read from is safe
-        frontier = local_checkpoint_tracked(frontier, owner=self._owner)
+        frontier = local_checkpoint_tracked(frontier)
         frontier.write.mode("overwrite").parquet(self.frontier_path)
 
         self.last_batch_id = batch_id
         self._save_meta()
-        # this batch's pinned temporaries (decoded nodes, walk frontiers,
-        # emit frames) are all flushed to parquet above — release their
-        # checkpoint RDDs instead of stranding them for the session life.
-        # Owner-scoped: a concurrent query's still-needed checkpoints are
-        # untouched (truncated lineage cannot be recomputed).
-        store.unpersist()
-        release_checkpoints(self._owner)
 
     def entries(self) -> DataFrame:
         return self._read_or_empty(self.entries_path, ENTRIES_SCHEMA)

@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from euclid_spark.cache import local_checkpoint_tracked, release_checkpoints
+from euclid_spark.cache import local_checkpoint_tracked, scope
 from euclid_spark.functions.text import shingles, words
 from euclid_spark.operators.dedup import SPAN_DUP_FRAC, SPAN_W
 
@@ -108,7 +108,6 @@ class IncrementalSpanIndex:
         self.flagged_path = os.path.join(state_dir, "flagged_log")
         self.meta_path = os.path.join(state_dir, "meta.json")
         os.makedirs(state_dir, exist_ok=True)
-        self._owner = f"spans_stream:{id(self)}"
         self.last_batch_id = -1
         self.verdicts_version = -1
         if os.path.exists(self.meta_path):
@@ -137,6 +136,7 @@ class IncrementalSpanIndex:
             return self.spark.read.schema(schema).parquet(path)
         return self.spark.createDataFrame([], schema)
 
+    @scope()  # one cache scope per micro-batch (cache.py)
     def process(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_id <= self.last_batch_id:
             return  # checkpoint replay after restart — already applied
@@ -145,7 +145,7 @@ class IncrementalSpanIndex:
 
         # 1. window NEW docs only (a doc is windowed once, ever)
         fresh = batch_df.join(doc_store.select("doc_id"), "doc_id", "left_anti")
-        new_docs = local_checkpoint_tracked(doc_sizes(fresh), owner=self._owner)
+        new_docs = local_checkpoint_tracked(doc_sizes(fresh))
         if not new_docs.isEmpty():
             doc_windows(fresh).write.mode("append").parquet(self.windows_path)
             new_docs.write.mode("append").parquet(self.docs_path)
@@ -166,8 +166,7 @@ class IncrementalSpanIndex:
             .agg(F.count_distinct("doc_id").alias("nd"))
             .filter(F.col("nd") >= 2)
             .select("h")
-            .join(dup_known, "h", "left_anti"),
-            owner=self._owner,
+            .join(dup_known, "h", "left_anti")
         )
         if not new_dups.isEmpty():
             new_dups.write.mode("append").parquet(self.dup_path)
@@ -187,14 +186,12 @@ class IncrementalSpanIndex:
             .select("doc_id")
             .distinct()
             .unionByName(batch_ids)
-            .distinct(),
-            owner=self._owner,
+            .distinct()
         )
         prev = self.verdicts()
         if affected.isEmpty():
             self.last_batch_id = batch_id
             self._save_meta()
-            release_checkpoints(self._owner)
             return
 
         sizes = self._read_or_empty(self.docs_path, DOCS_SCHEMA).join(
@@ -244,13 +241,11 @@ class IncrementalSpanIndex:
                 F.coalesce("dup_tokens", F.lit(0)).alias("dup_tokens"),
                 F.round(frac, 4).alias("dup_frac"),
                 (frac > F.lit(SPAN_DUP_FRAC)).alias("flagged"),
-            ),
-            owner=self._owner,
+            )
         )
 
         merged = local_checkpoint_tracked(
-            prev.join(rescored, "doc_id", "left_anti").unionByName(rescored),
-            owner=self._owner,
+            prev.join(rescored, "doc_id", "left_anti").unionByName(rescored)
         )
         merged.write.mode("overwrite").parquet(self._verdicts_path(batch_id))
         self.verdicts_version = batch_id
@@ -275,7 +270,6 @@ class IncrementalSpanIndex:
         self.last_batch_id = batch_id
         self._save_meta()
         self._prune_versions()
-        release_checkpoints(self._owner)
 
     def _prune_versions(self) -> None:
         import shutil

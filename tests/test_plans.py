@@ -529,7 +529,6 @@ def test_preprocessing_shared_exchange_survives_disk_only_pin(spark, monkeypatch
     The knob must not change the plan shape: still Expand-free, still
     one (day, owner) exchange, and the pinned frame really is
     disk-only."""
-    from euclid_spark import cache
     from euclid_spark.operators import preprocessing
 
     monkeypatch.setenv("EUCLID_CORPUS_PIN_LEVEL", "DISK_ONLY")
@@ -541,11 +540,21 @@ def test_preprocessing_shared_exchange_survives_disk_only_pin(spark, monkeypatch
             raise AssertionError(
                 f"partials re-shuffled despite shared exchange: {line}"
             )
-    with cache._LOCK:
-        levels = [d.storageLevel for d in cache._TRACKED]
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    levels = [rdd.getStorageLevel() for rdd in rdds.values()]
     assert any(
-        lv.useDisk and not lv.useMemory for lv in levels
-    ), f"no disk-only pin registered: {levels}"
+        lv.useDisk() and not lv.useMemory() for lv in levels
+    ), f"no disk-only pin in the JVM: {[lv.description() for lv in levels]}"
+
+
+def test_corpus_pin_level_rejects_typo(spark, monkeypatch):
+    """A mistyped EUCLID_CORPUS_PIN_LEVEL fails loudly, naming the knob
+    and the valid levels, instead of a bare AttributeError."""
+    from euclid_spark.operators import preprocessing
+
+    monkeypatch.setenv("EUCLID_CORPUS_PIN_LEVEL", "DISK_ONYL")
+    with pytest.raises(ValueError, match="EUCLID_CORPUS_PIN_LEVEL.*DISK_ONLY"):
+        preprocessing.preprocessing_pipeline(spark, SF_SMOKE)
 
 
 def test_range_join_bucketed_matches_direct_inequality(spark):

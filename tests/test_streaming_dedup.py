@@ -32,10 +32,14 @@ def split_docs(spark, tmp_path):
 
 
 def test_streamed_pairs_equal_batch_lsh(spark, tmp_path, split_docs):
+    jsc = spark.sparkContext._jsc.sc()
+    n_persistent = jsc.getPersistentRDDs().size()
     q, sink = run_incremental_dedup(
         read_document_stream(spark, split_docs), str(tmp_path / "state")
     )
     q.awaitTermination(300)
+    # every micro-batch released its own pins when its cache scope ended
+    assert jsc.getPersistentRDDs().size() == n_persistent
     assert sink.last_batch_id >= 2
 
     got = {(r["doc_a"], r["doc_b"]) for r in sink.pairs().collect()}
