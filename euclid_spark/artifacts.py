@@ -19,10 +19,12 @@ Pattern here (generalizing the r4 IVF centroid store):
 - writes go to a `.tmp.<pid>` directory then `os.rename` — atomic on a
   local filesystem, and the loser of a concurrent race just deletes its
   temp and reads the winner's (identical, deterministic) artifact.
-- `serve_frame` is the one call sites use: load if present, else build →
-  persist → RELOAD (the returned frame is always a plain parquet scan,
-  so downstream plans reference a short lineage, not the whole build
-  pipeline).
+- `ensure` is the one build gate: the artifact's path, built → persisted
+  on a miss. `serve_frame` is `load_frame` over it (the returned frame
+  is always a plain parquet scan, so downstream plans reference a
+  short lineage, not the whole build pipeline); `footer_stats` and
+  `read_rows` read the same path on the driver, with no Spark job, for
+  the metadata and the bounded row fetches a query-phase request needs.
 
 At 100 TB the same code points at shared storage (set
 EUCLID_SPARK_ARTIFACTS to an object-store path a real deployment mounts)
@@ -31,11 +33,13 @@ and the build side runs once per corpus version, cluster-wide.
 
 from __future__ import annotations
 
+import functools
 import glob
 import hashlib
 import json
 import os
 import shutil
+from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -105,26 +109,6 @@ def load_frame(spark: SparkSession, name: str, fp: str) -> "DataFrame | None":
 FINE_ROW_GROUPS = {"parquet.block.size": 4 * 1024 * 1024}
 
 
-def data_files(path: str) -> "list[str]":
-    """The data files of a parquet path — one file, or a Spark-written
-    directory's sorted part files (underscore/dot entries skipped).
-    The ONE local listing used by every driver-side footer read
-    (row counts, column statistics, schema); callers wrap in
-    try/except and fall back to a Spark fold on remote filesystems."""
-    if os.path.isdir(path):
-        return sorted(glob.glob(os.path.join(path, "*.parquet")))
-    return [path]
-
-
-def footer_num_rows(path: str) -> int:
-    """Total row count from parquet FOOTER metadata — a stat read,
-    never a data scan. Raises on remote/unreadable paths; callers
-    fall back to a pinned default or a Spark fold."""
-    import pyarrow.parquet as pq
-
-    return sum(pq.ParquetFile(p).metadata.num_rows for p in data_files(path))
-
-
 def save_frame(
     df: DataFrame,
     name: str,
@@ -153,46 +137,20 @@ def save_frame(
     return path
 
 
-def stat_min_max(name: str, fp: str, column: str) -> "tuple":
-    """(MIN, MAX) of a column across a served artifact's parquet FOOTER
-    statistics — O(row groups) metadata reads, never a data scan. The
-    served-metadata fetch every tile-tree and day-tile query needs (its
-    max level / max block / tile span): an `agg(min, max)` on the
-    artifact frame scans every tile row, which GROWS WITH THE CORPUS and
-    quietly breaks the O(log range) query-cost claim; the footer
-    already holds the answer. Returns (None, None) when the artifact is
-    empty or carries no stats."""
-    import pyarrow.parquet as pq
-
-    lo = hi = None
-    for p in glob.glob(os.path.join(_path(name, fp), "*.parquet")):
-        md = pq.ParquetFile(p).metadata
-        for i in range(md.num_row_groups):
-            rg = md.row_group(i)
-            for j in range(rg.num_columns):
-                col = rg.column(j)
-                if col.path_in_schema == column:
-                    st = col.statistics
-                    if st is not None and st.has_min_max:
-                        lo = st.min if lo is None else min(lo, st.min)
-                        hi = st.max if hi is None else max(hi, st.max)
-    return lo, hi
-
-
-def served_span(frame: "DataFrame", name: str, fp: str, column: str):
-    """(MIN, MAX) of `column` on a served artifact — footer statistics
-    when the artifact root is locally statable (no Spark job), else one
-    bounded frame aggregate (remote stores). The parameter fetch every
-    day-tile range face starts with."""
-    try:
-        return stat_min_max(name, fp, column)
-    except Exception:  # remote artifact store — resolve through Spark
-        from pyspark.sql import functions as F
-
-        row = frame.agg(
-            F.min(column).alias("lo"), F.max(column).alias("hi")
-        ).collect()[0]
-        return row["lo"], row["hi"]
+def ensure(
+    name: str,
+    fp: str,
+    build: Callable[[], DataFrame],
+    options: "dict | None" = None,
+) -> str:
+    """The artifact's path, building it on a miss (build → save). The
+    one build gate: `serve_frame` hands out a Spark scan over this path
+    and the driver-side readers below read it directly, so footer
+    statistics are only ever read from an artifact that exists."""
+    path = _path(name, fp)
+    if not os.path.exists(path):
+        save_frame(build(), name, fp, options)
+    return path
 
 
 def serve_frame(
@@ -202,16 +160,119 @@ def serve_frame(
     build: Callable[[], DataFrame],
     options: "dict | None" = None,
 ) -> DataFrame:
-    """Load the artifact, else build → save → reload. The reload is the
-    point: every consumer gets a short-lineage parquet scan whether or
-    not this process paid for the build."""
-    cached = load_frame(spark, name, fp)
-    if cached is not None:
-        return cached
-    save_frame(build(), name, fp, options)
+    """The artifact as a Spark scan, built first on a miss. The scan is
+    the point: every consumer gets a short-lineage parquet read whether
+    or not this process paid for the build."""
+    ensure(name, fp, build, options)
     out = load_frame(spark, name, fp)
     assert out is not None
     return out
+
+
+# --------------------------------------------------------------------------
+# driver-side reads: parquet footers and bounded row fetches, no Spark job
+# --------------------------------------------------------------------------
+
+
+def _signature(path: str) -> tuple:
+    """(realpath, mtime_ns, size) of a parquet path — the memo key of
+    the driver-side readers, as catalog.cached_parquet keys Spark
+    readers (artifact paths are written once, atomically; a rewritten
+    corpus file changes its signature). Needs a locally statable path,
+    which `load_frame` already requires of the artifact root."""
+    from euclid_spark.catalog import _path_signature
+
+    sig = _path_signature(path)
+    if sig is None:
+        raise FileNotFoundError(f"not a locally statable parquet path: {path}")
+    return sig
+
+
+@functools.lru_cache(maxsize=512)
+def _dataset(sig: tuple):
+    """`pyarrow.dataset` over a parquet file or a Spark-written
+    directory (underscore/dot entries skipped)."""
+    import pyarrow.dataset as pds
+
+    return pds.dataset(sig[0], format="parquet")
+
+
+@dataclass(frozen=True)
+class FooterStats:
+    """What a parquet path's FOOTERS say: total row count, the arrow
+    schema, and per top-level column the (MIN, MAX) over every row
+    group — O(row groups) metadata, never a data scan."""
+
+    num_rows: int
+    schema: object
+    spans: "dict[str, tuple | None]"
+
+    def span(self, column: str) -> tuple:
+        """(MIN, MAX) of `column`; (None, None) when it holds no
+        non-null value. Raises when a row group holding values carries
+        no statistics — the footers cannot answer, and a partial span
+        would be silently wrong."""
+        sp = self.spans.get(column, (None, None))
+        if sp is None:
+            raise ValueError(f"no footer statistics for column {column!r}")
+        return sp
+
+
+def footer_stats(path: str) -> FooterStats:
+    """Footer statistics of a parquet file or Spark-written directory —
+    the one footer reader. Answers the metadata-sized questions
+    (max tree level, max block, day span, row count, schema) that a
+    Spark aggregate would answer by scanning every row, a cost that
+    grows with the corpus. Raises on a path that is not locally
+    statable; callers over corpus paths that may be remote catch it."""
+    return _footer_stats(_signature(path))
+
+
+@functools.lru_cache(maxsize=512)
+def _footer_stats(sig: tuple) -> FooterStats:
+    d = _dataset(sig)
+    n = 0
+    spans: "dict[str, tuple | None]" = {}
+    for frag in d.get_fragments():
+        md = frag.metadata
+        n += md.num_rows
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            for j in range(rg.num_columns):
+                col = rg.column(j)
+                name = col.path_in_schema
+                if "." in name or spans.get(name, ()) is None:
+                    continue
+                s = col.statistics
+                if s is not None and s.has_min_max:
+                    lo, hi = spans.get(name, (None, None))
+                    spans[name] = (
+                        s.min if lo is None else min(lo, s.min),
+                        s.max if hi is None else max(hi, s.max),
+                    )
+                elif s is None or s.null_count != rg.num_rows:
+                    spans[name] = None  # values without statistics
+    return FooterStats(n, d.schema, spans)
+
+
+def read_rows(
+    path: str,
+    filter: "list[list[tuple]] | None" = None,
+    columns: "list[str] | None" = None,
+) -> "list[dict]":
+    """The rows of a parquet path matching `filter`, as dicts of
+    `columns` — a driver-side read with no Spark job. `filter` is in
+    disjunctive normal form, a list of AND-lists of
+    (column, op, value) tuples (`pyarrow.parquet` filter syntax); the
+    reader prunes row groups by their footer statistics, so a filter
+    over an artifact's sort columns reads only the matching row
+    groups. Callers keep reads bounded by construction (tile covers,
+    edge windows, ≤ L keys): every returned row crosses to Python."""
+    import pyarrow.parquet as pq
+
+    expr = pq.filters_to_expression(filter) if filter else None
+    table = _dataset(_signature(path)).to_table(filter=expr, columns=columns)
+    return table.to_pylist()
 
 
 def publish_manifest(

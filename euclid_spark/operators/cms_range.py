@@ -28,8 +28,8 @@ def _bucket(row_col: F.Column, key_col: F.Column) -> F.Column:
     )
 
 
-def serve_cms_day_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-day CMS tiles (day, r, b, c) as a fingerprint-keyed
+def cms_day_tiles_path(spark: SparkSession, sf_dir: str) -> str:
+    """Path of the per-day CMS tiles (day, r, b, c), a fingerprint-keyed
     ARTIFACT — built once at ingest, maintained incrementally by the
     D20 `count_min_sketch` spec's monoid."""
     from euclid_spark import artifacts
@@ -49,7 +49,7 @@ def serve_cms_day_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = artifacts.corpus_fingerprint(
         [f"{sf_dir}/events.parquet"], op="cms_day_tiles", r=CMS_ROWS, w=CMS_W
     )
-    return artifacts.serve_frame(spark, "cms_day_tiles", fp, build)
+    return artifacts.ensure("cms_day_tiles", fp, build)
 
 
 def cms_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,18 +59,11 @@ def cms_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from euclid_spark import artifacts
 
-    tiles = serve_cms_day_tiles(spark, sf_dir)
+    path = cms_day_tiles_path(spark, sf_dir)
+    tiles = cached_parquet(spark, path)
     # tile-span parameter fetch from parquet FOOTER statistics (no
-    # Spark job; frame-agg fallback on remote stores — artifacts.py)
-    d0, d1 = artifacts.served_span(
-        tiles,
-        "cms_day_tiles",
-        artifacts.corpus_fingerprint(
-            [f"{sf_dir}/events.parquet"], op="cms_day_tiles",
-            r=CMS_ROWS, w=CMS_W,
-        ),
-        "day",
-    )
+    # Spark job), read after the artifact is ensured
+    d0, d1 = artifacts.footer_stats(path).span("day")
     if d0 is None:  # zero-row corpus
         return spark.createDataFrame(
             [],

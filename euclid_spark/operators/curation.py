@@ -574,7 +574,7 @@ def _shard_bucket_hex(sf_dir: str) -> int:
     from euclid_spark import artifacts
 
     try:
-        n = artifacts.footer_num_rows(f"{sf_dir}/documents.parquet")
+        n = artifacts.footer_stats(f"{sf_dir}/documents.parquet").num_rows
     except Exception:  # noqa: BLE001 — remote/odd fs: pinned default
         return _SHARD_BUCKET_HEX
     if n <= 0:

@@ -1416,20 +1416,10 @@ def _oracle_dedup_semantic(sf_dir: str) -> str:
     Spark needed to derive the artifact key."""
     import os as _os
 
-    import pyarrow.parquet as _pq
-
     from euclid_spark import artifacts
 
     emb_path = f"{sf_dir}/embeddings.parquet"
-    if _os.path.isdir(emb_path):  # Spark-written corpus: sum the parts
-        import glob as _glob
-
-        n_vec = sum(
-            _pq.ParquetFile(p).metadata.num_rows
-            for p in _glob.glob(_os.path.join(emb_path, "*.parquet"))
-        )
-    else:
-        n_vec = _pq.ParquetFile(emb_path).metadata.num_rows
+    n_vec = artifacts.footer_stats(emb_path).num_rows
     k = max(4, -(-n_vec // SEMDEDUP_TARGET_CLUSTER))
     fp = artifacts.corpus_fingerprint(
         [emb_path], op="semdedup_centroids", k=k, seed=42

@@ -90,9 +90,9 @@ def lc_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def serve_lc_day_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-day distinct-user bitmaps as a fingerprint-keyed ARTIFACT —
-    the structure the D20 `lc_distinct_tiles` spec maintains
+def lc_day_tiles_path(spark: SparkSession, sf_dir: str) -> str:
+    """Path of the per-day distinct-user bitmaps, a fingerprint-keyed
+    ARTIFACT — the structure the D20 `lc_distinct_tiles` spec maintains
     incrementally; batch deployments build it once at ingest."""
     from euclid_spark import artifacts
 
@@ -105,7 +105,7 @@ def serve_lc_day_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = artifacts.corpus_fingerprint(
         [f"{sf_dir}/events.parquet"], op="lc_day_tiles", m=LC_BITS
     )
-    return artifacts.serve_frame(spark, "lc_day_tiles", fp, build)
+    return artifacts.ensure("lc_day_tiles", fp, build)
 
 
 def lc_range_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -119,17 +119,11 @@ def lc_range_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from euclid_spark import artifacts
 
-    tiles = serve_lc_day_tiles(spark, sf_dir)
+    path = lc_day_tiles_path(spark, sf_dir)
+    tiles = cached_parquet(spark, path)
     # tile-span parameter fetch from parquet FOOTER statistics (no
-    # Spark job; frame-agg fallback on remote stores — artifacts.py)
-    d0, d1 = artifacts.served_span(
-        tiles,
-        "lc_day_tiles",
-        artifacts.corpus_fingerprint(
-            [f"{sf_dir}/events.parquet"], op="lc_day_tiles", m=LC_BITS
-        ),
-        "day",
-    )
+    # Spark job), read after the artifact is ensured
+    d0, d1 = artifacts.footer_stats(path).span("day")
     if d0 is None:  # zero-row corpus
         return spark.createDataFrame(
             [],

@@ -27,8 +27,8 @@ estimate); the final PSI is ROUND(·, 6).  Hash-checked end to end.
 Scale shape (the r13 plan lesson: a first draft that re-referenced a
 shared events subframe planned TWENTY scans — every DataFrame re-use
 re-expands its lineage): the split day comes from PARQUET FOOTER
-STATISTICS (O(row groups) metadata, never a data scan — the stat_min_max
-discipline), the reference bounds are ONE scan whose ts < split
+STATISTICS (O(row groups) metadata, never a data scan —
+artifacts.footer_stats), the reference bounds are ONE scan whose ts < split
 predicate PUSHES DOWN to the parquet reader (row-group / partition
 pruning: at 100 TB the baseline window is usually a thin recent
 slice), and the binning is ONE more scan into a groupBy on
@@ -47,7 +47,7 @@ import datetime as _dt
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from euclid_spark import cache, catalog
+from euclid_spark import artifacts, cache, catalog
 
 PSI_BINS = 16
 PSI_ALERT = 0.1  # the conventional "moderate shift, investigate" bar
@@ -59,35 +59,11 @@ def _event_day_span(spark: SparkSession, sf_dir: str):
     ts IS NOT NULL). Falls back to a one-row Spark fold if any footer
     lacks ts stats (same value either way)."""
     path = f"{sf_dir}/events.parquet"
-
-    def _from_footers():
-        import pyarrow.parquet as pq
-
-        from euclid_spark.artifacts import data_files
-
-        files = data_files(path)
-        lo = hi = None
-        for p in files:
-            md = pq.ParquetFile(p).metadata
-            for i in range(md.num_row_groups):
-                rg = md.row_group(i)
-                for j in range(rg.num_columns):
-                    c = rg.column(j)
-                    if c.path_in_schema != "ts":
-                        continue
-                    st = c.statistics
-                    if st is None or not st.has_min_max:
-                        return None, None  # any statless group: fall back
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-        return lo, hi
-
     try:
-        lo, hi = _from_footers()
-    except Exception:  # noqa: BLE001 — non-local sf_dir (s3://, hdfs://):
-        # the driver-local glob/pyarrow path can't list or open it;
-        # every other face goes through the Spark reader only, so this
-        # one falls back to the same one-row Spark fold (ADVICE r13)
+        lo, hi = artifacts.footer_stats(path).span("ts")
+    except Exception:  # noqa: BLE001 — non-local sf_dir (s3://, hdfs://)
+        # or a row group without ts stats: the footers can't answer, so
+        # resolve through the same one-row Spark fold (ADVICE r13)
         lo = hi = None
     if lo is None or hi is None:  # footer without stats: one bounded fold
         row = (

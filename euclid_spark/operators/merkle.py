@@ -134,20 +134,17 @@ def merkle_levels(
     return nodes, levels
 
 
-def _served_depth(nodes: DataFrame, name: str, fp: str) -> "int | None":
+def _served_depth(name: str, fp: str) -> "int | None":
     """Tree depth (max level) of a SERVED node artifact from its parquet
     FOOTER statistics — O(row groups) metadata reads, no Spark job (the
-    artifacts.stat_min_max discipline: the previous `agg(max(level))` here
-    scanned every node row on EVERY query call, a per-call job whose
-    cost grows with the corpus). Falls back to the frame aggregate on
-    remote/unstatable artifact roots, where footers aren't a local
-    read."""
+    previous `agg(max(level))` here scanned every node row on EVERY
+    query call, a per-call job whose cost grows with the corpus). Call
+    it after the artifact is served."""
     from euclid_spark import artifacts
 
-    try:
-        ml = artifacts.stat_min_max(name, fp, "level")[1]
-    except Exception:  # remote artifact store — resolve through Spark
-        ml = nodes.agg(F.max("level")).collect()[0][0]
+    ml = artifacts.footer_stats(artifacts._path(name, fp)).span(
+        "level"
+    )[1]
     return None if ml is None else int(ml)
 
 
@@ -193,7 +190,7 @@ def merkle_membership_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
             persist_tracked(leaves).select("group_key", "pos", "node_hash")
         )[0],
     )
-    depth = _served_depth(nodes, "merkle_nodes_customer", fp)
+    depth = _served_depth("merkle_nodes_customer", fp)
     return merkle_opening_paths(
         leaves, entry_cols=["c_custkey"], nodes=nodes, depth=depth
     )
@@ -528,7 +525,7 @@ def _owner_token_tree(
             "pos",
         ),
     )
-    depth = _served_depth(nodes, "owner_token_nodes", fp)
+    depth = _served_depth("owner_token_nodes", fp)
     return leaves, nodes, depth
 
 
@@ -701,7 +698,7 @@ def _erc20_entry_tree(
         .sortWithinPartitions("group_key", "level", "pos"),
     )
     depth = _served_depth(
-        nodes, "erc20_entry_nodes", _erc20_fp(sf_dir, rewards_rate, contract)
+        "erc20_entry_nodes", _erc20_fp(sf_dir, rewards_rate, contract)
     )
     return leaves, nodes, depth
 

@@ -179,8 +179,8 @@ def hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def serve_hdr_day_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-day sketch tiles over event values (cents) as a
+def hdr_day_tiles_path(spark: SparkSession, sf_dir: str) -> str:
+    """Path of the per-day sketch tiles over event values (cents), a
     fingerprint-keyed ARTIFACT — the exact structure the D20
     `hdr_quantile_tiles` parity spec maintains incrementally; batch
     deployments build it once per corpus version at ingest."""
@@ -196,7 +196,7 @@ def serve_hdr_day_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = artifacts.corpus_fingerprint(
         [f"{sf_dir}/events.parquet"], op="hdr_day_tiles", sb=SUB_BITS
     )
-    return artifacts.serve_frame(spark, "hdr_day_tiles", fp, build)
+    return artifacts.ensure("hdr_day_tiles", fp, build)
 
 
 def hdr_range_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -214,17 +214,11 @@ def hdr_range_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from euclid_spark import artifacts
 
-    tiles = serve_hdr_day_tiles(spark, sf_dir)
+    path = hdr_day_tiles_path(spark, sf_dir)
+    tiles = cached_parquet(spark, path)
     # tile-span parameter fetch from parquet FOOTER statistics (no
-    # Spark job; frame-agg fallback on remote stores — artifacts.py)
-    d0, d1 = artifacts.served_span(
-        tiles,
-        "hdr_day_tiles",
-        artifacts.corpus_fingerprint(
-            [f"{sf_dir}/events.parquet"], op="hdr_day_tiles", sb=SUB_BITS
-        ),
-        "day",
-    )
+    # Spark job), read after the artifact is ensured
+    d0, d1 = artifacts.footer_stats(path).span("day")
     if d0 is None:  # zero-row corpus
         return spark.createDataFrame(
             [],

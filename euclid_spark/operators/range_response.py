@@ -43,10 +43,16 @@ Construction — the reference's own aggregation shape, hash-only:
   ascending), the element index, and the full element list (O(log
   range) hashes — the response's public metadata, like block headers).
 
-- **Cost shape**: the artifacts are built once per corpus version;
-  a query reads O(log range) tile roots + two < TILE_SIZE edge slices
-  of the owner's leaves + |revealed| opening paths. Nothing scans the
-  range interior (asserted by the --events scale probe).
+- **Cost shape**: the artifacts are built once per corpus version (by
+  Spark); a query is answered on the driver. `artifacts.read_rows`
+  fetches, from the owner-clustered stores, the owner's O(log range)
+  cover-tile roots, its rows in the two < TILE_SIZE edge slices, the
+  revealed rows and the ≤ L·depth opening-path nodes; Python folds
+  them and returns one local frame, so no Spark job runs until the
+  caller acts on it. Nothing reads the range interior (asserted by the
+  --events scale probe) except the two reads bounded only by the
+  owner's rows in the range: the ERC-20 revealed rows and the q2
+  L > Q2_L fallback.
 
 Verification (A32/A33 faces + the standalone tool): leaf re-derives
 from the payload; path refolds leaf → element; the element sits at its
@@ -64,12 +70,20 @@ from rows.
 from __future__ import annotations
 
 import hashlib
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from euclid_spark.operators.range_tree import TILE_SIZE, tile_cover
+from euclid_spark import artifacts
+from euclid_spark.catalog import cached_parquet, local_frame
+from euclid_spark.operators.range_tree import (
+    TILE_SIZE,
+    _cover_filter,
+    _edge_filter,
+    _probe_range,
+    q2_entry_store_path,
+    tile_cover,
+)
 
 # cell-tree path steps are labeled CELL_LVL_OFF + level so a combined
 # (in-cell ++ cell-tree) path sorts ascending in one sequence; in-cell
@@ -87,7 +101,6 @@ def _gk() -> F.Column:
 
 
 def _fp(sf_dir: str, family: str, rate, contract) -> str:
-    from euclid_spark import artifacts
     from euclid_spark.operators.euclid import CONTRACT, REWARDS_RATE
 
     params = {"op": f"range_response_{family}", "tile": TILE_SIZE,
@@ -159,24 +172,24 @@ def _erc20_cell_leaf_rows(
     )
 
 
-def serve_range_commitments(
+def range_commitment_paths(
     spark: SparkSession,
     sf_dir: str,
     family: str,
     rewards_rate: "int | None" = None,
     contract: "str | None" = None,
-):
-    """(leaves, incell_nodes, cell_nodes, cell_depth) — all served as
-    fingerprint-keyed artifacts, owner-clustered so a single-owner
-    response prunes to that owner's row groups.
+) -> "tuple[str, str, str, int, int]":
+    """(leaves, incell_nodes, cell_nodes, cell_depth, incell_depth) —
+    the three commitment artifacts' paths, each built on a miss
+    (owner-clustered, so a single-owner response prunes to that
+    owner's row groups), and the two tree depths from their footers.
 
     leaves:       (owner, cell, <payload cols>, pos, node_hash)
-    incell_nodes: (gk = owner|cell, level, pos, node_hash)
+    incell_nodes: (group_key = owner|cell, level, pos, node_hash, owner)
     cell_nodes:   (owner, level, pos, node_hash) — pos = cell >> level
     """
     import math
 
-    from euclid_spark import artifacts
     from euclid_spark.cache import persist_tracked
     from euclid_spark.operators.merkle import merkle_levels
 
@@ -195,13 +208,11 @@ def serve_range_commitments(
         )
         return _clustered(rows, "cell", "pos")
 
-    leaves = artifacts.serve_frame(
-        spark, f"rr_{family}_leaves", fp, build_leaves
-    )
+    leaves = artifacts.ensure(f"rr_{family}_leaves", fp, build_leaves)
 
     def build_incell() -> DataFrame:
         lv = persist_tracked(
-            leaves.select(
+            cached_parquet(spark, leaves).select(
                 _gk().alias("group_key"), "owner", "pos", "node_hash"
             )
         )
@@ -211,9 +222,7 @@ def serve_range_commitments(
             nodes.join(owner_of, "group_key"), "group_key", "level", "pos"
         )
 
-    incell = artifacts.serve_frame(
-        spark, f"rr_{family}_incell", fp, build_incell
-    )
+    incell = artifacts.ensure(f"rr_{family}_incell", fp, build_incell)
 
     def build_celltree() -> DataFrame:
         # cell roots = the in-cell trees' top level; merkle_levels sizes
@@ -221,7 +230,8 @@ def serve_range_commitments(
         # each group's max-level node (promotion makes it the root)
         wl = Window.partitionBy("group_key")
         roots = (
-            incell.withColumn("ml", F.max("level").over(wl))
+            cached_parquet(spark, incell)
+            .withColumn("ml", F.max("level").over(wl))
             .filter(F.col("level") == F.col("ml"))
             .select(
                 "owner",
@@ -230,7 +240,9 @@ def serve_range_commitments(
                 "node_hash",
             )
         )
-        mb = leaves.agg(F.max("cell")).collect()[0][0]  # one-row fetch
+        mb = (
+            cached_parquet(spark, leaves).agg(F.max("cell")).collect()[0][0]
+        )  # one-row fetch
         n_cells = int(mb or 0) + 1
         depth = (
             max(1, math.ceil(math.log2(n_cells))) if n_cells > 1 else 1
@@ -240,17 +252,16 @@ def serve_range_commitments(
         )
         return _clustered(nodes, "level", "pos")
 
-    cell_nodes = artifacts.serve_frame(
-        spark, f"rr_{family}_celltree", fp, build_celltree
-    )
-    # served metadata from parquet footers — a frame agg(max) would
-    # scan every node row, which grows with the corpus
-    md = artifacts.stat_min_max(f"rr_{family}_celltree", fp, "level")[1]
-    icd = artifacts.stat_min_max(f"rr_{family}_incell", fp, "level")[1]
+    cells = artifacts.ensure(f"rr_{family}_celltree", fp, build_celltree)
+    # served metadata from parquet footers, read after the ensures — a
+    # frame agg(max) would scan every node row, which grows with the
+    # corpus
+    md = artifacts.footer_stats(cells).span("level")[1]
+    icd = artifacts.footer_stats(incell).span("level")[1]
     return (
         leaves,
         incell,
-        cell_nodes,
+        cells,
         0 if md is None else int(md),
         0 if icd is None else int(icd),
     )
@@ -275,16 +286,8 @@ def _fold(seed_hex: bytes, elements: "list[str]") -> str:
     return acc.decode()
 
 
-def _default_range(spark, sf_dir, b_min, b_max) -> "tuple[int, int]":
-    from euclid_spark.operators.range_tree import _served_max_block
-
-    if b_min is not None and b_max is not None:
-        return int(b_min), int(b_max)
-    mb = _served_max_block(spark, sf_dir)
-    return (
-        mb // 5 if b_min is None else int(b_min),
-        mb * 4 // 5 if b_max is None else int(b_max),
-    )
+def _sha(v: int) -> str:
+    return hashlib.sha256(str(v).encode()).hexdigest()
 
 
 def _element_sequence(
@@ -293,95 +296,49 @@ def _element_sequence(
     family: str,
     owner: int,
     contract: "str | None",
-    own_leaves: DataFrame,
-    cell_nodes: DataFrame,
+    leaves: str,
+    cells: str,
     cover: "list[tuple[int, int]]",
     edges: "list[tuple[int, int]]",
-    companions: "tuple[DataFrame, ...]" = (),
-) -> "tuple[list[tuple[int, str, dict]], list[list]]":
+) -> "list[tuple[int, str, dict]]":
     """The response's ELEMENT SEQUENCE in block order — low-edge
     leaves, occupied cover-tile subtree roots, high-edge leaves — as
-    (block_start, hash, meta) triples. Bounded: O(log range) tiles +
-    two < TILE_SIZE edge slices. The edge fetch, the tile fetch and any
-    caller-supplied `companions` (other independent bounded fetches the
-    caller needs, e.g. the revealed-row set) run as ONE CONCURRENT WAVE
-    of jobs (catalog.collect_all, guide §2.6) instead of two-to-four
-    sequential driver round trips. Returns (elems, companion_rows)."""
-    from euclid_spark.catalog import collect_all
-
-    fetches: "list[DataFrame]" = []
-    edge_ix = tile_ix = None
-    if edges:
-        econd = reduce(
-            lambda a, b: a | b,
-            [
-                (F.col("event_id") >= lo) & (F.col("event_id") < hi)
-                for lo, hi in edges
-            ],
-        )
-        if family == "erc20":
-            edge_df = (
-                own_leaves.filter(econd)
-                .select("event_id", "node_hash")
-                .orderBy("event_id")  # ≤ 2·TILE_SIZE blocks' entries
-            )
-        else:
-            # Q2 edges commit the DISTINCT keys seen in the partial
-            # cells — one element per key, hash = sha256(token_id) (the
-            # same leaf encoding as the in-cell trees, so a verifier
-            # re-derives every element kind from revealed payloads),
-            # ordered by the key's first in-edge occurrence; read from
-            # the block-clustered entry store (event_id pushdown), not
-            # the raw events table
-            from euclid_spark.operators.range_tree import (
-                serve_q2_entry_store,
-            )
-
-            edge_df = (
-                serve_q2_entry_store(spark, sf_dir, contract)
-                .filter(econd & (F.col("owner") == owner))
-                .groupBy("token_id")
-                .agg(F.min("event_id").alias("first_id"))
-                .orderBy("first_id")
-            )
-        edge_ix = len(fetches)
-        fetches.append(edge_df)
-    if cover:
-        ccond = reduce(
-            lambda a, b: a | b,
-            [
-                (F.col("level") == k) & (F.col("pos") == c)
-                for k, c in cover
-            ],
-        )
-        tile_ix = len(fetches)
-        fetches.append(
-            cell_nodes.filter(ccond & (F.col("owner") == owner))
-        )  # ≤ 2 per level — bounded
-    n_own = len(fetches)
-    fetches.extend(companions)
-    results = collect_all(*fetches) if fetches else []
-
+    (block_start, hash, meta) triples. Bounded: the owner's ≤ 2 cell
+    nodes per level plus its rows in the two < TILE_SIZE edge windows,
+    each one `artifacts.read_rows` on the driver (no Spark job)."""
+    own = ("owner", "=", owner)
     elems: "list[tuple[int, str, dict]]" = []
-    if edge_ix is not None:
-        if family == "erc20":
-            for r in results[edge_ix]:
-                elems.append(
-                    (int(r["event_id"]), r["node_hash"],
-                     {"edge_id": int(r["event_id"])})
-                )
-        else:
-            for r in results[edge_ix]:
-                h = hashlib.sha256(str(r["token_id"]).encode()).hexdigest()
-                elems.append(
-                    (int(r["first_id"]), h,
-                     {"edge_id": int(r["first_id"]),
-                      "edge_tok": int(r["token_id"])})
-                )
-    if tile_ix is not None:
+    if edges and family == "erc20":
+        rows = artifacts.read_rows(
+            leaves, _edge_filter(edges, own), ["event_id", "node_hash"]
+        )
+        for r in sorted(rows, key=lambda r: r["event_id"]):
+            elems.append(
+                (r["event_id"], r["node_hash"], {"edge_id": r["event_id"]})
+            )
+    elif edges:
+        # Q2 edges commit the DISTINCT keys seen in the partial cells —
+        # one element per key, hash = sha256(token_id) (the same leaf
+        # encoding as the in-cell trees, so a verifier re-derives every
+        # element kind from revealed payloads), ordered by the key's
+        # first in-edge occurrence; read from the block-clustered entry
+        # store, not the raw events table
+        first: "dict[int, int]" = {}
+        for r in artifacts.read_rows(
+            q2_entry_store_path(spark, sf_dir, contract),
+            _edge_filter(edges, own), ["event_id", "token_id"],
+        ):
+            t = r["token_id"]
+            first[t] = min(first.get(t, r["event_id"]), r["event_id"])
+        for t, fid in sorted(first.items(), key=lambda kv: kv[1]):
+            elems.append((fid, _sha(t), {"edge_id": fid, "edge_tok": t}))
+    if cover:
         tile_rows = {
-            (int(r["level"]), int(r["pos"])): r["node_hash"]
-            for r in results[tile_ix]
+            (r["level"], r["pos"]): r["node_hash"]
+            for r in artifacts.read_rows(
+                cells, _cover_filter(cover, own, col="pos"),
+                ["level", "pos", "node_hash"],
+            )
         }
         for k, c in cover:
             if (k, c) in tile_rows:  # empty subtree ⇒ no element
@@ -390,7 +347,7 @@ def _element_sequence(
                      {"k": k, "c": c})
                 )
     elems.sort(key=lambda t: t[0])
-    return elems, results[n_own:]
+    return elems
 
 
 def _response_root(
@@ -406,8 +363,7 @@ def _response_root(
     """The response commitment root ALONE for (owner, [b_min, b_max)) —
     the element sequence folded onto the header, skipping revealed rows
     and opening paths entirely. The verifier faces' commit_ok recompute:
-    same independence (served commitments → elements → fold), a third
-    of the cost of building the full response (measured 3.5 → <1 s)."""
+    same independence (served commitments → elements → fold)."""
     from euclid_spark.operators.euclid import REWARDS_RATE
 
     rate = (
@@ -415,16 +371,15 @@ def _response_root(
         if family == "erc20"
         else None
     )
-    leaves, _, cell_nodes, depth, _ = serve_range_commitments(
+    leaves, _, cells, depth, _ = range_commitment_paths(
         spark, sf_dir, family, rewards_rate, contract
     )
     cover, edges = tile_cover(int(b_min), int(b_max), depth)
     if not cover and not edges:
         return None
-    own_leaves = leaves.filter(F.col("owner") == int(owner))
-    elems, _ = _element_sequence(
-        spark, sf_dir, family, int(owner), contract, own_leaves,
-        cell_nodes, cover, edges,
+    elems = _element_sequence(
+        spark, sf_dir, family, int(owner), contract, leaves, cells, cover,
+        edges,
     )
     return _fold(
         _hdr(int(b_min), int(b_max), int(owner), rate),
@@ -432,7 +387,7 @@ def _response_root(
     )
 
 
-def _q2_key_companions(
+def _q2_revealed(
     spark: SparkSession,
     sf_dir: str,
     owner: int,
@@ -440,38 +395,73 @@ def _q2_key_companions(
     b_max: int,
     L: int,
     contract: "str | None",
+    leaves: str,
     cover: "list[tuple[int, int]]",
-    own_leaves: DataFrame,
-) -> "tuple[DataFrame, ...]":
-    """The q2 revealed-key fetch as a LAZY frame so it can join the
-    element-sequence collect wave: the first-L distinct keys over the
-    range — WITH each key's first covered occurrence (cell, pos) from
-    the owner_v4 tile structs — read from the A26 key-tile tree when L
-    fits its baked reveal bound, else derived from the leaf store
-    (range-proportional, the honest cost of over-asking the circuit
-    setup)."""
-    from euclid_spark.operators.range_tree import Q2_L, q2_range_tree_topl
+    edge_toks: "set[int]",
+) -> "list[dict]":
+    """The q2 response's revealed rows: the first-L distinct keys over
+    the range in key order, each opening at its smallest covering
+    element — (cell, pos, node_hash) of its first covered occurrence,
+    or cell = -1 when an edge occurrence opens it.
 
-    if L <= Q2_L:
-        return (
-            q2_range_tree_topl(
-                spark, sf_dir, owner=owner, b_min=b_min, b_max=b_max,
-                L=L, contract=contract, with_first=True,
-            ),
-        )
-    cov_cells = [(c << k, ((c + 1) << k) - 1) for k, c in cover]
-    ccond_all = (
-        reduce(
-            lambda a, b: a | b,
-            [
-                (F.col("cell") >= lo) & (F.col("cell") <= hi)
-                for lo, hi in cov_cells
-            ],
-        )
-        if cov_cells
-        else F.lit(False)
+    L ≤ Q2_L reads the keys WITH their first covered occurrence from
+    the A26 key-tile fold (O(log range) tile rows, no leaf-store
+    fetch). A larger L exceeds the tree's baked reveal width, so the
+    keys come from the owner's leaf-store rows in the covered cells:
+    that read is bounded only by the owner's rows in the range, the
+    honest cost of over-asking the circuit setup."""
+    from euclid_spark.operators.range_tree import (
+        _EDGE_SENTINEL_CELL,
+        Q2_L,
+        _q2_owner_keys,
     )
-    return (own_leaves.filter(ccond_all).select("token_id").distinct(),)
+
+    cand: "dict[int, dict]" = {}
+    if L <= Q2_L:
+        key_rows = _q2_owner_keys(
+            spark, sf_dir, owner, b_min, b_max, L, contract
+        )
+        keys = [k["t"] for k in key_rows]
+        for k in key_rows:
+            if k["t"] in edge_toks:
+                continue
+            if k["cell"] == _EDGE_SENTINEL_CELL:
+                # edge-only key NOT listed as an edge element —
+                # impossible by construction (every edge-slice key
+                # becomes an edge element)
+                raise KeyError(k["t"])
+            cand[k["t"]] = {
+                "cell": k["cell"], "pos": k["p"], "node_hash": _sha(k["t"]),
+            }
+    else:
+        cov_cells = [(c << k, ((c + 1) << k) - 1) for k, c in cover]
+        rows = (
+            artifacts.read_rows(
+                leaves,
+                [
+                    [("owner", "=", owner), ("cell", ">=", lo),
+                     ("cell", "<=", hi)]
+                    for lo, hi in cov_cells
+                ],
+                ["token_id", "cell", "pos", "node_hash"],
+            )
+            if cov_cells
+            else []
+        )
+        for r in rows:
+            t = r["token_id"]
+            if t not in cand or (r["cell"], r["pos"]) < (
+                cand[t]["cell"], cand[t]["pos"]
+            ):
+                cand[t] = r
+        keys = sorted(set(cand) | edge_toks)[:L]
+    return [
+        {"token_id": t, "cell": -1, "pos": -1, "node_hash": ""}
+        if t in edge_toks  # an edge occurrence opens first
+        else {"token_id": t, "cell": cand[t]["cell"],
+              "pos": cand[t]["pos"], "node_hash": cand[t]["node_hash"]}
+        for t in keys
+    ]
 
 
 def _range_response(
@@ -497,50 +487,29 @@ def _range_response(
     payload_cols = (
         ["event_id", "entry_reward_hex"] if family == "erc20" else ["token_id"]
     )
-    order_col = "event_id" if family == "erc20" else "token_id"
-
-    def empty() -> DataFrame:  # built only on the degenerate paths
-        return spark.createDataFrame(
-            [],
-            ", ".join(
-                f"{c} {'string' if c == 'entry_reward_hex' else 'long'}"
-                for c in payload_cols
-            )
-            + ", leaf_hash string, path string, elem_idx int, elem_hash"
-            " string, elements string, response_root string, owner long,"
-            " b_min long, b_max long"
-            + (", rewards_rate long" if family == "erc20" else ""),
+    ddl = (
+        ", ".join(
+            f"{c} {'string' if c == 'entry_reward_hex' else 'long'}"
+            for c in payload_cols
         )
+        + ", leaf_hash string, path string, elem_idx int, elem_hash"
+        " string, elements string, response_root string, owner long,"
+        " b_min long, b_max long"
+        + (", rewards_rate long" if family == "erc20" else "")
+    )
 
-    leaves, incell, cell_nodes, depth, incell_depth = serve_range_commitments(
+    leaves, incell, cells, depth, incell_depth = range_commitment_paths(
         spark, sf_dir, family, rewards_rate, contract
     )
-    b_min, b_max = _default_range(spark, sf_dir, b_min, b_max)
+    b_min, b_max = _probe_range(spark, sf_dir, b_min, b_max)
     cover, edges = tile_cover(b_min, b_max, depth)
     if not cover and not edges:
-        return empty()
+        return spark.createDataFrame([], ddl)
+    own = ("owner", "=", owner)
 
-    own_leaves = leaves.filter(F.col("owner") == owner)
-
-    # ---- element sequence (bounded: O(log range) tiles + 2 edge
-    # slices) + the independent revealed-row fetch, one concurrent wave
-    in_range = (F.col("event_id") >= b_min) & (F.col("event_id") < b_max)
-    companions: "tuple[DataFrame, ...]" = ()
-    if family == "erc20":
-        companions = (
-            own_leaves.filter(in_range)
-            .orderBy("event_id")
-            .limit(L)
-            .select("cell", "pos", "node_hash", *payload_cols),
-        )
-    else:
-        companions = _q2_key_companions(
-            spark, sf_dir, owner, b_min, b_max, L, contract, cover,
-            own_leaves,
-        )
-    elems, companion_rows = _element_sequence(
-        spark, sf_dir, family, owner, contract, own_leaves, cell_nodes,
-        cover, edges, companions=companions,
+    # ---- element sequence (bounded: O(log range) tiles + 2 edge slices)
+    elems = _element_sequence(
+        spark, sf_dir, family, owner, contract, leaves, cells, cover, edges
     )
     element_hashes = [h for _, h, _ in elems]
     elements_str = "/".join(element_hashes)
@@ -548,97 +517,28 @@ def _range_response(
 
     # ---- revealed rows: first L results in canonical order
     if family == "erc20":
-        rev_rows = companion_rows[0]
+        # the owner's entries in the range, first L in block order: a
+        # read bounded by the owner's rows in the range (no structural
+        # cap — the same rows the Spark limit(L) scan read)
+        rev_rows = sorted(
+            artifacts.read_rows(
+                leaves,
+                [[own, ("event_id", ">=", b_min), ("event_id", "<", b_max)]],
+                ["cell", "pos", "node_hash", *payload_cols],
+            ),
+            key=lambda r: r["event_id"],
+        )[:L]
     else:
-        # first-L distinct keys over the range, in key order, READ FROM
-        # THE A26 KEY-TILE TREE (O(log range) — the same universe: keys
-        # of covered cells ∪ edge keys); each key opens at its smallest
-        # covering element, whose (cell, pos) the owner_v4 tile structs
-        # already carry — no per-query leaf-store fetch (the previous
-        # formulation IN-list-scanned the owner's covered leaf slice,
-        # the one remaining interior-proportional read of this face);
-        # leaf hash = sha256(token_id), the A20 encoding the edge
-        # elements already recompute driver-side
-        from euclid_spark.operators.range_tree import (
-            _EDGE_SENTINEL_CELL,
-            Q2_L,
+        rev_rows = _q2_revealed(
+            spark, sf_dir, owner, b_min, b_max, L, contract, leaves, cover,
+            {m["edge_tok"] for _, _, m in elems if "edge_tok" in m},
         )
 
-        edge_first_ids = {
-            m["edge_tok"] for _, _, m in elems if "edge_tok" in m
-        }
-        key_rows = companion_rows[0]  # fetched in the wave above
-        cand: "dict[int, dict]" = {}
-        if L <= Q2_L:
-            keys = sorted(int(r["token_id"]) for r in key_rows)
-            for r in key_rows:
-                t = int(r["token_id"])
-                if t in edge_first_ids:
-                    continue
-                if int(r["first_cell"]) == _EDGE_SENTINEL_CELL:
-                    # edge-only key NOT listed as an edge element —
-                    # impossible by construction (every edge-slice key
-                    # becomes an edge element); fail like the previous
-                    # formulation's cand[t] KeyError would
-                    raise KeyError(t)
-                cand[t] = {
-                    "cell": int(r["first_cell"]),
-                    "pos": int(r["first_pos"]),
-                    "node_hash": hashlib.sha256(
-                        str(t).encode()
-                    ).hexdigest(),
-                }
-        else:
-            # beyond the tree's baked reveal width: the key set came
-            # from the leaf store (range-proportional, the honest cost
-            # of over-asking the circuit setup) — and so does the
-            # first-occurrence lookup, bounded to those ≤ L keys
-            covered_toks = {int(r["token_id"]) for r in key_rows}
-            keys = sorted(covered_toks | edge_first_ids)[:L]
-            cov_keys = [t for t in keys if t not in edge_first_ids]
-            cov_cells = [(c << k, ((c + 1) << k) - 1) for k, c in cover]
-            if cov_keys and cov_cells:
-                ccond2 = reduce(
-                    lambda a, b: a | b,
-                    [
-                        (F.col("cell") >= lo) & (F.col("cell") <= hi)
-                        for lo, hi in cov_cells
-                    ],
-                )
-                for r in (
-                    own_leaves.filter(
-                        F.col("token_id").isin(cov_keys) & ccond2
-                    )
-                    .groupBy("token_id")
-                    .agg(
-                        F.min(
-                            F.struct("cell", "pos", "node_hash")
-                        ).alias("s")
-                    )
-                    .collect()
-                ):
-                    cand[int(r["token_id"])] = r["s"]
-        rev_rows = []
-        for t in keys:
-            if t in edge_first_ids:  # an edge occurrence opens first
-                rev_rows.append(
-                    {"token_id": t, "cell": -1, "pos": -1, "node_hash": ""}
-                )
-            else:  # a key in the range has a covered or edge occurrence
-                s = cand[t]
-                rev_rows.append(
-                    {"token_id": t, "cell": s["cell"], "pos": s["pos"],
-                     "node_hash": s["node_hash"]}
-                )
-
     # ---- opening paths, assembled DRIVER-SIDE: a response is ≤ L
-    # revealed rows by construction, so build every path in Python from
-    # two PRUNED BOUNDED node fetches — the in-cell trees of the ≤ L
+    # revealed rows by construction, so every path is built in Python
+    # from two bounded node reads — the in-cell trees of the ≤ L
     # touched cells (group_key IN-list) and the ≤ L·depth cell-tree
-    # siblings ((level, pos) IN-list). The previous join formulation
-    # streamed the FULL node artifacts through the path joins, a
-    # per-query cost that grew with the corpus (the 100× probe's
-    # residual slope on A30/A31).
+    # siblings ((level, pos) IN-lists)
     if family == "q2":
         def _is_cov(r):
             return r["cell"] >= 0
@@ -666,10 +566,6 @@ def _range_response(
                 return k, c, i
         return None
 
-    # bounded fetches 1+2 (one concurrent wave): the in-cell nodes of
-    # the ≤ L touched cells and the ≤ L·depth cell-tree siblings
-    from euclid_spark.catalog import collect_all
-
     gks = sorted({f"{owner}|{r['cell']}" for r in cov_rows})
     need: "set[tuple[int, int]]" = set()
     for r in cov_rows:
@@ -678,33 +574,22 @@ def _range_response(
             for j in range(t[0]):
                 anc = int(r["cell"]) >> j
                 need.add((j, anc + 1 if anc % 2 == 0 else anc - 1))
-    wave: "list[DataFrame]" = []
-    if gks:
-        wave.append(
-            incell.filter(F.col("group_key").isin(gks)).select(
-                "group_key", "level", "pos", "node_hash"
-            )
-        )
-    if need:
-        ncond = reduce(
-            lambda a, b: a | b,
-            [
-                (F.col("level") == j) & (F.col("pos") == p)
-                for j, p in sorted(need)
-            ],
-        )
-        wave.append(cell_nodes.filter(ncond & (F.col("owner") == owner)))
-    wave_rows = collect_all(*wave) if wave else []
     in_nodes: "dict[str, dict]" = {}
     if gks:
-        for n in wave_rows[0]:
+        for n in artifacts.read_rows(
+            incell, [[own, ("group_key", "in", gks)]],
+            ["group_key", "level", "pos", "node_hash"],
+        ):
             in_nodes.setdefault(n["group_key"], {})[
-                (int(n["level"]), int(n["pos"]))
+                (n["level"], n["pos"])
             ] = n["node_hash"]
     cell_sibs: "dict[tuple[int, int], str]" = {}
     if need:
-        for n in wave_rows[-1]:
-            cell_sibs[(int(n["level"]), int(n["pos"]))] = n["node_hash"]
+        for n in artifacts.read_rows(
+            cells, _cover_filter(sorted(need), own, col="pos"),
+            ["level", "pos", "node_hash"],
+        ):
+            cell_sibs[(n["level"], n["pos"])] = n["node_hash"]
 
     out_rows: "list[tuple]" = []
     for r in cov_rows:
@@ -759,35 +644,14 @@ def _range_response(
                 if fe is not None:
                     out_rows.append((r["token_id"], fe[1], "", fe[0]))
 
-    from euclid_spark.catalog import local_frame
-
-    res = local_frame(
-        spark,
-        out_rows,
-        ", ".join(
-            f"{c} {'string' if c == 'entry_reward_hex' else 'long'}"
-            for c in payload_cols
-        )
-        + ", leaf_hash string, path string, elem_idx int",
+    # every row ends in its elem_idx; append (elem_hash, elements,
+    # response_root, owner, b_min, b_max[, rewards_rate])
+    tail = (elements_str, root, owner, b_min, b_max) + (
+        (rate,) if family == "erc20" else ()
     )
-    elem_arr = F.split(F.lit(elements_str), "/") if elements_str else F.array()
-    out = res.select(
-        *payload_cols,
-        "leaf_hash",
-        "path",
-        "elem_idx",
-        F.get(elem_arr, F.col("elem_idx")).alias("elem_hash"),
-        F.lit(elements_str).alias("elements"),
-        F.lit(root).alias("response_root"),
-        F.lit(owner).cast("long").alias("owner"),
-        F.lit(b_min).cast("long").alias("b_min"),
-        F.lit(b_max).cast("long").alias("b_max"),
+    return local_frame(
+        spark, [row + (element_hashes[row[-1]],) + tail for row in out_rows], ddl
     )
-    if family == "erc20":
-        out = out.withColumn(
-            "rewards_rate", F.lit(rate).cast("long")
-        )
-    return out
 
 
 def q2_range_response(
@@ -840,8 +704,6 @@ def _serve_range_response(
 ) -> DataFrame:
     """The pinned-face range response as a published artifact (the
     A27/A28 pattern: the prover publishes once, verifiers consume)."""
-    from euclid_spark import artifacts
-
     from euclid_spark.operators.euclid import CONTRACT, REWARDS_RATE
 
     fp = _fp(sf_dir, family, None, None)
@@ -917,8 +779,6 @@ def _verify_range_response(
             spark, sf_dir, family, p["owner"], p["b_min"], p["b_max"],
             p["rewards_rate"] if family == "erc20" else None, None,
         )
-    from euclid_spark.catalog import local_frame
-
     exp_df = local_frame(
         spark,
         [(o, lo, hi, r) for (o, lo, hi), r in expected.items()],

@@ -35,13 +35,20 @@ the tile path returns exactly what scanning the rows would.
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from euclid_spark.catalog import load_events
-from euclid_spark.functions.hashing import DIGEST_PRIME, digest_agg, digest_term
+from euclid_spark import artifacts
+from euclid_spark.catalog import cached_parquet, load_events, local_frame
+from euclid_spark.functions.hashing import (
+    DIGEST_PRIME,
+    MIX,
+    digest_agg,
+    digest_term,
+)
 
 TILE_SIZE = 256  # blocks per level-0 tile (the finest granularity)
 
@@ -108,18 +115,27 @@ def build_range_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _range_tree_spec(spark: SparkSession, sf_dir: str) -> tuple:
+    """(name, fingerprint, build, options) of the tile-tree artifact —
+    the one definition its path and frame forms share."""
+    return (
+        "range_tree_tiles",
+        _range_tree_fp(sf_dir),
+        lambda: build_range_tree(spark, sf_dir),
+        None,
+    )
+
+
+def range_tree_path(spark: SparkSession, sf_dir: str) -> str:
+    """The tile tree's artifact path, built on a miss."""
+    return artifacts.ensure(*_range_tree_spec(spark, sf_dir))
+
+
 def serve_range_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tile tree as a fingerprint-keyed disk artifact — precomputed
     at ingest (the reference commits its block tree the same way),
     served to every query as a short-lineage scan."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="range_tree", tile=TILE_SIZE
-    )
-    return artifacts.serve_frame(
-        spark, "range_tree_tiles", fp, lambda: build_range_tree(spark, sf_dir)
-    )
+    return artifacts.serve_frame(spark, *_range_tree_spec(spark, sf_dir))
 
 
 def tile_cover(
@@ -151,6 +167,92 @@ def tile_cover(
     return tiles, edges
 
 
+def _by_level(cover: "list[tuple[int, int]]") -> "dict[int, list[int]]":
+    by_level: "dict[int, list[int]]" = {}
+    for k, c in cover:
+        by_level.setdefault(k, []).append(c)
+    return by_level
+
+
+def _cover_filter(
+    cover: "list[tuple[int, int]]", *conj: tuple, col: str = "cell"
+) -> list:
+    """(level, node) pairs as a `read_rows` filter: one
+    (level, `col` IN ...) conjunction per level, each AND-ed with
+    `conj`."""
+    return [
+        [*conj, ("level", "=", k), (col, "in", cells)]
+        for k, cells in _by_level(cover).items()
+    ]
+
+
+def _edge_filter(edges: "list[tuple[int, int]]", *conj: tuple) -> list:
+    """The < TILE_SIZE edge windows as a `read_rows` filter on
+    event_id, each AND-ed with `conj`."""
+    return [[*conj, ("event_id", ">=", lo), ("event_id", "<", hi)] for lo, hi in edges]
+
+
+def _cover_cond(cover: "list[tuple[int, int]]") -> F.Column:
+    """The tile cover as a Spark predicate for the all-owner faces: an
+    OR of per-level (level, cell IN ...) terms."""
+    return reduce(
+        lambda a, b: a | b,
+        [
+            (F.col("level") == k) & F.col("cell").isin(cells)
+            for k, cells in _by_level(cover).items()
+        ],
+    )
+
+
+def _edge_cond(edges: "list[tuple[int, int]]") -> F.Column:
+    """The edge windows as a Spark predicate on event_id."""
+    return reduce(
+        lambda a, b: a | b,
+        [
+            (F.col("event_id") >= lo) & (F.col("event_id") < hi)
+            for lo, hi in edges
+        ],
+    )
+
+
+def _sql_agg(fn, values):
+    """`fn` over `values` with SQL's null rules: nulls are skipped, and
+    no non-null value gives null."""
+    vals = [v for v in values if v is not None]
+    return fn(vals) if vals else None
+
+
+_MICRO = Decimal("0.000001")
+
+
+def _micros(v: "float | None") -> "int | None":
+    """`CAST(v AS decimal(18,6))` in integer micro-units: Spark casts a
+    double through its shortest decimal form, rounding HALF_UP."""
+    if v is None:
+        return None
+    return int(Decimal(repr(v)).quantize(_MICRO, rounding=ROUND_HALF_UP).scaleb(6))
+
+
+def _probe_range(
+    spark: SparkSession, sf_dir: str, b_min: "int | None", b_max: "int | None"
+) -> "tuple[int, int]":
+    """(b_min, b_max) with unset bounds at the ⅕ and ⅘ points of the
+    block space — the scale-invariant probe every pinned face uses."""
+    if b_min is not None and b_max is not None:
+        return int(b_min), int(b_max)
+    mb = _served_max_block(spark, sf_dir)
+    return (
+        mb // 5 if b_min is None else int(b_min),
+        mb * 4 // 5 if b_max is None else int(b_max),
+    )
+
+
+_AGG_DDL = (
+    "b_min {t}, b_max {t}, n_events long, total_value double, "
+    "min_block long, max_block long, range_digest long"
+)
+
+
 def range_tree_agg(
     spark: SparkSession,
     sf_dir: str,
@@ -164,107 +266,69 @@ def range_tree_agg(
     the ⅕ and ⅘ points of the block space (scale-invariant probe, the
     A22 pattern).
 
-    Plan shape: the tile filter is an OR of per-level `cell IN (...)`
-    lists over the served artifact (≤ 2 cells per level — a few dozen
-    rows); the edge predicate is a 2-range OR pushed to the events
-    parquet scan (row-group pruning keeps it ∝ TILE_SIZE); the final
-    fold is one aggregate over ~40 bounded rows. Nothing scans the
-    range interior."""
-    from euclid_spark import artifacts
-
-    tiles = serve_range_tree(spark, sf_dir)
-    # served metadata from parquet FOOTER statistics (the previous
-    # two-scalar agg scanned every tile row per call, a job that grows
-    # with the corpus); Spark fallback for remote artifact roots
-    try:
-        fp = _range_tree_fp(sf_dir)
-        ml = artifacts.stat_min_max("range_tree_tiles", fp, "level")[1]
-        mb = artifacts.stat_min_max("range_tree_tiles", fp, "max_block")[1]
-    except Exception:  # remote artifact store — resolve through Spark
-        meta = tiles.agg(
-            F.max("level").alias("ml"), F.max(F.col("max_block")).alias("mb")
-        ).collect()[0]
-        ml, mb = meta["ml"], meta["mb"]
+    Read shape: the answer is one row with no owner axis, so it is
+    folded on the driver. `artifacts.read_rows` fetches the cover tiles
+    (a (level, cell IN ...) filter over the served artifact, ≤ 2 rows
+    per level) and the two < TILE_SIZE edge windows of the events table
+    (event_id ranges, pruned to their row groups); the fold applies
+    Spark's types and null rules (decimal(18,6) HALF_UP value cast,
+    HALF_UP total to 2 places, pmod digest). No Spark job runs until
+    the returned local frame is acted on; nothing reads the range
+    interior."""
+    path = range_tree_path(spark, sf_dir)
+    ml = artifacts.footer_stats(path).span("level")[1]
     if ml is None:  # zero-row corpus: no tiles, no range
-        return spark.createDataFrame(
-            [],
-            "b_min long, b_max long, n_events long, total_value double, "
-            "min_block long, max_block long, range_digest long",
-        )
-    max_level, max_block = int(ml), int(mb)
-    if b_min is None:
-        b_min = max_block // 5
-    if b_max is None:
-        b_max = max_block * 4 // 5
-    b_min, b_max = int(b_min), int(b_max)
-    cover, edges = tile_cover(b_min, b_max, max_level)
+        return spark.createDataFrame([], _AGG_DDL.format(t="long"))
+    b_min, b_max = _probe_range(spark, sf_dir, b_min, b_max)
+    cover, edges = tile_cover(b_min, b_max, int(ml))
     if not cover and not edges:  # degenerate range (≤ 4 blocks total)
-        return spark.createDataFrame(
-            [],
-            "b_min long, b_max long, n_events long, total_value double, "
-            "min_block long, max_block long, range_digest long",
-        )
+        return spark.createDataFrame([], _AGG_DDL.format(t="long"))
 
     parts = []
     if cover:
-        by_level: dict[int, list[int]] = {}
-        for k, c in cover:
-            by_level.setdefault(k, []).append(c)
-        cond = reduce(
-            lambda a, b: a | b,
-            [
-                (F.col("level") == k) & F.col("cell").isin(cells)
-                for k, cells in by_level.items()
-            ],
-        )
-        parts.append(
-            tiles.filter(cond).select(
-                "n_events", "sum_value", "min_block", "max_block", "digest"
-            )
-        )
+        for r in artifacts.read_rows(
+            path, _cover_filter(cover),
+            ["n_events", "sum_value", "min_block", "max_block", "digest"],
+        ):
+            sv = r["sum_value"]
+            r["sum_value"] = None if sv is None else int(sv.scaleb(6))
+            parts.append(r)
     if edges:
-        ev = load_events(spark, sf_dir).select("event_id", "user_id", "value")
-        econd = reduce(
-            lambda a, b: a | b,
-            [
-                (F.col("event_id") >= lo) & (F.col("event_id") < hi)
-                for lo, hi in edges
-            ],
+        ev = artifacts.read_rows(
+            f"{sf_dir}/events.parquet", _edge_filter(edges),
+            ["event_id", "user_id", "value"],
         )
-        term = digest_term(
-            F.col("event_id").cast("long"), F.col("user_id").cast("long")
-        )
-        parts.append(
-            ev.filter(econd).agg(
-                F.count("*").alias("n_events"),
-                F.sum(F.col("value").cast("decimal(18,6)"))
-                .cast("decimal(28,6)")
-                .alias("sum_value"),
-                F.min("event_id").alias("min_block"),
-                F.max("event_id").alias("max_block"),
-                digest_agg(term).alias("digest"),
+        terms = [
+            (r["event_id"] * MIX + r["user_id"] * 97) % DIGEST_PRIME
+            for r in ev
+            if r["event_id"] is not None and r["user_id"] is not None
+        ]
+        dg = _sql_agg(sum, terms)
+        parts.append({
+            "n_events": len(ev),  # count(*): every edge row
+            "sum_value": _sql_agg(sum, (_micros(r["value"]) for r in ev)),
+            "min_block": _sql_agg(min, (r["event_id"] for r in ev)),
+            "max_block": _sql_agg(max, (r["event_id"] for r in ev)),
+            "digest": None if dg is None else dg % DIGEST_PRIME,
+        })
+    total = _sql_agg(sum, (p["sum_value"] for p in parts))
+    digest = _sql_agg(sum, (p["digest"] for p in parts))
+    row = (
+        b_min,
+        b_max,
+        _sql_agg(sum, (p["n_events"] for p in parts)),
+        None if total is None else float(
+            Decimal(total).scaleb(-6).quantize(
+                Decimal("0.01"), rounding=ROUND_HALF_UP
             )
-        )
-    partials = parts[0]
-    for p in parts[1:]:
-        partials = partials.unionByName(p)
-    return partials.agg(
-        F.sum("n_events").cast("long").alias("n_events"),
-        F.round(F.sum("sum_value"), 2).cast("double").alias("total_value"),
-        F.min("min_block").alias("min_block"),
-        F.max("max_block").alias("max_block"),
-        F.pmod(F.sum("digest"), F.lit(DIGEST_PRIME))
-        .cast("long")
-        .alias("range_digest"),
-    ).select(
-        F.lit(b_min).alias("b_min"),
-        F.lit(b_max).alias("b_max"),
-        "n_events",
-        "total_value",
-        "min_block",
-        "max_block",
-        "range_digest",
+        ),
+        _sql_agg(min, (p["min_block"] for p in parts)),
+        _sql_agg(max, (p["max_block"] for p in parts)),
+        None if digest is None else digest % DIGEST_PRIME,
     )
+    # the bounds keep the type F.lit gave them: int when they fit
+    t = "int" if all(-(2**31) <= v < 2**31 for v in (b_min, b_max)) else "long"
+    return local_frame(spark, [row], _AGG_DDL.format(t=t))
 
 
 # --- Query2 over the tile tree: the distinct-key SET monoid ------------------
@@ -412,19 +476,16 @@ def _q2_key_fp(sf_dir: str, contract: "str | None") -> str:
 def _served_max_block(spark: SparkSession, sf_dir: str) -> int:
     """The corpus's max block from the served scalar tile tree's parquet
     FOOTER — the default-range probe every pinned face derives, without
-    a data scan (serve first so the artifact exists)."""
-    from euclid_spark import artifacts
-
-    serve_range_tree(spark, sf_dir)
-    mb = artifacts.stat_min_max(
-        "range_tree_tiles", _range_tree_fp(sf_dir), "max_block"
+    a data scan (ensured first so the artifact exists)."""
+    mb = artifacts.footer_stats(range_tree_path(spark, sf_dir)).span(
+        "max_block"
     )[1]
     return int(mb or 0)
 
 
-def serve_q2_key_tree(
-    spark: SparkSession, sf_dir: str, contract: "str | None" = None
-) -> DataFrame:
+def _q2_key_spec(
+    spark: SparkSession, sf_dir: str, contract: "str | None"
+) -> tuple:
     """The key tree served OWNER-CLUSTERED: range-partitioned and
     sorted by (owner, level, cell) before the write, so parquet
     row-group min/max stats on `owner` let a single-owner revelation
@@ -432,9 +493,6 @@ def serve_q2_key_tree(
     costs O(log range) rows from an owner-pruned slice of the artifact,
     not a scan of every owner's tiles (the layout story D18/D26 tell
     for the block dimension, applied to the query's OTHER key)."""
-    from euclid_spark import artifacts
-
-    fp = _q2_key_fp(sf_dir, contract)
 
     def build() -> DataFrame:
         t = build_q2_key_tree(spark, sf_dir, contract)
@@ -446,22 +504,28 @@ def serve_q2_key_tree(
     # (level, cell) stats prune the cover predicate to O(cover) row
     # groups — the all-owner pinned face stopped scanning the whole
     # artifact (0.69→0.25 s at 100× events)
-    return artifacts.serve_frame(
-        spark, "q2_key_tiles", fp, build, options=artifacts.FINE_ROW_GROUPS
+    return (
+        "q2_key_tiles", _q2_key_fp(sf_dir, contract), build,
+        artifacts.FINE_ROW_GROUPS,
     )
 
 
-def serve_q2_entry_store(
+def serve_q2_key_tree(
     spark: SparkSession, sf_dir: str, contract: "str | None" = None
 ) -> DataFrame:
+    """The owner-clustered key-tile tree as a Spark scan."""
+    return artifacts.serve_frame(spark, *_q2_key_spec(spark, sf_dir, contract))
+
+
+def _q2_entry_spec(
+    spark: SparkSession, sf_dir: str, contract: "str | None"
+) -> tuple:
     """The contract's qualifying entries (event_id, owner, token_id)
     BLOCK-CLUSTERED — the Q2 sibling of the ERC-20 all-entry leaf
     store: A26's two < TILE_SIZE edge scans push their event_id window
     to pruned parquet row groups instead of re-scanning (and re-JSON-
     parsing) the raw events table, which grows with the corpus
     (measured 4.4→0.28 s at 100× events)."""
-    from euclid_spark import artifacts
-    from euclid_spark.catalog import load_events
     from euclid_spark.operators.euclid import CONTRACT
 
     fp = artifacts.corpus_fingerprint(
@@ -477,13 +541,70 @@ def serve_q2_entry_store(
             .sortWithinPartitions("event_id")
         )
 
+    return "q2_entry_store", fp, build, artifacts.FINE_ROW_GROUPS
+
+
+def q2_entry_store_path(
+    spark: SparkSession, sf_dir: str, contract: "str | None" = None
+) -> str:
+    """The block-clustered Q2 entry store's artifact path."""
+    return artifacts.ensure(*_q2_entry_spec(spark, sf_dir, contract))
+
+
+def serve_q2_entry_store(
+    spark: SparkSession, sf_dir: str, contract: "str | None" = None
+) -> DataFrame:
+    """The block-clustered Q2 entry store as a Spark scan."""
     return artifacts.serve_frame(
-        spark, "q2_entry_store", fp, build,
-        options=artifacts.FINE_ROW_GROUPS,
+        spark, *_q2_entry_spec(spark, sf_dir, contract)
     )
 
 
 _Q2_EMPTY = "owner long, pos int, token_id long, b_min long, b_max long"
+
+
+def _q2_owner_keys(
+    spark: SparkSession,
+    sf_dir: str,
+    owner: int,
+    b_min: int,
+    b_max: int,
+    L: int,
+    contract: "str | None",
+) -> "list[dict]":
+    """One owner's first-L distinct keys over [b_min, b_max), folded on
+    the driver: each as {t, cell, p}, (cell, p) its first covered
+    occurrence or the edge sentinel. Reads the owner's ≤ 2-per-level
+    cover tiles and its entries in the two edge windows, and merges
+    them as the Spark face does: sort (t, cell, p), keep the first
+    entry per t, truncate to L."""
+    path = artifacts.ensure(*_q2_key_spec(spark, sf_dir, contract))
+    ml = artifacts.footer_stats(path).span("level")[1]  # after the ensure
+    if ml is None:  # no qualifying entries anywhere
+        return []
+    cover, edges = tile_cover(b_min, b_max, int(ml))
+    keys: "list[dict]" = []
+    own = ("owner", "=", owner)
+    if cover:
+        for r in artifacts.read_rows(
+            path, _cover_filter(cover, own), ["keys"]
+        ):
+            keys.extend(r["keys"])
+    if edges:
+        toks = {
+            r["token_id"]
+            for r in artifacts.read_rows(
+                q2_entry_store_path(spark, sf_dir, contract),
+                _edge_filter(edges, own), ["token_id"],
+            )
+        }
+        keys.extend(
+            {"t": t, "cell": _EDGE_SENTINEL_CELL, "p": 2**31 - 1}
+            for t in sorted(toks)[:Q2_L]
+        )
+    keys.sort(key=lambda k: (k["t"], k["cell"], k["p"]))
+    first = [k for i, k in enumerate(keys) if i == 0 or keys[i - 1]["t"] != k["t"]]
+    return first[:L]
 
 
 def q2_range_tree_topl(
@@ -499,81 +620,66 @@ def q2_range_tree_topl(
     """A26 — Query2 answered from the tile tree in O(log range): per-owner
     first-L distinct mapping keys over [b_min, b_max), read from the
     canonical cover (≤ 2 tiles/level) plus two < TILE_SIZE edge scans
-    pushed to the events scan. The public parameterized surface —
-    (owner, b_min, b_max, L, contract) — with the pinned gate face as
-    one instantiation (owner=None → all owners; bounds default to the
-    ⅕/⅘ probe range). L must be ≤ the tree's baked reveal bound Q2_L,
-    exactly as the circuit's L is fixed at setup; each contract serves
-    its own key-tile tree (one storage DB per contract).
+    of the block-clustered entry store. The public parameterized
+    surface — (owner, b_min, b_max, L, contract) — with the pinned gate
+    face as one instantiation (owner=None → all owners; bounds default
+    to the ⅕/⅘ probe range). L must be ≤ the tree's baked reveal bound
+    Q2_L, exactly as the circuit's L is fixed at setup; each contract
+    serves its own key-tile tree (one storage DB per contract).
+
+    Read shape: with an `owner`, the answer is folded on the driver
+    (_q2_owner_keys: `artifacts.read_rows` of the owner's cover tiles
+    and edge entries) and returned as one local frame — no Spark job
+    until it is acted on. With owner=None the output grows with the
+    number of owners, so it stays a Spark plan: the cover filter over
+    the served tiles and the edge-window filter over the entry store,
+    unioned and merged per owner.
 
     `with_first=True` appends each key's first COVERED occurrence
     (first_cell, first_pos) from the tile structs — first_cell =
     _EDGE_SENTINEL_CELL marks a key seen only in the edge slices. The
-    A30 response consumes this to open revealed rows without its own
-    leaf-store fetch."""
+    A30 response consumes the same fold to open revealed rows without
+    its own leaf-store fetch."""
     L = Q2_L if L is None else int(L)
     if L > Q2_L:
         raise ValueError(
             f"L={L} exceeds the tile tree's baked reveal bound {Q2_L}; "
             "rebuild the tree with a larger Q2_L (the circuit-setup analog)"
         )
-    from euclid_spark import artifacts
-
-    tiles = serve_q2_key_tree(spark, sf_dir, contract)
-    # served metadata from the parquet footer — an agg(max) here would
-    # scan every tile row and grow with the corpus (measured: the 100×
-    # probe's residual slope was exactly this fetch)
-    ml = artifacts.stat_min_max(
-        "q2_key_tiles", _q2_key_fp(sf_dir, contract), "level"
-    )[1]
+    ddl = _Q2_EMPTY + (", first_cell long, first_pos int" if with_first else "")
+    if owner is not None:
+        owner = int(owner)
+        b_min, b_max = _probe_range(spark, sf_dir, b_min, b_max)
+        keys = _q2_owner_keys(spark, sf_dir, owner, b_min, b_max, L, contract)
+        return local_frame(
+            spark,
+            [
+                (owner, i + 1, k["t"], b_min, b_max)
+                + ((k["cell"], k["p"]) if with_first else ())
+                for i, k in enumerate(keys)
+            ],
+            ddl,
+        )
+    path = artifacts.ensure(*_q2_key_spec(spark, sf_dir, contract))
+    # served metadata from the parquet footer, read after the ensure —
+    # an agg(max) here would scan every tile row and grow with the
+    # corpus (measured: the 100× probe's residual slope was this fetch)
+    ml = artifacts.footer_stats(path).span("level")[1]
     if ml is None:  # no qualifying entries anywhere
-        return spark.createDataFrame(
-            [],
-            _Q2_EMPTY
-            + (", first_cell long, first_pos int" if with_first else ""),
-        )
-    max_level = int(ml)
-    if b_min is None or b_max is None:
-        mb = _served_max_block(spark, sf_dir)
-        b_min = mb // 5 if b_min is None else int(b_min)
-        b_max = mb * 4 // 5 if b_max is None else int(b_max)
-    else:
-        b_min, b_max = int(b_min), int(b_max)
-    cover, edges = tile_cover(b_min, b_max, max_level)
+        return spark.createDataFrame([], ddl)
+    b_min, b_max = _probe_range(spark, sf_dir, b_min, b_max)
+    cover, edges = tile_cover(b_min, b_max, int(ml))
     if not cover and not edges:
-        return spark.createDataFrame(
-            [],
-            _Q2_EMPTY
-            + (", first_cell long, first_pos int" if with_first else ""),
-        )
+        return spark.createDataFrame([], ddl)
 
+    tiles = cached_parquet(spark, path)
     parts = []
     if cover:
-        by_level: dict[int, list[int]] = {}
-        for k, c in cover:
-            by_level.setdefault(k, []).append(c)
-        cond = reduce(
-            lambda a, b: a | b,
-            [
-                (F.col("level") == k) & F.col("cell").isin(cells)
-                for k, cells in by_level.items()
-            ],
-        )
-        t = tiles.filter(cond)
-        if owner is not None:
-            t = t.filter(F.col("owner") == owner)
-        parts.append(t.select("owner", "keys"))
+        cond = _cover_cond(cover)
+        parts.append(tiles.filter(cond).select("owner", "keys"))
     if edges:
-        econd = reduce(
-            lambda a, b: a | b,
-            [
-                (F.col("event_id") >= lo) & (F.col("event_id") < hi)
-                for lo, hi in edges
-            ],
-        )
+        econd = _edge_cond(edges)
         e = serve_q2_entry_store(spark, sf_dir, contract).filter(econd)
-        if owner is not None:
-            e = e.filter(F.col("owner") == owner)
         parts.append(
             e.groupBy("owner")
             .agg(
@@ -629,18 +735,17 @@ def q2_range_tree_topl(
 # event_id pushdown and fold them in column expressions).
 
 
-def serve_erc20_all_entry_leaves(
+def _erc20_leaves_spec(
     spark: SparkSession,
     sf_dir: str,
-    rewards_rate: "int | None" = None,
-    contract: "str | None" = None,
-) -> DataFrame:
+    rewards_rate: "int | None",
+    contract: "str | None",
+) -> tuple:
     """Per-entry leaf-circuit rewards over ALL of one contract's entries
     (the un-range-restricted sibling of merkle.erc20_entry_leaves — the
     block dimension is the QUERY parameter here), BLOCK-CLUSTERED at
     write so edge scans push their event_id range to the parquet
     row groups."""
-    from euclid_spark import artifacts
     from euclid_spark.operators.euclid import (
         CONTRACT,
         REWARDS_RATE,
@@ -670,9 +775,31 @@ def serve_erc20_all_entry_leaves(
             .sortWithinPartitions("event_id")
         )
 
+    # fine row groups: edge-window pruning
+    return "erc20_all_entry_leaves", fp, build, artifacts.FINE_ROW_GROUPS
+
+
+def erc20_all_entry_leaves_path(
+    spark: SparkSession,
+    sf_dir: str,
+    rewards_rate: "int | None" = None,
+    contract: "str | None" = None,
+) -> str:
+    """The block-clustered ERC-20 entry-leaf store's artifact path."""
+    return artifacts.ensure(
+        *_erc20_leaves_spec(spark, sf_dir, rewards_rate, contract)
+    )
+
+
+def serve_erc20_all_entry_leaves(
+    spark: SparkSession,
+    sf_dir: str,
+    rewards_rate: "int | None" = None,
+    contract: "str | None" = None,
+) -> DataFrame:
+    """The block-clustered ERC-20 entry-leaf store as a Spark scan."""
     return artifacts.serve_frame(
-        spark, "erc20_all_entry_leaves", fp, build,
-        options=artifacts.FINE_ROW_GROUPS,  # edge-window pruning
+        spark, *_erc20_leaves_spec(spark, sf_dir, rewards_rate, contract)
     )
 
 
@@ -744,23 +871,32 @@ def _erc20_tree_fp(
     )
 
 
+def _erc20_tree_spec(
+    spark: SparkSession,
+    sf_dir: str,
+    rewards_rate: "int | None",
+    contract: "str | None",
+) -> tuple:
+    """The per-owner reward tile tree, owner-clustered with fine row
+    groups so a cover predicate prunes to O(cover) row groups."""
+    return (
+        "erc20_reward_tiles",
+        _erc20_tree_fp(sf_dir, rewards_rate, contract),
+        lambda: build_erc20_reward_tree(spark, sf_dir, rewards_rate, contract)
+        .repartitionByRange(8, "owner")
+        .sortWithinPartitions("owner", "level", "cell"),
+        artifacts.FINE_ROW_GROUPS,
+    )
+
+
 def serve_erc20_reward_tree(
     spark: SparkSession,
     sf_dir: str,
     rewards_rate: "int | None" = None,
     contract: "str | None" = None,
 ) -> DataFrame:
-    from euclid_spark import artifacts
-
-    fp = _erc20_tree_fp(sf_dir, rewards_rate, contract)
     return artifacts.serve_frame(
-        spark,
-        "erc20_reward_tiles",
-        fp,
-        lambda: build_erc20_reward_tree(spark, sf_dir, rewards_rate, contract)
-        .repartitionByRange(8, "owner")
-        .sortWithinPartitions("owner", "level", "cell"),
-        options=artifacts.FINE_ROW_GROUPS,  # cover-predicate pruning
+        spark, *_erc20_tree_spec(spark, sf_dir, rewards_rate, contract)
     )
 
 
@@ -768,6 +904,58 @@ _ERC20_EMPTY = (
     "owner long, reward_hex string, n_zero_supply long, n_overflow long, "
     "n_entries long, b_min long, b_max long"
 )
+_ERC20_SUMS = ("s0", "s1", "s2", "s3", "zs", "of", "n_entries")
+
+
+def _erc20_owner_total(
+    spark: SparkSession,
+    sf_dir: str,
+    tiles_path: str,
+    owner: int,
+    cover: "list[tuple[int, int]]",
+    edges: "list[tuple[int, int]]",
+    rewards_rate: "int | None",
+    contract: "str | None",
+) -> "tuple | None":
+    """One owner's reward row over the cover + edges, folded on the
+    driver — (reward_hex, n_zero_supply, n_overflow, n_entries), or
+    None when the owner has no entry in range. Reads the owner's
+    ≤ 2-per-level cover tiles and its entry leaves in the two edge
+    windows; the limb sums follow SQL's null rules and the u256 result
+    is Σ sᵢ·2^(64i) mod 2²⁵⁶ as 64 hex digits (u256_carry_hex)."""
+    own = ("owner", "=", owner)
+    parts = (
+        artifacts.read_rows(
+            tiles_path, _cover_filter(cover, own), list(_ERC20_SUMS)
+        )
+        if cover
+        else []
+    )
+    if edges:
+        leaves = artifacts.read_rows(
+            erc20_all_entry_leaves_path(spark, sf_dir, rewards_rate, contract),
+            _edge_filter(edges, own),
+            ["l0", "l1", "l2", "l3", "zs", "of"],
+        )
+        if leaves:  # the Spark face's per-owner edge group
+            part = {
+                f"s{i}": _sql_agg(sum, (r[f"l{i}"] for r in leaves))
+                for i in range(4)
+            }
+            part["zs"] = _sql_agg(sum, (r["zs"] for r in leaves))
+            part["of"] = _sql_agg(sum, (r["of"] for r in leaves))
+            part["n_entries"] = len(leaves)
+            parts.append(part)
+    if not parts:
+        return None
+    tot = {c: _sql_agg(sum, (p[c] for p in parts)) for c in _ERC20_SUMS}
+    limbs = [tot[f"s{i}"] for i in range(4)]
+    reward = (
+        None
+        if any(v is None for v in limbs)
+        else "%064x" % (sum(int(v) << (64 * i) for i, v in enumerate(limbs)) % 2**256)
+    )
+    return reward, tot["zs"], tot["of"], tot["n_entries"]
 
 
 def erc20_range_tree_reward(
@@ -786,64 +974,50 @@ def erc20_range_tree_reward(
     this makes BOTH reference query families answerable from tiles
     over any range. Parameterized (owner, b_min, b_max, rewards_rate);
     the pinned face is all owners over the ⅕..⅘ probe range; each
-    contract serves its own reward tile tree."""
+    contract serves its own reward tile tree.
+
+    Read shape: with an `owner`, the row is folded on the driver
+    (_erc20_owner_total) and returned as one local frame — no Spark
+    job until it is acted on. With owner=None the output grows with
+    the number of owners, so it stays a Spark plan: the cover filter
+    over the served tiles and a per-owner limb sum of the edge-window
+    leaves, unioned and carried to hex per owner."""
     from euclid_spark.functions.u256 import u256_carry_hex
 
-    from euclid_spark import artifacts
-
-    tiles = serve_erc20_reward_tree(spark, sf_dir, rewards_rate, contract)
-    # footer-stats metadata fetch — see q2_range_tree_topl's note
-    ml = artifacts.stat_min_max(
-        "erc20_reward_tiles",
-        _erc20_tree_fp(sf_dir, rewards_rate, contract),
-        "level",
-    )[1]
+    path = artifacts.ensure(
+        *_erc20_tree_spec(spark, sf_dir, rewards_rate, contract)
+    )
+    # footer-stats metadata fetch, after the ensure — see
+    # q2_range_tree_topl's note
+    ml = artifacts.footer_stats(path).span("level")[1]
     if ml is None:
         return spark.createDataFrame([], _ERC20_EMPTY)
-    max_level = int(ml)
-    if b_min is None or b_max is None:
-        mb = _served_max_block(spark, sf_dir)
-        b_min = mb // 5 if b_min is None else int(b_min)
-        b_max = mb * 4 // 5 if b_max is None else int(b_max)
-    else:
-        b_min, b_max = int(b_min), int(b_max)
-    cover, edges = tile_cover(b_min, b_max, max_level)
+    b_min, b_max = _probe_range(spark, sf_dir, b_min, b_max)
+    cover, edges = tile_cover(b_min, b_max, int(ml))
     if not cover and not edges:
         return spark.createDataFrame([], _ERC20_EMPTY)
+    if owner is not None:
+        owner = int(owner)
+        tot = _erc20_owner_total(
+            spark, sf_dir, path, owner, cover, edges, rewards_rate, contract
+        )
+        rows = [] if tot is None else [(owner, *tot, b_min, b_max)]
+        return local_frame(spark, rows, _ERC20_EMPTY)
 
+    tiles = cached_parquet(spark, path)
     parts = []
     if cover:
-        by_level: dict[int, list[int]] = {}
-        for k, c in cover:
-            by_level.setdefault(k, []).append(c)
-        cond = reduce(
-            lambda a, b: a | b,
-            [
-                (F.col("level") == k) & F.col("cell").isin(cells)
-                for k, cells in by_level.items()
-            ],
-        )
-        t = tiles.filter(cond)
-        if owner is not None:
-            t = t.filter(F.col("owner") == owner)
+        cond = _cover_cond(cover)
         parts.append(
-            t.select(
+            tiles.filter(cond).select(
                 "owner", "s0", "s1", "s2", "s3", "zs", "of", "n_entries"
             )
         )
     if edges:
-        econd = reduce(
-            lambda a, b: a | b,
-            [
-                (F.col("event_id") >= lo) & (F.col("event_id") < hi)
-                for lo, hi in edges
-            ],
-        )
+        econd = _edge_cond(edges)
         e = serve_erc20_all_entry_leaves(
             spark, sf_dir, rewards_rate, contract
         ).filter(econd)
-        if owner is not None:
-            e = e.filter(F.col("owner") == owner)
         parts.append(
             _erc20_tile_agg(e, ["owner"]).select(
                 "owner", "s0", "s1", "s2", "s3", "zs", "of", "n_entries"
@@ -876,8 +1050,6 @@ QUERIES = {
     "euclid_q2_range_tree_topL": q2_range_tree_topl,
     "euclid_erc20_range_tree_reward": erc20_range_tree_reward,
 }
-
-from euclid_spark.functions.hashing import MIX  # noqa: E402
 
 ORACLES = {
     # full recompute over the same range — the gate proves the tile

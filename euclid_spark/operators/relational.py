@@ -1545,15 +1545,12 @@ def _spec_from_spark_schema(schema) -> "list[tuple[str, str, str]]":
 
 
 def _spec_from_parquet(path: str) -> "list[tuple[str, str, str]]":
-    import pyarrow.parquet as pq
     import pyarrow.types as pt
 
-    from euclid_spark.artifacts import data_files
+    from euclid_spark.artifacts import footer_stats
 
-    # Spark-written corpus: one part's footer carries the schema
-    path = data_files(path)[0]
     fields = []
-    for f in pq.ParquetFile(path).schema_arrow:
+    for f in footer_stats(path).schema:
         t = f.type
         if pt.is_integer(t):
             n = "int"

@@ -11,6 +11,7 @@ time so results are timezone-stable against external oracles.
 from __future__ import annotations
 
 import os
+import re
 from contextlib import contextmanager
 from typing import Iterator, Mapping
 
@@ -41,8 +42,24 @@ def scoped_confs(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None
                 spark.conf.set(k, old)
 
 
+def _knob(name: str, default: str, pattern: str, what: str) -> str:
+    """A deploy knob from the environment, checked before the JVM sees
+    it: a typo fails here, naming the knob, instead of surfacing as a
+    Spark master-URL or JVM-launch error."""
+    value = os.environ.get(name, default)
+    if not re.fullmatch(pattern, value):
+        raise ValueError(f"{name}={value!r} is not {what}")
+    return value
+
+
 def get_session(app_name: str = "euclid_spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _knob(
+        "SPARK_GRAFT_CPUS", "32", r"[1-9][0-9]*", "a positive integer"
+    )
+    driver_mem = _knob(
+        "EUCLID_SPARK_DRIVER_MEM", "16g", r"[1-9][0-9]*(?i:[kmgt]b?)?",
+        "a JVM memory size such as 4g or 512m",
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -53,7 +70,7 @@ def get_session(app_name: str = "euclid_spark") -> SparkSession:
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("EUCLID_SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         # a long-lived session compiles hundreds of whole-stage codegen
         # classes (the full-registry sweep runs 120+ queries in one JVM);
         # the JVM default 240 MB code cache fills, JIT compilation stops,

@@ -675,7 +675,7 @@ def _erc20_tiles_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
 
 def _rr_cell_leaves_partial(events: DataFrame) -> DataFrame:
     """The arbitrary-range RESPONSE COMMITMENT's level-0 structure
-    (range_response.serve_range_commitments — the per-(owner, cell)
+    (range_response.range_commitment_paths — the per-(owner, cell)
     in-cell Merkle leaf sets responses open into) as a streaming
     monoid: the ERC-20 leaf circuit runs per batch, leaves key on
     (chunk, owner, cell) as SORTED SETS of (event_id, leaf_hash).

@@ -323,23 +323,95 @@ def test_cms_sketch_is_bounded_broadcast(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_range_tree_reads_tiles_not_range(spark, tmp_path, monkeypatch):
-    """A25: both scans carry pushed filters (the tile (level, cell)
-    cover and the sub-tile edge ranges), and the only SinglePartition
-    exchanges are the two bounded final folds — the plan must never
-    scan the range interior."""
-    from euclid_spark.operators import range_tree
+def _newest_job_id(spark) -> int:
+    """Id of the newest job in Spark's status store (-1 when none), read
+    after the listener bus drains — the perfbench tracer's job count."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    cls = sc._jvm.java.lang.Class.forName("org.apache.spark.status.JobDataWrapper")
+    it = jsc.statusStore().store().view(cls).reverse().closeableIterator()
+    try:
+        return it.next().info().jobId() if it.hasNext() else -1
+    finally:
+        it.close()
 
-    monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path / "_arts"))
-    plan = _plan(range_tree.range_tree_agg(spark, SF_SMOKE))
-    pushed = [
-        seg[:300] for seg in plan.split("PushedFilters: [")[1:]
-    ]
-    assert any("level" in s and "cell" in s for s in pushed), \
-        "tile cover not pushed to the tiles scan"
-    assert any("event_id" in s for s in pushed), \
-        "edge ranges not pushed to the events scan"
-    assert plan.count("Exchange SinglePartition") <= 2
+
+def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
+    """A25 and the owner-scoped A26/A29/A30/A31 requests over a wide
+    range at sf0.01: every artifact read goes through
+    artifacts.read_rows, tile-tree reads return ≤ 2 rows per (owner,
+    level) (the response's cell-tree reads, which also fetch the
+    opening-path siblings of ≤ L revealed rows, ≤ L per level), every
+    edge read returns only rows inside the two < TILE_SIZE edge
+    windows, and no Spark job runs before the returned frame is acted
+    on — nothing reads the range interior."""
+    from collections import Counter
+
+    from euclid_spark import artifacts
+    from euclid_spark.operators import range_response, range_tree
+    from euclid_spark.operators.euclid import TOP_L
+    from tests.conftest import SF_ORACLE
+
+    mb = artifacts.footer_stats(f"{SF_ORACLE}/events.parquet").span("event_id")[1]
+    b_min, b_max = 37, mb - 41
+    owner = 7
+    calls = {
+        "range_tree_agg": lambda: range_tree.range_tree_agg(
+            spark, SF_ORACLE, b_min=b_min, b_max=b_max),
+        "q2_range_tree_topl": lambda: range_tree.q2_range_tree_topl(
+            spark, SF_ORACLE, owner=owner, b_min=b_min, b_max=b_max),
+        "erc20_range_tree_reward": lambda: range_tree.erc20_range_tree_reward(
+            spark, SF_ORACLE, owner=owner, b_min=b_min, b_max=b_max),
+        "q2_range_response": lambda: range_response.q2_range_response(
+            spark, SF_ORACLE, owner=owner, b_min=b_min, b_max=b_max),
+        "erc20_range_response": lambda: range_response.erc20_range_response(
+            spark, SF_ORACLE, owner=owner, b_min=b_min, b_max=b_max),
+    }
+    for call in calls.values():  # build every served artifact first
+        assert call().count() > 0
+
+    reads = []
+    orig = artifacts.read_rows
+
+    def spy(path, filter=None, columns=None):
+        reads.append((path, filter, orig(path, filter, None)))
+        return orig(path, filter, columns)
+
+    monkeypatch.setattr(artifacts, "read_rows", spy)
+    edges = range_tree.tile_cover(b_min, b_max, 30)[1]
+    assert len(edges) == 2  # both ends are partial cells
+    tile_trees = ("range_tree_tiles_", "q2_key_tiles_", "erc20_reward_tiles_")
+    edge_stores = ("events.parquet", "q2_entry_store_", "erc20_all_entry_leaves_",
+                   "rr_erc20_leaves_")
+    for name, call in calls.items():
+        reads.clear()
+        before = _newest_job_id(spark)
+        df = call()
+        assert _newest_job_id(spark) == before, f"{name} ran a Spark job"
+        assert reads, f"{name} read nothing through artifacts.read_rows"
+        for path, flt, rows in reads:
+            base = path.rstrip("/").rsplit("/", 1)[-1]
+            if base.startswith(tile_trees) or "_celltree_" in base:
+                per_level = Counter((r.get("owner"), r["level"]) for r in rows)
+                cap = 2 if base.startswith(tile_trees) else max(2, TOP_L)
+                assert max(per_level.values(), default=0) <= cap, (name, base)
+            windows = [
+                tuple(v for c, op, v in conj if c == "event_id")
+                for conj in flt or []
+            ]
+            if base.startswith(edge_stores) and any(windows):
+                if windows == [(b_min, b_max)]:
+                    # the ERC-20 revealed rows: the owner's rows in range
+                    assert all(r["owner"] == owner for r in rows), name
+                    continue
+                assert sorted(windows) == sorted(edges), (name, base, windows)
+                assert all(
+                    any(lo <= r["event_id"] < hi for lo, hi in edges)
+                    for r in rows
+                ), (name, base)
+        assert df.count() > 0
+        assert _newest_job_id(spark) > before  # the action is the first job
 
 
 def test_erc20_responses_served_plans_have_no_arrow(spark, tmp_path, monkeypatch):

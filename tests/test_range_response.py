@@ -236,3 +236,24 @@ def test_tamper_flips_verdict(spark, mutation, broken):
         ),
     ).collect()
     assert any(not r[broken] for r in checked), (broken, checked)
+
+
+@pytest.mark.parametrize(
+    "family",
+    ["range_tree_agg", "q2_range_tree_topl", "erc20_range_tree_reward",
+     "q2_range_response", "erc20_range_response"],
+)
+def test_cold_store_first_call_equals_second(spark, tmp_path, monkeypatch, family):
+    """Each query-phase family, called FIRST into an empty artifact
+    root, builds what it reads before it reads any footer: its answer
+    equals the second (warm) call's."""
+    from euclid_spark.operators import range_response, range_tree
+
+    fn = getattr(range_tree, family, None) or getattr(range_response, family)
+    kw = {"b_min": 120, "b_max": 900}
+    if family != "range_tree_agg":
+        kw["owner"] = 7
+    monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path / "_arts"))
+    cold = sorted(tuple(r) for r in fn(spark, SF_SMOKE, **kw).collect())
+    warm = sorted(tuple(r) for r in fn(spark, SF_SMOKE, **kw).collect())
+    assert cold and cold == warm

@@ -408,3 +408,89 @@ def test_q2_tile_first_occurrence_matches_leaf_scan(spark):
             assert direct[key] == (int(r.first_cell), int(r.first_pos)), key
             n_cov += 1
     assert n_cov > 0  # the property must actually have been exercised
+
+
+# --- owner-scoped driver answers vs the Spark faces ---------------------------
+
+
+def test_owner_driver_answers_equal_spark_faces(spark):
+    """Seeded owners × widths {200, 5000, 60000} at sf0.01: the driver
+    fold an owner-scoped request takes equals the all-owner Spark face
+    over the same range filtered to that owner (q2 with and without
+    first occurrences, ERC-20 reward), column types included;
+    range_tree_agg
+    equals a full Spark recompute over the same range."""
+    import random
+
+    from euclid_spark.functions.hashing import DIGEST_PRIME, MIX
+    from euclid_spark.operators.range_tree import (
+        erc20_range_tree_reward,
+        q2_range_tree_topl,
+    )
+    from tests.conftest import SF_ORACLE
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    ev = load_events(spark, SF_ORACLE)
+    buyers = (
+        ev.filter(
+            (F.col("event_type") == "purchase") & F.col("value").isNotNull()
+            & F.get_json_object("props", "$.k").isNotNull()
+        )
+        .select("event_id", "user_id")
+        .collect()
+    )
+    rng = random.Random(20)
+    for width in (200, 5000, 60000):
+        for _ in range(2):
+            b_min = rng.randrange(0, 9000)
+            b_max = b_min + width
+            owners = sorted(
+                {r["user_id"] for r in buyers if b_min <= r["event_id"] < b_max}
+            )
+            owner = rng.choice(owners)
+            rng_kw = {"b_min": b_min, "b_max": b_max}
+            for with_first in (False, True):
+                face = q2_range_tree_topl(
+                    spark, SF_ORACLE, with_first=with_first, **rng_kw
+                )
+                got = q2_range_tree_topl(
+                    spark, SF_ORACLE, owner=owner, with_first=with_first,
+                    **rng_kw,
+                )
+                assert got.schema.simpleString() == face.schema.simpleString()
+                want = rows(face.filter(F.col("owner") == owner))
+                assert want and rows(got) == want, (owner, b_min, b_max)
+            face = erc20_range_tree_reward(spark, SF_ORACLE, **rng_kw)
+            got = erc20_range_tree_reward(spark, SF_ORACLE, owner=owner, **rng_kw)
+            assert got.schema.simpleString() == face.schema.simpleString()
+            want = rows(face.filter(F.col("owner") == owner))
+            assert want and rows(got) == want, (owner, b_min, b_max)
+
+            agg = range_tree_agg(spark, SF_ORACLE, **rng_kw)
+            ref = (
+                ev.filter(
+                    (F.col("event_id") >= b_min) & (F.col("event_id") < b_max)
+                )
+                .agg(
+                    F.count("*").cast("long").alias("n_events"),
+                    F.round(F.sum(F.col("value").cast("decimal(18,6)")), 2)
+                    .cast("double").alias("total_value"),
+                    F.min("event_id").alias("min_block"),
+                    F.max("event_id").alias("max_block"),
+                    F.pmod(
+                        F.sum(
+                            (F.col("event_id") * MIX + F.col("user_id") * 97)
+                            % DIGEST_PRIME
+                        ),
+                        F.lit(DIGEST_PRIME),
+                    ).cast("long").alias("range_digest"),
+                )
+                .select(
+                    F.lit(b_min).alias("b_min"), F.lit(b_max).alias("b_max"),
+                    "*",
+                )
+            )
+            assert agg.schema.simpleString() == ref.schema.simpleString()
+            assert rows(agg) == rows(ref), (b_min, b_max)

@@ -40,13 +40,14 @@ def main() -> None:
         "SINGLE-OWNER response groups in euclid_verifiable_response / "
         "euclid_erc20_verifiable_response — one owner's token/entry set "
         "is one Merkle group by definition, bounded by per-owner "
-        "cardinality, never the corpus; and the final folds in "
-        "euclid_range_tree_agg — the whole point of the tile cover is "
-        "that what reaches them is ≤ 2·log(range) tile rows + two "
-        "sub-tile edge partials, never the range interior; the same "
-        "bound covers the merged-tile + one-row-audit folds of the "
-        "range-serving faces rel_hdr_range_quantiles / "
-        "rel_lc_range_distinct); "
+        "cardinality, never the corpus; and the merged-tile + "
+        "one-row-audit folds of the range-serving faces "
+        "rel_hdr_range_quantiles / rel_lc_range_distinct — what reaches "
+        "them is the tiles of the day range, never its events); "
+        "euclid_range_tree_agg has no fold in its plan at all: its "
+        "≤ 2·log(range) cover tiles and two sub-tile edge windows are "
+        "read and folded on the driver (artifacts.read_rows), so its "
+        "plan is one LocalTableScan of the answer row; "
         "`BroadcastNestedLoopJoin` appears only as the broadcast "
         "crossJoin of a ONE-ROW frame (scalar totals, epoch offsets) or "
         "the fixed query set (sim_*); since r7 there is NO "
