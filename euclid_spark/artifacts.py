@@ -18,7 +18,9 @@ Pattern here (generalizing the r4 IVF centroid store):
   nothing is ever overwritten in place.
 - writes go to a `.tmp.<pid>` directory then `os.rename` — atomic on a
   local filesystem, and the loser of a concurrent race just deletes its
-  temp and reads the winner's (identical, deterministic) artifact.
+  temp and reads the winner's artifact: the same ROWS, not necessarily
+  the same bytes (range-partitioned builds sample their partition
+  bounds, so file boundaries and row order within a file may differ).
 - `ensure` is the one build gate: the artifact's path, built → persisted
   on a miss. `serve_frame` is `load_frame` over it (the returned frame
   is always a plain parquet scan, so downstream plans reference a
@@ -118,7 +120,7 @@ def save_frame(
     suffix: str = ".parquet",
 ) -> str:
     """Write `df` as the artifact (atomic temp+rename; a lost race keeps
-    the winner's identical output). `partition_by` writes a Hive-style
+    the winner's output — the same rows, possibly different bytes). `partition_by` writes a Hive-style
     partitioned layout (the D18/D26/C55b shard precedent) under the
     same atomicity contract. Returns the artifact path."""
     path = _path(name, fp, suffix)
@@ -132,7 +134,7 @@ def save_frame(
     w.parquet(tmp)
     try:
         os.rename(tmp, path)
-    except OSError:  # concurrent builder won — deterministic, same bytes
+    except OSError:  # concurrent builder won — same rows, maybe not same bytes
         shutil.rmtree(tmp, ignore_errors=True)
     return path
 

@@ -71,18 +71,25 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from euclid_spark import artifacts
 from euclid_spark.catalog import cached_parquet, local_frame
+from euclid_spark.functions.u256 import u256_to_hex
 from euclid_spark.operators.range_tree import (
+    _EDGE_SENTINEL_CELL,
+    ERC20_REWARD_TREE,
+    Q2_KEY_TREE,
+    Q2_L,
     TILE_SIZE,
+    _cell,
     _cover_filter,
     _edge_filter,
     _probe_range,
-    q2_entry_store_path,
+    _q2_entries,
     tile_cover,
+    tree_depth,
 )
 
 # cell-tree path steps are labeled CELL_LVL_OFF + level so a combined
@@ -100,11 +107,15 @@ def _gk() -> F.Column:
     return F.concat_ws("|", F.col("owner"), F.col("cell"))
 
 
-def _fp(sf_dir: str, family: str, rate, contract) -> str:
+def _fp(sf_dir: str, family: str, rate, contract, layout=None) -> str:
+    """The response family's fingerprint; `layout` keys the commitment
+    stores' write layout (the published responses carry none)."""
     from euclid_spark.operators.euclid import CONTRACT, REWARDS_RATE
 
     params = {"op": f"range_response_{family}", "tile": TILE_SIZE,
               "contract": CONTRACT if contract is None else contract}
+    if layout is not None:
+        params["layout"] = layout
     if family == "erc20":
         params["rate"] = REWARDS_RATE if rate is None else int(rate)
     return artifacts.corpus_fingerprint(
@@ -112,21 +123,32 @@ def _fp(sf_dir: str, family: str, rate, contract) -> str:
     )
 
 
+def q2_leaf_hash(token_id: Column) -> Column:
+    """A20's Q2 leaf encoding: sha256(token_id)."""
+    return F.sha2(token_id.cast("string"), 256)
+
+
+def erc20_entry_hex() -> Column:
+    """An entry-leaf row's reward (limbs l3..l0) as 64 hex digits."""
+    return u256_to_hex((F.col("l3"), F.col("l2"), F.col("l1"), F.col("l0")))
+
+
+def erc20_leaf_hash(event_id: Column, entry_hex: Column) -> Column:
+    """A23's ERC-20 leaf encoding: sha256(event_id ':' entry_reward_hex)."""
+    return F.sha2(F.concat_ws(":", event_id.cast("string"), entry_hex), 256)
+
+
 def _q2_cell_leaf_rows(
     spark: SparkSession, sf_dir: str, contract: "str | None"
 ) -> DataFrame:
     """Level-0 leaves, Q2 family: per (owner, cell), the DISTINCT
     mapping keys in key order — the cell-local slice of the committed
-    result trace. leaf = sha256(token_id), A20's encoding."""
+    result trace."""
     from euclid_spark.catalog import load_events
-    from euclid_spark.operators.range_tree import _q2_entries
 
-    ent = _q2_entries(load_events(spark, sf_dir), contract)
     keys = (
-        ent.withColumn(
-            "cell", F.floor(F.col("event_id") / TILE_SIZE).cast("long")
-        )
-        .select("owner", "cell", "token_id")
+        _q2_entries(load_events(spark, sf_dir), contract)
+        .select("owner", _cell().alias("cell"), "token_id")
         .distinct()
     )
     w = Window.partitionBy("owner", "cell").orderBy("token_id")
@@ -135,7 +157,7 @@ def _q2_cell_leaf_rows(
         "cell",
         "token_id",
         (F.row_number().over(w) - 1).alias("pos"),
-        F.sha2(F.col("token_id").cast("string"), 256).alias("node_hash"),
+        q2_leaf_hash(F.col("token_id")).alias("node_hash"),
     )
 
 
@@ -143,32 +165,21 @@ def _erc20_cell_leaf_rows(
     spark: SparkSession, sf_dir: str, rate, contract: "str | None"
 ) -> DataFrame:
     """Level-0 leaves, ERC-20 family: per (owner, cell), the owner's
-    entries in block order with the leaf circuit's reward.
-    leaf = sha256(event_id ':' entry_reward_hex), A23's encoding."""
-    from euclid_spark.functions.u256 import u256_to_hex
-    from euclid_spark.operators.range_tree import (
-        serve_erc20_all_entry_leaves,
-    )
-
-    rows = serve_erc20_all_entry_leaves(spark, sf_dir, rate, contract)
-    entry_hex = u256_to_hex(
-        (F.col("l3"), F.col("l2"), F.col("l1"), F.col("l0"))
+    entries in block order with the leaf circuit's reward, read from
+    the served entry-leaf store."""
+    rows = ERC20_REWARD_TREE.frame(
+        spark, sf_dir, contract=contract, rate=rate, store=True
     )
     w = Window.partitionBy("owner", "cell").orderBy("event_id")
     return rows.select(
         "owner",
         "cell",
         "event_id",
-        entry_hex.alias("entry_reward_hex"),
+        erc20_entry_hex().alias("entry_reward_hex"),
         (F.row_number().over(w) - 1).alias("pos"),
     ).withColumn(
         "node_hash",
-        F.sha2(
-            F.concat_ws(
-                ":", F.col("event_id").cast("string"), "entry_reward_hex"
-            ),
-            256,
-        ),
+        erc20_leaf_hash(F.col("event_id"), F.col("entry_reward_hex")),
     )
 
 
@@ -181,19 +192,21 @@ def range_commitment_paths(
 ) -> "tuple[str, str, str, int, int]":
     """(leaves, incell_nodes, cell_nodes, cell_depth, incell_depth) —
     the three commitment artifacts' paths, each built on a miss
-    (owner-clustered, so a single-owner response prunes to that
-    owner's row groups), and the two tree depths from their footers.
+    (owner-clustered with fine row groups, so a single-owner response
+    prunes to that owner's row groups), and the two tree depths from
+    their footers.
 
     leaves:       (owner, cell, <payload cols>, pos, node_hash)
     incell_nodes: (group_key = owner|cell, level, pos, node_hash, owner)
     cell_nodes:   (owner, level, pos, node_hash) — pos = cell >> level
     """
-    import math
-
     from euclid_spark.cache import persist_tracked
     from euclid_spark.operators.merkle import merkle_levels
 
-    fp = _fp(sf_dir, family, rewards_rate, contract)
+    # fine row groups: a driver read of one owner's few rows decodes a
+    # 4 MB row group, not a 128 MB one (stores written before rebuild once)
+    fp = _fp(sf_dir, family, rewards_rate, contract, layout="fine_v1")
+    fine = artifacts.FINE_ROW_GROUPS
 
     def _clustered(df: DataFrame, *cols: str) -> DataFrame:
         return df.repartitionByRange(8, "owner").sortWithinPartitions(
@@ -208,7 +221,7 @@ def range_commitment_paths(
         )
         return _clustered(rows, "cell", "pos")
 
-    leaves = artifacts.ensure(f"rr_{family}_leaves", fp, build_leaves)
+    leaves = artifacts.ensure(f"rr_{family}_leaves", fp, build_leaves, fine)
 
     def build_incell() -> DataFrame:
         lv = persist_tracked(
@@ -222,7 +235,7 @@ def range_commitment_paths(
             nodes.join(owner_of, "group_key"), "group_key", "level", "pos"
         )
 
-    incell = artifacts.ensure(f"rr_{family}_incell", fp, build_incell)
+    incell = artifacts.ensure(f"rr_{family}_incell", fp, build_incell, fine)
 
     def build_celltree() -> DataFrame:
         # cell roots = the in-cell trees' top level; merkle_levels sizes
@@ -240,19 +253,15 @@ def range_commitment_paths(
                 "node_hash",
             )
         )
-        mb = (
-            cached_parquet(spark, leaves).agg(F.max("cell")).collect()[0][0]
-        )  # one-row fetch
-        n_cells = int(mb or 0) + 1
-        depth = (
-            max(1, math.ceil(math.log2(n_cells))) if n_cells > 1 else 1
-        )
+        # sized to the max QUALIFYING cell (one-row fetch)
+        mb = cached_parquet(spark, leaves).agg(F.max("cell")).collect()[0][0]
         nodes, _ = merkle_levels(
-            persist_tracked(roots), group="owner", levels=depth
+            persist_tracked(roots), group="owner",
+            levels=tree_depth(int(mb or 0) + 1),
         )
         return _clustered(nodes, "level", "pos")
 
-    cells = artifacts.ensure(f"rr_{family}_celltree", fp, build_celltree)
+    cells = artifacts.ensure(f"rr_{family}_celltree", fp, build_celltree, fine)
     # served metadata from parquet footers, read after the ensures — a
     # frame agg(max) would scan every node row, which grows with the
     # corpus
@@ -325,7 +334,7 @@ def _element_sequence(
         # store, not the raw events table
         first: "dict[int, int]" = {}
         for r in artifacts.read_rows(
-            q2_entry_store_path(spark, sf_dir, contract),
+            Q2_KEY_TREE.path(spark, sf_dir, contract=contract, store=True),
             _edge_filter(edges, own), ["event_id", "token_id"],
         ):
             t = r["token_id"]
@@ -410,17 +419,12 @@ def _q2_revealed(
     keys come from the owner's leaf-store rows in the covered cells:
     that read is bounded only by the owner's rows in the range, the
     honest cost of over-asking the circuit setup."""
-    from euclid_spark.operators.range_tree import (
-        _EDGE_SENTINEL_CELL,
-        Q2_L,
-        _q2_owner_keys,
-    )
-
     cand: "dict[int, dict]" = {}
     if L <= Q2_L:
-        key_rows = _q2_owner_keys(
-            spark, sf_dir, owner, b_min, b_max, L, contract
-        )
+        req = Q2_KEY_TREE.request(spark, sf_dir, b_min, b_max, contract)
+        key_rows = [] if req is None else Q2_KEY_TREE.driver_fold(
+            spark, sf_dir, req[2], req[3], owner, contract
+        )[:L]
         keys = [k["t"] for k in key_rows]
         for k in key_rows:
             if k["t"] in edge_toks:
@@ -738,12 +742,10 @@ def _verify_range_response(
     from euclid_spark.operators.merkle import _refold_to_root
 
     resp = _serve_range_response(spark, sf_dir, family)
-    payload = (
-        F.concat_ws(
-            ":", F.col("event_id").cast("string"), "entry_reward_hex"
-        )
+    leaf = (
+        erc20_leaf_hash(F.col("event_id"), F.col("entry_reward_hex"))
         if family == "erc20"
-        else F.col("token_id").cast("string")
+        else q2_leaf_hash(F.col("token_id"))
     )
     id_col = "event_id" if family == "erc20" else "token_id"
     hdr_parts = [
@@ -753,7 +755,7 @@ def _verify_range_response(
     ] + ([F.col("rewards_rate").cast("string")] if family == "erc20" else [])
     seed = F.sha2(F.concat_ws(":", F.lit("hdr"), *hdr_parts), 256)
 
-    leaf_ok = F.sha2(payload, 256) == F.col("leaf_hash")
+    leaf_ok = leaf == F.col("leaf_hash")
     elem_ok = (
         _refold_to_root(F.col("leaf_hash"), F.col("path"))
         == F.col("elem_hash")
@@ -847,8 +849,6 @@ def _oracle_range_response(family: str):
     every revealed row's combined opening path."""
 
     def gen(sf_dir: str) -> str:
-        import math
-
         import duckdb
 
         from euclid_spark.operators.euclid import (
@@ -877,8 +877,7 @@ def _oracle_range_response(family: str):
         mb_q = con.execute(
             f"SELECT MAX(event_id) FROM read_parquet('{ev}') WHERE {qual}"
         ).fetchone()[0]
-        n_cells = (int(mb_q or 0) // TILE_SIZE) + 1
-        depth = max(1, math.ceil(math.log2(n_cells))) if n_cells > 1 else 1
+        depth = tree_depth(int(mb_q or 0) // TILE_SIZE + 1)
         cover, edges = tile_cover(b_min, b_max, depth)
         rate = REWARDS_RATE if family == "erc20" else None
         hdr = _hdr(b_min, b_max, OWNER, rate).decode()

@@ -1,33 +1,48 @@
-"""O(log-range) block-range aggregation over a hierarchical tile tree
-(SURVEY.md §2.A25; VERDICT r6 next-round #2).
+"""Block-range aggregation over hierarchical tile trees (SURVEY.md
+§2.A25, A26, A29).
 
-The reference answers any `[B_min, B_max]` aggregate by combining
-PRECOMPUTED per-node proofs up a tree — `query2/block/partial_node.rs`
-and `full_node.rs` (and the same shape in `query_erc20/block/`): query
-cost ∝ log(range), not rows-in-range. The Spark analog built here:
+The reference answers any `[B_min, B_max]` query by combining
+PRECOMPUTED per-node aggregates up its block trees —
+`query2/block/{partial,full}_node.rs` and `query_erc20/block/`: query
+cost ∝ log(range), not rows-in-range. Each reference query family is
+one monoid over TILE_SIZE-block cells, and each is declared here ONCE,
+as a `TileTree`:
 
-- **The tile artifact**: a segment-tree of partial aggregates over the
-  block dimension. Level 0 groups events into TILE_SIZE-block cells;
-  level k+1 merges cell pairs — log₂ geometrically-shrinking hash
-  aggregations (the merkle_levels build shape, but carrying the
-  A4/A8-family monoid: count, DECIMAL value sum, min/max block, and
-  the additive mod-prime range digest — every one commutative, so tile
-  merge ≡ re-aggregation in any order). Stored as a fingerprint-keyed
-  disk artifact: built once per corpus version, served as a scan.
+- `RANGE_TREE` (A25, `range_tree_tiles`): the global scalar monoid —
+  count, DECIMAL value sum, min/max block and the additive mod-prime
+  digest, every one commutative;
+- `Q2_KEY_TREE` (A26, `q2_key_tiles`): per owner, each cell's FIRST-L
+  distinct mapping keys with their first occurrence — a bounded min-L
+  selection lattice (merge = union → sort → truncate: a key dropped at
+  truncation is larger than ≥ L keys of its own cell, hence of any
+  union containing it), L baked in as the circuit's L is at setup;
+- `ERC20_REWARD_TREE` (A29, `erc20_reward_tiles`): per owner, the u256
+  leaf-circuit rewards as limb-wise decimal(38) sums (carry deferred to
+  read), built from the served entry-leaf store so the Arrow leaf
+  circuit runs once per corpus version.
 
-- **The query face**: an arbitrary `[B_min, B_max)` aggregate reads
-  the CANONICAL SEGMENT-TREE COVER — at most 2 aligned tiles per level
-  (≤ 2·log₂(cells) tile rows) — plus two edge scans of < TILE_SIZE
-  blocks each, pushed down to the events scan. At 100 TB with a 2-year
-  range this is the difference between scanning the range and reading
-  a few thousand tile rows: cost ∝ log(range) + 2·TILE_SIZE.
+A declaration names the artifact and its fingerprint params, the key
+columns, the input rows, the `leaf` aggregate over rows, the `combine`
+aggregate over partials, the block-clustered store its edge windows
+read, and the driver fold. Everything else derives from it:
 
-- **Maintenance**: the tiles are a commutative monoid keyed by
-  (level, cell), so the D19 IVM machinery maintains them per
-  micro-batch (each event touches one cell per level — the streaming
-  partial explodes levels; merge = the same fold the build uses) and
-  the D20 parity harness asserts incremental ≡ from-scratch at every
-  quiescent point (streaming/parity.py `range_tree_tiles` spec).
+- **Batch levels** (`TileTree.levels`): `leaf` per level-0 cell, then
+  `combine` grouped by (cell >> 1, *keys) per level, unioned, stored as
+  a fingerprint-keyed artifact. A keyed tree is written owner-clustered
+  with fine row groups, so one owner's cover read prunes to its rows.
+- **Streaming upkeep** (`TileTree.partial` / `merge`, the D19 monoid
+  pair `parity.SPECS` and `faces.MAINTAINED` run): each input row
+  contributes one cell per level 0.._RT_LEVELS, grouped by
+  (chunk, level, cell, *keys) → `leaf`; merge is `combine`. The state
+  keeps only fields that do not depend on how the stream splits into
+  batches (`TileTree.invariant`).
+- **Range answers**: `tile_cover` gives ≤ 2 aligned tiles per level
+  plus two < TILE_SIZE edge windows. Owner-scoped and keyless requests
+  read exactly those rows with `artifacts.read_rows` and fold them on
+  the driver (`TileTree.driver_fold`); the all-owner form, whose output
+  grows with the owners, is a Spark plan (`TileTree.spark_answer`):
+  cover tiles ∪ `leaf`(edge rows by owner) → `combine` by owner → the
+  face's finisher. Nothing reads the range interior.
 
 Oracle: the full-recompute SQL over the same range — the gate proves
 the tile path returns exactly what scanning the rows would.
@@ -35,107 +50,60 @@ the tile path returns exactly what scanning the rows would.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from dataclasses import dataclass
 from decimal import ROUND_HALF_UP, Decimal
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from euclid_spark import artifacts
-from euclid_spark.catalog import cached_parquet, load_events, local_frame
+from euclid_spark.catalog import load_events, local_frame
 from euclid_spark.functions.hashing import (
     DIGEST_PRIME,
     MIX,
     digest_agg,
     digest_term,
 )
+from euclid_spark.operators.euclid import (
+    CONTRACT,
+    REWARDS_RATE,
+    erc20_leaf_rows,
+    u256_overflow_oracle_sql,
+)
+from euclid_spark.operators.euclid import TOP_L as Q2_L
 
 TILE_SIZE = 256  # blocks per level-0 tile (the finest granularity)
+_RT_LEVELS = 6  # tree levels the streaming upkeep maintains
+
+# Sentinel first-occurrence cell for keys contributed by an EDGE slice
+# (no covered-cell occurrence known to the tile path): sorts after every
+# real (cell, pos), so a min-merge keeps the covered occurrence if one
+# exists and the sentinel survives only for edge-only keys.
+_EDGE_SENTINEL_CELL = (1 << 63) - 1
+_NO_POS = 2**31 - 1  # an edge occurrence has no in-cell position
 
 
-def _leaf_partials(ev: DataFrame) -> DataFrame:
-    """Level-0 tile partials from raw events: one row per occupied
-    TILE_SIZE-block cell. Every aggregate is a commutative monoid."""
-    term = digest_term(
-        F.col("event_id").cast("long"), F.col("user_id").cast("long")
-    )
-    return (
-        ev.groupBy(
-            F.floor(F.col("event_id") / TILE_SIZE).cast("long").alias("cell")
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("decimal(28,6)")
-            .alias("sum_value"),
-            F.min("event_id").alias("min_block"),
-            F.max("event_id").alias("max_block"),
-            digest_agg(term).alias("digest"),
-        )
-    )
+def tree_depth(n_cells: int) -> int:
+    """Levels above the leaves of a binary tree over `n_cells` level-0
+    cells: ⌈log₂ n_cells⌉, at least 1."""
+    return max(1, (n_cells - 1).bit_length())
 
 
-def _fold_up(lvl: DataFrame) -> DataFrame:
-    """One tree level up: merge cell pairs (the partial_node.rs fold)."""
-    return (
-        lvl.groupBy(F.shiftright(F.col("cell"), 1).alias("cell"))
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_value").cast("decimal(28,6)").alias("sum_value"),
-            F.min("min_block").alias("min_block"),
-            F.max("max_block").alias("max_block"),
-            F.pmod(F.sum("digest"), F.lit(DIGEST_PRIME))
-            .cast("long")
-            .alias("digest"),
-        )
-    )
+def _cell() -> Column:
+    """An event's level-0 cell."""
+    return F.floor(F.col("event_id") / TILE_SIZE).cast("long")
 
 
-def build_range_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All tree levels as one frame (level, cell, monoid columns).
-    log₂(cells) chained aggregations, each level half the size — total
-    build work ≈ 2× the level-0 aggregation, all map-side combinable."""
-    import math
-
-    ev = load_events(spark, sf_dir).select("event_id", "user_id", "value")
-    lvl = _leaf_partials(ev)
-    n_cells = lvl.agg(F.max("cell")).collect()[0][0]  # one-row fetch
-    n_cells = int(n_cells or 0) + 1
-    depth = max(1, math.ceil(math.log2(n_cells))) if n_cells > 1 else 1
-    out = [lvl.withColumn("level", F.lit(0))]
-    for k in range(1, depth + 1):
-        lvl = _fold_up(lvl)
-        out.append(lvl.withColumn("level", F.lit(k)))
-    tiles = out[0]
-    for o in out[1:]:
-        tiles = tiles.unionByName(o)
-    return tiles.select(
-        "level", "cell", "n_events", "sum_value", "min_block", "max_block",
-        "digest",
-    )
-
-
-def _range_tree_spec(spark: SparkSession, sf_dir: str) -> tuple:
-    """(name, fingerprint, build, options) of the tile-tree artifact —
-    the one definition its path and frame forms share."""
-    return (
-        "range_tree_tiles",
-        _range_tree_fp(sf_dir),
-        lambda: build_range_tree(spark, sf_dir),
-        None,
-    )
-
-
-def range_tree_path(spark: SparkSession, sf_dir: str) -> str:
-    """The tile tree's artifact path, built on a miss."""
-    return artifacts.ensure(*_range_tree_spec(spark, sf_dir))
-
-
-def serve_range_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tile tree as a fingerprint-keyed disk artifact — precomputed
-    at ingest (the reference commits its block tree the same way),
-    served to every query as a short-lineage scan."""
-    return artifacts.serve_frame(spark, *_range_tree_spec(spark, sf_dir))
+def stream_chunk() -> Column:
+    """A streaming view's partition key: the level-_RT_LEVELS chunk of a
+    row's `cell`. Every tile at level ≤ _RT_LEVELS lies inside one
+    chunk, so a micro-batch rewrites only the chunks it touches
+    (partial_node.rs's locality: appending block n re-proves one path,
+    not the tree). INT, not LONG: partition directory values are
+    re-inferred as int32 on read."""
+    return F.shiftright("cell", _RT_LEVELS).cast("int").alias("day")
 
 
 def tile_cover(
@@ -192,7 +160,7 @@ def _edge_filter(edges: "list[tuple[int, int]]", *conj: tuple) -> list:
     return [[*conj, ("event_id", ">=", lo), ("event_id", "<", hi)] for lo, hi in edges]
 
 
-def _cover_cond(cover: "list[tuple[int, int]]") -> F.Column:
+def _cover_cond(cover: "list[tuple[int, int]]") -> Column:
     """The tile cover as a Spark predicate for the all-owner faces: an
     OR of per-level (level, cell IN ...) terms."""
     return reduce(
@@ -204,7 +172,7 @@ def _cover_cond(cover: "list[tuple[int, int]]") -> F.Column:
     )
 
 
-def _edge_cond(edges: "list[tuple[int, int]]") -> F.Column:
+def _edge_cond(edges: "list[tuple[int, int]]") -> Column:
     """The edge windows as a Spark predicate on event_id."""
     return reduce(
         lambda a, b: a | b,
@@ -247,57 +215,252 @@ def _probe_range(
     )
 
 
-_AGG_DDL = (
-    "b_min {t}, b_max {t}, n_events long, total_value double, "
-    "min_block long, max_block long, range_digest long"
-)
+def _served_max_block(spark: SparkSession, sf_dir: str) -> int:
+    """The corpus's max block from the served scalar tile tree's parquet
+    FOOTER — the default-range probe every pinned face derives, without
+    a data scan (ensured first so the artifact exists)."""
+    mb = artifacts.footer_stats(RANGE_TREE.path(spark, sf_dir)).span(
+        "max_block"
+    )[1]
+    return int(mb or 0)
 
 
-def range_tree_agg(
-    spark: SparkSession,
-    sf_dir: str,
-    b_min: "int | None" = None,
-    b_max: "int | None" = None,
-) -> DataFrame:
-    """A25 — the O(log-range) block-range aggregate: count, exact value
-    total, block bounds, and range digest for `[B_min, B_max)` answered
-    from the tile cover + two edge scans. The public parameterized
-    surface takes any (b_min, b_max); the pinned gate face defaults to
-    the ⅕ and ⅘ points of the block space (scale-invariant probe, the
-    A22 pattern).
+# --- the declaration ----------------------------------------------------------
 
-    Read shape: the answer is one row with no owner axis, so it is
-    folded on the driver. `artifacts.read_rows` fetches the cover tiles
-    (a (level, cell IN ...) filter over the served artifact, ≤ 2 rows
-    per level) and the two < TILE_SIZE edge windows of the events table
-    (event_id ranges, pruned to their row groups); the fold applies
-    Spark's types and null rules (decimal(18,6) HALF_UP value cast,
-    HALF_UP total to 2 places, pmod digest). No Spark job runs until
-    the returned local frame is acted on; nothing reads the range
-    interior."""
-    path = range_tree_path(spark, sf_dir)
-    ml = artifacts.footer_stats(path).span("level")[1]
-    if ml is None:  # zero-row corpus: no tiles, no range
-        return spark.createDataFrame([], _AGG_DDL.format(t="long"))
-    b_min, b_max = _probe_range(spark, sf_dir, b_min, b_max)
-    cover, edges = tile_cover(b_min, b_max, int(ml))
-    if not cover and not edges:  # degenerate range (≤ 4 blocks total)
-        return spark.createDataFrame([], _AGG_DDL.format(t="long"))
 
-    parts = []
-    if cover:
-        for r in artifacts.read_rows(
-            path, _cover_filter(cover),
-            ["n_events", "sum_value", "min_block", "max_block", "digest"],
-        ):
-            sv = r["sum_value"]
-            r["sum_value"] = None if sv is None else int(sv.scaleb(6))
-            parts.append(r)
-    if edges:
-        ev = artifacts.read_rows(
-            f"{sf_dir}/events.parquet", _edge_filter(edges),
-            ["event_id", "user_id", "value"],
+@dataclass(frozen=True)
+class TileTree:
+    """One block-tile tree, declared once; see the module docstring for
+    what derives from it. `leaf(rows, by)` and `combine(partials, by)`
+    group by `by` and return `by` plus the `cols` partial columns;
+    `fold(tile_rows, edge_rows)` is the same monoid in exact Python
+    arithmetic (`edge_rows` is None when the request has no edge
+    window)."""
+
+    name: str  # artifact name
+    fp: dict  # fixed fingerprint params
+    axes: tuple  # request params in the fingerprint: "contract", "rate"
+    keys: tuple  # key columns beside (level, cell)
+    # (events, contract, rate) → input rows (event_id, keys, measures)
+    rows: Callable[[DataFrame, "str | None", "int | None"], DataFrame]
+    leaf: Callable[[DataFrame, list], DataFrame]
+    combine: Callable[[DataFrame, list], DataFrame]
+    cols: tuple  # partial columns
+    edge_cols: tuple  # input-row columns the driver fold reads
+    fold: Callable[[list, "list | None"], object]
+    # (name, fixed fingerprint params) of the block-clustered input-row
+    # store the edge windows read; None reads the events table itself
+    store: "tuple[str, dict] | None" = None
+    # projection of a streaming partial onto its split-invariant fields
+    invariant: "Callable[[DataFrame], DataFrame] | None" = None
+
+    def _spec(
+        self, spark: SparkSession, sf_dir: str, contract, rate, store: bool
+    ) -> tuple:
+        """(name, fingerprint, build, options) of the tree or, with
+        `store`, of its input-row store — the one definition the path
+        and frame forms share."""
+        vals = {
+            "contract": CONTRACT if contract is None else contract,
+            "rate": REWARDS_RATE if rate is None else int(rate),
+        }
+        name, fixed = self.store if store else (self.name, self.fp)
+        fp = artifacts.corpus_fingerprint(
+            [f"{sf_dir}/events.parquet"],
+            **fixed, **{a: vals[a] for a in self.axes},
         )
+        if store:
+            def build() -> DataFrame:
+                return (
+                    self.rows(load_events(spark, sf_dir), contract, rate)
+                    .repartitionByRange(8, "event_id")
+                    .sortWithinPartitions("event_id")
+                )
+        elif self.keys:
+            def build() -> DataFrame:
+                return (
+                    self.levels(spark, sf_dir, contract, rate)
+                    .repartitionByRange(8, *self.keys)
+                    .sortWithinPartitions(*self.keys, "level", "cell")
+                )
+        else:
+            return name, fp, lambda: self.levels(spark, sf_dir), None
+        return name, fp, build, artifacts.FINE_ROW_GROUPS
+
+    def path(
+        self, spark: SparkSession, sf_dir: str, contract=None, rate=None,
+        store: bool = False,
+    ) -> str:
+        """The artifact's path, built on a miss."""
+        return artifacts.ensure(*self._spec(spark, sf_dir, contract, rate, store))
+
+    def frame(
+        self, spark: SparkSession, sf_dir: str, contract=None, rate=None,
+        store: bool = False,
+    ) -> DataFrame:
+        """The artifact as a Spark scan, built on a miss."""
+        return artifacts.serve_frame(
+            spark, *self._spec(spark, sf_dir, contract, rate, store)
+        )
+
+    def levels(
+        self, spark: SparkSession, sf_dir: str, contract=None, rate=None
+    ) -> DataFrame:
+        """Every tree level: `leaf` per level-0 cell, then `combine` per
+        (cell >> 1, *keys), as deep as the FULL block space needs (one
+        one-row max(event_id) fetch), so any cover stays ≤ 2 tiles per
+        level. A tree with a store builds from the served store."""
+        ev = load_events(spark, sf_dir)
+        src = (
+            self.frame(spark, sf_dir, contract, rate, store=True)
+            if self.store
+            else self.rows(ev, contract, rate)
+        )
+        mb = ev.agg(F.max("event_id")).collect()[0][0]  # one-row fetch
+        by = ["cell", *self.keys]
+        lvl = self.leaf(src.withColumn("cell", _cell()), by)
+        out = [lvl.withColumn("level", F.lit(0))]
+        for k in range(1, tree_depth(int(mb or 0) // TILE_SIZE + 1) + 1):
+            lvl = self.combine(lvl.withColumn("cell", F.shiftright("cell", 1)), by)
+            out.append(lvl.withColumn("level", F.lit(k)))
+        return reduce(DataFrame.unionByName, out).select("level", *by, *self.cols)
+
+    def partial(self, events: DataFrame) -> DataFrame:
+        """The streaming partial of one micro-batch: each input row
+        touches one cell per level 0.._RT_LEVELS, keyed by its chunk."""
+        rows = (
+            self.rows(events, None, None)
+            .withColumn("cell", _cell())
+            .withColumn("level", F.explode(F.sequence(F.lit(0), F.lit(_RT_LEVELS))))
+        )
+        out = self.leaf(rows, [
+            stream_chunk(),
+            "level",
+            F.expr("shiftright(cell, level)").alias("cell"),
+            *self.keys,
+        ])
+        return out if self.invariant is None else self.invariant(out)
+
+    def merge(self, old: DataFrame, partial: DataFrame) -> DataFrame:
+        """The streaming merge: `combine` per (chunk, level, cell, *keys)."""
+        return self.combine(
+            old.unionByName(partial), ["day", "level", "cell", *self.keys]
+        )
+
+    def request(
+        self, spark: SparkSession, sf_dir: str, b_min, b_max, contract=None,
+        rate=None,
+    ) -> "tuple[int, int, list, list] | None":
+        """(b_min, b_max, cover, edges) of a range request, or None when
+        the answer is empty: a tree without tiles, or a degenerate
+        range. The depth comes from the served tree's footers, read
+        after the ensure — an agg(max) would scan every tile row."""
+        ml = artifacts.footer_stats(
+            self.path(spark, sf_dir, contract, rate)
+        ).span("level")[1]
+        if ml is None:
+            return None
+        b_min, b_max = _probe_range(spark, sf_dir, b_min, b_max)
+        cover, edges = tile_cover(b_min, b_max, int(ml))
+        return (b_min, b_max, cover, edges) if cover or edges else None
+
+    def driver_fold(
+        self, spark: SparkSession, sf_dir: str, cover, edges, owner=None,
+        contract=None, rate=None,
+    ):
+        """One owner's (or the keyless tree's) answer folded on the
+        driver: `artifacts.read_rows` of the ≤ 2-per-level cover tiles
+        and of the input rows in the two edge windows, then `fold`. No
+        Spark job runs."""
+        own = () if owner is None else (("owner", "=", owner),)
+        tiles = (
+            artifacts.read_rows(
+                self.path(spark, sf_dir, contract, rate),
+                _cover_filter(cover, *own), list(self.cols),
+            )
+            if cover
+            else []
+        )
+        edge = None
+        if edges:
+            src = (
+                self.path(spark, sf_dir, contract, rate, store=True)
+                if self.store
+                else f"{sf_dir}/events.parquet"
+            )
+            edge = artifacts.read_rows(
+                src, _edge_filter(edges, *own), list(self.edge_cols)
+            )
+        return self.fold(tiles, edge)
+
+    def spark_answer(
+        self, spark: SparkSession, sf_dir: str, cover, edges, contract=None,
+        rate=None,
+    ) -> DataFrame:
+        """Every owner's combined partial over the cover + edges, as a
+        Spark plan: cover tiles ∪ `leaf`(edge rows by owner) → `combine`
+        by owner. Edge rows carry the sentinel cell — they have no
+        covered occurrence."""
+        cols = [*self.keys, *self.cols]
+        parts = []
+        if cover:
+            parts.append(
+                self.frame(spark, sf_dir, contract, rate)
+                .filter(_cover_cond(cover)).select(*cols)
+            )
+        if edges:
+            e = self.frame(spark, sf_dir, contract, rate, store=True).filter(
+                _edge_cond(edges)
+            )
+            parts.append(
+                self.leaf(
+                    e.withColumn("cell", F.lit(_EDGE_SENTINEL_CELL)),
+                    list(self.keys),
+                ).select(*cols)
+            )
+        return self.combine(reduce(DataFrame.unionByName, parts), list(self.keys))
+
+
+# --- A25: the scalar monoid ---------------------------------------------------
+
+
+def _rt_leaf(rows: DataFrame, by: list) -> DataFrame:
+    term = digest_term(
+        F.col("event_id").cast("long"), F.col("user_id").cast("long")
+    )
+    return rows.groupBy(*by).agg(
+        F.count("*").alias("n_events"),
+        F.sum(F.col("value").cast("decimal(18,6)"))
+        .cast("decimal(28,6)")
+        .alias("sum_value"),
+        F.min("event_id").alias("min_block"),
+        F.max("event_id").alias("max_block"),
+        digest_agg(term).alias("digest"),
+    )
+
+
+def _rt_combine(parts: DataFrame, by: list) -> DataFrame:
+    return parts.groupBy(*by).agg(
+        F.sum("n_events").alias("n_events"),
+        F.sum("sum_value").cast("decimal(28,6)").alias("sum_value"),
+        F.min("min_block").alias("min_block"),
+        F.max("max_block").alias("max_block"),
+        F.pmod(F.sum("digest"), F.lit(DIGEST_PRIME))
+        .cast("long")
+        .alias("digest"),
+    )
+
+
+def _rt_fold(tiles: list, ev: "list | None") -> tuple:
+    """(n_events, total_value, min_block, max_block, range_digest) with
+    Spark's types and null rules: decimal(18,6) HALF_UP value cast,
+    HALF_UP total to 2 places, pmod digest."""
+    parts = [
+        {**r, "sum_value": None if r["sum_value"] is None
+         else int(r["sum_value"].scaleb(6))}
+        for r in tiles
+    ]
+    if ev is not None:
         terms = [
             (r["event_id"] * MIX + r["user_id"] * 97) % DIGEST_PRIME
             for r in ev
@@ -313,9 +476,7 @@ def range_tree_agg(
         })
     total = _sql_agg(sum, (p["sum_value"] for p in parts))
     digest = _sql_agg(sum, (p["digest"] for p in parts))
-    row = (
-        b_min,
-        b_max,
+    return (
         _sql_agg(sum, (p["n_events"] for p in parts)),
         None if total is None else float(
             Decimal(total).scaleb(-6).quantize(
@@ -326,35 +487,30 @@ def range_tree_agg(
         _sql_agg(max, (p["max_block"] for p in parts)),
         None if digest is None else digest % DIGEST_PRIME,
     )
-    # the bounds keep the type F.lit gave them: int when they fit
-    t = "int" if all(-(2**31) <= v < 2**31 for v in (b_min, b_max)) else "long"
-    return local_frame(spark, [row], _AGG_DDL.format(t=t))
 
 
-# --- Query2 over the tile tree: the distinct-key SET monoid ------------------
-#
-# A25's tiles carry SCALAR monoids (count/sum/min/max/digest — the
-# query_erc20/block/ shape). The reference's OTHER block tree aggregates
-# the DISTINCT-KEY SET up the tree (query2/block/full_node.rs,
-# partial_node.rs — set-union feeding query2/revelation/circuit.rs's
-# bounded top-L reveal). The Spark analog: per-(owner, cell) tiles
-# carrying each cell's FIRST-L keys — a bounded min-L selection lattice
-# (merge = union→sort→truncate, associative AND commutative: every key
-# dropped at truncation is larger than ≥L keys of its own cell, hence
-# larger than ≥L keys of any union containing that cell), so per-owner
-# top-L revelation over an arbitrary block range reads O(log range · L)
-# tile rows — never the range interior. L is baked into the tiles at
-# build exactly as the circuit's L is baked at setup.
+RANGE_TREE = TileTree(
+    name="range_tree_tiles",
+    fp=dict(op="range_tree", tile=TILE_SIZE),
+    axes=(),
+    keys=(),
+    rows=lambda ev, contract, rate: ev.select("event_id", "user_id", "value"),
+    leaf=_rt_leaf,
+    combine=_rt_combine,
+    cols=("n_events", "sum_value", "min_block", "max_block", "digest"),
+    edge_cols=("event_id", "user_id", "value"),
+    fold=_rt_fold,
+)
 
-from euclid_spark.operators.euclid import TOP_L as Q2_L  # noqa: E402
+
+# --- A26: the first-L distinct-key lattice ------------------------------------
 
 
 def _q2_entries(ev: DataFrame, contract: "str | None" = None) -> DataFrame:
     """Qualifying mapping entries: the Query2 extraction filter (one
     contract's events carrying a mapping key — the contract-address
-    input of query2/api.rs), shared by build and edge scans."""
-    from euclid_spark.operators.euclid import CONTRACT
-
+    input of query2/api.rs), shared by the tree, its entry store and
+    the response leaves."""
     tok = F.get_json_object("props", "$.k").cast("long")
     return (
         ev.filter(
@@ -369,16 +525,9 @@ def _q2_entries(ev: DataFrame, contract: "str | None" = None) -> DataFrame:
     )
 
 
-# Sentinel first-occurrence for keys contributed by an EDGE slice (no
-# covered-cell occurrence known to the tile path): sorts after every
-# real (cell, pos), so a min-merge keeps the covered occurrence if one
-# exists and the sentinel survives only for edge-only keys.
-_EDGE_SENTINEL_CELL = (1 << 63) - 1
-
-
-def _dedup_first_l(col: str, limit: int) -> F.Column:
+def _dedup_first_l(col: str, limit: int) -> Column:
     """First-L distinct keys of a SORTED key-struct array, keeping each
-    key's minimal (cell, p): the array is sorted by (t, cell, p), so
+    key's minimal occurrence: the array is sorted by (t, cell[, p]), so
     the first struct per t IS the min — an index-lambda filter drops
     the rest, then the L bound truncates."""
     return F.expr(
@@ -387,224 +536,199 @@ def _dedup_first_l(col: str, limit: int) -> F.Column:
     )
 
 
-def _q2_leaf_tiles(entries: DataFrame) -> DataFrame:
-    """Level-0 tiles: per (cell, owner), the cell's first-L distinct keys
-    in canonical order (query2's leaf set, already truncated — the
-    lattice makes the truncation lossless for any top-L query). Each
-    key carries its FIRST-OCCURRENCE struct (cell, p): at level 0 the
-    cell is the tile and p is the key's index in the sorted list — its
-    rank in the cell's full distinct ordering (a key surviving any
-    first-L view has rank < L, so truncation never hides the rank).
-    The structs ride the fold-up so any cover read yields each revealed
-    key's first covered occurrence WITHOUT a leaf-store scan — the A30
-    response opens revealed rows from the tile read alone."""
-    return (
-        entries.groupBy(
-            F.floor(F.col("event_id") / TILE_SIZE).cast("long").alias("cell"),
-            "owner",
-        )
-        .agg(
-            F.slice(F.array_sort(F.collect_set("token_id")), 1, Q2_L)
-            .alias("ks")
-        )
-        .select(
-            "cell",
-            "owner",
-            F.expr(
-                "transform(ks, (t, i) ->"
-                " struct(t AS t, cell AS cell, CAST(i AS INT) AS p))"
-            ).alias("keys"),
-        )
-    )
+def _q2_leaf(rows: DataFrame, by: list) -> DataFrame:
+    """Per group, the first-L distinct keys, each with its FIRST
+    OCCURRENCE (t, cell, p): cell is the earliest leaf cell holding the
+    key, p its rank in the group's key order — at level 0 its rank in
+    the cell's full distinct ordering (a key surviving any first-L view
+    has rank < L, so truncation never hides it). Edge rows carry the
+    sentinel cell and no position."""
+    occ = F.array_sort(F.collect_set(
+        F.struct(F.col("token_id").alias("t"), F.col("cell").alias("cell"))
+    ))
+    return rows.groupBy(*by).agg(occ.alias("s")).withColumn(
+        "keys",
+        F.transform(
+            _dedup_first_l("s", Q2_L),
+            lambda x, i: F.struct(
+                x["t"].alias("t"),
+                x["cell"].alias("cell"),
+                F.when(x["cell"] == _EDGE_SENTINEL_CELL, _NO_POS)
+                .otherwise(i).cast("int").alias("p"),
+            ),
+        ),
+    ).drop("s")
 
 
-def _q2_fold_up(lvl: DataFrame) -> DataFrame:
-    """One level up: per owner, merge the two child cells' first-L lists
-    (full_node.rs's set union + the revelation bound in one step),
-    min-merging each key's first-occurrence struct (children span
-    disjoint leaf-cell ranges, so the lexicographic (cell, p) min is
-    the earlier occurrence)."""
-    return (
-        lvl.groupBy(F.shiftright(F.col("cell"), 1).alias("cell"), "owner")
-        .agg(F.array_sort(F.flatten(F.collect_list("keys"))).alias("s"))
-        .select("cell", "owner", _dedup_first_l("s", Q2_L).alias("keys"))
-    )
+def _q2_combine(parts: DataFrame, by: list) -> DataFrame:
+    """Merge first-L lists (full_node.rs's set union + the revelation
+    bound in one step), min-merging each key's occurrence: children
+    span disjoint leaf-cell ranges, so the lexicographic (cell, p) min
+    is the earlier occurrence."""
+    return parts.groupBy(*by).agg(
+        F.array_sort(F.flatten(F.collect_list("keys"))).alias("s")
+    ).withColumn("keys", _dedup_first_l("s", Q2_L)).drop("s")
 
 
-def build_q2_key_tree(
-    spark: SparkSession, sf_dir: str, contract: "str | None" = None
-) -> DataFrame:
-    """All levels of the per-owner key tree. Depth is sized to the FULL
-    block space (max event_id over all events), not just qualifying
-    cells, so any [b_min, b_max) cover stays ≤ 2 tiles per level."""
-    import math
-
-    ev = load_events(spark, sf_dir)
-    mb = ev.agg(F.max("event_id")).collect()[0][0]  # one-row fetch
-    n_cells = (int(mb or 0) // TILE_SIZE) + 1
-    depth = max(1, math.ceil(math.log2(n_cells))) if n_cells > 1 else 1
-    lvl = _q2_leaf_tiles(_q2_entries(ev, contract))
-    out = [lvl.withColumn("level", F.lit(0))]
-    for k in range(1, depth + 1):
-        lvl = _q2_fold_up(lvl)
-        out.append(lvl.withColumn("level", F.lit(k)))
-    tiles = out[0]
-    for o in out[1:]:
-        tiles = tiles.unionByName(o)
-    return tiles.select("level", "cell", "owner", "keys")
-
-
-def _range_tree_fp(sf_dir: str) -> str:
-    from euclid_spark import artifacts
-
-    return artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="range_tree", tile=TILE_SIZE
-    )
-
-
-def _q2_key_fp(sf_dir: str, contract: "str | None") -> str:
-    from euclid_spark import artifacts
-    from euclid_spark.operators.euclid import CONTRACT
-
-    return artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"],
-        op="q2_key_tree", tile=TILE_SIZE, L=Q2_L, layout="owner_v4",
-        contract=CONTRACT if contract is None else contract,
-    )
-
-
-def _served_max_block(spark: SparkSession, sf_dir: str) -> int:
-    """The corpus's max block from the served scalar tile tree's parquet
-    FOOTER — the default-range probe every pinned face derives, without
-    a data scan (ensured first so the artifact exists)."""
-    mb = artifacts.footer_stats(range_tree_path(spark, sf_dir)).span(
-        "max_block"
-    )[1]
-    return int(mb or 0)
-
-
-def _q2_key_spec(
-    spark: SparkSession, sf_dir: str, contract: "str | None"
-) -> tuple:
-    """The key tree served OWNER-CLUSTERED: range-partitioned and
-    sorted by (owner, level, cell) before the write, so parquet
-    row-group min/max stats on `owner` let a single-owner revelation
-    read only that owner's row groups — per-owner top-L over any range
-    costs O(log range) rows from an owner-pruned slice of the artifact,
-    not a scan of every owner's tiles (the layout story D18/D26 tell
-    for the block dimension, applied to the query's OTHER key)."""
-
-    def build() -> DataFrame:
-        t = build_q2_key_tree(spark, sf_dir, contract)
-        return t.repartitionByRange(8, "owner").sortWithinPartitions(
-            "owner", "level", "cell"
-        )
-
-    # fine row groups (owner_v3): within each owner's sorted span the
-    # (level, cell) stats prune the cover predicate to O(cover) row
-    # groups — the all-owner pinned face stopped scanning the whole
-    # artifact (0.69→0.25 s at 100× events)
-    return (
-        "q2_key_tiles", _q2_key_fp(sf_dir, contract), build,
-        artifacts.FINE_ROW_GROUPS,
-    )
-
-
-def serve_q2_key_tree(
-    spark: SparkSession, sf_dir: str, contract: "str | None" = None
-) -> DataFrame:
-    """The owner-clustered key-tile tree as a Spark scan."""
-    return artifacts.serve_frame(spark, *_q2_key_spec(spark, sf_dir, contract))
-
-
-def _q2_entry_spec(
-    spark: SparkSession, sf_dir: str, contract: "str | None"
-) -> tuple:
-    """The contract's qualifying entries (event_id, owner, token_id)
-    BLOCK-CLUSTERED — the Q2 sibling of the ERC-20 all-entry leaf
-    store: A26's two < TILE_SIZE edge scans push their event_id window
-    to pruned parquet row groups instead of re-scanning (and re-JSON-
-    parsing) the raw events table, which grows with the corpus
-    (measured 4.4→0.28 s at 100× events)."""
-    from euclid_spark.operators.euclid import CONTRACT
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"],
-        op="q2_entry_store", layout="block_v1",
-        contract=CONTRACT if contract is None else contract,
-    )
-
-    def build() -> DataFrame:
-        return (
-            _q2_entries(load_events(spark, sf_dir), contract)
-            .repartitionByRange(8, "event_id")
-            .sortWithinPartitions("event_id")
-        )
-
-    return "q2_entry_store", fp, build, artifacts.FINE_ROW_GROUPS
-
-
-def q2_entry_store_path(
-    spark: SparkSession, sf_dir: str, contract: "str | None" = None
-) -> str:
-    """The block-clustered Q2 entry store's artifact path."""
-    return artifacts.ensure(*_q2_entry_spec(spark, sf_dir, contract))
-
-
-def serve_q2_entry_store(
-    spark: SparkSession, sf_dir: str, contract: "str | None" = None
-) -> DataFrame:
-    """The block-clustered Q2 entry store as a Spark scan."""
-    return artifacts.serve_frame(
-        spark, *_q2_entry_spec(spark, sf_dir, contract)
-    )
-
-
-_Q2_EMPTY = "owner long, pos int, token_id long, b_min long, b_max long"
-
-
-def _q2_owner_keys(
-    spark: SparkSession,
-    sf_dir: str,
-    owner: int,
-    b_min: int,
-    b_max: int,
-    L: int,
-    contract: "str | None",
-) -> "list[dict]":
-    """One owner's first-L distinct keys over [b_min, b_max), folded on
-    the driver: each as {t, cell, p}, (cell, p) its first covered
-    occurrence or the edge sentinel. Reads the owner's ≤ 2-per-level
-    cover tiles and its entries in the two edge windows, and merges
-    them as the Spark face does: sort (t, cell, p), keep the first
-    entry per t, truncate to L."""
-    path = artifacts.ensure(*_q2_key_spec(spark, sf_dir, contract))
-    ml = artifacts.footer_stats(path).span("level")[1]  # after the ensure
-    if ml is None:  # no qualifying entries anywhere
-        return []
-    cover, edges = tile_cover(b_min, b_max, int(ml))
-    keys: "list[dict]" = []
-    own = ("owner", "=", owner)
-    if cover:
-        for r in artifacts.read_rows(
-            path, _cover_filter(cover, own), ["keys"]
-        ):
-            keys.extend(r["keys"])
-    if edges:
-        toks = {
-            r["token_id"]
-            for r in artifacts.read_rows(
-                q2_entry_store_path(spark, sf_dir, contract),
-                _edge_filter(edges, own), ["token_id"],
-            )
-        }
+def _q2_fold(tiles: list, ev: "list | None") -> "list[dict]":
+    """The first-L keys as {t, cell, p}, merged as `combine` merges:
+    the cover tiles' structs plus the edge keys (sentinel-marked), sorted
+    (t, cell, p), first entry per t."""
+    keys = [k for r in tiles for k in r["keys"]]
+    if ev is not None:
         keys.extend(
-            {"t": t, "cell": _EDGE_SENTINEL_CELL, "p": 2**31 - 1}
-            for t in sorted(toks)[:Q2_L]
+            {"t": t, "cell": _EDGE_SENTINEL_CELL, "p": _NO_POS}
+            for t in sorted({r["token_id"] for r in ev})[:Q2_L]
         )
     keys.sort(key=lambda k: (k["t"], k["cell"], k["p"]))
     first = [k for i, k in enumerate(keys) if i == 0 or keys[i - 1]["t"] != k["t"]]
-    return first[:L]
+    return first[:Q2_L]
+
+
+Q2_KEY_TREE = TileTree(
+    name="q2_key_tiles",
+    fp=dict(op="q2_key_tree", tile=TILE_SIZE, L=Q2_L, layout="owner_v4"),
+    axes=("contract",),
+    keys=("owner",),
+    rows=lambda ev, contract, rate: _q2_entries(ev, contract),
+    leaf=_q2_leaf,
+    combine=_q2_combine,
+    cols=("keys",),
+    edge_cols=("token_id",),
+    fold=_q2_fold,
+    # block-clustered entries: the edge windows prune to row groups
+    # instead of re-scanning and re-parsing the raw events table
+    store=("q2_entry_store", dict(op="q2_entry_store", layout="block_v1")),
+    # a batch cannot know a key's rank in its whole leaf cell: the
+    # stream keeps the earliest leaf cell and no position
+    invariant=lambda df: df.withColumn(
+        "keys",
+        F.transform(
+            "keys",
+            lambda k: F.struct(
+                k["t"].alias("t"), k["cell"].alias("cell"), F.lit(0).alias("p")
+            ),
+        ),
+    ),
+)
+
+
+# --- A29: the per-owner u256 reward -------------------------------------------
+
+_DEC38 = "decimal(38,0)"
+
+
+def _erc20_rows(
+    ev: DataFrame, contract: "str | None", rate: "int | None"
+) -> DataFrame:
+    """Per qualifying entry, the leaf-circuit reward limbs and its cell."""
+    ev = ev.filter(
+        F.col("event_type") == (CONTRACT if contract is None else contract)
+    )
+    return erc20_leaf_rows(ev, rate).withColumn("cell", _cell())
+
+
+def _erc20_leaf(rows: DataFrame, by: list) -> DataFrame:
+    return rows.groupBy(*by).agg(
+        *[
+            F.sum(F.col(f"l{i}").cast(_DEC38)).cast(_DEC38).alias(f"s{i}")
+            for i in range(4)
+        ],
+        F.sum("zs").cast("long").alias("zs"),
+        F.sum("of").cast("long").alias("of"),
+        F.count(F.lit(1)).alias("n_entries"),
+    )
+
+
+def _erc20_combine(parts: DataFrame, by: list) -> DataFrame:
+    return parts.groupBy(*by).agg(
+        *[F.sum(f"s{i}").cast(_DEC38).alias(f"s{i}") for i in range(4)],
+        F.sum("zs").cast("long").alias("zs"),
+        F.sum("of").cast("long").alias("of"),
+        F.sum("n_entries").cast("long").alias("n_entries"),
+    )
+
+
+_ERC20_SUMS = ("s0", "s1", "s2", "s3", "zs", "of", "n_entries")
+
+
+def _erc20_fold(tiles: list, ev: "list | None") -> "tuple | None":
+    """(reward_hex, n_zero_supply, n_overflow, n_entries), or None when
+    the owner has no entry in range. Limb sums follow SQL's null rules;
+    the reward is Σ sᵢ·2^(64i) mod 2²⁵⁶ as 64 hex digits
+    (u256_carry_hex)."""
+    parts = list(tiles)
+    if ev:  # the Spark face's per-owner edge group
+        part = {
+            f"s{i}": _sql_agg(sum, (r[f"l{i}"] for r in ev)) for i in range(4)
+        }
+        part["zs"] = _sql_agg(sum, (r["zs"] for r in ev))
+        part["of"] = _sql_agg(sum, (r["of"] for r in ev))
+        part["n_entries"] = len(ev)
+        parts.append(part)
+    if not parts:
+        return None
+    tot = {c: _sql_agg(sum, (p[c] for p in parts)) for c in _ERC20_SUMS}
+    limbs = [tot[f"s{i}"] for i in range(4)]
+    reward = (
+        None
+        if any(v is None for v in limbs)
+        else "%064x" % (sum(int(v) << (64 * i) for i, v in enumerate(limbs)) % 2**256)
+    )
+    return reward, tot["zs"], tot["of"], tot["n_entries"]
+
+
+ERC20_REWARD_TREE = TileTree(
+    name="erc20_reward_tiles",
+    fp=dict(op="erc20_reward_tree", tile=TILE_SIZE, layout="owner_v3"),
+    axes=("rate", "contract"),
+    keys=("owner",),
+    rows=_erc20_rows,
+    leaf=_erc20_leaf,
+    combine=_erc20_combine,
+    cols=_ERC20_SUMS,
+    edge_cols=("l0", "l1", "l2", "l3", "zs", "of"),
+    fold=_erc20_fold,
+    # the un-range-restricted sibling of merkle.erc20_entry_leaves: the
+    # leaf circuit runs once per corpus version, here
+    store=(
+        "erc20_all_entry_leaves",
+        dict(op="erc20_all_entry_leaves", tile=TILE_SIZE, layout="block_v2"),
+    ),
+)
+
+
+# --- the query faces ----------------------------------------------------------
+
+_AGG_DDL = (
+    "b_min long, b_max long, n_events long, total_value double, "
+    "min_block long, max_block long, range_digest long"
+)
+
+
+def range_tree_agg(
+    spark: SparkSession,
+    sf_dir: str,
+    b_min: "int | None" = None,
+    b_max: "int | None" = None,
+) -> DataFrame:
+    """A25 — the O(log-range) block-range aggregate: count, exact value
+    total, block bounds, and range digest for `[B_min, B_max)` answered
+    from the tile cover + two edge windows of the events table. The
+    public parameterized surface takes any (b_min, b_max); the pinned
+    gate face defaults to the ⅕ and ⅘ points of the block space
+    (scale-invariant probe, the A22 pattern). The answer is one row
+    with no owner axis, so it is folded on the driver and returned as
+    one local frame: no Spark job runs until it is acted on."""
+    req = RANGE_TREE.request(spark, sf_dir, b_min, b_max)
+    if req is None:  # zero-row corpus, or a degenerate range
+        return spark.createDataFrame([], _AGG_DDL)
+    b_min, b_max, cover, edges = req
+    row = (b_min, b_max, *RANGE_TREE.driver_fold(spark, sf_dir, cover, edges))
+    return local_frame(spark, [row], _AGG_DDL)
+
+
+_Q2_EMPTY = "owner long, pos int, token_id long, b_min long, b_max long"
 
 
 def q2_range_tree_topl(
@@ -619,7 +743,7 @@ def q2_range_tree_topl(
 ) -> DataFrame:
     """A26 — Query2 answered from the tile tree in O(log range): per-owner
     first-L distinct mapping keys over [b_min, b_max), read from the
-    canonical cover (≤ 2 tiles/level) plus two < TILE_SIZE edge scans
+    canonical cover (≤ 2 tiles/level) plus two < TILE_SIZE edge windows
     of the block-clustered entry store. The public parameterized
     surface — (owner, b_min, b_max, L, contract) — with the pinned gate
     face as one instantiation (owner=None → all owners; bounds default
@@ -627,13 +751,9 @@ def q2_range_tree_topl(
     Q2_L, exactly as the circuit's L is fixed at setup; each contract
     serves its own key-tile tree (one storage DB per contract).
 
-    Read shape: with an `owner`, the answer is folded on the driver
-    (_q2_owner_keys: `artifacts.read_rows` of the owner's cover tiles
-    and edge entries) and returned as one local frame — no Spark job
-    until it is acted on. With owner=None the output grows with the
-    number of owners, so it stays a Spark plan: the cover filter over
-    the served tiles and the edge-window filter over the entry store,
-    unioned and merged per owner.
+    With an `owner` the answer is folded on the driver and returned as
+    one local frame; with owner=None it is a Spark plan whose finisher
+    explodes each owner's first L keys.
 
     `with_first=True` appends each key's first COVERED occurrence
     (first_cell, first_pos) from the tile structs — first_cell =
@@ -647,10 +767,15 @@ def q2_range_tree_topl(
             "rebuild the tree with a larger Q2_L (the circuit-setup analog)"
         )
     ddl = _Q2_EMPTY + (", first_cell long, first_pos int" if with_first else "")
+    req = Q2_KEY_TREE.request(spark, sf_dir, b_min, b_max, contract)
+    if req is None:
+        return spark.createDataFrame([], ddl)
+    b_min, b_max, cover, edges = req
     if owner is not None:
         owner = int(owner)
-        b_min, b_max = _probe_range(spark, sf_dir, b_min, b_max)
-        keys = _q2_owner_keys(spark, sf_dir, owner, b_min, b_max, L, contract)
+        keys = Q2_KEY_TREE.driver_fold(
+            spark, sf_dir, cover, edges, owner, contract
+        )[:L]
         return local_frame(
             spark,
             [
@@ -660,49 +785,6 @@ def q2_range_tree_topl(
             ],
             ddl,
         )
-    path = artifacts.ensure(*_q2_key_spec(spark, sf_dir, contract))
-    # served metadata from the parquet footer, read after the ensure —
-    # an agg(max) here would scan every tile row and grow with the
-    # corpus (measured: the 100× probe's residual slope was this fetch)
-    ml = artifacts.footer_stats(path).span("level")[1]
-    if ml is None:  # no qualifying entries anywhere
-        return spark.createDataFrame([], ddl)
-    b_min, b_max = _probe_range(spark, sf_dir, b_min, b_max)
-    cover, edges = tile_cover(b_min, b_max, int(ml))
-    if not cover and not edges:
-        return spark.createDataFrame([], ddl)
-
-    tiles = cached_parquet(spark, path)
-    parts = []
-    if cover:
-        cond = _cover_cond(cover)
-        parts.append(tiles.filter(cond).select("owner", "keys"))
-    if edges:
-        econd = _edge_cond(edges)
-        e = serve_q2_entry_store(spark, sf_dir, contract).filter(econd)
-        parts.append(
-            e.groupBy("owner")
-            .agg(
-                F.slice(F.array_sort(F.collect_set("token_id")), 1, Q2_L)
-                .alias("ks")
-            )
-            .select(
-                "owner",
-                F.expr(
-                    "transform(ks, t -> struct(t AS t,"
-                    f" {_EDGE_SENTINEL_CELL}L AS cell,"
-                    " 2147483647 AS p))"
-                ).alias("keys"),
-            )
-        )
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    topl = (
-        merged.groupBy("owner")
-        .agg(F.array_sort(F.flatten(F.collect_list("keys"))).alias("s"))
-        .select("owner", _dedup_first_l("s", L).alias("keys"))
-    )
     cols = [
         "owner",
         (F.col("pos0") + 1).cast("int").alias("pos"),
@@ -715,188 +797,10 @@ def q2_range_tree_topl(
             F.col("kx.cell").alias("first_cell"),
             F.col("kx.p").alias("first_pos"),
         ]
-    return topl.select(
-        "owner", F.posexplode("keys").alias("pos0", "kx")
-    ).select(*cols)
-
-
-# --- the ERC-20 family over the tile tree: per-owner u256 reward ------------
-#
-# A25 carries the GLOBAL scalar monoids, A26 the per-owner KEY SETS;
-# this face completes the pair of reference query families: the
-# per-owner u256 REWARD (query_erc20/block/ — the block tree whose
-# nodes aggregate leaf-circuit rewards) over an arbitrary
-# [B_min, B_max), answered from per-(owner, cell) LIMB-SUM tiles. The
-# u256 monoid is the same limb-wise decimal(38) sum the D20
-# `erc20_reward_view` spec maintains (carry normalization deferred to
-# read), so tile merge ≡ re-aggregation in any order; the Arrow leaf
-# circuit runs once per corpus version at entry-leaf artifact build,
-# never at query time (edges read the block-clustered entry rows with
-# event_id pushdown and fold them in column expressions).
-
-
-def _erc20_leaves_spec(
-    spark: SparkSession,
-    sf_dir: str,
-    rewards_rate: "int | None",
-    contract: "str | None",
-) -> tuple:
-    """Per-entry leaf-circuit rewards over ALL of one contract's entries
-    (the un-range-restricted sibling of merkle.erc20_entry_leaves — the
-    block dimension is the QUERY parameter here), BLOCK-CLUSTERED at
-    write so edge scans push their event_id range to the parquet
-    row groups."""
-    from euclid_spark.operators.euclid import (
-        CONTRACT,
-        REWARDS_RATE,
-        erc20_leaf_rows,
-    )
-
-    rate = REWARDS_RATE if rewards_rate is None else int(rewards_rate)
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"],
-        op="erc20_all_entry_leaves", rate=rate, tile=TILE_SIZE,
-        layout="block_v2",
-        contract=CONTRACT if contract is None else contract,
-    )
-
-    def build() -> DataFrame:
-        ev = load_events(spark, sf_dir).filter(
-            F.col("event_type")
-            == (CONTRACT if contract is None else contract)
-        )
-        rows = erc20_leaf_rows(ev, rewards_rate)
-        return (
-            rows.withColumn(
-                "cell",
-                F.floor(F.col("event_id") / TILE_SIZE).cast("long"),
-            )
-            .repartitionByRange(8, "event_id")
-            .sortWithinPartitions("event_id")
-        )
-
-    # fine row groups: edge-window pruning
-    return "erc20_all_entry_leaves", fp, build, artifacts.FINE_ROW_GROUPS
-
-
-def erc20_all_entry_leaves_path(
-    spark: SparkSession,
-    sf_dir: str,
-    rewards_rate: "int | None" = None,
-    contract: "str | None" = None,
-) -> str:
-    """The block-clustered ERC-20 entry-leaf store's artifact path."""
-    return artifacts.ensure(
-        *_erc20_leaves_spec(spark, sf_dir, rewards_rate, contract)
-    )
-
-
-def serve_erc20_all_entry_leaves(
-    spark: SparkSession,
-    sf_dir: str,
-    rewards_rate: "int | None" = None,
-    contract: "str | None" = None,
-) -> DataFrame:
-    """The block-clustered ERC-20 entry-leaf store as a Spark scan."""
-    return artifacts.serve_frame(
-        spark, *_erc20_leaves_spec(spark, sf_dir, rewards_rate, contract)
-    )
-
-
-_DEC38 = "decimal(38,0)"
-
-
-def _erc20_tile_agg(df: DataFrame, keys: "list") -> DataFrame:
-    return df.groupBy(*keys).agg(
-        *[
-            F.sum(F.col(f"l{i}").cast(_DEC38)).cast(_DEC38).alias(f"s{i}")
-            for i in range(4)
-        ],
-        F.sum("zs").cast("long").alias("zs"),
-        F.sum("of").cast("long").alias("of"),
-        F.count(F.lit(1)).alias("n_entries"),
-    )
-
-
-def _erc20_fold_up(lvl: DataFrame) -> DataFrame:
-    return lvl.groupBy(
-        F.shiftright(F.col("cell"), 1).alias("cell"), "owner"
-    ).agg(
-        *[F.sum(f"s{i}").cast(_DEC38).alias(f"s{i}") for i in range(4)],
-        F.sum("zs").cast("long").alias("zs"),
-        F.sum("of").cast("long").alias("of"),
-        F.sum("n_entries").cast("long").alias("n_entries"),
-    )
-
-
-def build_erc20_reward_tree(
-    spark: SparkSession,
-    sf_dir: str,
-    rewards_rate: "int | None" = None,
-    contract: "str | None" = None,
-) -> DataFrame:
-    import math
-
-    ev = load_events(spark, sf_dir)
-    mb = ev.agg(F.max("event_id")).collect()[0][0]  # one-row fetch
-    n_cells = (int(mb or 0) // TILE_SIZE) + 1
-    depth = max(1, math.ceil(math.log2(n_cells))) if n_cells > 1 else 1
-    leaves = serve_erc20_all_entry_leaves(spark, sf_dir, rewards_rate, contract)
-    lvl = _erc20_tile_agg(leaves, ["cell", "owner"])
-    out = [lvl.withColumn("level", F.lit(0))]
-    for k in range(1, depth + 1):
-        lvl = _erc20_fold_up(lvl)
-        out.append(lvl.withColumn("level", F.lit(k)))
-    tiles = out[0]
-    for o in out[1:]:
-        tiles = tiles.unionByName(o)
-    return tiles.select(
-        "level", "cell", "owner", "s0", "s1", "s2", "s3", "zs", "of",
-        "n_entries",
-    )
-
-
-def _erc20_tree_fp(
-    sf_dir: str, rewards_rate: "int | None", contract: "str | None"
-) -> str:
-    from euclid_spark import artifacts
-    from euclid_spark.operators.euclid import CONTRACT, REWARDS_RATE
-
-    rate = REWARDS_RATE if rewards_rate is None else int(rewards_rate)
-    return artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"],
-        op="erc20_reward_tree", rate=rate, tile=TILE_SIZE,
-        layout="owner_v3",
-        contract=CONTRACT if contract is None else contract,
-    )
-
-
-def _erc20_tree_spec(
-    spark: SparkSession,
-    sf_dir: str,
-    rewards_rate: "int | None",
-    contract: "str | None",
-) -> tuple:
-    """The per-owner reward tile tree, owner-clustered with fine row
-    groups so a cover predicate prunes to O(cover) row groups."""
     return (
-        "erc20_reward_tiles",
-        _erc20_tree_fp(sf_dir, rewards_rate, contract),
-        lambda: build_erc20_reward_tree(spark, sf_dir, rewards_rate, contract)
-        .repartitionByRange(8, "owner")
-        .sortWithinPartitions("owner", "level", "cell"),
-        artifacts.FINE_ROW_GROUPS,
-    )
-
-
-def serve_erc20_reward_tree(
-    spark: SparkSession,
-    sf_dir: str,
-    rewards_rate: "int | None" = None,
-    contract: "str | None" = None,
-) -> DataFrame:
-    return artifacts.serve_frame(
-        spark, *_erc20_tree_spec(spark, sf_dir, rewards_rate, contract)
+        Q2_KEY_TREE.spark_answer(spark, sf_dir, cover, edges, contract)
+        .select("owner", F.posexplode(F.slice("keys", 1, L)).alias("pos0", "kx"))
+        .select(*cols)
     )
 
 
@@ -904,58 +808,6 @@ _ERC20_EMPTY = (
     "owner long, reward_hex string, n_zero_supply long, n_overflow long, "
     "n_entries long, b_min long, b_max long"
 )
-_ERC20_SUMS = ("s0", "s1", "s2", "s3", "zs", "of", "n_entries")
-
-
-def _erc20_owner_total(
-    spark: SparkSession,
-    sf_dir: str,
-    tiles_path: str,
-    owner: int,
-    cover: "list[tuple[int, int]]",
-    edges: "list[tuple[int, int]]",
-    rewards_rate: "int | None",
-    contract: "str | None",
-) -> "tuple | None":
-    """One owner's reward row over the cover + edges, folded on the
-    driver — (reward_hex, n_zero_supply, n_overflow, n_entries), or
-    None when the owner has no entry in range. Reads the owner's
-    ≤ 2-per-level cover tiles and its entry leaves in the two edge
-    windows; the limb sums follow SQL's null rules and the u256 result
-    is Σ sᵢ·2^(64i) mod 2²⁵⁶ as 64 hex digits (u256_carry_hex)."""
-    own = ("owner", "=", owner)
-    parts = (
-        artifacts.read_rows(
-            tiles_path, _cover_filter(cover, own), list(_ERC20_SUMS)
-        )
-        if cover
-        else []
-    )
-    if edges:
-        leaves = artifacts.read_rows(
-            erc20_all_entry_leaves_path(spark, sf_dir, rewards_rate, contract),
-            _edge_filter(edges, own),
-            ["l0", "l1", "l2", "l3", "zs", "of"],
-        )
-        if leaves:  # the Spark face's per-owner edge group
-            part = {
-                f"s{i}": _sql_agg(sum, (r[f"l{i}"] for r in leaves))
-                for i in range(4)
-            }
-            part["zs"] = _sql_agg(sum, (r["zs"] for r in leaves))
-            part["of"] = _sql_agg(sum, (r["of"] for r in leaves))
-            part["n_entries"] = len(leaves)
-            parts.append(part)
-    if not parts:
-        return None
-    tot = {c: _sql_agg(sum, (p[c] for p in parts)) for c in _ERC20_SUMS}
-    limbs = [tot[f"s{i}"] for i in range(4)]
-    reward = (
-        None
-        if any(v is None for v in limbs)
-        else "%064x" % (sum(int(v) << (64 * i) for i, v in enumerate(limbs)) % 2**256)
-    )
-    return reward, tot["zs"], tot["of"], tot["n_entries"]
 
 
 def erc20_range_tree_reward(
@@ -970,75 +822,38 @@ def erc20_range_tree_reward(
     """A29 — the ERC-20 reward over an ARBITRARY block range in
     O(log range): per-owner ⌊balance·rate/supply⌋ u256 totals for
     [B_min, B_max) folded from the canonical tile cover + two edge
-    scans of the block-clustered entry-leaf artifact — with A25/A26
+    windows of the block-clustered entry-leaf store — with A25/A26
     this makes BOTH reference query families answerable from tiles
     over any range. Parameterized (owner, b_min, b_max, rewards_rate);
     the pinned face is all owners over the ⅕..⅘ probe range; each
     contract serves its own reward tile tree.
 
-    Read shape: with an `owner`, the row is folded on the driver
-    (_erc20_owner_total) and returned as one local frame — no Spark
-    job until it is acted on. With owner=None the output grows with
-    the number of owners, so it stays a Spark plan: the cover filter
-    over the served tiles and a per-owner limb sum of the edge-window
-    leaves, unioned and carried to hex per owner."""
+    With an `owner` the row is folded on the driver and returned as one
+    local frame; with owner=None it is a Spark plan whose finisher
+    carries each owner's limb sums to hex."""
     from euclid_spark.functions.u256 import u256_carry_hex
 
-    path = artifacts.ensure(
-        *_erc20_tree_spec(spark, sf_dir, rewards_rate, contract)
-    )
-    # footer-stats metadata fetch, after the ensure — see
-    # q2_range_tree_topl's note
-    ml = artifacts.footer_stats(path).span("level")[1]
-    if ml is None:
+    p = {"contract": contract, "rate": rewards_rate}
+    req = ERC20_REWARD_TREE.request(spark, sf_dir, b_min, b_max, **p)
+    if req is None:
         return spark.createDataFrame([], _ERC20_EMPTY)
-    b_min, b_max = _probe_range(spark, sf_dir, b_min, b_max)
-    cover, edges = tile_cover(b_min, b_max, int(ml))
-    if not cover and not edges:
-        return spark.createDataFrame([], _ERC20_EMPTY)
+    b_min, b_max, cover, edges = req
     if owner is not None:
         owner = int(owner)
-        tot = _erc20_owner_total(
-            spark, sf_dir, path, owner, cover, edges, rewards_rate, contract
+        tot = ERC20_REWARD_TREE.driver_fold(
+            spark, sf_dir, cover, edges, owner, **p
         )
         rows = [] if tot is None else [(owner, *tot, b_min, b_max)]
         return local_frame(spark, rows, _ERC20_EMPTY)
-
-    tiles = cached_parquet(spark, path)
-    parts = []
-    if cover:
-        cond = _cover_cond(cover)
-        parts.append(
-            tiles.filter(cond).select(
-                "owner", "s0", "s1", "s2", "s3", "zs", "of", "n_entries"
-            )
-        )
-    if edges:
-        econd = _edge_cond(edges)
-        e = serve_erc20_all_entry_leaves(
-            spark, sf_dir, rewards_rate, contract
-        ).filter(econd)
-        parts.append(
-            _erc20_tile_agg(e, ["owner"]).select(
-                "owner", "s0", "s1", "s2", "s3", "zs", "of", "n_entries"
-            )
-        )
-    partials = parts[0]
-    for p in parts[1:]:
-        partials = partials.unionByName(p)
-    total = partials.groupBy("owner").agg(
-        *[F.sum(f"s{i}").cast(_DEC38).alias(f"s{i}") for i in range(4)],
-        F.sum("zs").cast("long").alias("n_zero_supply"),
-        F.sum("of").cast("long").alias("n_overflow"),
-        F.sum("n_entries").cast("long").alias("n_entries"),
-    )
-    return total.select(
+    return ERC20_REWARD_TREE.spark_answer(
+        spark, sf_dir, cover, edges, **p
+    ).select(
         "owner",
         u256_carry_hex(
             F.col("s0"), F.col("s1"), F.col("s2"), F.col("s3")
         ).alias("reward_hex"),
-        "n_zero_supply",
-        "n_overflow",
+        F.col("zs").alias("n_zero_supply"),
+        F.col("of").alias("n_overflow"),
         "n_entries",
         F.lit(b_min).cast("long").alias("b_min"),
         F.lit(b_max).cast("long").alias("b_max"),
@@ -1102,11 +917,7 @@ ORACLES = {
     """,
 }
 
-from euclid_spark.operators.euclid import REWARDS_RATE as _RATE  # noqa: E402
-
-from euclid_spark.operators.euclid import u256_overflow_oracle_sql  # noqa: E402
-
-_A29_OVERFLOW_SQL = u256_overflow_oracle_sql(_RATE)
+_A29_OVERFLOW_SQL = u256_overflow_oracle_sql(REWARDS_RATE)
 
 # A29: full HUGEINT recompute over the range — the gate proves the
 # per-owner limb-sum tile path equals re-running the leaf circuit on
@@ -1129,7 +940,7 @@ ORACLES["euclid_erc20_range_tree_reward"] = f"""
            lpad(lower(to_hex(SUM(
                CASE WHEN tok IS NULL OR tok = 0 THEN CAST(0 AS HUGEINT)
                     ELSE (scaled * CAST('18446744073709551616' AS HUGEINT)
-                          + event_id) * {_RATE} // tok
+                          + event_id) * {REWARDS_RATE} // tok
                END))), 64, '0') AS reward_hex,
            CAST(SUM(CASE WHEN tok IS NULL OR tok = 0 THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_zero_supply,

@@ -6,6 +6,7 @@ Every key in SURVEY.md §2 appears here once its module lands.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -180,13 +181,27 @@ def oracles(sf_dir: str = "/root/testdata/sf0.01") -> dict[str, str]:
     corpus-fingerprint-keyed, so the SQL string depends on sf_dir. The
     default is the driver's correctness-gate corpus. A generator that
     raises (e.g. corpus missing) degrades that key to the rows-only
-    check instead of failing the whole lookup."""
+    check instead of failing the whole lookup — loudly: see
+    `oracle_lookup`."""
+    return oracle_lookup(sf_dir)[0]
+
+
+def oracle_lookup(sf_dir: str) -> "tuple[dict[str, str], dict[str, str]]":
+    """(oracles, degraded): `oracles()`'s key → SQL map, and key → error
+    for every key whose dynamic generator raised. Each degraded key is
+    also logged at WARNING."""
     out: dict[str, str] = {}
+    degraded: dict[str, str] = {}
     for m in _MODULES:
         out.update(m.ORACLES)
         for k, gen in getattr(m, "DYNAMIC_ORACLES", {}).items():
             try:
                 out[k] = gen(sf_dir)
-            except Exception:  # noqa: BLE001 — degrade to rows-only
+            except Exception as ex:  # noqa: BLE001 — degrade to rows-only
                 out.pop(k, None)
-    return out
+                degraded[k] = f"{type(ex).__name__}: {ex}"
+                logging.getLogger(__name__).warning(
+                    "oracle for %s degraded to a rows-only check: %s",
+                    k, degraded[k],
+                )
+    return out, degraded

@@ -55,6 +55,13 @@ from euclid_spark.catalog import cached_parquet
 from euclid_spark import artifacts
 from euclid_spark.functions.hashing import DIGEST_PRIME, MIX, digest_agg, digest_term
 from euclid_spark.operators import curation, dedup, euclid, mpt_ingest, timeseries
+from euclid_spark.operators.range_response import q2_leaf_hash
+from euclid_spark.operators.range_tree import (
+    _RT_LEVELS,
+    Q2_KEY_TREE,
+    RANGE_TREE,
+    TILE_SIZE,
+)
 # IVF_FACE_K: seed-centroid count for the gate-checkable IVF model — one
 # constant with the batch search face (similarity.sim_ivf_pinned_topk),
 # so the maintained lists and the pinned search path describe one model
@@ -509,15 +516,17 @@ MAINTAINED: "dict[str, Maintained]" = {
         "user_id long, day date, last_value double, last_event_id bigint, "
         "n_events bigint",
     ),
-    # A25's range-tree tiles, the streamed analog of
-    # query2/block/partial_node.rs: appending blocks updates one path of
-    # tiles, not the tree. The gate compares the FULL tile store with
-    # every (chunk, level, cell) tile computed from raw events.
+    # The tile trees' streaming upkeep comes from their declarations
+    # (range_tree.TileTree.partial/merge — the same leaf and combine the
+    # batch levels use), the streamed analog of partial_node.rs:
+    # appending blocks updates one path of tiles, not the tree. A25's
+    # gate compares the FULL tile store with every (chunk, level, cell)
+    # tile computed from raw events.
     "stream_range_tree_tiles": Maintained(
         "stream_range_tree_tiles",
         dict(op="stream_range_tree", v=1),
-        _p._range_tree_partial,
-        _p._range_tree_merge,
+        RANGE_TREE.partial,
+        RANGE_TREE.merge,
         "day int, level int, cell long, n_events bigint, sum_value double, "
         "min_block long, max_block long, digest bigint",
         read=lambda v: v.select(
@@ -529,21 +538,23 @@ MAINTAINED: "dict[str, Maintained]" = {
     # A26's Query2 FIRST-L distinct-key tiles (query2/block/full_node.rs).
     # Per-batch TRUNCATED partials must re-merge to the from-scratch
     # first-L: a dropped key is larger than ≥L keys of its own slice, so
-    # no truncation evicts a key the answer needs. Read explodes to
-    # (tile, pos, token_id) so the oracle's ROW_NUMBER compares exactly.
+    # no truncation evicts a key the answer needs. The state keeps each
+    # key's earliest leaf cell but no in-cell rank (a batch cannot know
+    # it); read explodes the token ids to (tile, pos, token_id) so the
+    # oracle's ROW_NUMBER compares exactly.
     "stream_q2_key_tiles": Maintained(
         "stream_q2_key_tiles",
         dict(op="stream_q2_key_tiles", v=1),
-        _p._q2_tiles_partial,
-        _p._q2_tiles_merge,
+        Q2_KEY_TREE.partial,
+        Q2_KEY_TREE.merge,
         "day int, level int, cell long, owner long, pos int, token_id long",
         read=lambda v: v.select(
             "day", "level", "cell", "owner",
-            F.posexplode("keys").alias("pos0", "token_id"),
+            F.posexplode("keys").alias("pos0", "k"),
         ).select(
             "day", "level", "cell", "owner",
             (F.col("pos0") + 1).cast("int").alias("pos"),
-            "token_id",
+            F.col("k.t").alias("token_id"),
         ),
     ),
     # B47's per-day integer log-histogram tiles — the mergeable-sketch
@@ -625,9 +636,10 @@ MAINTAINED: "dict[str, Maintained]" = {
         ),
     ),
     # The Q2 twin (A30): per-(owner, cell) DISTINCT-KEY leaf sets
-    # (idempotent set union — 16th D20 spec), leaf = sha256(token_id).
-    # With the ERC-20 row, both reference query families' response
-    # commitments have gate-checked incremental maintenance.
+    # (idempotent set union — 16th D20 spec), hashed at read with the
+    # response stores' own leaf encoding. With the ERC-20 row, both
+    # reference query families' response commitments have gate-checked
+    # incremental maintenance.
     "stream_q2_cell_roots": Maintained(
         "stream_q2_cell_roots",
         dict(op="stream_q2_cell_roots", v=1),
@@ -635,7 +647,7 @@ MAINTAINED: "dict[str, Maintained]" = {
         _p._rr_q2_cell_leaves_merge,
         "owner long, cell long, n_keys long, root string",
         read=lambda v: _cell_roots(
-            v, "tokens", F.sha2(F.col("lf").cast("string"), 256), "n_keys"
+            v, "tokens", q2_leaf_hash(F.col("lf")), "n_keys"
         ),
     ),
     # B56's per-(user, hour) OHLC bars as a SELECTION monoid: the state
@@ -1242,8 +1254,6 @@ def _curation_kept_sql() -> str:
 
 def _q2_key_tiles_sql() -> str:
     from euclid_spark.operators.euclid import TOP_L
-    from euclid_spark.operators.range_tree import TILE_SIZE
-    from euclid_spark.streaming.parity import _RT_LEVELS
 
     return f"""
         WITH e AS (
@@ -1271,10 +1281,7 @@ def _q2_key_tiles_sql() -> str:
     """
 
 
-def _range_tree_tiles_sql() -> str:
-    from euclid_spark.operators.range_tree import TILE_SIZE
-    from euclid_spark.streaming.parity import _RT_LEVELS
-
+def _rt_stream_tiles_sql() -> str:
     return f"""
         SELECT CAST((event_id // {TILE_SIZE}) >> {_RT_LEVELS} AS INT) AS day,
                CAST(g.level AS INT) AS level,
@@ -1363,8 +1370,6 @@ def _cell_roots_sql(base: str, order: str, leaf: str, n_col: str) -> str:
     ...): leaves in `order`, then one halving CTE per tree level —
     pairs hash, an unpaired tail promotes unchanged — down to the root;
     a cell holds ≤ TILE_SIZE leaves, so log2(TILE_SIZE) halvings reach it."""
-    from euclid_spark.operators.range_tree import TILE_SIZE
-
     depth = TILE_SIZE.bit_length() - 1
     halvings = ",\n".join(
         f"""l{k} AS (
@@ -1397,7 +1402,6 @@ FROM counts c JOIN l{depth} r ON r.owner = c.owner AND r.cell = c.cell
 
 def _q2_cell_roots_sql() -> str:
     from euclid_spark.operators.euclid import _TOKEN
-    from euclid_spark.operators.range_tree import TILE_SIZE
 
     return _cell_roots_sql(
         f"""
@@ -1413,7 +1417,6 @@ def _q2_cell_roots_sql() -> str:
 
 def _erc20_cell_roots_sql() -> str:
     from euclid_spark.operators.euclid import REWARDS_RATE, _TOKEN
-    from euclid_spark.operators.range_tree import TILE_SIZE
 
     return _cell_roots_sql(
         f"""
@@ -1587,7 +1590,7 @@ QUERIES = {
 ORACLES = {
     "stream_epoch_shards": curation.ORACLES["curation_epoch_shards"],
     "stream_soft_dedup_weights": _soft_dedup_weights_sql(),
-    "stream_range_tree_tiles": _range_tree_tiles_sql(),
+    "stream_range_tree_tiles": _rt_stream_tiles_sql(),
     "stream_q2_key_tiles": _q2_key_tiles_sql(),
     "stream_hdr_quantile_tiles": _hdr_tiles_sql(),
     "stream_lc_distinct_tiles": _lc_tiles_sql(),

@@ -42,6 +42,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from euclid_spark.functions.hashing import DIGEST_PRIME, digest_agg, digest_term
+from euclid_spark.operators.range_response import erc20_entry_hex, erc20_leaf_hash
+from euclid_spark.operators.range_tree import (
+    ERC20_REWARD_TREE,
+    Q2_KEY_TREE,
+    RANGE_TREE,
+    _cell,
+    _q2_entries,
+    stream_chunk,
+)
 from euclid_spark.streaming.block_db import EVENTS_NS_SCHEMA, read_event_stream
 from euclid_spark.streaming.ivm import (
     _merge,
@@ -474,203 +483,12 @@ def _lc_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
     )
 
 
-# --- A25's range-tree tiles as a maintained aggregate ------------------------
-
-_RT_LEVELS = 6  # tree levels maintained by the streaming spec
-
-
-def _range_tree_partial(events: DataFrame) -> DataFrame:
-    """The A25 tile tree as a streaming monoid: each event contributes
-    one (level, cell) partial per tree level (cell = block cell >> k),
-    so a micro-batch's partials cover every level at batch cost ×
-    (levels+1). The partition key (`day` in the IVM machinery's terms)
-    is the level-_RT_LEVELS chunk — every tile at level ≤ _RT_LEVELS
-    lies inside exactly one chunk, so a batch rewrites only the block
-    chunks it touches (partial_node.rs's locality: appending block n
-    re-proves one path, not the tree)."""
-    from euclid_spark.operators.range_tree import TILE_SIZE
-
-    term = digest_term(
-        F.col("event_id").cast("long"), F.col("user_id").cast("long")
-    )
-    cell0 = f"CAST(FLOOR(event_id / {TILE_SIZE}) AS BIGINT)"
-    return (
-        events.select(
-            "event_id",
-            "user_id",
-            "value",
-            F.explode(F.sequence(F.lit(0), F.lit(_RT_LEVELS))).alias("level"),
-        )
-        .select(
-            # INT not LONG: the view's day-partition directory values are
-            # re-inferred as int32 on read — match that type up front
-            F.expr(f"shiftright({cell0}, {_RT_LEVELS})")
-            .cast("int")
-            .alias("day"),
-            "level",
-            F.expr(f"shiftright({cell0}, CAST(level AS INT))").alias("cell"),
-            "event_id",
-            "user_id",
-            "value",
-        )
-        .groupBy("day", "level", "cell")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("decimal(28,6)")
-            .alias("sum_value"),
-            F.min("event_id").alias("min_block"),
-            F.max("event_id").alias("max_block"),
-            digest_agg(term).alias("digest"),
-        )
-    )
-
-
-def _range_tree_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
-    return (
-        old.unionByName(partial)
-        .groupBy("day", "level", "cell")
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("sum_value").cast("decimal(28,6)").alias("sum_value"),
-            F.min("min_block").alias("min_block"),
-            F.max("max_block").alias("max_block"),
-            F.pmod(F.sum("digest"), F.lit(DIGEST_PRIME))
-            .cast("long")
-            .alias("digest"),
-        )
-    )
-
-
-# --- A26's Query2 key tiles as a maintained aggregate -------------------------
-
-
-def _q2_tiles_partial(events: DataFrame) -> DataFrame:
-    """The Query2 key tile tree (range_tree.py A26) as a streaming
-    monoid: per (chunk, level, cell, owner), the FIRST-L distinct
-    mapping keys — the bounded min-L selection lattice
-    (query2/block/full_node.rs's set-union + revelation's L bound).
-    The interesting parity property: per-batch TRUNCATED partials must
-    re-merge to exactly the from-scratch first-L under any batch split
-    — true because every key a truncation drops is larger than ≥L keys
-    of its own (cell, owner) slice, hence larger than ≥L keys of any
-    union containing it. Partition key = block chunk (the A25 spec's
-    locality: a batch rewrites only touched chunks)."""
-    from euclid_spark.operators.euclid import TOP_L
-    from euclid_spark.operators.range_tree import TILE_SIZE
-
-    tok = F.get_json_object("props", "$.k").cast("long")
-    cell0 = f"CAST(FLOOR(event_id / {TILE_SIZE}) AS BIGINT)"
-    return (
-        events.filter(F.col("event_type") == "purchase")
-        .withColumn("token_id", tok)
-        .filter(F.col("token_id").isNotNull())
-        .select(
-            "event_id",
-            F.col("user_id").alias("owner"),
-            "token_id",
-            F.explode(F.sequence(F.lit(0), F.lit(_RT_LEVELS))).alias("level"),
-        )
-        .select(
-            F.expr(f"shiftright({cell0}, {_RT_LEVELS})")
-            .cast("int")
-            .alias("day"),
-            "level",
-            F.expr(f"shiftright({cell0}, CAST(level AS INT))").alias("cell"),
-            "owner",
-            "token_id",
-        )
-        .groupBy("day", "level", "cell", "owner")
-        .agg(
-            F.slice(F.array_sort(F.collect_set("token_id")), 1, TOP_L)
-            .alias("keys")
-        )
-    )
-
-
-def _q2_tiles_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
-    from euclid_spark.operators.euclid import TOP_L
-
-    return (
-        old.unionByName(partial)
-        .groupBy("day", "level", "cell", "owner")
-        .agg(
-            F.slice(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list("keys")))),
-                1,
-                TOP_L,
-            ).alias("keys")
-        )
-    )
-
-
-# --- A29's ERC-20 reward tiles as a maintained aggregate ----------------------
-
-
-def _erc20_tiles_partial(events: DataFrame) -> DataFrame:
-    """The A29 per-(owner, cell) u256 reward tile tree as a streaming
-    monoid (query_erc20/block/'s nodes): the leaf circuit runs per
-    batch, limb-wise decimal(38) sums key on (chunk, level, cell,
-    owner) — carry normalization defers to read, so merge order cannot
-    matter; each entry touches one cell per level (the A25/A26 explode).
-    """
-    from euclid_spark.operators.euclid import erc20_leaf_rows
-    from euclid_spark.operators.range_tree import TILE_SIZE
-
-    rows = erc20_leaf_rows(
-        events.filter(F.col("event_type") == "purchase")
-    )
-    cell0 = f"CAST(FLOOR(event_id / {TILE_SIZE}) AS BIGINT)"
-    return (
-        rows.select(
-            "owner",
-            "event_id",
-            *[f"l{i}" for i in range(4)],
-            "zs",
-            "of",
-            F.explode(F.sequence(F.lit(0), F.lit(_RT_LEVELS))).alias("level"),
-        )
-        .select(
-            F.expr(f"shiftright({cell0}, {_RT_LEVELS})")
-            .cast("int")
-            .alias("day"),
-            "level",
-            F.expr(f"shiftright({cell0}, CAST(level AS INT))").alias("cell"),
-            "owner",
-            *[f"l{i}" for i in range(4)],
-            "zs",
-            "of",
-        )
-        .groupBy("day", "level", "cell", "owner")
-        .agg(
-            *[
-                F.sum(F.col(f"l{i}").cast("decimal(38,0)")).alias(f"s{i}")
-                for i in range(4)
-            ],
-            F.sum("zs").cast("long").alias("zs"),
-            F.sum("of").cast("long").alias("of"),
-            F.count(F.lit(1)).alias("n_entries"),
-        )
-    )
-
-
-def _erc20_tiles_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
-    return (
-        old.unionByName(partial)
-        .groupBy("day", "level", "cell", "owner")
-        .agg(
-            *[
-                F.sum(F.col(f"s{i}")).cast("decimal(38,0)").alias(f"s{i}")
-                for i in range(4)
-            ],
-            F.sum("zs").cast("long").alias("zs"),
-            F.sum("of").cast("long").alias("of"),
-            F.sum("n_entries").cast("long").alias("n_entries"),
-        )
-    )
-
-
 # --- A30/A31's response-commitment leaf sets as a maintained aggregate --------
+#
+# The A25/A26/A29 tile trees are maintained by their own declarations
+# (range_tree.TileTree.partial/merge, entered in SPECS below). These two
+# keep the LEVEL-0 leaf sets of the range-response commitments; their
+# rows and leaf hashes come from the same builders the batch stores use.
 
 
 def _rr_cell_leaves_partial(events: DataFrame) -> DataFrame:
@@ -683,39 +501,13 @@ def _rr_cell_leaves_partial(events: DataFrame) -> DataFrame:
     merge = order-insensitive set union re-sorted by event_id, so the
     fold to cell roots at read is split-invariant — the reference's
     IVC story applied to the r9 response artifacts."""
-    from euclid_spark.functions.u256 import u256_to_hex
-    from euclid_spark.operators.euclid import erc20_leaf_rows
-    from euclid_spark.operators.range_tree import TILE_SIZE
-
-    rows = erc20_leaf_rows(events.filter(F.col("event_type") == "purchase"))
-    entry_hex = u256_to_hex(
-        (F.col("l3"), F.col("l2"), F.col("l1"), F.col("l0"))
-    )
-    cell0 = f"CAST(FLOOR(event_id / {TILE_SIZE}) AS BIGINT)"
+    leaf = erc20_leaf_hash(F.col("event_id"), erc20_entry_hex())
     return (
-        rows.select(
-            "owner",
-            "event_id",
-            F.sha2(
-                F.concat_ws(
-                    ":", F.col("event_id").cast("string"), entry_hex
-                ),
-                256,
-            ).alias("node_hash"),
-        )
-        .select(
-            F.expr(f"shiftright({cell0}, {_RT_LEVELS})")
-            .cast("int")
-            .alias("day"),
-            F.expr(cell0).alias("cell"),
-            "owner",
-            "event_id",
-            "node_hash",
-        )
-        .groupBy("day", "owner", "cell")
+        ERC20_REWARD_TREE.rows(events, None, None)
+        .groupBy(stream_chunk(), "owner", "cell")
         .agg(
             F.array_sort(
-                F.collect_list(F.struct("event_id", "node_hash"))
+                F.collect_list(F.struct("event_id", leaf.alias("node_hash")))
             ).alias("leaves")
         )
     )
@@ -736,26 +528,13 @@ def _rr_cell_leaves_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
 def _rr_q2_cell_leaves_partial(events: DataFrame) -> DataFrame:
     """The Q2 twin of `rr_cell_leaves`: per (chunk, owner, cell), the
     DISTINCT mapping keys in key order — the level-0 structure the A30
-    Query2 range responses open into (leaf = sha256(token_id), A20's
-    encoding). Distinct-set union is idempotent, so replayed batches
-    cannot double-count a key."""
-    from euclid_spark.operators.range_tree import TILE_SIZE
-
-    tok = F.get_json_object("props", "$.k").cast("long")
-    cell0 = f"CAST(FLOOR(event_id / {TILE_SIZE}) AS BIGINT)"
+    Query2 range responses open into (their leaf hash is
+    range_response.q2_leaf_hash, applied at read). Distinct-set union
+    is idempotent, so replayed batches cannot double-count a key."""
     return (
-        events.filter(F.col("event_type") == "purchase")
-        .withColumn("token_id", tok)
-        .filter(F.col("token_id").isNotNull())
-        .select(
-            F.expr(f"shiftright({cell0}, {_RT_LEVELS})")
-            .cast("int")
-            .alias("day"),
-            F.expr(cell0).alias("cell"),
-            F.col("user_id").alias("owner"),
-            "token_id",
-        )
-        .groupBy("day", "owner", "cell")
+        _q2_entries(events)
+        .withColumn("cell", _cell())
+        .groupBy(stream_chunk(), "owner", "cell")
         .agg(F.array_sort(F.collect_set("token_id")).alias("tokens"))
     )
 
@@ -886,6 +665,11 @@ def _eth_state_finalize(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+def _tile_spec(tree) -> ParitySpec:
+    """A tile tree's streaming upkeep, as its declaration derives it."""
+    return ParitySpec(tree.name, tree.partial, tree.merge)
+
+
 SPECS = {
     "ivm_count_sum_digest": ParitySpec(
         "ivm_count_sum_digest", _partial, _merge
@@ -915,9 +699,7 @@ SPECS = {
     "count_min_sketch": ParitySpec(
         "count_min_sketch", _cms_partial, _cms_merge
     ),
-    "range_tree_tiles": ParitySpec(
-        "range_tree_tiles", _range_tree_partial, _range_tree_merge
-    ),
+    "range_tree_tiles": _tile_spec(RANGE_TREE),
     "hdr_quantile_tiles": ParitySpec(
         "hdr_quantile_tiles", _hdr_partial, _hdr_merge
     ),
@@ -931,12 +713,8 @@ SPECS = {
         "erc20_reward_view", _erc20_partial, _erc20_merge
     ),
     "ohlc_bars": ParitySpec("ohlc_bars", _ohlc_partial, _ohlc_merge),
-    "q2_key_tiles": ParitySpec(
-        "q2_key_tiles", _q2_tiles_partial, _q2_tiles_merge
-    ),
-    "erc20_reward_tiles": ParitySpec(
-        "erc20_reward_tiles", _erc20_tiles_partial, _erc20_tiles_merge
-    ),
+    "q2_key_tiles": _tile_spec(Q2_KEY_TREE),
+    "erc20_reward_tiles": _tile_spec(ERC20_REWARD_TREE),
     "rr_cell_leaves": ParitySpec(
         "rr_cell_leaves", _rr_cell_leaves_partial, _rr_cell_leaves_merge
     ),

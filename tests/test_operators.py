@@ -68,3 +68,33 @@ def test_every_query_key_is_in_survey_inventory():
     survey = open("SURVEY.md").read()
     missing = [k for k in QUERIES if f"`{k}`" not in survey]
     assert not missing, f"SURVEY.md §2 missing: {missing}"
+
+
+def test_failing_dynamic_oracle_degrades_loudly(monkeypatch, caplog):
+    """A dynamic oracle generator that raises drops its key to the
+    rows-only check, but not silently: a WARNING names the key and the
+    error, and `oracle_lookup` reports it. `oracles()` still returns a
+    plain key → SQL dict."""
+    import logging
+    import types
+
+    from euclid_spark import registry
+
+    def boom(sf_dir):
+        raise RuntimeError(f"no centroids under {sf_dir}")
+
+    fake = types.SimpleNamespace(
+        ORACLES={"static_key": "SELECT 1"},
+        DYNAMIC_ORACLES={"dyn_ok": lambda sf_dir: "SELECT 2", "dyn_bad": boom},
+    )
+    monkeypatch.setattr(registry, "_MODULES", [fake])
+    with caplog.at_level(logging.WARNING, logger="euclid_spark.registry"):
+        got = registry.oracles(SF_SMOKE)
+    assert got == {"static_key": "SELECT 1", "dyn_ok": "SELECT 2"}
+    warned = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warned) == 1
+    assert "dyn_bad" in warned[0].getMessage()
+    assert "no centroids under" in warned[0].getMessage()
+    assert registry.oracle_lookup(SF_SMOKE) == (
+        got, {"dyn_bad": f"RuntimeError: no centroids under {SF_SMOKE}"}
+    )

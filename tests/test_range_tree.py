@@ -7,13 +7,16 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from euclid_spark.catalog import load_events
 from euclid_spark.operators.range_tree import (
+    ERC20_REWARD_TREE,
+    Q2_KEY_TREE,
+    RANGE_TREE,
     TILE_SIZE,
     range_tree_agg,
-    serve_range_tree,
     tile_cover,
 )
 from tests.conftest import SF_SMOKE
@@ -56,7 +59,7 @@ def test_query_reads_log_tiles_not_range_rows(spark):
     """The scan-shape assertion: the face's tile reads are ≤
     2·(depth+1) rows and its edge scans are < 2·TILE_SIZE blocks,
     while the range itself spans ~60 % of the block space."""
-    tiles = serve_range_tree(spark, SF_SMOKE)
+    tiles = RANGE_TREE.frame(spark, SF_SMOKE)
     meta = tiles.agg(
         F.max("level").alias("ml"), F.max("max_block").alias("mb")
     ).collect()[0]
@@ -169,16 +172,12 @@ def test_q2_face_scan_shape_and_param_equivalence(spark):
     call equals the face filtered to that owner."""
     from pyspark.sql import functions as F
 
-    from euclid_spark.operators.range_tree import (
-        q2_range_tree_topl,
-        serve_q2_key_tree,
-        serve_range_tree,
-    )
+    from euclid_spark.operators.range_tree import q2_range_tree_topl
 
-    tiles = serve_q2_key_tree(spark, SF_SMOKE)
+    tiles = Q2_KEY_TREE.frame(spark, SF_SMOKE)
     max_level = int(tiles.agg(F.max("level")).collect()[0][0])
     mb = int(
-        serve_range_tree(spark, SF_SMOKE).agg(F.max("max_block")).collect()[0][0]
+        RANGE_TREE.frame(spark, SF_SMOKE).agg(F.max("max_block")).collect()[0][0]
     )
     b_min, b_max = mb // 5, mb * 4 // 5
     cover, edges = tile_cover(b_min, b_max, max_level)
@@ -255,9 +254,7 @@ def test_q2_tiles_owner_clustered_layout(spark):
     top-L reads an owner-pruned slice, never every owner's tiles."""
     import re
 
-    from euclid_spark.operators.range_tree import serve_q2_key_tree
-
-    tiles = serve_q2_key_tree(spark, SF_SMOKE)
+    tiles = Q2_KEY_TREE.frame(spark, SF_SMOKE)
     plan = (
         tiles.filter(F.col("owner") == 7)
         ._jdf.queryExecution()
@@ -277,12 +274,9 @@ def test_erc20_reward_tree_scan_shape_and_params(spark):
     >2^64 u256 zone (the whole point of the limb arithmetic)."""
     from pyspark.sql import functions as F
 
-    from euclid_spark.operators.range_tree import (
-        erc20_range_tree_reward,
-        serve_erc20_reward_tree,
-    )
+    from euclid_spark.operators.range_tree import erc20_range_tree_reward
 
-    tiles = serve_erc20_reward_tree(spark, SF_SMOKE)
+    tiles = ERC20_REWARD_TREE.frame(spark, SF_SMOKE)
     max_level = int(tiles.agg(F.max("level")).collect()[0][0])
     face = erc20_range_tree_reward(spark, SF_SMOKE).toPandas()
     assert len(face) > 0
@@ -364,7 +358,6 @@ def test_q2_tile_first_occurrence_matches_leaf_scan(spark):
     from euclid_spark.operators.range_response import _q2_cell_leaf_rows
     from euclid_spark.operators.range_tree import (
         _EDGE_SENTINEL_CELL,
-        serve_q2_key_tree,
         q2_range_tree_topl,
     )
 
@@ -373,7 +366,7 @@ def test_q2_tile_first_occurrence_matches_leaf_scan(spark):
     b_min = int(face["b_min"].iloc[0])
     b_max = int(face["b_max"].iloc[0])
     max_level = int(
-        serve_q2_key_tree(spark, SF_SMOKE).agg(F.max("level")).collect()[0][0]
+        Q2_KEY_TREE.frame(spark, SF_SMOKE).agg(F.max("level")).collect()[0][0]
     )
     cover, _ = tile_cover(b_min, b_max, max_level)
     cov_cells = [(c << k, ((c + 1) << k) - 1) for k, c in cover]
@@ -488,9 +481,63 @@ def test_owner_driver_answers_equal_spark_faces(spark):
                     ).cast("long").alias("range_digest"),
                 )
                 .select(
-                    F.lit(b_min).alias("b_min"), F.lit(b_max).alias("b_max"),
+                    F.lit(b_min).cast("long").alias("b_min"),
+                    F.lit(b_max).cast("long").alias("b_max"),
                     "*",
                 )
             )
             assert agg.schema.simpleString() == ref.schema.simpleString()
             assert rows(agg) == rows(ref), (b_min, b_max)
+
+
+# --- one declaration per tree ---------------------------------------------------
+
+
+def test_range_tree_agg_schema_is_data_independent(spark):
+    """The empty answer (a degenerate range) and a non-empty answer
+    carry one schema: the bounds are always long."""
+    full = range_tree_agg(spark, SF_SMOKE)
+    empty = range_tree_agg(spark, SF_SMOKE, b_min=10, b_max=10)
+    assert full.count() == 1 and empty.count() == 0
+    assert empty.schema.simpleString() == full.schema.simpleString()
+
+
+def test_tree_depth_is_ceil_log2():
+    """The integer depth helper equals ⌈log₂ n⌉ (at least 1) for every
+    cell count up to 2¹⁶."""
+    from euclid_spark.operators.range_tree import tree_depth
+
+    for n in range(1, 2**16 + 1):
+        assert tree_depth(n) == max(1, math.ceil(math.log2(n))), n
+
+
+@pytest.mark.parametrize(
+    "tree", [RANGE_TREE, Q2_KEY_TREE, ERC20_REWARD_TREE], ids=lambda t: t.name
+)
+def test_stream_upkeep_equals_batch_levels(spark, tree):
+    """The declaration's streaming partial over all events (two
+    interleaved batches, merged once) equals its batch levels
+    ≤ _RT_LEVELS, on the fields a batch split cannot change. The stream
+    keeps every level up to _RT_LEVELS; the batch tree stops at its
+    depth."""
+    from euclid_spark.operators.range_tree import _RT_LEVELS
+
+    def rows(df):
+        def norm(v):
+            if isinstance(v, (list, tuple)):
+                return tuple(norm(x) for x in v)
+            return v
+
+        cols = ["level", "cell", *tree.keys, *tree.cols]
+        return sorted(norm(tuple(r)) for r in df.select(*cols).collect())
+
+    ev = load_events(spark, SF_SMOKE)
+    odd = F.col("event_id") % 2 == 1
+    stream = tree.merge(tree.partial(ev.filter(odd)), tree.partial(ev.filter(~odd)))
+    batch = tree.levels(spark, SF_SMOKE)
+    top = min(_RT_LEVELS, batch.agg(F.max("level")).collect()[0][0])
+    batch = batch.filter(F.col("level") <= top)
+    if tree.invariant is not None:
+        batch = tree.invariant(batch)
+    want = rows(batch)
+    assert want and rows(stream.filter(F.col("level") <= top)) == want

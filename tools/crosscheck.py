@@ -43,6 +43,7 @@ def main() -> int:
 
     sys.path.insert(0, ".")
     import __spark_entry__ as e
+    from euclid_spark import registry
     from euclid_spark.cache import release_all
     from euclid_spark.session import get_session
 
@@ -56,7 +57,8 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    qs, os_ = e.queries(), e.oracle_sql(sf_dir)
+    # e.oracle_sql's map, plus the keys whose dynamic oracle raised
+    qs, (os_, degraded) = e.queries(), registry.oracle_lookup(sf_dir)
     failures = []
     results: dict[str, dict] = {}
     for name, fn in qs.items():
@@ -71,6 +73,11 @@ def main() -> int:
             continue
         finally:
             release_all()  # 63 queries in one session: don't accumulate
+        if name in degraded:
+            results[name] = {"status": "degraded", "reason": degraded[name],
+                             "rows": len(sdf)}
+            print(f"DEGRADED {name}: {degraded[name]}")
+            continue
         if name not in os_:
             results[name] = {"status": "rows_only", "rows": len(sdf)}
             print(f"OK?   {name}: rows-only check, {len(sdf)} rows")
@@ -109,6 +116,7 @@ def main() -> int:
             "n_checked": len(results),
             "n_ok": sum(r["status"] == "ok" for r in results.values()),
             "n_rows_only": sum(r["status"] == "rows_only" for r in results.values()),
+            "n_degraded": sum(r["status"] == "degraded" for r in results.values()),
             "n_fail": len(failures),
             "results": results,
         }

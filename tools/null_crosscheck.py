@@ -97,13 +97,17 @@ def main() -> int:
         )
 
     qs = registry.queries()
-    os_ = registry.oracles(nully)
+    os_, degraded = registry.oracle_lookup(nully)
     results: dict[str, dict] = {}
     n_fail = 0
     for name in sorted(qs):
         if only and name not in only:
             continue
         sql = os_.get(name)
+        if name in degraded:  # a dynamic generator raised
+            results[name] = {"status": "degraded", "reason": degraded[name]}
+            print(f"DEGRADED {name}: {degraded[name]}", flush=True)
+            continue
         if sql is None:
             results[name] = {"status": "no_oracle"}
             print(f"--  {name}: no oracle (rows-only by design)", flush=True)
@@ -144,7 +148,9 @@ def main() -> int:
     n_ok = sum(1 for r in results.values() if r["status"] == "ok")
     print(f"== null-crosscheck: {n_ok} ok, {n_fail} diverging, "
           f"{sum(1 for r in results.values() if r['status'] == 'no_oracle')} "
-          f"no-oracle of {len(results)}", flush=True)
+          f"no-oracle, "
+          f"{sum(1 for r in results.values() if r['status'] == 'degraded')} "
+          f"degraded of {len(results)}", flush=True)
     if json_out:
         with open(json_out, "w") as f:
             json.dump(results, f, indent=1, sort_keys=True)
