@@ -7,12 +7,12 @@ is appended and the root commitment is updated incrementally
 - `windowed_event_counts`: Structured Streaming with watermark + windowed
   aggregation — the standing query over the append stream.
 - `IncrementalDigest` via `foreachBatch`: each micro-batch folds its
-  order-independent digest into a running chain commitment, idempotent by
-  batch id — the IVC step function. Exactly-once holds ACROSS driver
-  restarts when a `state_path` is given: the (last_batch_id, chain) pair
-  is written atomically after each fold, so a micro-batch replayed from
-  the checkpoint on restart is recognized and skipped. Without a
-  state_path the guarantee is within-process only.
+  order-independent digest into a running chain commitment — the IVC
+  step function. Exactly-once is the shared batch-id watermark
+  (streaming/sink.py), with the chain and row count saved in its state
+  file: across driver restarts when a `state_path` is given, within
+  the process otherwise. The fold needs nothing of its own: it is one
+  in-memory update, applied whole or not at all.
 
 State stays O(windows) / O(1): the watermark bounds the agg state, the
 chain folds to a single value.
@@ -20,13 +20,10 @@ chain folds to a single value.
 
 from __future__ import annotations
 
-import json
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -37,6 +34,7 @@ from pyspark.sql.types import (
 )
 
 from euclid_spark.functions.hashing import DIGEST_PRIME, digest_agg, digest_term
+from euclid_spark.streaming.sink import BatchSink, read_feed
 
 # events schema as stored in parquet (ts: microsecond TIMESTAMP_NTZ)
 EVENTS_NS_SCHEMA = StructType(
@@ -54,11 +52,7 @@ EVENTS_NS_SCHEMA = StructType(
 def read_event_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """File-source stream over a directory of event parquet files; new
     files are discovered per micro-batch (the append-only ingest path)."""
-    raw = (
-        spark.readStream.schema(EVENTS_NS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
+    raw = read_feed(spark, src_dir, EVENTS_NS_SCHEMA)
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
@@ -72,51 +66,25 @@ def windowed_event_counts(stream: DataFrame) -> DataFrame:
 
 
 @dataclass
-class IncrementalDigest:
+class IncrementalDigest(BatchSink):
     """foreachBatch sink folding each micro-batch into a chain commitment.
 
-    chain' = (chain + batch_digest) mod P — associative, so replays of the
-    same batch id are skipped (idempotence) and the final chain equals the
-    batch-computed digest of the full table.
-
-    Durability: micro-batch ids from a given checkpoint are strictly
-    increasing, so "applied" reduces to `batch_id <= last_batch_id`. With
-    `state_path` set, that watermark plus the chain value is persisted
-    write-to-temp-then-rename (atomic on POSIX) AFTER each fold and
-    reloaded on construction — the replayed first batch after a driver
-    restart is skipped instead of double-counted (ADVICE r1)."""
+    chain' = (chain + batch_digest) mod P — associative, so the final
+    chain equals the batch-computed digest of the full table. `chain`
+    and `n_rows` are saved with the watermark (sink.py), so a batch
+    replayed after a driver restart is skipped, not double-counted."""
 
     chain: int = 0
     n_rows: int = 0
     last_batch_id: int = -1
     state_path: str | None = None
 
+    STATE = ("chain", "n_rows")
+
     def __post_init__(self) -> None:
-        if self.state_path and os.path.exists(self.state_path):
-            with open(self.state_path) as fh:
-                st = json.load(fh)
-            self.chain = st["chain"]
-            self.n_rows = st["n_rows"]
-            self.last_batch_id = st["last_batch_id"]
+        self._load()
 
-    def _save(self) -> None:
-        if not self.state_path:
-            return
-        tmp = f"{self.state_path}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "chain": self.chain,
-                    "n_rows": self.n_rows,
-                    "last_batch_id": self.last_batch_id,
-                },
-                fh,
-            )
-        os.replace(tmp, self.state_path)
-
-    def process(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self.last_batch_id:
-            return
+    def apply(self, batch_df: DataFrame, batch_id: int) -> None:
         term = digest_term(
             F.col("event_id").cast("long"), F.col("user_id").cast("long")
         )
@@ -126,19 +94,3 @@ class IncrementalDigest:
         if row["n"]:
             self.chain = (self.chain + row["d"]) % DIGEST_PRIME
             self.n_rows += row["n"]
-        self.last_batch_id = batch_id
-        self._save()
-
-
-def run_digest_chain(
-    stream: DataFrame, checkpoint: str
-) -> tuple[StreamingQuery, IncrementalDigest]:
-    os.makedirs(checkpoint, exist_ok=True)
-    sink = IncrementalDigest(state_path=os.path.join(checkpoint, "digest_state.json"))
-    q = (
-        stream.writeStream.foreachBatch(sink.process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, sink

@@ -32,19 +32,18 @@ everything ingested so far — because stages 2's filters are row-local
 (batch ≡ corpus evaluation) and stage 3's keep-set equals the batch
 labeling (the dedup parity proved per batch).
 
-Exactly-once: the curation level has its own batch-id watermark; the
-kept append anti-joins the store, and the embedded index is
-independently idempotent — a crash anywhere replays clean.
+Exactly-once: the curation level and the embedded index each keep the
+shared batch-id watermark (streaming/sink.py). What the sink adds: the
+kept append anti-joins the store, and the index is idempotent on its
+own, so a crash anywhere replays clean.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from euclid_spark.operators.textops import (
     BENCH_SOURCES,
@@ -54,12 +53,13 @@ from euclid_spark.operators.textops import (
     stratified_sample,
 )
 from euclid_spark.streaming.dedup_stream import IncrementalDedupIndex
+from euclid_spark.streaming.sink import BatchSink
 
 CURATION_DOCS_SCHEMA = "doc_id long, text string, lang string, source string"
 KEPT_SCHEMA = "doc_id long, lang string, source string, bucket_hex string"
 
 
-class StreamingCuration:
+class StreamingCuration(BatchSink):
     """foreachBatch sink maintaining the curated training set (module
     docstring). `bench_shingles`: static (shingle) frame — the held-out
     benchmark index the contamination screen probes."""
@@ -71,36 +71,20 @@ class StreamingCuration:
         bench_shingles: DataFrame,
         model: "DataFrame | None" = None,
     ) -> None:
-        self.spark = spark
+        super().__init__(spark, state_dir)
         self.index = IncrementalDedupIndex(
             spark, os.path.join(state_dir, "dedup")
         )
         self.kept_path = os.path.join(state_dir, "kept")
-        self.meta_path = os.path.join(state_dir, "meta.json")
         self.bench = bench_shingles
         # C61 model weights (b, w, m) — static like the benchmark
         # index; None = run without the learned-filter stage
         self.model = model
-        os.makedirs(state_dir, exist_ok=True)
-        self.last_batch_id = -1
-        if os.path.exists(self.meta_path):
-            with open(self.meta_path) as fh:
-                self.last_batch_id = json.load(fh)["last_batch_id"]
-
-    def _save_meta(self) -> None:
-        tmp = f"{self.meta_path}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"last_batch_id": self.last_batch_id}, fh)
-        os.replace(tmp, self.meta_path)
 
     def _kept_store(self) -> DataFrame:
-        if os.path.exists(self.kept_path):
-            return self.spark.read.schema(KEPT_SCHEMA).parquet(self.kept_path)
-        return self.spark.createDataFrame([], KEPT_SCHEMA)
+        return self._read_or_empty(self.kept_path, KEPT_SCHEMA)
 
-    def process(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self.last_batch_id:
-            return  # replay of an applied batch
+    def apply(self, batch_df: DataFrame, batch_id: int) -> None:
         # 1. advance the dedup index (its own watermark makes this
         # idempotent even when the curation watermark is behind)
         self.index.process(batch_df.select("doc_id", "text"), batch_id)
@@ -136,34 +120,9 @@ class StreamingCuration:
         if not new_kept.isEmpty():
             new_kept.write.mode("append").parquet(self.kept_path)
 
-        self.last_batch_id = batch_id
-        self._save_meta()
-
     def kept(self) -> DataFrame:
         """The current curated set: the append-only kept store minus
         every doc the dedup changelog has revoked."""
         return self._kept_store().join(
             self.index.revocations().select("doc_id"), "doc_id", "left_anti"
         )
-
-
-def run_streaming_curation(
-    stream: DataFrame,
-    state_dir: str,
-    bench_shingles: DataFrame,
-    model: "DataFrame | None" = None,
-) -> "tuple[StreamingQuery, StreamingCuration]":
-    """Attach the curation sink to a streaming documents frame
-    (schema CURATION_DOCS_SCHEMA)."""
-    ck = os.path.join(state_dir, "_checkpoint")
-    os.makedirs(ck, exist_ok=True)
-    sink = StreamingCuration(
-        stream.sparkSession, state_dir, bench_shingles, model
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink.process)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, sink

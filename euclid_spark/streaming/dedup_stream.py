@@ -51,9 +51,10 @@ so the merged labeling equals a from-scratch components run over the
 full pair ledger — asserted per batch in tests/test_streaming_dedup.py.
 Per-batch cost ∝ touched components, not corpus.
 
-Exactly-once across restarts: the IncrementalDigest watermark pattern
-(batch id, atomic temp+rename after the batch's stores are updated);
-re-delivered docs are anti-joined against the signature store, so even
+Exactly-once across restarts: the shared batch-id watermark
+(streaming/sink.py; the labels version rides in its state file),
+committed after the batch's stores are updated. Re-delivered docs
+are anti-joined against the signature store, so even
 a partially-applied crash window cannot double-insert a signature or
 re-emit its pairs. The candidate join and label merge run UNCONDITIONALLY
 for a replayed batch (batch signatures are re-read from the store): both
@@ -72,20 +73,19 @@ the join just produced."""
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from euclid_spark.cache import local_checkpoint_tracked, scope
+from euclid_spark.cache import local_checkpoint_tracked
 from euclid_spark.operators.dedup import (
     MAX_BUCKET,
     N_HASHES,
     band_table,
     minhash_signatures,
 )
+from euclid_spark.streaming.sink import BatchSink
 
 SIGS_SCHEMA = "doc_id long, " + ", ".join(f"sig{s} string" for s in range(N_HASHES))
 PAIRS_SCHEMA = "doc_a long, doc_b long"
@@ -94,60 +94,23 @@ REVOKED_SCHEMA = "doc_id long, component long, revoked_batch_id long"
 DOCS_SCHEMA = "doc_id long, text string"
 
 
-def read_document_stream(spark: SparkSession, src_dir: str) -> DataFrame:
-    """File-source stream over a directory of (doc_id, text) parquet
-    files — the ingest feed stand-in."""
-    return (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-
-class IncrementalDedupIndex:
+class IncrementalDedupIndex(BatchSink):
     """foreachBatch sink maintaining the MinHash/LSH index and the
     candidate-pair ledger (module docstring has the algorithm)."""
 
+    STATE = ("labels_version",)
+    labels_version = -1  # -1: no labels snapshot yet
+
     def __init__(self, spark: SparkSession, state_dir: str) -> None:
-        self.spark = spark
-        self.state_dir = state_dir
+        super().__init__(spark, state_dir)
         self.sigs_path = os.path.join(state_dir, "sigs")
         self.pairs_path = os.path.join(state_dir, "pairs")
         self.revoked_path = os.path.join(state_dir, "revoked")
-        self.meta_path = os.path.join(state_dir, "meta.json")
-        os.makedirs(state_dir, exist_ok=True)
-        self.last_batch_id = -1
-        self.labels_version = -1  # -1: no labels snapshot yet
-        if os.path.exists(self.meta_path):
-            with open(self.meta_path) as fh:
-                meta = json.load(fh)
-            self.last_batch_id = meta["last_batch_id"]
-            self.labels_version = meta.get("labels_version", -1)
-
-    def _save_meta(self) -> None:
-        tmp = f"{self.meta_path}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "last_batch_id": self.last_batch_id,
-                    "labels_version": self.labels_version,
-                },
-                fh,
-            )
-        os.replace(tmp, self.meta_path)
 
     def _labels_path(self, version: int) -> str:
         return os.path.join(self.state_dir, f"labels_v{version}")
 
-    def _read_or_empty(self, path: str, schema: str) -> DataFrame:
-        if os.path.exists(path):
-            return self.spark.read.schema(schema).parquet(path)
-        return self.spark.createDataFrame([], schema)
-
-    @scope()  # one cache scope per micro-batch (cache.py)
-    def process(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self.last_batch_id:
-            return  # checkpoint replay after restart — already applied
+    def apply(self, batch_df: DataFrame, batch_id: int) -> None:
         store = self._read_or_empty(self.sigs_path, SIGS_SCHEMA)
 
         # signatures for the batch only; re-delivered docs (replayed
@@ -170,8 +133,6 @@ class IncrementalDedupIndex:
         full = self._read_or_empty(self.sigs_path, SIGS_SCHEMA)
         batch_sigs = full.join(batch_ids, "doc_id", "left_semi")
         if batch_sigs.isEmpty():  # empty micro-batch
-            self.last_batch_id = batch_id
-            self._save_meta()
             return
 
         # ONE bucket join: batch bands probe the full index. The
@@ -208,10 +169,6 @@ class IncrementalDedupIndex:
             new_pairs.write.mode("append").parquet(self.pairs_path)
 
         self._merge_labels(cand, batch_id)
-
-        self.last_batch_id = batch_id
-        self._save_meta()
-        self._prune_label_versions()
 
     def _merge_labels(self, cand: DataFrame, batch_id: int) -> None:
         """Relabel ONLY the components touched by this batch's candidate
@@ -260,7 +217,7 @@ class IncrementalDedupIndex:
         if not new_revoked.isEmpty():
             new_revoked.write.mode("append").parquet(self.revoked_path)
 
-    def _prune_label_versions(self) -> None:
+    def committed(self) -> None:
         """Drop snapshot dirs other than the committed one (meta already
         points at `labels_version`, so stale dirs have no readers)."""
         import shutil
@@ -301,19 +258,3 @@ class IncrementalDedupIndex:
         applies these as deletions; replaying the full ledger against
         the corpus reproduces keep_list exactly."""
         return self._read_or_empty(self.revoked_path, REVOKED_SCHEMA)
-
-
-def run_incremental_dedup(
-    stream: DataFrame, state_dir: str
-) -> tuple[StreamingQuery, IncrementalDedupIndex]:
-    """Attach the incremental dedup index to a streaming documents frame."""
-    ck = os.path.join(state_dir, "_checkpoint")
-    os.makedirs(ck, exist_ok=True)
-    sink = IncrementalDedupIndex(stream.sparkSession, state_dir)
-    q = (
-        stream.writeStream.foreachBatch(sink.process)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, sink

@@ -23,12 +23,19 @@ declares the query, the engine owns the incremental run):
   partition key, empty-result DDL and read transform; the row comment
   says why the face is shaped the way it is. `_serve_maintained` is the
   one builder that runs a row.
-- The other 10 faces drive their own sinks (the digest chain, dedup,
-  curation, spans, MPT, shards, the watermarked join and window).
-- Every face shares the same three pieces: `_write_feed` (the feed
-  files), `_run_stream` (wait, then fail loudly on a timeout or a
-  missing micro-batch) and `_serve_streamed` (`artifacts.serve_frame`
-  around a scratch dir). Oracle SQL stays per face.
+- Eight faces are hand-run over the six other foreachBatch sinks (the
+  digest chain, dedup — whose one run feeds three faces — curation,
+  spans, MPT, shards): each constructs its sink and calls `start`.
+  Every sink, the IVM one included, is a `sink.BatchSink`: one
+  exactly-once watermark and state file, one cache scope per
+  micro-batch, one availableNow start. The last two faces (the
+  watermarked join and window) run Spark's own parquet and memory
+  sinks.
+- Every face writes its feed with `_write_feed`, streams it with
+  `sink.read_feed`, waits with `sink.drain` (which fails loudly on a
+  timeout or a missing micro-batch) and is served by `_serve_streamed`
+  (`artifacts.serve_frame` around a scratch dir). Oracle SQL stays per
+  face.
 
 Cost model: a face pays the full streaming run ONCE per corpus version
 — the final state is a fingerprint-keyed disk artifact
@@ -53,7 +60,7 @@ from pyspark.sql import functions as F
 from euclid_spark.catalog import cached_parquet
 
 from euclid_spark import artifacts
-from euclid_spark.functions.hashing import DIGEST_PRIME, MIX, digest_agg, digest_term
+from euclid_spark.functions.hashing import DIGEST_PRIME, MIX
 from euclid_spark.operators import curation, dedup, euclid, mpt_ingest, timeseries
 from euclid_spark.operators.range_response import q2_leaf_hash
 from euclid_spark.operators.range_tree import (
@@ -69,13 +76,15 @@ from euclid_spark.operators.similarity import N_QUERIES, SEED_K as IVF_FACE_K
 from euclid_spark.sources import eth_proof, jsonl
 from euclid_spark.streaming import parity as _p
 from euclid_spark.streaming.ivm import (
+    MaintainedAggregate,
+    _merge,
+    _partial,
     _rollup_merge,
     _rollup_partial,
-    run_maintained_aggregate,
 )
+from euclid_spark.streaming.sink import drain, read_feed
 
 N_SPLITS = 3
-STREAM_TIMEOUT_S = 600
 
 
 def _serve_streamed(
@@ -119,7 +128,7 @@ def _write_feed(
     Returns the number of feed files ACTUALLY written (r7 ADVICE): an
     empty bucket may produce no part file — whether a zero-row write
     emits one is an undocumented engine behavior — so callers hand this
-    count to _run_stream instead of assuming N_SPLITS micro-batches."""
+    count to `drain` instead of assuming N_SPLITS micro-batches."""
     os.makedirs(feed_dir, exist_ok=True)
     cols = df.columns
     if by_time:
@@ -144,43 +153,6 @@ def _write_feed(
             written += 1
         shutil.rmtree(part_dir, ignore_errors=True)
     return written
-
-
-def _read_feed(
-    spark: SparkSession, feed_dir: str, schema, fmt: str = "parquet"
-) -> DataFrame:
-    """File-source stream over a feed directory, one file per trigger."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .format(fmt)
-        .load(feed_dir)
-    )
-
-
-def _run_stream(q, n_files: int, sink=None) -> None:
-    """Wait for an availableNow query to drain its feed, and refuse to
-    serve a partial state: raise when the query does not quiesce within
-    STREAM_TIMEOUT_S, and when fewer micro-batches were applied than
-    feed files were written (one file per trigger). Applied batches are
-    the sink's own watermark when it keeps one (`last_batch_id`), else
-    the progress entries whose source offset advanced."""
-    if not q.awaitTermination(STREAM_TIMEOUT_S):
-        q.stop()
-        raise RuntimeError(
-            f"stream face: did not quiesce within {STREAM_TIMEOUT_S} s"
-        )
-    if sink is not None:
-        applied = sink.last_batch_id + 1
-    else:
-        applied = sum(
-            any(s["startOffset"] != s["endOffset"] for s in p["sources"])
-            for p in q.recentProgress
-        )
-    if applied < n_files:
-        raise RuntimeError(
-            f"stream face: only {applied}/{n_files} micro-batches applied"
-        )
 
 
 # ------------------------------------------------- table-driven D19 faces
@@ -232,15 +204,15 @@ def _serve_maintained(spark: SparkSession, sf_dir: str, face: Maintained) -> Dat
         partial = face.partial
         if face.model is not None:
             partial = functools.partial(partial, model=face.model(src))
-        q, sink = run_maintained_aggregate(
-            _read_feed(spark, feed, src.schema, face.fmt),
-            view,
-            ck,
-            partial,
-            face.merge,
-            face.key_col,
+        sink = MaintainedAggregate(
+            view_path=view,
+            state_path=os.path.join(ck, "ivm_state.json"),
+            partial_fn=partial,
+            merge_fn=face.merge,
+            key_col=face.key_col,
         )
-        _run_stream(q, n_files, sink)
+        q = sink.start(read_feed(spark, feed, src.schema, face.fmt), ck)
+        drain(q, n_files, sink)
         if not os.path.exists(view):  # zero-row corpus: nothing merged
             return spark.createDataFrame([], face.empty)
         v = sink.view(spark)
@@ -249,37 +221,6 @@ def _serve_maintained(spark: SparkSession, sf_dir: str, face: Maintained) -> Dat
         return v.select(*(c.split()[0] for c in face.empty.split(",")))
 
     return _serve_streamed(spark, face.name, fp, build)
-
-
-def _dec_partial(events: DataFrame) -> DataFrame:
-    """The D19 count/sum/digest partials with DECIMAL value sums:
-    decimal addition is exact, so the streamed merge tree and the
-    one-pass batch oracle agree bit-for-bit (a double sum could drift
-    at a round-off boundary depending on merge order — the q15 hazard)."""
-    term = digest_term(F.col("event_id").cast("long"), F.col("user_id").cast("long"))
-    return (
-        events.withColumn("day", F.to_date("ts"))
-        .groupBy("user_id", "day")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("decimal(18,6)")
-            .alias("total_value"),
-            digest_agg(term).alias("digest"),
-        )
-    )
-
-
-def _dec_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
-    return (
-        old.unionByName(partial)
-        .groupBy("user_id", "day")
-        .agg(
-            F.sum("n_events").alias("n_events"),
-            F.sum("total_value").cast("decimal(18,6)").alias("total_value"),
-            (F.sum("digest") % F.lit(DIGEST_PRIME)).cast("long").alias("digest"),
-        )
-    )
 
 
 _PSI_DDL = (
@@ -488,14 +429,15 @@ MAINTAINED: "dict[str, Maintained]" = {
         source=_eth_source,
         key_col="pb",
     ),
-    # D19: the maintained (user, day) count/sum/digest view. Sums are
-    # DECIMAL so partial-merge order cannot drift a float at a rounding
-    # boundary; served as double, as the oracle computes it.
+    # D19: the maintained (user, day) count/sum/digest view — the IVM
+    # sink's own monoid. Sums are DECIMAL so partial-merge order cannot
+    # drift a float at a rounding boundary; served as double, as the
+    # oracle computes it.
     "stream_ivm_view": Maintained(
         "stream_ivm_view",
         dict(op="stream_ivm_view", v=2),
-        _dec_partial,
-        _dec_merge,
+        _partial,
+        _merge,
         "user_id long, day date, n_events bigint, total_value double, "
         "digest bigint",
         read=lambda v: v.select(
@@ -694,7 +636,7 @@ def stream_block_db_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus in N_SPLITS micro-batches: the IVC step function itself
     (block/mod.rs). chain = Σ batch_digest ≡ batch digest of the whole
     table (mod P), because the fold is associative and commutative."""
-    from euclid_spark.streaming.block_db import read_event_stream, run_digest_chain
+    from euclid_spark.streaming.block_db import IncrementalDigest, read_event_stream
 
     fp = artifacts.corpus_fingerprint(
         [f"{sf_dir}/events.parquet"], op="stream_block_db_chain", n=N_SPLITS, v=2
@@ -705,10 +647,9 @@ def stream_block_db_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_files = _write_feed(
             cached_parquet(spark, f"{sf_dir}/events.parquet"), feed, "event_id"
         )
-        q, sink = run_digest_chain(
-            read_event_stream(spark, feed), os.path.join(tmp, "ck")
-        )
-        _run_stream(q, n_files, sink)
+        ck = os.path.join(tmp, "ck")
+        sink = IncrementalDigest(state_path=os.path.join(ck, "digest_state.json"))
+        drain(sink.start(read_event_stream(spark, feed), ck), n_files, sink)
         return spark.createDataFrame(
             [(sink.chain, sink.n_rows)], "chain_digest long, n_rows long"
         )
@@ -724,10 +665,7 @@ def _streamed_dedup_state(
     component labels — under one shared fingerprint. In production
     there is one maintained index with many consumers."""
     from euclid_spark.operators import dedup as _d
-    from euclid_spark.streaming.dedup_stream import (
-        read_document_stream,
-        run_incremental_dedup,
-    )
+    from euclid_spark.streaming.dedup_stream import DOCS_SCHEMA, IncrementalDedupIndex
 
     fp = artifacts.corpus_fingerprint(
         [f"{sf_dir}/documents.parquet"],
@@ -753,10 +691,9 @@ def _streamed_dedup_state(
             feed,
             "doc_id",
         )
-        q, sink = run_incremental_dedup(
-            read_document_stream(spark, feed), os.path.join(tmp, "state")
-        )
-        _run_stream(q, n_files, sink)
+        sink = IncrementalDedupIndex(spark, os.path.join(tmp, "state"))
+        q = sink.start(read_feed(spark, feed, DOCS_SCHEMA), os.path.join(tmp, "ck"))
+        drain(q, n_files, sink)
         artifacts.save_frame(sink.pairs(), "stream_dedup_pairs", fp)
         artifacts.save_frame(sink.labels(), "stream_dedup_labels", fp)
     pairs = artifacts.load_frame(spark, "stream_dedup_pairs", fp)
@@ -860,7 +797,7 @@ def stream_curation_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     from euclid_spark.operators import dedup as _d
     from euclid_spark.operators.quality_model import quality_model_weights
     from euclid_spark.operators.textops import BENCH_SOURCES, benchmark_shingles
-    from euclid_spark.streaming.curation_stream import run_streaming_curation
+    from euclid_spark.streaming.curation_stream import StreamingCuration
 
     fp = artifacts.corpus_fingerprint(
         [f"{sf_dir}/documents.parquet"],
@@ -886,13 +823,9 @@ def stream_curation_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the C61 model is STATIC too (offline-trained on the reference
         # corpus, served weights handed to the sink up front — r15)
         model = quality_model_weights(spark, sf_dir)
-        q, sink = run_streaming_curation(
-            _read_feed(spark, feed, cols.schema),
-            os.path.join(tmp, "state"),
-            bench,
-            model,
-        )
-        _run_stream(q, n_files, sink)
+        sink = StreamingCuration(spark, os.path.join(tmp, "state"), bench, model)
+        q = sink.start(read_feed(spark, feed, cols.schema), os.path.join(tmp, "ck"))
+        drain(q, n_files, sink)
         return sink.kept()
 
     return _serve_streamed(spark, "stream_curation_kept", fp, build)
@@ -905,8 +838,8 @@ def stream_substring_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrives later), so the final table equals batch C28 — the oracle is
     C28's SQL, making the retroactive re-scoring gate-checked."""
     from euclid_spark.operators import dedup as _d
-    from euclid_spark.streaming.dedup_stream import read_document_stream
-    from euclid_spark.streaming.spans_stream import run_incremental_spans
+    from euclid_spark.streaming.dedup_stream import DOCS_SCHEMA
+    from euclid_spark.streaming.spans_stream import IncrementalSpanIndex
 
     fp = artifacts.corpus_fingerprint(
         [f"{sf_dir}/documents.parquet"],
@@ -926,10 +859,9 @@ def stream_substring_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
             feed,
             "doc_id",
         )
-        q, sink = run_incremental_spans(
-            read_document_stream(spark, feed), os.path.join(tmp, "state")
-        )
-        _run_stream(q, n_files, sink)
+        sink = IncrementalSpanIndex(spark, os.path.join(tmp, "state"))
+        q = sink.start(read_feed(spark, feed, DOCS_SCHEMA), os.path.join(tmp, "ck"))
+        drain(q, n_files, sink)
         return sink.verdicts()
 
     return _serve_streamed(spark, "stream_substring_verdicts", fp, build)
@@ -942,11 +874,8 @@ def stream_mpt_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes). Equals batch A16 once every node has arrived, so A16's
     original-derivation SQL is the oracle — the park/resume walk is
     gate-checked."""
-    from euclid_spark.operators.mpt_ingest import synthesize_owner_tries
-    from euclid_spark.streaming.mpt_stream import (
-        read_node_stream,
-        run_incremental_mpt,
-    )
+    from euclid_spark.operators.mpt_ingest import NODE_SCHEMA, synthesize_owner_tries
+    from euclid_spark.streaming.mpt_stream import IncrementalMptReassembly
 
     fp = artifacts.corpus_fingerprint(
         [f"{sf_dir}/events.parquet"], op="stream_mpt_entries", n=N_SPLITS, v=2
@@ -959,10 +888,9 @@ def stream_mpt_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_files = _write_feed(
             synthesize_owner_tries(spark, sf_dir), feed, "node_hash"
         )
-        q, sink = run_incremental_mpt(
-            read_node_stream(spark, feed), os.path.join(tmp, "state")
-        )
-        _run_stream(q, n_files, sink)
+        sink = IncrementalMptReassembly(spark, os.path.join(tmp, "state"))
+        q = sink.start(read_feed(spark, feed, NODE_SCHEMA), os.path.join(tmp, "ck"))
+        drain(q, n_files, sink)
         if not sink.pending().isEmpty():
             raise RuntimeError("stream_mpt_entries: cursors still parked")
         return sink.entries()
@@ -1007,7 +935,7 @@ def stream_ss_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        _run_stream(q, n_files)
+        drain(q, n_files)
         schema = "purchase_id long, click_id long, p_user long, p_value double"
         if not glob.glob(os.path.join(out, "part-*")):  # no pairs landed
             return spark.createDataFrame([], schema)
@@ -1055,7 +983,7 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        _run_stream(q, n_files)
+        drain(q, n_files)
         return spark.table(qname).select(
             F.col("window.start").alias("win_start"),
             "event_type",
@@ -1076,8 +1004,8 @@ def stream_epoch_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL over the full corpus — incremental ≡ batch for the exact
     artifact a training dataloader consumes (the D19/D20 discipline)."""
     from euclid_spark.operators.curation import EPOCH_SEED, SHARD_TOKENS
-    from euclid_spark.streaming.dedup_stream import read_document_stream
-    from euclid_spark.streaming.shard_stream import run_streaming_shards
+    from euclid_spark.streaming.dedup_stream import DOCS_SCHEMA
+    from euclid_spark.streaming.shard_stream import StreamingShardIndex
 
     fp = artifacts.corpus_fingerprint(
         [f"{sf_dir}/documents.parquet"],
@@ -1092,10 +1020,9 @@ def stream_epoch_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs = cached_parquet(spark, f"{sf_dir}/documents.parquet")
         feed = os.path.join(tmp, "feed")
         n_files = _write_feed(docs.select("doc_id", "text"), feed, "doc_id")
-        q, sink = run_streaming_shards(
-            read_document_stream(spark, feed), os.path.join(tmp, "state")
-        )
-        _run_stream(q, n_files, sink)
+        sink = StreamingShardIndex(spark, os.path.join(tmp, "state"))
+        q = sink.start(read_feed(spark, feed, DOCS_SCHEMA), os.path.join(tmp, "ck"))
+        drain(q, n_files, sink)
         return sink.manifest()
 
     return _serve_streamed(spark, "stream_epoch_shards", fp, build)

@@ -22,16 +22,17 @@ Scale design (what makes this 100 TB-shaped):
 - Partials are map-side-combinable aggregates of the batch alone;
   the merge re-aggregates (old ∪ partial) with the same monoid — no
   window, no global shuffle wider than the touched keys.
-- Exactly-once across restarts (ADVICE r4): the applied-batch watermark
-  lives IN the view rows — every row of a day partition carries the
-  `applied_batch_id` that last rewrote that partition, committed
-  atomically with the data because it IS the data. A replayed batch
-  (after any crash point, including mid-write across day partitions —
-  dynamic partition overwrite is atomic per day directory but not
-  across them) re-merges ONLY the days whose partition watermark is
-  still behind the batch id; days already carrying the batch are
-  skipped. The side watermark file is a fast-path short-circuit only —
-  correctness never depends on its write ordering.
+- Exactly-once across restarts (ADVICE r4): the batch-id watermark
+  and its state file are the shared sink's (streaming/sink.py), but
+  here they are a fast path only. The applied-batch watermark that
+  correctness rests on lives IN the view rows — every row of a day
+  partition carries the `applied_batch_id` that last rewrote that
+  partition, committed atomically with the data because it IS the
+  data. A replayed batch (after any crash point, including mid-write
+  across day partitions — dynamic partition overwrite is atomic per day
+  directory but not across them) re-merges ONLY the days whose
+  partition watermark is still behind the batch id; days already
+  carrying the batch are skipped.
 
 The maintained view equals the batch aggregate over everything
 ingested (tests/test_streaming_ivm.py proves it per batch count and
@@ -39,17 +40,16 @@ against a replay)."""
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from euclid_spark.cache import local_checkpoint_tracked, scope
+from euclid_spark.cache import local_checkpoint_tracked
 from euclid_spark.functions.hashing import DIGEST_PRIME, digest_agg, digest_term
+from euclid_spark.streaming.sink import BatchSink
 
 # The maintained query: per (user, day) event count, value total, and
 # order-independent digest — the state-DB row shape of A7/A9.
@@ -58,14 +58,19 @@ VIEW_KEYS = ["user_id", "day"]
 
 def _partial(events: DataFrame) -> DataFrame:
     """Monoid partials for one micro-batch (or for the whole table —
-    the same expression defines the batch oracle)."""
+    the same expression defines the batch oracle). Value sums are
+    DECIMAL: decimal addition is exact, so any merge tree and the
+    one-pass batch aggregate agree bit-for-bit (a double sum could
+    drift at a round-off boundary depending on merge order)."""
     term = digest_term(F.col("event_id").cast("long"), F.col("user_id").cast("long"))
     return (
         events.withColumn("day", F.to_date("ts"))
         .groupBy(*VIEW_KEYS)
         .agg(
             F.count("*").alias("n_events"),
-            F.sum("value").alias("total_value"),
+            F.sum(F.col("value").cast("decimal(18,6)"))
+            .cast("decimal(18,6)")
+            .alias("total_value"),
             digest_agg(term).alias("digest"),
         )
     )
@@ -79,22 +84,23 @@ def _merge(old: DataFrame, partial: DataFrame) -> DataFrame:
         .groupBy(*VIEW_KEYS)
         .agg(
             F.sum("n_events").alias("n_events"),
-            F.sum("total_value").alias("total_value"),
+            F.sum("total_value").cast("decimal(18,6)").alias("total_value"),
             (F.sum("digest") % F.lit(DIGEST_PRIME)).alias("digest"),
         )
     )
 
 
 @dataclass
-class MaintainedAggregate:
+class MaintainedAggregate(BatchSink):
     """foreachBatch sink maintaining the day-partitioned view at
-    `view_path`. `state_path` persists the applied-batch watermark.
+    `view_path`. `state_path` persists the batch-id watermark (the
+    fast path; the per-partition one is in the rows).
 
     `partial_fn` / `merge_fn` define the maintained query: any pair
     where merge_fn(partial(A), partial(B)) == partial(A ∪ B) — i.e. the
     aggregates form a commutative monoid — maintains correctly. The
-    defaults are the count/sum/digest view; `run_maintained_state_rollup`
-    plugs in the A7 last-value (argmax-by-event-id) merge."""
+    defaults are the count/sum/digest view; `_rollup_partial` /
+    `_rollup_merge` are the A7 last-value (argmax-by-event-id) pair."""
 
     view_path: str
     state_path: str | None = None
@@ -109,31 +115,14 @@ class MaintainedAggregate:
     key_col: str = "day"
 
     def __post_init__(self) -> None:
-        if self.state_path and os.path.exists(self.state_path):
-            with open(self.state_path) as fh:
-                self.last_batch_id = json.load(fh)["last_batch_id"]
+        self._load()
 
-    def _save(self) -> None:
-        if not self.state_path:
-            return
-        tmp = f"{self.state_path}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"last_batch_id": self.last_batch_id}, fh)
-        os.replace(tmp, self.state_path)
-
-    # one cache scope per micro-batch (cache.py): the batch's pins live
-    # until its writes land, whatever another thread releases meanwhile
-    @scope()
-    def process(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self.last_batch_id:
-            return  # fast path: watermark file says already merged
+    def apply(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             # an empty micro-batch merges nothing — and MUST NOT write:
             # a zero-row dynamic-partition overwrite creates a
             # partition-less view directory whose later read fails
             # schema inference (found by the empty-corpus net)
-            self.last_batch_id = batch_id
-            self._save()
             return
         spark = batch_df.sparkSession
         partial = (self.partial_fn or _partial)(batch_df)
@@ -151,7 +140,7 @@ class MaintainedAggregate:
             if "applied_batch_id" not in view.columns:  # pre-watermark view
                 view = view.withColumn("applied_batch_id", F.lit(-1))
             # per-day applied watermark (the exactly-once gate): a crash
-            # between the partition write and _save() leaves some days
+            # between the partition write and the state save leaves some days
             # already carrying this batch_id — on replay those days are
             # skipped, the rest are merged. One tiny aggregate over the
             # touched days only.
@@ -163,8 +152,6 @@ class MaintainedAggregate:
             }
             todo = [d for d in days if applied.get(d, -1) < batch_id]
             if not todo:
-                self.last_batch_id = batch_id
-                self._save()
                 return
             old = view.filter(F.col(kc).isin(todo)).drop("applied_batch_id")
             merged = (self.merge_fn or _merge)(
@@ -190,43 +177,11 @@ class MaintainedAggregate:
             .partitionBy(self.key_col)
             .parquet(self.view_path)
         )
-        self.last_batch_id = batch_id
-        self._save()
 
     def view(self, spark: SparkSession) -> DataFrame:
         """The maintained view WITHOUT the applied_batch_id bookkeeping
         column — what consumers (and the batch-parity tests) read."""
         return spark.read.parquet(self.view_path).drop("applied_batch_id")
-
-
-def run_maintained_aggregate(
-    stream: DataFrame,
-    view_path: str,
-    checkpoint: str,
-    partial_fn: "Callable[[DataFrame], DataFrame] | None" = None,
-    merge_fn: "Callable[[DataFrame, DataFrame], DataFrame] | None" = None,
-    key_col: str = "day",
-) -> tuple[StreamingQuery, MaintainedAggregate]:
-    """Attach the IVM sink to a streaming frame: one availableNow
-    foreachBatch run maintaining the (partial_fn, merge_fn) monoid at
-    `view_path`, partitioned by `key_col` (defaults: the count/sum/
-    digest view by day). Every maintained-aggregate stream — the state
-    rollup, the parity harness, the registry faces — attaches here."""
-    os.makedirs(checkpoint, exist_ok=True)
-    sink = MaintainedAggregate(
-        view_path=view_path,
-        state_path=os.path.join(checkpoint, "ivm_state.json"),
-        partial_fn=partial_fn,
-        merge_fn=merge_fn,
-        key_col=key_col,
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink.process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, sink
 
 
 def _rollup_partial(events: DataFrame) -> DataFrame:
@@ -266,17 +221,6 @@ def _rollup_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
             F.max("last_event_id").alias("last_event_id"),
             F.sum("n_events").alias("n_events"),
         )
-    )
-
-
-def run_maintained_state_rollup(
-    stream: DataFrame, view_path: str, checkpoint: str
-) -> tuple[StreamingQuery, MaintainedAggregate]:
-    """The A7 state rollup (latest per-account state per day) as an
-    incrementally maintained view — the streaming form of the
-    reference's state DB append."""
-    return run_maintained_aggregate(
-        stream, view_path, checkpoint, _rollup_partial, _rollup_merge
     )
 
 

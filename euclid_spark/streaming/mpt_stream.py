@@ -34,11 +34,12 @@ nodes have arrived the entries store equals the batch
 `mpt_reassemble` output (tests/test_streaming_mpt.py proves this on a
 shuffled 1-node-per-trigger feed).
 
-Exactly-once across restarts follows the IncrementalDigest pattern
-(streaming/block_db.py): micro-batch ids from one checkpoint are
-strictly increasing, so a JSON watermark (batch_id, written atomically
-via temp+rename AFTER the batch's stores are updated) lets a replayed
-batch be skipped instead of double-applied.
+Exactly-once across restarts is the shared batch-id watermark
+(streaming/sink.py), committed after the batch's stores are updated.
+What the sink adds is the root ledger: new nodes anti-join the node
+store, and a root seeds its walk cursor only on first arrival (the
+pre-batch node store is the ledger), so a node or root re-sent under a
+NEW batch id appends nothing.
 
 Scale shape: per batch, cost is (new nodes decoded) + (frontier ⋈
 node-store joins, shuffle-partitioned on (owner, node_hash)) — the
@@ -50,71 +51,38 @@ otherwise nest per trie level (operators/components.py failure mode)."""
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from euclid_spark.cache import local_checkpoint_tracked, scope
+from euclid_spark.cache import local_checkpoint_tracked
 from euclid_spark.operators.mpt_ingest import (
     NODE_SCHEMA,
     decode_mpt_nodes,
     walk_tries,
     _nibbles_to_hex,
 )
+from euclid_spark.streaming.sink import BatchSink
 
 FRONTIER_SCHEMA = "owner long, node_hash string, prefix array<int>"
 ENTRIES_SCHEMA = "owner long, token_id long, value_hex string"
 
 
-def read_node_stream(spark: SparkSession, src_dir: str) -> DataFrame:
-    """File-source stream over a directory of raw-node parquet files —
-    the eth_getProof / snapshot-sync feed stand-in."""
-    return (
-        spark.readStream.schema(NODE_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-
-class IncrementalMptReassembly:
+class IncrementalMptReassembly(BatchSink):
     """foreachBatch sink: raw trie-node micro-batches → incrementally
     reassembled mapping entries (module docstring has the algorithm)."""
 
     def __init__(self, spark: SparkSession, state_dir: str) -> None:
-        self.spark = spark
-        self.state_dir = state_dir
+        super().__init__(spark, state_dir)
         self.nodes_path = os.path.join(state_dir, "nodes")
         self.frontier_path = os.path.join(state_dir, "frontier")
         self.entries_path = os.path.join(state_dir, "entries")
-        self.meta_path = os.path.join(state_dir, "meta.json")
-        os.makedirs(state_dir, exist_ok=True)
-        self.last_batch_id = -1
-        if os.path.exists(self.meta_path):
-            with open(self.meta_path) as fh:
-                self.last_batch_id = json.load(fh)["last_batch_id"]
 
-    def _save_meta(self) -> None:
-        tmp = f"{self.meta_path}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"last_batch_id": self.last_batch_id}, fh)
-        os.replace(tmp, self.meta_path)
-
-    def _read_or_empty(self, path: str, schema: str) -> DataFrame:
-        if os.path.exists(path):
-            return self.spark.read.schema(schema).parquet(path)
-        return self.spark.createDataFrame([], schema)
-
-    # one cache scope per micro-batch (cache.py): this batch's pins (new
-    # decoded nodes, the walk's node store and round frontiers, emit
-    # frames) are all flushed to parquet by the end, and a concurrent
-    # query's pins are never touched
-    @scope()
-    def process(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self.last_batch_id:
-            return  # checkpoint replay after restart — already applied
+    def apply(self, batch_df: DataFrame, batch_id: int) -> None:
+        # this batch's pins (new decoded nodes, the walk's node store
+        # and round frontiers, emit frames) are all flushed to parquet
+        # by the end; the base frees them when apply returns
         store_existing = self._read_or_empty(
             self.nodes_path,
             "owner long, node_hash string, node_type string, path array<int>, "
@@ -188,26 +156,8 @@ class IncrementalMptReassembly:
         frontier = local_checkpoint_tracked(frontier)
         frontier.write.mode("overwrite").parquet(self.frontier_path)
 
-        self.last_batch_id = batch_id
-        self._save_meta()
-
     def entries(self) -> DataFrame:
         return self._read_or_empty(self.entries_path, ENTRIES_SCHEMA)
 
     def pending(self) -> DataFrame:
         return self._read_or_empty(self.frontier_path, FRONTIER_SCHEMA)
-
-
-def run_incremental_mpt(
-    stream: DataFrame, state_dir: str
-) -> tuple[StreamingQuery, IncrementalMptReassembly]:
-    """Drive a raw-node stream through the incremental reassembler with
-    an availableNow trigger (drain-what-is-there semantics)."""
-    sink = IncrementalMptReassembly(stream.sparkSession, state_dir)
-    q = (
-        stream.writeStream.foreachBatch(sink.process)
-        .option("checkpointLocation", os.path.join(state_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, sink

@@ -53,12 +53,13 @@ from euclid_spark.operators.range_tree import (
 )
 from euclid_spark.streaming.block_db import EVENTS_NS_SCHEMA, read_event_stream
 from euclid_spark.streaming.ivm import (
+    MaintainedAggregate,
     _merge,
     _partial,
     _rollup_merge,
     _rollup_partial,
-    run_maintained_aggregate,
 )
+from euclid_spark.streaming.sink import drain
 
 
 @dataclass(frozen=True)
@@ -124,15 +125,15 @@ def run_parity(
             os.path.join(src, f"split_{point}.parquet"), index=False
         )
         # fresh sink per point = a restart: watermark + checkpoint reload
-        q, sink = run_maintained_aggregate(
-            read_event_stream(spark, src),
-            view,
-            ck,
-            spec.partial_fn,
-            spec.merge_fn,
-            spec.key_col,
+        sink = MaintainedAggregate(
+            view_path=view,
+            state_path=os.path.join(ck, "ivm_state.json"),
+            partial_fn=spec.partial_fn,
+            merge_fn=spec.merge_fn,
+            key_col=spec.key_col,
         )
-        q.awaitTermination(240)
+        # never compare a stream still running: one batch per file so far
+        drain(sink.start(read_event_stream(spark, src), ck), point + 1, sink)
 
         # from-scratch recompute over everything ingested so far
         all_ev = (
@@ -416,51 +417,26 @@ def _drift_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
 # --- A13's ERC-20 u256 reward view as a maintained aggregate -----------------
 
 def _erc20_partial(events: DataFrame) -> DataFrame:
-    """A13's ERC-20 reward view as a streaming monoid: the leaf circuit
-    (Arrow u256 stage — run PER BATCH, the ingest-time pattern) maps
-    each in-range purchase entry to its reward limbs; partials are
-    limb-wise DECIMAL(38) sums per owner — carry normalization is
+    """A13's ERC-20 reward view as a streaming monoid: the tile tree's
+    leaf (range_tree.ERC20_REWARD_TREE — limb-wise DECIMAL(38) sums of
+    the leaf circuit, run PER BATCH) over each in-range purchase entry,
+    grouped per owner instead of per tile. Carry normalization is
     deferred to READ (u256_carry_hex), so the maintained state is a
     plain commutative monoid and merge order cannot matter. Partition
     chunk = owner mod 16 (a batch rewrites only touched chunks)."""
-    from euclid_spark.operators.euclid import (
-        T_MAX,
-        T_MIN,
-        erc20_leaf_rows,
-    )
+    from euclid_spark.operators.euclid import T_MAX, T_MIN, erc20_leaf_rows
 
     ev = events.filter(
         (F.col("ts") >= F.lit(T_MIN).cast("timestamp"))
         & (F.col("ts") < F.lit(T_MAX).cast("timestamp"))
         & (F.col("event_type") == "purchase")
     )
-    rows = erc20_leaf_rows(ev)
-    return rows.groupBy(
-        F.pmod(F.col("owner"), F.lit(16)).cast("int").alias("day"),
-        "owner",
-    ).agg(
-        *[
-            F.sum(F.col(f"l{i}").cast("decimal(38,0)")).alias(f"s{i}")
-            for i in range(4)
-        ],
-        F.sum("zs").cast("long").alias("zs"),
-        F.sum("of").cast("long").alias("of"),
-    )
+    chunk = F.pmod(F.col("owner"), F.lit(16)).cast("int").alias("day")
+    return ERC20_REWARD_TREE.leaf(erc20_leaf_rows(ev), [chunk, "owner"])
 
 
 def _erc20_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
-    return (
-        old.unionByName(partial)
-        .groupBy("day", "owner")
-        .agg(
-            *[
-                F.sum(F.col(f"s{i}")).cast("decimal(38,0)").alias(f"s{i}")
-                for i in range(4)
-            ],
-            F.sum("zs").cast("long").alias("zs"),
-            F.sum("of").cast("long").alias("of"),
-        )
-    )
+    return ERC20_REWARD_TREE.combine(old.unionByName(partial), ["day", "owner"])
 
 
 # --- B48's linear-counting bitmaps as a maintained aggregate -----------------

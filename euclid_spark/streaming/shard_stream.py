@@ -31,8 +31,9 @@ ingest step derives (shared code), and the manifest is a deterministic
 function of that row set. At quiescence the registry face's oracle is
 therefore C55's own batch SQL (faces.py `stream_epoch_shards`).
 
-Exactly-once: batch-id watermark in meta.json + doc_id anti-join
-against the store before append — a replayed batch adds nothing.
+Exactly-once: the shared batch-id watermark (streaming/sink.py); what
+the sink adds is the doc_id anti-join against the store before append,
+so a half-applied batch replays without adding a row.
 
 The bucket WIDTH is pinned at index creation (it partitions the
 store's directory layout, so it cannot drift mid-stream); C55's
@@ -42,12 +43,9 @@ width never changes the manifest, only the layout granularity.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from euclid_spark.operators.curation import (
     EPOCH_SEED,
@@ -56,12 +54,12 @@ from euclid_spark.operators.curation import (
     _manifest_from_assignments,
     _shard_rows,
 )
+from euclid_spark.streaming.sink import BatchSink
 
-SHARD_DOCS_SCHEMA = "doc_id long, text string"
 _ROWS_SCHEMA = "doc_id long, key string, n_tokens long, bucket long"
 
 
-class StreamingShardIndex:
+class StreamingShardIndex(BatchSink):
     """foreachBatch sink maintaining the bucket-partitioned shard-row
     store (module docstring)."""
 
@@ -73,79 +71,30 @@ class StreamingShardIndex:
         shard_tokens: int = SHARD_TOKENS,
         bucket_hex: int = 2,
     ) -> None:
-        self.spark = spark
+        super().__init__(spark, state_dir)
         self.rows_path = os.path.join(state_dir, "rows")
-        self.meta_path = os.path.join(state_dir, "meta.json")
         self.seed = seed
         self.shard_tokens = shard_tokens
         self.bucket_hex = bucket_hex
-        os.makedirs(state_dir, exist_ok=True)
-        self.last_batch_id = -1
-        if os.path.exists(self.meta_path):
-            with open(self.meta_path) as fh:
-                self.last_batch_id = json.load(fh)["last_batch_id"]
 
-    def _save_meta(self) -> None:
-        tmp = f"{self.meta_path}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"last_batch_id": self.last_batch_id}, fh)
-        os.replace(tmp, self.meta_path)
-
-    def _store(self) -> DataFrame:
-        if os.path.exists(self.rows_path):
-            # partition column `bucket` comes back from the Hive layout;
-            # basePath keeps it a column, schema pins the value types
-            return (
-                self.spark.read.option("basePath", self.rows_path)
-                .schema(_ROWS_SCHEMA)
-                .parquet(self.rows_path)
-            )
-        return self.spark.createDataFrame([], _ROWS_SCHEMA)
-
-    def process(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self.last_batch_id:
-            return  # replay of an applied batch
+    def apply(self, batch_df: DataFrame, batch_id: int) -> None:
         rows = _shard_rows(
             batch_df.select("doc_id", "text"), self.seed, self.bucket_hex
         )
-        new = rows.join(self._store(), "doc_id", "left_anti")
+        store = self._read_or_empty(self.rows_path, _ROWS_SCHEMA)
+        new = rows.join(store, "doc_id", "left_anti")
         if not new.isEmpty():
             # append ONLY the bucket=K dirs this batch touches
             new.write.mode("append").partitionBy("bucket").parquet(
                 self.rows_path
             )
-        self.last_batch_id = batch_id
-        self._save_meta()
 
     def manifest(self) -> DataFrame:
         """The CURRENT epoch-shard manifest over everything ingested:
         C55's shared cut + rollup over the maintained rows. Reading
         one bucket's docs is a partition-pruned scan (`bucket=K`
         dirs) — the same locality the two-level prefix sum keys on."""
+        rows = self._read_or_empty(self.rows_path, _ROWS_SCHEMA)
         return _manifest_from_assignments(
-            _assignments_from_rows(
-                self._store(), self.bucket_hex, self.shard_tokens
-            )
+            _assignments_from_rows(rows, self.bucket_hex, self.shard_tokens)
         )
-
-
-def run_streaming_shards(
-    stream: DataFrame,
-    state_dir: str,
-    seed: str = EPOCH_SEED,
-    shard_tokens: int = SHARD_TOKENS,
-) -> "tuple[StreamingQuery, StreamingShardIndex]":
-    """Attach the shard-index sink to a streaming documents frame
-    (schema SHARD_DOCS_SCHEMA)."""
-    ck = os.path.join(state_dir, "_checkpoint")
-    os.makedirs(ck, exist_ok=True)
-    sink = StreamingShardIndex(
-        stream.sparkSession, state_dir, seed, shard_tokens
-    )
-    q = (
-        stream.writeStream.foreachBatch(sink.process)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, sink

@@ -45,10 +45,12 @@ not append-only in its OUTPUT, only in its STATE:
        commits last, atomically.
 
 Per-batch cost ∝ batch size + retroactively-affected docs, never the
-corpus. Exactly-once across restarts: batch-id watermark; every store
-derivation is either anti-joined against its own ledger or rebuilt
-idempotently from the stores (a replayed batch appends nothing and
-republishes an identical snapshot).
+corpus. Exactly-once across restarts: the shared batch-id watermark
+(streaming/sink.py; the verdicts version rides in its state file).
+What the sink adds: every store derivation is either anti-joined
+against its own ledger or rebuilt idempotently from the stores, so a
+half-applied batch replays clean (appends nothing, republishes an
+identical snapshot).
 
 Parity (tests/test_streaming_spans.py): after every batch, the
 maintained verdict table equals the batch `dedup_substring_spans`
@@ -58,16 +60,15 @@ adversarial split; batch replay is a no-op.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from euclid_spark.cache import local_checkpoint_tracked, scope
+from euclid_spark.cache import local_checkpoint_tracked
 from euclid_spark.functions.text import shingles, words
 from euclid_spark.operators.dedup import SPAN_DUP_FRAC, SPAN_W
+from euclid_spark.streaming.sink import BatchSink
 
 DOCS_SCHEMA = "doc_id long, n_tokens int"
 WINDOWS_SCHEMA = "doc_id long, p int, h string"
@@ -77,7 +78,6 @@ VERDICTS_SCHEMA = (
     "dup_tokens long, dup_frac double, flagged boolean"
 )
 FLAGGED_SCHEMA = "doc_id long, flagged_batch_id long"
-FEED_SCHEMA = "doc_id long, text string"
 
 
 def doc_windows(docs: DataFrame) -> DataFrame:
@@ -95,51 +95,24 @@ def doc_sizes(docs: DataFrame) -> DataFrame:
     )
 
 
-class IncrementalSpanIndex:
+class IncrementalSpanIndex(BatchSink):
     """foreachBatch sink maintaining the substring-span verdict table
     (module docstring has the algorithm)."""
 
+    STATE = ("verdicts_version",)
+    verdicts_version = -1  # -1: no verdicts snapshot yet
+
     def __init__(self, spark: SparkSession, state_dir: str) -> None:
-        self.spark = spark
-        self.state_dir = state_dir
+        super().__init__(spark, state_dir)
         self.docs_path = os.path.join(state_dir, "docs")
         self.windows_path = os.path.join(state_dir, "windows")
         self.dup_path = os.path.join(state_dir, "dup_hashes")
         self.flagged_path = os.path.join(state_dir, "flagged_log")
-        self.meta_path = os.path.join(state_dir, "meta.json")
-        os.makedirs(state_dir, exist_ok=True)
-        self.last_batch_id = -1
-        self.verdicts_version = -1
-        if os.path.exists(self.meta_path):
-            with open(self.meta_path) as fh:
-                meta = json.load(fh)
-            self.last_batch_id = meta["last_batch_id"]
-            self.verdicts_version = meta.get("verdicts_version", -1)
-
-    def _save_meta(self) -> None:
-        tmp = f"{self.meta_path}.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "last_batch_id": self.last_batch_id,
-                    "verdicts_version": self.verdicts_version,
-                },
-                fh,
-            )
-        os.replace(tmp, self.meta_path)
 
     def _verdicts_path(self, version: int) -> str:
         return os.path.join(self.state_dir, f"verdicts_v{version}")
 
-    def _read_or_empty(self, path: str, schema: str) -> DataFrame:
-        if os.path.exists(path):
-            return self.spark.read.schema(schema).parquet(path)
-        return self.spark.createDataFrame([], schema)
-
-    @scope()  # one cache scope per micro-batch (cache.py)
-    def process(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= self.last_batch_id:
-            return  # checkpoint replay after restart — already applied
+    def apply(self, batch_df: DataFrame, batch_id: int) -> None:
         batch_ids = batch_df.select("doc_id").distinct()
         doc_store = self._read_or_empty(self.docs_path, DOCS_SCHEMA)
 
@@ -190,8 +163,6 @@ class IncrementalSpanIndex:
         )
         prev = self.verdicts()
         if affected.isEmpty():
-            self.last_batch_id = batch_id
-            self._save_meta()
             return
 
         sizes = self._read_or_empty(self.docs_path, DOCS_SCHEMA).join(
@@ -267,11 +238,8 @@ class IncrementalSpanIndex:
         if not newly_flagged.isEmpty():
             newly_flagged.write.mode("append").parquet(self.flagged_path)
 
-        self.last_batch_id = batch_id
-        self._save_meta()
-        self._prune_versions()
-
-    def _prune_versions(self) -> None:
+    def committed(self) -> None:
+        """Drop verdict snapshots other than the committed one."""
         import shutil
 
         keep = os.path.basename(self._verdicts_path(self.verdicts_version))
@@ -292,19 +260,3 @@ class IncrementalSpanIndex:
         """Append-only changelog of docs that crossed the dup-fraction
         threshold, with the batch that flagged them."""
         return self._read_or_empty(self.flagged_path, FLAGGED_SCHEMA)
-
-
-def run_incremental_spans(
-    stream: DataFrame, state_dir: str
-) -> "tuple[StreamingQuery, IncrementalSpanIndex]":
-    """Attach the incremental span index to a streaming documents frame."""
-    ck = os.path.join(state_dir, "_checkpoint")
-    os.makedirs(ck, exist_ok=True)
-    sink = IncrementalSpanIndex(stream.sparkSession, state_dir)
-    q = (
-        stream.writeStream.foreachBatch(sink.process)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    return q, sink

@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 
 from euclid_spark.functions.hashing import digest_agg, digest_term
 from euclid_spark.streaming.block_db import (
+    IncrementalDigest,
     read_event_stream,
-    run_digest_chain,
     windowed_event_counts,
 )
 from tests.conftest import SF_SMOKE
@@ -52,7 +52,8 @@ def test_windowed_counts_over_stream(spark, event_src, tmp_path):
 
 def test_digest_chain_matches_batch_digest(spark, event_src, tmp_path):
     stream = read_event_stream(spark, event_src)
-    q, sink = run_digest_chain(stream, str(tmp_path / "ck2"))
+    sink = IncrementalDigest()
+    q = sink.start(stream, str(tmp_path / "ck2"))
     q.awaitTermination(120)
 
     from euclid_spark.catalog import load_events

@@ -9,11 +9,8 @@ import pytest
 
 from euclid_spark.cache import release_all
 from euclid_spark.operators.dedup import dedup_minhash_lsh
-from euclid_spark.streaming.dedup_stream import (
-    IncrementalDedupIndex,
-    read_document_stream,
-    run_incremental_dedup,
-)
+from euclid_spark.streaming.dedup_stream import DOCS_SCHEMA, IncrementalDedupIndex
+from euclid_spark.streaming.sink import read_feed
 from tests.conftest import SF_SMOKE
 
 
@@ -34,9 +31,8 @@ def split_docs(spark, tmp_path):
 def test_streamed_pairs_equal_batch_lsh(spark, tmp_path, split_docs):
     jsc = spark.sparkContext._jsc.sc()
     n_persistent = jsc.getPersistentRDDs().size()
-    q, sink = run_incremental_dedup(
-        read_document_stream(spark, split_docs), str(tmp_path / "state")
-    )
+    sink = IncrementalDedupIndex(spark, str(tmp_path / "state"))
+    q = sink.start(read_feed(spark, split_docs, DOCS_SCHEMA), str(tmp_path / "ck"))
     q.awaitTermination(300)
     # every micro-batch released its own pins when its cache scope ended
     assert jsc.getPersistentRDDs().size() == n_persistent

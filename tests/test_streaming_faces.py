@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from euclid_spark.streaming import faces
+from euclid_spark.streaming import faces, ivm
 from tests.conftest import SF_SMOKE
 
 
@@ -30,7 +30,7 @@ def test_ivm_face_matches_batch(spark, tmp_path, monkeypatch):
     ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
-    batch = faces._dec_partial(ev).select(
+    batch = ivm._partial(ev).select(
         "user_id",
         "day",
         "n_events",
@@ -51,7 +51,7 @@ def test_face_serves_artifact_without_rerun(spark, tmp_path, monkeypatch, key):
     # second call must serve the artifact: make a re-run impossible to
     # miss by timing-independent means — poison the stream runner
     monkeypatch.setattr(
-        faces, "_run_stream", lambda *a, **k: (_ for _ in ()).throw(
+        faces, "drain", lambda *a, **k: (_ for _ in ()).throw(
             AssertionError("stream re-ran despite existing artifact")
         )
     )

@@ -15,10 +15,10 @@ from pyspark.sql import functions as F
 from euclid_spark.streaming.block_db import read_event_stream
 from euclid_spark.streaming.ivm import (
     MaintainedAggregate,
+    _rollup_merge,
+    _rollup_partial,
     batch_oracle,
     rollup_batch_oracle,
-    run_maintained_aggregate,
-    run_maintained_state_rollup,
 )
 from tests.conftest import SF_SMOKE
 
@@ -59,7 +59,8 @@ def test_maintained_view_matches_batch_aggregate(spark, tmp_path):
     pdf.iloc[third : 2 * third].to_parquet(str(src / "b1.parquet"), index=False)
     pdf.iloc[2 * third :].to_parquet(str(src / "b2.parquet"), index=False)
 
-    q, sink = run_maintained_aggregate(read_event_stream(spark, str(src)), view, ck)
+    sink = MaintainedAggregate(view_path=view)
+    q = sink.start(read_event_stream(spark, str(src)), ck)
     q.awaitTermination(240)
     assert sink.last_batch_id >= 2  # one file per trigger → ≥3 batches
 
@@ -85,9 +86,10 @@ def test_maintained_state_rollup_matches_batch(spark, tmp_path):
         lo, hi = i * third, (i + 1) * third if i < 2 else len(pdf)
         pdf.iloc[lo:hi].to_parquet(str(src / f"b{i}.parquet"), index=False)
 
-    q, sink = run_maintained_state_rollup(
-        read_event_stream(spark, str(src)), view, ck
+    sink = MaintainedAggregate(
+        view_path=view, partial_fn=_rollup_partial, merge_fn=_rollup_merge
     )
+    q = sink.start(read_event_stream(spark, str(src)), ck)
     q.awaitTermination(240)
     assert sink.last_batch_id >= 2
 

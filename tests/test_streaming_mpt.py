@@ -11,13 +11,12 @@ from tests.conftest import SF_SMOKE
 
 from euclid_spark.cache import release_all
 from euclid_spark.operators.mpt_ingest import (
+    NODE_SCHEMA,
     mpt_reassemble_query,
     synthesize_owner_tries,
 )
-from euclid_spark.streaming.mpt_stream import (
-    read_node_stream,
-    run_incremental_mpt,
-)
+from euclid_spark.streaming.mpt_stream import IncrementalMptReassembly
+from euclid_spark.streaming.sink import read_feed
 
 N_FILES = 5
 
@@ -46,8 +45,9 @@ def test_incremental_matches_batch(spark, tmp_path, node_feed):
     src, n_nodes = node_feed
     assert n_nodes > N_FILES, "need multiple nodes per file for the test"
 
-    stream = read_node_stream(spark, src)
-    q, sink = run_incremental_mpt(stream, str(tmp_path / "state"))
+    stream = read_feed(spark, src, NODE_SCHEMA)
+    sink = IncrementalMptReassembly(spark, str(tmp_path / "state"))
+    q = sink.start(stream, str(tmp_path / "ck"))
     q.awaitTermination(300)
 
     got = {
@@ -68,8 +68,9 @@ def test_incremental_matches_batch(spark, tmp_path, node_feed):
 
 def test_replayed_batch_is_skipped(spark, tmp_path, node_feed):
     src, _ = node_feed
-    stream = read_node_stream(spark, src)
-    q, sink = run_incremental_mpt(stream, str(tmp_path / "state"))
+    stream = read_feed(spark, src, NODE_SCHEMA)
+    sink = IncrementalMptReassembly(spark, str(tmp_path / "state"))
+    q = sink.start(stream, str(tmp_path / "ck"))
     q.awaitTermination(300)
     n = sink.entries().count()
 
@@ -86,8 +87,9 @@ def test_resent_root_does_not_duplicate(spark, tmp_path, node_feed):
     the subtree is already in the node store, and a re-seeded cursor
     would re-emit every entry for that owner."""
     src, _ = node_feed
-    stream = read_node_stream(spark, src)
-    q, sink = run_incremental_mpt(stream, str(tmp_path / "state"))
+    stream = read_feed(spark, src, NODE_SCHEMA)
+    sink = IncrementalMptReassembly(spark, str(tmp_path / "state"))
+    q = sink.start(stream, str(tmp_path / "ck"))
     q.awaitTermination(300)
     n = sink.entries().count()
     assert n > 0

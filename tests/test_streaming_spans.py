@@ -12,10 +12,7 @@ import pytest
 
 from euclid_spark.cache import release_all
 from euclid_spark.operators.dedup import _substring_spans_build
-from euclid_spark.streaming.spans_stream import (
-    IncrementalSpanIndex,
-    run_incremental_spans,
-)
+from euclid_spark.streaming.spans_stream import IncrementalSpanIndex
 from tests.conftest import SF_SMOKE
 
 _COLS = (
@@ -92,11 +89,11 @@ def test_retroactive_flip_and_changelog(spark, tmp_path):
 def test_streaming_feed_end_to_end(spark, tmp_path, split_docs):
     """The foreachBatch wiring: file-source stream, availableNow, final
     verdict table equals the batch pipeline."""
-    from euclid_spark.streaming.dedup_stream import read_document_stream
+    from euclid_spark.streaming.dedup_stream import DOCS_SCHEMA
+    from euclid_spark.streaming.sink import read_feed
 
-    q, sink = run_incremental_spans(
-        read_document_stream(spark, split_docs), str(tmp_path / "state")
-    )
+    sink = IncrementalSpanIndex(spark, str(tmp_path / "state"))
+    q = sink.start(read_feed(spark, split_docs, DOCS_SCHEMA), str(tmp_path / "ck"))
     q.awaitTermination(300)
     assert sink.last_batch_id >= 2
     corpus = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
