@@ -26,10 +26,14 @@ columns, the input rows, the `leaf` aggregate over rows, the `combine`
 aggregate over partials, the block-clustered store its edge windows
 read, and the driver fold. Everything else derives from it:
 
-- **Batch levels** (`TileTree.levels`): `leaf` per level-0 cell, then
-  `combine` grouped by (cell >> 1, *keys) per level, unioned, stored as
-  a fingerprint-keyed artifact. A keyed tree is written owner-clustered
-  with fine row groups, so one owner's cover read prunes to its rows.
+- **Batch levels** (`TileTree.levels`): two aggregations at any depth —
+  `leaf` per (cell, *keys) for level 0, then the level-0 partials
+  exploded over levels 1..depth (`cell >> level`) into ONE `combine`
+  per (level, cell, *keys), the streaming partial's shape; unioned with
+  level 0 and stored as a fingerprint-keyed artifact. The keyless tree
+  is written sorted by (level, cell) in one file; a keyed tree is
+  written owner-clustered with fine row groups, so one owner's cover
+  read prunes to its rows.
 - **Streaming upkeep** (`TileTree.partial` / `merge`, the D19 monoid
   pair `parity.SPECS` and `faces.MAINTAINED` run): each input row
   contributes one cell per level 0.._RT_LEVELS, grouped by
@@ -50,6 +54,7 @@ the tile path returns exactly what scanning the rows would.
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 from dataclasses import dataclass
 from decimal import ROUND_HALF_UP, Decimal
@@ -215,6 +220,23 @@ def _probe_range(
     )
 
 
+def _max_event_id(spark: SparkSession, sf_dir: str) -> int:
+    """The events table's max event_id (0 when it has none) from its
+    parquet FOOTERS. Falls back to a one-row Spark fold, logged at
+    WARNING, when the footers cannot answer (a non-local path, or a row
+    group without statistics)."""
+    path = f"{sf_dir}/events.parquet"
+    try:
+        mb = artifacts.footer_stats(path).span("event_id")[1]
+    except Exception as ex:  # noqa: BLE001 — same value from one fold
+        logging.getLogger(__name__).warning(
+            "range_tree: no footer max(event_id) for %s (%s); one-row fold",
+            path, ex,
+        )
+        mb = load_events(spark, sf_dir).agg(F.max("event_id")).collect()[0][0]
+    return int(mb or 0)
+
+
 def _served_max_block(spark: SparkSession, sf_dir: str) -> int:
     """The corpus's max block from the served scalar tile tree's parquet
     FOOTER — the default-range probe every pinned face derives, without
@@ -284,7 +306,10 @@ class TileTree:
                     .sortWithinPartitions(*self.keys, "level", "cell")
                 )
         else:
-            return name, fp, lambda: self.levels(spark, sf_dir), None
+            # one file, in the (level, cell) order the cover read filters on
+            return name, fp, lambda: self.levels(spark, sf_dir).orderBy(
+                "level", "cell"
+            ), None
         return name, fp, build, artifacts.FINE_ROW_GROUPS
 
     def path(
@@ -306,24 +331,33 @@ class TileTree:
     def levels(
         self, spark: SparkSession, sf_dir: str, contract=None, rate=None
     ) -> DataFrame:
-        """Every tree level: `leaf` per level-0 cell, then `combine` per
-        (cell >> 1, *keys), as deep as the FULL block space needs (one
-        one-row max(event_id) fetch), so any cover stays ≤ 2 tiles per
+        """Every tree level in two aggregations at any depth: `leaf` per
+        (cell, *keys) for level 0, then those level-0 partials exploded
+        over levels 1..depth with `cell >> level` and ONE `combine` per
+        (level, cell, *keys) — the streaming `partial`'s shape. Each
+        combine is associative, so a node combined straight from its
+        level-0 cells equals the chain through its children; both
+        branches read the one leaf exchange. The depth covers the FULL
+        block space (`_max_event_id`), so any cover stays ≤ 2 tiles per
         level. A tree with a store builds from the served store."""
-        ev = load_events(spark, sf_dir)
         src = (
             self.frame(spark, sf_dir, contract, rate, store=True)
             if self.store
-            else self.rows(ev, contract, rate)
+            else self.rows(load_events(spark, sf_dir), contract, rate)
         )
-        mb = ev.agg(F.max("event_id")).collect()[0][0]  # one-row fetch
+        depth = tree_depth(_max_event_id(spark, sf_dir) // TILE_SIZE + 1)
         by = ["cell", *self.keys]
-        lvl = self.leaf(src.withColumn("cell", _cell()), by)
-        out = [lvl.withColumn("level", F.lit(0))]
-        for k in range(1, tree_depth(int(mb or 0) // TILE_SIZE + 1) + 1):
-            lvl = self.combine(lvl.withColumn("cell", F.shiftright("cell", 1)), by)
-            out.append(lvl.withColumn("level", F.lit(k)))
-        return reduce(DataFrame.unionByName, out).select("level", *by, *self.cols)
+        out = ["level", *by, *self.cols]
+        leaf = self.leaf(src.withColumn("cell", _cell()), by)
+        up = self.combine(
+            leaf.withColumn(
+                "level", F.explode(F.sequence(F.lit(1), F.lit(depth)))
+            ).withColumn("cell", F.expr("shiftright(cell, level)")),
+            ["level", *by],
+        )
+        return leaf.withColumn("level", F.lit(0)).select(*out).unionByName(
+            up.select(*out)
+        )
 
     def partial(self, events: DataFrame) -> DataFrame:
         """The streaming partial of one micro-batch: each input row

@@ -57,7 +57,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from euclid_spark.catalog import cached_parquet
+from euclid_spark.catalog import cached_parquet, local_frame
 
 from euclid_spark import artifacts
 from euclid_spark.functions.hashing import DIGEST_PRIME, MIX
@@ -650,8 +650,8 @@ def stream_block_db_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
         ck = os.path.join(tmp, "ck")
         sink = IncrementalDigest(state_path=os.path.join(ck, "digest_state.json"))
         drain(sink.start(read_event_stream(spark, feed), ck), n_files, sink)
-        return spark.createDataFrame(
-            [(sink.chain, sink.n_rows)], "chain_digest long, n_rows long"
+        return local_frame(
+            spark, [(sink.chain, sink.n_rows)], "chain_digest long, n_rows long"
         )
 
     return _serve_streamed(spark, "stream_block_db_chain", fp, build)

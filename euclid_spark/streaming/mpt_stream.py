@@ -11,17 +11,18 @@ soon as their root→leaf path is complete.
 Algorithm (incremental level-synchronous walk):
 
 - persistent state between batches, all parquet on disk:
-    nodes/    — decoded typed nodes ingested so far (append-only,
-                (owner, node_hash) unique)
-    frontier/ — pending cursors (owner, node_hash, prefix): tree
-                positions whose node bytes have NOT arrived yet
-                (snapshot, rewritten per batch)
-    entries/  — resolved (owner, token_id, value_hex) (append-only)
+    nodes/batch_id=<b>/   — decoded typed nodes batch b ingested
+                            ((owner, node_hash) unique across batches)
+    frontier_v<b>/        — pending cursors (owner, node_hash, prefix)
+                            after batch b: tree positions whose node
+                            bytes have NOT arrived yet (one snapshot per
+                            batch; the committed one is read)
+    entries/batch_id=<b>/ — resolved (owner, token_id, value_hex)
 - per micro-batch: decode the new nodes, merge them into the store,
   seed new roots as cursors, then walk: a cursor that finds its node
   either emits (leaf / valued branch) or expands into child cursors;
-  a cursor whose node is still missing parks in frontier/ and is
-  retried next batch. The walk is the shared multi-level-batched
+  a cursor whose node is still missing parks in the frontier snapshot
+  and is retried next batch. The walk is the shared multi-level-batched
   engine (operators/mpt_ingest.walk_tries, park_missing mode) — a
   newly-arrived node can unblock a whole subtree at once.
 
@@ -36,10 +37,16 @@ shuffled 1-node-per-trigger feed).
 
 Exactly-once across restarts is the shared batch-id watermark
 (streaming/sink.py), committed after the batch's stores are updated.
-What the sink adds is the root ledger: new nodes anti-join the node
-store, and a root seeds its walk cursor only on first arrival (the
-pre-batch node store is the ledger), so a node or root re-sent under a
-NEW batch id appends nothing.
+What the sink adds:
+
+- a batch is redone from scratch: it writes only under its own batch
+  id and removes those directories first, reads the pre-batch node
+  store as the ids below its own and the frontier from the committed
+  batch's snapshot, so a crash anywhere inside `apply` replays cleanly;
+- the root ledger: new nodes anti-join the pre-batch node store, and a
+  root seeds its walk cursor only on first arrival (the pre-batch node
+  store is the ledger), so a node or root re-sent under a NEW batch id
+  appends nothing.
 
 Scale shape: per batch, cost is (new nodes decoded) + (frontier ⋈
 node-store joins, shuffle-partitioned on (owner, node_hash)) — the
@@ -52,6 +59,7 @@ otherwise nest per trie level (operators/components.py failure mode)."""
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,6 +75,10 @@ from euclid_spark.streaming.sink import BatchSink
 
 FRONTIER_SCHEMA = "owner long, node_hash string, prefix array<int>"
 ENTRIES_SCHEMA = "owner long, token_id long, value_hex string"
+STORE_SCHEMA = (
+    "owner long, node_hash string, node_type string, path array<int>, "
+    "value binary, children array<struct<idx:int, child:string>>"
+)
 
 
 class IncrementalMptReassembly(BatchSink):
@@ -76,18 +88,37 @@ class IncrementalMptReassembly(BatchSink):
     def __init__(self, spark: SparkSession, state_dir: str) -> None:
         super().__init__(spark, state_dir)
         self.nodes_path = os.path.join(state_dir, "nodes")
-        self.frontier_path = os.path.join(state_dir, "frontier")
         self.entries_path = os.path.join(state_dir, "entries")
 
+    def _frontier_path(self, batch_id: int) -> str:
+        return os.path.join(self.state_dir, f"frontier_v{batch_id}")
+
+    @staticmethod
+    def _batch_dir(path: str, batch_id: int) -> str:
+        return os.path.join(path, f"batch_id={batch_id}")
+
+    def _below(self, path: str, schema: str, batch_id: int) -> DataFrame:
+        """The rows batches before `batch_id` wrote under `path`'s
+        per-batch directories."""
+        return (
+            self._read_or_empty(path, f"{schema}, batch_id long")
+            .filter(F.col("batch_id") < batch_id)
+            .drop("batch_id")
+        )
+
     def apply(self, batch_df: DataFrame, batch_id: int) -> None:
+        # a replay of a half-applied batch redoes it from scratch: drop
+        # whatever an earlier attempt of this id wrote
+        for d in (
+            self._batch_dir(self.nodes_path, batch_id),
+            self._batch_dir(self.entries_path, batch_id),
+            self._frontier_path(batch_id),
+        ):
+            shutil.rmtree(d, ignore_errors=True)
         # this batch's pins (new decoded nodes, the walk's node store
         # and round frontiers, emit frames) are all flushed to parquet
         # by the end; the base frees them when apply returns
-        store_existing = self._read_or_empty(
-            self.nodes_path,
-            "owner long, node_hash string, node_type string, path array<int>, "
-            "value binary, children array<struct<idx:int, child:string>>",
-        )
+        store_existing = self._below(self.nodes_path, STORE_SCHEMA, batch_id)
         # content-addressed upsert: a node re-sent in a later batch (or a
         # replayed file) must not duplicate its (owner, node_hash) row —
         # the walk joins would fan out duplicate entries
@@ -101,13 +132,9 @@ class IncrementalMptReassembly(BatchSink):
         )
         dec_new = local_checkpoint_tracked(dec_new)
         if not dec_new.isEmpty():
-            dec_new.write.mode("append").parquet(self.nodes_path)
-        # re-read AFTER append so this batch's nodes are visible to the walk
-        store = (
-            self.spark.read.parquet(self.nodes_path)
-            if os.path.exists(self.nodes_path)
-            else store_existing
-        )
+            dec_new.write.parquet(self._batch_dir(self.nodes_path, batch_id))
+        # re-read so this batch's nodes are visible to the walk
+        store = self._below(self.nodes_path, STORE_SCHEMA, batch_id + 1)
 
         # A root seeds a walk cursor only on FIRST arrival: a root node
         # re-sent in a later micro-batch (or a replayed file) is already
@@ -131,7 +158,7 @@ class IncrementalMptReassembly(BatchSink):
             )
         )
         active = local_checkpoint_tracked(
-            self._read_or_empty(self.frontier_path, FRONTIER_SCHEMA)
+            self.pending()
             .unionByName(new_roots)
             .dropDuplicates(["owner", "node_hash", "prefix"])
         )
@@ -149,15 +176,22 @@ class IncrementalMptReassembly(BatchSink):
         )
         ent = local_checkpoint_tracked(ent)
         if not ent.isEmpty():
-            ent.write.mode("append").parquet(self.entries_path)
+            ent.write.parquet(self._batch_dir(self.entries_path, batch_id))
+        # a new snapshot, never an overwrite: the committed one stays
+        # readable until the watermark moves past it
+        frontier.write.parquet(self._frontier_path(batch_id))
 
-        # walk_tries returned round-checkpointed slices — pin the union
-        # so overwriting the directory it was read from is safe
-        frontier = local_checkpoint_tracked(frontier)
-        frontier.write.mode("overwrite").parquet(self.frontier_path)
+    def committed(self) -> None:
+        """Drop frontier snapshots other than the committed one."""
+        keep = os.path.basename(self._frontier_path(self.last_batch_id))
+        for name in os.listdir(self.state_dir):
+            if name.startswith("frontier_v") and name != keep:
+                shutil.rmtree(os.path.join(self.state_dir, name), True)
 
     def entries(self) -> DataFrame:
-        return self._read_or_empty(self.entries_path, ENTRIES_SCHEMA)
+        return self._below(self.entries_path, ENTRIES_SCHEMA, self.last_batch_id + 1)
 
     def pending(self) -> DataFrame:
-        return self._read_or_empty(self.frontier_path, FRONTIER_SCHEMA)
+        return self._read_or_empty(
+            self._frontier_path(self.last_batch_id), FRONTIER_SCHEMA
+        )

@@ -522,15 +522,6 @@ def test_stream_upkeep_equals_batch_levels(spark, tree):
     depth."""
     from euclid_spark.operators.range_tree import _RT_LEVELS
 
-    def rows(df):
-        def norm(v):
-            if isinstance(v, (list, tuple)):
-                return tuple(norm(x) for x in v)
-            return v
-
-        cols = ["level", "cell", *tree.keys, *tree.cols]
-        return sorted(norm(tuple(r)) for r in df.select(*cols).collect())
-
     ev = load_events(spark, SF_SMOKE)
     odd = F.col("event_id") % 2 == 1
     stream = tree.merge(tree.partial(ev.filter(odd)), tree.partial(ev.filter(~odd)))
@@ -539,5 +530,125 @@ def test_stream_upkeep_equals_batch_levels(spark, tree):
     batch = batch.filter(F.col("level") <= top)
     if tree.invariant is not None:
         batch = tree.invariant(batch)
-    want = rows(batch)
-    assert want and rows(stream.filter(F.col("level") <= top)) == want
+    want = _sorted_rows(tree, batch)
+    assert want and _sorted_rows(tree, stream.filter(F.col("level") <= top)) == want
+
+
+# --- the batch levels above _RT_LEVELS ---------------------------------------
+
+_TREES = [RANGE_TREE, Q2_KEY_TREE, ERC20_REWARD_TREE]
+
+
+def _wide_corpus(spark, tmp_path, monkeypatch) -> str:
+    """SF_SMOKE's events with event_id × 300 under a private artifact
+    root: ~1 172 level-0 cells (not a power of two), most of them empty,
+    so the tree is ≥ 10 levels deep — far above _RT_LEVELS."""
+    monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path / "_arts"))
+    out = str(tmp_path / "wide")
+    (
+        spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+        .withColumn("event_id", F.col("event_id") * 300)
+        .coalesce(1)
+        .write.parquet(f"{out}/events.parquet")
+    )
+    return out
+
+
+def _chain_levels(spark, tree, sf_dir):
+    """The per-level build `levels` replaced, kept here as its oracle:
+    `leaf` per level-0 cell, then one `combine` per (cell >> 1, *keys)
+    on the level before, as deep as max(event_id) needs."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+
+    from euclid_spark.operators.range_tree import _cell, tree_depth
+
+    ev = load_events(spark, sf_dir)
+    src = (
+        tree.frame(spark, sf_dir, store=True)
+        if tree.store
+        else tree.rows(ev, None, None)
+    )
+    mb = ev.agg(F.max("event_id")).collect()[0][0]
+    by = ["cell", *tree.keys]
+    lvl = tree.leaf(src.withColumn("cell", _cell()), by)
+    out = [lvl.withColumn("level", F.lit(0))]
+    for k in range(1, tree_depth(int(mb or 0) // TILE_SIZE + 1) + 1):
+        lvl = tree.combine(lvl.withColumn("cell", F.shiftright("cell", 1)), by)
+        out.append(lvl.withColumn("level", F.lit(k)))
+    return reduce(DataFrame.unionByName, out).select("level", *by, *tree.cols)
+
+
+def _sorted_rows(tree, df) -> list:
+    """The tree rows of `df`, nested arrays as tuples, sorted."""
+
+    def norm(v):
+        if isinstance(v, (list, tuple)):
+            return tuple(norm(x) for x in v)
+        return v
+
+    cols = ["level", "cell", *tree.keys, *tree.cols]
+    return sorted(norm(tuple(r)) for r in df.select(*cols).collect())
+
+
+@pytest.mark.parametrize("tree", _TREES, ids=lambda t: t.name)
+def test_levels_equal_per_level_chain_on_a_deep_tree(
+    spark, tmp_path, monkeypatch, tree
+):
+    """`levels` (one leaf, one exploded combine) equals the per-level
+    chain row for row on a ≥ 10-level tree with empty cells: the
+    combine is associative, so a node folded straight from its level-0
+    cells is the node folded from its children."""
+    from euclid_spark.operators.range_tree import _max_event_id, tree_depth
+
+    wide = _wide_corpus(spark, tmp_path, monkeypatch)
+    assert tree_depth(_max_event_id(spark, wide) // TILE_SIZE + 1) >= 10
+    got = _sorted_rows(tree, tree.levels(spark, wide))
+    want = _sorted_rows(tree, _chain_levels(spark, tree, wide))
+    assert want and got == want
+    assert max(r[0] for r in got) >= 10
+
+
+def test_levels_aggregate_count_is_depth_independent(spark, tmp_path, monkeypatch):
+    """The build's shape does not grow with the block span: the
+    optimized plan of `levels` holds as many Aggregate nodes at depth 2
+    (SF_SMOKE) as at depth ≥ 10 — one shuffle per aggregation, not one
+    per level."""
+    from euclid_spark.operators.range_tree import _max_event_id, tree_depth
+    from tests.test_plans import _logical_node_counts
+
+    wide = _wide_corpus(spark, tmp_path, monkeypatch)
+    depth = {
+        d: tree_depth(_max_event_id(spark, d) // TILE_SIZE + 1)
+        for d in (SF_SMOKE, wide)
+    }
+    assert depth[SF_SMOKE] == 2 and depth[wide] >= 10, depth
+    for tree in _TREES:
+        shallow = _logical_node_counts(tree.levels(spark, SF_SMOKE))
+        deep = _logical_node_counts(tree.levels(spark, wide))
+        assert shallow["Aggregate"] == deep["Aggregate"], (tree.name, shallow, deep)
+
+
+def test_depth_falls_back_to_one_fold_when_footers_fail(spark, monkeypatch, caplog):
+    """The build's max(event_id) comes from the events footers; when
+    they cannot answer, the same value comes from one Spark fold and
+    the fallback is logged at WARNING, never silent."""
+    import logging
+
+    from euclid_spark import artifacts
+    from euclid_spark.operators.range_tree import _max_event_id
+
+    want = _max_event_id(spark, SF_SMOKE)
+    assert want == load_events(spark, SF_SMOKE).agg(F.max("event_id")).collect()[0][0]
+
+    def no_footers(path):
+        raise ValueError("no footer statistics for column 'event_id'")
+
+    monkeypatch.setattr(artifacts, "footer_stats", no_footers)
+    with caplog.at_level(logging.WARNING, logger="euclid_spark.operators.range_tree"):
+        assert _max_event_id(spark, SF_SMOKE) == want
+    assert any(
+        r.levelno == logging.WARNING and "one-row fold" in r.getMessage()
+        for r in caplog.records
+    )

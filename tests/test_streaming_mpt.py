@@ -5,6 +5,8 @@ early: a leaf whose ancestors haven't arrived waits in the frontier."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from tests.conftest import SF_SMOKE
@@ -98,4 +100,57 @@ def test_resent_root_does_not_duplicate(spark, tmp_path, node_feed):
     assert not roots.isEmpty()
     sink.process(roots, sink.last_batch_id + 1)
     assert sink.entries().count() == n, "re-sent roots re-emitted entries"
+    assert sink.pending().isEmpty()
+
+
+def test_crash_before_frontier_write_replays_exactly_once(
+    spark, tmp_path, node_feed, monkeypatch
+):
+    """A crash inside `apply` — after batch 2 wrote its entries, before
+    its frontier is written — then a restart from the same checkpoint
+    and state: the replayed batch redoes itself from scratch, so the
+    entries equal the batch walk with no duplicates and no cursor is
+    left parked."""
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql.utils import StreamingQueryException
+
+    from euclid_spark.streaming.sink import drain
+
+    src, _ = node_feed
+    state, ck = str(tmp_path / "state"), str(tmp_path / "ck")
+    writes = []
+    orig = DataFrameWriter.parquet
+
+    def failing(self, path, *args, **kwargs):
+        if os.path.basename(str(path)).startswith("frontier"):
+            writes.append(path)
+            if len(writes) == 3:  # batches 0, 1 commit; batch 2 dies here
+                raise RuntimeError("injected crash before the frontier write")
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing)
+    sink = IncrementalMptReassembly(spark, state)
+    q = sink.start(read_feed(spark, src, NODE_SCHEMA), ck)
+    with pytest.raises(StreamingQueryException):
+        q.awaitTermination(300)
+    assert sink.last_batch_id == 1
+    monkeypatch.setattr(DataFrameWriter, "parquet", orig)
+
+    sink = IncrementalMptReassembly(spark, state)  # the restart
+    assert sink.last_batch_id == 1
+    drain(sink.start(read_feed(spark, src, NODE_SCHEMA), ck), N_FILES, sink)
+
+    got = [
+        (r["owner"], r["token_id"], r["value_hex"])
+        for r in sink.entries().collect()
+    ]
+    want = {
+        (r["owner"], r["token_id"], r["value_hex"])
+        for r in mpt_reassemble_query(spark, SF_SMOKE).collect()
+    }
+    release_all()
+    assert len(got) == len(set(got)), f"{len(got) - len(set(got))} duplicate entries"
+    assert set(got) == want, (
+        f"missing={len(want - set(got))} extra={len(set(got) - want)}"
+    )
     assert sink.pending().isEmpty()
