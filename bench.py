@@ -18,13 +18,13 @@ ingest pass left cold measuring a second execution with codegen JIT'd
 and caches warm (VERDICT r11 #2).
 
 The printed line carries the per-query COLD (`queries`) and WARM
-(`queries_warm`) maps rounded to 10 ms (~3 KB each for 107 faces) —
+(`queries_warm`) maps rounded to 1 ms (~3.3 KB each for 107 faces) —
 restored in r16 (VERDICT r15 #3: the driver's comparator reads only
 this line, so without them PERF per_query/scaling were empty two
-rounds running). The r6 loss was the full-precision maps PLUS the
-2-rep warm detail on one line; the rounded maps stay well under that,
-and the full-precision cold+warm+reps detail remains in
-BENCH_DETAIL.json.
+rounds running). The line has a byte budget (`LINE_BUDGET`): over it,
+the maps are dropped and `"maps_omitted": true` says so, rather than a
+truncated line parsing as null (the r6 loss). The full-precision
+cold+warm+reps detail remains in BENCH_DETAIL.json.
 
 Each query executes its full physical plan into the noop sink (no driver
 collect — we measure the engine, not row transfer). `queries` is the
@@ -391,13 +391,12 @@ def main() -> None:
         "value": detail["value"],
         "unit": "sec",
         "n_queries": len(times),
-        # per-query maps, rounded to 10 ms (VERDICT r15 #3): the driver's
-        # comparator reads ONLY this line, so these feed PERF per_query,
-        # regression status and the low/high-core scaling ratios. Rounded
-        # (not full precision) + no rep detail keeps the line ~7 KB —
-        # the r6 overflow was the 3-decimal maps plus per-rep detail.
-        "queries": {k: round(v, 2) for k, v in times.items()},
-        "queries_warm": {k: round(v, 2) for k, v in warm.items()},
+        # per-query maps (VERDICT r15 #3): the driver's comparator reads
+        # ONLY this line, so these feed PERF per_query, regression
+        # status and the low/high-core scaling ratios (rounded and
+        # budgeted by stdout_line)
+        "queries": times,
+        "queries_warm": warm,
         "warm_total": detail["warm_total"],
         "build_total": build_total,
         "sf": sf_val,
@@ -440,7 +439,32 @@ def main() -> None:
         # self-labeling sanity flag: warm (min-of-2) exceeding cold means
         # the host was contended during this run — treat totals as noisy
         out["noisy_host"] = True
-    print(json.dumps(out, separators=(",", ":")))
+    print(stdout_line(out))
+
+
+# The line's size budget, in bytes. It is the only output read back,
+# and a line cut short by a capped stdout capture parses as null (the
+# r6/r7 loss: 3-decimal maps plus per-rep detail). 107 faces take
+# ~7 KB; the budget leaves room for the registry to grow by half.
+LINE_BUDGET = 12 * 1024
+_MAPS = ("queries", "queries_warm")
+
+
+def stdout_line(out: dict, budget: int = LINE_BUDGET) -> str:
+    """`out` as the one compact JSON line, its per-query maps rounded to
+    1 ms (a 4 ms face stays nonzero, so scaling ratios stay finite).
+    Over `budget` bytes the maps are dropped and `maps_omitted` set —
+    BENCH_DETAIL.json keeps them at full precision either way."""
+    line = {
+        k: {q: round(v, 3) for q, v in val.items()} if k in _MAPS else val
+        for k, val in out.items()
+    }
+    text = json.dumps(line, separators=(",", ":"))
+    if len(text.encode()) <= budget:
+        return text
+    line = {k: val for k, val in line.items() if k not in _MAPS}
+    line["maps_omitted"] = True
+    return json.dumps(line, separators=(",", ":"))
 
 
 if __name__ == "__main__":

@@ -68,10 +68,13 @@ LEVELS_PER_CKPT = 4
 
 
 def merkle_levels(
-    leaves: DataFrame, group: str = "group_key", levels: int | None = None
+    leaves: DataFrame,
+    group: "str | tuple[str, ...]" = "group_key",
+    levels: int | None = None,
 ) -> "tuple[DataFrame, int]":
     """leaves: (group, pos, node_hash) with pos contiguous 0..n-1 per
-    group. Returns (nodes, depth): every tree node as
+    group; `group` is one column or a tuple of them (a composite key).
+    Returns (nodes, depth): every tree node as
     (group, level, pos, node_hash), level 0 = leaves, level `depth` =
     the root row (pos 0 per group).
 
@@ -86,10 +89,11 @@ def merkle_levels(
     builds), and the levels between ride lazily on the last checkpoint.
     On a real cluster prefer reliable checkpoint() (survives executor
     loss) exactly as in operators/components.py."""
-    lvl = local_checkpoint_tracked(leaves.select(group, "pos", "node_hash"))
+    keys = [group] if isinstance(group, str) else list(group)
+    lvl = local_checkpoint_tracked(leaves.select(*keys, "pos", "node_hash"))
     if levels is None:
         mx = (
-            lvl.groupBy(group).count().agg(F.max("count").alias("m")).collect()
+            lvl.groupBy(*keys).count().agg(F.max("count").alias("m")).collect()
         )[0]["m"] or 1
         levels = max(1, math.ceil(math.log2(mx))) if mx > 1 else 1
         # The chained-CTE oracles (merkle_proof_sql) are emitted with the
@@ -108,14 +112,14 @@ def merkle_levels(
     for k in range(1, levels + 1):
         pos = F.col("pos")
         lvl = (
-            lvl.groupBy(group, F.shiftright(pos, 1).alias("pos"))
+            lvl.groupBy(*keys, F.shiftright(pos, 1).alias("pos"))
             .agg(
                 F.count(F.lit(1)).alias("cnt"),
                 F.min(F.when(pos % 2 == 0, F.col("node_hash"))).alias("lh"),
                 F.min(F.when(pos % 2 == 1, F.col("node_hash"))).alias("rh"),
             )
             .select(
-                group,
+                *keys,
                 "pos",
                 F.when(
                     F.col("cnt") == 2, F.sha2(F.concat("lh", "rh"), 256)

@@ -52,7 +52,12 @@ Construction — the reference's own aggregation shape, hash-only:
   caller acts on it. Nothing reads the range interior (asserted by the
   --events scale probe) except the two reads bounded only by the
   owner's rows in the range: the ERC-20 revealed rows and the q2
-  L > Q2_L fallback.
+  L > Q2_L fallback. The stores hold every digest as its 32 raw bytes
+  (half the bytes of its hex spelling, so each read decodes half as
+  much) and the in-cell trees keyed by the (owner, cell) longs; hex
+  appears only in responses — the builds and the driver reads turn
+  the bytes back into the lowercase hex the hashes are defined over,
+  so every hash value and response is unchanged.
 
 Verification (A32/A33 faces + the standalone tool): leaf re-derives
 from the payload; path refolds leaf → element; the element sits at its
@@ -69,6 +74,7 @@ from rows.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -86,6 +92,7 @@ from euclid_spark.operators.range_tree import (
     _cell,
     _cover_filter,
     _edge_filter,
+    _events_span,
     _probe_range,
     _q2_entries,
     tile_cover,
@@ -101,10 +108,6 @@ CELL_LVL_OFF = 100
 # --------------------------------------------------------------------------
 # artifacts: per-cell leaf trees + the cell tree above them
 # --------------------------------------------------------------------------
-
-
-def _gk() -> F.Column:
-    return F.concat_ws("|", F.col("owner"), F.col("cell"))
 
 
 def _fp(sf_dir: str, family: str, rate, contract, layout=None) -> str:
@@ -183,6 +186,78 @@ def _erc20_cell_leaf_rows(
     )
 
 
+# The commitment stores hold every sha256 digest as its 32 raw bytes;
+# the hash definition concatenates lowercase hex (A18's wire format),
+# so `_stored` packs at write and `_hexed` / `_read_rows` unpack every
+# read — the only three places the stored encoding appears.
+_DIGESTS = ("node_hash", "entry_reward_hex")
+# owner-contiguous files per store: bucket i of the owner span is
+# written by task i (see _bucket_keys)
+_STORE_PARTS = 8
+
+
+@functools.lru_cache(maxsize=None)
+def _bucket_keys(spark: SparkSession, n: int) -> "tuple[int, ...]":
+    """For each partition i < n, a long key that Spark's hash
+    partitioner (`pmod(hash(key), n)`, the Murmur3 of F.hash) sends to
+    partition i — so `repartition(n, key_of_bucket)` writes bucket i in
+    task i, with no sampled bounds. One tiny job per session."""
+    first: "dict[int, int]" = {}
+    for r in spark.range(16 * n).select(
+        "id", F.expr(f"pmod(hash(id), {n})").alias("p")
+    ).collect():
+        first.setdefault(r["p"], r["id"])
+    return tuple(first[i] for i in range(n))
+
+
+def _stored(
+    spark: SparkSession, sf_dir: str, df: DataFrame, *cols: str
+) -> DataFrame:
+    """A commitment store's write form: digests as BINARY(32), rows
+    clustered by owner into _STORE_PARTS files of equal-width owner
+    buckets over the events' user_id span (footer statistics), each
+    sorted by (owner, *cols). A function of the data alone: two builds
+    write the same bytes."""
+    lo, hi = (int(v or 0) for v in _events_span(spark, sf_dir, "user_id"))
+    width = (hi - lo) // _STORE_PARTS + 1
+    keys = F.array(
+        *(F.lit(k).cast("long") for k in _bucket_keys(spark, _STORE_PARTS))
+    )
+    bucket = F.expr(f"(owner - {lo}) div {width}")  # 0.._STORE_PARTS-1
+    return (
+        df.select(
+            *(F.unhex(c).alias(c) if c in _DIGESTS else c for c in df.columns)
+        )
+        .repartition(
+            _STORE_PARTS, F.element_at(keys, (bucket + 1).cast("int"))
+        )
+        .sortWithinPartitions("owner", *cols)
+    )
+
+
+def _hexed(df: DataFrame) -> DataFrame:
+    """A store read back in Spark with its digests as lowercase hex."""
+    return df.select(
+        *(
+            F.lower(F.hex(c)).alias(c) if c in _DIGESTS else c
+            for c in df.columns
+        )
+    )
+
+
+def _read_rows(
+    path: str, filter: "list[list[tuple]]", columns: "list[str]"
+) -> "list[dict]":
+    """`artifacts.read_rows` over a commitment store, digests as
+    lowercase hex."""
+    rows = artifacts.read_rows(path, filter, columns)
+    for r in rows:
+        for c in _DIGESTS:
+            if r.get(c) is not None:
+                r[c] = r[c].hex()
+    return rows
+
+
 def range_commitment_paths(
     spark: SparkSession,
     sf_dir: str,
@@ -194,24 +269,20 @@ def range_commitment_paths(
     the three commitment artifacts' paths, each built on a miss
     (owner-clustered with fine row groups, so a single-owner response
     prunes to that owner's row groups), and the two tree depths from
-    their footers.
+    their footers. Every `node_hash` and `entry_reward_hex` is stored
+    as BINARY(32), the digest's raw bytes:
 
     leaves:       (owner, cell, <payload cols>, pos, node_hash)
-    incell_nodes: (group_key = owner|cell, level, pos, node_hash, owner)
+    incell_nodes: (owner, cell, level, pos, node_hash) — one tree per
+                  (owner, cell)
     cell_nodes:   (owner, level, pos, node_hash) — pos = cell >> level
     """
-    from euclid_spark.cache import persist_tracked
     from euclid_spark.operators.merkle import merkle_levels
 
     # fine row groups: a driver read of one owner's few rows decodes a
     # 4 MB row group, not a 128 MB one (stores written before rebuild once)
-    fp = _fp(sf_dir, family, rewards_rate, contract, layout="fine_v1")
+    fp = _fp(sf_dir, family, rewards_rate, contract, layout="bin_v1")
     fine = artifacts.FINE_ROW_GROUPS
-
-    def _clustered(df: DataFrame, *cols: str) -> DataFrame:
-        return df.repartitionByRange(8, "owner").sortWithinPartitions(
-            "owner", *cols
-        )
 
     def build_leaves() -> DataFrame:
         rows = (
@@ -219,21 +290,20 @@ def range_commitment_paths(
             if family == "erc20"
             else _q2_cell_leaf_rows(spark, sf_dir, contract)
         )
-        return _clustered(rows, "cell", "pos")
+        return _stored(spark, sf_dir, rows, "cell", "pos")
 
     leaves = artifacts.ensure(f"rr_{family}_leaves", fp, build_leaves, fine)
 
     def build_incell() -> DataFrame:
-        lv = persist_tracked(
-            cached_parquet(spark, leaves).select(
-                _gk().alias("group_key"), "owner", "pos", "node_hash"
-            )
+        nodes, _ = merkle_levels(
+            _hexed(
+                cached_parquet(spark, leaves).select(
+                    "owner", "cell", "pos", "node_hash"
+                )
+            ),
+            group=("owner", "cell"),
         )
-        nodes, _ = merkle_levels(lv.select("group_key", "pos", "node_hash"))
-        owner_of = lv.select("group_key", "owner").distinct()
-        return _clustered(
-            nodes.join(owner_of, "group_key"), "group_key", "level", "pos"
-        )
+        return _stored(spark, sf_dir, nodes, "cell", "level", "pos")
 
     incell = artifacts.ensure(f"rr_{family}_incell", fp, build_incell, fine)
 
@@ -241,25 +311,19 @@ def range_commitment_paths(
         # cell roots = the in-cell trees' top level; merkle_levels sizes
         # depth from group COUNT, so the top level index varies — take
         # each group's max-level node (promotion makes it the root)
-        wl = Window.partitionBy("group_key")
+        wl = Window.partitionBy("owner", "cell")
         roots = (
-            cached_parquet(spark, incell)
+            _hexed(cached_parquet(spark, incell))
             .withColumn("ml", F.max("level").over(wl))
             .filter(F.col("level") == F.col("ml"))
-            .select(
-                "owner",
-                F.expr("cast(split(group_key, '\\\\|')[1] AS long)")
-                .alias("pos"),  # pos := cell
-                "node_hash",
-            )
+            .select("owner", F.col("cell").alias("pos"), "node_hash")
         )
-        # sized to the max QUALIFYING cell (one-row fetch)
-        mb = cached_parquet(spark, leaves).agg(F.max("cell")).collect()[0][0]
+        # sized to the max QUALIFYING cell, from the leaf store's footers
+        mb = artifacts.footer_stats(leaves).span("cell")[1]
         nodes, _ = merkle_levels(
-            persist_tracked(roots), group="owner",
-            levels=tree_depth(int(mb or 0) + 1),
+            roots, group="owner", levels=tree_depth(int(mb or 0) + 1)
         )
-        return _clustered(nodes, "level", "pos")
+        return _stored(spark, sf_dir, nodes, "level", "pos")
 
     cells = artifacts.ensure(f"rr_{family}_celltree", fp, build_celltree, fine)
     # served metadata from parquet footers, read after the ensures — a
@@ -318,7 +382,7 @@ def _element_sequence(
     own = ("owner", "=", owner)
     elems: "list[tuple[int, str, dict]]" = []
     if edges and family == "erc20":
-        rows = artifacts.read_rows(
+        rows = _read_rows(
             leaves, _edge_filter(edges, own), ["event_id", "node_hash"]
         )
         for r in sorted(rows, key=lambda r: r["event_id"]):
@@ -344,7 +408,7 @@ def _element_sequence(
     if cover:
         tile_rows = {
             (r["level"], r["pos"]): r["node_hash"]
-            for r in artifacts.read_rows(
+            for r in _read_rows(
                 cells, _cover_filter(cover, own, col="pos"),
                 ["level", "pos", "node_hash"],
             )
@@ -440,7 +504,7 @@ def _q2_revealed(
     else:
         cov_cells = [(c << k, ((c + 1) << k) - 1) for k, c in cover]
         rows = (
-            artifacts.read_rows(
+            _read_rows(
                 leaves,
                 [
                     [("owner", "=", owner), ("cell", ">=", lo),
@@ -525,7 +589,7 @@ def _range_response(
         # read bounded by the owner's rows in the range (no structural
         # cap — the same rows the Spark limit(L) scan read)
         rev_rows = sorted(
-            artifacts.read_rows(
+            _read_rows(
                 leaves,
                 [[own, ("event_id", ">=", b_min), ("event_id", "<", b_max)]],
                 ["cell", "pos", "node_hash", *payload_cols],
@@ -541,7 +605,7 @@ def _range_response(
     # ---- opening paths, assembled DRIVER-SIDE: a response is ≤ L
     # revealed rows by construction, so every path is built in Python
     # from two bounded node reads — the in-cell trees of the ≤ L
-    # touched cells (group_key IN-list) and the ≤ L·depth cell-tree
+    # touched cells (a cell IN-list) and the ≤ L·depth cell-tree
     # siblings ((level, pos) IN-lists)
     if family == "q2":
         def _is_cov(r):
@@ -570,7 +634,7 @@ def _range_response(
                 return k, c, i
         return None
 
-    gks = sorted({f"{owner}|{r['cell']}" for r in cov_rows})
+    touched = sorted({int(r["cell"]) for r in cov_rows})
     need: "set[tuple[int, int]]" = set()
     for r in cov_rows:
         t = _tile_for(int(r["cell"]))
@@ -578,18 +642,18 @@ def _range_response(
             for j in range(t[0]):
                 anc = int(r["cell"]) >> j
                 need.add((j, anc + 1 if anc % 2 == 0 else anc - 1))
-    in_nodes: "dict[str, dict]" = {}
-    if gks:
-        for n in artifacts.read_rows(
-            incell, [[own, ("group_key", "in", gks)]],
-            ["group_key", "level", "pos", "node_hash"],
+    in_nodes: "dict[int, dict]" = {}
+    if touched:
+        for n in _read_rows(
+            incell, [[own, ("cell", "in", touched)]],
+            ["cell", "level", "pos", "node_hash"],
         ):
-            in_nodes.setdefault(n["group_key"], {})[
+            in_nodes.setdefault(n["cell"], {})[
                 (n["level"], n["pos"])
             ] = n["node_hash"]
     cell_sibs: "dict[tuple[int, int], str]" = {}
     if need:
-        for n in artifacts.read_rows(
+        for n in _read_rows(
             cells, _cover_filter(sorted(need), own, col="pos"),
             ["level", "pos", "node_hash"],
         ):
@@ -599,7 +663,7 @@ def _range_response(
     for r in cov_rows:
         cell, pos = int(r["cell"]), int(r["pos"])
         steps: "list[str]" = []
-        nd = in_nodes.get(f"{owner}|{cell}", {})
+        nd = in_nodes.get(cell, {})
         for j in range(int(incell_depth)):
             anc = pos >> j
             sib = anc + 1 if anc % 2 == 0 else anc - 1

@@ -220,21 +220,29 @@ def _probe_range(
     )
 
 
-def _max_event_id(spark: SparkSession, sf_dir: str) -> int:
-    """The events table's max event_id (0 when it has none) from its
-    parquet FOOTERS. Falls back to a one-row Spark fold, logged at
-    WARNING, when the footers cannot answer (a non-local path, or a row
-    group without statistics)."""
+def _events_span(spark: SparkSession, sf_dir: str, column: str) -> tuple:
+    """(MIN, MAX) of an events column from its parquet FOOTERS. Falls
+    back to a one-row Spark fold, logged at WARNING, when the footers
+    cannot answer (a non-local path, or a row group without
+    statistics)."""
     path = f"{sf_dir}/events.parquet"
     try:
-        mb = artifacts.footer_stats(path).span("event_id")[1]
+        return artifacts.footer_stats(path).span(column)
     except Exception as ex:  # noqa: BLE001 — same value from one fold
         logging.getLogger(__name__).warning(
-            "range_tree: no footer max(event_id) for %s (%s); one-row fold",
-            path, ex,
+            "range_tree: no footer span(%s) for %s (%s); one-row fold",
+            column, path, ex,
         )
-        mb = load_events(spark, sf_dir).agg(F.max("event_id")).collect()[0][0]
-    return int(mb or 0)
+        return tuple(
+            load_events(spark, sf_dir)
+            .agg(F.min(column), F.max(column))
+            .collect()[0]
+        )
+
+
+def _max_event_id(spark: SparkSession, sf_dir: str) -> int:
+    """The events table's max event_id (0 when it has none)."""
+    return int(_events_span(spark, sf_dir, "event_id")[1] or 0)
 
 
 def _served_max_block(spark: SparkSession, sf_dir: str) -> int:

@@ -329,23 +329,19 @@ def _cell_roots(view: DataFrame, leaves: str, leaf_hash, n_col: str) -> DataFram
 
     lv = persist_tracked(
         view.select("owner", "cell", F.posexplode(leaves).alias("pos", "lf"))
-        .select(
-            F.concat_ws("|", "owner", "cell").alias("group_key"),
-            "owner", "cell", "pos",
-            leaf_hash.alias("node_hash"),
-        )
+        .select("owner", "cell", "pos", leaf_hash.alias("node_hash"))
     )
-    nodes, _ = merkle_levels(lv.select("group_key", "pos", "node_hash"))
-    wl = Window.partitionBy("group_key")
+    nodes, _ = merkle_levels(lv, group=("owner", "cell"))
+    wl = Window.partitionBy("owner", "cell")
     roots = (
         nodes.withColumn("ml", F.max("level").over(wl))
         .filter(F.col("level") == F.col("ml"))
-        .select("group_key", F.col("node_hash").alias("root"))
+        .select("owner", "cell", F.col("node_hash").alias("root"))
     )
-    meta = lv.groupBy("group_key", "owner", "cell").agg(
-        F.count(F.lit(1)).alias(n_col)
+    meta = lv.groupBy("owner", "cell").agg(F.count(F.lit(1)).alias(n_col))
+    return meta.join(roots, ["owner", "cell"]).select(
+        "owner", "cell", n_col, "root"
     )
-    return meta.join(roots, "group_key").select("owner", "cell", n_col, "root")
 
 
 def _ivf_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:

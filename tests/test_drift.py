@@ -27,6 +27,40 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _exchange_partitionings(df) -> "list[str]":
+    """The output partitioning of every shuffle exchange in the executed
+    plan, read off the plan TREE — children, inner children (a cached
+    relation's plan, subqueries) and AQE's current and initial plans:
+    every node the rendered plan prints — not matched as text in its
+    rendering."""
+    found: "list[str]" = []
+
+    def walk(node) -> None:
+        name = node.getClass().getSimpleName()
+        if name == "ShuffleExchangeExec":
+            found.append(
+                node.outputPartitioning().getClass().getSimpleName().rstrip("$")
+            )
+        kids = [
+            seq.apply(i)
+            for seq in (node.children(), node.innerChildren())
+            for i in range(seq.size())
+        ]
+        if name == "AdaptiveSparkPlanExec":  # a leaf that prints its plans
+            kids += [node.executedPlan(), node.initialPlan()]
+        for k in kids:
+            walk(k)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return found
+
+
+def _assert_no_single_partition(df) -> None:
+    parts = _exchange_partitionings(df)
+    assert parts, "no shuffle exchange found: the plan walk saw nothing"
+    assert "SinglePartition" not in parts, parts
+
+
 # --- B59 PSI -----------------------------------------------------------
 
 
@@ -66,9 +100,10 @@ def test_psi_plan_two_scans_no_single_partition(spark):
     binning; the split day is footer metadata), no SinglePartition
     exchange, and the only window runs PARTITIONED on the type key
     over the bounded (type, bin) aggregate — never the raw rows."""
-    plan = _plan(data_drift_psi(spark, SF_SMOKE))
+    df = data_drift_psi(spark, SF_SMOKE)
+    plan = _plan(df)
     assert plan.count("Scan parquet") == 2, plan.count("Scan parquet")
-    assert "Exchange SinglePartition" not in plan
+    _assert_no_single_partition(df)
     import re
 
     # every Window node must carry the type key as its partition spec —
@@ -93,10 +128,11 @@ def test_psi_quantile_plan_one_scan(spark):
     every `Scan parquet` occurrence sits inside an InMemoryRelation
     (count equality — an independent second scan would break it), and
     both consumers (ref sketch, bin map) read the cache."""
-    plan = _plan(data_drift_psi(spark, SF_SMOKE, edges="quantile"))
+    df = data_drift_psi(spark, SF_SMOKE, edges="quantile")
+    plan = _plan(df)
     assert plan.count("Scan parquet") == plan.count("InMemoryRelation"), plan
     assert plan.count("InMemoryTableScan") == 2, plan
-    assert "Exchange SinglePartition" not in plan
+    _assert_no_single_partition(df)
 
 
 # --- C55 epoch shards --------------------------------------------------
@@ -167,8 +203,9 @@ def test_epoch_shards_plan_two_level_prefix_sum(spark):
     key range is aggregated as a 60-bit numeric prefix."""
     import re
 
-    plan = _plan(curation_epoch_shards(spark, SF_SMOKE))
-    assert "Exchange SinglePartition" not in plan
+    df = curation_epoch_shards(spark, SF_SMOKE)
+    plan = _plan(df)
+    _assert_no_single_partition(df)
     assert not re.search(r"SortAggregate\(key=\[[^\]]", plan)
 
 

@@ -257,3 +257,153 @@ def test_cold_store_first_call_equals_second(spark, tmp_path, monkeypatch, famil
     cold = sorted(tuple(r) for r in fn(spark, SF_SMOKE, **kw).collect())
     warm = sorted(tuple(r) for r in fn(spark, SF_SMOKE, **kw).collect())
     assert cold and cold == warm
+
+
+def _store_rows(path: str) -> "list[dict]":
+    """Every row of a commitment store, each digest turned back into the
+    lowercase hex the hash definition concatenates."""
+    from euclid_spark import artifacts
+
+    rows = artifacts.read_rows(path)
+    for r in rows:
+        for c in ("node_hash", "entry_reward_hex"):
+            if c in r:
+                assert isinstance(r[c], bytes) and len(r[c]) == 32, (path, c)
+                r[c] = r[c].hex()
+    return rows
+
+
+def _sha_hex(s: str) -> str:
+    return hashlib.sha256(s.encode()).hexdigest()
+
+
+def test_stores_hold_binary_digests_and_answers_match_a_hex_recompute(spark):
+    """The six commitment stores hold every digest (node_hash, and the
+    ERC-20 entry_reward_hex payload) as 32 raw bytes, the in-cell trees
+    are keyed by the (owner, cell) longs, and the driver answers of both
+    response faces equal a recompute over the stores' hexed rows: leaf
+    hashes from payloads, each stored tree level from the one below,
+    and each response root from its cover tiles and edge leaves."""
+    import pyarrow as pa
+
+    from euclid_spark import artifacts
+    from euclid_spark.operators.range_response import range_commitment_paths
+    from euclid_spark.operators.range_tree import TILE_SIZE, tile_cover
+
+    def parent(lvl_rows):
+        """The next level of a promotion-paired tree level."""
+        up: "dict[int, list]" = {}
+        for p, h in sorted(lvl_rows.items()):
+            up.setdefault(p >> 1, []).append(h)
+        return {
+            p: _sha_hex(hs[0] + hs[1]) if len(hs) == 2 else hs[0]
+            for p, hs in up.items()
+        }
+
+    for family in ("q2", "erc20"):
+        leaves, incell, cells, depth, _ = range_commitment_paths(
+            spark, SF_SMOKE, family
+        )
+        for path in (leaves, incell, cells):
+            schema = artifacts.footer_stats(path).schema
+            assert schema.field("node_hash").type == pa.binary(), path
+            assert "group_key" not in schema.names, path
+        assert {"owner", "cell"} <= set(
+            artifacts.footer_stats(incell).schema.names
+        )
+        lv, ic, ct = (_store_rows(p) for p in (leaves, incell, cells))
+        for r in lv:  # leaf = sha256(payload) over the hexed store
+            payload = (
+                f"{r['event_id']}:{r['entry_reward_hex']}"
+                if family == "erc20"
+                else str(r["token_id"])
+            )
+            assert _sha_hex(payload) == r["node_hash"], (family, r)
+        # every stored in-cell level refolds from the level below
+        trees: "dict[tuple, dict]" = {}
+        for r in ic:
+            trees.setdefault((r["owner"], r["cell"]), {}).setdefault(
+                r["level"], {}
+            )[r["pos"]] = r["node_hash"]
+        assert trees and all(
+            t[k + 1] == parent(t[k])
+            for t in trees.values()
+            for k in range(len(t) - 1)
+        )
+        roots = {g: t[max(t)][0] for g, t in trees.items()}
+        tree = {
+            (r["owner"], r["level"], r["pos"]): r["node_hash"] for r in ct
+        }
+        for (o, c), h in roots.items():  # cell-tree level 0 = cell roots
+            assert tree[(o, 0, c)] == h
+
+        # the driver answers: elements and root from the hexed stores
+        fn = q2_range_response if family == "q2" else erc20_range_response
+        checked = 0
+        for owner, b_min, b_max in ((7, 3 * TILE_SIZE, 7 * TILE_SIZE),
+                                    (3, 0, 4 * TILE_SIZE), (7, 45, 905)):
+            cover, edges = tile_cover(b_min, b_max, depth)
+            if family == "q2" and edges:
+                continue  # q2 edge elements come from the entry store
+            rows = fn(spark, SF_SMOKE, owner=owner, b_min=b_min, b_max=b_max
+                      ).collect()
+            assert rows, (family, owner, b_min, b_max)
+            checked += 1
+            elems = sorted(
+                [(c << k) * TILE_SIZE, tree[(owner, k, c)]]
+                for k, c in cover if (owner, k, c) in tree
+            ) + [
+                [r["event_id"], r["node_hash"]] for r in lv
+                if r["owner"] == owner
+                and any(lo <= r["event_id"] < hi for lo, hi in edges)
+            ]
+            hashes = [h for _, h in sorted(elems)]
+            hdr = f"hdr:{b_min}:{b_max}:{owner}" + (
+                f":{rows[0]['rewards_rate']}" if family == "erc20" else ""
+            )
+            acc = _sha_hex(hdr)
+            for h in hashes:
+                acc = _sha_hex(acc + h)
+            assert rows[0]["elements"] == "/".join(hashes)
+            assert {r["response_root"] for r in rows} == {acc}
+            if family == "erc20":  # revealed payloads are the stored ones
+                stored = {r["event_id"]: r for r in lv if r["owner"] == owner}
+                for r in rows:
+                    s = stored[r["event_id"]]
+                    assert r["entry_reward_hex"] == s["entry_reward_hex"]
+                    assert r["leaf_hash"] == s["node_hash"]
+            _check_rows(rows, family)
+        assert checked >= 2, family
+
+
+def test_commitment_stores_are_byte_identical_across_builds(
+    spark, tmp_path, monkeypatch
+):
+    """Building the six commitment stores twice, each into an empty
+    artifact root, writes the same part files byte for byte: the owner
+    clustering is a function of the data, not of a sampled bound."""
+    import os
+
+    from euclid_spark.cache import release_all
+    from euclid_spark.operators.range_response import range_commitment_paths
+
+    def build(root) -> "dict[tuple, bytes]":
+        monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(root))
+        parts: "dict[tuple, bytes]" = {}
+        for family in ("q2", "erc20"):
+            for path in range_commitment_paths(spark, SF_SMOKE, family)[:3]:
+                store = os.path.basename(path).split("_")[:3]
+                for f in os.listdir(path):
+                    if f.startswith("part-"):
+                        # part-<task>-<write uuid>-c000...: key on the task
+                        with open(os.path.join(path, f), "rb") as fh:
+                            parts[(*store, f.split("-")[1])] = fh.read()
+            release_all()
+        return parts
+
+    first, second = build(tmp_path / "a"), build(tmp_path / "b")
+    assert len({k[:3] for k in first}) == 6
+    assert first.keys() == second.keys()
+    assert all(first[k] == second[k] for k in first), sorted(
+        k for k in first if first[k] != second[k]
+    )
