@@ -138,6 +138,20 @@ def merkle_levels(
     return nodes, levels
 
 
+def merkle_roots(
+    leaves: DataFrame, group: "str | tuple[str, ...]"
+) -> DataFrame:
+    """(group, root): each group's Merkle root over `leaves`
+    (group, pos, node_hash). merkle_levels carries every group up to
+    the top level by promotion, so the root is each group's one node
+    there."""
+    keys = [group] if isinstance(group, str) else list(group)
+    nodes, depth = merkle_levels(leaves, group)
+    return nodes.filter(F.col("level") == depth).select(
+        *keys, F.col("node_hash").alias("root")
+    )
+
+
 def _served_depth(name: str, fp: str) -> "int | None":
     """Tree depth (max level) of a SERVED node artifact from its parquet
     FOOTER statistics — O(row groups) metadata reads, no Spark job (the

@@ -13,14 +13,19 @@ result rows WITH opening paths, in O(log range + |result|) reads.
 
 Construction — the reference's own aggregation shape, hash-only:
 
-- **Per-tile subtree roots** (served artifacts, one set per contract
-  and, for ERC-20, per rewards rate):
+- **Per-tile subtree roots** (two served artifacts, one pair per
+  contract and, for ERC-20, per rewards rate):
     * level-0 ("in-cell") Merkle trees: each TILE_SIZE-block cell's
       qualifying rows — ERC-20: the owner's entries in block order,
       leaf = sha256(event_id ':' entry_reward_hex) (A23's encoding);
       Q2: the owner's DISTINCT mapping keys in key order,
-      leaf = sha256(token_id) (A20's encoding);
-    * a "cell tree" above them: node (level k, pos c) commits cells
+      leaf = sha256(token_id) (A20's encoding). Only the leaf
+      PAYLOADS are stored: a cell holds ≤ TILE_SIZE leaves, so its
+      leaf hashes and in-cell nodes are refolded wherever they are
+      needed — in memory by the cell-tree build, and on the driver
+      (`_incell_tree`) for the ≤ L cells a response opens into;
+    * a "cell tree" above them, the one stored tree: level 0 holds
+      the cell roots, and node (level k, pos c) commits cells
       [c·2^k, (c+1)·2^k) — merkle_levels' pairing with
       promotion-on-absent-sibling, so sparsely occupied cell space
       degrades to identity promotions, never self-concats.
@@ -47,17 +52,18 @@ Construction — the reference's own aggregation shape, hash-only:
   Spark); a query is answered on the driver. `artifacts.read_rows`
   fetches, from the owner-clustered stores, the owner's O(log range)
   cover-tile roots, its rows in the two < TILE_SIZE edge slices, the
-  revealed rows and the ≤ L·depth opening-path nodes; Python folds
-  them and returns one local frame, so no Spark job runs until the
-  caller acts on it. Nothing reads the range interior (asserted by the
-  --events scale probe) except the two reads bounded only by the
-  owner's rows in the range: the ERC-20 revealed rows and the q2
-  L > Q2_L fallback. The stores hold every digest as its 32 raw bytes
-  (half the bytes of its hex spelling, so each read decodes half as
-  much) and the in-cell trees keyed by the (owner, cell) longs; hex
-  appears only in responses — the builds and the driver reads turn
-  the bytes back into the lowercase hex the hashes are defined over,
-  so every hash value and response is unchanged.
+  revealed rows, the leaves of the ≤ L touched cells (≤ TILE_SIZE
+  rows each) and the ≤ L·depth cell-tree siblings; Python hashes the
+  leaves, refolds the touched cells and returns one local frame, so
+  no Spark job runs until the caller acts on it. Nothing reads the
+  range interior (asserted by the --events scale probe) except the
+  two reads bounded only by the owner's rows in the range: the ERC-20
+  revealed rows and the q2 L > Q2_L fallback. The stores hold no
+  value a bounded read can recompute (no leaf hash, no in-cell node),
+  and every stored digest as its 32 raw bytes (half the bytes of its
+  hex spelling); hex appears only in responses — the builds and the
+  driver reads turn the bytes back into the lowercase hex the hashes
+  are defined over, so every hash value and response is unchanged.
 
 Verification (A32/A33 faces + the standalone tool): leaf re-derives
 from the payload; path refolds leaf → element; the element sits at its
@@ -74,7 +80,6 @@ from rows.
 
 from __future__ import annotations
 
-import functools
 import hashlib
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -156,11 +161,7 @@ def _q2_cell_leaf_rows(
     )
     w = Window.partitionBy("owner", "cell").orderBy("token_id")
     return keys.select(
-        "owner",
-        "cell",
-        "token_id",
-        (F.row_number().over(w) - 1).alias("pos"),
-        q2_leaf_hash(F.col("token_id")).alias("node_hash"),
+        "owner", "cell", "token_id", (F.row_number().over(w) - 1).alias("pos")
     )
 
 
@@ -180,10 +181,14 @@ def _erc20_cell_leaf_rows(
         "event_id",
         erc20_entry_hex().alias("entry_reward_hex"),
         (F.row_number().over(w) - 1).alias("pos"),
-    ).withColumn(
-        "node_hash",
-        erc20_leaf_hash(F.col("event_id"), F.col("entry_reward_hex")),
     )
+
+
+def _leaf_hash(family: str) -> Column:
+    """The family's leaf hash over its payload columns."""
+    if family == "erc20":
+        return erc20_leaf_hash(F.col("event_id"), F.col("entry_reward_hex"))
+    return q2_leaf_hash(F.col("token_id"))
 
 
 # The commitment stores hold every sha256 digest as its 32 raw bytes;
@@ -191,47 +196,20 @@ def _erc20_cell_leaf_rows(
 # so `_stored` packs at write and `_hexed` / `_read_rows` unpack every
 # read — the only three places the stored encoding appears.
 _DIGESTS = ("node_hash", "entry_reward_hex")
-# owner-contiguous files per store: bucket i of the owner span is
-# written by task i (see _bucket_keys)
-_STORE_PARTS = 8
-
-
-@functools.lru_cache(maxsize=None)
-def _bucket_keys(spark: SparkSession, n: int) -> "tuple[int, ...]":
-    """For each partition i < n, a long key that Spark's hash
-    partitioner (`pmod(hash(key), n)`, the Murmur3 of F.hash) sends to
-    partition i — so `repartition(n, key_of_bucket)` writes bucket i in
-    task i, with no sampled bounds. One tiny job per session."""
-    first: "dict[int, int]" = {}
-    for r in spark.range(16 * n).select(
-        "id", F.expr(f"pmod(hash(id), {n})").alias("p")
-    ).collect():
-        first.setdefault(r["p"], r["id"])
-    return tuple(first[i] for i in range(n))
 
 
 def _stored(
     spark: SparkSession, sf_dir: str, df: DataFrame, *cols: str
 ) -> DataFrame:
-    """A commitment store's write form: digests as BINARY(32), rows
-    clustered by owner into _STORE_PARTS files of equal-width owner
-    buckets over the events' user_id span (footer statistics), each
-    sorted by (owner, *cols). A function of the data alone: two builds
-    write the same bytes."""
-    lo, hi = (int(v or 0) for v in _events_span(spark, sf_dir, "user_id"))
-    width = (hi - lo) // _STORE_PARTS + 1
-    keys = F.array(
-        *(F.lit(k).cast("long") for k in _bucket_keys(spark, _STORE_PARTS))
-    )
-    bucket = F.expr(f"(owner - {lo}) div {width}")  # 0.._STORE_PARTS-1
-    return (
+    """A commitment store's write form: digests as BINARY(32), rows in
+    equal-width owner buckets over the events' user_id span, each file
+    sorted by (owner, *cols) (`artifacts.clustered`)."""
+    return artifacts.clustered(
+        spark,
         df.select(
             *(F.unhex(c).alias(c) if c in _DIGESTS else c for c in df.columns)
-        )
-        .repartition(
-            _STORE_PARTS, F.element_at(keys, (bucket + 1).cast("int"))
-        )
-        .sortWithinPartitions("owner", *cols)
+        ),
+        "owner", _events_span(spark, sf_dir, "user_id"), *cols,
     )
 
 
@@ -264,24 +242,25 @@ def range_commitment_paths(
     family: str,
     rewards_rate: "int | None" = None,
     contract: "str | None" = None,
-) -> "tuple[str, str, str, int, int]":
-    """(leaves, incell_nodes, cell_nodes, cell_depth, incell_depth) —
-    the three commitment artifacts' paths, each built on a miss
-    (owner-clustered with fine row groups, so a single-owner response
-    prunes to that owner's row groups), and the two tree depths from
-    their footers. Every `node_hash` and `entry_reward_hex` is stored
-    as BINARY(32), the digest's raw bytes:
+) -> "tuple[str, str, int]":
+    """(leaves, cell_nodes, cell_depth) — the two commitment artifacts'
+    paths, each built on a miss (owner-clustered with fine row groups,
+    so a single-owner response prunes to that owner's row groups), and
+    the cell tree's depth from its footers. `entry_reward_hex` and
+    `node_hash` are stored as BINARY(32), the digest's raw bytes:
 
-    leaves:       (owner, cell, <payload cols>, pos, node_hash)
-    incell_nodes: (owner, cell, level, pos, node_hash) — one tree per
-                  (owner, cell)
-    cell_nodes:   (owner, level, pos, node_hash) — pos = cell >> level
+    leaves:     (owner, cell, <payload cols>, pos) — the in-cell trees'
+                leaves, pos in key (q2) or block (ERC-20) order per
+                (owner, cell); every leaf hash and in-cell node is a
+                function of them, refolded where it is needed
+    cell_nodes: (owner, level, pos, node_hash) — pos = cell >> level;
+                level 0 = the cell roots
     """
-    from euclid_spark.operators.merkle import merkle_levels
+    from euclid_spark.operators.merkle import merkle_levels, merkle_roots
 
     # fine row groups: a driver read of one owner's few rows decodes a
     # 4 MB row group, not a 128 MB one (stores written before rebuild once)
-    fp = _fp(sf_dir, family, rewards_rate, contract, layout="bin_v1")
+    fp = _fp(sf_dir, family, rewards_rate, contract, layout="bin_v2")
     fine = artifacts.FINE_ROW_GROUPS
 
     def build_leaves() -> DataFrame:
@@ -294,29 +273,14 @@ def range_commitment_paths(
 
     leaves = artifacts.ensure(f"rr_{family}_leaves", fp, build_leaves, fine)
 
-    def build_incell() -> DataFrame:
-        nodes, _ = merkle_levels(
-            _hexed(
-                cached_parquet(spark, leaves).select(
-                    "owner", "cell", "pos", "node_hash"
-                )
-            ),
-            group=("owner", "cell"),
-        )
-        return _stored(spark, sf_dir, nodes, "cell", "level", "pos")
-
-    incell = artifacts.ensure(f"rr_{family}_incell", fp, build_incell, fine)
-
     def build_celltree() -> DataFrame:
-        # cell roots = the in-cell trees' top level; merkle_levels sizes
-        # depth from group COUNT, so the top level index varies — take
-        # each group's max-level node (promotion makes it the root)
-        wl = Window.partitionBy("owner", "cell")
-        roots = (
-            _hexed(cached_parquet(spark, incell))
-            .withColumn("ml", F.max("level").over(wl))
-            .filter(F.col("level") == F.col("ml"))
-            .select("owner", F.col("cell").alias("pos"), "node_hash")
+        # the cell roots, folded in memory: leaf hashes from the stored
+        # payloads, then each (owner, cell)'s in-cell tree to its root
+        lv = _hexed(cached_parquet(spark, leaves)).select(
+            "owner", "cell", "pos", _leaf_hash(family).alias("node_hash")
+        )
+        roots = merkle_roots(lv, ("owner", "cell")).select(
+            "owner", F.col("cell").alias("pos"), F.col("root").alias("node_hash")
         )
         # sized to the max QUALIFYING cell, from the leaf store's footers
         mb = artifacts.footer_stats(leaves).span("cell")[1]
@@ -330,14 +294,7 @@ def range_commitment_paths(
     # frame agg(max) would scan every node row, which grows with the
     # corpus
     md = artifacts.footer_stats(cells).span("level")[1]
-    icd = artifacts.footer_stats(incell).span("level")[1]
-    return (
-        leaves,
-        incell,
-        cells,
-        0 if md is None else int(md),
-        0 if icd is None else int(icd),
-    )
+    return leaves, cells, 0 if md is None else int(md)
 
 
 # --------------------------------------------------------------------------
@@ -359,8 +316,51 @@ def _fold(seed_hex: bytes, elements: "list[str]") -> str:
     return acc.decode()
 
 
-def _sha(v: int) -> str:
+def _sha(v: "int | str") -> str:
     return hashlib.sha256(str(v).encode()).hexdigest()
+
+
+def _leaf_hex(family: str, r: dict) -> str:
+    """A leaf-store row's leaf hash from its payload — `_leaf_hash` on
+    the driver."""
+    if family == "erc20":
+        return _sha(f"{r['event_id']}:{r['entry_reward_hex']}")
+    return _sha(r["token_id"])
+
+
+def _incell_tree(
+    hashes: "list[str]",
+) -> "tuple[dict[tuple[int, int], str], int]":
+    """(nodes, depth): one cell's in-cell tree as {(level, pos): hash}
+    and its root's level, refolded from its leaf hashes in pos order
+    with merkle_levels' rule: pair (2p, 2p + 1), promote an unpaired
+    tail node, stop at the root."""
+    nodes = {(0, p): h for p, h in enumerate(hashes)}
+    lvl, k = hashes, 0
+    while len(lvl) > 1:
+        lvl = [
+            _sha(lvl[i] + lvl[i + 1]) if i + 1 < len(lvl) else lvl[i]
+            for i in range(0, len(lvl), 2)
+        ]
+        k += 1
+        nodes.update(((k, p), h) for p, h in enumerate(lvl))
+    return nodes, k
+
+
+def _path_steps(
+    nodes: "dict[tuple[int, int], str]", depth: int, pos: int, off: int = 0
+) -> "list[str]":
+    """The A18 opening steps of node `pos` of level 0 through levels
+    0..depth-1 of `nodes`: the sibling of its ancestor at each level,
+    tagged `<off + level><side>`, and no step at a promotion (absent
+    sibling)."""
+    steps = []
+    for j in range(depth):
+        anc = pos >> j
+        h = nodes.get((j, anc ^ 1))
+        if h is not None:
+            steps.append(f"{off + j}{'R' if anc % 2 == 0 else 'L'}:{h}")
+    return steps
 
 
 def _element_sequence(
@@ -383,12 +383,11 @@ def _element_sequence(
     elems: "list[tuple[int, str, dict]]" = []
     if edges and family == "erc20":
         rows = _read_rows(
-            leaves, _edge_filter(edges, own), ["event_id", "node_hash"]
+            leaves, _edge_filter(edges, own), ["event_id", "entry_reward_hex"]
         )
         for r in sorted(rows, key=lambda r: r["event_id"]):
-            elems.append(
-                (r["event_id"], r["node_hash"], {"edge_id": r["event_id"]})
-            )
+            eid = r["event_id"]
+            elems.append((eid, _leaf_hex(family, r), {"edge_id": eid}))
     elif edges:
         # Q2 edges commit the DISTINCT keys seen in the partial cells —
         # one element per key, hash = sha256(token_id) (the same leaf
@@ -444,7 +443,7 @@ def _response_root(
         if family == "erc20"
         else None
     )
-    leaves, _, cells, depth, _ = range_commitment_paths(
+    leaves, cells, depth = range_commitment_paths(
         spark, sf_dir, family, rewards_rate, contract
     )
     cover, edges = tile_cover(int(b_min), int(b_max), depth)
@@ -474,8 +473,8 @@ def _q2_revealed(
 ) -> "list[dict]":
     """The q2 response's revealed rows: the first-L distinct keys over
     the range in key order, each opening at its smallest covering
-    element — (cell, pos, node_hash) of its first covered occurrence,
-    or cell = -1 when an edge occurrence opens it.
+    element — (cell, pos) of its first covered occurrence, or
+    cell = -1 when an edge occurrence opens it — with its leaf hash.
 
     L ≤ Q2_L reads the keys WITH their first covered occurrence from
     the A26 key-tile fold (O(log range) tile rows, no leaf-store
@@ -498,9 +497,7 @@ def _q2_revealed(
                 # impossible by construction (every edge-slice key
                 # becomes an edge element)
                 raise KeyError(k["t"])
-            cand[k["t"]] = {
-                "cell": k["cell"], "pos": k["p"], "node_hash": _sha(k["t"]),
-            }
+            cand[k["t"]] = {"cell": k["cell"], "pos": k["p"]}
     else:
         cov_cells = [(c << k, ((c + 1) << k) - 1) for k, c in cover]
         rows = (
@@ -511,7 +508,7 @@ def _q2_revealed(
                      ("cell", "<=", hi)]
                     for lo, hi in cov_cells
                 ],
-                ["token_id", "cell", "pos", "node_hash"],
+                ["token_id", "cell", "pos"],
             )
             if cov_cells
             else []
@@ -527,7 +524,7 @@ def _q2_revealed(
         {"token_id": t, "cell": -1, "pos": -1, "node_hash": ""}
         if t in edge_toks  # an edge occurrence opens first
         else {"token_id": t, "cell": cand[t]["cell"],
-              "pos": cand[t]["pos"], "node_hash": cand[t]["node_hash"]}
+              "pos": cand[t]["pos"], "node_hash": _sha(t)}
         for t in keys
     ]
 
@@ -566,7 +563,7 @@ def _range_response(
         + (", rewards_rate long" if family == "erc20" else "")
     )
 
-    leaves, incell, cells, depth, incell_depth = range_commitment_paths(
+    leaves, cells, depth = range_commitment_paths(
         spark, sf_dir, family, rewards_rate, contract
     )
     b_min, b_max = _probe_range(spark, sf_dir, b_min, b_max)
@@ -592,10 +589,12 @@ def _range_response(
             _read_rows(
                 leaves,
                 [[own, ("event_id", ">=", b_min), ("event_id", "<", b_max)]],
-                ["cell", "pos", "node_hash", *payload_cols],
+                ["cell", "pos", *payload_cols],
             ),
             key=lambda r: r["event_id"],
         )[:L]
+        for r in rev_rows:
+            r["node_hash"] = _leaf_hex(family, r)
     else:
         rev_rows = _q2_revealed(
             spark, sf_dir, owner, b_min, b_max, L, contract, leaves, cover,
@@ -604,9 +603,10 @@ def _range_response(
 
     # ---- opening paths, assembled DRIVER-SIDE: a response is ≤ L
     # revealed rows by construction, so every path is built in Python
-    # from two bounded node reads — the in-cell trees of the ≤ L
-    # touched cells (a cell IN-list) and the ≤ L·depth cell-tree
-    # siblings ((level, pos) IN-lists)
+    # from two bounded reads — the leaves of the ≤ L touched cells (a
+    # cell IN-list, ≤ TILE_SIZE rows each), refolded into their in-cell
+    # trees, and the ≤ L·depth cell-tree siblings ((level, pos)
+    # IN-lists)
     if family == "q2":
         def _is_cov(r):
             return r["cell"] >= 0
@@ -642,15 +642,19 @@ def _range_response(
             for j in range(t[0]):
                 anc = int(r["cell"]) >> j
                 need.add((j, anc + 1 if anc % 2 == 0 else anc - 1))
-    in_nodes: "dict[int, dict]" = {}
+    cell_leaves: "dict[int, dict[int, str]]" = {}
     if touched:
         for n in _read_rows(
-            incell, [[own, ("cell", "in", touched)]],
-            ["cell", "level", "pos", "node_hash"],
+            leaves, [[own, ("cell", "in", touched)]],
+            ["cell", "pos", *payload_cols],
         ):
-            in_nodes.setdefault(n["cell"], {})[
-                (n["level"], n["pos"])
-            ] = n["node_hash"]
+            cell_leaves.setdefault(n["cell"], {})[n["pos"]] = _leaf_hex(
+                family, n
+            )
+    in_nodes = {
+        c: _incell_tree([lf[p] for p in sorted(lf)])
+        for c, lf in cell_leaves.items()
+    }
     cell_sibs: "dict[tuple[int, int], str]" = {}
     if need:
         for n in _read_rows(
@@ -662,26 +666,12 @@ def _range_response(
     out_rows: "list[tuple]" = []
     for r in cov_rows:
         cell, pos = int(r["cell"]), int(r["pos"])
-        steps: "list[str]" = []
-        nd = in_nodes.get(cell, {})
-        for j in range(int(incell_depth)):
-            anc = pos >> j
-            sib = anc + 1 if anc % 2 == 0 else anc - 1
-            h = nd.get((j, sib))
-            if h is not None:  # promotion level: absent sibling, no step
-                steps.append(f"{j}{'R' if anc % 2 == 0 else 'L'}:{h}")
+        steps = _path_steps(*in_nodes[cell], pos)
         t = _tile_for(cell)
         # an occupied leaf's cell always has an occupied cover tile
         assert t is not None, (family, owner, cell)
         k, _, eidx = t
-        for j in range(k):
-            anc = cell >> j
-            sib = anc + 1 if anc % 2 == 0 else anc - 1
-            h = cell_sibs.get((j, sib))
-            if h is not None:
-                steps.append(
-                    f"{CELL_LVL_OFF + j}{'R' if anc % 2 == 0 else 'L'}:{h}"
-                )
+        steps += _path_steps(cell_sibs, k, cell, CELL_LVL_OFF)
         out_rows.append(
             tuple(r[c] for c in payload_cols)
             + (r["node_hash"], "/".join(steps), eidx)
@@ -806,11 +796,7 @@ def _verify_range_response(
     from euclid_spark.operators.merkle import _refold_to_root
 
     resp = _serve_range_response(spark, sf_dir, family)
-    leaf = (
-        erc20_leaf_hash(F.col("event_id"), F.col("entry_reward_hex"))
-        if family == "erc20"
-        else q2_leaf_hash(F.col("token_id"))
-    )
+    leaf = _leaf_hash(family)
     id_col = "event_id" if family == "erc20" else "token_id"
     hdr_parts = [
         F.col("b_min").cast("string"),

@@ -301,17 +301,18 @@ class TileTree:
         )
         if store:
             def build() -> DataFrame:
-                return (
-                    self.rows(load_events(spark, sf_dir), contract, rate)
-                    .repartitionByRange(8, "event_id")
-                    .sortWithinPartitions("event_id")
+                return artifacts.clustered(
+                    spark,
+                    self.rows(load_events(spark, sf_dir), contract, rate),
+                    "event_id", _events_span(spark, sf_dir, "event_id"),
                 )
         elif self.keys:
+            # the keyed trees key on the owner, the events' user_id
             def build() -> DataFrame:
-                return (
-                    self.levels(spark, sf_dir, contract, rate)
-                    .repartitionByRange(8, *self.keys)
-                    .sortWithinPartitions(*self.keys, "level", "cell")
+                return artifacts.clustered(
+                    spark, self.levels(spark, sf_dir, contract, rate),
+                    "owner", _events_span(spark, sf_dir, "user_id"),
+                    "level", "cell",
                 )
         else:
             # one file, in the (level, cell) order the cover read filters on
@@ -629,7 +630,7 @@ def _q2_fold(tiles: list, ev: "list | None") -> "list[dict]":
 
 Q2_KEY_TREE = TileTree(
     name="q2_key_tiles",
-    fp=dict(op="q2_key_tree", tile=TILE_SIZE, L=Q2_L, layout="owner_v4"),
+    fp=dict(op="q2_key_tree", tile=TILE_SIZE, L=Q2_L, layout="owner_v5"),
     axes=("contract",),
     keys=("owner",),
     rows=lambda ev, contract, rate: _q2_entries(ev, contract),
@@ -640,7 +641,7 @@ Q2_KEY_TREE = TileTree(
     fold=_q2_fold,
     # block-clustered entries: the edge windows prune to row groups
     # instead of re-scanning and re-parsing the raw events table
-    store=("q2_entry_store", dict(op="q2_entry_store", layout="block_v1")),
+    store=("q2_entry_store", dict(op="q2_entry_store", layout="block_v2")),
     # a batch cannot know a key's rank in its whole leaf cell: the
     # stream keeps the earliest leaf cell and no position
     invariant=lambda df: df.withColumn(
@@ -722,7 +723,7 @@ def _erc20_fold(tiles: list, ev: "list | None") -> "tuple | None":
 
 ERC20_REWARD_TREE = TileTree(
     name="erc20_reward_tiles",
-    fp=dict(op="erc20_reward_tree", tile=TILE_SIZE, layout="owner_v3"),
+    fp=dict(op="erc20_reward_tree", tile=TILE_SIZE, layout="owner_v4"),
     axes=("rate", "contract"),
     keys=("owner",),
     rows=_erc20_rows,
@@ -735,7 +736,7 @@ ERC20_REWARD_TREE = TileTree(
     # leaf circuit runs once per corpus version, here
     store=(
         "erc20_all_entry_leaves",
-        dict(op="erc20_all_entry_leaves", tile=TILE_SIZE, layout="block_v2"),
+        dict(op="erc20_all_entry_leaves", tile=TILE_SIZE, layout="block_v3"),
     ),
 )
 

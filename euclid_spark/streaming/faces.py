@@ -322,22 +322,17 @@ def _jsonl_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
 
 def _cell_roots(view: DataFrame, leaves: str, leaf_hash, n_col: str) -> DataFrame:
     """The in-cell Merkle fold both cell-root faces read off their
-    maintained per-(owner, cell) leaf sets: leaves → merkle_levels →
-    top-level root, joined to the per-cell leaf count."""
+    maintained per-(owner, cell) leaf sets: leaves → merkle_roots (the
+    batch cell-tree build's own fold), joined to the per-cell leaf
+    count."""
     from euclid_spark.cache import persist_tracked
-    from euclid_spark.operators.merkle import merkle_levels
+    from euclid_spark.operators.merkle import merkle_roots
 
     lv = persist_tracked(
         view.select("owner", "cell", F.posexplode(leaves).alias("pos", "lf"))
         .select("owner", "cell", "pos", leaf_hash.alias("node_hash"))
     )
-    nodes, _ = merkle_levels(lv, group=("owner", "cell"))
-    wl = Window.partitionBy("owner", "cell")
-    roots = (
-        nodes.withColumn("ml", F.max("level").over(wl))
-        .filter(F.col("level") == F.col("ml"))
-        .select("owner", "cell", F.col("node_hash").alias("root"))
-    )
+    roots = merkle_roots(lv, ("owner", "cell"))
     meta = lv.groupBy("owner", "cell").agg(F.count(F.lit(1)).alias(n_col))
     return meta.join(roots, ["owner", "cell"]).select(
         "owner", "cell", n_col, "root"

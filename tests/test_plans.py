@@ -344,13 +344,16 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
     level) (the response's cell-tree reads, which also fetch the
     opening-path siblings of ≤ L revealed rows, ≤ L per level), every
     edge read returns only rows inside the two < TILE_SIZE edge
-    windows, and no Spark job runs before the returned frame is acted
-    on — nothing reads the range interior."""
+    windows, every other read of a response's leaf store is its
+    ("cell", "in", touched) read of ≤ TOP_L cells with ≤ TILE_SIZE rows
+    per (owner, cell), and no Spark job runs before the returned frame
+    is acted on — nothing reads the range interior."""
     from collections import Counter
 
     from euclid_spark import artifacts
     from euclid_spark.operators import range_response, range_tree
     from euclid_spark.operators.euclid import TOP_L
+    from euclid_spark.operators.range_tree import TILE_SIZE
     from tests.conftest import SF_ORACLE
 
     mb = artifacts.footer_stats(f"{SF_ORACLE}/events.parquet").span("event_id")[1]
@@ -390,8 +393,22 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
         df = call()
         assert _newest_job_id(spark) == before, f"{name} ran a Spark job"
         assert reads, f"{name} read nothing through artifacts.read_rows"
+        cell_reads = 0
         for path, flt, rows in reads:
             base = path.rstrip("/").rsplit("/", 1)[-1]
+            touched = [
+                v for conj in flt or [] for c, op, v in conj
+                if c == "cell" and op == "in"
+            ]
+            if base.startswith("rr_") and "_leaves_" in base and touched:
+                # the opened cells' leaves, refolded on the driver
+                cell_reads += 1
+                assert len(flt) == 1 and len(touched[0]) <= TOP_L, name
+                per_cell = Counter((r["owner"], r["cell"]) for r in rows)
+                assert all(o == owner for o, _ in per_cell), name
+                assert {c for _, c in per_cell} <= set(touched[0]), name
+                assert max(per_cell.values(), default=0) <= TILE_SIZE, name
+                continue
             if base.startswith(tile_trees) or "_celltree_" in base:
                 per_level = Counter((r.get("owner"), r["level"]) for r in rows)
                 cap = 2 if base.startswith(tile_trees) else max(2, TOP_L)
@@ -410,6 +427,10 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
                     any(lo <= r["event_id"] < hi for lo, hi in edges)
                     for r in rows
                 ), (name, base)
+            elif base.startswith("rr_") and "_leaves_" in base:
+                raise AssertionError(f"{name}: unbounded leaf read {flt}")
+        if name.endswith("_range_response"):
+            assert cell_reads == 1, name  # the revealed rows open cells
         assert df.count() > 0
         assert _newest_job_id(spark) > before  # the action is the first job
 

@@ -278,12 +278,14 @@ def _sha_hex(s: str) -> str:
 
 
 def test_stores_hold_binary_digests_and_answers_match_a_hex_recompute(spark):
-    """The six commitment stores hold every digest (node_hash, and the
-    ERC-20 entry_reward_hex payload) as 32 raw bytes, the in-cell trees
-    are keyed by the (owner, cell) longs, and the driver answers of both
-    response faces equal a recompute over the stores' hexed rows: leaf
-    hashes from payloads, each stored tree level from the one below,
-    and each response root from its cover tiles and edge leaves."""
+    """The four commitment stores hold every digest (the cell tree's
+    node_hash, and the ERC-20 entry_reward_hex payload) as 32 raw bytes
+    and no leaf hash, and the driver answers of both response faces
+    equal a recompute over the stores' hexed rows: leaf hashes from
+    payloads, each (owner, cell)'s in-cell tree level by level from
+    them, the cell tree's level 0 from those roots and each stored
+    cell-tree level from the one below, and each response root from
+    its cover tiles and edge leaves."""
     import pyarrow as pa
 
     from euclid_spark import artifacts
@@ -301,41 +303,52 @@ def test_stores_hold_binary_digests_and_answers_match_a_hex_recompute(spark):
         }
 
     for family in ("q2", "erc20"):
-        leaves, incell, cells, depth, _ = range_commitment_paths(
-            spark, SF_SMOKE, family
-        )
-        for path in (leaves, incell, cells):
-            schema = artifacts.footer_stats(path).schema
-            assert schema.field("node_hash").type == pa.binary(), path
-            assert "group_key" not in schema.names, path
-        assert {"owner", "cell"} <= set(
-            artifacts.footer_stats(incell).schema.names
-        )
-        lv, ic, ct = (_store_rows(p) for p in (leaves, incell, cells))
-        for r in lv:  # leaf = sha256(payload) over the hexed store
+        leaves, cells, depth = range_commitment_paths(spark, SF_SMOKE, family)
+        leaf_schema = artifacts.footer_stats(leaves).schema
+        assert "node_hash" not in leaf_schema.names, leaves
+        assert artifacts.footer_stats(cells).schema.field(
+            "node_hash"
+        ).type == pa.binary(), cells
+        if family == "erc20":
+            assert leaf_schema.field("entry_reward_hex").type == pa.binary()
+        for path in (leaves, cells):
+            assert "group_key" not in artifacts.footer_stats(path).schema.names
+        lv, ct = _store_rows(leaves), _store_rows(cells)
+        # leaf = sha256(payload) over the hexed store, then each
+        # (owner, cell)'s in-cell tree level by level to its root
+        trees: "dict[tuple, dict]" = {}
+        for r in lv:
             payload = (
                 f"{r['event_id']}:{r['entry_reward_hex']}"
                 if family == "erc20"
                 else str(r["token_id"])
             )
-            assert _sha_hex(payload) == r["node_hash"], (family, r)
-        # every stored in-cell level refolds from the level below
-        trees: "dict[tuple, dict]" = {}
-        for r in ic:
-            trees.setdefault((r["owner"], r["cell"]), {}).setdefault(
-                r["level"], {}
-            )[r["pos"]] = r["node_hash"]
-        assert trees and all(
-            t[k + 1] == parent(t[k])
-            for t in trees.values()
-            for k in range(len(t) - 1)
-        )
+            r["node_hash"] = _sha_hex(payload)
+            trees.setdefault((r["owner"], r["cell"]), {0: {}})[0][
+                r["pos"]
+            ] = r["node_hash"]
+        for t in trees.values():
+            assert sorted(t[0]) == list(range(len(t[0])))  # pos 0..n-1
+            while len(t[max(t)]) > 1:
+                t[max(t) + 1] = parent(t[max(t)])
+        assert trees
         roots = {g: t[max(t)][0] for g, t in trees.items()}
         tree = {
             (r["owner"], r["level"], r["pos"]): r["node_hash"] for r in ct
         }
-        for (o, c), h in roots.items():  # cell-tree level 0 = cell roots
-            assert tree[(o, 0, c)] == h
+        # cell-tree level 0 = the refolded cell roots, and nothing else
+        assert {
+            (o, p): h for (o, k, p), h in tree.items() if k == 0
+        } == roots
+        # every stored cell-tree level refolds from the level below
+        by_owner: "dict[int, dict]" = {}
+        for (o, k, p), h in tree.items():
+            by_owner.setdefault(o, {}).setdefault(k, {})[p] = h
+        assert all(
+            t[k + 1] == parent(t[k])
+            for t in by_owner.values()
+            for k in range(len(t) - 1)
+        )
 
         # the driver answers: elements and root from the hexed stores
         fn = q2_range_response if family == "q2" else erc20_range_response
@@ -379,31 +392,149 @@ def test_stores_hold_binary_digests_and_answers_match_a_hex_recompute(spark):
 def test_commitment_stores_are_byte_identical_across_builds(
     spark, tmp_path, monkeypatch
 ):
-    """Building the six commitment stores twice, each into an empty
+    """Building the four commitment stores, the two keyed tile trees
+    and the trees' two input-row stores twice, each time into an empty
     artifact root, writes the same part files byte for byte: the owner
-    clustering is a function of the data, not of a sampled bound."""
+    and event_id clustering is a function of the data, not of a
+    sampled bound."""
     import os
 
     from euclid_spark.cache import release_all
     from euclid_spark.operators.range_response import range_commitment_paths
+    from euclid_spark.operators.range_tree import (
+        ERC20_REWARD_TREE,
+        Q2_KEY_TREE,
+    )
 
     def build(root) -> "dict[tuple, bytes]":
         monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(root))
-        parts: "dict[tuple, bytes]" = {}
+        paths = [
+            tree.path(spark, SF_SMOKE, store=store)
+            for tree in (Q2_KEY_TREE, ERC20_REWARD_TREE)
+            for store in (True, False)
+        ]
         for family in ("q2", "erc20"):
-            for path in range_commitment_paths(spark, SF_SMOKE, family)[:3]:
-                store = os.path.basename(path).split("_")[:3]
-                for f in os.listdir(path):
-                    if f.startswith("part-"):
-                        # part-<task>-<write uuid>-c000...: key on the task
-                        with open(os.path.join(path, f), "rb") as fh:
-                            parts[(*store, f.split("-")[1])] = fh.read()
-            release_all()
+            paths += range_commitment_paths(spark, SF_SMOKE, family)[:2]
+        parts: "dict[tuple, bytes]" = {}
+        for path in paths:
+            store = os.path.basename(path).rsplit("_", 1)[0]
+            for f in os.listdir(path):
+                if f.startswith("part-"):
+                    # part-<task>-<write uuid>-c000...: key on the task
+                    with open(os.path.join(path, f), "rb") as fh:
+                        parts[(store, f.split("-")[1])] = fh.read()
+        release_all()
         return parts
 
     first, second = build(tmp_path / "a"), build(tmp_path / "b")
-    assert len({k[:3] for k in first}) == 6
+    assert {k[0] for k in first} == {
+        "rr_q2_leaves", "rr_q2_celltree", "rr_erc20_leaves",
+        "rr_erc20_celltree", "q2_key_tiles", "q2_entry_store",
+        "erc20_reward_tiles", "erc20_all_entry_leaves",
+    }
     assert first.keys() == second.keys()
     assert all(first[k] == second[k] for k in first), sorted(
         k for k in first if first[k] != second[k]
+    )
+
+
+def test_incell_refold_equals_merkle_levels(spark):
+    """The driver's in-cell refold (`_incell_tree`, `_path_steps`) is
+    merkle.merkle_levels and merkle_opening_paths: every level and every
+    leaf's opening steps agree, for cells of 1 to TILE_SIZE leaves.
+    Spark carries a tree past its root by promotion; the refold stops
+    there."""
+    from euclid_spark.operators.merkle import (
+        merkle_levels,
+        merkle_opening_paths,
+    )
+    from euclid_spark.operators.range_response import (
+        _incell_tree,
+        _path_steps,
+        _sha,
+    )
+
+    sizes = (1, 2, 3, 4, 5, 7, 8, 9, 255, 256)
+    hashes = {n: [_sha(f"{n}:{p}") for p in range(n)] for n in sizes}
+    df = spark.createDataFrame(
+        [(n, p, h) for n, hs in hashes.items() for p, h in enumerate(hs)],
+        "group_key long, pos long, node_hash string",
+    )
+    nodes, depth = merkle_levels(df)
+    stored: "dict[int, dict]" = {}
+    for r in nodes.collect():
+        stored.setdefault(r["group_key"], {})[(r["level"], r["pos"])] = (
+            r["node_hash"]
+        )
+    paths = {
+        (r["group_key"], r["leaf_pos"]): r["path"]
+        for r in merkle_opening_paths(df, [], nodes=nodes, depth=depth).collect()
+    }
+    for n in sizes:
+        tree, top = _incell_tree(hashes[n])
+        assert top == max(0, (n - 1).bit_length()), n
+        sp = stored[n]
+        assert {kp: h for kp, h in sp.items() if kp[0] <= top} == tree, n
+        assert all(h == tree[(top, 0)] for (k, _), h in sp.items() if k > top)
+        for p in range(n):
+            assert "/".join(_path_steps(tree, top, p)) == paths[(n, p)], (n, p)
+
+
+# Sorted-row md5s of both response faces over a grid of requests, and
+# of both verifier faces, recorded before the in-cell trees and leaf
+# hashes left the stores: each answer must stay byte-identical.
+_GOLDEN_GRID = {  # (owner, b_min, b_max, L) → md5 per family
+    (7, 300, 500, None): (  # edges only
+        "c7104c140c9348a301ce0bd4338ee65d", "605fb36f8d23a7c7eaf7543123b4196c"),
+    (7, 256, 768, None): (  # aligned cover only
+        "58d5e29441e8160e4acacb05fd284426", "a0bc396dc7185f10a79ecd0c20fbac29"),
+    (7, 45, 905, None): (  # cover and edges
+        "e9e9ebfd369fcd8268e3f62e6194358b", "f5512ee5f7058ab62257f4c0275dd60f"),
+    (9, 45, 905, 1): (  # L = 1
+        "1c324f8a35edb159636340f3ed78c78b", "23a0791212a60c7c96978b69bf3d4936"),
+    (9, 0, 1000, 5): (  # L = TOP_L over the whole block span
+        "6896eb5530f579a23124a1a5fc7fa685", "7ff38689aed283f6fdf7573a4b907817"),
+    (9, 0, 1000, 20): (  # L > Q2_L: q2 reads the leaf store
+        "644f79164b9daec1fa634820587ca388", "e24549de6f72ed91e1d983fbe696405e"),
+    (3, 0, 256, 20): (  # one aligned cell, L > Q2_L
+        "457d71aa676e0555b07253555a8e18dd", "a74e1c49c01771dbd29bcc51ddc737b1"),
+}
+_GOLDEN_VERIFY = {
+    "q2": "8222ea936efec64cb0ee304a5cedd85b",
+    "erc20": "37a95bcdcfb6333d4eab60a55cfdd0ee",
+}
+
+
+def _rows_md5(df) -> str:
+    rows = sorted(
+        "|".join(f"{k}={v}" for k, v in sorted(r.asDict().items()))
+        for r in df.collect()
+    )
+    return hashlib.md5("\n".join(rows).encode()).hexdigest()
+
+
+def test_golden_answers(spark):
+    """Both response faces over edge-only, cover-only and mixed ranges
+    at L = 1, TOP_L and L > Q2_L, and both verifier faces, answer the
+    recorded rows byte for byte."""
+    from euclid_spark.operators.euclid import TOP_L
+    from euclid_spark.operators.range_tree import Q2_L, tile_cover
+
+    assert TOP_L == Q2_L == 5  # the grid's L values assume it
+    kinds = set()
+    for (owner, b_min, b_max, L), want in _GOLDEN_GRID.items():
+        cover, edges = tile_cover(b_min, b_max, 2)
+        kinds.add((bool(cover), bool(edges)))
+        got = tuple(
+            _rows_md5(fn(spark, SF_SMOKE, owner=owner, b_min=b_min,
+                         b_max=b_max, L=L))
+            for fn in (q2_range_response, erc20_range_response)
+        )
+        assert got == want, (owner, b_min, b_max, L)
+    assert kinds == {(False, True), (True, False), (True, True)}
+    assert _rows_md5(verify_q2_range_response(spark, SF_SMOKE)) == (
+        _GOLDEN_VERIFY["q2"]
+    )
+    assert _rows_md5(verify_erc20_range_response(spark, SF_SMOKE)) == (
+        _GOLDEN_VERIFY["erc20"]
     )

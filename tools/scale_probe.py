@@ -22,6 +22,10 @@ Usage: python tools/scale_probe.py [op ...]   (default: the linear set)
                   tokenizer/linguistic per-doc cost, plain replication
                   for worst-case duplicate load.
 Writes one JSON line; temp corpus lives under /tmp and is removed.
+Per op and scale it also records, from the warm run, each artifact the
+face served (every path `artifacts.ensure` returned) with its bytes on
+disk and its parquet row-group count — the bytes a bounded read can
+decode grow with these, not with the rows it returns.
 """
 
 from __future__ import annotations
@@ -37,7 +41,7 @@ sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F
 
-from euclid_spark import registry
+from euclid_spark import artifacts, registry
 from euclid_spark.cache import release_all
 from euclid_spark.session import get_session
 
@@ -124,6 +128,40 @@ def _time(qs, name: str, sf_dir: str) -> float:
     return round(dt, 2)
 
 
+def _served(run):
+    """(run(), {artifact name: {"bytes", "row_groups"}}) for every
+    artifact path `artifacts.ensure` returns while `run` runs."""
+    import pyarrow.parquet as pq
+
+    paths: "list[str]" = []
+    orig = artifacts.ensure
+
+    def spy(*a, **kw):
+        paths.append(orig(*a, **kw))
+        return paths[-1]
+
+    artifacts.ensure = spy
+    try:
+        out = run()
+    finally:
+        artifacts.ensure = orig
+    arts = {}
+    for path in dict.fromkeys(paths):
+        files = [
+            os.path.join(r, f)
+            for r, _, fs in os.walk(path)
+            for f in fs
+            if not f.startswith(("_", "."))
+        ] if os.path.isdir(path) else [path]
+        arts[os.path.basename(path).rsplit("_", 1)[0]] = {
+            "bytes": sum(os.path.getsize(f) for f in files),
+            "row_groups": sum(
+                pq.ParquetFile(f).metadata.num_row_groups for f in files
+            ),
+        }
+    return out, arts
+
+
 def main() -> None:
     args = sys.argv[1:]
     scale_events = "--events" in args
@@ -160,15 +198,17 @@ def main() -> None:
                "mutate": mutate_docs, "ops": {}}
         for name in ops:
             one_cold = _time(qs, name, SF)
-            one_warm = _time(qs, name, SF)
+            one_warm, one_arts = _served(lambda: _time(qs, name, SF))
             ten_cold = _time(qs, name, tmp)
-            ten_warm = _time(qs, name, tmp)
+            ten_warm, ten_arts = _served(lambda: _time(qs, name, tmp))
             out["ops"][name] = {
                 "x1_cold": one_cold,
                 "x1_warm": one_warm,
                 f"x{replicas}_cold": ten_cold,
                 f"x{replicas}_warm": ten_warm,
                 "cold_ratio": round(ten_cold / max(one_cold, 1e-9), 1),
+                "x1_artifacts": one_arts,
+                f"x{replicas}_artifacts": ten_arts,
             }
             print(f"# {name}: 1x {one_cold}/{one_warm}s "
                   f"{replicas}x {ten_cold}/{ten_warm}s", file=sys.stderr)
