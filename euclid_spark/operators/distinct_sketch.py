@@ -17,7 +17,8 @@ At-scale properties, same as the CMS (B44) and HDR (B47) tiles:
 - FIXED SIZE (m bits per group) regardless of row count;
 - a commutative MONOID: bitmaps merge by bit_or — map-side
   combinable, mergeable across partitions / days / streams (per-day
-  tiles run through the D20 parity harness: `lc_distinct_tiles`);
+  tiles declared once as `LC_DAY_TILES`, the D20 spec
+  `lc_distinct_tiles`);
 - one aggregation, no distinct shuffle: at 100 TB the exact
   COUNT(DISTINCT) side is what you drop, the bitmap is what you keep.
 """
@@ -27,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from euclid_spark.catalog import cached_parquet
+from euclid_spark.monoid import Monoid
 
 LC_BITS = 1024           # bitmap size m (supports ~1000s of distinct keys)
 LC_WORDS = LC_BITS // 64
@@ -90,55 +92,48 @@ def lc_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def lc_day_tiles_path(spark: SparkSession, sf_dir: str) -> str:
-    """Path of the per-day distinct-user bitmaps, a fingerprint-keyed
-    ARTIFACT — the structure the D20 `lc_distinct_tiles` spec maintains
-    incrementally; batch deployments build it once at ingest."""
-    from euclid_spark import artifacts
+def _lc_partial(events: DataFrame) -> DataFrame:
+    """B48's distinct-user bitmap as PER-DAY tiles: a day-range distinct
+    estimate is the bit_or of its tiles' words — the set-union monoid
+    in packed form (bit_or is idempotent, so replay is free)."""
+    keyed = events.select(F.to_date("ts").alias("day"), "user_id")
+    return lc_bitmap(keyed, "day", "user_id").withColumnRenamed("grp", "day")
 
-    def build() -> DataFrame:
-        ev = cached_parquet(spark, f"{sf_dir}/events.parquet").select(
-            F.to_date("ts").alias("day"), "user_id"
-        )
-        return lc_bitmap(ev, "day", "user_id").withColumnRenamed("grp", "day")
 
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="lc_day_tiles", m=LC_BITS
+def _lc_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
+    return (
+        old.unionByName(partial)
+        .groupBy("day", "word_idx")
+        .agg(F.bit_or("word").alias("word"))
     )
-    return artifacts.ensure("lc_day_tiles", fp, build)
+
+
+LC_DAY_TILES = Monoid(
+    "lc_distinct_tiles",
+    _lc_partial,
+    _lc_merge,
+    artifact="lc_day_tiles",
+    fp=dict(op="lc_day_tiles", m=LC_BITS),
+)
 
 
 def lc_range_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B52 — distinct users over an ARBITRARY DAY RANGE from the served
-    per-day bitmaps: range bitmap = bit_or of the days' words (the
-    set-union monoid in packed form — cost ∝ days × words, never the
-    events in range), estimate beside the exact COUNT(DISTINCT) over
-    the range (the audit the tiles replace at scale). The B51 pattern
-    for the distinct-count monoid; same probe bounds (⅕..⅘ days)."""
-    from datetime import timedelta
-
-    from euclid_spark import artifacts
-
-    path = lc_day_tiles_path(spark, sf_dir)
-    tiles = cached_parquet(spark, path)
-    # tile-span parameter fetch from parquet FOOTER statistics (no
-    # Spark job), read after the artifact is ensured
-    d0, d1 = artifacts.footer_stats(path).span("day")
-    if d0 is None:  # zero-row corpus
+    per-day bitmaps (`LC_DAY_TILES`): range bitmap = bit_or of the days'
+    words (the set-union monoid in packed form — cost ∝ days × words,
+    never the events in range), estimate beside the exact
+    COUNT(DISTINCT) over the range (the audit the tiles replace at
+    scale). The B51 pattern for the distinct-count monoid; same probe
+    bounds (⅕..⅘ days)."""
+    mid = LC_DAY_TILES.middle_days(spark, sf_dir)
+    if mid is None:  # zero-row corpus
         return spark.createDataFrame(
             [],
             "d_lo date, d_hi date, n_rows long, exact_distinct long, "
             "n_set_bits long, lc_estimate double",
         )
-    span = (d1 - d0).days
-    d_lo = d0 + timedelta(days=span // 5)
-    d_hi = d0 + timedelta(days=span * 4 // 5)
-
-    merged = (
-        tiles.filter((F.col("day") >= d_lo) & (F.col("day") < d_hi))
-        .groupBy("word_idx")
-        .agg(F.bit_or("word").alias("word"))
-    )
+    tiles, d_lo, d_hi = mid
+    merged = tiles.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
     setbits = merged.agg(
         F.sum(F.bit_count("word")).cast("long").alias("n_set_bits")
     )

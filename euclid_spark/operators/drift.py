@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from euclid_spark import artifacts, cache, catalog
+from euclid_spark.monoid import Monoid
+from euclid_spark.operators.quantile_sketch import hdr_sketch
 
 PSI_BINS = 16
 PSI_ALERT = 0.1  # the conventional "moderate shift, investigate" bar
@@ -393,6 +395,52 @@ def data_drift_psi_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B59b — the quantile-edge PSI face (the pinned default
     instantiation of data_drift_psi(edges='quantile'))."""
     return data_drift_psi(spark, sf_dir, edges="quantile")
+
+
+def _drift_partial(events: DataFrame) -> DataFrame:
+    """The streamed monitor's drift tiles: the B47 sketch keyed per
+    (event_type, day) — the maintained state the streamed PSI face
+    reads its two windows from. Same additive-count monoid as the HDR
+    tiles; NULL ts / NULL value rows are excluded up front (they belong
+    to no window). Fixed-point values < 1 — zeros and negatives — land
+    in a RESERVED UNDERFLOW bucket (nbits=0, sub=0): the tile store
+    covers exactly the rows batch B59 bins, so swapping batch for
+    streamed monitoring never changes n_ref/n_cur. The bucket is one
+    more additive tile row — the monoid, merge, and read are
+    untouched."""
+    vals = (
+        events.filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
+        .select(
+            "event_type",
+            F.to_date("ts").alias("day"),
+            F.floor(F.col("value") * 100).cast("long").alias("v"),
+        )
+    )
+    pos = hdr_sketch(vals.filter(F.col("v") >= 1), ["event_type", "day"], "v")
+    under = (
+        vals.filter(F.col("v") < 1)
+        .groupBy("event_type", "day")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .select(
+            "event_type",
+            "day",
+            F.lit(0).cast("int").alias("nbits"),
+            F.lit(0).cast("long").alias("sub"),
+            "cnt",
+        )
+    )
+    return pos.unionByName(under)
+
+
+def _drift_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
+    return (
+        old.unionByName(partial)
+        .groupBy("event_type", "day", "nbits", "sub")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
+
+
+DRIFT_TILES = Monoid("drift_tiles", _drift_partial, _drift_merge)
 
 
 QUERIES = {

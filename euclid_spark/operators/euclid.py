@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from euclid_spark.catalog import cached_parquet, load_events
 from euclid_spark.functions.hashing import DIGEST_PRIME, MIX, digest_agg, digest_term
+from euclid_spark.monoid import Monoid
 
 # Query-2 style parameters (owner + block range), fixed so the oracle SQL
 # can restate them literally.
@@ -283,6 +284,47 @@ def block_db_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _day_digest_partial(events: DataFrame) -> DataFrame:
+    """A9's per-day block digest (block/mod.rs append unit) as a monoid
+    partial: digest + row count per day."""
+    term = digest_term(F.col("event_id").cast("long"), F.col("user_id").cast("long"))
+    return (
+        events.withColumn("day", F.to_date("ts"))
+        .groupBy("day")
+        .agg(digest_agg(term).alias("day_digest"), F.count("*").alias("n"))
+    )
+
+
+def _day_digest_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
+    return (
+        old.unionByName(partial)
+        .groupBy("day")
+        .agg(
+            F.pmod(F.sum("day_digest"), F.lit(DIGEST_PRIME))
+            .cast("long")
+            .alias("day_digest"),
+            F.sum("n").alias("n"),
+        )
+    )
+
+
+def _chain_finalize(pdf):
+    """Fold per-day digests into the A9 running chain commitment — the
+    derived result whose batch/incremental equality is the IVC property.
+    Day-level frame: pandas cumsum is exact (int64 · #days ≪ 2⁶³)."""
+    out = pdf.sort_values("day").reset_index(drop=True)
+    out["day_digest"] = out["day_digest"].astype("int64")
+    out["chain_digest"] = out["day_digest"].cumsum() % DIGEST_PRIME
+    return out
+
+
+# the D20 spec `block_db_chain_a9`: the day digests block_db_chain folds
+DAY_DIGEST = Monoid(
+    "block_db_chain_a9", _day_digest_partial, _day_digest_merge,
+    finalize=_chain_finalize,
+)
+
+
 def block_db_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9 — append-only block DB (block/mod.rs IVC): each appended unit
     (here: a day of events) contributes a digest, and the running chain
@@ -304,17 +346,16 @@ def block_db_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     THREE times per call. The pinned frame is one row per day (calendar-
     bounded whatever the corpus size), so the cache is index-sized and
     the corpus is scanned exactly once (plans/r16/euclid_block_db_chain
-    before: 3× Scan parquet → after: 1)."""
+    before: 3× Scan parquet → after: 1). Its rows are
+    `DAY_DIGEST.partial`, the day digests the D20 parity spec maintains."""
     from pyspark.sql import Window
 
     from euclid_spark.cache import persist_tracked
 
-    ev = _events(spark, sf_dir)
-    term = digest_term(F.col("event_id").cast("long"), F.col("user_id").cast("long"))
     daily = persist_tracked(
-        ev.groupBy(F.to_date("ts").alias("day")).agg(
-            digest_agg(term).alias("day_digest"), F.count("*").alias("n")
-        ).withColumn("epoch", F.trunc("day", "month"))
+        DAY_DIGEST.partial(_events(spark, sf_dir)).withColumn(
+            "epoch", F.trunc("day", "month")
+        )
     )
 
     epoch_tot = daily.groupBy("epoch").agg(F.sum("day_digest").alias("etot"))

@@ -21,8 +21,8 @@ the DuckDB oracle, while keeping the properties that matter at scale:
 
 - the sketch is a (group, bucket) → count table: a commutative MONOID
   (counts add), map-side combinable, mergeable across partitions /
-  days / streams — run through the D20 parity harness as per-day
-  tiles (streaming/parity.py `hdr_quantile_tiles`);
+  days / streams — declared once as per-day tiles (`HDR_DAY_TILES`,
+  the D20 parity spec `hdr_quantile_tiles`);
 - fixed size regardless of data volume (the CMS/B44 property);
 - quantile extraction = one cumulative-sum window over ≤ ~1000
   bucket rows per group, never a data sort.
@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from euclid_spark.catalog import cached_parquet
+from euclid_spark.monoid import Monoid
 
 SUB_BITS = 4  # 16 linear sub-buckets per octave
 QS = (50, 90, 99)  # report p50/p90/p99
@@ -179,47 +180,46 @@ def hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def hdr_day_tiles_path(spark: SparkSession, sf_dir: str) -> str:
-    """Path of the per-day sketch tiles over event values (cents), a
-    fingerprint-keyed ARTIFACT — the exact structure the D20
-    `hdr_quantile_tiles` parity spec maintains incrementally; batch
-    deployments build it once per corpus version at ingest."""
-    from euclid_spark import artifacts
+def _hdr_partial(events: DataFrame) -> DataFrame:
+    """B47's integer log-histogram as PER-DAY tiles over event values
+    (cents): a day-range quantile is the bucket-wise sum of its tiles —
+    the mergeable-sketch monoid, exactly like the CMS tiles."""
+    vals = events.select(
+        F.to_date("ts").alias("day"),
+        F.floor(F.col("value") * 100).cast("long").alias("v"),
+    ).filter(F.col("v") >= 1)
+    return hdr_sketch(vals, "day", "v").withColumnRenamed("grp", "day")
 
-    def build() -> DataFrame:
-        ev = cached_parquet(spark, f"{sf_dir}/events.parquet").select(
-            F.to_date("ts").alias("day"),
-            F.floor(F.col("value") * 100).cast("long").alias("v"),
-        ).filter(F.col("v") >= 1)
-        return hdr_sketch(ev, "day", "v").withColumnRenamed("grp", "day")
 
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="hdr_day_tiles", sb=SUB_BITS
+def _hdr_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
+    return (
+        old.unionByName(partial)
+        .groupBy("day", "nbits", "sub")
+        .agg(F.sum("cnt").alias("cnt"))
     )
-    return artifacts.ensure("hdr_day_tiles", fp, build)
+
+
+HDR_DAY_TILES = Monoid(
+    "hdr_quantile_tiles",
+    _hdr_partial,
+    _hdr_merge,
+    artifact="hdr_day_tiles",
+    fp=dict(op="hdr_day_tiles", sb=SUB_BITS),
+)
 
 
 def hdr_range_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """B51 — quantiles over an ARBITRARY DAY RANGE answered from the
-    served per-day sketch tiles: merge = bucket-wise count sum (the
-    monoid), so the query reads tile rows ∝ days × buckets — never the
-    events in range. This is the serving path the tile artifacts exist
-    for (a day-range p99 at 100 TB = a few thousand tile rows), made
-    gate-checkable: the estimates must hash-match the oracle computing
-    the same buckets from the raw rows, and the exact interpolated
-    percentiles ride beside them as the error audit (B44 pattern).
-    Range = the middle ⅕..⅘ of the day span (scale-invariant probe
-    bounds, the A22/A25 pattern; two collected scalars)."""
-    from datetime import timedelta
-
-    from euclid_spark import artifacts
-
-    path = hdr_day_tiles_path(spark, sf_dir)
-    tiles = cached_parquet(spark, path)
-    # tile-span parameter fetch from parquet FOOTER statistics (no
-    # Spark job), read after the artifact is ensured
-    d0, d1 = artifacts.footer_stats(path).span("day")
-    if d0 is None:  # zero-row corpus
+    served per-day sketch tiles (`HDR_DAY_TILES`): merge = bucket-wise
+    count sum (the monoid), so the query reads tile rows ∝ days ×
+    buckets — never the events in range. This is the serving path the
+    tile artifacts exist for (a day-range p99 at 100 TB = a few thousand
+    tile rows), made gate-checkable: the estimates must hash-match the
+    oracle computing the same buckets from the raw rows, and the exact
+    interpolated percentiles ride beside them as the error audit (B44
+    pattern). Range = the middle ⅕..⅘ of the day span."""
+    mid = HDR_DAY_TILES.middle_days(spark, sf_dir)
+    if mid is None:  # zero-row corpus
         return spark.createDataFrame(
             [],
             "d_lo date, d_hi date, n long, "
@@ -227,13 +227,9 @@ def hdr_range_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"p{q}_est double, p{q}_exact double" for q in QS
             ),
         )
-    span = (d1 - d0).days
-    d_lo = d0 + timedelta(days=span // 5)
-    d_hi = d0 + timedelta(days=span * 4 // 5)
-
+    tiles, d_lo, d_hi = mid
     merged = (
-        tiles.filter((F.col("day") >= d_lo) & (F.col("day") < d_hi))
-        .groupBy("nbits", "sub")
+        tiles.groupBy("nbits", "sub")
         .agg(F.sum("cnt").alias("cnt"))
         # constant single-group key; (nbits - nbits) rather than a literal
         # because Catalyst folds literal partition keys away and WindowExec

@@ -35,11 +35,12 @@ read, and the driver fold. Everything else derives from it:
   written owner-clustered with fine row groups, so one owner's cover
   read prunes to its rows.
 - **Streaming upkeep** (`TileTree.partial` / `merge`, the D19 monoid
-  pair `parity.SPECS` and `faces.MAINTAINED` run): each input row
-  contributes one cell per level 0.._RT_LEVELS, grouped by
-  (chunk, level, cell, *keys) → `leaf`; merge is `combine`. The state
-  keeps only fields that do not depend on how the stream splits into
-  batches (`TileTree.invariant`).
+  pair with monoid.Monoid's surface, so the tree itself is its
+  `parity.SPECS` entry and the declaration its `faces.MAINTAINED` row
+  references): each input row contributes one cell per level
+  0.._RT_LEVELS, grouped by (chunk, level, cell, *keys) → `leaf`; merge
+  is `combine`. The state keeps only fields that do not depend on how
+  the stream splits into batches (`TileTree.invariant`).
 - **Range answers**: `tile_cover` gives ≤ 2 aligned tiles per level
   plus two < TILE_SIZE edge windows. Owner-scoped and keyless requests
   read exactly those rows with `artifacts.read_rows` and fold them on
@@ -283,6 +284,9 @@ class TileTree:
     store: "tuple[str, dict] | None" = None
     # projection of a streaming partial onto its split-invariant fields
     invariant: "Callable[[DataFrame], DataFrame] | None" = None
+    # the rest of a monoid.Monoid's surface: the stream chunk is `day`
+    key_col = "day"
+    finalize = None
 
     def _spec(
         self, spark: SparkSession, sf_dir: str, contract, rate, store: bool

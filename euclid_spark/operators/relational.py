@@ -1280,42 +1280,37 @@ CMS_W = 256    # buckets per row
 CMS_TOP = 20   # heavy-hitter candidates reported
 
 
-def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """B44 — COUNT-MIN SKETCH heavy hitters (Cormode & Muthukrishnan
-    2005, public): the sketch is a (row, bucket) → count table of
-    CMS_ROWS × CMS_W cells — a FIXED-SIZE commutative monoid (cells
-    add), which is the whole point: it map-side-combines to ~1 KB per
-    task regardless of corpus size, merges across batches/streams
-    (tests/test_batch_incremental_parity.py runs it through the D20
-    harness), and answers est(key) = min over rows of its cell. This
-    query reports, for the exact top-CMS_TOP users, the exact count
-    next to the sketch estimate and the (always ≥ 0) overcount — the
-    honest sketch-error audit, like C37 for MinHash.
+def cms_bucket(row_col: F.Column, key_col: F.Column) -> F.Column:
+    """B44's cell hash, the one every CMS tile and probe uses: the
+    first 8 md5 hex digits of "row|key", mod CMS_W (ascii arithmetic
+    both engines compute byte-identically)."""
+    h = F.md5(F.concat_ws("|", row_col.cast("string"), key_col.cast("string")))
+    return F.pmod(F.conv(F.substring(h, 1, 8), 16, 10).cast("long"), F.lit(CMS_W))
 
-    Plan shape: sketch build = one explode(CMS_ROWS) + one bounded
-    aggregate; exact side = one hash aggregate + TakeOrdered; probes
-    join the 1024-cell sketch — broadcast-sized by construction."""
-    ev = _t(spark, sf_dir, "events").select("user_id")
-    r = F.explode(F.sequence(F.lit(0), F.lit(CMS_ROWS - 1))).alias("r")
 
-    def bucket(row_col: F.Column, key_col: F.Column) -> F.Column:
-        h = F.md5(
-            F.concat_ws(
-                "|", row_col.cast("string"), key_col.cast("string")
-            )
-        )
-        return F.pmod(
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("long"), F.lit(CMS_W)
-        )
+def _cms_row() -> F.Column:
+    return F.explode(F.sequence(F.lit(0), F.lit(CMS_ROWS - 1))).alias("r")
 
-    cms = (
-        ev.select("user_id", r)
-        .select("r", bucket(F.col("r"), F.col("user_id")).alias("b"))
-        .groupBy("r", "b")
+
+def cms_cells(rows: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, r, b, c): the count-min sketch of `rows`' user_ids per
+    `keys` — one explode(CMS_ROWS) and one bounded aggregate."""
+    return (
+        rows.select(*keys, "user_id", _cms_row())
+        .select(*keys, "r", cms_bucket(F.col("r"), F.col("user_id")).alias("b"))
+        .groupBy(*keys, "r", "b")
         .agg(F.count("*").alias("c"))
     )
-    # top-N via ORDER BY + LIMIT (TakeOrderedAndProject — no global
-    # sort); the rank window then runs over CMS_TOP rows, not the corpus
+
+
+def cms_probe(ev: DataFrame, cms: DataFrame) -> DataFrame:
+    """The sketch-error audit over `ev`'s user_ids: the exact
+    top-CMS_TOP users, each probed against the (r, b, c) sketch `cms`
+    — exact count, estimate (min over rows of its cell) and the
+    (always ≥ 0) overcount. The top-N is ORDER BY + LIMIT
+    (TakeOrderedAndProject — no global sort), so the rank window and
+    the probes run over CMS_TOP rows, and the probes join the
+    CMS_ROWS × CMS_W sketch by broadcast."""
     top = (
         ev.groupBy("user_id")
         .agg(F.count("*").alias("exact_n"))
@@ -1336,10 +1331,9 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    probes = top.select(
-        "user_id", "exact_n", "rk", F.explode(F.sequence(F.lit(0), F.lit(CMS_ROWS - 1))).alias("r")
+    probes = top.select("user_id", "exact_n", "rk", _cms_row()).withColumn(
+        "b", cms_bucket(F.col("r"), F.col("user_id"))
     )
-    probes = probes.withColumn("b", bucket(F.col("r"), F.col("user_id")))
     return (
         probes.join(F.broadcast(cms), ["r", "b"])
         .groupBy("user_id", "exact_n", "rk")
@@ -1352,6 +1346,21 @@ def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rk",
         )
     )
+
+
+def heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """B44 — COUNT-MIN SKETCH heavy hitters (Cormode & Muthukrishnan
+    2005, public): the sketch is a (row, bucket) → count table of
+    CMS_ROWS × CMS_W cells — a FIXED-SIZE commutative monoid (cells
+    add), which is the whole point: it map-side-combines to ~1 KB per
+    task regardless of corpus size, merges across batches/streams
+    (its per-day tiles, cms_range.CMS_DAY_TILES, run through the D20
+    harness), and answers est(key) = min over rows of its cell. This
+    query reports, for the exact top-CMS_TOP users, the exact count
+    next to the sketch estimate and the (always ≥ 0) overcount — the
+    honest sketch-error audit, like C37 for MinHash (`cms_probe`)."""
+    ev = _t(spark, sf_dir, "events").select("user_id")
+    return cms_probe(ev, cms_cells(ev))
 
 
 def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,10 +17,13 @@ result — the driver's gate checks the streaming engine itself.
 Declared, not hand-run (the Structured Streaming idea: the user
 declares the query, the engine owns the incremental run):
 
-- `MAINTAINED` is a table of the 14 D19 faces — each a (partial, merge)
-  monoid kept by `ivm.MaintainedAggregate`. A row declares the artifact
-  name, fingerprint params, source frame, split key, partial, merge,
-  partition key, empty-result DDL and read transform; the row comment
+- `MAINTAINED` is a table of the 14 D19 faces, each kept by
+  `ivm.MaintainedAggregate`. A row references its monoid's declaration
+  (a monoid.Monoid or range_tree.TileTree: partial, merge, partition
+  key — declared once, next to what reads it, and the same object
+  parity.SPECS tests) and adds only the face: artifact name,
+  fingerprint params, source frame, split key, feed format, optional
+  up-front model, empty-result DDL and read transform; the row comment
   says why the face is shaped the way it is. `_serve_maintained` is the
   one builder that runs a row.
 - Eight faces are hand-run over the six other foreachBatch sinks (the
@@ -57,17 +60,22 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-from euclid_spark.catalog import cached_parquet, local_frame
+from euclid_spark.catalog import cached_parquet, load_events, local_frame
 
 from euclid_spark import artifacts
 from euclid_spark.functions.hashing import DIGEST_PRIME, MIX
+from euclid_spark.monoid import Monoid
 from euclid_spark.operators import curation, dedup, euclid, mpt_ingest, timeseries
+from euclid_spark.operators.distinct_sketch import LC_DAY_TILES
+from euclid_spark.operators.drift import DRIFT_TILES
+from euclid_spark.operators.quantile_sketch import HDR_DAY_TILES
 from euclid_spark.operators.range_response import q2_leaf_hash
 from euclid_spark.operators.range_tree import (
     _RT_LEVELS,
     Q2_KEY_TREE,
     RANGE_TREE,
     TILE_SIZE,
+    TileTree,
 )
 # IVF_FACE_K: seed-centroid count for the gate-checkable IVF model — one
 # constant with the batch search face (similarity.sim_ivf_pinned_topk),
@@ -75,13 +83,7 @@ from euclid_spark.operators.range_tree import (
 from euclid_spark.operators.similarity import N_QUERIES, SEED_K as IVF_FACE_K
 from euclid_spark.sources import eth_proof, jsonl
 from euclid_spark.streaming import parity as _p
-from euclid_spark.streaming.ivm import (
-    MaintainedAggregate,
-    _merge,
-    _partial,
-    _rollup_merge,
-    _rollup_partial,
-)
+from euclid_spark.streaming.ivm import MaintainedAggregate
 from euclid_spark.streaming.sink import drain, read_feed
 
 N_SPLITS = 3
@@ -157,32 +159,24 @@ def _write_feed(
 
 # ------------------------------------------------- table-driven D19 faces
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events table as the feed carries it: `ts` cast to the
-    session-zoned TIMESTAMP (UTC) the partials are written against."""
-    return cached_parquet(spark, f"{sf_dir}/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-
 
 @dataclass(frozen=True)
 class Maintained:
-    """One maintained-aggregate face: feed `source` through the
-    (partial, merge) monoid sink, then `read` the face's rows off the
-    maintained view (default: the `empty` DDL's columns)."""
+    """One maintained-aggregate face: feed `source` through the sink of
+    the `monoid` declaration (its partial, merge and partition column),
+    then `read` the face's rows off the maintained view (default: the
+    `empty` DDL's columns)."""
 
     name: str  # artifact name
     params: dict  # fingerprint params (op, v, ...); n=N_SPLITS is added
-    partial: Callable[..., DataFrame]
-    merge: Callable[[DataFrame, DataFrame], DataFrame]
+    monoid: "Monoid | TileTree"
     empty: str  # result DDL when nothing was merged (empty corpus)
     read: "Callable[[DataFrame], DataFrame] | None" = None
     table: str = "events"  # the fingerprinted corpus table
     # resolved at CALL time, cached or not — so a fixture an oracle
     # reads (the eth capture) is served even when the face is cached
-    source: Callable[[SparkSession, str], DataFrame] = _events
+    source: Callable[[SparkSession, str], DataFrame] = load_events
     split: str = "event_id"  # hash-split key of the feed
-    key_col: str = "day"  # the view's partition column
     fmt: str = "parquet"  # feed file format
     # a static up-front model fitted from the source before the stream
     # starts, handed to partial(batch, model=...)
@@ -201,15 +195,15 @@ def _serve_maintained(spark: SparkSession, sf_dir: str, face: Maintained) -> Dat
     def build(tmp: str) -> DataFrame:
         feed, view, ck = (os.path.join(tmp, d) for d in ("feed", "view", "ck"))
         n_files = _write_feed(src, feed, face.split, fmt=face.fmt)
-        partial = face.partial
+        partial = face.monoid.partial
         if face.model is not None:
             partial = functools.partial(partial, model=face.model(src))
         sink = MaintainedAggregate(
             view_path=view,
             state_path=os.path.join(ck, "ivm_state.json"),
             partial_fn=partial,
-            merge_fn=face.merge,
-            key_col=face.key_col,
+            merge_fn=face.monoid.merge,
+            key_col=face.monoid.key_col,
         )
         q = sink.start(read_feed(spark, feed, src.schema, face.fmt), ck)
         drain(q, n_files, sink)
@@ -386,7 +380,7 @@ def _eth_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events feed; also serves the BATCH eth_getProof capture the
     oracle compares against (cheap load when cached)."""
     eth_proof.eth_proof_fixture(spark, sf_dir)
-    return _events(spark, sf_dir)
+    return load_events(spark, sf_dir)
 
 
 def _erc20_read(view: DataFrame) -> DataFrame:
@@ -411,14 +405,12 @@ MAINTAINED: "dict[str, Maintained]" = {
     "stream_eth_account_state": Maintained(
         "stream_eth_state",
         dict(op="stream_eth_state", slot=eth_proof.MAPPING_SLOT, v=1),
-        _p._eth_pairs_partial,
-        _p._eth_pairs_merge,
+        _p.ETH_ACCOUNT_STATE,
         "address string, nonce long, balance long, storage_root string",
         read=lambda v: eth_proof.account_state_rows(
             v.select("user_id", "token_id")
         ),
         source=_eth_source,
-        key_col="pb",
     ),
     # D19: the maintained (user, day) count/sum/digest view — the IVM
     # sink's own monoid. Sums are DECIMAL so partial-merge order cannot
@@ -427,8 +419,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     "stream_ivm_view": Maintained(
         "stream_ivm_view",
         dict(op="stream_ivm_view", v=2),
-        _partial,
-        _merge,
+        _p.IVM_VIEW,
         "user_id long, day date, n_events bigint, total_value double, "
         "digest bigint",
         read=lambda v: v.select(
@@ -444,8 +435,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     "stream_state_rollup": Maintained(
         "stream_state_rollup",
         dict(op="stream_state_rollup", v=3),
-        _rollup_partial,
-        _rollup_merge,
+        _p.STATE_ROLLUP,
         "user_id long, day date, last_value double, last_event_id bigint, "
         "n_events bigint",
     ),
@@ -458,8 +448,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     "stream_range_tree_tiles": Maintained(
         "stream_range_tree_tiles",
         dict(op="stream_range_tree", v=1),
-        RANGE_TREE.partial,
-        RANGE_TREE.merge,
+        RANGE_TREE,
         "day int, level int, cell long, n_events bigint, sum_value double, "
         "min_block long, max_block long, digest bigint",
         read=lambda v: v.select(
@@ -478,8 +467,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     "stream_q2_key_tiles": Maintained(
         "stream_q2_key_tiles",
         dict(op="stream_q2_key_tiles", v=1),
-        Q2_KEY_TREE.partial,
-        Q2_KEY_TREE.merge,
+        Q2_KEY_TREE,
         "day int, level int, cell long, owner long, pos int, token_id long",
         read=lambda v: v.select(
             "day", "level", "cell", "owner",
@@ -495,8 +483,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     "stream_hdr_quantile_tiles": Maintained(
         "stream_hdr_quantile_tiles",
         dict(op="stream_hdr_tiles", v=1),
-        _p._hdr_partial,
-        _p._hdr_merge,
+        HDR_DAY_TILES,
         "day date, nbits int, sub long, cnt bigint",
     ),
     # B48's per-day distinct-user bitmaps: bit_or is idempotent, so
@@ -504,8 +491,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     "stream_lc_distinct_tiles": Maintained(
         "stream_lc_distinct_tiles",
         dict(op="stream_lc_tiles", v=1),
-        _p._lc_partial,
-        _p._lc_merge,
+        LC_DAY_TILES,
         "day date, word_idx int, word bigint",
     ),
     # D32: the drift monitor SERVED FROM MAINTAINED STATE — per-(type,
@@ -517,8 +503,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     "stream_drift_psi": Maintained(
         "stream_drift_psi",
         dict(op="stream_drift_psi", v=2),
-        _p._drift_partial,
-        _p._drift_merge,
+        DRIFT_TILES,
         _PSI_DDL,
         read=_psi_from_tiles,
     ),
@@ -529,8 +514,9 @@ MAINTAINED: "dict[str, Maintained]" = {
     "stream_jsonl_ingest": Maintained(
         "stream_jsonl_ingest",
         dict(op="stream_jsonl_ingest", v=1),
-        _jsonl_partial,
-        _jsonl_merge,
+        Monoid(
+            "jsonl_ingest", _jsonl_partial, _jsonl_merge, key_col="quarantined"
+        ),
         "quarantined boolean, source string, n_rows bigint, sum_chars bigint",
         # the Hive-style partition directory round-trips the flag
         # through partition-value inference — pin it back to boolean
@@ -541,7 +527,6 @@ MAINTAINED: "dict[str, Maintained]" = {
         table="documents",
         source=_jsonl_source,
         split="value",
-        key_col="quarantined",
         fmt="text",
     ),
     # A13's u256 reward view (query_erc20 + block/mod.rs): the leaf
@@ -550,8 +535,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     "stream_erc20_rewards": Maintained(
         "stream_erc20_rewards",
         dict(op="stream_erc20_rewards", v=1),
-        _p._erc20_partial,
-        _p._erc20_merge,
+        _p.ERC20_REWARD_VIEW,
         "owner long, reward_hex string, n_zero_supply long, n_overflow long",
         read=_erc20_read,
     ),
@@ -561,8 +545,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     "stream_erc20_cell_roots": Maintained(
         "stream_erc20_cell_roots",
         dict(op="stream_erc20_cell_roots", v=1),
-        _p._rr_cell_leaves_partial,
-        _p._rr_cell_leaves_merge,
+        _p.RR_CELL_LEAVES,
         "owner long, cell long, n_entries long, root string",
         read=lambda v: _cell_roots(
             v, "leaves", F.col("lf.node_hash"), "n_entries"
@@ -576,8 +559,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     "stream_q2_cell_roots": Maintained(
         "stream_q2_cell_roots",
         dict(op="stream_q2_cell_roots", v=1),
-        _p._rr_q2_cell_leaves_partial,
-        _p._rr_q2_cell_leaves_merge,
+        _p.RR_Q2_CELL_LEAVES,
         "owner long, cell long, n_keys long, root string",
         read=lambda v: _cell_roots(
             v, "tokens", q2_leaf_hash(F.col("lf")), "n_keys"
@@ -589,8 +571,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     "stream_ohlc_bars": Maintained(
         "stream_ohlc_bars",
         dict(op="stream_ohlc_bars", v=1),
-        _p._ohlc_partial,
-        _p._ohlc_merge,
+        _p.OHLC_BARS,
         "user_id long, hour_start timestamp, open double, high double, "
         "low double, close double, n_ticks bigint",
         read=lambda v: v.select(
@@ -608,13 +589,11 @@ MAINTAINED: "dict[str, Maintained]" = {
     "stream_ivf_assign": Maintained(
         "stream_ivf_assign",
         dict(op="stream_ivf_assign", k=IVF_FACE_K, v=1),
-        _ivf_assign,
-        DataFrame.unionByName,
+        Monoid("ivf_assign", _ivf_assign, DataFrame.unionByName, key_col="cid"),
         "cid long, neighbor_id long, csim double",
         table="embeddings",
         source=_ivf_corpus,
         split="vec_id",
-        key_col="cid",
         model=_ivf_seed,
     ),
 }

@@ -8,8 +8,10 @@ never drift from what a full recomputation would produce. An analytics
 engine cannot prove that, but it can TEST it systematically — this
 module is that harness.
 
-For any maintained aggregate (a (partial_fn, merge_fn) monoid pair, the
-D19 machinery), `run_parity`:
+For any maintained aggregate declared as a monoid.Monoid (or as a
+range_tree.TileTree, which carries the same surface: the (partial,
+merge) pair, the view's key column and an optional finalize),
+`run_parity`:
 
   1. splits an event corpus into n ingest files (optionally TIME-SHUFFLED
      — the adversarial case: later batches carry earlier timestamps and
@@ -24,16 +26,21 @@ D19 machinery), `run_parity`:
      e.g. folding per-day digests into the A9 running chain).
 
 A ParityResult per point records row counts and equality; any mismatch
-carries the differing frames for diagnosis. tests/
-test_batch_incremental_parity.py runs the A7 state rollup, the A9
-day-digest chain, and the D19 count/sum/digest view through this
-harness under both ordered and shuffled splits.
+carries the differing frames for diagnosis.
+
+`SPECS` is the list of declarations under test, keyed by name. Each
+monoid is declared once, next to what reads it: the sketch day tiles
+beside their range readers (cms_range, quantile_sketch, distinct_sketch)
+and the drift monitor (drift), the A9 day digest beside block_db_chain
+(euclid), the tile trees in range_tree. The parity-only monoids and the
+ones only a stream face reads are declared here;
+tests/test_batch_incremental_parity.py runs every entry under both
+ordered and shuffled splits.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -41,7 +48,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from euclid_spark.functions.hashing import DIGEST_PRIME, digest_agg, digest_term
+from euclid_spark.monoid import Monoid
+from euclid_spark.operators.cms_range import CMS_DAY_TILES
+from euclid_spark.operators.distinct_sketch import LC_DAY_TILES
+from euclid_spark.operators.drift import DRIFT_TILES
+from euclid_spark.operators.euclid import DAY_DIGEST
+from euclid_spark.operators.quantile_sketch import HDR_DAY_TILES
 from euclid_spark.operators.range_response import erc20_entry_hex, erc20_leaf_hash
 from euclid_spark.operators.range_tree import (
     ERC20_REWARD_TREE,
@@ -60,19 +72,6 @@ from euclid_spark.streaming.ivm import (
     _rollup_partial,
 )
 from euclid_spark.streaming.sink import drain
-
-
-@dataclass(frozen=True)
-class ParitySpec:
-    """A maintained query under parity test: the (partial, merge) monoid
-    pair plus an optional finalize applied to BOTH sides before compare
-    (for derived results like the cumulative chain)."""
-
-    name: str
-    partial_fn: Callable[[DataFrame], DataFrame]
-    merge_fn: Callable[[DataFrame, DataFrame], DataFrame]
-    finalize: Callable[[pd.DataFrame], pd.DataFrame] | None = None
-    key_col: str = "day"  # the view's partition column
 
 
 @dataclass
@@ -100,7 +99,7 @@ def _canon(pdf: pd.DataFrame) -> pd.DataFrame:
 def run_parity(
     spark: SparkSession,
     events_pdf: pd.DataFrame,
-    spec: ParitySpec,
+    spec: Monoid,
     workdir: str,
     n_splits: int = 3,
     shuffle_seed: int | None = None,
@@ -128,8 +127,8 @@ def run_parity(
         sink = MaintainedAggregate(
             view_path=view,
             state_path=os.path.join(ck, "ivm_state.json"),
-            partial_fn=spec.partial_fn,
-            merge_fn=spec.merge_fn,
+            partial_fn=spec.partial,
+            merge_fn=spec.merge,
             key_col=spec.key_col,
         )
         # never compare a stream still running: one batch per file so far
@@ -144,7 +143,7 @@ def run_parity(
         # finalize runs on the RAW frames (it may need typed columns —
         # e.g. the merkle spec folds an array<string> leaf set that
         # canonicalization would stringify), then both sides canonicalize
-        batch_pd = spec.partial_fn(all_ev).toPandas()
+        batch_pd = spec.partial(all_ev).toPandas()
         view_pd = sink.view(spark).toPandas()
         if spec.finalize is not None:
             batch_pd = spec.finalize(batch_pd)
@@ -161,42 +160,6 @@ def run_parity(
             )
         )
     return results
-
-
-# --- the A9 day-digest chain as a maintained aggregate -----------------------
-
-def _day_digest_partial(events: DataFrame) -> DataFrame:
-    """A9's per-day block digest (block/mod.rs append unit) as a monoid
-    partial: digest + row count per day."""
-    term = digest_term(F.col("event_id").cast("long"), F.col("user_id").cast("long"))
-    return (
-        events.withColumn("day", F.to_date("ts"))
-        .groupBy("day")
-        .agg(digest_agg(term).alias("day_digest"), F.count("*").alias("n"))
-    )
-
-
-def _day_digest_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
-    return (
-        old.unionByName(partial)
-        .groupBy("day")
-        .agg(
-            F.pmod(F.sum("day_digest"), F.lit(DIGEST_PRIME))
-            .cast("long")
-            .alias("day_digest"),
-            F.sum("n").alias("n"),
-        )
-    )
-
-
-def _chain_finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Fold per-day digests into the A9 running chain commitment — the
-    derived result whose batch/incremental equality is the IVC property.
-    Day-level frame: pandas cumsum is exact (int64 · #days ≪ 2⁶³)."""
-    out = pdf.sort_values("day").reset_index(drop=True)
-    out["day_digest"] = out["day_digest"].astype("int64")
-    out["chain_digest"] = out["day_digest"].cumsum() % DIGEST_PRIME
-    return out
 
 
 # --- A2's distinct-key sets as a maintained aggregate ------------------------
@@ -316,104 +279,6 @@ def _merkle_finalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return out.drop(columns=["leaf_hashes"])
 
 
-def _cms_partial(events: DataFrame) -> DataFrame:
-    """PER-DAY count-min sketch tiles over the batch's user_ids (B44's
-    sketch keyed by day: CMS_ROWS × CMS_W bounded cells per day — the
-    textbook mergeable-sketch monoid, cells ADD). Day tiling is the
-    production layout: a day-range estimate is the cell-wise sum of its
-    tiles, and the maintained view rewrites only touched days."""
-    from euclid_spark.operators.relational import CMS_ROWS, CMS_W
-
-    r = F.explode(F.sequence(F.lit(0), F.lit(CMS_ROWS - 1))).alias("r")
-    h = F.md5(
-        F.concat_ws("|", F.col("r").cast("string"), F.col("user_id").cast("string"))
-    )
-    b = F.pmod(F.conv(F.substring(h, 1, 8), 16, 10).cast("long"), F.lit(CMS_W))
-    return (
-        events.withColumn("day", F.to_date("ts"))
-        .select("day", "user_id", r)
-        .select("day", "r", b.alias("b"))
-        .groupBy("day", "r", "b")
-        .agg(F.count("*").alias("c"))
-    )
-
-
-def _cms_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
-    return (
-        old.unionByName(partial)
-        .groupBy("day", "r", "b")
-        .agg(F.sum("c").alias("c"))
-    )
-
-
-# --- B47's quantile-sketch tiles as a maintained aggregate -------------------
-
-def _hdr_partial(events: DataFrame) -> DataFrame:
-    """B47's integer log-histogram as PER-DAY tiles over event values
-    (cents): a day-range quantile is the bucket-wise sum of its tiles —
-    the mergeable-sketch monoid, exactly like the CMS tiles."""
-    from euclid_spark.operators.quantile_sketch import hdr_sketch
-
-    vals = events.select(
-        F.to_date("ts").alias("day"),
-        F.floor(F.col("value") * 100).cast("long").alias("v"),
-    ).filter(F.col("v") >= 1)
-    return hdr_sketch(vals, "day", "v").withColumnRenamed("grp", "day")
-
-
-def _hdr_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
-    return (
-        old.unionByName(partial)
-        .groupBy("day", "nbits", "sub")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
-def _drift_partial(events: DataFrame) -> DataFrame:
-    """r13 drift tiles: the B47 sketch keyed per (event_type, day) —
-    the maintained state the streamed PSI face reads its two windows
-    from. Same additive-count monoid as the HDR tiles; NULL ts / NULL
-    value rows are excluded up front (they belong to no window).
-    Fixed-point values < 1 — zeros and negatives — land in a RESERVED
-    UNDERFLOW bucket (nbits=0, sub=0; r14, closing the r13-advice
-    population gap): the tile store now covers exactly the rows batch
-    B59 bins, so swapping batch for streamed monitoring never changes
-    n_ref/n_cur. The bucket is one more additive tile row — the
-    monoid, merge, and read are untouched."""
-    from euclid_spark.operators.quantile_sketch import hdr_sketch
-
-    vals = (
-        events.filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
-        .select(
-            "event_type",
-            F.to_date("ts").alias("day"),
-            F.floor(F.col("value") * 100).cast("long").alias("v"),
-        )
-    )
-    pos = hdr_sketch(vals.filter(F.col("v") >= 1), ["event_type", "day"], "v")
-    under = (
-        vals.filter(F.col("v") < 1)
-        .groupBy("event_type", "day")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            "event_type",
-            "day",
-            F.lit(0).cast("int").alias("nbits"),
-            F.lit(0).cast("long").alias("sub"),
-            "cnt",
-        )
-    )
-    return pos.unionByName(under)
-
-
-def _drift_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
-    return (
-        old.unionByName(partial)
-        .groupBy("event_type", "day", "nbits", "sub")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
 # --- A13's ERC-20 u256 reward view as a maintained aggregate -----------------
 
 def _erc20_partial(events: DataFrame) -> DataFrame:
@@ -437,26 +302,6 @@ def _erc20_partial(events: DataFrame) -> DataFrame:
 
 def _erc20_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
     return ERC20_REWARD_TREE.combine(old.unionByName(partial), ["day", "owner"])
-
-
-# --- B48's linear-counting bitmaps as a maintained aggregate -----------------
-
-def _lc_partial(events: DataFrame) -> DataFrame:
-    """B48's distinct-user bitmap as PER-DAY tiles: a day-range distinct
-    estimate is the bit_or of its tiles' words — the set-union monoid
-    in packed form (bit_or is idempotent, so replay is free)."""
-    from euclid_spark.operators.distinct_sketch import lc_bitmap
-
-    keyed = events.select(F.to_date("ts").alias("day"), "user_id")
-    return lc_bitmap(keyed, "day", "user_id").withColumnRenamed("grp", "day")
-
-
-def _lc_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
-    return (
-        old.unionByName(partial)
-        .groupBy("day", "word_idx")
-        .agg(F.bit_or("word").alias("word"))
-    )
 
 
 # --- A30/A31's response-commitment leaf sets as a maintained aggregate --------
@@ -641,62 +486,51 @@ def _eth_state_finalize(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _tile_spec(tree) -> ParitySpec:
-    """A tile tree's streaming upkeep, as its declaration derives it."""
-    return ParitySpec(tree.name, tree.partial, tree.merge)
+# --- the declarations ---------------------------------------------------------
+#
+# The sketch day tiles, the drift tiles, the A9 day digest and the tile
+# trees are declared next to what reads them and enter SPECS from there.
 
+IVM_VIEW = Monoid("ivm_count_sum_digest", _partial, _merge)
+STATE_ROLLUP = Monoid("state_rollup_a7", _rollup_partial, _rollup_merge)
+ETH_ACCOUNT_STATE = Monoid(
+    "eth_account_state", _eth_pairs_partial, _eth_pairs_merge,
+    key_col="pb", finalize=_eth_state_finalize,
+)
+Q2_DISTINCT_KEYS = Monoid("q2_distinct_keys_view", _keys_partial, _keys_merge)
+BLOCK_BOUNDS = Monoid("block_metadata_bounds", _bounds_partial, _bounds_merge)
+MERKLE_DAY_ROOT = Monoid(
+    "merkle_day_root", _merkle_partial, _merkle_merge, finalize=_merkle_finalize
+)
+ERC20_REWARD_VIEW = Monoid("erc20_reward_view", _erc20_partial, _erc20_merge)
+RR_CELL_LEAVES = Monoid(
+    "rr_cell_leaves", _rr_cell_leaves_partial, _rr_cell_leaves_merge
+)
+RR_Q2_CELL_LEAVES = Monoid(
+    "rr_q2_cell_leaves", _rr_q2_cell_leaves_partial, _rr_q2_cell_leaves_merge
+)
+OHLC_BARS = Monoid("ohlc_bars", _ohlc_partial, _ohlc_merge)
 
 SPECS = {
-    "ivm_count_sum_digest": ParitySpec(
-        "ivm_count_sum_digest", _partial, _merge
-    ),
-    "eth_account_state": ParitySpec(
-        "eth_account_state",
-        _eth_pairs_partial,
-        _eth_pairs_merge,
-        _eth_state_finalize,
-        key_col="pb",
-    ),
-    "state_rollup_a7": ParitySpec(
-        "state_rollup_a7", _rollup_partial, _rollup_merge
-    ),
-    "block_db_chain_a9": ParitySpec(
-        "block_db_chain_a9", _day_digest_partial, _day_digest_merge, _chain_finalize
-    ),
-    "q2_distinct_keys_view": ParitySpec(
-        "q2_distinct_keys_view", _keys_partial, _keys_merge
-    ),
-    "block_metadata_bounds": ParitySpec(
-        "block_metadata_bounds", _bounds_partial, _bounds_merge
-    ),
-    "merkle_day_root": ParitySpec(
-        "merkle_day_root", _merkle_partial, _merkle_merge, _merkle_finalize
-    ),
-    "count_min_sketch": ParitySpec(
-        "count_min_sketch", _cms_partial, _cms_merge
-    ),
-    "range_tree_tiles": _tile_spec(RANGE_TREE),
-    "hdr_quantile_tiles": ParitySpec(
-        "hdr_quantile_tiles", _hdr_partial, _hdr_merge
-    ),
-    "drift_tiles": ParitySpec(
-        "drift_tiles", _drift_partial, _drift_merge
-    ),
-    "lc_distinct_tiles": ParitySpec(
-        "lc_distinct_tiles", _lc_partial, _lc_merge
-    ),
-    "erc20_reward_view": ParitySpec(
-        "erc20_reward_view", _erc20_partial, _erc20_merge
-    ),
-    "ohlc_bars": ParitySpec("ohlc_bars", _ohlc_partial, _ohlc_merge),
-    "q2_key_tiles": _tile_spec(Q2_KEY_TREE),
-    "erc20_reward_tiles": _tile_spec(ERC20_REWARD_TREE),
-    "rr_cell_leaves": ParitySpec(
-        "rr_cell_leaves", _rr_cell_leaves_partial, _rr_cell_leaves_merge
-    ),
-    "rr_q2_cell_leaves": ParitySpec(
-        "rr_q2_cell_leaves",
-        _rr_q2_cell_leaves_partial,
-        _rr_q2_cell_leaves_merge,
-    ),
+    spec.name: spec
+    for spec in (
+        IVM_VIEW,
+        ETH_ACCOUNT_STATE,
+        STATE_ROLLUP,
+        DAY_DIGEST,
+        Q2_DISTINCT_KEYS,
+        BLOCK_BOUNDS,
+        MERKLE_DAY_ROOT,
+        CMS_DAY_TILES,
+        RANGE_TREE,
+        HDR_DAY_TILES,
+        DRIFT_TILES,
+        LC_DAY_TILES,
+        ERC20_REWARD_VIEW,
+        OHLC_BARS,
+        Q2_KEY_TREE,
+        ERC20_REWARD_TREE,
+        RR_CELL_LEAVES,
+        RR_Q2_CELL_LEAVES,
+    )
 }

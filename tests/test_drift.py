@@ -357,7 +357,7 @@ def test_drift_tiles_underflow_bucket_covers_batch_population(spark):
     deployment) land in the reserved (nbits=0, sub=0) tile instead of
     being dropped, so the tile store's row coverage equals batch
     B59's; NULL values stay excluded on both sides."""
-    from euclid_spark.streaming.parity import _drift_partial
+    from euclid_spark.operators.drift import DRIFT_TILES
 
     import datetime as dt
 
@@ -373,7 +373,7 @@ def test_drift_tiles_underflow_bucket_covers_batch_population(spark):
         ],
         "event_id long, event_type string, ts timestamp, value double",
     )
-    tiles = _drift_partial(ev).collect()
+    tiles = DRIFT_TILES.partial(ev).collect()
     total = sum(r["cnt"] for r in tiles)
     assert total == 4  # NULL value + NULL ts rows excluded
     under = {

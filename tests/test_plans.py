@@ -7,7 +7,14 @@ from __future__ import annotations
 
 import pytest
 
-from euclid_spark.operators import dedup, euclid, relational, similarity, textops
+from euclid_spark.operators import (
+    cms_range,
+    dedup,
+    euclid,
+    relational,
+    similarity,
+    textops,
+)
 from tests.conftest import SF_SMOKE
 
 
@@ -315,12 +322,18 @@ def test_unpivot_is_single_rollup(spark):
     assert n_shuffles <= 1, plan
 
 
-def test_cms_sketch_is_bounded_broadcast(spark):
-    """B44: the probe side joins the sketch via broadcast (the sketch
-    is 1024 cells by construction) and the top-N is TakeOrdered."""
-    plan = _plan(relational.heavy_hitters_cms(spark, SF_SMOKE))
-    assert "TakeOrderedAndProject" in plan
-    assert "BroadcastHashJoin" in plan
+@pytest.mark.parametrize(
+    "face",
+    [relational.heavy_hitters_cms, cms_range.cms_range_topk],
+    ids=lambda f: f.__name__,
+)
+def test_cms_sketch_is_bounded_broadcast(spark, face):
+    """B44 and B53 share one probe (relational.cms_probe): the top-N is
+    a TakeOrderedAndProject, and the probe side joins the sketch via
+    broadcast (CMS_ROWS × CMS_W cells by construction)."""
+    nodes = _physical_node_counts(face(spark, SF_SMOKE))
+    assert nodes.get("TakeOrderedAndProjectExec", 0) >= 1, nodes
+    assert nodes.get("BroadcastHashJoinExec", 0) >= 1, nodes
 
 
 def _newest_job_id(spark) -> int:
@@ -578,6 +591,30 @@ def _logical_node_counts(df) -> "dict[str, int]":
             walk(ch.apply(i))
 
     walk(df._jdf.queryExecution().optimizedPlan())
+    return counts
+
+
+def _physical_node_counts(df) -> "dict[str, int]":
+    """Class-name counts over the EXECUTED plan tree: children, inner
+    children (a cached relation's plan, subqueries) and AQE's current
+    and initial plans — every node the rendered plan prints, matched
+    as a node, not as text in its rendering."""
+    counts: dict[str, int] = {}
+
+    def walk(node) -> None:
+        name = node.getClass().getSimpleName()
+        counts[name] = counts.get(name, 0) + 1
+        kids = [
+            seq.apply(i)
+            for seq in (node.children(), node.innerChildren())
+            for i in range(seq.size())
+        ]
+        if name == "AdaptiveSparkPlanExec":  # a leaf that prints its plans
+            kids += [node.executedPlan(), node.initialPlan()]
+        for k in kids:
+            walk(k)
+
+    walk(df._jdf.queryExecution().executedPlan())
     return counts
 
 

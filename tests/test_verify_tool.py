@@ -20,6 +20,8 @@ sys.path.insert(0, str(REPO / "tools"))
 
 import verify_response as vr  # noqa: E402
 
+from euclid_spark import artifacts  # noqa: E402
+
 
 @pytest.fixture(scope="module")
 def responses(spark):
@@ -34,7 +36,7 @@ def responses(spark):
     _serve_erc20_response(spark, SF_SMOKE).count()
     targets = [
         (p, k)
-        for p, k in vr._discover(str(REPO / ".artifacts"), SF_SMOKE)
+        for p, k in vr._discover(artifacts.artifact_dir(), SF_SMOKE)
         if k in ("q2", "erc20")
     ]
     assert {k for _, k in targets} == {"q2", "erc20"}
@@ -138,7 +140,7 @@ def range_responses(spark):
 
     for fam in ("q2", "erc20"):
         _serve_range_response(spark, SF_SMOKE, fam).count()
-    targets = vr._discover(str(REPO / ".artifacts"), SF_SMOKE)
+    targets = vr._discover(artifacts.artifact_dir(), SF_SMOKE)
     out = {k: p for p, k in targets if k.endswith("_range")}
     assert set(out) == {"q2_range", "erc20_range"}
     return out
@@ -237,7 +239,6 @@ def test_manifest_discovery_matches_prover_paths(spark, responses, range_respons
     — a prover keying change either re-publishes a manifest (and this
     still passes) or breaks the serve side loudly; it can never
     silently un-verify a published response again."""
-    from euclid_spark import artifacts
     from euclid_spark.operators.merkle import _erc20_fp, _q2_fp
     from euclid_spark.operators.range_response import _fp
     from euclid_spark.sources.eth_proof import _fixture_fp, eth_proof_fixture
@@ -257,9 +258,17 @@ def test_manifest_discovery_matches_prover_paths(spark, responses, range_respons
         ),
     }
     got = dict(
-        (k, p) for p, k in vr._discover(str(REPO / ".artifacts"), SF_SMOKE)
+        (k, p) for p, k in vr._discover(artifacts.artifact_dir(), SF_SMOKE)
     )
     assert got == expected
+
+
+def test_default_artifacts_is_the_prover_root(tmp_path, monkeypatch):
+    """The tool looks where the prover publishes: its --artifacts
+    default is `artifacts.artifact_dir()`, redirected or not."""
+    assert vr.default_artifacts() == artifacts.artifact_dir()
+    monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path))
+    assert vr.default_artifacts() == artifacts.artifact_dir() == str(tmp_path)
 
 
 def test_discovery_skips_other_corpus_manifests(responses, tmp_path):
@@ -268,7 +277,7 @@ def test_discovery_skips_other_corpus_manifests(responses, tmp_path):
     corpus version never silently enters the default verify set."""
     import shutil as _sh
 
-    src = str(REPO / ".artifacts")
+    src = artifacts.artifact_dir()
     alt = str(tmp_path / "artifacts")
     _sh.copytree(src, alt)
     ev = _events()
@@ -294,7 +303,7 @@ def eth_fixture(spark):
 
     eth_proof_fixture(spark, SF_SMOKE).count()
     targets = dict(
-        (k, p) for p, k in vr._discover(str(REPO / ".artifacts"), SF_SMOKE)
+        (k, p) for p, k in vr._discover(artifacts.artifact_dir(), SF_SMOKE)
     )
     assert "eth_state" in targets
     return targets["eth_state"]
@@ -367,11 +376,11 @@ def test_discovery_is_path_shape_insensitive(responses):
     side too)."""
     import os
 
-    canonical = vr._discover(str(REPO / ".artifacts"), SF_SMOKE)
+    canonical = vr._discover(artifacts.artifact_dir(), SF_SMOKE)
     assert canonical  # the fixtures published at least one family
-    slashed = vr._discover(str(REPO / ".artifacts"), SF_SMOKE + "/")
+    slashed = vr._discover(artifacts.artifact_dir(), SF_SMOKE + "/")
     rel = vr._discover(
-        str(REPO / ".artifacts"), os.path.relpath(SF_SMOKE)
+        artifacts.artifact_dir(), os.path.relpath(SF_SMOKE)
     )
     assert slashed == canonical
     assert rel == canonical

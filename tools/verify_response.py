@@ -43,6 +43,7 @@ It also verifies the ARBITRARY-RANGE responses (A30-A33,
 Usage:
   python tools/verify_response.py <sf_dir> [--artifacts DIR]
           [--response PATH --kind q2|erc20|q2_range|erc20_range]
+(--artifacts defaults to $EUCLID_SPARK_ARTIFACTS, else <repo>/.artifacts)
 Exit 0 iff every revealed row of every checked response verifies.
 """
 
@@ -759,16 +760,24 @@ def verify_eth(fixture_path: str) -> dict:
     }
 
 
-def main() -> int:
-    ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("sf_dir", help="corpus dir holding events.parquet")
-    ap.add_argument(
-        "--artifacts",
-        default=os.path.join(
+def default_artifacts() -> str:
+    """Where the prover publishes: EUCLID_SPARK_ARTIFACTS, else the
+    repo's `.artifacts/` — the deployment rule of the engine's
+    `artifacts.artifact_dir()`, restated so the tool imports no prover
+    code (tests/test_verify_tool.py pins the two equal)."""
+    return os.environ.get(
+        "EUCLID_SPARK_ARTIFACTS",
+        os.path.join(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
             ".artifacts",
         ),
     )
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__)
+    ap.add_argument("sf_dir", help="corpus dir holding events.parquet")
+    ap.add_argument("--artifacts", default=default_artifacts())
     ap.add_argument("--response", help="explicit response parquet dir")
     ap.add_argument(
         "--kind",
