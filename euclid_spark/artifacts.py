@@ -298,20 +298,23 @@ def _footer_stats(sig: tuple) -> FooterStats:
 
 def read_rows(
     path: str,
-    filter: "list[list[tuple]] | None" = None,
+    filter: "list[list[tuple]] | pyarrow.compute.Expression | None" = None,
     columns: "list[str] | None" = None,
 ) -> "list[dict]":
     """The rows of a parquet path matching `filter`, as dicts of
     `columns` — a driver-side read with no Spark job. `filter` is in
     disjunctive normal form, a list of AND-lists of
-    (column, op, value) tuples (`pyarrow.parquet` filter syntax); the
-    reader prunes row groups by their footer statistics, so a filter
-    over an artifact's sort columns reads only the matching row
-    groups. Callers keep reads bounded by construction (tile covers,
-    edge windows, ≤ L keys): every returned row crosses to Python."""
+    (column, op, value) tuples (`pyarrow.parquet` filter syntax), or a
+    `pyarrow.compute.Expression`; the reader prunes row groups by their
+    footer statistics, so a filter over an artifact's sort columns
+    reads only the matching row groups. Callers keep reads bounded by
+    construction (tile covers, edge windows, ≤ L keys): every returned
+    row crosses to Python."""
     import pyarrow.parquet as pq
 
-    expr = pq.filters_to_expression(filter) if filter else None
+    expr = filter
+    if isinstance(filter, list):
+        expr = pq.filters_to_expression(filter) if filter else None
     table = _dataset(_signature(path)).to_table(filter=expr, columns=columns)
     return table.to_pylist()
 

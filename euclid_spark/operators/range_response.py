@@ -28,7 +28,10 @@ Construction — the reference's own aggregation shape, hash-only:
       the cell roots, and node (level k, pos c) commits cells
       [c·2^k, (c+1)·2^k) — merkle_levels' pairing with
       promotion-on-absent-sibling, so sparsely occupied cell space
-      degrades to identity promotions, never self-concats.
+      degrades to identity promotions, never self-concats. A promoted
+      node IS its only child's hash, so it is not stored: one row per
+      chain (range_tree.chains) — a cell root or a two-child node
+      with the run of promotions above it, (level, top, lo).
 
 - **The response for [b_min, b_max)**: the canonical segment-tree
   cover (≤ 2 tiles/level, range_tree.tile_cover) plus the two
@@ -53,14 +56,17 @@ Construction — the reference's own aggregation shape, hash-only:
   fetches, from the owner-clustered stores, the owner's O(log range)
   cover-tile roots, its rows in the two < TILE_SIZE edge slices, the
   revealed rows, the leaves of the ≤ L touched cells (≤ TILE_SIZE
-  rows each) and the ≤ L·depth cell-tree siblings; Python hashes the
-  leaves, refolds the touched cells and returns one local frame, so
-  no Spark job runs until the caller acts on it. Nothing reads the
-  range interior (asserted by the --events scale probe) except the
-  two reads bounded only by the owner's rows in the range: the ERC-20
-  revealed rows and the q2 L > Q2_L fallback. The stores hold no
-  value a bounded read can recompute (no leaf hash, no in-cell node),
-  and every stored digest as its 32 raw bytes (half the bytes of its
+  rows each) and the ≤ L·depth cell-tree siblings, each cell-tree
+  node matching the one chain row that holds it (`chain_filter`);
+  Python hashes the leaves, refolds the touched cells and
+  returns one local frame, so no Spark job runs until the caller acts
+  on it. Nothing reads the range interior (asserted by the --events
+  scale probe) except the two reads bounded only by the owner's rows
+  in the range: the ERC-20 revealed rows and the q2 L > Q2_L
+  fallback. The stores hold no value a bounded read can recompute
+  (no leaf hash, no in-cell node, no promotion copy — an owner's cell
+  tree is O(its cells) rows, not O(cells × depth)), and every stored
+  digest as its 32 raw bytes (half the bytes of its
   hex spelling); hex appears only in responses — the builds and the
   driver reads turn the bytes back into the lowercase hex the hashes
   are defined over, so every hash value and response is unchanged.
@@ -95,11 +101,13 @@ from euclid_spark.operators.range_tree import (
     Q2_L,
     TILE_SIZE,
     _cell,
-    _cover_filter,
     _edge_filter,
     _events_span,
     _probe_range,
     _q2_entries,
+    chain_filter,
+    chain_match,
+    chains,
     tile_cover,
     tree_depth,
 )
@@ -253,14 +261,16 @@ def range_commitment_paths(
                 leaves, pos in key (q2) or block (ERC-20) order per
                 (owner, cell); every leaf hash and in-cell node is a
                 function of them, refolded where it is needed
-    cell_nodes: (owner, level, pos, node_hash) — pos = cell >> level;
-                level 0 = the cell roots
+    cell_nodes: (owner, level, top, lo, node_hash) — one row per chain
+                (range_tree.chains): a cell root or a two-child node
+                at `level`, standing also for its promotion copies up
+                to `top`; `lo` is its smallest cell, and the node at
+                level k in [level, top] has pos lo >> k
     """
     from euclid_spark.operators.merkle import merkle_levels, merkle_roots
 
     # fine row groups: a driver read of one owner's few rows decodes a
     # 4 MB row group, not a 128 MB one (stores written before rebuild once)
-    fp = _fp(sf_dir, family, rewards_rate, contract, layout="bin_v2")
     fine = artifacts.FINE_ROW_GROUPS
 
     def build_leaves() -> DataFrame:
@@ -271,7 +281,11 @@ def range_commitment_paths(
         )
         return _stored(spark, sf_dir, rows, "cell", "pos")
 
-    leaves = artifacts.ensure(f"rr_{family}_leaves", fp, build_leaves, fine)
+    leaves = artifacts.ensure(
+        f"rr_{family}_leaves",
+        _fp(sf_dir, family, rewards_rate, contract, layout="bin_v2"),
+        build_leaves, fine,
+    )
 
     def build_celltree() -> DataFrame:
         # the cell roots, folded in memory: leaf hashes from the stored
@@ -284,16 +298,22 @@ def range_commitment_paths(
         )
         # sized to the max QUALIFYING cell, from the leaf store's footers
         mb = artifacts.footer_stats(leaves).span("cell")[1]
-        nodes, _ = merkle_levels(
+        nodes, depth = merkle_levels(
             roots, group="owner", levels=tree_depth(int(mb or 0) + 1)
         )
-        return _stored(spark, sf_dir, nodes, "level", "pos")
+        return _stored(
+            spark, sf_dir, chains(nodes, depth, cell="pos"), "lo", "level"
+        )
 
-    cells = artifacts.ensure(f"rr_{family}_celltree", fp, build_celltree, fine)
+    cells = artifacts.ensure(
+        f"rr_{family}_celltree",
+        _fp(sf_dir, family, rewards_rate, contract, layout="chain_v1"),
+        build_celltree, fine,
+    )
     # served metadata from parquet footers, read after the ensures — a
     # frame agg(max) would scan every node row, which grows with the
     # corpus
-    md = artifacts.footer_stats(cells).span("level")[1]
+    md = artifacts.footer_stats(cells).span("top")[1]
     return leaves, cells, 0 if md is None else int(md)
 
 
@@ -405,17 +425,17 @@ def _element_sequence(
         for t, fid in sorted(first.items(), key=lambda kv: kv[1]):
             elems.append((fid, _sha(t), {"edge_id": fid, "edge_tok": t}))
     if cover:
-        tile_rows = {
-            (r["level"], r["pos"]): r["node_hash"]
-            for r in _read_rows(
-                cells, _cover_filter(cover, own, col="pos"),
-                ["level", "pos", "node_hash"],
-            )
-        }
+        tile_rows = chain_match(
+            _read_rows(
+                cells, chain_filter(cover, owner),
+                ["level", "top", "lo", "node_hash"],
+            ),
+            cover,
+        )
         for k, c in cover:
             if (k, c) in tile_rows:  # empty subtree ⇒ no element
                 elems.append(
-                    (c * (1 << k) * TILE_SIZE, tile_rows[(k, c)],
+                    (c * (1 << k) * TILE_SIZE, tile_rows[(k, c)]["node_hash"],
                      {"k": k, "c": c})
                 )
     elems.sort(key=lambda t: t[0])
@@ -657,11 +677,16 @@ def _range_response(
     }
     cell_sibs: "dict[tuple[int, int], str]" = {}
     if need:
-        for n in _read_rows(
-            cells, _cover_filter(sorted(need), own, col="pos"),
-            ["level", "pos", "node_hash"],
-        ):
-            cell_sibs[(n["level"], n["pos"])] = n["node_hash"]
+        cell_sibs = {
+            kc: n["node_hash"]
+            for kc, n in chain_match(
+                _read_rows(
+                    cells, chain_filter(sorted(need), owner),
+                    ["level", "top", "lo", "node_hash"],
+                ),
+                need,
+            ).items()
+        }
 
     out_rows: "list[tuple]" = []
     for r in cov_rows:

@@ -31,9 +31,13 @@ read, and the driver fold. Everything else derives from it:
   exploded over levels 1..depth (`cell >> level`) into ONE `combine`
   per (level, cell, *keys), the streaming partial's shape; unioned with
   level 0 and stored as a fingerprint-keyed artifact. The keyless tree
-  is written sorted by (level, cell) in one file; a keyed tree is
-  written owner-clustered with fine row groups, so one owner's cover
-  read prunes to its rows.
+  is written dense, sorted by (level, cell) in one file. A keyed tree
+  stores one row per CHAIN (`chains`): a leaf or a two-child node with
+  the run of one-child promotion copies above it, as (owner, level,
+  top, lo, partial) — most owners hold a few cells, so the copies
+  would be most of the rows, O(entries × depth) instead of
+  O(entries). It is written owner-clustered by (owner, lo, level)
+  with fine row groups, so one owner's cover read prunes to its rows.
 - **Streaming upkeep** (`TileTree.partial` / `merge`, the D19 monoid
   pair with monoid.Monoid's surface, so the tree itself is its
   `parity.SPECS` entry and the declaration its `faces.MAINTAINED` row
@@ -42,12 +46,16 @@ read, and the driver fold. Everything else derives from it:
   is `combine`. The state keeps only fields that do not depend on how
   the stream splits into batches (`TileTree.invariant`).
 - **Range answers**: `tile_cover` gives ≤ 2 aligned tiles per level
-  plus two < TILE_SIZE edge windows. Owner-scoped and keyless requests
-  read exactly those rows with `artifacts.read_rows` and fold them on
-  the driver (`TileTree.driver_fold`); the all-owner form, whose output
-  grows with the owners, is a Spark plan (`TileTree.spark_answer`):
-  cover tiles ∪ `leaf`(edge rows by owner) → `combine` by owner → the
-  face's finisher. Nothing reads the range interior.
+  plus two < TILE_SIZE edge windows. In a chain store, tile (k, c) is
+  the one row with level ≤ k ≤ top and lo >> k = c — one term per
+  level for all of that level's tiles (`chain_filter`, `chain_cond`),
+  and `chain_match` maps rows back to tiles. Owner-scoped and keyless
+  requests read exactly the cover's rows with `artifacts.read_rows`
+  and fold them on the driver (`TileTree.driver_fold`); the all-owner
+  form, whose output grows with the owners, is a Spark plan
+  (`TileTree.spark_answer`): cover tiles ∪ `leaf`(edge rows by owner)
+  → `combine` by owner → the face's finisher. Nothing reads the range
+  interior.
 
 Oracle: the full-recompute SQL over the same range — the gate proves
 the tile path returns exactly what scanning the rows would.
@@ -148,14 +156,11 @@ def _by_level(cover: "list[tuple[int, int]]") -> "dict[int, list[int]]":
     return by_level
 
 
-def _cover_filter(
-    cover: "list[tuple[int, int]]", *conj: tuple, col: str = "cell"
-) -> list:
-    """(level, node) pairs as a `read_rows` filter: one
-    (level, `col` IN ...) conjunction per level, each AND-ed with
-    `conj`."""
+def _cover_filter(cover: "list[tuple[int, int]]") -> list:
+    """(level, cell) pairs of the dense keyless tree as a `read_rows`
+    filter: one (level, cell IN ...) conjunction per level."""
     return [
-        [*conj, ("level", "=", k), (col, "in", cells)]
+        [("level", "=", k), ("cell", "in", cells)]
         for k, cells in _by_level(cover).items()
     ]
 
@@ -166,16 +171,85 @@ def _edge_filter(edges: "list[tuple[int, int]]", *conj: tuple) -> list:
     return [[*conj, ("event_id", ">=", lo), ("event_id", "<", hi)] for lo, hi in edges]
 
 
-def _cover_cond(cover: "list[tuple[int, int]]") -> Column:
-    """The tile cover as a Spark predicate for the all-owner faces: an
-    OR of per-level (level, cell IN ...) terms."""
+# --- the owner-keyed chain layout ----------------------------------------------
+#
+# An owner-keyed tree stores one row per CHAIN: a leaf or a two-child
+# node together with the run of one-child nodes above it, each of which
+# holds its only child's payload (a promotion copy). The row is
+# (owner, level, top, lo, payload): `level` is the chain's bottom level,
+# `top` its highest, `lo` the smallest level-0 cell under it, and the
+# node at level k in [level, top] is (k, lo >> k). Most owners hold a
+# few cells, so the copies would otherwise be most of the rows, and
+# their share grows with the depth.
+
+
+def chains(nodes: DataFrame, depth: int, cell: str = "cell") -> DataFrame:
+    """The chain rows of a full owner-keyed node set `nodes` (owner,
+    level, `cell`, payload...) of levels 0..depth: the level-0 span
+    (lo, hi) of every node, then one row per (owner, lo, hi) at its
+    lowest level, with `top` its highest and that node's payload."""
+    payload = [c for c in nodes.columns if c not in ("owner", "level", cell)]
+    span = (
+        nodes.filter(F.col("level") == 0)
+        .select(
+            "owner", F.col(cell).alias("c0"),
+            F.explode(F.sequence(F.lit(0), F.lit(depth))).alias("level"),
+        )
+        .groupBy("owner", "level", F.expr("shiftright(c0, level)").alias("n"))
+        .agg(F.min("c0").alias("lo"), F.max("c0").alias("hi"))
+        .groupBy("owner", "lo", "hi")
+        .agg(F.min("level").alias("level"), F.max("level").alias("top"))
+        .withColumn("n", F.expr("shiftright(lo, level)"))
+    )
+    bottom = nodes.select("owner", "level", F.col(cell).alias("n"), *payload)
+    return span.join(bottom, ["owner", "level", "n"]).select(
+        "owner", "level", "top", "lo", *payload
+    )
+
+
+def chain_filter(nodes: "list[tuple[int, int]]", owner: int):
+    """`owner`'s (level, cell) nodes of a chain store as a `read_rows`
+    filter: per level k, the rows with level ≤ k ≤ top whose lo >> k
+    is one of that level's cells. Node (k, c) is held by exactly one
+    row — a nested chain with the same `lo` tops out below k — so a
+    cover reads ≤ 2 rows per level. One term per level, not per node:
+    the reader's cost grows with the filter's terms."""
+    import pyarrow.compute as pc
+
+    return (pc.field("owner") == owner) & reduce(
+        lambda a, b: a | b,
+        [
+            (pc.field("level") <= k) & (pc.field("top") >= k)
+            & pc.shift_right(pc.field("lo"), k).isin(cells)
+            for k, cells in _by_level(nodes).items()
+        ],
+    )
+
+
+def chain_cond(nodes: "list[tuple[int, int]]") -> Column:
+    """`chain_filter` over every owner, as a Spark predicate for the
+    all-owner faces."""
     return reduce(
         lambda a, b: a | b,
         [
-            (F.col("level") == k) & F.col("cell").isin(cells)
-            for k, cells in _by_level(cover).items()
+            (F.col("level") <= k) & (F.col("top") >= k)
+            & F.shiftright("lo", k).isin(cells)
+            for k, cells in _by_level(nodes).items()
         ],
     )
+
+
+def chain_match(
+    rows: "list[dict]", nodes: "list[tuple[int, int]]"
+) -> "dict[tuple[int, int], dict]":
+    """{(level, cell): row} for each of `nodes` some chain row holds."""
+    want = set(nodes)
+    out: "dict[tuple[int, int], dict]" = {}
+    for r in rows:
+        for k in range(r["level"], r["top"] + 1):
+            if (k, r["lo"] >> k) in want:
+                out[(k, r["lo"] >> k)] = r
+    return out
 
 
 def _edge_cond(edges: "list[tuple[int, int]]") -> Column:
@@ -246,6 +320,12 @@ def _max_event_id(spark: SparkSession, sf_dir: str) -> int:
     return int(_events_span(spark, sf_dir, "event_id")[1] or 0)
 
 
+def _depth(spark: SparkSession, sf_dir: str) -> int:
+    """A tile tree's depth: it covers the FULL block space, so any cover
+    stays ≤ 2 tiles per level."""
+    return tree_depth(_max_event_id(spark, sf_dir) // TILE_SIZE + 1)
+
+
 def _served_max_block(spark: SparkSession, sf_dir: str) -> int:
     """The corpus's max block from the served scalar tile tree's parquet
     FOOTER — the default-range probe every pinned face derives, without
@@ -311,12 +391,17 @@ class TileTree:
                     "event_id", _events_span(spark, sf_dir, "event_id"),
                 )
         elif self.keys:
-            # the keyed trees key on the owner, the events' user_id
+            # the keyed trees key on the owner, the events' user_id, and
+            # store one row per chain
             def build() -> DataFrame:
                 return artifacts.clustered(
-                    spark, self.levels(spark, sf_dir, contract, rate),
+                    spark,
+                    chains(
+                        self.levels(spark, sf_dir, contract, rate),
+                        _depth(spark, sf_dir),
+                    ),
                     "owner", _events_span(spark, sf_dir, "user_id"),
-                    "level", "cell",
+                    "lo", "level",
                 )
         else:
             # one file, in the (level, cell) order the cover read filters on
@@ -351,14 +436,14 @@ class TileTree:
         combine is associative, so a node combined straight from its
         level-0 cells equals the chain through its children; both
         branches read the one leaf exchange. The depth covers the FULL
-        block space (`_max_event_id`), so any cover stays ≤ 2 tiles per
-        level. A tree with a store builds from the served store."""
+        block space (`_depth`). A tree with a store builds from the
+        served store."""
         src = (
             self.frame(spark, sf_dir, contract, rate, store=True)
             if self.store
             else self.rows(load_events(spark, sf_dir), contract, rate)
         )
-        depth = tree_depth(_max_event_id(spark, sf_dir) // TILE_SIZE + 1)
+        depth = _depth(spark, sf_dir)
         by = ["cell", *self.keys]
         out = ["level", *by, *self.cols]
         leaf = self.leaf(src.withColumn("cell", _cell()), by)
@@ -400,11 +485,12 @@ class TileTree:
     ) -> "tuple[int, int, list, list] | None":
         """(b_min, b_max, cover, edges) of a range request, or None when
         the answer is empty: a tree without tiles, or a degenerate
-        range. The depth comes from the served tree's footers, read
-        after the ensure — an agg(max) would scan every tile row."""
+        range. The depth is the highest level (a chain store's `top`)
+        in the served tree's footers, read after the ensure — an
+        agg(max) would scan every tile row."""
         ml = artifacts.footer_stats(
             self.path(spark, sf_dir, contract, rate)
-        ).span("level")[1]
+        ).span("top" if self.keys else "level")[1]
         if ml is None:
             return None
         b_min, b_max = _probe_range(spark, sf_dir, b_min, b_max)
@@ -420,14 +506,21 @@ class TileTree:
         and of the input rows in the two edge windows, then `fold`. No
         Spark job runs."""
         own = () if owner is None else (("owner", "=", owner),)
-        tiles = (
-            artifacts.read_rows(
+        tiles = []
+        if cover and self.keys:
+            tiles = list(chain_match(
+                artifacts.read_rows(
+                    self.path(spark, sf_dir, contract, rate),
+                    chain_filter(cover, owner),
+                    ["level", "top", "lo", *self.cols],
+                ),
+                cover,
+            ).values())
+        elif cover:
+            tiles = artifacts.read_rows(
                 self.path(spark, sf_dir, contract, rate),
-                _cover_filter(cover, *own), list(self.cols),
+                _cover_filter(cover), list(self.cols),
             )
-            if cover
-            else []
-        )
         edge = None
         if edges:
             src = (
@@ -453,7 +546,7 @@ class TileTree:
         if cover:
             parts.append(
                 self.frame(spark, sf_dir, contract, rate)
-                .filter(_cover_cond(cover)).select(*cols)
+                .filter(chain_cond(cover)).select(*cols)
             )
         if edges:
             e = self.frame(spark, sf_dir, contract, rate, store=True).filter(
@@ -634,7 +727,7 @@ def _q2_fold(tiles: list, ev: "list | None") -> "list[dict]":
 
 Q2_KEY_TREE = TileTree(
     name="q2_key_tiles",
-    fp=dict(op="q2_key_tree", tile=TILE_SIZE, L=Q2_L, layout="owner_v5"),
+    fp=dict(op="q2_key_tree", tile=TILE_SIZE, L=Q2_L, layout="chain_v1"),
     axes=("contract",),
     keys=("owner",),
     rows=lambda ev, contract, rate: _q2_entries(ev, contract),
@@ -727,7 +820,7 @@ def _erc20_fold(tiles: list, ev: "list | None") -> "tuple | None":
 
 ERC20_REWARD_TREE = TileTree(
     name="erc20_reward_tiles",
-    fp=dict(op="erc20_reward_tree", tile=TILE_SIZE, layout="owner_v4"),
+    fp=dict(op="erc20_reward_tree", tile=TILE_SIZE, layout="chain_v1"),
     axes=("rate", "contract"),
     keys=("owner",),
     rows=_erc20_rows,

@@ -54,6 +54,7 @@ import glob
 import os
 import shutil
 import tempfile
+import time
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -122,15 +123,17 @@ def _write_feed(
     watermarked operator is specified against; its bounds come from one
     broadcast stats row, the only split that pays an extra job.
 
-    Spark-native (the input never leaves the executors): each split is
-    a filtered write, its single part file moved into the feed
-    directory. In production there is no feed construction at all — the
-    stream IS the arrival order; this harness only manufactures one.
+    Spark-native (the input never leaves the executors): ONE scan and
+    one single-task write partitioned by bucket, each bucket's part file
+    then moved into the feed directory and given its batch's mtime —
+    strictly ascending, since one job wrote them all and the file
+    source orders by mtime. In production there is no feed construction
+    at all — the stream IS the arrival order; this harness only
+    manufactures one.
 
-    Returns the number of feed files ACTUALLY written (r7 ADVICE): an
-    empty bucket may produce no part file — whether a zero-row write
-    emits one is an undocumented engine behavior — so callers hand this
-    count to `drain` instead of assuming N_SPLITS micro-batches."""
+    Returns the number of feed files written: an empty bucket writes
+    no partition and so no file, and callers hand this count to `drain`
+    instead of assuming N_SPLITS micro-batches."""
     os.makedirs(feed_dir, exist_ok=True)
     cols = df.columns
     if by_time:
@@ -142,18 +145,21 @@ def _write_feed(
         bucket = F.least(F.lit(N_SPLITS - 1), F.floor(frac * N_SPLITS).cast("int"))
     else:
         bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(N_SPLITS))
+    tmp = os.path.join(feed_dir, "_tmp")
+    df.select(*cols, bucket.alias("_b")).coalesce(1).write.partitionBy(
+        "_b"
+    ).mode("overwrite").format(fmt).save(tmp)
+    t0 = time.time_ns() - N_SPLITS * 10**9
     written = 0
     for i in range(N_SPLITS):
-        part_dir = os.path.join(feed_dir, f"_tmp{i}")
-        df.filter(bucket == i).select(*cols).coalesce(1).write.mode(
-            "overwrite"
-        ).format(fmt).save(part_dir)
-        parts = glob.glob(os.path.join(part_dir, "part-*"))
+        parts = glob.glob(os.path.join(tmp, f"_b={i}", "part-*"))
         if parts:
             ext = os.path.splitext(parts[0])[1]
-            os.replace(parts[0], os.path.join(feed_dir, f"b{i}{ext}"))
+            dst = os.path.join(feed_dir, f"b{i}{ext}")
+            os.replace(parts[0], dst)
+            os.utime(dst, ns=(t0 + i * 10**9,) * 2)
             written += 1
-        shutil.rmtree(part_dir, ignore_errors=True)
+    shutil.rmtree(tmp, ignore_errors=True)
     return written
 
 

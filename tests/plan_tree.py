@@ -1,0 +1,56 @@
+"""Executed-plan walks shared by the plan-shape tests: a plan is read
+as a TREE of nodes, never matched as text in its rendering (a rendered
+plan prints a cached relation's plan and AQE's initial plan too, and a
+node name can appear inside an expression's text)."""
+
+from __future__ import annotations
+
+
+def physical_nodes(df) -> list:
+    """Every node of `df`'s EXECUTED plan tree: children, inner
+    children (a cached relation's plan, subqueries) and AQE's current
+    and initial plans — every node the rendered plan prints."""
+    out: list = []
+
+    def walk(node) -> None:
+        out.append(node)
+        kids = [
+            seq.apply(i)
+            for seq in (node.children(), node.innerChildren())
+            for i in range(seq.size())
+        ]
+        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            # a leaf that prints its plans
+            kids += [node.executedPlan(), node.initialPlan()]
+        for k in kids:
+            walk(k)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def physical_node_counts(df) -> "dict[str, int]":
+    """Class-name counts over `physical_nodes`."""
+    counts: "dict[str, int]" = {}
+    for node in physical_nodes(df):
+        name = node.getClass().getSimpleName()
+        counts[name] = counts.get(name, 0) + 1
+    return counts
+
+
+def exchange_partitionings(df) -> "list[str]":
+    """The output partitioning of every shuffle exchange in the executed
+    plan tree."""
+    return [
+        node.outputPartitioning().getClass().getSimpleName().rstrip("$")
+        for node in physical_nodes(df)
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec"
+    ]
+
+
+def assert_no_single_partition(df) -> None:
+    """No shuffle exchange of `df` funnels its rows into one partition;
+    the walk must have seen at least one exchange."""
+    parts = exchange_partitionings(df)
+    assert parts, "no shuffle exchange found: the plan walk saw nothing"
+    assert "SinglePartition" not in parts, parts

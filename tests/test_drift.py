@@ -21,44 +21,11 @@ from euclid_spark.sources.jsonl import (
     src_jsonl_quarantine,
 )
 from tests.conftest import SF_SMOKE
+from tests.plan_tree import assert_no_single_partition
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def _exchange_partitionings(df) -> "list[str]":
-    """The output partitioning of every shuffle exchange in the executed
-    plan, read off the plan TREE — children, inner children (a cached
-    relation's plan, subqueries) and AQE's current and initial plans:
-    every node the rendered plan prints — not matched as text in its
-    rendering."""
-    found: "list[str]" = []
-
-    def walk(node) -> None:
-        name = node.getClass().getSimpleName()
-        if name == "ShuffleExchangeExec":
-            found.append(
-                node.outputPartitioning().getClass().getSimpleName().rstrip("$")
-            )
-        kids = [
-            seq.apply(i)
-            for seq in (node.children(), node.innerChildren())
-            for i in range(seq.size())
-        ]
-        if name == "AdaptiveSparkPlanExec":  # a leaf that prints its plans
-            kids += [node.executedPlan(), node.initialPlan()]
-        for k in kids:
-            walk(k)
-
-    walk(df._jdf.queryExecution().executedPlan())
-    return found
-
-
-def _assert_no_single_partition(df) -> None:
-    parts = _exchange_partitionings(df)
-    assert parts, "no shuffle exchange found: the plan walk saw nothing"
-    assert "SinglePartition" not in parts, parts
 
 
 # --- B59 PSI -----------------------------------------------------------
@@ -103,7 +70,7 @@ def test_psi_plan_two_scans_no_single_partition(spark):
     df = data_drift_psi(spark, SF_SMOKE)
     plan = _plan(df)
     assert plan.count("Scan parquet") == 2, plan.count("Scan parquet")
-    _assert_no_single_partition(df)
+    assert_no_single_partition(df)
     import re
 
     # every Window node must carry the type key as its partition spec —
@@ -132,7 +99,7 @@ def test_psi_quantile_plan_one_scan(spark):
     plan = _plan(df)
     assert plan.count("Scan parquet") == plan.count("InMemoryRelation"), plan
     assert plan.count("InMemoryTableScan") == 2, plan
-    _assert_no_single_partition(df)
+    assert_no_single_partition(df)
 
 
 # --- C55 epoch shards --------------------------------------------------
@@ -205,7 +172,7 @@ def test_epoch_shards_plan_two_level_prefix_sum(spark):
 
     df = curation_epoch_shards(spark, SF_SMOKE)
     plan = _plan(df)
-    _assert_no_single_partition(df)
+    assert_no_single_partition(df)
     assert not re.search(r"SortAggregate\(key=\[[^\]]", plan)
 
 

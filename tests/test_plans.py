@@ -16,6 +16,7 @@ from euclid_spark.operators import (
     textops,
 )
 from tests.conftest import SF_SMOKE
+from tests.plan_tree import assert_no_single_partition, physical_node_counts
 
 
 def _plan(df) -> str:
@@ -130,7 +131,7 @@ def test_preprocessing_pipeline_plan_shape(spark):
     df = preprocessing.preprocessing_pipeline(spark, SF_SMOKE)
     plan = _plan(df)
     assert "PushedFilters: [" in plan
-    assert "Exchange SinglePartition" not in plan
+    assert_no_single_partition(df)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
@@ -195,7 +196,7 @@ def test_pack_sequences_no_single_partition(spark):
     through Exchange SinglePartition."""
     df = textops.text_pack_sequences(spark, SF_SMOKE)
     plan = _plan(df)
-    assert "Exchange SinglePartition" not in plan
+    assert_no_single_partition(df)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
@@ -208,7 +209,7 @@ def test_temperature_sample_broadcasts_rates(spark):
     plan = _plan(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-    assert "Exchange SinglePartition" not in plan
+    assert_no_single_partition(df)
 
 
 def test_substring_spans_no_pairwise_join(spark):
@@ -331,7 +332,7 @@ def test_cms_sketch_is_bounded_broadcast(spark, face):
     """B44 and B53 share one probe (relational.cms_probe): the top-N is
     a TakeOrderedAndProject, and the probe side joins the sketch via
     broadcast (CMS_ROWS × CMS_W cells by construction)."""
-    nodes = _physical_node_counts(face(spark, SF_SMOKE))
+    nodes = physical_node_counts(face(spark, SF_SMOKE))
     assert nodes.get("TakeOrderedAndProjectExec", 0) >= 1, nodes
     assert nodes.get("BroadcastHashJoinExec", 0) >= 1, nodes
 
@@ -350,12 +351,37 @@ def _newest_job_id(spark) -> int:
         it.close()
 
 
+def _answered_levels(flt, rows, requested, where) -> "dict[tuple, int]":
+    """Rows per answered (owner, level) of a tree read. A dense tree's
+    row answers its own (level, cell). An owner-keyed chain store must
+    be read with a `chain_filter` filter (`requested` maps each one
+    built to its (owner, level, cell) nodes), and every row it returns
+    must hold at least one requested node — node (k, lo >> k) for k in
+    [level, top]; it counts once at each level it answers."""
+    from collections import Counter
+
+    if where[1].startswith("range_tree_tiles_"):  # the dense keyless tree
+        return Counter((r.get("owner"), r["level"]) for r in rows)
+    built = requested.get(id(flt))
+    assert built and built[0] is flt, (where, "not a chain_filter read", flt)
+    per_level: "Counter[tuple]" = Counter()
+    for r in rows:
+        hit = [
+            k for k in range(r["level"], r["top"] + 1)
+            if (r["owner"], k, r["lo"] >> k) in built[1]
+        ]
+        assert hit, (where, "a row holds no requested node", r)
+        per_level.update((r["owner"], k) for k in hit)
+    return per_level
+
+
 def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
     """A25 and the owner-scoped A26/A29/A30/A31 requests over a wide
     range at sf0.01: every artifact read goes through
-    artifacts.read_rows, tile-tree reads return ≤ 2 rows per (owner,
-    level) (the response's cell-tree reads, which also fetch the
-    opening-path siblings of ≤ L revealed rows, ≤ L per level), every
+    artifacts.read_rows, tile-tree reads return ≤ 2 rows per answered
+    (owner, level) (the response's cell-tree reads, which also fetch
+    the opening-path siblings of ≤ L revealed rows, ≤ L per level) and
+    no row that answers no requested node, every
     edge read returns only rows inside the two < TILE_SIZE edge
     windows, every other read of a response's leaf store is its
     ("cell", "in", touched) read of ≤ TOP_L cells with ≤ TILE_SIZE rows
@@ -395,6 +421,16 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
         return orig(path, filter, columns)
 
     monkeypatch.setattr(artifacts, "read_rows", spy)
+    requested: "dict[int, tuple]" = {}
+    chain_filter = range_tree.chain_filter
+
+    def chain_spy(nodes, owner):
+        flt = chain_filter(nodes, owner)
+        requested[id(flt)] = (flt, {(owner, k, c) for k, c in nodes})
+        return flt
+
+    for mod in (range_tree, range_response):
+        monkeypatch.setattr(mod, "chain_filter", chain_spy)
     edges = range_tree.tile_cover(b_min, b_max, 30)[1]
     assert len(edges) == 2  # both ends are partial cells
     tile_trees = ("range_tree_tiles_", "q2_key_tiles_", "erc20_reward_tiles_")
@@ -409,6 +445,11 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
         cell_reads = 0
         for path, flt, rows in reads:
             base = path.rstrip("/").rsplit("/", 1)[-1]
+            if base.startswith(tile_trees) or "_celltree_" in base:
+                per_level = _answered_levels(flt, rows, requested, (name, base))
+                cap = 2 if base.startswith(tile_trees) else max(2, TOP_L)
+                assert max(per_level.values(), default=0) <= cap, (name, base)
+                continue
             touched = [
                 v for conj in flt or [] for c, op, v in conj
                 if c == "cell" and op == "in"
@@ -422,10 +463,6 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
                 assert {c for _, c in per_cell} <= set(touched[0]), name
                 assert max(per_cell.values(), default=0) <= TILE_SIZE, name
                 continue
-            if base.startswith(tile_trees) or "_celltree_" in base:
-                per_level = Counter((r.get("owner"), r["level"]) for r in rows)
-                cap = 2 if base.startswith(tile_trees) else max(2, TOP_L)
-                assert max(per_level.values(), default=0) <= cap, (name, base)
             windows = [
                 tuple(v for c, op, v in conj if c == "event_id")
                 for conj in flt or []
@@ -594,30 +631,6 @@ def _logical_node_counts(df) -> "dict[str, int]":
     return counts
 
 
-def _physical_node_counts(df) -> "dict[str, int]":
-    """Class-name counts over the EXECUTED plan tree: children, inner
-    children (a cached relation's plan, subqueries) and AQE's current
-    and initial plans — every node the rendered plan prints, matched
-    as a node, not as text in its rendering."""
-    counts: dict[str, int] = {}
-
-    def walk(node) -> None:
-        name = node.getClass().getSimpleName()
-        counts[name] = counts.get(name, 0) + 1
-        kids = [
-            seq.apply(i)
-            for seq in (node.children(), node.innerChildren())
-            for i in range(seq.size())
-        ]
-        if name == "AdaptiveSparkPlanExec":  # a leaf that prints its plans
-            kids += [node.executedPlan(), node.initialPlan()]
-        for k in kids:
-            walk(k)
-
-    walk(df._jdf.queryExecution().executedPlan())
-    return counts
-
-
 def test_block_db_chain_plan_one_scan(spark):
     """r16: the per-day aggregate is pinned — the main chain join and
     the epoch-offset triangular join (two references) must ALL read the
@@ -626,9 +639,7 @@ def test_block_db_chain_plan_one_scan(spark):
     counts = _logical_node_counts(euclid.block_db_chain(spark, SF_SMOKE))
     assert counts.get("LogicalRelation", 0) == 0, counts
     assert counts.get("InMemoryRelation", 0) >= 2, counts
-    assert "Exchange SinglePartition" not in _plan(
-        euclid.block_db_chain(spark, SF_SMOKE)
-    )
+    assert_no_single_partition(euclid.block_db_chain(spark, SF_SMOKE))
 
 
 def test_pack_sequences_plan_one_scan(spark):

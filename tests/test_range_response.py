@@ -277,6 +277,68 @@ def _sha_hex(s: str) -> str:
     return hashlib.sha256(s.encode()).hexdigest()
 
 
+def _parent(lvl_rows: "dict[int, str]") -> "dict[int, str]":
+    """The next level of a promotion-paired tree level."""
+    up: "dict[int, list]" = {}
+    for p, h in sorted(lvl_rows.items()):
+        up.setdefault(p >> 1, []).append(h)
+    return {
+        p: _sha_hex(hs[0] + hs[1]) if len(hs) == 2 else hs[0]
+        for p, hs in up.items()
+    }
+
+
+def _cell_roots(lv: "list[dict]", family: str) -> "dict[tuple, str]":
+    """{(owner, cell): root} refolded from a hexed leaf store: leaf =
+    sha256(payload), then each (owner, cell)'s in-cell tree level by
+    level (positions checked contiguous). Sets each row's node_hash."""
+    trees: "dict[tuple, dict]" = {}
+    for r in lv:
+        payload = (
+            f"{r['event_id']}:{r['entry_reward_hex']}"
+            if family == "erc20"
+            else str(r["token_id"])
+        )
+        r["node_hash"] = _sha_hex(payload)
+        trees.setdefault((r["owner"], r["cell"]), {0: {}})[0][
+            r["pos"]
+        ] = r["node_hash"]
+    for t in trees.values():
+        assert sorted(t[0]) == list(range(len(t[0])))  # pos 0..n-1
+        while len(t[max(t)]) > 1:
+            t[max(t) + 1] = _parent(t[max(t)])
+    return {g: t[max(t)][0] for g, t in trees.items()}
+
+
+def _expand_chains(
+    rows: "list[dict]", cols: "list[str]"
+) -> "tuple[dict[tuple, tuple], list[tuple]]":
+    """({(owner, level, cell): payload}, chain bottoms) of a chain
+    store: each row stands for node (k, lo >> k) at every k in
+    [level, top], and no node is held by two rows."""
+    nodes: "dict[tuple, tuple]" = {}
+    bottoms = []
+    for r in rows:
+        bottoms.append((r["owner"], r["level"], r["lo"] >> r["level"]))
+        for k in range(r["level"], r["top"] + 1):
+            key = (r["owner"], k, r["lo"] >> k)
+            assert key not in nodes, key
+            nodes[key] = _norm([r[c] for c in cols])
+    return nodes, bottoms
+
+
+def _norm(v):
+    """A collected or pyarrow-read value with nested rows, dicts and
+    lists as tuples, so the two compare."""
+    if hasattr(v, "asDict"):
+        v = v.asDict(recursive=True)
+    if isinstance(v, dict):
+        return tuple(sorted((k, _norm(x)) for k, x in v.items()))
+    if isinstance(v, (list, tuple)):
+        return tuple(_norm(x) for x in v)
+    return v
+
+
 def test_stores_hold_binary_digests_and_answers_match_a_hex_recompute(spark):
     """The four commitment stores hold every digest (the cell tree's
     node_hash, and the ERC-20 entry_reward_hex payload) as 32 raw bytes
@@ -292,16 +354,6 @@ def test_stores_hold_binary_digests_and_answers_match_a_hex_recompute(spark):
     from euclid_spark.operators.range_response import range_commitment_paths
     from euclid_spark.operators.range_tree import TILE_SIZE, tile_cover
 
-    def parent(lvl_rows):
-        """The next level of a promotion-paired tree level."""
-        up: "dict[int, list]" = {}
-        for p, h in sorted(lvl_rows.items()):
-            up.setdefault(p >> 1, []).append(h)
-        return {
-            p: _sha_hex(hs[0] + hs[1]) if len(hs) == 2 else hs[0]
-            for p, hs in up.items()
-        }
-
     for family in ("q2", "erc20"):
         leaves, cells, depth = range_commitment_paths(spark, SF_SMOKE, family)
         leaf_schema = artifacts.footer_stats(leaves).schema
@@ -313,28 +365,14 @@ def test_stores_hold_binary_digests_and_answers_match_a_hex_recompute(spark):
             assert leaf_schema.field("entry_reward_hex").type == pa.binary()
         for path in (leaves, cells):
             assert "group_key" not in artifacts.footer_stats(path).schema.names
-        lv, ct = _store_rows(leaves), _store_rows(cells)
-        # leaf = sha256(payload) over the hexed store, then each
-        # (owner, cell)'s in-cell tree level by level to its root
-        trees: "dict[tuple, dict]" = {}
-        for r in lv:
-            payload = (
-                f"{r['event_id']}:{r['entry_reward_hex']}"
-                if family == "erc20"
-                else str(r["token_id"])
-            )
-            r["node_hash"] = _sha_hex(payload)
-            trees.setdefault((r["owner"], r["cell"]), {0: {}})[0][
-                r["pos"]
-            ] = r["node_hash"]
-        for t in trees.values():
-            assert sorted(t[0]) == list(range(len(t[0])))  # pos 0..n-1
-            while len(t[max(t)]) > 1:
-                t[max(t) + 1] = parent(t[max(t)])
-        assert trees
-        roots = {g: t[max(t)][0] for g, t in trees.items()}
+        lv = _store_rows(leaves)
+        roots = _cell_roots(lv, family)
+        assert roots
+        # the chain rows expanded to every (owner, level, pos) node
         tree = {
-            (r["owner"], r["level"], r["pos"]): r["node_hash"] for r in ct
+            k: h for k, (h,) in _expand_chains(
+                _store_rows(cells), ["node_hash"]
+            )[0].items()
         }
         # cell-tree level 0 = the refolded cell roots, and nothing else
         assert {
@@ -345,7 +383,7 @@ def test_stores_hold_binary_digests_and_answers_match_a_hex_recompute(spark):
         for (o, k, p), h in tree.items():
             by_owner.setdefault(o, {}).setdefault(k, {})[p] = h
         assert all(
-            t[k + 1] == parent(t[k])
+            t[k + 1] == _parent(t[k])
             for t in by_owner.values()
             for k in range(len(t) - 1)
         )
@@ -389,6 +427,102 @@ def test_stores_hold_binary_digests_and_answers_match_a_hex_recompute(spark):
         assert checked >= 2, family
 
 
+@pytest.fixture(scope="module")
+def deep_corpus(spark, tmp_path_factory) -> "tuple[str, str]":
+    """(corpus, artifact root): test_range_tree's deep-tree corpus
+    (≥ 10 levels, most level-0 cells empty) and a private artifact root
+    for its stores."""
+    from tests.test_range_tree import write_wide_corpus
+
+    root = tmp_path_factory.mktemp("deep")
+    return write_wide_corpus(spark, str(root / "wide")), str(root / "_arts")
+
+
+def _chain_stores(spark, monkeypatch, corpus, deep_corpus) -> list:
+    """Per owner-keyed store at `corpus` ("smoke" or "deep"): (name,
+    the chain rows expanded to nodes, the chain bottoms, the full node
+    set). The full node set is `levels()` for the two keyed tile trees,
+    and for the two cell trees the promotion-paired levels 0..depth
+    refolded here from the leaf store's payloads."""
+    from euclid_spark import artifacts
+    from euclid_spark.operators.range_response import range_commitment_paths
+    from euclid_spark.operators.range_tree import (
+        ERC20_REWARD_TREE,
+        Q2_KEY_TREE,
+        tree_depth,
+    )
+
+    sf = SF_SMOKE
+    if corpus == "deep":
+        sf, arts = deep_corpus
+        monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", arts)
+    out = []
+    for tree in (Q2_KEY_TREE, ERC20_REWARD_TREE):
+        cols = list(tree.cols)
+        nodes, bottoms = _expand_chains(
+            artifacts.read_rows(tree.path(spark, sf)), cols
+        )
+        full = {
+            (r["owner"], r["level"], r["cell"]): _norm([r[c] for c in cols])
+            for r in tree.levels(spark, sf).collect()
+        }
+        out.append((tree.name, nodes, bottoms, full))
+    for family in ("q2", "erc20"):
+        leaves, cells, _ = range_commitment_paths(spark, sf, family)
+        nodes, bottoms = _expand_chains(_store_rows(cells), ["node_hash"])
+        roots = _cell_roots(_store_rows(leaves), family)
+        depth = tree_depth(max(c for _, c in roots) + 1)
+        by_owner: "dict[int, dict]" = {}
+        for (o, c), h in roots.items():
+            by_owner.setdefault(o, {})[c] = h
+        full = {}
+        for o, lvl in by_owner.items():
+            for k in range(depth + 1):
+                full.update(((o, k, p), (h,)) for p, h in lvl.items())
+                lvl = _parent(lvl)
+        out.append((f"rr_{family}_celltree", nodes, bottoms, full))
+    return out
+
+
+@pytest.mark.parametrize("corpus", ["smoke", "deep"])
+def test_chain_stores_expand_to_full_node_sets(
+    spark, monkeypatch, deep_corpus, corpus
+):
+    """The four owner-keyed stores (the two keyed tile trees, the two
+    cell trees) hold one row per chain; expanding each row to node
+    (k, lo >> k) at every k in [level, top] gives the full node set
+    exactly — every node once, with its payload — at SF_SMOKE and on
+    a ≥ 10-level tree."""
+    for name, nodes, _, full in _chain_stores(
+        spark, monkeypatch, corpus, deep_corpus
+    ):
+        assert full and nodes == full, name
+        if corpus == "deep":
+            assert max(k for _, k, _ in full) >= 10, name
+
+
+@pytest.mark.parametrize("corpus", ["smoke", "deep"])
+def test_chain_stores_hold_no_copies(spark, monkeypatch, deep_corpus, corpus):
+    """No stored row above level 0 is a promotion copy: both children
+    of every chain bottom at level > 0 are nodes, and the stores hold
+    exactly one row per leaf or two-child node of the full node set."""
+    for name, nodes, bottoms, full in _chain_stores(
+        spark, monkeypatch, corpus, deep_corpus
+    ):
+        for o, k, c in bottoms:
+            if k > 0:
+                assert (o, k - 1, 2 * c) in nodes, (name, o, k, c)
+                assert (o, k - 1, 2 * c + 1) in nodes, (name, o, k, c)
+        real = [
+            (o, k, c) for o, k, c in full
+            if k == 0
+            or ((o, k - 1, 2 * c) in full and (o, k - 1, 2 * c + 1) in full)
+        ]
+        assert len(bottoms) == len(real), name
+        if corpus == "deep":
+            assert len(bottoms) < len(full) / 2, (name, len(bottoms), len(full))
+
+
 def test_commitment_stores_are_byte_identical_across_builds(
     spark, tmp_path, monkeypatch
 ):
@@ -396,9 +530,11 @@ def test_commitment_stores_are_byte_identical_across_builds(
     and the trees' two input-row stores twice, each time into an empty
     artifact root, writes the same part files byte for byte: the owner
     and event_id clustering is a function of the data, not of a
-    sampled bound."""
+    sampled bound, and the chain stores' (owner, lo, level) sort is a
+    total order. The four owner-keyed trees are in the chain layout."""
     import os
 
+    from euclid_spark import artifacts
     from euclid_spark.cache import release_all
     from euclid_spark.operators.range_response import range_commitment_paths
     from euclid_spark.operators.range_tree import (
@@ -418,6 +554,10 @@ def test_commitment_stores_are_byte_identical_across_builds(
         parts: "dict[tuple, bytes]" = {}
         for path in paths:
             store = os.path.basename(path).rsplit("_", 1)[0]
+            if store.endswith(("_tiles", "_celltree")):
+                names = set(artifacts.footer_stats(path).schema.names)
+                assert {"owner", "level", "top", "lo"} <= names, (store, names)
+                assert not {"cell", "pos"} & names, (store, names)
             for f in os.listdir(path):
                 if f.startswith("part-"):
                     # part-<task>-<write uuid>-c000...: key on the task

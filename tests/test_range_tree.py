@@ -175,7 +175,7 @@ def test_q2_face_scan_shape_and_param_equivalence(spark):
     from euclid_spark.operators.range_tree import q2_range_tree_topl
 
     tiles = Q2_KEY_TREE.frame(spark, SF_SMOKE)
-    max_level = int(tiles.agg(F.max("level")).collect()[0][0])
+    max_level = int(tiles.agg(F.max("top")).collect()[0][0])
     mb = int(
         RANGE_TREE.frame(spark, SF_SMOKE).agg(F.max("max_block")).collect()[0][0]
     )
@@ -277,7 +277,7 @@ def test_erc20_reward_tree_scan_shape_and_params(spark):
     from euclid_spark.operators.range_tree import erc20_range_tree_reward
 
     tiles = ERC20_REWARD_TREE.frame(spark, SF_SMOKE)
-    max_level = int(tiles.agg(F.max("level")).collect()[0][0])
+    max_level = int(tiles.agg(F.max("top")).collect()[0][0])
     face = erc20_range_tree_reward(spark, SF_SMOKE).toPandas()
     assert len(face) > 0
     b_min, b_max = int(face["b_min"].iloc[0]), int(face["b_max"].iloc[0])
@@ -366,7 +366,7 @@ def test_q2_tile_first_occurrence_matches_leaf_scan(spark):
     b_min = int(face["b_min"].iloc[0])
     b_max = int(face["b_max"].iloc[0])
     max_level = int(
-        Q2_KEY_TREE.frame(spark, SF_SMOKE).agg(F.max("level")).collect()[0][0]
+        Q2_KEY_TREE.frame(spark, SF_SMOKE).agg(F.max("top")).collect()[0][0]
     )
     cover, _ = tile_cover(b_min, b_max, max_level)
     cov_cells = [(c << k, ((c + 1) << k) - 1) for k, c in cover]
@@ -539,12 +539,10 @@ def test_stream_upkeep_equals_batch_levels(spark, tree):
 _TREES = [RANGE_TREE, Q2_KEY_TREE, ERC20_REWARD_TREE]
 
 
-def _wide_corpus(spark, tmp_path, monkeypatch) -> str:
-    """SF_SMOKE's events with event_id × 300 under a private artifact
-    root: ~1 172 level-0 cells (not a power of two), most of them empty,
-    so the tree is ≥ 10 levels deep — far above _RT_LEVELS."""
-    monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path / "_arts"))
-    out = str(tmp_path / "wide")
+def write_wide_corpus(spark, out: str) -> str:
+    """SF_SMOKE's events with event_id × 300 as the corpus `out`:
+    ~1 172 level-0 cells (not a power of two), most of them empty, so
+    the tree is ≥ 10 levels deep — far above _RT_LEVELS."""
     (
         spark.read.parquet(f"{SF_SMOKE}/events.parquet")
         .withColumn("event_id", F.col("event_id") * 300)
@@ -552,6 +550,12 @@ def _wide_corpus(spark, tmp_path, monkeypatch) -> str:
         .write.parquet(f"{out}/events.parquet")
     )
     return out
+
+
+def _wide_corpus(spark, tmp_path, monkeypatch) -> str:
+    """`write_wide_corpus` under a private artifact root."""
+    monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path / "_arts"))
+    return write_wide_corpus(spark, str(tmp_path / "wide"))
 
 
 def _chain_levels(spark, tree, sf_dir):

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 
@@ -68,10 +69,21 @@ def main() -> int:
     src = args[0] if args and not args[0].startswith("-") else "/root/testdata/sf0.001"
     only = set(args[1:]) if args else set()
 
+    # the null-injected corpus and its artifact store live here; removed
+    # on any exit, an exception included
+    scratch = tempfile.mkdtemp(prefix="nullx_")
+    try:
+        return _sweep(src, only, json_out, scratch)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+def _sweep(src: str, only: "set[str]", json_out: "str | None", scratch: str) -> int:
+    """Null-inject `src` into `scratch`, then run every registry face
+    (or those in `only`) against its DuckDB oracle on that corpus."""
     import duckdb
     from pyspark.sql import functions as F
 
-    scratch = tempfile.mkdtemp(prefix="nullx_")
     os.environ["EUCLID_SPARK_ARTIFACTS"] = os.path.join(scratch, "_arts")
 
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

@@ -24,8 +24,8 @@ Usage: python tools/scale_probe.py [op ...]   (default: the linear set)
 Writes one JSON line; temp corpus lives under /tmp and is removed.
 Per op and scale it also records, from the warm run, each artifact the
 face served (every path `artifacts.ensure` returned) with its bytes on
-disk and its parquet row-group count — the bytes a bounded read can
-decode grow with these, not with the rows it returns.
+disk, its parquet row-group count and its row count — the bytes a
+bounded read can decode grow with these, not with the rows it returns.
 """
 
 from __future__ import annotations
@@ -129,7 +129,7 @@ def _time(qs, name: str, sf_dir: str) -> float:
 
 
 def _served(run):
-    """(run(), {artifact name: {"bytes", "row_groups"}}) for every
+    """(run(), {artifact name: {"bytes", "row_groups", "rows"}}) for every
     artifact path `artifacts.ensure` returns while `run` runs."""
     import pyarrow.parquet as pq
 
@@ -153,11 +153,11 @@ def _served(run):
             for f in fs
             if not f.startswith(("_", "."))
         ] if os.path.isdir(path) else [path]
+        mds = [pq.ParquetFile(f).metadata for f in files]
         arts[os.path.basename(path).rsplit("_", 1)[0]] = {
             "bytes": sum(os.path.getsize(f) for f in files),
-            "row_groups": sum(
-                pq.ParquetFile(f).metadata.num_row_groups for f in files
-            ),
+            "row_groups": sum(md.num_row_groups for md in mds),
+            "rows": sum(md.num_rows for md in mds),
         }
     return out, arts
 
