@@ -32,39 +32,60 @@ string-valued compare pins every byte. tests/test_merkle.py re-folds
 every emitted path back to the root (the verifier a proof consumer
 would run).
 
-Scale shape: building level k+1 from level k is one hash aggregation on
-(group, pos>>1) — log₂(max group size) geometrically-shrinking
-shuffles, each map-side combinable pairing. The path join is
-leaves × levels on (group, level, sibling_pos) — n·log n rows, plain
-shuffle hash join, no window over a whole group and nothing
-driver-side. Each level is persisted (total cached volume ≤ 2n rows)
-so the final union of levels reads every level exactly once.
+Scale shape: the tree is built in one grouped pass — one shuffle
+collects each group's leaves sorted by pos, every level is folded from
+the one below inside that group's row (array higher-order functions),
+and the levels explode back to node rows. `LEVELS` bounds a group at
+2^16 leaves, so one group's row stays ≤ 2^17 digests (< 10 MB) while
+the groups fold in parallel; nothing is pinned and the plan does not
+grow with the depth. The path join is leaves × levels on (group,
+level, sibling_pos) — n·log n rows, plain shuffle hash join, no window
+over a whole group and nothing driver-side.
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from euclid_spark.catalog import cached_parquet
 
-from euclid_spark.cache import local_checkpoint_tracked, persist_tracked
 
 # Supports groups up to 2^16 = 65,536 entries; raise for bigger groups
-# (the builder is O(log n) rounds either way — extra levels past the
-# true root are identity promotions).
+# (extra levels past the true root are identity promotions). It also
+# bounds one group's row in the grouped build: ≤ 2^17 digests.
 LEVELS = 16
 
-# Tree levels folded into one checkpoint (same fixed-cost batching as
-# operators/mpt_ingest.LEVELS_PER_ROUND): only every k-th level is
-# materialized; the levels between stay LAZY, so the final union
-# re-runs at most k-1 aggregation stages from the last checkpoint for
-# each of them — cheap, because level sizes shrink geometrically (the
-# whole re-run chain costs less than the checkpointed level itself),
-# while the per-level eager-checkpoint JOB cost (the dominant local
-# fixed cost: one job per level) drops to one per k levels.
-LEVELS_PER_CKPT = 4
+
+def _parents(cur: Column) -> Column:
+    """One group's level k+1 from its level k, an array of
+    (pos, node_hash) sorted by pos: two nodes whose pos >> 1 match fold
+    to sha256(left_hex || right_hex) at that pos; a node whose sibling
+    is absent is promoted unchanged. Siblings are found by pos, never
+    by array index, so sparse positions fold like contiguous ones."""
+
+    def parent(x: Column, i: Column) -> Column:
+        up = F.shiftright(x["pos"], 1)
+        prv, nxt = F.get(cur, i - 1), F.get(cur, i + 1)
+        return (
+            # the right child of a pair: its left sibling emits the parent
+            F.when(F.shiftright(prv["pos"], 1) == up, F.lit(None))
+            .when(
+                F.shiftright(nxt["pos"], 1) == up,
+                F.struct(
+                    up.alias("pos"),
+                    F.sha2(F.concat(x["node_hash"], nxt["node_hash"]), 256)
+                    .alias("node_hash"),
+                ),
+            )
+            .otherwise(
+                F.struct(up.alias("pos"), x["node_hash"].alias("node_hash"))
+            )
+        )
+
+    return F.filter(F.transform(cur, parent), lambda y: y.isNotNull())
 
 
 def merkle_levels(
@@ -72,10 +93,11 @@ def merkle_levels(
     group: "str | tuple[str, ...]" = "group_key",
     levels: int | None = None,
 ) -> "tuple[DataFrame, int]":
-    """leaves: (group, pos, node_hash) with pos contiguous 0..n-1 per
-    group; `group` is one column or a tuple of them (a composite key).
-    Returns (nodes, depth): every tree node as
-    (group, level, pos, node_hash), level 0 = leaves, level `depth` =
+    """leaves: (group, pos, node_hash) with pos distinct per group —
+    contiguous 0..n-1 or sparse (the cell tree's occupied cells); an
+    absent sibling promotes. `group` is one column or a tuple of them
+    (a composite key). Returns (nodes, depth): every tree node as
+    (group, pos, node_hash, level), level 0 = leaves, level `depth` =
     the root row (pos 0 per group).
 
     `levels=None` sizes the tree from the data: depth =
@@ -83,18 +105,18 @@ def merkle_levels(
     like the components loop). The fixed-`LEVELS` oracle is unaffected:
     promotion makes every level above the true root the identity.
 
-    Every LEVELS_PER_CKPT-th level is **eagerly localCheckpoint-ed**
-    (lineage stays ≤ LEVELS_PER_CKPT chained aggregations per union
-    branch — never the O(depth²) plan nesting an unchecked chain
-    builds), and the levels between ride lazily on the last checkpoint.
-    On a real cluster prefer reliable checkpoint() (survives executor
-    loss) exactly as in operators/components.py."""
+    One grouped pass: each group's leaves are collected sorted by pos
+    (the one shuffle), every level is folded from the one below inside
+    the group's row (`_parents`), and the levels are exploded back to
+    node rows. Nothing is pinned and the plan does not grow with the
+    depth."""
     keys = [group] if isinstance(group, str) else list(group)
-    lvl = local_checkpoint_tracked(leaves.select(*keys, "pos", "node_hash"))
+    lv = leaves.select(*keys, "pos", "node_hash")
     if levels is None:
-        mx = (
-            lvl.groupBy(*keys).count().agg(F.max("count").alias("m")).collect()
-        )[0]["m"] or 1
+        # a top-1 over the group counts: one shuffle, no second one to
+        # gather a global max
+        top = lv.groupBy(*keys).count().orderBy(F.desc("count")).first()
+        mx = top["count"] if top else 1
         levels = max(1, math.ceil(math.log2(mx))) if mx > 1 else 1
         # The chained-CTE oracles (merkle_proof_sql) are emitted with the
         # fixed LEVELS bound; promotion makes levels ABOVE the true root
@@ -108,34 +130,42 @@ def merkle_levels(
                 f"oracle bound LEVELS={LEVELS}; raise merkle.LEVELS so the "
                 "chained-CTE oracles stay in sync"
             )
-    out = [lvl.withColumn("level", F.lit(0))]
-    for k in range(1, levels + 1):
-        pos = F.col("pos")
-        lvl = (
-            lvl.groupBy(*keys, F.shiftright(pos, 1).alias("pos"))
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.min(F.when(pos % 2 == 0, F.col("node_hash"))).alias("lh"),
-                F.min(F.when(pos % 2 == 1, F.col("node_hash"))).alias("rh"),
-            )
-            .select(
-                *keys,
-                "pos",
-                F.when(
-                    F.col("cnt") == 2, F.sha2(F.concat("lh", "rh"), 256)
-                )
-                # unpaired tail: promote unchanged
-                .otherwise(F.coalesce("lh", "rh"))
-                .alias("node_hash"),
-            )
-        )
-        if k % LEVELS_PER_CKPT == 0 or k == levels:
-            lvl = local_checkpoint_tracked(lvl)
-        out.append(lvl.withColumn("level", F.lit(k)))
-    nodes = out[0]
-    for o in out[1:]:
-        nodes = nodes.unionByName(o)
+    # level k of the group is element k of `tree`; the repeated zeros
+    # only count the folds
+    tree = F.aggregate(
+        F.array_repeat(F.lit(0), levels),
+        F.array(F.array_sort(F.collect_list(F.struct("pos", "node_hash")))),
+        lambda acc, _: F.concat(acc, F.array(_parents(F.element_at(acc, -1)))),
+    )
+    nodes = (
+        lv.groupBy(*keys)
+        .agg(tree.alias("tree"))
+        .select(*keys, F.posexplode("tree").alias("level", "nodes"))
+        .select(*keys, F.inline("nodes"), "level")
+    )
     return nodes, levels
+
+
+def merkle_levels_local(
+    hashes: "list[str]",
+) -> "tuple[dict[tuple[int, int], str], int]":
+    """(nodes, depth): `merkle_levels` for one group on the driver — the
+    tree over `hashes`, its leaves in pos order 0..n-1, as
+    {(level, pos): hash} and its root's level. Same rule: pair
+    (2p, 2p + 1), promote an unpaired tail node; it stops at the root
+    instead of promoting past it."""
+    nodes = {(0, p): h for p, h in enumerate(hashes)}
+    lvl, k = hashes, 0
+    while len(lvl) > 1:
+        lvl = [
+            hashlib.sha256((lvl[i] + lvl[i + 1]).encode()).hexdigest()
+            if i + 1 < len(lvl)
+            else lvl[i]
+            for i in range(0, len(lvl), 2)
+        ]
+        k += 1
+        nodes.update(((k, p), h) for p, h in enumerate(lvl))
+    return nodes, k
 
 
 def merkle_roots(
@@ -176,7 +206,7 @@ def merkle_membership_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     ARTIFACT: a Merkle tree over a table version is precisely the
     reference's persistent state DB (mrp2-utils/src/merkle_tree/mod.rs
     — the tree is STORED; proofs are lookups against it, not rebuilds).
-    Built once per customer.parquet version by the log₂-round level
+    Built once per customer.parquet version by the one-pass level
     builder, then every proof query is the n·log n sibling join against
     two parquet scans. Deterministic (sha2 over canonical order), so
     build-then-serve equals recompute."""
@@ -204,9 +234,7 @@ def merkle_membership_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "merkle_nodes_customer",
         fp,
-        lambda: merkle_levels(
-            persist_tracked(leaves).select("group_key", "pos", "node_hash")
-        )[0],
+        lambda: merkle_levels(leaves)[0],
     )
     depth = _served_depth("merkle_nodes_customer", fp)
     return merkle_opening_paths(
@@ -400,7 +428,7 @@ def verifiable_query_response(
         range_digest — A3's public inputs).
 
     Composition shape (the C25/A19 pattern): the distinct-key
-    aggregation, the log₂-round tree build, and the path join all key
+    aggregation, the one-pass tree build, and the path join all key
     on the same owner/token columns; provenance is a broadcast one-row
     aggregate; the top-L is ORDER BY + LIMIT (TakeOrderedAndProject).
     Oracle: the A3 result CTE plugged into the generic chained-CTE
@@ -485,6 +513,20 @@ def _oracle_verifiable_response(contract: "str | None" = None) -> str:
     """
 
 
+def _owner_clustered(
+    spark: SparkSession, sf_dir: str, df: DataFrame, *cols: str
+) -> DataFrame:
+    """An owner-keyed store's write form: equal-width group_key (owner)
+    buckets over the events' user_id span, each file sorted by
+    (group_key, *cols) (`artifacts.clustered`)."""
+    from euclid_spark import artifacts
+    from euclid_spark.operators.range_tree import _events_span
+
+    return artifacts.clustered(
+        spark, df, "group_key", _events_span(spark, sf_dir, "user_id"), *cols
+    )
+
+
 def _owner_token_tree(
     spark: SparkSession, sf_dir: str, contract: "str | None" = None
 ):
@@ -500,25 +542,22 @@ def _owner_token_tree(
 
     contract = CONTRACT if contract is None else contract
     # owner-clustered layout (the q2_key_tiles story): both stores are
-    # range-partitioned + sorted on group_key at write, so the
-    # single-owner faces' group_key filter prunes parquet row groups —
-    # a one-owner response reads that owner's slice, not every tree
+    # written in owner buckets sorted on group_key (`_owner_clustered`),
+    # so the single-owner faces' group_key filter prunes parquet row
+    # groups — a one-owner response reads that owner's slice, not every
+    # tree
     fp = artifacts.corpus_fingerprint(
         [f"{sf_dir}/events.parquet"], op="owner_token_tree",
-        layout="owner_v2", contract=contract,
+        layout="owner_v3", contract=contract,
     )
-
-    def _clustered(df: DataFrame, *sort_cols: str) -> DataFrame:
-        return df.repartitionByRange(8, "group_key").sortWithinPartitions(
-            "group_key", *sort_cols
-        )
 
     def build_leaves() -> DataFrame:
         keys = q2_distinct_keys(spark, sf_dir, contract=contract).filter(
             F.col("token_id").isNotNull()
         )
         w = Window.partitionBy("owner").orderBy("token_id")
-        return _clustered(
+        return _owner_clustered(
+            spark, sf_dir,
             keys.select(
                 F.col("owner").alias("group_key"),
                 "token_id",
@@ -535,12 +574,8 @@ def _owner_token_tree(
         spark,
         "owner_token_nodes",
         fp,
-        lambda: _clustered(
-            merkle_levels(
-                persist_tracked(leaves).select("group_key", "pos", "node_hash")
-            )[0],
-            "level",
-            "pos",
+        lambda: _owner_clustered(
+            spark, sf_dir, merkle_levels(leaves)[0], "level", "pos"
         ),
     )
     depth = _served_depth("owner_token_nodes", fp)
@@ -635,7 +670,7 @@ def _erc20_fp(
     # own storage DB), so each (rate, contract) keys its own artifact
     return artifacts.corpus_fingerprint(
         [f"{sf_dir}/events.parquet"], op="erc20_entry_tree", v=2, rate=rate,
-        layout="owner_v2", contract=CONTRACT if contract is None else contract,
+        layout="owner_v3", contract=CONTRACT if contract is None else contract,
     )
 
 
@@ -683,9 +718,7 @@ def erc20_entry_leaves(
             ),
         )
         # owner-clustered write: single-owner faces prune row groups
-        return out.repartitionByRange(8, "group_key").sortWithinPartitions(
-            "group_key", "pos"
-        )
+        return _owner_clustered(spark, sf_dir, out, "pos")
 
     return artifacts.serve_frame(
         spark, "erc20_entry_leaves",
@@ -709,11 +742,9 @@ def _erc20_entry_tree(
         spark,
         "erc20_entry_nodes",
         _erc20_fp(sf_dir, rewards_rate, contract),
-        lambda: merkle_levels(
-            persist_tracked(leaves).select("group_key", "pos", "node_hash")
-        )[0]
-        .repartitionByRange(8, "group_key")
-        .sortWithinPartitions("group_key", "level", "pos"),
+        lambda: _owner_clustered(
+            spark, sf_dir, merkle_levels(leaves)[0], "level", "pos"
+        ),
     )
     depth = _served_depth(
         "erc20_entry_nodes", _erc20_fp(sf_dir, rewards_rate, contract)

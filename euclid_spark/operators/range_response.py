@@ -23,15 +23,18 @@ Construction — the reference's own aggregation shape, hash-only:
       PAYLOADS are stored: a cell holds ≤ TILE_SIZE leaves, so its
       leaf hashes and in-cell nodes are refolded wherever they are
       needed — in memory by the cell-tree build, and on the driver
-      (`_incell_tree`) for the ≤ L cells a response opens into;
+      (`merkle.merkle_levels_local`) for the ≤ L cells a response
+      opens into;
     * a "cell tree" above them, the one stored tree: level 0 holds
       the cell roots, and node (level k, pos c) commits cells
-      [c·2^k, (c+1)·2^k) — merkle_levels' pairing with
-      promotion-on-absent-sibling, so sparsely occupied cell space
-      degrades to identity promotions, never self-concats. A promoted
-      node IS its only child's hash, so it is not stored: one row per
-      chain (range_tree.chains) — a cell root or a two-child node
-      with the run of promotions above it, (level, top, lo).
+      [c·2^k, (c+1)·2^k) — merkle_levels' pairing: one grouped pass
+      per owner over its occupied cells only, two nodes pair when
+      their pos >> 1 match and a node whose sibling is absent is
+      promoted, so sparsely occupied cell space degrades to identity
+      promotions, never self-concats. A promoted node IS its only
+      child's hash, so it is not stored: one row per chain
+      (range_tree.chains) — a cell root or a two-child node with the
+      run of promotions above it, (level, top, lo).
 
 - **The response for [b_min, b_max)**: the canonical segment-tree
   cover (≤ 2 tiles/level, range_tree.tile_cover) plus the two
@@ -94,6 +97,11 @@ from pyspark.sql import functions as F
 from euclid_spark import artifacts
 from euclid_spark.catalog import cached_parquet, local_frame
 from euclid_spark.functions.u256 import u256_to_hex
+from euclid_spark.operators.merkle import (
+    merkle_levels,
+    merkle_levels_local,
+    merkle_roots,
+)
 from euclid_spark.operators.range_tree import (
     _EDGE_SENTINEL_CELL,
     ERC20_REWARD_TREE,
@@ -267,8 +275,6 @@ def range_commitment_paths(
                 to `top`; `lo` is its smallest cell, and the node at
                 level k in [level, top] has pos lo >> k
     """
-    from euclid_spark.operators.merkle import merkle_levels, merkle_roots
-
     # fine row groups: a driver read of one owner's few rows decodes a
     # 4 MB row group, not a 128 MB one (stores written before rebuild once)
     fine = artifacts.FINE_ROW_GROUPS
@@ -346,25 +352,6 @@ def _leaf_hex(family: str, r: dict) -> str:
     if family == "erc20":
         return _sha(f"{r['event_id']}:{r['entry_reward_hex']}")
     return _sha(r["token_id"])
-
-
-def _incell_tree(
-    hashes: "list[str]",
-) -> "tuple[dict[tuple[int, int], str], int]":
-    """(nodes, depth): one cell's in-cell tree as {(level, pos): hash}
-    and its root's level, refolded from its leaf hashes in pos order
-    with merkle_levels' rule: pair (2p, 2p + 1), promote an unpaired
-    tail node, stop at the root."""
-    nodes = {(0, p): h for p, h in enumerate(hashes)}
-    lvl, k = hashes, 0
-    while len(lvl) > 1:
-        lvl = [
-            _sha(lvl[i] + lvl[i + 1]) if i + 1 < len(lvl) else lvl[i]
-            for i in range(0, len(lvl), 2)
-        ]
-        k += 1
-        nodes.update(((k, p), h) for p, h in enumerate(lvl))
-    return nodes, k
 
 
 def _path_steps(
@@ -672,7 +659,7 @@ def _range_response(
                 family, n
             )
     in_nodes = {
-        c: _incell_tree([lf[p] for p in sorted(lf)])
+        c: merkle_levels_local([lf[p] for p in sorted(lf)])
         for c, lf in cell_leaves.items()
     }
     cell_sibs: "dict[tuple[int, int], str]" = {}

@@ -53,6 +53,7 @@ from euclid_spark.operators.cms_range import CMS_DAY_TILES
 from euclid_spark.operators.distinct_sketch import LC_DAY_TILES
 from euclid_spark.operators.drift import DRIFT_TILES
 from euclid_spark.operators.euclid import DAY_DIGEST
+from euclid_spark.operators.merkle import merkle_levels_local
 from euclid_spark.operators.quantile_sketch import HDR_DAY_TILES
 from euclid_spark.operators.range_response import erc20_entry_hex, erc20_leaf_hash
 from euclid_spark.operators.range_tree import (
@@ -256,22 +257,14 @@ def _merkle_merge(old: DataFrame, partial: DataFrame) -> DataFrame:
 
 
 def _merkle_finalize(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Fold each day's sorted leaf set to its Merkle root with the same
-    pairing/promotion rule as operators/merkle.py (unpaired tail
-    promotes unchanged). Day-level frame — the fold is driver-side
-    orchestration over ≤ a few thousand hashes per day."""
-    import hashlib
+    """Fold each day's sorted leaf set to its Merkle root with
+    operators/merkle.py's own driver-side fold (`merkle_levels_local`;
+    an empty day's root is ""). Day-level frame — the fold is
+    driver-side orchestration over ≤ a few thousand hashes per day."""
 
     def root(hs: "list[str]") -> str:
-        lvl = list(hs)
-        while len(lvl) > 1:
-            lvl = [
-                hashlib.sha256((lvl[i] + lvl[i + 1]).encode()).hexdigest()
-                if i + 1 < len(lvl)
-                else lvl[i]
-                for i in range(0, len(lvl), 2)
-            ]
-        return lvl[0] if lvl else ""
+        nodes, depth = merkle_levels_local(list(hs))
+        return nodes.get((depth, 0), "")
 
     out = pdf.copy()
     out["merkle_root"] = out["leaf_hashes"].apply(lambda v: root(list(v)))

@@ -16,7 +16,11 @@ from euclid_spark.operators import (
     textops,
 )
 from tests.conftest import SF_SMOKE
-from tests.plan_tree import assert_no_single_partition, physical_node_counts
+from tests.plan_tree import (
+    assert_no_single_partition,
+    physical_node_counts,
+    physical_nodes,
+)
 
 
 def _plan(df) -> str:
@@ -120,6 +124,40 @@ def test_merkle_roots_join_has_no_static_broadcast_hint(spark):
     df = merkle.merkle_membership_proof(spark, SF_SMOKE)
     logical = df._jdf.queryExecution().optimizedPlan().toString()
     assert "ResolvedHint" not in logical and "UnresolvedHint" not in logical
+
+
+def test_merkle_levels_is_one_grouped_pass(spark):
+    """merkle_levels folds every level of every group in one grouped
+    pass: at depth 9 its executed plan holds exactly one shuffle
+    exchange (no shuffle per level), and building it leaves no cache
+    pin registered and no RDD persisted (no checkpoint chain)."""
+    from pyspark.sql import functions as F
+
+    from euclid_spark import cache
+    from euclid_spark.operators.merkle import merkle_levels
+
+    def pins() -> "tuple[int, int]":
+        return (
+            len(cache._REGISTRY.get(cache._OWNER.get(), [])),
+            spark.sparkContext._jsc.sc().getPersistentRDDs().size(),
+        )
+
+    before = pins()
+    leaves = spark.range(900).select(
+        (F.col("id") % 3).alias("group_key"),
+        F.expr("id div 3").alias("pos"),
+        F.sha2(F.col("id").cast("string"), 256).alias("node_hash"),
+    )
+    nodes, depth = merkle_levels(leaves)
+    assert depth == 9
+    # AQE's initial and current plans share their nodes until the plan
+    # runs: count each exchange once
+    exchanges = {
+        n.id() for n in physical_nodes(nodes)
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+    }
+    assert len(exchanges) == 1, len(exchanges)
+    assert pins() == before
 
 
 def test_preprocessing_pipeline_plan_shape(spark):

@@ -526,16 +526,22 @@ def test_chain_stores_hold_no_copies(spark, monkeypatch, deep_corpus, corpus):
 def test_commitment_stores_are_byte_identical_across_builds(
     spark, tmp_path, monkeypatch
 ):
-    """Building the four commitment stores, the two keyed tile trees
-    and the trees' two input-row stores twice, each time into an empty
-    artifact root, writes the same part files byte for byte: the owner
-    and event_id clustering is a function of the data, not of a
-    sampled bound, and the chain stores' (owner, lo, level) sort is a
-    total order. The four owner-keyed trees are in the chain layout."""
+    """Building the four commitment stores, the two keyed tile trees,
+    the trees' two input-row stores and merkle.py's owner-token and
+    ERC-20 entry trees (leaves and nodes) twice, each time into an
+    empty artifact root, writes the same part files byte for byte: the
+    owner and event_id clustering is a function of the data, not of a
+    sampled bound, and each store's sort is a total order. The four
+    owner-keyed trees are in the chain layout."""
+    import glob
     import os
 
     from euclid_spark import artifacts
     from euclid_spark.cache import release_all
+    from euclid_spark.operators.merkle import (
+        _erc20_entry_tree,
+        _owner_token_tree,
+    )
     from euclid_spark.operators.range_response import range_commitment_paths
     from euclid_spark.operators.range_tree import (
         ERC20_REWARD_TREE,
@@ -551,6 +557,11 @@ def test_commitment_stores_are_byte_identical_across_builds(
         ]
         for family in ("q2", "erc20"):
             paths += range_commitment_paths(spark, SF_SMOKE, family)[:2]
+        _owner_token_tree(spark, SF_SMOKE)
+        _erc20_entry_tree(spark, SF_SMOKE)
+        for name in ("owner_token", "erc20_entry"):
+            for kind in ("leaves", "nodes"):
+                paths += glob.glob(str(root / f"{name}_{kind}_*.parquet"))
         parts: "dict[tuple, bytes]" = {}
         for path in paths:
             store = os.path.basename(path).rsplit("_", 1)[0]
@@ -571,6 +582,8 @@ def test_commitment_stores_are_byte_identical_across_builds(
         "rr_q2_leaves", "rr_q2_celltree", "rr_erc20_leaves",
         "rr_erc20_celltree", "q2_key_tiles", "q2_entry_store",
         "erc20_reward_tiles", "erc20_all_entry_leaves",
+        "owner_token_leaves", "owner_token_nodes",
+        "erc20_entry_leaves", "erc20_entry_nodes",
     }
     assert first.keys() == second.keys()
     assert all(first[k] == second[k] for k in first), sorted(
@@ -579,39 +592,58 @@ def test_commitment_stores_are_byte_identical_across_builds(
 
 
 def test_incell_refold_equals_merkle_levels(spark):
-    """The driver's in-cell refold (`_incell_tree`, `_path_steps`) is
-    merkle.merkle_levels and merkle_opening_paths: every level and every
-    leaf's opening steps agree, for cells of 1 to TILE_SIZE leaves.
-    Spark carries a tree past its root by promotion; the refold stops
-    there."""
+    """The driver's in-cell refold (`merkle_levels_local`, `_path_steps`)
+    is merkle.merkle_levels and merkle_opening_paths: every level and
+    every leaf's opening steps agree, for cells of 1 to TILE_SIZE
+    leaves. Spark carries a tree past its root by promotion; the refold
+    stops there. In the same frame, groups of sparse positions (the
+    cell tree's occupied cells) and groups of every depth from 0 to 8
+    fold level by level to the verifier tool's independent sparse fold
+    (`tools/verify_response._cell_tree`): siblings pair by pos >> 1,
+    never by their index among the group's nodes."""
+    import sys
+
     from euclid_spark.operators.merkle import (
         merkle_levels,
+        merkle_levels_local,
         merkle_opening_paths,
     )
-    from euclid_spark.operators.range_response import (
-        _incell_tree,
-        _path_steps,
-        _sha,
-    )
+    from euclid_spark.operators.range_response import _path_steps, _sha
+    from tests.conftest import REPO
+
+    sys.path.insert(0, str(REPO / "tools"))
+    from verify_response import _cell_tree
 
     sizes = (1, 2, 3, 4, 5, 7, 8, 9, 255, 256)
-    hashes = {n: [_sha(f"{n}:{p}") for p in range(n)] for n in sizes}
+    sparse = {  # group key → occupied positions
+        1001: (0,), 1002: (1,), 1003: (0, 3), 1004: (2, 3, 9),
+        1005: (0, 5, 6, 7, 200, 255), 1006: (255,), 1007: (1, 2, 5, 6),
+    }
+    level0 = {
+        g: {p: _sha(f"{g}:{p}") for p in ps}
+        for g, ps in [(n, range(n)) for n in sizes] + list(sparse.items())
+    }
     df = spark.createDataFrame(
-        [(n, p, h) for n, hs in hashes.items() for p, h in enumerate(hs)],
+        [(g, p, h) for g, lv in level0.items() for p, h in lv.items()],
         "group_key long, pos long, node_hash string",
     )
     nodes, depth = merkle_levels(df)
+    assert depth == 8
     stored: "dict[int, dict]" = {}
     for r in nodes.collect():
         stored.setdefault(r["group_key"], {})[(r["level"], r["pos"])] = (
             r["node_hash"]
         )
+    for g, lv in level0.items():
+        assert stored[g] == _cell_tree(lv, depth), g
     paths = {
         (r["group_key"], r["leaf_pos"]): r["path"]
-        for r in merkle_opening_paths(df, [], nodes=nodes, depth=depth).collect()
+        for r in merkle_opening_paths(
+            df.filter(df.group_key.isin(*sizes)), [], nodes=nodes, depth=depth
+        ).collect()
     }
     for n in sizes:
-        tree, top = _incell_tree(hashes[n])
+        tree, top = merkle_levels_local(list(level0[n].values()))
         assert top == max(0, (n - 1).bit_length()), n
         sp = stored[n]
         assert {kp: h for kp, h in sp.items() if kp[0] <= top} == tree, n
