@@ -111,15 +111,19 @@ def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
     """A SMALL local relation (driver-held rows → DataFrame) through the
     pandas/Arrow path: `createDataFrame(list, ddl)` serializes rows via
     pickle one at a time and costs ~0.8 s to execute even for 50 rows;
-    the same rows through a pandas frame ride Arrow (~0.08 s). Falls
+    the same rows through a pandas frame ride Arrow (~0.08 s), and no
+    rows an empty Arrow table, which runs no Spark job at all. Falls
     back to the list path when pandas can't represent the rows (exotic
     nesting) — behavior, schema and values are identical either way."""
     import pandas as pd
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
     cols = [c.split()[0].strip("`") for c in ddl.split(",")]
     try:
         if not rows:
-            return spark.createDataFrame([], ddl)
+            schema = StructType.fromDDL(ddl)
+            return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
         pdf = pd.DataFrame.from_records(list(rows), columns=cols)
         return spark.createDataFrame(pdf, ddl)
     except Exception as ex:  # noqa: BLE001 — fall back to the classic path

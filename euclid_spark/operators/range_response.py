@@ -13,8 +13,8 @@ result rows WITH opening paths, in O(log range + |result|) reads.
 
 Construction — the reference's own aggregation shape, hash-only:
 
-- **Per-tile subtree roots** (two served artifacts, one pair per
-  contract and, for ERC-20, per rewards rate):
+- **Per-tile subtree roots** (per contract and, for ERC-20, per
+  rewards rate):
     * level-0 ("in-cell") Merkle trees: each TILE_SIZE-block cell's
       qualifying rows — ERC-20: the owner's entries in block order,
       leaf = sha256(event_id ':' entry_reward_hex) (A23's encoding);
@@ -22,19 +22,18 @@ Construction — the reference's own aggregation shape, hash-only:
       leaf = sha256(token_id) (A20's encoding). Only the leaf
       PAYLOADS are stored: a cell holds ≤ TILE_SIZE leaves, so its
       leaf hashes and in-cell nodes are refolded wherever they are
-      needed — in memory by the cell-tree build, and on the driver
-      (`merkle.merkle_levels_local`) for the ≤ L cells a response
-      opens into;
-    * a "cell tree" above them, the one stored tree: level 0 holds
-      the cell roots, and node (level k, pos c) commits cells
-      [c·2^k, (c+1)·2^k) — merkle_levels' pairing: one grouped pass
-      per owner over its occupied cells only, two nodes pair when
-      their pos >> 1 match and a node whose sibling is absent is
-      promoted, so sparsely occupied cell space degrades to identity
-      promotions, never self-concats. A promoted node IS its only
-      child's hash, so it is not stored: one row per chain
-      (range_tree.chains) — a cell root or a two-child node with the
-      run of promotions above it, (level, top, lo).
+      needed — in memory by the tree build (`cell_tree`), and on the
+      driver (`merkle.merkle_levels_local`) for the ≤ L cells a
+      response opens into;
+    * a "cell tree" above them: level 0 holds the cell roots, and node
+      (level k, pos c) commits cells [c·2^k, (c+1)·2^k) —
+      merkle_levels' pairing: one grouped pass per owner over its
+      occupied cells only, two nodes pair when their pos >> 1 match
+      and a node whose sibling is absent is promoted, so sparsely
+      occupied cell space degrades to identity promotions, never
+      self-concats. Its nodes are those of the family's keyed tile
+      tree, which stores each node's digest as `node_hash` beside its
+      aggregate, one row per chain (range_tree.chains).
 
 - **The response for [b_min, b_max)**: the canonical segment-tree
   cover (≤ 2 tiles/level, range_tree.tile_cover) plus the two
@@ -57,22 +56,22 @@ Construction — the reference's own aggregation shape, hash-only:
 - **Cost shape**: the artifacts are built once per corpus version (by
   Spark); a query is answered on the driver. `artifacts.read_rows`
   fetches, from the owner-clustered stores, the owner's O(log range)
-  cover-tile roots, its rows in the two < TILE_SIZE edge slices, the
-  revealed rows, the leaves of the ≤ L touched cells (≤ TILE_SIZE
-  rows each) and the ≤ L·depth cell-tree siblings, each cell-tree
-  node matching the one chain row that holds it (`chain_filter`);
-  Python hashes the leaves, refolds the touched cells and
-  returns one local frame, so no Spark job runs until the caller acts
-  on it. Nothing reads the range interior (asserted by the --events
-  scale probe) except the two reads bounded only by the owner's rows
-  in the range: the ERC-20 revealed rows and the q2 L > Q2_L
-  fallback. The stores hold no value a bounded read can recompute
-  (no leaf hash, no in-cell node, no promotion copy — an owner's cell
-  tree is O(its cells) rows, not O(cells × depth)), and every stored
-  digest as its 32 raw bytes (half the bytes of its
-  hex spelling); hex appears only in responses — the builds and the
-  driver reads turn the bytes back into the lowercase hex the hashes
-  are defined over, so every hash value and response is unchanged.
+  cover-tile digests, its rows in the two < TILE_SIZE edge slices,
+  the revealed rows, the leaves of the ≤ L touched cells (≤ TILE_SIZE
+  rows each) and the ≤ L·depth cell-tree siblings, each tree node
+  matching the one chain row that holds it (`chain_filter`), a Q2
+  response's cover keys in the same read; Python hashes the leaves,
+  refolds the touched cells and returns one local frame, so no Spark
+  job runs until the caller acts on it. Nothing reads the range
+  interior (asserted by the --events scale probe) except the two
+  reads bounded only by the owner's rows in the range: the ERC-20
+  revealed rows and the q2 L > Q2_L fallback. The stores hold no
+  value a bounded read can recompute (no leaf hash, no in-cell node,
+  no promotion copy — an owner's tree is O(its cells) rows, not
+  O(cells × depth)), and every stored digest as its 32 raw bytes
+  (half the bytes of its hex spelling); hex appears only in responses
+  — the builds and the driver reads turn the bytes back into the
+  lowercase hex the hashes are defined over.
 
 Verification (A32/A33 faces + the standalone tool): leaf re-derives
 from the payload; path refolds leaf → element; the element sits at its
@@ -115,7 +114,6 @@ from euclid_spark.operators.range_tree import (
     _q2_entries,
     chain_filter,
     chain_match,
-    chains,
     tile_cover,
     tree_depth,
 )
@@ -185,8 +183,8 @@ def _erc20_cell_leaf_rows(
     spark: SparkSession, sf_dir: str, rate, contract: "str | None"
 ) -> DataFrame:
     """Level-0 leaves, ERC-20 family: per (owner, cell), the owner's
-    entries in block order with the leaf circuit's reward, read from
-    the served entry-leaf store."""
+    entries in block order with the leaf circuit's reward (BINARY(32)),
+    read from the served entry-leaf store."""
     rows = ERC20_REWARD_TREE.frame(
         spark, sf_dir, contract=contract, rate=rate, store=True
     )
@@ -195,7 +193,7 @@ def _erc20_cell_leaf_rows(
         "owner",
         "cell",
         "event_id",
-        erc20_entry_hex().alias("entry_reward_hex"),
+        F.unhex(erc20_entry_hex()).alias("entry_reward_hex"),
         (F.row_number().over(w) - 1).alias("pos"),
     )
 
@@ -209,34 +207,9 @@ def _leaf_hash(family: str) -> Column:
 
 # The commitment stores hold every sha256 digest as its 32 raw bytes;
 # the hash definition concatenates lowercase hex (A18's wire format),
-# so `_stored` packs at write and `_hexed` / `_read_rows` unpack every
-# read — the only three places the stored encoding appears.
+# so the builds unhex what they store and the reads hex it back
+# (`cell_tree`, `_read_rows`).
 _DIGESTS = ("node_hash", "entry_reward_hex")
-
-
-def _stored(
-    spark: SparkSession, sf_dir: str, df: DataFrame, *cols: str
-) -> DataFrame:
-    """A commitment store's write form: digests as BINARY(32), rows in
-    equal-width owner buckets over the events' user_id span, each file
-    sorted by (owner, *cols) (`artifacts.clustered`)."""
-    return artifacts.clustered(
-        spark,
-        df.select(
-            *(F.unhex(c).alias(c) if c in _DIGESTS else c for c in df.columns)
-        ),
-        "owner", _events_span(spark, sf_dir, "user_id"), *cols,
-    )
-
-
-def _hexed(df: DataFrame) -> DataFrame:
-    """A store read back in Spark with its digests as lowercase hex."""
-    return df.select(
-        *(
-            F.lower(F.hex(c)).alias(c) if c in _DIGESTS else c
-            for c in df.columns
-        )
-    )
 
 
 def _read_rows(
@@ -252,6 +225,55 @@ def _read_rows(
     return rows
 
 
+def _leaf_store(
+    spark: SparkSession, sf_dir: str, family: str, rate, contract
+) -> str:
+    """The family's leaf store, built on a miss: (owner, cell,
+    <payload cols>, pos) — the in-cell trees' leaves, pos in key (q2)
+    or block (ERC-20) order per (owner, cell) — in equal-width owner
+    buckets over the events' user_id span, each file sorted by (owner,
+    cell, pos), with fine row groups."""
+
+    def build() -> DataFrame:
+        rows = (
+            _erc20_cell_leaf_rows(spark, sf_dir, rate, contract)
+            if family == "erc20"
+            else _q2_cell_leaf_rows(spark, sf_dir, contract)
+        )
+        return artifacts.clustered(
+            spark, rows, "owner", _events_span(spark, sf_dir, "user_id"),
+            "cell", "pos",
+        )
+
+    return artifacts.ensure(
+        f"rr_{family}_leaves",
+        _fp(sf_dir, family, rate, contract, layout="bin_v2"),
+        build, artifacts.FINE_ROW_GROUPS,
+    )
+
+
+def cell_tree(
+    spark: SparkSession, sf_dir: str, family: str, depth: int, rate, contract
+) -> DataFrame:
+    """The family's cell tree, levels 0..`depth`, as (owner, level,
+    cell, node_hash BINARY(32)): each (owner, cell)'s in-cell tree
+    folded in memory from the leaf payloads, then merkle_levels."""
+    lv = cached_parquet(spark, _leaf_store(spark, sf_dir, family, rate, contract))
+    if family == "erc20":
+        lv = lv.withColumn("entry_reward_hex", F.lower(F.hex("entry_reward_hex")))
+    roots = merkle_roots(
+        lv.select("owner", "cell", "pos", _leaf_hash(family).alias("node_hash")),
+        ("owner", "cell"),
+    ).select(
+        "owner", F.col("cell").alias("pos"), F.col("root").alias("node_hash")
+    )
+    nodes, _ = merkle_levels(roots, group="owner", levels=depth)
+    return nodes.select(
+        "owner", "level", F.col("pos").alias("cell"),
+        F.unhex("node_hash").alias("node_hash"),
+    )
+
+
 def range_commitment_paths(
     spark: SparkSession,
     sf_dir: str,
@@ -259,68 +281,35 @@ def range_commitment_paths(
     rewards_rate: "int | None" = None,
     contract: "str | None" = None,
 ) -> "tuple[str, str, int]":
-    """(leaves, cell_nodes, cell_depth) — the two commitment artifacts'
-    paths, each built on a miss (owner-clustered with fine row groups,
-    so a single-owner response prunes to that owner's row groups), and
-    the cell tree's depth from its footers. `entry_reward_hex` and
-    `node_hash` are stored as BINARY(32), the digest's raw bytes:
-
-    leaves:     (owner, cell, <payload cols>, pos) — the in-cell trees'
-                leaves, pos in key (q2) or block (ERC-20) order per
-                (owner, cell); every leaf hash and in-cell node is a
-                function of them, refolded where it is needed
-    cell_nodes: (owner, level, top, lo, node_hash) — one row per chain
-                (range_tree.chains): a cell root or a two-child node
-                at `level`, standing also for its promotion copies up
-                to `top`; `lo` is its smallest cell, and the node at
-                level k in [level, top] has pos lo >> k
-    """
-    # fine row groups: a driver read of one owner's few rows decodes a
-    # 4 MB row group, not a 128 MB one (stores written before rebuild once)
-    fine = artifacts.FINE_ROW_GROUPS
-
-    def build_leaves() -> DataFrame:
-        rows = (
-            _erc20_cell_leaf_rows(spark, sf_dir, rewards_rate, contract)
-            if family == "erc20"
-            else _q2_cell_leaf_rows(spark, sf_dir, contract)
-        )
-        return _stored(spark, sf_dir, rows, "cell", "pos")
-
-    leaves = artifacts.ensure(
-        f"rr_{family}_leaves",
-        _fp(sf_dir, family, rewards_rate, contract, layout="bin_v2"),
-        build_leaves, fine,
+    """(leaves, tree, depth): the leaf store (`_leaf_store`), the
+    family's keyed tile tree — (owner, level, top, lo, <payload cols>,
+    node_hash), one row per chain (range_tree.chains), node_hash the
+    node's cell-tree digest — each built on a miss, and the response's
+    cover depth, tree_depth(max qualifying cell + 1) from the leaf
+    store's footers. The tree is built to the events' depth, never
+    smaller, so it holds every node such a cover names."""
+    leaves = _leaf_store(spark, sf_dir, family, rewards_rate, contract)
+    tree = (ERC20_REWARD_TREE if family == "erc20" else Q2_KEY_TREE).path(
+        spark, sf_dir, contract, rewards_rate
     )
+    mc = artifacts.footer_stats(leaves).span("cell")[1]
+    return leaves, tree, 0 if mc is None else tree_depth(int(mc) + 1)
 
-    def build_celltree() -> DataFrame:
-        # the cell roots, folded in memory: leaf hashes from the stored
-        # payloads, then each (owner, cell)'s in-cell tree to its root
-        lv = _hexed(cached_parquet(spark, leaves)).select(
-            "owner", "cell", "pos", _leaf_hash(family).alias("node_hash")
-        )
-        roots = merkle_roots(lv, ("owner", "cell")).select(
-            "owner", F.col("cell").alias("pos"), F.col("root").alias("node_hash")
-        )
-        # sized to the max QUALIFYING cell, from the leaf store's footers
-        mb = artifacts.footer_stats(leaves).span("cell")[1]
-        nodes, depth = merkle_levels(
-            roots, group="owner", levels=tree_depth(int(mb or 0) + 1)
-        )
-        return _stored(
-            spark, sf_dir, chains(nodes, depth, cell="pos"), "lo", "level"
-        )
 
-    cells = artifacts.ensure(
-        f"rr_{family}_celltree",
-        _fp(sf_dir, family, rewards_rate, contract, layout="chain_v1"),
-        build_celltree, fine,
+def _tree_nodes(
+    tree: str, nodes: "list[tuple[int, int]]", owner: int, *cols: str
+) -> "dict[tuple[int, int], dict]":
+    """{(level, cell): chain row} of `owner`'s `nodes` in a keyed tree,
+    node_hash as hex and `cols` beside it: one `chain_filter` read."""
+    if not nodes:
+        return {}
+    return chain_match(
+        _read_rows(
+            tree, chain_filter(nodes, owner),
+            ["level", "top", "lo", *cols, "node_hash"],
+        ),
+        nodes,
     )
-    # served metadata from parquet footers, read after the ensures — a
-    # frame agg(max) would scan every node row, which grows with the
-    # corpus
-    md = artifacts.footer_stats(cells).span("top")[1]
-    return leaves, cells, 0 if md is None else int(md)
 
 
 # --------------------------------------------------------------------------
@@ -377,15 +366,15 @@ def _element_sequence(
     owner: int,
     contract: "str | None",
     leaves: str,
-    cells: str,
+    tiles: "dict[tuple[int, int], dict]",
     cover: "list[tuple[int, int]]",
     edges: "list[tuple[int, int]]",
 ) -> "list[tuple[int, str, dict]]":
     """The response's ELEMENT SEQUENCE in block order — low-edge
     leaves, occupied cover-tile subtree roots, high-edge leaves — as
-    (block_start, hash, meta) triples. Bounded: the owner's ≤ 2 cell
-    nodes per level plus its rows in the two < TILE_SIZE edge windows,
-    each one `artifacts.read_rows` on the driver (no Spark job)."""
+    (block_start, hash, meta) triples. Bounded: `tiles`, the owner's
+    ≤ 2 cover nodes per level, plus its rows in the two < TILE_SIZE
+    edge windows, each one `artifacts.read_rows` on the driver."""
     own = ("owner", "=", owner)
     elems: "list[tuple[int, str, dict]]" = []
     if edges and family == "erc20":
@@ -411,20 +400,12 @@ def _element_sequence(
             first[t] = min(first.get(t, r["event_id"]), r["event_id"])
         for t, fid in sorted(first.items(), key=lambda kv: kv[1]):
             elems.append((fid, _sha(t), {"edge_id": fid, "edge_tok": t}))
-    if cover:
-        tile_rows = chain_match(
-            _read_rows(
-                cells, chain_filter(cover, owner),
-                ["level", "top", "lo", "node_hash"],
-            ),
-            cover,
-        )
-        for k, c in cover:
-            if (k, c) in tile_rows:  # empty subtree ⇒ no element
-                elems.append(
-                    (c * (1 << k) * TILE_SIZE, tile_rows[(k, c)]["node_hash"],
-                     {"k": k, "c": c})
-                )
+    for k, c in cover:
+        if (k, c) in tiles:  # empty subtree ⇒ no element
+            elems.append(
+                (c * (1 << k) * TILE_SIZE, tiles[(k, c)]["node_hash"],
+                 {"k": k, "c": c})
+            )
     elems.sort(key=lambda t: t[0])
     return elems
 
@@ -450,15 +431,15 @@ def _response_root(
         if family == "erc20"
         else None
     )
-    leaves, cells, depth = range_commitment_paths(
+    leaves, tree, depth = range_commitment_paths(
         spark, sf_dir, family, rewards_rate, contract
     )
     cover, edges = tile_cover(int(b_min), int(b_max), depth)
     if not cover and not edges:
         return None
     elems = _element_sequence(
-        spark, sf_dir, family, int(owner), contract, leaves, cells, cover,
-        edges,
+        spark, sf_dir, family, int(owner), contract, leaves,
+        _tree_nodes(tree, cover, int(owner)), cover, edges,
     )
     return _fold(
         _hdr(int(b_min), int(b_max), int(owner), rate),
@@ -470,13 +451,13 @@ def _q2_revealed(
     spark: SparkSession,
     sf_dir: str,
     owner: int,
-    b_min: int,
-    b_max: int,
     L: int,
     contract: "str | None",
     leaves: str,
     cover: "list[tuple[int, int]]",
     edge_toks: "set[int]",
+    req: "tuple | None",
+    tiles: "list[dict] | None",
 ) -> "list[dict]":
     """The q2 response's revealed rows: the first-L distinct keys over
     the range in key order, each opening at its smallest covering
@@ -484,16 +465,17 @@ def _q2_revealed(
     cell = -1 when an edge occurrence opens it — with its leaf hash.
 
     L ≤ Q2_L reads the keys WITH their first covered occurrence from
-    the A26 key-tile fold (O(log range) tile rows, no leaf-store
-    fetch). A larger L exceeds the tree's baked reveal width, so the
-    keys come from the owner's leaf-store rows in the covered cells:
-    that read is bounded only by the owner's rows in the range, the
-    honest cost of over-asking the circuit setup."""
+    the A26 key-tile fold of the tree request `req` (O(log range) tile
+    rows, no leaf-store fetch; `tiles` are its cover rows when the
+    response has read them already). A larger L exceeds the tree's
+    baked reveal width, so the keys come from the owner's leaf-store
+    rows in the covered cells: that read is bounded only by the
+    owner's rows in the range, the honest cost of over-asking the
+    circuit setup."""
     cand: "dict[int, dict]" = {}
     if L <= Q2_L:
-        req = Q2_KEY_TREE.request(spark, sf_dir, b_min, b_max, contract)
         key_rows = [] if req is None else Q2_KEY_TREE.driver_fold(
-            spark, sf_dir, req[2], req[3], owner, contract
+            spark, sf_dir, req[2], req[3], owner, contract, tiles=tiles
         )[:L]
         keys = [k["t"] for k in key_rows]
         for k in key_rows:
@@ -570,18 +552,29 @@ def _range_response(
         + (", rewards_rate long" if family == "erc20" else "")
     )
 
-    leaves, cells, depth = range_commitment_paths(
+    leaves, tree, depth = range_commitment_paths(
         spark, sf_dir, family, rewards_rate, contract
     )
     b_min, b_max = _probe_range(spark, sf_dir, b_min, b_max)
     cover, edges = tile_cover(b_min, b_max, depth)
     if not cover and not edges:
-        return spark.createDataFrame([], ddl)
+        return local_frame(spark, [], ddl)
     own = ("owner", "=", owner)
+    # a Q2 answer within the tree's reveal bound is the tree's key fold;
+    # when the tree request's cover is the response's, one read of the
+    # tree returns both the keys and the digests of the cover
+    req = (
+        Q2_KEY_TREE.request(spark, sf_dir, b_min, b_max, contract)
+        if family == "q2" and L <= Q2_L else None
+    )
+    shared = req is not None and req[2] == cover
+    tiles = _tree_nodes(
+        tree, cover, owner, *(Q2_KEY_TREE.cols if shared else ())
+    )
 
     # ---- element sequence (bounded: O(log range) tiles + 2 edge slices)
     elems = _element_sequence(
-        spark, sf_dir, family, owner, contract, leaves, cells, cover, edges
+        spark, sf_dir, family, owner, contract, leaves, tiles, cover, edges
     )
     element_hashes = [h for _, h, _ in elems]
     elements_str = "/".join(element_hashes)
@@ -604,8 +597,9 @@ def _range_response(
             r["node_hash"] = _leaf_hex(family, r)
     else:
         rev_rows = _q2_revealed(
-            spark, sf_dir, owner, b_min, b_max, L, contract, leaves, cover,
+            spark, sf_dir, owner, L, contract, leaves, cover,
             {m["edge_tok"] for _, _, m in elems if "edge_tok" in m},
+            req, list(tiles.values()) if shared else None,
         )
 
     # ---- opening paths, assembled DRIVER-SIDE: a response is ≤ L
@@ -662,18 +656,10 @@ def _range_response(
         c: merkle_levels_local([lf[p] for p in sorted(lf)])
         for c, lf in cell_leaves.items()
     }
-    cell_sibs: "dict[tuple[int, int], str]" = {}
-    if need:
-        cell_sibs = {
-            kc: n["node_hash"]
-            for kc, n in chain_match(
-                _read_rows(
-                    cells, chain_filter(sorted(need), owner),
-                    ["level", "top", "lo", "node_hash"],
-                ),
-                need,
-            ).items()
-        }
+    cell_sibs = {
+        kc: n["node_hash"]
+        for kc, n in _tree_nodes(tree, sorted(need), owner).items()
+    }
 
     out_rows: "list[tuple]" = []
     for r in cov_rows:

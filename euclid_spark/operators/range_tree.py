@@ -34,8 +34,10 @@ read, and the driver fold. Everything else derives from it:
   is written dense, sorted by (level, cell) in one file. A keyed tree
   stores one row per CHAIN (`chains`): a leaf or a two-child node with
   the run of one-child promotion copies above it, as (owner, level,
-  top, lo, partial) — most owners hold a few cells, so the copies
-  would be most of the rows, O(entries × depth) instead of
+  top, lo, partial, node_hash), node_hash the node's digest in its
+  family's range-response cell tree (`commit`), so one read serves a
+  tree answer and a response — most owners hold a few cells, so the
+  copies would be most of the rows, O(entries × depth) instead of
   O(entries). It is written owner-clustered by (owner, lo, level)
   with fine row groups, so one owner's cover read prunes to its rows.
 - **Streaming upkeep** (`TileTree.partial` / `merge`, the D19 monoid
@@ -183,16 +185,16 @@ def _edge_filter(edges: "list[tuple[int, int]]", *conj: tuple) -> list:
 # their share grows with the depth.
 
 
-def chains(nodes: DataFrame, depth: int, cell: str = "cell") -> DataFrame:
+def chains(nodes: DataFrame, depth: int) -> DataFrame:
     """The chain rows of a full owner-keyed node set `nodes` (owner,
-    level, `cell`, payload...) of levels 0..depth: the level-0 span
+    level, cell, payload...) of levels 0..depth: the level-0 span
     (lo, hi) of every node, then one row per (owner, lo, hi) at its
     lowest level, with `top` its highest and that node's payload."""
-    payload = [c for c in nodes.columns if c not in ("owner", "level", cell)]
+    payload = [c for c in nodes.columns if c not in ("owner", "level", "cell")]
     span = (
         nodes.filter(F.col("level") == 0)
         .select(
-            "owner", F.col(cell).alias("c0"),
+            "owner", F.col("cell").alias("c0"),
             F.explode(F.sequence(F.lit(0), F.lit(depth))).alias("level"),
         )
         .groupBy("owner", "level", F.expr("shiftright(c0, level)").alias("n"))
@@ -201,7 +203,7 @@ def chains(nodes: DataFrame, depth: int, cell: str = "cell") -> DataFrame:
         .agg(F.min("level").alias("level"), F.max("level").alias("top"))
         .withColumn("n", F.expr("shiftright(lo, level)"))
     )
-    bottom = nodes.select("owner", "level", F.col(cell).alias("n"), *payload)
+    bottom = nodes.select("owner", "level", F.col("cell").alias("n"), *payload)
     return span.join(bottom, ["owner", "level", "n"]).select(
         "owner", "level", "top", "lo", *payload
     )
@@ -364,6 +366,7 @@ class TileTree:
     store: "tuple[str, dict] | None" = None
     # projection of a streaming partial onto its split-invariant fields
     invariant: "Callable[[DataFrame], DataFrame] | None" = None
+    commit: "str | None" = None  # range_response family of `node_hash`
     # the rest of a monoid.Monoid's surface: the stream chunk is `day`
     key_col = "day"
     finalize = None
@@ -392,14 +395,17 @@ class TileTree:
                 )
         elif self.keys:
             # the keyed trees key on the owner, the events' user_id, and
-            # store one row per chain
+            # store one row per chain, with the cell tree's digests
             def build() -> DataFrame:
+                from euclid_spark.operators.range_response import cell_tree
+
+                depth = _depth(spark, sf_dir)
+                nodes = self.levels(spark, sf_dir, contract, rate).join(
+                    cell_tree(spark, sf_dir, self.commit, depth, rate, contract),
+                    ["owner", "level", "cell"],
+                )
                 return artifacts.clustered(
-                    spark,
-                    chains(
-                        self.levels(spark, sf_dir, contract, rate),
-                        _depth(spark, sf_dir),
-                    ),
+                    spark, chains(nodes, depth),
                     "owner", _events_span(spark, sf_dir, "user_id"),
                     "lo", "level",
                 )
@@ -499,15 +505,14 @@ class TileTree:
 
     def driver_fold(
         self, spark: SparkSession, sf_dir: str, cover, edges, owner=None,
-        contract=None, rate=None,
+        contract=None, rate=None, tiles=None,
     ):
         """One owner's (or the keyless tree's) answer folded on the
         driver: `artifacts.read_rows` of the ≤ 2-per-level cover tiles
-        and of the input rows in the two edge windows, then `fold`. No
-        Spark job runs."""
+        (unless the caller has read them: `tiles`) and of the input
+        rows in the two edge windows, then `fold`. No Spark job runs."""
         own = () if owner is None else (("owner", "=", owner),)
-        tiles = []
-        if cover and self.keys:
+        if tiles is None and cover and self.keys:
             tiles = list(chain_match(
                 artifacts.read_rows(
                     self.path(spark, sf_dir, contract, rate),
@@ -516,7 +521,7 @@ class TileTree:
                 ),
                 cover,
             ).values())
-        elif cover:
+        elif tiles is None and cover:
             tiles = artifacts.read_rows(
                 self.path(spark, sf_dir, contract, rate),
                 _cover_filter(cover), list(self.cols),
@@ -531,7 +536,7 @@ class TileTree:
             edge = artifacts.read_rows(
                 src, _edge_filter(edges, *own), list(self.edge_cols)
             )
-        return self.fold(tiles, edge)
+        return self.fold(tiles or [], edge)
 
     def spark_answer(
         self, spark: SparkSession, sf_dir: str, cover, edges, contract=None,
@@ -727,7 +732,7 @@ def _q2_fold(tiles: list, ev: "list | None") -> "list[dict]":
 
 Q2_KEY_TREE = TileTree(
     name="q2_key_tiles",
-    fp=dict(op="q2_key_tree", tile=TILE_SIZE, L=Q2_L, layout="chain_v1"),
+    fp=dict(op="q2_key_tree", tile=TILE_SIZE, L=Q2_L, layout="chain_v2"),
     axes=("contract",),
     keys=("owner",),
     rows=lambda ev, contract, rate: _q2_entries(ev, contract),
@@ -750,6 +755,7 @@ Q2_KEY_TREE = TileTree(
             ),
         ),
     ),
+    commit="q2",
 )
 
 
@@ -820,7 +826,7 @@ def _erc20_fold(tiles: list, ev: "list | None") -> "tuple | None":
 
 ERC20_REWARD_TREE = TileTree(
     name="erc20_reward_tiles",
-    fp=dict(op="erc20_reward_tree", tile=TILE_SIZE, layout="chain_v1"),
+    fp=dict(op="erc20_reward_tree", tile=TILE_SIZE, layout="chain_v2"),
     axes=("rate", "contract"),
     keys=("owner",),
     rows=_erc20_rows,
@@ -835,6 +841,7 @@ ERC20_REWARD_TREE = TileTree(
         "erc20_all_entry_leaves",
         dict(op="erc20_all_entry_leaves", tile=TILE_SIZE, layout="block_v3"),
     ),
+    commit="erc20",
 )
 
 
@@ -862,7 +869,7 @@ def range_tree_agg(
     one local frame: no Spark job runs until it is acted on."""
     req = RANGE_TREE.request(spark, sf_dir, b_min, b_max)
     if req is None:  # zero-row corpus, or a degenerate range
-        return spark.createDataFrame([], _AGG_DDL)
+        return local_frame(spark, [], _AGG_DDL)
     b_min, b_max, cover, edges = req
     row = (b_min, b_max, *RANGE_TREE.driver_fold(spark, sf_dir, cover, edges))
     return local_frame(spark, [row], _AGG_DDL)
@@ -909,7 +916,7 @@ def q2_range_tree_topl(
     ddl = _Q2_EMPTY + (", first_cell long, first_pos int" if with_first else "")
     req = Q2_KEY_TREE.request(spark, sf_dir, b_min, b_max, contract)
     if req is None:
-        return spark.createDataFrame([], ddl)
+        return local_frame(spark, [], ddl)
     b_min, b_max, cover, edges = req
     if owner is not None:
         owner = int(owner)
@@ -976,7 +983,7 @@ def erc20_range_tree_reward(
     p = {"contract": contract, "rate": rewards_rate}
     req = ERC20_REWARD_TREE.request(spark, sf_dir, b_min, b_max, **p)
     if req is None:
-        return spark.createDataFrame([], _ERC20_EMPTY)
+        return local_frame(spark, [], _ERC20_EMPTY)
     b_min, b_max, cover, edges = req
     if owner is not None:
         owner = int(owner)

@@ -54,3 +54,13 @@ def assert_no_single_partition(df) -> None:
     parts = exchange_partitionings(df)
     assert parts, "no shuffle exchange found: the plan walk saw nothing"
     assert "SinglePartition" not in parts, parts
+
+
+def assert_no_python_eval(df, what: str = "") -> None:
+    """No node of `df`'s executed plan tree evaluates a Python UDF: no
+    BatchEvalPython* node (row at a time) and no ArrowEvalPython* node
+    (a pandas UDF)."""
+    names = [n.getClass().getSimpleName() for n in physical_nodes(df)]
+    assert names, "the plan walk saw nothing"
+    bad = [n for n in names if "EvalPython" in n]
+    assert not bad, (what, bad)

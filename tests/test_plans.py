@@ -17,6 +17,7 @@ from euclid_spark.operators import (
 )
 from tests.conftest import SF_SMOKE
 from tests.plan_tree import (
+    assert_no_python_eval,
     assert_no_single_partition,
     physical_node_counts,
     physical_nodes,
@@ -62,9 +63,7 @@ def test_no_python_udf_in_hot_paths(spark):
         textops.text_fingerprint,
     ]
     for fn in hot:
-        plan = _plan(fn(spark, SF_SMOKE))
-        assert "BatchEvalPython" not in plan, f"{fn.__name__} fell off the JVM path"
-        assert "ArrowEvalPython" not in plan, f"{fn.__name__} uses a pandas UDF"
+        assert_no_python_eval(fn(spark, SF_SMOKE), fn.__name__)
 
 
 def test_codegen_in_q1(spark):
@@ -170,7 +169,7 @@ def test_preprocessing_pipeline_plan_shape(spark):
     plan = _plan(df)
     assert "PushedFilters: [" in plan
     assert_no_single_partition(df)
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert_no_python_eval(df)
 
 
 def test_q20_exists_chain_is_semi_joins(spark):
@@ -202,9 +201,7 @@ def test_new_tpch_stay_on_jvm(spark):
         relational.q16_parts_supplier_relationship,
         relational.q20_potential_promotion,
     ]:
-        plan = _plan(fn(spark, SF_SMOKE))
-        assert "BatchEvalPython" not in plan, f"{fn.__name__} fell off the JVM path"
-        assert "ArrowEvalPython" not in plan, f"{fn.__name__} uses a pandas UDF"
+        assert_no_python_eval(fn(spark, SF_SMOKE), fn.__name__)
 
 
 def test_benchmark_overlap_single_exchange_and_broadcast(spark):
@@ -225,7 +222,7 @@ def test_benchmark_overlap_single_exchange_and_broadcast(spark):
     plan = _plan(df)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan, "corpus-wide shingle shuffle is back"
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert_no_python_eval(df)
 
 
 def test_pack_sequences_no_single_partition(spark):
@@ -235,7 +232,7 @@ def test_pack_sequences_no_single_partition(spark):
     df = textops.text_pack_sequences(spark, SF_SMOKE)
     plan = _plan(df)
     assert_no_single_partition(df)
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert_no_python_eval(df)
 
 
 def test_temperature_sample_broadcasts_rates(spark):
@@ -258,10 +255,11 @@ def test_substring_spans_no_pairwise_join(spark):
     from euclid_spark.operators.dedup import _substring_spans_build
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-    plan = _plan(_substring_spans_build(docs))
+    df = _substring_spans_build(docs)
+    plan = _plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert_no_python_eval(df)
     assert "LeftSemi" in plan  # dup-hash membership is a semi join
 
 
@@ -276,7 +274,7 @@ def test_dsir_bucket_lm_broadcasts(spark):
     df.collect()  # AQE finalizes
     plan = _plan(df)
     assert "BroadcastHashJoin" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert_no_python_eval(df)
 
 
 def test_perplexity_cutoffs_broadcast(spark):
@@ -306,25 +304,27 @@ def test_training_mix_semi_joins_jvm_only(spark):
     plan = _plan(df)
     assert "LeftSemi" in plan
     assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert_no_python_eval(df)
 
 
 def test_time_range_window_orders_on_epoch(spark):
     """B41 stays a single window pass on the JVM."""
     from euclid_spark.operators.relational import window_time_range_agg
 
-    plan = _plan(window_time_range_agg(spark, SF_SMOKE))
+    df = window_time_range_agg(spark, SF_SMOKE)
+    plan = _plan(df)
     assert "Window" in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert_no_python_eval(df)
 
 
 def test_bm25_no_corpus_shuffle(spark):
     """C34: the only exchange may carry the ONE-ROW stats aggregate —
     scoring is row-local and the top-k is TakeOrderedAndProject, so no
     corpus-wide shuffle or sort exists anywhere in the plan."""
-    plan = _plan(textops.text_bm25_topk(spark, SF_SMOKE))
+    df = textops.text_bm25_topk(spark, SF_SMOKE)
+    plan = _plan(df)
     assert "TakeOrderedAndProject" in plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert_no_python_eval(df)
     # exchanges: exactly the scalar-stats aggregate (+ its broadcast)
     n_shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
     assert n_shuffles <= 1, plan
@@ -340,18 +340,20 @@ def test_rag_chunks_zero_exchanges(spark):
 def test_winnowing_only_selected_fingerprints_shuffle(spark):
     """C41: the only exchange is the final distinct over the SELECTED
     fingerprints (sampled density), never the token stream."""
-    plan = _plan(textops.text_winnowing(spark, SF_SMOKE))
+    df = textops.text_winnowing(spark, SF_SMOKE)
+    plan = _plan(df)
     n_shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
     assert n_shuffles <= 1, plan
-    assert "EvalPython" not in plan
+    assert_no_python_eval(df)
 
 
 def test_state_diff_broadcasts_heights(spark):
     """A22: the two probe heights join in as broadcasts; the account
     join keys on the aggregation key."""
-    plan = _plan(euclid.state_diff(spark, SF_SMOKE))
+    df = euclid.state_diff(spark, SF_SMOKE)
+    plan = _plan(df)
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "EvalPython" not in plan
+    assert_no_python_eval(df)
 
 
 def test_unpivot_is_single_rollup(spark):
@@ -416,10 +418,12 @@ def _answered_levels(flt, rows, requested, where) -> "dict[tuple, int]":
 def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
     """A25 and the owner-scoped A26/A29/A30/A31 requests over a wide
     range at sf0.01: every artifact read goes through
-    artifacts.read_rows, tile-tree reads return ≤ 2 rows per answered
-    (owner, level) (the response's cell-tree reads, which also fetch
-    the opening-path siblings of ≤ L revealed rows, ≤ L per level) and
-    no row that answers no requested node, every
+    artifacts.read_rows, each request reads its tile tree's cover ONCE
+    (a Q2 response takes its cover keys and its cover digests from one
+    `chain_filter` read of the keyed tree), a cover read returns ≤ 2
+    rows per answered (owner, level) and a response's read of the
+    opening-path siblings of ≤ L revealed rows ≤ L per level, and no
+    tree read returns a row that answers no requested node, every
     edge read returns only rows inside the two < TILE_SIZE edge
     windows, every other read of a response's leaf store is its
     ("cell", "in", touched) read of ≤ TOP_L cells with ≤ TILE_SIZE rows
@@ -471,6 +475,9 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
         monkeypatch.setattr(mod, "chain_filter", chain_spy)
     edges = range_tree.tile_cover(b_min, b_max, 30)[1]
     assert len(edges) == 2  # both ends are partial cells
+    covers = {  # the range's cover at any tree depth
+        frozenset(range_tree.tile_cover(b_min, b_max, d)[0]) for d in range(64)
+    }
     tile_trees = ("range_tree_tiles_", "q2_key_tiles_", "erc20_reward_tiles_")
     edge_stores = ("events.parquet", "q2_entry_store_", "erc20_all_entry_leaves_",
                    "rr_erc20_leaves_")
@@ -480,12 +487,20 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
         df = call()
         assert _newest_job_id(spark) == before, f"{name} ran a Spark job"
         assert reads, f"{name} read nothing through artifacts.read_rows"
-        cell_reads = 0
+        cell_reads = cover_reads = 0
         for path, flt, rows in reads:
             base = path.rstrip("/").rsplit("/", 1)[-1]
-            if base.startswith(tile_trees) or "_celltree_" in base:
+            if base.startswith(tile_trees) or id(flt) in requested:
                 per_level = _answered_levels(flt, rows, requested, (name, base))
-                cap = 2 if base.startswith(tile_trees) else max(2, TOP_L)
+                nodes = requested[id(flt)][1] if id(flt) in requested else None
+                if nodes is None or frozenset(
+                    (k, c) for _, k, c in nodes
+                ) in covers:
+                    cover_reads += 1
+                    cap = 2
+                else:  # the opening-path siblings of ≤ L revealed rows
+                    assert name.endswith("_range_response"), (name, base)
+                    cap = max(2, TOP_L)
                 assert max(per_level.values(), default=0) <= cap, (name, base)
                 continue
             touched = [
@@ -519,8 +534,36 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
                 raise AssertionError(f"{name}: unbounded leaf read {flt}")
         if name.endswith("_range_response"):
             assert cell_reads == 1, name  # the revealed rows open cells
+        assert cover_reads == 1, (name, cover_reads)
         assert df.count() > 0
         assert _newest_job_id(spark) > before  # the action is the first job
+
+
+def test_empty_answers_run_no_spark_job(spark):
+    """An owner-scoped request for an owner with no rows in range, and a
+    degenerate range, return an empty frame with the face's schema, and
+    no Spark job runs from the call to the end of `collect()`: an empty
+    answer is an empty Arrow table (catalog.local_frame), not a
+    parallelized empty list."""
+    from euclid_spark.operators import range_response, range_tree
+
+    for fn, own in (
+        (range_response.q2_range_response, {"owner": 7}),
+        (range_tree.erc20_range_tree_reward, {"owner": 7}),
+        (range_tree.range_tree_agg, {}),
+    ):
+        name = fn.__name__
+        full = fn(spark, SF_SMOKE, **own, b_min=0, b_max=1000)
+        assert full.collect(), name  # builds what the face serves
+        requests = [{**own, "b_min": b, "b_max": b} for b in (0, 300)]
+        if own:
+            requests.append({"owner": 10**9, "b_min": 300, "b_max": 500})
+        for kw in requests:
+            before = _newest_job_id(spark)
+            df = fn(spark, SF_SMOKE, **kw)
+            assert df.collect() == [], (name, kw)
+            assert _newest_job_id(spark) == before, (name, kw, "ran a Spark job")
+            assert df.schema == full.schema, (name, kw)
 
 
 def test_erc20_responses_served_plans_have_no_arrow(spark, tmp_path, monkeypatch):
@@ -536,9 +579,7 @@ def test_erc20_responses_served_plans_have_no_arrow(spark, tmp_path, monkeypatch
         merkle.erc20_verifiable_response,
         merkle.erc20_batch_verifiable_responses,
     ):
-        plan = _plan(fn(spark, SF_SMOKE))
-        assert "ArrowEvalPython" not in plan, f"{fn.__name__} re-runs the leaf"
-        assert "BatchEvalPython" not in plan
+        assert_no_python_eval(fn(spark, SF_SMOKE), f"{fn.__name__} re-runs the leaf")
 
 
 def test_quantile_sketch_stays_jvm_side(spark):
@@ -546,8 +587,9 @@ def test_quantile_sketch_stays_jvm_side(spark):
     anywhere, and the sketch aggregation is a plain hash aggregate."""
     from euclid_spark.operators import quantile_sketch
 
-    plan = _plan(quantile_sketch.hdr_quantiles(spark, SF_SMOKE))
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    df = quantile_sketch.hdr_quantiles(spark, SF_SMOKE)
+    plan = _plan(df)
+    assert_no_python_eval(df)
     assert "HashAggregate" in plan
 
 
@@ -560,8 +602,9 @@ def test_leakage_split_serves_labels_no_python(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path / "_arts"))
     df = curation_leakage_safe_split(spark, SF_SMOKE)
     df.collect()  # builds + serves the labels artifact, finalizes AQE
-    plan = _plan(curation_leakage_safe_split(spark, SF_SMOKE))
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    served = curation_leakage_safe_split(spark, SF_SMOKE)
+    plan = _plan(served)
+    assert_no_python_eval(served)
     assert "CartesianProduct" not in plan
     # served path: the labels come from the artifact store, not a
     # re-run of the pair pipeline (no shingle explode in the plan)
@@ -574,11 +617,12 @@ def test_event_dedup_window_no_self_join(spark):
     integer microseconds."""
     from euclid_spark.operators.timeseries import event_dedup_window
 
-    plan = _plan(event_dedup_window(spark, SF_SMOKE))
+    df = event_dedup_window(spark, SF_SMOKE)
+    plan = _plan(df)
     assert "Window" in plan
-    for bad in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
-                "BatchEvalPython", "ArrowEvalPython"):
+    for bad in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct"):
         assert bad not in plan, f"unexpected {bad} in B54 plan"
+    assert_no_python_eval(df, "B54")
 
 
 def test_triangle_count_serves_ledger_no_cartesian(spark, tmp_path, monkeypatch):
@@ -590,9 +634,10 @@ def test_triangle_count_serves_ledger_no_cartesian(spark, tmp_path, monkeypatch)
     monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path / "_arts"))
     df = graph_triangle_count(spark, SF_SMOKE)
     df.collect()  # builds + serves the pair-ledger artifact
-    plan = _plan(graph_triangle_count(spark, SF_SMOKE))
+    df = graph_triangle_count(spark, SF_SMOKE)
+    plan = _plan(df)
     assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    assert_no_python_eval(df)
     assert "posexplode" not in plan.lower().replace("explode(array", "")
 
 

@@ -310,6 +310,20 @@ def _cell_roots(lv: "list[dict]", family: str) -> "dict[tuple, str]":
     return {g: t[max(t)][0] for g, t in trees.items()}
 
 
+def _cell_tree(roots: "dict[tuple, str]", depth: int) -> "dict[tuple, str]":
+    """{(owner, level, pos): hash} of the promotion-paired cell tree
+    over `roots` ({(owner, cell): root}), levels 0..depth."""
+    by_owner: "dict[int, dict]" = {}
+    for (o, c), h in roots.items():
+        by_owner.setdefault(o, {})[c] = h
+    out = {}
+    for o, lvl in by_owner.items():
+        for k in range(depth + 1):
+            out.update(((o, k, p), h) for p, h in lvl.items())
+            lvl = _parent(lvl)
+    return out
+
+
 def _expand_chains(
     rows: "list[dict]", cols: "list[str]"
 ) -> "tuple[dict[tuple, tuple], list[tuple]]":
@@ -340,14 +354,14 @@ def _norm(v):
 
 
 def test_stores_hold_binary_digests_and_answers_match_a_hex_recompute(spark):
-    """The four commitment stores hold every digest (the cell tree's
-    node_hash, and the ERC-20 entry_reward_hex payload) as 32 raw bytes
-    and no leaf hash, and the driver answers of both response faces
-    equal a recompute over the stores' hexed rows: leaf hashes from
-    payloads, each (owner, cell)'s in-cell tree level by level from
-    them, the cell tree's level 0 from those roots and each stored
-    cell-tree level from the one below, and each response root from
-    its cover tiles and edge leaves."""
+    """The leaf stores and the keyed trees hold every digest (the
+    trees' cell-tree node_hash, and the ERC-20 entry_reward_hex
+    payload) as 32 raw bytes and no leaf hash, and the driver answers
+    of both response faces equal a recompute over the stores' hexed
+    rows: leaf hashes from payloads, each (owner, cell)'s in-cell tree
+    level by level from them, the cell tree's level 0 from those roots
+    and each stored cell-tree level from the one below, and each
+    response root from its cover tiles and edge leaves."""
     import pyarrow as pa
 
     from euclid_spark import artifacts
@@ -439,17 +453,16 @@ def deep_corpus(spark, tmp_path_factory) -> "tuple[str, str]":
 
 
 def _chain_stores(spark, monkeypatch, corpus, deep_corpus) -> list:
-    """Per owner-keyed store at `corpus` ("smoke" or "deep"): (name,
+    """Per owner-keyed tree at `corpus` ("smoke" or "deep"): (name,
     the chain rows expanded to nodes, the chain bottoms, the full node
-    set). The full node set is `levels()` for the two keyed tile trees,
-    and for the two cell trees the promotion-paired levels 0..depth
-    refolded here from the leaf store's payloads."""
-    from euclid_spark import artifacts
+    set). A node's value is its `levels()` payload and its cell-tree
+    digest: the promotion-paired levels 0..depth refolded here from the
+    leaf store's payloads, at the tree's depth."""
     from euclid_spark.operators.range_response import range_commitment_paths
     from euclid_spark.operators.range_tree import (
         ERC20_REWARD_TREE,
         Q2_KEY_TREE,
-        tree_depth,
+        _depth,
     )
 
     sf = SF_SMOKE
@@ -457,30 +470,21 @@ def _chain_stores(spark, monkeypatch, corpus, deep_corpus) -> list:
         sf, arts = deep_corpus
         monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", arts)
     out = []
-    for tree in (Q2_KEY_TREE, ERC20_REWARD_TREE):
+    for tree, family in ((Q2_KEY_TREE, "q2"), (ERC20_REWARD_TREE, "erc20")):
         cols = list(tree.cols)
-        nodes, bottoms = _expand_chains(
-            artifacts.read_rows(tree.path(spark, sf)), cols
+        leaves, path, _ = range_commitment_paths(spark, sf, family)
+        assert path == tree.path(spark, sf)
+        nodes, bottoms = _expand_chains(_store_rows(path), [*cols, "node_hash"])
+        digest = _cell_tree(
+            _cell_roots(_store_rows(leaves), family), _depth(spark, sf)
         )
         full = {
             (r["owner"], r["level"], r["cell"]): _norm([r[c] for c in cols])
+            + (digest[(r["owner"], r["level"], r["cell"])],)
             for r in tree.levels(spark, sf).collect()
         }
+        assert full.keys() == digest.keys(), tree.name
         out.append((tree.name, nodes, bottoms, full))
-    for family in ("q2", "erc20"):
-        leaves, cells, _ = range_commitment_paths(spark, sf, family)
-        nodes, bottoms = _expand_chains(_store_rows(cells), ["node_hash"])
-        roots = _cell_roots(_store_rows(leaves), family)
-        depth = tree_depth(max(c for _, c in roots) + 1)
-        by_owner: "dict[int, dict]" = {}
-        for (o, c), h in roots.items():
-            by_owner.setdefault(o, {})[c] = h
-        full = {}
-        for o, lvl in by_owner.items():
-            for k in range(depth + 1):
-                full.update(((o, k, p), (h,)) for p, h in lvl.items())
-                lvl = _parent(lvl)
-        out.append((f"rr_{family}_celltree", nodes, bottoms, full))
     return out
 
 
@@ -488,11 +492,11 @@ def _chain_stores(spark, monkeypatch, corpus, deep_corpus) -> list:
 def test_chain_stores_expand_to_full_node_sets(
     spark, monkeypatch, deep_corpus, corpus
 ):
-    """The four owner-keyed stores (the two keyed tile trees, the two
-    cell trees) hold one row per chain; expanding each row to node
-    (k, lo >> k) at every k in [level, top] gives the full node set
-    exactly — every node once, with its payload — at SF_SMOKE and on
-    a ≥ 10-level tree."""
+    """The two owner-keyed trees hold one row per chain; expanding each
+    row to node (k, lo >> k) at every k in [level, top] gives the full
+    node set exactly — every `levels()` node once, with its payload and
+    its refolded cell-tree digest, and no other node — at SF_SMOKE and
+    on a ≥ 10-level tree."""
     for name, nodes, _, full in _chain_stores(
         spark, monkeypatch, corpus, deep_corpus
     ):
@@ -523,16 +527,98 @@ def test_chain_stores_hold_no_copies(spark, monkeypatch, deep_corpus, corpus):
             assert len(bottoms) < len(full) / 2, (name, len(bottoms), len(full))
 
 
+@pytest.fixture(scope="module")
+def tail_corpus(spark, tmp_path_factory) -> "tuple[str, str]":
+    """(corpus, artifact root): SF_SMOKE's events plus its non-purchase
+    events again 4 000 blocks later. No entry of either family lies
+    past cell 3 (depth 2), while the events run to cell 19 (depth 5):
+    the events cross three powers of two of cells after the last
+    qualifying entry."""
+    root = tmp_path_factory.mktemp("tail")
+    ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+    ev.unionByName(
+        ev.filter(F.col("event_type") != "purchase")
+        .withColumn("event_id", F.col("event_id") + 4000)
+    ).coalesce(1).write.parquet(str(root / "tail" / "events.parquet"))
+    return str(root / "tail"), str(root / "_arts")
+
+
+@pytest.mark.parametrize("corpus", ["tail", "deep"])
+def test_response_cover_depth_follows_the_last_qualifying_cell(
+    spark, monkeypatch, tail_corpus, deep_corpus, corpus
+):
+    """The keyed trees are built to the events' depth, but a response's
+    cover depth is tree_depth(max qualifying cell + 1), from the leaf
+    store: `_response_root` and both response faces, for several owners
+    and ranges (the whole block span among them), equal a recompute
+    from the leaf store alone — the cell roots refolded from its
+    payloads, the cell tree paired up to that depth, and the cover's
+    occupied nodes chained onto the header."""
+    from collections import Counter
+
+    from euclid_spark.operators.euclid import REWARDS_RATE
+    from euclid_spark.operators.range_response import (
+        _response_root,
+        range_commitment_paths,
+    )
+    from euclid_spark.operators.range_tree import (
+        TILE_SIZE,
+        _depth,
+        _max_event_id,
+        tile_cover,
+        tree_depth,
+    )
+
+    sf, arts = tail_corpus if corpus == "tail" else deep_corpus
+    monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", arts)
+    span = _max_event_id(spark, sf) // TILE_SIZE + 1
+    for family, fn in (("q2", q2_range_response), ("erc20", erc20_range_response)):
+        leaves, _, depth = range_commitment_paths(spark, sf, family)
+        roots = _cell_roots(_store_rows(leaves), family)
+        top = max(c for _, c in roots)
+        assert depth == tree_depth(top + 1), family
+        if corpus == "tail":
+            assert depth == 2 and _depth(spark, sf) == 5, family
+        nodes = _cell_tree(roots, depth)
+        n_cells = Counter(o for o, _ in roots)
+        owners = sorted(n_cells, key=lambda o: (-n_cells[o], o))[:2]
+        ranges = [(0, span), (0, top + 1), (1, top + 1), (top // 2, span)]
+        for owner in owners:
+            for lo, hi in ranges:
+                b_min, b_max = lo * TILE_SIZE, hi * TILE_SIZE
+                cover, edges = tile_cover(b_min, b_max, depth)
+                assert cover and not edges
+                hashes = [nodes[(owner, k, c)] for k, c in cover
+                          if (owner, k, c) in nodes]
+                acc = _sha_hex(f"hdr:{b_min}:{b_max}:{owner}" + (
+                    f":{REWARDS_RATE}" if family == "erc20" else ""))
+                for h in hashes:
+                    acc = _sha_hex(acc + h)
+                where = (family, owner, b_min, b_max)
+                assert _response_root(
+                    spark, sf, family, owner, b_min, b_max
+                ) == acc, where
+                rows = fn(spark, sf, owner=owner, b_min=b_min, b_max=b_max
+                          ).collect()
+                assert bool(rows) == bool(hashes), where
+                if rows:
+                    assert rows[0]["elements"] == "/".join(hashes), where
+                    assert {r["response_root"] for r in rows} == {acc}, where
+                    _check_rows(rows, family)
+
+
 def test_commitment_stores_are_byte_identical_across_builds(
     spark, tmp_path, monkeypatch
 ):
-    """Building the four commitment stores, the two keyed tile trees,
-    the trees' two input-row stores and merkle.py's owner-token and
-    ERC-20 entry trees (leaves and nodes) twice, each time into an
-    empty artifact root, writes the same part files byte for byte: the
-    owner and event_id clustering is a function of the data, not of a
-    sampled bound, and each store's sort is a total order. The four
-    owner-keyed trees are in the chain layout."""
+    """Building the two leaf stores, the two keyed tile trees (each
+    node's aggregate and its cell-tree digest), the trees' two
+    input-row stores and merkle.py's owner-token and ERC-20 entry trees
+    (leaves and nodes) twice, each time into an empty artifact root,
+    writes the same part files byte for byte: the owner and event_id
+    clustering is a function of the data, not of a sampled bound, and
+    each store's sort is a total order. The two owner-keyed trees are
+    in the chain layout and carry both their payload columns and
+    `node_hash`."""
     import glob
     import os
 
@@ -555,8 +641,8 @@ def test_commitment_stores_are_byte_identical_across_builds(
             for tree in (Q2_KEY_TREE, ERC20_REWARD_TREE)
             for store in (True, False)
         ]
-        for family in ("q2", "erc20"):
-            paths += range_commitment_paths(spark, SF_SMOKE, family)[:2]
+        for family in ("q2", "erc20"):  # the leaf stores
+            paths.append(range_commitment_paths(spark, SF_SMOKE, family)[0])
         _owner_token_tree(spark, SF_SMOKE)
         _erc20_entry_tree(spark, SF_SMOKE)
         for name in ("owner_token", "erc20_entry"):
@@ -565,10 +651,12 @@ def test_commitment_stores_are_byte_identical_across_builds(
         parts: "dict[tuple, bytes]" = {}
         for path in paths:
             store = os.path.basename(path).rsplit("_", 1)[0]
-            if store.endswith(("_tiles", "_celltree")):
-                names = set(artifacts.footer_stats(path).schema.names)
-                assert {"owner", "level", "top", "lo"} <= names, (store, names)
-                assert not {"cell", "pos"} & names, (store, names)
+            if store.endswith("_tiles"):
+                tree = Q2_KEY_TREE if store == Q2_KEY_TREE.name else ERC20_REWARD_TREE
+                names = artifacts.footer_stats(path).schema.names
+                assert names == [
+                    "owner", "level", "top", "lo", *tree.cols, "node_hash"
+                ], (store, names)
             for f in os.listdir(path):
                 if f.startswith("part-"):
                     # part-<task>-<write uuid>-c000...: key on the task
@@ -579,8 +667,7 @@ def test_commitment_stores_are_byte_identical_across_builds(
 
     first, second = build(tmp_path / "a"), build(tmp_path / "b")
     assert {k[0] for k in first} == {
-        "rr_q2_leaves", "rr_q2_celltree", "rr_erc20_leaves",
-        "rr_erc20_celltree", "q2_key_tiles", "q2_entry_store",
+        "rr_q2_leaves", "rr_erc20_leaves", "q2_key_tiles", "q2_entry_store",
         "erc20_reward_tiles", "erc20_all_entry_leaves",
         "owner_token_leaves", "owner_token_nodes",
         "erc20_entry_leaves", "erc20_entry_nodes",
