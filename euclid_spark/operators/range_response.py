@@ -19,12 +19,16 @@ Construction — the reference's own aggregation shape, hash-only:
       qualifying rows — ERC-20: the owner's entries in block order,
       leaf = sha256(event_id ':' entry_reward_hex) (A23's encoding);
       Q2: the owner's DISTINCT mapping keys in key order,
-      leaf = sha256(token_id) (A20's encoding). Only the leaf
-      PAYLOADS are stored: a cell holds ≤ TILE_SIZE leaves, so its
-      leaf hashes and in-cell nodes are refolded wherever they are
-      needed — in memory by the tree build (`cell_tree`), and on the
-      driver (`merkle.merkle_levels_local`) for the ≤ L cells a
-      response opens into;
+      leaf = sha256(token_id) (A20's encoding). No leaf is stored: the
+      leaves are the rows of the family's keyed tree's entry store
+      (owner, event_id, payload), owner-clustered and sorted by
+      (owner, event_id), which the tree build and the edge windows
+      read too. A cell holds ≤ TILE_SIZE rows, so its leaf order
+      (`pos`), the ERC-20 reward hex, the leaf hashes and the in-cell
+      nodes are derived wherever they are needed — by a window in the
+      tree build (`cell_tree`), and on the driver (`cell_leaves`,
+      `merkle.merkle_levels_local`) for the ≤ L cells a response
+      opens into;
     * a "cell tree" above them: level 0 holds the cell roots, and node
       (level k, pos c) commits cells [c·2^k, (c+1)·2^k) —
       merkle_levels' pairing: one grouped pass per owner over its
@@ -55,23 +59,27 @@ Construction — the reference's own aggregation shape, hash-only:
 
 - **Cost shape**: the artifacts are built once per corpus version (by
   Spark); a query is answered on the driver. `artifacts.read_rows`
-  fetches, from the owner-clustered stores, the owner's O(log range)
-  cover-tile digests, its rows in the two < TILE_SIZE edge slices,
-  the revealed rows, the leaves of the ≤ L touched cells (≤ TILE_SIZE
-  rows each) and the ≤ L·depth cell-tree siblings, each tree node
-  matching the one chain row that holds it (`chain_filter`), a Q2
-  response's cover keys in the same read; Python hashes the leaves,
-  refolds the touched cells and returns one local frame, so no Spark
-  job runs until the caller acts on it. Nothing reads the range
-  interior (asserted by the --events scale probe) except the two
-  reads bounded only by the owner's rows in the range: the ERC-20
-  revealed rows and the q2 L > Q2_L fallback. The stores hold no
-  value a bounded read can recompute (no leaf hash, no in-cell node,
-  no promotion copy — an owner's tree is O(its cells) rows, not
-  O(cells × depth)), and every stored digest as its 32 raw bytes
-  (half the bytes of its hex spelling); hex appears only in responses
-  — the builds and the driver reads turn the bytes back into the
-  lowercase hex the hashes are defined over.
+  fetches, from the two owner-clustered stores of a family (its entry
+  store and its keyed tree), the owner's O(log range) cover-tile
+  digests, its entry rows in the two < TILE_SIZE edge windows (read
+  once; a Q2 response's key fold reuses them), the revealed rows, the
+  entry rows of the ≤ L touched cells (one event_id window per cell,
+  ≤ TILE_SIZE rows each) and the ≤ L·depth cell-tree siblings, each
+  tree node matching the one chain row that holds it
+  (`chain_filter`), a Q2 response's cover keys in the same read;
+  Python ranks each opened cell's leaves, spells the ERC-20 rewards in
+  hex, hashes the leaves, refolds the touched cells and returns one
+  local frame, so no Spark job runs until the caller acts on it.
+  Nothing reads the range interior (asserted by the --events scale
+  probe) except the two reads bounded only by the owner's rows in the
+  range: the ERC-20 revealed rows and the q2 L > Q2_L fallback. The
+  stores hold no value a bounded read can recompute (no cell, leaf
+  position, reward hex, leaf hash or in-cell node; no promotion copy
+  — an owner's tree is O(its cells) rows, not O(cells × depth)), and
+  every stored digest as its 32 raw bytes (half the bytes of its hex
+  spelling); hex appears only in responses — the builds and the
+  driver reads turn the bytes back into the lowercase hex the hashes
+  are defined over.
 
 Verification (A32/A33 faces + the standalone tool): leaf re-derives
 from the payload; path refolds leaf → element; the element sits at its
@@ -94,7 +102,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from euclid_spark import artifacts
-from euclid_spark.catalog import cached_parquet, local_frame
+from euclid_spark.catalog import local_frame
 from euclid_spark.functions.u256 import u256_to_hex
 from euclid_spark.operators.merkle import (
     merkle_levels,
@@ -109,9 +117,7 @@ from euclid_spark.operators.range_tree import (
     TILE_SIZE,
     _cell,
     _edge_filter,
-    _events_span,
     _probe_range,
-    _q2_entries,
     chain_filter,
     chain_match,
     tile_cover,
@@ -129,20 +135,22 @@ CELL_LVL_OFF = 100
 # --------------------------------------------------------------------------
 
 
-def _fp(sf_dir: str, family: str, rate, contract, layout=None) -> str:
-    """The response family's fingerprint; `layout` keys the commitment
-    stores' write layout (the published responses carry none)."""
+def _fp(sf_dir: str, family: str, rate, contract) -> str:
+    """The published response family's fingerprint."""
     from euclid_spark.operators.euclid import CONTRACT, REWARDS_RATE
 
     params = {"op": f"range_response_{family}", "tile": TILE_SIZE,
               "contract": CONTRACT if contract is None else contract}
-    if layout is not None:
-        params["layout"] = layout
     if family == "erc20":
         params["rate"] = REWARDS_RATE if rate is None else int(rate)
     return artifacts.corpus_fingerprint(
         [f"{sf_dir}/events.parquet"], **params
     )
+
+
+# each family's keyed tile tree, whose entry store holds its leaves
+_TREES = {"q2": Q2_KEY_TREE, "erc20": ERC20_REWARD_TREE}
+_LIMBS = ("l0", "l1", "l2", "l3")
 
 
 def q2_leaf_hash(token_id: Column) -> Column:
@@ -160,44 +168,6 @@ def erc20_leaf_hash(event_id: Column, entry_hex: Column) -> Column:
     return F.sha2(F.concat_ws(":", event_id.cast("string"), entry_hex), 256)
 
 
-def _q2_cell_leaf_rows(
-    spark: SparkSession, sf_dir: str, contract: "str | None"
-) -> DataFrame:
-    """Level-0 leaves, Q2 family: per (owner, cell), the DISTINCT
-    mapping keys in key order — the cell-local slice of the committed
-    result trace."""
-    from euclid_spark.catalog import load_events
-
-    keys = (
-        _q2_entries(load_events(spark, sf_dir), contract)
-        .select("owner", _cell().alias("cell"), "token_id")
-        .distinct()
-    )
-    w = Window.partitionBy("owner", "cell").orderBy("token_id")
-    return keys.select(
-        "owner", "cell", "token_id", (F.row_number().over(w) - 1).alias("pos")
-    )
-
-
-def _erc20_cell_leaf_rows(
-    spark: SparkSession, sf_dir: str, rate, contract: "str | None"
-) -> DataFrame:
-    """Level-0 leaves, ERC-20 family: per (owner, cell), the owner's
-    entries in block order with the leaf circuit's reward (BINARY(32)),
-    read from the served entry-leaf store."""
-    rows = ERC20_REWARD_TREE.frame(
-        spark, sf_dir, contract=contract, rate=rate, store=True
-    )
-    w = Window.partitionBy("owner", "cell").orderBy("event_id")
-    return rows.select(
-        "owner",
-        "cell",
-        "event_id",
-        F.unhex(erc20_entry_hex()).alias("entry_reward_hex"),
-        (F.row_number().over(w) - 1).alias("pos"),
-    )
-
-
 def _leaf_hash(family: str) -> Column:
     """The family's leaf hash over its payload columns."""
     if family == "erc20":
@@ -205,64 +175,29 @@ def _leaf_hash(family: str) -> Column:
     return q2_leaf_hash(F.col("token_id"))
 
 
-# The commitment stores hold every sha256 digest as its 32 raw bytes;
-# the hash definition concatenates lowercase hex (A18's wire format),
-# so the builds unhex what they store and the reads hex it back
-# (`cell_tree`, `_read_rows`).
-_DIGESTS = ("node_hash", "entry_reward_hex")
-
-
-def _read_rows(
-    path: str, filter: "list[list[tuple]]", columns: "list[str]"
-) -> "list[dict]":
-    """`artifacts.read_rows` over a commitment store, digests as
-    lowercase hex."""
-    rows = artifacts.read_rows(path, filter, columns)
-    for r in rows:
-        for c in _DIGESTS:
-            if r.get(c) is not None:
-                r[c] = r[c].hex()
-    return rows
-
-
-def _leaf_store(
-    spark: SparkSession, sf_dir: str, family: str, rate, contract
-) -> str:
-    """The family's leaf store, built on a miss: (owner, cell,
-    <payload cols>, pos) — the in-cell trees' leaves, pos in key (q2)
-    or block (ERC-20) order per (owner, cell) — in equal-width owner
-    buckets over the events' user_id span, each file sorted by (owner,
-    cell, pos), with fine row groups."""
-
-    def build() -> DataFrame:
-        rows = (
-            _erc20_cell_leaf_rows(spark, sf_dir, rate, contract)
-            if family == "erc20"
-            else _q2_cell_leaf_rows(spark, sf_dir, contract)
-        )
-        return artifacts.clustered(
-            spark, rows, "owner", _events_span(spark, sf_dir, "user_id"),
-            "cell", "pos",
-        )
-
-    return artifacts.ensure(
-        f"rr_{family}_leaves",
-        _fp(sf_dir, family, rate, contract, layout="bin_v2"),
-        build, artifacts.FINE_ROW_GROUPS,
-    )
-
-
 def cell_tree(
     spark: SparkSession, sf_dir: str, family: str, depth: int, rate, contract
 ) -> DataFrame:
     """The family's cell tree, levels 0..`depth`, as (owner, level,
     cell, node_hash BINARY(32)): each (owner, cell)'s in-cell tree
-    folded in memory from the leaf payloads, then merkle_levels."""
-    lv = cached_parquet(spark, _leaf_store(spark, sf_dir, family, rate, contract))
+    folded in memory from its leaves in the entry store — Q2 the
+    distinct keys ranked by token_id, ERC-20 the entries ranked by
+    event_id with their reward hex — then merkle_levels."""
+    rows = _TREES[family].frame(
+        spark, sf_dir, contract, rate, store=True
+    ).withColumn("cell", _cell())
     if family == "erc20":
-        lv = lv.withColumn("entry_reward_hex", F.lower(F.hex("entry_reward_hex")))
+        rows = rows.withColumn("entry_reward_hex", erc20_entry_hex())
+        order = "event_id"
+    else:  # the distinct keys
+        rows = rows.select("owner", "cell", "token_id").distinct()
+        order = "token_id"
+    pos = F.row_number().over(Window.partitionBy("owner", "cell").orderBy(order))
     roots = merkle_roots(
-        lv.select("owner", "cell", "pos", _leaf_hash(family).alias("node_hash")),
+        rows.select(
+            "owner", "cell", (pos - 1).alias("pos"),
+            _leaf_hash(family).alias("node_hash"),
+        ),
         ("owner", "cell"),
     ).select(
         "owner", F.col("cell").alias("pos"), F.col("root").alias("node_hash")
@@ -281,35 +216,94 @@ def range_commitment_paths(
     rewards_rate: "int | None" = None,
     contract: "str | None" = None,
 ) -> "tuple[str, str, int]":
-    """(leaves, tree, depth): the leaf store (`_leaf_store`), the
-    family's keyed tile tree — (owner, level, top, lo, <payload cols>,
-    node_hash), one row per chain (range_tree.chains), node_hash the
-    node's cell-tree digest — each built on a miss, and the response's
-    cover depth, tree_depth(max qualifying cell + 1) from the leaf
-    store's footers. The tree is built to the events' depth, never
-    smaller, so it holds every node such a cover names."""
-    leaves = _leaf_store(spark, sf_dir, family, rewards_rate, contract)
-    tree = (ERC20_REWARD_TREE if family == "erc20" else Q2_KEY_TREE).path(
-        spark, sf_dir, contract, rewards_rate
+    """(entries, tree, depth): the family's owner-clustered entry store
+    — Q2 (owner, event_id, token_id), ERC-20 (owner, event_id, l0..l3,
+    zs, of), sorted by (owner, event_id) — whose rows are the in-cell
+    trees' leaves (`cell_leaves`), the family's keyed tile tree —
+    (owner, level, top, lo, <payload cols>, node_hash), one row per
+    chain (range_tree.chains), node_hash the node's cell-tree digest —
+    each built on a miss, and the response's cover depth,
+    tree_depth(max qualifying cell + 1) from the entry store's event_id
+    footer. The tree is built to the events' depth, never smaller, so
+    it holds every node such a cover names."""
+    tree = _TREES[family]
+    entries = tree.path(spark, sf_dir, contract, rewards_rate, store=True)
+    path = tree.path(spark, sf_dir, contract, rewards_rate)
+    me = artifacts.footer_stats(entries).span("event_id")[1]
+    return entries, path, 0 if me is None else tree_depth(
+        int(me) // TILE_SIZE + 1
     )
-    mc = artifacts.footer_stats(leaves).span("cell")[1]
-    return leaves, tree, 0 if mc is None else tree_depth(int(mc) + 1)
+
+
+def _entry_cols(family: str) -> "list[str]":
+    """The entry-store columns a response reads: owner, block, payload."""
+    return ["owner", "event_id", *(_LIMBS if family == "erc20" else ("token_id",))]
+
+
+def _payload(family: str, r: dict) -> dict:
+    """An entry-store row's leaf payload: Q2 its key, ERC-20 its block
+    and its reward Σ lᵢ·2^(64i) as 64 hex digits (`erc20_entry_hex` on
+    the driver)."""
+    if family == "erc20":
+        return {"event_id": r["event_id"], "entry_reward_hex": "%064x" % sum(
+            int(r[c]) << (64 * i) for i, c in enumerate(_LIMBS)
+        )}
+    return {"token_id": r["token_id"]}
+
+
+def cell_leaves(
+    family: str, rows: "list[dict]"
+) -> "dict[tuple[int, int], list[dict]]":
+    """{(owner, cell): leaves} of entry-store rows holding whole cells:
+    each in-cell tree's leaves in leaf order — Q2 the distinct keys by
+    token_id, ERC-20 the entries by event_id with their reward hex —
+    each with its cell and its pos, its index. `cell_tree`'s window on
+    the driver."""
+    by_cell: "dict[tuple[int, int], list[dict]]" = {}
+    for r in rows:
+        by_cell.setdefault((r["owner"], r["event_id"] // TILE_SIZE), []).append(r)
+    out = {}
+    for (o, c), rs in by_cell.items():
+        if family == "erc20":
+            leaves = [
+                _payload(family, r) for r in sorted(rs, key=lambda r: r["event_id"])
+            ]
+        else:  # the distinct keys
+            leaves = [{"token_id": t} for t in sorted({r["token_id"] for r in rs})]
+        for p, leaf in enumerate(leaves):
+            leaf.update(cell=c, pos=p)
+        out[(o, c)] = leaves
+    return out
+
+
+def _cells_filter(
+    owner: int, cells: "list[tuple[int, int]]"
+) -> "list[list[tuple]]":
+    """`owner`'s rows in the level-0 cell spans [lo, hi] as a
+    `read_rows` filter on the entry store's event_id."""
+    return [
+        [("owner", "=", owner), ("event_id", ">=", lo * TILE_SIZE),
+         ("event_id", "<", (hi + 1) * TILE_SIZE)]
+        for lo, hi in cells
+    ]
 
 
 def _tree_nodes(
     tree: str, nodes: "list[tuple[int, int]]", owner: int, *cols: str
 ) -> "dict[tuple[int, int], dict]":
     """{(level, cell): chain row} of `owner`'s `nodes` in a keyed tree,
-    node_hash as hex and `cols` beside it: one `chain_filter` read."""
+    `cols` beside node_hash: one `chain_filter` read. The tree stores
+    each digest as its 32 raw bytes; the hash definition concatenates
+    lowercase hex (A18's wire format), so the read hexes it back."""
     if not nodes:
         return {}
-    return chain_match(
-        _read_rows(
-            tree, chain_filter(nodes, owner),
-            ["level", "top", "lo", *cols, "node_hash"],
-        ),
-        nodes,
+    rows = artifacts.read_rows(
+        tree, chain_filter(nodes, owner),
+        ["level", "top", "lo", *cols, "node_hash"],
     )
+    for r in rows:
+        r["node_hash"] = r["node_hash"].hex()
+    return chain_match(rows, nodes)
 
 
 # --------------------------------------------------------------------------
@@ -336,8 +330,7 @@ def _sha(v: "int | str") -> str:
 
 
 def _leaf_hex(family: str, r: dict) -> str:
-    """A leaf-store row's leaf hash from its payload — `_leaf_hash` on
-    the driver."""
+    """A leaf's hash from its payload — `_leaf_hash` on the driver."""
     if family == "erc20":
         return _sha(f"{r['event_id']}:{r['entry_reward_hex']}")
     return _sha(r["token_id"])
@@ -359,43 +352,45 @@ def _path_steps(
     return steps
 
 
+def _edge_rows(
+    entries: str, family: str, owner: int, edges: "list[tuple[int, int]]"
+) -> "list[dict] | None":
+    """`owner`'s entry-store rows in the two < TILE_SIZE edge windows
+    (None without edges): one `artifacts.read_rows` that the element
+    sequence and a Q2 response's key fold share."""
+    if not edges:
+        return None
+    return artifacts.read_rows(
+        entries, _edge_filter(edges, ("owner", "=", owner)),
+        _entry_cols(family),
+    )
+
+
 def _element_sequence(
-    spark: SparkSession,
-    sf_dir: str,
     family: str,
-    owner: int,
-    contract: "str | None",
-    leaves: str,
+    edge_rows: "list[dict] | None",
     tiles: "dict[tuple[int, int], dict]",
     cover: "list[tuple[int, int]]",
-    edges: "list[tuple[int, int]]",
 ) -> "list[tuple[int, str, dict]]":
     """The response's ELEMENT SEQUENCE in block order — low-edge
     leaves, occupied cover-tile subtree roots, high-edge leaves — as
-    (block_start, hash, meta) triples. Bounded: `tiles`, the owner's
-    ≤ 2 cover nodes per level, plus its rows in the two < TILE_SIZE
-    edge windows, each one `artifacts.read_rows` on the driver."""
-    own = ("owner", "=", owner)
+    (block_start, hash, meta) triples, from `tiles`, the owner's ≤ 2
+    cover nodes per level, and `edge_rows`, its rows in the two
+    < TILE_SIZE edge windows (`_edge_rows`)."""
     elems: "list[tuple[int, str, dict]]" = []
-    if edges and family == "erc20":
-        rows = _read_rows(
-            leaves, _edge_filter(edges, own), ["event_id", "entry_reward_hex"]
-        )
-        for r in sorted(rows, key=lambda r: r["event_id"]):
+    if family == "erc20":
+        for r in sorted(edge_rows or [], key=lambda r: r["event_id"]):
             eid = r["event_id"]
-            elems.append((eid, _leaf_hex(family, r), {"edge_id": eid}))
-    elif edges:
+            h = _leaf_hex(family, _payload(family, r))
+            elems.append((eid, h, {"edge_id": eid}))
+    else:
         # Q2 edges commit the DISTINCT keys seen in the partial cells —
         # one element per key, hash = sha256(token_id) (the same leaf
         # encoding as the in-cell trees, so a verifier re-derives every
         # element kind from revealed payloads), ordered by the key's
-        # first in-edge occurrence; read from the block-clustered entry
-        # store, not the raw events table
+        # first in-edge occurrence
         first: "dict[int, int]" = {}
-        for r in artifacts.read_rows(
-            Q2_KEY_TREE.path(spark, sf_dir, contract=contract, store=True),
-            _edge_filter(edges, own), ["event_id", "token_id"],
-        ):
+        for r in edge_rows or []:
             t = r["token_id"]
             first[t] = min(first.get(t, r["event_id"]), r["event_id"])
         for t, fid in sorted(first.items(), key=lambda kv: kv[1]):
@@ -431,15 +426,15 @@ def _response_root(
         if family == "erc20"
         else None
     )
-    leaves, tree, depth = range_commitment_paths(
+    entries, tree, depth = range_commitment_paths(
         spark, sf_dir, family, rewards_rate, contract
     )
     cover, edges = tile_cover(int(b_min), int(b_max), depth)
     if not cover and not edges:
         return None
     elems = _element_sequence(
-        spark, sf_dir, family, int(owner), contract, leaves,
-        _tree_nodes(tree, cover, int(owner)), cover, edges,
+        family, _edge_rows(entries, family, int(owner), edges),
+        _tree_nodes(tree, cover, int(owner)), cover,
     )
     return _fold(
         _hdr(int(b_min), int(b_max), int(owner), rate),
@@ -453,9 +448,9 @@ def _q2_revealed(
     owner: int,
     L: int,
     contract: "str | None",
-    leaves: str,
+    entries: str,
     cover: "list[tuple[int, int]]",
-    edge_toks: "set[int]",
+    edge_rows: "list[dict] | None",
     req: "tuple | None",
     tiles: "list[dict] | None",
 ) -> "list[dict]":
@@ -466,16 +461,18 @@ def _q2_revealed(
 
     L ≤ Q2_L reads the keys WITH their first covered occurrence from
     the A26 key-tile fold of the tree request `req` (O(log range) tile
-    rows, no leaf-store fetch; `tiles` are its cover rows when the
-    response has read them already). A larger L exceeds the tree's
-    baked reveal width, so the keys come from the owner's leaf-store
+    rows; `tiles` are its cover rows and `edge_rows` its edge rows when
+    the response has read them already). A larger L exceeds the tree's
+    baked reveal width, so the keys come from the owner's entry-store
     rows in the covered cells: that read is bounded only by the
     owner's rows in the range, the honest cost of over-asking the
     circuit setup."""
+    edge_toks = {r["token_id"] for r in edge_rows or []}
     cand: "dict[int, dict]" = {}
     if L <= Q2_L:
         key_rows = [] if req is None else Q2_KEY_TREE.driver_fold(
-            spark, sf_dir, req[2], req[3], owner, contract, tiles=tiles
+            spark, sf_dir, req[2], req[3], owner, contract, tiles=tiles,
+            edge_rows=edge_rows,
         )[:L]
         keys = [k["t"] for k in key_rows]
         for k in key_rows:
@@ -488,26 +485,14 @@ def _q2_revealed(
                 raise KeyError(k["t"])
             cand[k["t"]] = {"cell": k["cell"], "pos": k["p"]}
     else:
-        cov_cells = [(c << k, ((c + 1) << k) - 1) for k, c in cover]
-        rows = (
-            _read_rows(
-                leaves,
-                [
-                    [("owner", "=", owner), ("cell", ">=", lo),
-                     ("cell", "<=", hi)]
-                    for lo, hi in cov_cells
-                ],
-                ["token_id", "cell", "pos"],
-            )
-            if cov_cells
-            else []
-        )
-        for r in rows:
-            t = r["token_id"]
-            if t not in cand or (r["cell"], r["pos"]) < (
-                cand[t]["cell"], cand[t]["pos"]
-            ):
-                cand[t] = r
+        rows = artifacts.read_rows(
+            entries,
+            _cells_filter(owner, [(c << k, ((c + 1) << k) - 1) for k, c in cover]),
+            _entry_cols("q2"),
+        ) if cover else []
+        for _, leaves in sorted(cell_leaves("q2", rows).items()):
+            for r in leaves:  # cells ascend: the first is the min
+                cand.setdefault(r["token_id"], r)
         keys = sorted(set(cand) | edge_toks)[:L]
     return [
         {"token_id": t, "cell": -1, "pos": -1, "node_hash": ""}
@@ -552,7 +537,7 @@ def _range_response(
         + (", rewards_rate long" if family == "erc20" else "")
     )
 
-    leaves, tree, depth = range_commitment_paths(
+    entries, tree, depth = range_commitment_paths(
         spark, sf_dir, family, rewards_rate, contract
     )
     b_min, b_max = _probe_range(spark, sf_dir, b_min, b_max)
@@ -573,9 +558,8 @@ def _range_response(
     )
 
     # ---- element sequence (bounded: O(log range) tiles + 2 edge slices)
-    elems = _element_sequence(
-        spark, sf_dir, family, owner, contract, leaves, tiles, cover, edges
-    )
+    edge_rows = _edge_rows(entries, family, owner, edges)
+    elems = _element_sequence(family, edge_rows, tiles, cover)
     element_hashes = [h for _, h, _ in elems]
     elements_str = "/".join(element_hashes)
     root = _fold(_hdr(b_min, b_max, owner, rate), element_hashes)
@@ -585,29 +569,31 @@ def _range_response(
         # the owner's entries in the range, first L in block order: a
         # read bounded by the owner's rows in the range (no structural
         # cap — the same rows the Spark limit(L) scan read)
-        rev_rows = sorted(
-            _read_rows(
-                leaves,
-                [[own, ("event_id", ">=", b_min), ("event_id", "<", b_max)]],
-                ["cell", "pos", *payload_cols],
-            ),
-            key=lambda r: r["event_id"],
-        )[:L]
+        rev_rows = [
+            {**_payload(family, r), "cell": r["event_id"] // TILE_SIZE}
+            for r in sorted(
+                artifacts.read_rows(
+                    entries,
+                    [[own, ("event_id", ">=", b_min), ("event_id", "<", b_max)]],
+                    _entry_cols(family),
+                ),
+                key=lambda r: r["event_id"],
+            )[:L]
+        ]
         for r in rev_rows:
             r["node_hash"] = _leaf_hex(family, r)
     else:
         rev_rows = _q2_revealed(
-            spark, sf_dir, owner, L, contract, leaves, cover,
-            {m["edge_tok"] for _, _, m in elems if "edge_tok" in m},
+            spark, sf_dir, owner, L, contract, entries, cover, edge_rows,
             req, list(tiles.values()) if shared else None,
         )
 
     # ---- opening paths, assembled DRIVER-SIDE: a response is ≤ L
     # revealed rows by construction, so every path is built in Python
-    # from two bounded reads — the leaves of the ≤ L touched cells (a
-    # cell IN-list, ≤ TILE_SIZE rows each), refolded into their in-cell
-    # trees, and the ≤ L·depth cell-tree siblings ((level, pos)
-    # IN-lists)
+    # from two bounded reads — the entry-store rows of the ≤ L touched
+    # cells (one event_id window per cell, ≤ TILE_SIZE rows each), each
+    # cell's leaves ranked and refolded into its in-cell tree, and the
+    # ≤ L·depth cell-tree siblings ((level, pos) IN-lists)
     if family == "q2":
         def _is_cov(r):
             return r["cell"] >= 0
@@ -643,19 +629,18 @@ def _range_response(
             for j in range(t[0]):
                 anc = int(r["cell"]) >> j
                 need.add((j, anc + 1 if anc % 2 == 0 else anc - 1))
-    cell_leaves: "dict[int, dict[int, str]]" = {}
-    if touched:
-        for n in _read_rows(
-            leaves, [[own, ("cell", "in", touched)]],
-            ["cell", "pos", *payload_cols],
-        ):
-            cell_leaves.setdefault(n["cell"], {})[n["pos"]] = _leaf_hex(
-                family, n
-            )
+    opened = cell_leaves(family, artifacts.read_rows(
+        entries, _cells_filter(owner, [(c, c) for c in touched]),
+        _entry_cols(family),
+    )) if touched else {}
     in_nodes = {
-        c: merkle_levels_local([lf[p] for p in sorted(lf)])
-        for c, lf in cell_leaves.items()
+        c: merkle_levels_local([_leaf_hex(family, lf) for lf in lv])
+        for (_, c), lv in opened.items()
     }
+    if family == "erc20":  # a revealed entry's pos is its rank in its cell
+        at = {lf["event_id"]: lf["pos"] for lv in opened.values() for lf in lv}
+        for r in cov_rows:
+            r["pos"] = at[r["event_id"]]
     cell_sibs = {
         kc: n["node_hash"]
         for kc, n in _tree_nodes(tree, sorted(need), owner).items()

@@ -23,8 +23,9 @@ as a `TileTree`:
 
 A declaration names the artifact and its fingerprint params, the key
 columns, the input rows, the `leaf` aggregate over rows, the `combine`
-aggregate over partials, the block-clustered store its edge windows
-read, and the driver fold. Everything else derives from it:
+aggregate over partials, the owner-clustered entry store its edge
+windows read (a keyed tree's; the range-response leaves are the same
+rows), and the driver fold. Everything else derives from it:
 
 - **Batch levels** (`TileTree.levels`): two aggregations at any depth —
   `leaf` per (cell, *keys) for level 0, then the level-0 partials
@@ -361,7 +362,7 @@ class TileTree:
     cols: tuple  # partial columns
     edge_cols: tuple  # input-row columns the driver fold reads
     fold: Callable[[list, "list | None"], object]
-    # (name, fixed fingerprint params) of the block-clustered input-row
+    # (name, fixed fingerprint params) of the owner-clustered input-row
     # store the edge windows read; None reads the events table itself
     store: "tuple[str, dict] | None" = None
     # projection of a streaming partial onto its split-invariant fields
@@ -391,7 +392,8 @@ class TileTree:
                 return artifacts.clustered(
                     spark,
                     self.rows(load_events(spark, sf_dir), contract, rate),
-                    "event_id", _events_span(spark, sf_dir, "event_id"),
+                    "owner", _events_span(spark, sf_dir, "user_id"),
+                    "event_id",
                 )
         elif self.keys:
             # the keyed trees key on the owner, the events' user_id, and
@@ -505,12 +507,13 @@ class TileTree:
 
     def driver_fold(
         self, spark: SparkSession, sf_dir: str, cover, edges, owner=None,
-        contract=None, rate=None, tiles=None,
+        contract=None, rate=None, tiles=None, edge_rows=None,
     ):
         """One owner's (or the keyless tree's) answer folded on the
         driver: `artifacts.read_rows` of the ≤ 2-per-level cover tiles
-        (unless the caller has read them: `tiles`) and of the input
-        rows in the two edge windows, then `fold`. No Spark job runs."""
+        and of the input rows in the two edge windows, unless the
+        caller has read them (`tiles`, `edge_rows`), then `fold`. No
+        Spark job runs."""
         own = () if owner is None else (("owner", "=", owner),)
         if tiles is None and cover and self.keys:
             tiles = list(chain_match(
@@ -526,17 +529,18 @@ class TileTree:
                 self.path(spark, sf_dir, contract, rate),
                 _cover_filter(cover), list(self.cols),
             )
-        edge = None
-        if edges:
+        if not edges:
+            edge_rows = None
+        elif edge_rows is None:
             src = (
                 self.path(spark, sf_dir, contract, rate, store=True)
                 if self.store
                 else f"{sf_dir}/events.parquet"
             )
-            edge = artifacts.read_rows(
+            edge_rows = artifacts.read_rows(
                 src, _edge_filter(edges, *own), list(self.edge_cols)
             )
-        return self.fold(tiles or [], edge)
+        return self.fold(tiles or [], edge_rows)
 
     def spark_answer(
         self, spark: SparkSession, sf_dir: str, cover, edges, contract=None,
@@ -662,8 +666,8 @@ def _q2_entries(ev: DataFrame, contract: "str | None" = None) -> DataFrame:
             F.col("event_type") == (CONTRACT if contract is None else contract)
         )
         .select(
-            "event_id",
             F.col("user_id").alias("owner"),
+            "event_id",
             tok.alias("token_id"),
         )
         .filter(F.col("token_id").isNotNull())
@@ -741,9 +745,10 @@ Q2_KEY_TREE = TileTree(
     cols=("keys",),
     edge_cols=("token_id",),
     fold=_q2_fold,
-    # block-clustered entries: the edge windows prune to row groups
-    # instead of re-scanning and re-parsing the raw events table
-    store=("q2_entry_store", dict(op="q2_entry_store", layout="block_v2")),
+    # (owner, event_id, token_id) by owner: an owner's edge windows and
+    # a response's opened cells prune to its row groups instead of
+    # re-scanning and re-parsing the raw events table
+    store=("q2_entry_store", dict(op="q2_entry_store", layout="owner_v1")),
     # a batch cannot know a key's rank in its whole leaf cell: the
     # stream keeps the earliest leaf cell and no position
     invariant=lambda df: df.withColumn(
@@ -767,11 +772,12 @@ _DEC38 = "decimal(38,0)"
 def _erc20_rows(
     ev: DataFrame, contract: "str | None", rate: "int | None"
 ) -> DataFrame:
-    """Per qualifying entry, the leaf-circuit reward limbs and its cell."""
+    """Per qualifying entry, (owner, event_id, l0..l3, zs, of): the
+    leaf-circuit reward limbs and its two guard flags."""
     ev = ev.filter(
         F.col("event_type") == (CONTRACT if contract is None else contract)
     )
-    return erc20_leaf_rows(ev, rate).withColumn("cell", _cell())
+    return erc20_leaf_rows(ev, rate)
 
 
 def _erc20_leaf(rows: DataFrame, by: list) -> DataFrame:
@@ -839,7 +845,7 @@ ERC20_REWARD_TREE = TileTree(
     # leaf circuit runs once per corpus version, here
     store=(
         "erc20_all_entry_leaves",
-        dict(op="erc20_all_entry_leaves", tile=TILE_SIZE, layout="block_v3"),
+        dict(op="erc20_all_entry_leaves", tile=TILE_SIZE, layout="owner_v1"),
     ),
     commit="erc20",
 )
@@ -891,7 +897,7 @@ def q2_range_tree_topl(
     """A26 — Query2 answered from the tile tree in O(log range): per-owner
     first-L distinct mapping keys over [b_min, b_max), read from the
     canonical cover (≤ 2 tiles/level) plus two < TILE_SIZE edge windows
-    of the block-clustered entry store. The public parameterized
+    of the owner-clustered entry store. The public parameterized
     surface — (owner, b_min, b_max, L, contract) — with the pinned gate
     face as one instantiation (owner=None → all owners; bounds default
     to the ⅕/⅘ probe range). L must be ≤ the tree's baked reveal bound
@@ -969,7 +975,7 @@ def erc20_range_tree_reward(
     """A29 — the ERC-20 reward over an ARBITRARY block range in
     O(log range): per-owner ⌊balance·rate/supply⌋ u256 totals for
     [B_min, B_max) folded from the canonical tile cover + two edge
-    windows of the block-clustered entry-leaf store — with A25/A26
+    windows of the owner-clustered entry-leaf store — with A25/A26
     this makes BOTH reference query families answerable from tiles
     over any range. Parameterized (owner, b_min, b_max, rewards_rate);
     the pinned face is all owners over the ⅕..⅘ probe range; each

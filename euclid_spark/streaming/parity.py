@@ -318,6 +318,7 @@ def _rr_cell_leaves_partial(events: DataFrame) -> DataFrame:
     leaf = erc20_leaf_hash(F.col("event_id"), erc20_entry_hex())
     return (
         ERC20_REWARD_TREE.rows(events, None, None)
+        .withColumn("cell", _cell())
         .groupBy(stream_chunk(), "owner", "cell")
         .agg(
             F.array_sort(

@@ -64,3 +64,13 @@ def assert_no_python_eval(df, what: str = "") -> None:
     assert names, "the plan walk saw nothing"
     bad = [n for n in names if "EvalPython" in n]
     assert not bad, (what, bad)
+
+
+def assert_no_nodes(df, *names: str) -> None:
+    """No node of `df`'s executed plan tree is of a class named in
+    `names` (simple names such as "CartesianProductExec"); the walk
+    must have seen at least one node."""
+    seen = [n.getClass().getSimpleName() for n in physical_nodes(df)]
+    assert seen, "the plan walk saw nothing"
+    bad = [n for n in seen if n in names]
+    assert not bad, bad

@@ -17,6 +17,7 @@ from euclid_spark.operators import (
 )
 from tests.conftest import SF_SMOKE
 from tests.plan_tree import (
+    assert_no_nodes,
     assert_no_python_eval,
     assert_no_single_partition,
     physical_node_counts,
@@ -87,10 +88,10 @@ def test_q19_disjunction_keeps_hash_join(spark):
     planner must extract it and keep a hash join (the residual OR is a
     post-join filter). A nested-loop/cartesian fallback here would scan
     part × lineitem — instant death at 100 TB."""
-    plan = _plan(relational.q19_disjunctive_join(spark, SF_SMOKE))
+    df = relational.q19_disjunctive_join(spark, SF_SMOKE)
+    plan = _plan(df)
     assert "BroadcastHashJoin" in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
+    assert_no_nodes(df, "CartesianProductExec", "BroadcastNestedLoopJoinExec")
 
 
 def test_q21_quantifiers_fold_into_one_fact_pass(spark):
@@ -98,17 +99,18 @@ def test_q21_quantifiers_fold_into_one_fact_pass(spark):
     per-order aggregate — the plan must scan lineitem exactly ONCE
     (the quantifier shape scanned it three times) and keep partial
     aggregation ahead of every exchange; no cartesian fallback."""
-    plan = _plan(relational.q21_waiting_supplier(spark, SF_SMOKE))
+    df = relational.q21_waiting_supplier(spark, SF_SMOKE)
+    plan = _plan(df)
     assert plan.count("lineitem.parquet") == 1, "fact must be scanned once"
     assert "LeftSemi" not in plan and "LeftAnti" not in plan
     assert "partial_" in plan
-    assert "CartesianProduct" not in plan
+    assert_no_nodes(df, "CartesianProductExec")
 
 
 def test_q4_exists_is_left_semi(spark):
-    plan = _plan(relational.q4_order_priority(spark, SF_SMOKE))
-    assert "LeftSemi" in plan
-    assert "CartesianProduct" not in plan
+    df = relational.q4_order_priority(spark, SF_SMOKE)
+    assert "LeftSemi" in _plan(df)
+    assert_no_nodes(df, "CartesianProductExec")
 
 
 def test_merkle_roots_join_has_no_static_broadcast_hint(spark):
@@ -175,15 +177,15 @@ def test_preprocessing_pipeline_plan_shape(spark):
 def test_q20_exists_chain_is_semi_joins(spark):
     """Q20's nested quantifiers must plan as LeftSemi hash joins on
     equi-keys — never a correlated per-row execution or cartesian."""
-    plan = _plan(relational.q20_potential_promotion(spark, SF_SMOKE))
-    assert "LeftSemi" in plan
-    assert "CartesianProduct" not in plan
+    df = relational.q20_potential_promotion(spark, SF_SMOKE)
+    assert "LeftSemi" in _plan(df)
+    assert_no_nodes(df, "CartesianProductExec")
 
 
 def test_q16_not_in_is_anti_join(spark):
-    plan = _plan(relational.q16_parts_supplier_relationship(spark, SF_SMOKE))
-    assert "LeftAnti" in plan
-    assert "CartesianProduct" not in plan
+    df = relational.q16_parts_supplier_relationship(spark, SF_SMOKE)
+    assert "LeftAnti" in _plan(df)
+    assert_no_nodes(df, "CartesianProductExec")
 
 
 def test_new_tpch_stay_on_jvm(spark):
@@ -257,8 +259,7 @@ def test_substring_spans_no_pairwise_join(spark):
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
     df = _substring_spans_build(docs)
     plan = _plan(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert_no_nodes(df, "CartesianProductExec", "BroadcastNestedLoopJoinExec")
     assert_no_python_eval(df)
     assert "LeftSemi" in plan  # dup-hash membership is a semi join
 
@@ -303,7 +304,7 @@ def test_training_mix_semi_joins_jvm_only(spark):
     df.collect()
     plan = _plan(df)
     assert "LeftSemi" in plan
-    assert "CartesianProduct" not in plan
+    assert_no_nodes(df, "CartesianProductExec")
     assert_no_python_eval(df)
 
 
@@ -425,10 +426,14 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
     opening-path siblings of ≤ L revealed rows ≤ L per level, and no
     tree read returns a row that answers no requested node, every
     edge read returns only rows inside the two < TILE_SIZE edge
-    windows, every other read of a response's leaf store is its
-    ("cell", "in", touched) read of ≤ TOP_L cells with ≤ TILE_SIZE rows
-    per (owner, cell), and no Spark job runs before the returned frame
-    is acted on — nothing reads the range interior."""
+    windows and no request reads the same (store, owner, edge window)
+    twice (a Q2 response's key fold takes the edge rows its element
+    sequence read), every other read of an entry store is the ERC-20
+    response's revealed rows or a response's read of its ≤ TOP_L
+    touched cells, one whole-cell event_id window each, with
+    ≤ TILE_SIZE rows per (owner, cell), and no Spark job runs before
+    the returned frame is acted on — nothing reads the range
+    interior."""
     from collections import Counter
 
     from euclid_spark import artifacts
@@ -479,8 +484,7 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
         frozenset(range_tree.tile_cover(b_min, b_max, d)[0]) for d in range(64)
     }
     tile_trees = ("range_tree_tiles_", "q2_key_tiles_", "erc20_reward_tiles_")
-    edge_stores = ("events.parquet", "q2_entry_store_", "erc20_all_entry_leaves_",
-                   "rr_erc20_leaves_")
+    edge_stores = ("events.parquet", "q2_entry_store_", "erc20_all_entry_leaves_")
     for name, call in calls.items():
         reads.clear()
         before = _newest_job_id(spark)
@@ -488,6 +492,7 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
         assert _newest_job_id(spark) == before, f"{name} ran a Spark job"
         assert reads, f"{name} read nothing through artifacts.read_rows"
         cell_reads = cover_reads = 0
+        edge_reads: "set[tuple]" = set()
         for path, flt, rows in reads:
             base = path.rstrip("/").rsplit("/", 1)[-1]
             if base.startswith(tile_trees) or id(flt) in requested:
@@ -503,35 +508,43 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
                     cap = max(2, TOP_L)
                 assert max(per_level.values(), default=0) <= cap, (name, base)
                 continue
-            touched = [
-                v for conj in flt or [] for c, op, v in conj
-                if c == "cell" and op == "in"
-            ]
-            if base.startswith("rr_") and "_leaves_" in base and touched:
-                # the opened cells' leaves, refolded on the driver
-                cell_reads += 1
-                assert len(flt) == 1 and len(touched[0]) <= TOP_L, name
-                per_cell = Counter((r["owner"], r["cell"]) for r in rows)
-                assert all(o == owner for o, _ in per_cell), name
-                assert {c for _, c in per_cell} <= set(touched[0]), name
-                assert max(per_cell.values(), default=0) <= TILE_SIZE, name
-                continue
+            # every other read is of an entry store (or, for A25, the
+            # events) and filters on event_id windows
+            assert base.startswith(edge_stores), (name, base, flt)
             windows = [
                 tuple(v for c, op, v in conj if c == "event_id")
                 for conj in flt or []
             ]
-            if base.startswith(edge_stores) and any(windows):
-                if windows == [(b_min, b_max)]:
-                    # the ERC-20 revealed rows: the owner's rows in range
-                    assert all(r["owner"] == owner for r in rows), name
-                    continue
+            assert windows and all(len(w) == 2 for w in windows), (name, flt)
+            if all(lo % TILE_SIZE == 0 and hi - lo == TILE_SIZE
+                   for lo, hi in windows):
+                # the opened cells' entries, ranked and refolded on the
+                # driver: ≤ TOP_L whole cells
+                cell_reads += 1
+                assert len(windows) <= TOP_L, name
+                per_cell = Counter(
+                    (r["owner"], r["event_id"] // TILE_SIZE) for r in rows
+                )
+                assert all(o == owner for o, _ in per_cell), name
+                assert {c for _, c in per_cell} <= {
+                    lo // TILE_SIZE for lo, _ in windows
+                }, name
+                assert max(per_cell.values(), default=0) <= TILE_SIZE, name
+            elif windows == [(b_min, b_max)]:
+                # the ERC-20 revealed rows: the owner's rows in range
+                assert name == "erc20_range_response", name
+                assert all(r["owner"] == owner for r in rows), name
+            else:
                 assert sorted(windows) == sorted(edges), (name, base, windows)
                 assert all(
                     any(lo <= r["event_id"] < hi for lo, hi in edges)
                     for r in rows
                 ), (name, base)
-            elif base.startswith("rr_") and "_leaves_" in base:
-                raise AssertionError(f"{name}: unbounded leaf read {flt}")
+                who = [v for conj in flt for c, _, v in conj if c == "owner"]
+                for w in windows:  # each edge window read once
+                    key = (base, who[0] if who else None, w)
+                    assert key not in edge_reads, (name, "read twice", key)
+                    edge_reads.add(key)
         if name.endswith("_range_response"):
             assert cell_reads == 1, name  # the revealed rows open cells
         assert cover_reads == 1, (name, cover_reads)
@@ -605,7 +618,7 @@ def test_leakage_split_serves_labels_no_python(spark, tmp_path, monkeypatch):
     served = curation_leakage_safe_split(spark, SF_SMOKE)
     plan = _plan(served)
     assert_no_python_eval(served)
-    assert "CartesianProduct" not in plan
+    assert_no_nodes(served, "CartesianProductExec")
     # served path: the labels come from the artifact store, not a
     # re-run of the pair pipeline (no shingle explode in the plan)
     assert "posexplode" not in plan.lower()
@@ -620,8 +633,9 @@ def test_event_dedup_window_no_self_join(spark):
     df = event_dedup_window(spark, SF_SMOKE)
     plan = _plan(df)
     assert "Window" in plan
-    for bad in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct"):
-        assert bad not in plan, f"unexpected {bad} in B54 plan"
+    assert_no_nodes(
+        df, "SortMergeJoinExec", "BroadcastHashJoinExec", "CartesianProductExec"
+    )
     assert_no_python_eval(df, "B54")
 
 
@@ -636,7 +650,7 @@ def test_triangle_count_serves_ledger_no_cartesian(spark, tmp_path, monkeypatch)
     df.collect()  # builds + serves the pair-ledger artifact
     df = graph_triangle_count(spark, SF_SMOKE)
     plan = _plan(df)
-    assert "CartesianProduct" not in plan
+    assert_no_nodes(df, "CartesianProductExec")
     assert_no_python_eval(df)
     assert "posexplode" not in plan.lower().replace("explode(array", "")
 

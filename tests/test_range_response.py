@@ -260,17 +260,50 @@ def test_cold_store_first_call_equals_second(spark, tmp_path, monkeypatch, famil
 
 
 def _store_rows(path: str) -> "list[dict]":
-    """Every row of a commitment store, each digest turned back into the
+    """Every row of a keyed tree, its node_hash turned back into the
     lowercase hex the hash definition concatenates."""
     from euclid_spark import artifacts
 
     rows = artifacts.read_rows(path)
     for r in rows:
-        for c in ("node_hash", "entry_reward_hex"):
-            if c in r:
-                assert isinstance(r[c], bytes) and len(r[c]) == 32, (path, c)
-                r[c] = r[c].hex()
+        assert isinstance(r["node_hash"], bytes) and len(r["node_hash"]) == 32
+        r["node_hash"] = r["node_hash"].hex()
     return rows
+
+
+def _spark_leaves(spark, sf: str, family: str):
+    """The in-cell leaves as Spark's window computes them from the
+    events — the formulation of the leaf stores the response families
+    once kept: per (owner, cell), Q2 the distinct mapping keys ranked
+    by token_id, ERC-20 the leaf circuit's entries ranked by event_id
+    with the reward as 64 hex digits; pos is the rank from 0."""
+    from pyspark.sql import Window
+
+    from euclid_spark.catalog import load_events
+    from euclid_spark.operators.range_response import erc20_entry_hex
+    from euclid_spark.operators.range_tree import (
+        _cell,
+        _erc20_rows,
+        _q2_entries,
+    )
+
+    ev = load_events(spark, sf)
+    if family == "erc20":
+        rows, order = _erc20_rows(ev, None, None).select(
+            "owner", _cell().alias("cell"), "event_id",
+            erc20_entry_hex().alias("entry_reward_hex"),
+        ), "event_id"
+    else:
+        rows, order = _q2_entries(ev).select(
+            "owner", _cell().alias("cell"), "token_id"
+        ).distinct(), "token_id"
+    pos = F.row_number().over(Window.partitionBy("owner", "cell").orderBy(order))
+    return rows.withColumn("pos", pos - 1)
+
+
+def _spark_leaf_rows(spark, sf: str, family: str) -> "list[dict]":
+    """`_spark_leaves`, collected."""
+    return [r.asDict() for r in _spark_leaves(spark, sf, family).collect()]
 
 
 def _sha_hex(s: str) -> str:
@@ -289,7 +322,7 @@ def _parent(lvl_rows: "dict[int, str]") -> "dict[int, str]":
 
 
 def _cell_roots(lv: "list[dict]", family: str) -> "dict[tuple, str]":
-    """{(owner, cell): root} refolded from a hexed leaf store: leaf =
+    """{(owner, cell): root} refolded from leaf rows: leaf =
     sha256(payload), then each (owner, cell)'s in-cell tree level by
     level (positions checked contiguous). Sets each row's node_hash."""
     trees: "dict[tuple, dict]" = {}
@@ -354,32 +387,32 @@ def _norm(v):
 
 
 def test_stores_hold_binary_digests_and_answers_match_a_hex_recompute(spark):
-    """The leaf stores and the keyed trees hold every digest (the
-    trees' cell-tree node_hash, and the ERC-20 entry_reward_hex
-    payload) as 32 raw bytes and no leaf hash, and the driver answers
-    of both response faces equal a recompute over the stores' hexed
-    rows: leaf hashes from payloads, each (owner, cell)'s in-cell tree
-    level by level from them, the cell tree's level 0 from those roots
-    and each stored cell-tree level from the one below, and each
-    response root from its cover tiles and edge leaves."""
+    """The entry stores hold only (owner, event_id, payload) — no
+    node_hash, pos, cell or hex column — the keyed trees hold every
+    cell-tree node_hash as 32 raw bytes, and the driver answers of
+    both response faces equal a recompute over the trees' hexed rows
+    and the in-cell leaves: leaf hashes from payloads, each (owner,
+    cell)'s in-cell tree level by level from them, the cell tree's
+    level 0 from those roots and each stored cell-tree level from the
+    one below, and each response root from its cover tiles and edge
+    leaves."""
     import pyarrow as pa
 
     from euclid_spark import artifacts
     from euclid_spark.operators.range_response import range_commitment_paths
     from euclid_spark.operators.range_tree import TILE_SIZE, tile_cover
 
+    payload = {"q2": ["token_id"], "erc20": ["l0", "l1", "l2", "l3", "zs", "of"]}
     for family in ("q2", "erc20"):
-        leaves, cells, depth = range_commitment_paths(spark, SF_SMOKE, family)
-        leaf_schema = artifacts.footer_stats(leaves).schema
-        assert "node_hash" not in leaf_schema.names, leaves
+        entries, cells, depth = range_commitment_paths(spark, SF_SMOKE, family)
+        assert artifacts.footer_stats(entries).schema.names == [
+            "owner", "event_id", *payload[family]
+        ], entries
         assert artifacts.footer_stats(cells).schema.field(
             "node_hash"
         ).type == pa.binary(), cells
-        if family == "erc20":
-            assert leaf_schema.field("entry_reward_hex").type == pa.binary()
-        for path in (leaves, cells):
-            assert "group_key" not in artifacts.footer_stats(path).schema.names
-        lv = _store_rows(leaves)
+        assert "group_key" not in artifacts.footer_stats(cells).schema.names
+        lv = _spark_leaf_rows(spark, SF_SMOKE, family)
         roots = _cell_roots(lv, family)
         assert roots
         # the chain rows expanded to every (owner, level, pos) node
@@ -409,7 +442,7 @@ def test_stores_hold_binary_digests_and_answers_match_a_hex_recompute(spark):
                                     (3, 0, 4 * TILE_SIZE), (7, 45, 905)):
             cover, edges = tile_cover(b_min, b_max, depth)
             if family == "q2" and edges:
-                continue  # q2 edge elements come from the entry store
+                continue  # q2 edge elements are first occurrences, not leaves
             rows = fn(spark, SF_SMOKE, owner=owner, b_min=b_min, b_max=b_max
                       ).collect()
             assert rows, (family, owner, b_min, b_max)
@@ -431,7 +464,7 @@ def test_stores_hold_binary_digests_and_answers_match_a_hex_recompute(spark):
                 acc = _sha_hex(acc + h)
             assert rows[0]["elements"] == "/".join(hashes)
             assert {r["response_root"] for r in rows} == {acc}
-            if family == "erc20":  # revealed payloads are the stored ones
+            if family == "erc20":  # revealed payloads are the leaves
                 stored = {r["event_id"]: r for r in lv if r["owner"] == owner}
                 for r in rows:
                     s = stored[r["event_id"]]
@@ -457,7 +490,7 @@ def _chain_stores(spark, monkeypatch, corpus, deep_corpus) -> list:
     the chain rows expanded to nodes, the chain bottoms, the full node
     set). A node's value is its `levels()` payload and its cell-tree
     digest: the promotion-paired levels 0..depth refolded here from the
-    leaf store's payloads, at the tree's depth."""
+    in-cell leaves (`_spark_leaf_rows`), at the tree's depth."""
     from euclid_spark.operators.range_response import range_commitment_paths
     from euclid_spark.operators.range_tree import (
         ERC20_REWARD_TREE,
@@ -472,11 +505,12 @@ def _chain_stores(spark, monkeypatch, corpus, deep_corpus) -> list:
     out = []
     for tree, family in ((Q2_KEY_TREE, "q2"), (ERC20_REWARD_TREE, "erc20")):
         cols = list(tree.cols)
-        leaves, path, _ = range_commitment_paths(spark, sf, family)
+        path = range_commitment_paths(spark, sf, family)[1]
         assert path == tree.path(spark, sf)
         nodes, bottoms = _expand_chains(_store_rows(path), [*cols, "node_hash"])
         digest = _cell_tree(
-            _cell_roots(_store_rows(leaves), family), _depth(spark, sf)
+            _cell_roots(_spark_leaf_rows(spark, sf, family), family),
+            _depth(spark, sf),
         )
         full = {
             (r["owner"], r["level"], r["cell"]): _norm([r[c] for c in cols])
@@ -527,6 +561,45 @@ def test_chain_stores_hold_no_copies(spark, monkeypatch, deep_corpus, corpus):
             assert len(bottoms) < len(full) / 2, (name, len(bottoms), len(full))
 
 
+@pytest.mark.parametrize("corpus", ["smoke", "deep"])
+def test_driver_leaves_equal_the_spark_window_leaves(
+    spark, monkeypatch, deep_corpus, corpus
+):
+    """The driver derives a cell's in-cell leaves from entry-store rows
+    (`cell_leaves`): each leaf's pos, its rank in the cell, and the
+    ERC-20 reward hex from the limbs. Over every row of both entry
+    stores they equal, row for row sorted by (owner, cell, pos), the
+    leaves Spark's window computes from the events
+    (`_spark_leaf_rows`), at SF_SMOKE and on a ≥ 10-level tree."""
+    from euclid_spark import artifacts
+    from euclid_spark.operators.range_response import (
+        _entry_cols,
+        cell_leaves,
+        range_commitment_paths,
+    )
+
+    sf = SF_SMOKE
+    if corpus == "deep":
+        sf, arts = deep_corpus
+        monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", arts)
+    for family, payload in (("q2", ["token_id"]),
+                            ("erc20", ["event_id", "entry_reward_hex"])):
+        entries = range_commitment_paths(spark, sf, family)[0]
+        opened = cell_leaves(
+            family, artifacts.read_rows(entries, None, _entry_cols(family))
+        )
+        got = sorted(
+            (o, lf["cell"], lf["pos"], *(lf[c] for c in payload))
+            for (o, _), leaves in opened.items()
+            for lf in leaves
+        )
+        want = sorted(
+            (r["owner"], r["cell"], r["pos"], *(r[c] for c in payload))
+            for r in _spark_leaf_rows(spark, sf, family)
+        )
+        assert got and got == want, family
+
+
 @pytest.fixture(scope="module")
 def tail_corpus(spark, tmp_path_factory) -> "tuple[str, str]":
     """(corpus, artifact root): SF_SMOKE's events plus its non-purchase
@@ -548,12 +621,12 @@ def test_response_cover_depth_follows_the_last_qualifying_cell(
     spark, monkeypatch, tail_corpus, deep_corpus, corpus
 ):
     """The keyed trees are built to the events' depth, but a response's
-    cover depth is tree_depth(max qualifying cell + 1), from the leaf
-    store: `_response_root` and both response faces, for several owners
-    and ranges (the whole block span among them), equal a recompute
-    from the leaf store alone — the cell roots refolded from its
-    payloads, the cell tree paired up to that depth, and the cover's
-    occupied nodes chained onto the header."""
+    cover depth is tree_depth(max qualifying cell + 1), from the entry
+    store's footer: `_response_root` and both response faces, for
+    several owners and ranges (the whole block span among them), equal
+    a recompute from the in-cell leaves alone — the cell roots refolded
+    from their payloads, the cell tree paired up to that depth, and the
+    cover's occupied nodes chained onto the header."""
     from collections import Counter
 
     from euclid_spark.operators.euclid import REWARDS_RATE
@@ -573,8 +646,8 @@ def test_response_cover_depth_follows_the_last_qualifying_cell(
     monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", arts)
     span = _max_event_id(spark, sf) // TILE_SIZE + 1
     for family, fn in (("q2", q2_range_response), ("erc20", erc20_range_response)):
-        leaves, _, depth = range_commitment_paths(spark, sf, family)
-        roots = _cell_roots(_store_rows(leaves), family)
+        depth = range_commitment_paths(spark, sf, family)[2]
+        roots = _cell_roots(_spark_leaf_rows(spark, sf, family), family)
         top = max(c for _, c in roots)
         assert depth == tree_depth(top + 1), family
         if corpus == "tail":
@@ -610,9 +683,9 @@ def test_response_cover_depth_follows_the_last_qualifying_cell(
 def test_commitment_stores_are_byte_identical_across_builds(
     spark, tmp_path, monkeypatch
 ):
-    """Building the two leaf stores, the two keyed tile trees (each
-    node's aggregate and its cell-tree digest), the trees' two
-    input-row stores and merkle.py's owner-token and ERC-20 entry trees
+    """Building the two keyed tile trees (each node's aggregate and its
+    cell-tree digest), their two entry stores (the in-cell trees'
+    leaves too) and merkle.py's owner-token and ERC-20 entry trees
     (leaves and nodes) twice, each time into an empty artifact root,
     writes the same part files byte for byte: the owner and event_id
     clustering is a function of the data, not of a sampled bound, and
@@ -628,7 +701,6 @@ def test_commitment_stores_are_byte_identical_across_builds(
         _erc20_entry_tree,
         _owner_token_tree,
     )
-    from euclid_spark.operators.range_response import range_commitment_paths
     from euclid_spark.operators.range_tree import (
         ERC20_REWARD_TREE,
         Q2_KEY_TREE,
@@ -641,8 +713,6 @@ def test_commitment_stores_are_byte_identical_across_builds(
             for tree in (Q2_KEY_TREE, ERC20_REWARD_TREE)
             for store in (True, False)
         ]
-        for family in ("q2", "erc20"):  # the leaf stores
-            paths.append(range_commitment_paths(spark, SF_SMOKE, family)[0])
         _owner_token_tree(spark, SF_SMOKE)
         _erc20_entry_tree(spark, SF_SMOKE)
         for name in ("owner_token", "erc20_entry"):
@@ -667,7 +737,7 @@ def test_commitment_stores_are_byte_identical_across_builds(
 
     first, second = build(tmp_path / "a"), build(tmp_path / "b")
     assert {k[0] for k in first} == {
-        "rr_q2_leaves", "rr_erc20_leaves", "q2_key_tiles", "q2_entry_store",
+        "q2_key_tiles", "q2_entry_store",
         "erc20_reward_tiles", "erc20_all_entry_leaves",
         "owner_token_leaves", "owner_token_nodes",
         "erc20_entry_leaves", "erc20_entry_nodes",

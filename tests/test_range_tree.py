@@ -355,11 +355,11 @@ def test_q2_tile_first_occurrence_matches_leaf_scan(spark):
     leaf scan of the covered cells computes — the per-query formulation
     the A30 response replaced — and the edge sentinel must appear
     exactly on keys with no covered occurrence."""
-    from euclid_spark.operators.range_response import _q2_cell_leaf_rows
     from euclid_spark.operators.range_tree import (
         _EDGE_SENTINEL_CELL,
         q2_range_tree_topl,
     )
+    from tests.test_range_response import _spark_leaves
 
     face = q2_range_tree_topl(spark, SF_SMOKE, with_first=True).toPandas()
     assert len(face) > 0
@@ -371,7 +371,7 @@ def test_q2_tile_first_occurrence_matches_leaf_scan(spark):
     cover, _ = tile_cover(b_min, b_max, max_level)
     cov_cells = [(c << k, ((c + 1) << k) - 1) for k, c in cover]
 
-    leaves = _q2_cell_leaf_rows(spark, SF_SMOKE, None)
+    leaves = _spark_leaves(spark, SF_SMOKE, "q2")
     from functools import reduce
 
     ccond = reduce(

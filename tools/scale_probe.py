@@ -22,10 +22,11 @@ Usage: python tools/scale_probe.py [op ...]   (default: the linear set)
                   tokenizer/linguistic per-doc cost, plain replication
                   for worst-case duplicate load.
 Writes one JSON line; temp corpus lives under /tmp and is removed.
-Per op and scale it also records, from the warm run, each artifact the
-face served (every path `artifacts.ensure` returned) with its bytes on
-disk, its parquet row-group count and its row count — the bytes a
-bounded read can decode grow with these, not with the rows it returns.
+Per op and scale it also records, from the warm run, the Spark stages'
+input records and each artifact the face served (every path
+`artifacts.ensure` returned) with its bytes on disk, its parquet
+row-group count and its row count — the bytes a bounded read can
+decode grow with these, not with the rows it returns.
 """
 
 from __future__ import annotations
@@ -162,6 +163,36 @@ def _served(run):
     return out, arts
 
 
+def _counted(spark, run):
+    """(run(), inputRecords) — the Spark stage input records of every
+    stage `run` runs (skipped stages excluded), read from the status
+    store after the listener bus drains: the rows a face decodes, which
+    grow with the corpus when a read stops pruning."""
+    jsc = spark.sparkContext._jsc.sc()
+    cls = spark.sparkContext._jvm.java.lang.Class.forName(
+        "org.apache.spark.status.StageDataWrapper"
+    )
+
+    def stages():
+        jsc.listenerBus().waitUntilEmpty()
+        it = jsc.statusStore().store().view(cls).reverse().closeableIterator()
+        try:
+            while it.hasNext():
+                yield it.next().info()
+        finally:
+            it.close()
+
+    mark = next((s.stageId() for s in stages()), -1)
+    out = run()
+    records = 0
+    for s in stages():
+        if s.stageId() <= mark:
+            break
+        if s.status().toString() != "SKIPPED":
+            records += s.inputRecords()
+    return out, records
+
+
 def main() -> None:
     args = sys.argv[1:]
     scale_events = "--events" in args
@@ -198,15 +229,21 @@ def main() -> None:
                "mutate": mutate_docs, "ops": {}}
         for name in ops:
             one_cold = _time(qs, name, SF)
-            one_warm, one_arts = _served(lambda: _time(qs, name, SF))
+            (one_warm, one_arts), one_rec = _counted(
+                spark, lambda: _served(lambda: _time(qs, name, SF))
+            )
             ten_cold = _time(qs, name, tmp)
-            ten_warm, ten_arts = _served(lambda: _time(qs, name, tmp))
+            (ten_warm, ten_arts), ten_rec = _counted(
+                spark, lambda: _served(lambda: _time(qs, name, tmp))
+            )
             out["ops"][name] = {
                 "x1_cold": one_cold,
                 "x1_warm": one_warm,
                 f"x{replicas}_cold": ten_cold,
                 f"x{replicas}_warm": ten_warm,
                 "cold_ratio": round(ten_cold / max(one_cold, 1e-9), 1),
+                "x1_warm_input_records": one_rec,
+                f"x{replicas}_warm_input_records": ten_rec,
                 "x1_artifacts": one_arts,
                 f"x{replicas}_artifacts": ten_arts,
             }
