@@ -9,24 +9,32 @@ reusable block DB / MPT digest artifact once and every later query reads
 it (mr-plonky2-circuits/src/api.rs staging; block/mod.rs append-only DB)
 — you never re-prove the corpus per query.
 
-Pattern here (generalizing the r4 IVF centroid store):
+Pattern here:
 
-- an artifact is a parquet directory under `artifact_dir()` named
-  `<name>_<fingerprint>`, where the FINGERPRINT hashes the input files'
-  (path, size, mtime) — a cheap stat, no data read — plus every
-  algorithm parameter. A corpus or parameter change changes the key;
-  nothing is ever overwritten in place.
-- writes go to a `.tmp.<pid>` directory then `os.rename` — atomic on a
-  local filesystem, and the loser of a concurrent race just deletes its
-  temp and reads the winner's artifact: the same ROWS, not necessarily
-  the same bytes (range-partitioned builds sample their partition
-  bounds, so file boundaries and row order within a file may differ).
-- `ensure` is the one build gate: the artifact's path, built → persisted
-  on a miss. `serve_frame` is `load_frame` over it (the returned frame
-  is always a plain parquet scan, so downstream plans reference a
-  short lineage, not the whole build pipeline); `footer_stats` and
-  `read_rows` read the same path on the driver, with no Spark job, for
-  the metadata and the bounded row fetches a query-phase request needs.
+- an artifact is DECLARED once, as an `Artifact(name, table, params)`:
+  its name, the one corpus table it is built from and its fixed
+  fingerprint params (an `op` tag, algorithm constants, a layout or
+  version tag). `Artifact.path(sf_dir, **axes)` is the one place a
+  fingerprint or an artifact path is computed: `<root>/<name>_<md5>`
+  under `artifact_dir()`, where the md5 hashes the table's files'
+  (path, size, mtime) — a cheap stat, no data read — plus `params` and
+  the per-call `axes` (a contract, a rewards rate). A corpus or
+  parameter change changes the key; nothing is ever overwritten in
+  place. Builders and the DuckDB oracles that read an artifact as an
+  input table take their path from the same declaration.
+- every write goes through `ensure`: a miss builds the frame and writes
+  it to a `.tmp.<pid>` directory, then `os.rename` — atomic on a local
+  filesystem, and the loser of a concurrent race just deletes its temp
+  and reads the winner's artifact: the same ROWS, not necessarily the
+  same bytes. Only the z-ordered layout (sources/zorder.py) samples
+  `repartitionByRange` bounds, and parquet-mr orders each column
+  chunk's encoding list differently in two JVMs, so two processes can
+  write a few different bytes for the same rows.
+- `serve_frame` is `ensure` plus a plain parquet scan of the path (the
+  returned frame is a short lineage, not the whole build pipeline);
+  `footer_stats` and `read_rows` read the same path on the driver, with
+  no Spark job, for the metadata and the bounded row fetches a
+  query-phase request needs.
 
 At 100 TB the same code points at shared storage (set
 EUCLID_SPARK_ARTIFACTS to an object-store path a real deployment mounts)
@@ -41,7 +49,7 @@ import hashlib
 import json
 import os
 import shutil
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -81,27 +89,38 @@ def corpus_fingerprint(paths: "list[str]", **params: object) -> str:
     return hashlib.md5("|".join(parts).encode()).hexdigest()
 
 
-def _path(name: str, fp: str, suffix: str = ".parquet") -> str:
-    """Artifact directory path. `suffix` labels the payload format —
-    parquet for frames (the default), `.jsonl` for text-line fixtures
-    (ADVICE r13: a plain-text directory under a .parquet name breaks
-    any tooling that globs the artifact root and reads *.parquet
-    entries as parquet)."""
-    return os.path.join(artifact_dir(), f"{name}_{fp}{suffix}")
+# payload format of an artifact, by its path suffix
+_FORMATS = {".parquet": "parquet", ".jsonl": "text"}
 
 
-def load_frame(spark: SparkSession, name: str, fp: str) -> "DataFrame | None":
-    """The artifact as a plain parquet scan, or None if absent. The
-    reader is memoized per (session, path, mtime) — artifact paths are
-    fingerprint-keyed and written atomically, so a given path's content
-    never changes and the lazy scan node can be shared by every
-    consumer (catalog.cached_parquet; no data is cached)."""
-    from euclid_spark.catalog import cached_parquet
+@dataclass(frozen=True)
+class Artifact:
+    """One artifact, declared once: its `name`, the corpus `table` its
+    fingerprint stats, and its fixed fingerprint `params` (an `op` tag,
+    the algorithm constants, a layout or version tag). `suffix` labels
+    the payload format: `.parquet` for frames, `.jsonl` for text lines
+    (a plain-text directory under a .parquet name breaks any tooling
+    that globs the artifact root for parquet)."""
 
-    path = _path(name, fp)
-    if os.path.exists(path):
-        return cached_parquet(spark, path)
-    return None
+    name: str
+    table: str
+    params: dict = field(default_factory=dict)
+    suffix: str = ".parquet"
+
+    def fingerprint(self, sf_dir: str, **axes: object) -> str:
+        """md5 over the table's file stats, `params` and `axes`, the
+        per-call keys of a parameterized artifact (a contract, a rate)."""
+        return corpus_fingerprint(
+            [f"{sf_dir}/{self.table}.parquet"], **self.params, **axes
+        )
+
+    def path(self, sf_dir: str, **axes: object) -> str:
+        """`<root>/<name>_<fingerprint><suffix>` — the path its builder
+        serves and its oracle reads."""
+        return os.path.join(
+            artifact_dir(),
+            f"{self.name}_{self.fingerprint(sf_dir, **axes)}{self.suffix}",
+        )
 
 
 # Write option for artifacts whose queries read a PREDICATE-PRUNED
@@ -152,25 +171,23 @@ def clustered(
 
 def save_frame(
     df: DataFrame,
-    name: str,
-    fp: str,
+    path: str,
     options: "dict | None" = None,
     partition_by: "str | None" = None,
-    suffix: str = ".parquet",
 ) -> str:
-    """Write `df` as the artifact (atomic temp+rename; a lost race keeps
-    the winner's output — the same rows, possibly different bytes). `partition_by` writes a Hive-style
-    partitioned layout (the D18/D26/C55b shard precedent) under the
-    same atomicity contract. Returns the artifact path."""
-    path = _path(name, fp, suffix)
-    os.makedirs(artifact_dir(), exist_ok=True)
+    """Write `df` as the artifact at `path` in its suffix's format
+    (atomic temp+rename; a lost race keeps the winner's output — the
+    same rows, possibly different bytes). `partition_by` writes a
+    Hive-style partitioned layout (the D18/D26/C55b shard precedent)
+    under the same atomicity contract. Returns `path`."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = f"{path}.tmp.{os.getpid()}"
-    w = df.write.mode("overwrite")
+    w = df.write.mode("overwrite").format(_FORMATS[os.path.splitext(path)[1]])
     for k, v in (options or {}).items():
         w = w.option(k, v)
     if partition_by:
         w = w.partitionBy(partition_by)
-    w.parquet(tmp)
+    w.save(tmp)
     try:
         os.rename(tmp, path)
     except OSError:  # concurrent builder won — same rows, maybe not same bytes
@@ -179,35 +196,37 @@ def save_frame(
 
 
 def ensure(
-    name: str,
-    fp: str,
+    path: str,
     build: Callable[[], DataFrame],
     options: "dict | None" = None,
+    partition_by: "str | None" = None,
 ) -> str:
-    """The artifact's path, building it on a miss (build → save). The
-    one build gate: `serve_frame` hands out a Spark scan over this path
-    and the driver-side readers below read it directly, so footer
-    statistics are only ever read from an artifact that exists."""
-    path = _path(name, fp)
+    """`path` (an `Artifact.path`), building it on a miss (build →
+    save). The one build gate: `serve_frame` hands out a Spark scan
+    over this path and the driver-side readers below read it directly,
+    so footer statistics are only ever read from an artifact that
+    exists."""
     if not os.path.exists(path):
-        save_frame(build(), name, fp, options)
+        save_frame(build(), path, options, partition_by)
     return path
 
 
 def serve_frame(
     spark: SparkSession,
-    name: str,
-    fp: str,
+    path: str,
     build: Callable[[], DataFrame],
     options: "dict | None" = None,
 ) -> DataFrame:
-    """The artifact as a Spark scan, built first on a miss. The scan is
-    the point: every consumer gets a short-lineage parquet read whether
-    or not this process paid for the build."""
-    ensure(name, fp, build, options)
-    out = load_frame(spark, name, fp)
-    assert out is not None
-    return out
+    """The artifact at `path` as a Spark scan, built first on a miss.
+    The scan is the point: every consumer gets a short-lineage parquet
+    read whether or not this process paid for the build. The reader is
+    memoized per (session, path, mtime) — artifact paths are
+    fingerprint-keyed and written atomically, so a given path's content
+    never changes and the lazy scan node can be shared by every
+    consumer (catalog.cached_parquet; no data is cached)."""
+    from euclid_spark.catalog import cached_parquet
+
+    return cached_parquet(spark, ensure(path, build, options))
 
 
 # --------------------------------------------------------------------------
@@ -220,7 +239,7 @@ def _signature(path: str) -> tuple:
     the driver-side readers, as catalog.cached_parquet keys Spark
     readers (artifact paths are written once, atomically; a rewritten
     corpus file changes its signature). Needs a locally statable path,
-    which `load_frame` already requires of the artifact root."""
+    which `serve_frame` already requires of the artifact root."""
     from euclid_spark.catalog import _path_signature
 
     sig = _path_signature(path)
@@ -320,8 +339,7 @@ def read_rows(
 
 
 def publish_manifest(
-    name: str,
-    fp: str,
+    artifact: str,
     family: str,
     sources: "list[str]",
     params: "dict[str, object] | None" = None,
@@ -337,12 +355,15 @@ def publish_manifest(
     fingerprints with stale params and skipped the ERC-20 response).
     `sources` records each input file's (size, mtime_ns) so a consumer
     can tell whether a manifest belongs to the CURRENT corpus version
-    by a plain stat comparison — no fingerprint algorithm needed."""
+    by a plain stat comparison — no fingerprint algorithm needed.
+    `artifact` is the published artifact's `Artifact.path`."""
+    base = os.path.basename(artifact)
+    name, fp = os.path.splitext(base)[0].rsplit("_", 1)
     meta = {
         "family": family,
         "name": name,
         "fingerprint": fp,
-        "path": f"{name}_{fp}.parquet",
+        "path": base,
         # keyed by realpath so a consumer invoked with a relative path,
         # trailing slash, or symlinked mount still matches (discovery
         # normalizes its side the same way)
@@ -355,8 +376,7 @@ def publish_manifest(
         },
         "params": {k: v for k, v in (params or {}).items()},
     }
-    os.makedirs(artifact_dir(), exist_ok=True)
-    path = os.path.join(artifact_dir(), f"{name}_{fp}.manifest.json")
+    path = f"{os.path.splitext(artifact)[0]}.manifest.json"
     tmp = f"{path}.tmp.{os.getpid()}"
     with open(tmp, "w") as f:
         json.dump(meta, f, indent=1, sort_keys=True, default=str)

@@ -13,8 +13,9 @@ pair once, and everything else derives from it:
 - the parity spec (streaming/parity.py `SPECS`): the same pair driven
   through restart-per-point ingestion against a from-scratch
   `partial`, compared after `finalize`;
-- the batch artifact, where one exists (`artifact`, `fp`): `partial`
-  over the whole events table, built once through `artifacts.ensure`;
+- the batch artifact, where one exists (`artifact`, an
+  `artifacts.Artifact` over the events table): `partial` over every
+  event, built once through `artifacts.ensure`;
 - the range read of a day-tiled artifact (`middle_days`): its tiles
   inside the middle ⅕..⅘ of their day span.
 
@@ -40,22 +41,21 @@ class Monoid:
     """A maintained aggregate: the (partial, merge) pair, the view's
     partition column, an optional `finalize` applied to both sides of a
     parity compare (a derived result such as the A9 running chain), and
-    the batch artifact's name and fixed fingerprint params."""
+    the batch artifact's declaration."""
 
     name: str
     partial: Callable[..., DataFrame]
     merge: Callable[[DataFrame, DataFrame], DataFrame]
     key_col: str = "day"
     finalize: "Callable | None" = None
-    artifact: "str | None" = None
-    fp: "dict | None" = None
+    artifact: "artifacts.Artifact | None" = None
 
     def path(self, spark: SparkSession, sf_dir: str) -> str:
         """The batch artifact, `partial` over every event, built on a
         miss."""
-        fp = artifacts.corpus_fingerprint([f"{sf_dir}/events.parquet"], **self.fp)
         return artifacts.ensure(
-            self.artifact, fp, lambda: self.partial(load_events(spark, sf_dir))
+            self.artifact.path(sf_dir),
+            lambda: self.partial(load_events(spark, sf_dir)),
         )
 
     def middle_days(

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from euclid_spark import artifacts
 from euclid_spark.catalog import cached_parquet
 
 from euclid_spark.monoid import Monoid
@@ -45,8 +46,9 @@ CMS_DAY_TILES = Monoid(
     "count_min_sketch",
     _cms_partial,
     _cms_merge,
-    artifact="cms_day_tiles",
-    fp=dict(op="cms_day_tiles", r=CMS_ROWS, w=CMS_W),
+    artifact=artifacts.Artifact(
+        "cms_day_tiles", "events", dict(op="cms_day_tiles", r=CMS_ROWS, w=CMS_W)
+    ),
 )
 
 

@@ -37,9 +37,11 @@ import warnings
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from euclid_spark import artifacts
 from euclid_spark.catalog import cached_parquet
 
 from euclid_spark.cache import local_checkpoint_tracked, persist_tracked
+from euclid_spark.operators import dedup as _d
 
 MAX_ROUNDS = 20
 
@@ -137,6 +139,19 @@ def connected_components(
     return labels
 
 
+DEDUP_COMPONENTS = artifacts.Artifact(
+    "dedup_components",
+    "documents",
+    dict(
+        op="dedup_components",
+        shingle_k=3,
+        max_df=_d.MAX_SHINGLE_DF,
+        jaccard=_d.JACCARD_THRESHOLD,
+        rounds=MAX_ROUNDS,
+    ),
+)
+
+
 def component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus's near-dup component labeling (doc_id, component) as a
     fingerprint-keyed DISK ARTIFACT (euclid_spark/artifacts.py) — the
@@ -150,22 +165,11 @@ def component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     new key. First-ever run on a corpus pays the iterative build; every
     later process — keep-list, curation pipeline, a fresh driver — reads
     one small parquet."""
-    from euclid_spark import artifacts
-    from euclid_spark.operators import dedup as _d
     from euclid_spark.operators.dedup import dedup_ngram_jaccard
 
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="dedup_components",
-        shingle_k=3,
-        max_df=_d.MAX_SHINGLE_DF,
-        jaccard=_d.JACCARD_THRESHOLD,
-        rounds=MAX_ROUNDS,
-    )
     return artifacts.serve_frame(
         spark,
-        "dedup_components",
-        fp,
+        DEDUP_COMPONENTS.path(sf_dir),
         lambda: connected_components(
             dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
         ),
@@ -200,6 +204,21 @@ PR_TOTAL = 1_000_000_000_000  # total rank mass in integer micro-units
 PR_NUM, PR_DEN = 85, 100      # damping 0.85 as an exact ratio
 
 
+PAGERANK_DOCS = artifacts.Artifact(
+    "pagerank_docs",
+    "documents",
+    dict(
+        op="pagerank_docs",
+        iters=PR_ITERS,
+        total=PR_TOTAL,
+        damp=PR_NUM,
+        n_hashes=_d.N_HASHES,
+        band=_d.BAND_SIZE,
+        cap=_d.MAX_BUCKET,
+    ),
+)
+
+
 def graph_doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C39 — FIXED-POINT PAGERANK over the near-dup candidate graph
     (PageRank as a duplicate-cluster centrality signal — the hub of a
@@ -226,21 +245,8 @@ def graph_doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     The rank table is a fingerprint-keyed DISK ARTIFACT (the
     component-labels precedent — centrality over a corpus version is
     an index, not query-time work)."""
-    from euclid_spark import artifacts
-    from euclid_spark.operators import dedup as _d
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="pagerank_docs",
-        iters=PR_ITERS,
-        total=PR_TOTAL,
-        damp=PR_NUM,
-        n_hashes=_d.N_HASHES,
-        band=_d.BAND_SIZE,
-        cap=_d.MAX_BUCKET,
-    )
     return artifacts.serve_frame(
-        spark, "pagerank_docs", fp, lambda: _pagerank_build(spark, sf_dir)
+        spark, PAGERANK_DOCS.path(sf_dir), lambda: _pagerank_build(spark, sf_dir)
     )
 
 

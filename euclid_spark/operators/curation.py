@@ -32,6 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from euclid_spark import artifacts
 from euclid_spark.cache import persist_tracked
 from euclid_spark.catalog import cached_parquet
 
@@ -571,8 +572,6 @@ def _shard_bucket_hex(sf_dir: str) -> int:
     default — the width only tunes cost, never output."""
     import math
 
-    from euclid_spark import artifacts
-
     try:
         n = artifacts.footer_stats(f"{sf_dir}/documents.parquet").num_rows
     except Exception:  # noqa: BLE001 — remote/odd fs: pinned default
@@ -839,6 +838,14 @@ ORACLES["curation_epoch_shards"] = _oracle_epoch_shards()
 # manifest was emitted but nothing wrote or re-opened the shards it
 # describes — the artifact a training dataloader actually opens)
 
+# both keyed by the epoch's (seed, budget) on each call
+EPOCH_SHARD_FILES = artifacts.Artifact(
+    "epoch_shard_files", "documents", dict(op="epoch_shard_files")
+)
+EPOCH_SHARD_MANIFEST = artifacts.Artifact(
+    "epoch_shard_manifest", "documents", dict(op="epoch_shard_manifest")
+)
+
 
 def serve_epoch_shard_files(
     spark: SparkSession,
@@ -854,23 +861,11 @@ def serve_epoch_shard_files(
     is a partition-pruning read, never a scan. Built once per (corpus,
     seed, budget); the bucket width is NOT in the key — it never
     changes the assignment (result-invariance, property-tested)."""
-    import os
-
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="epoch_shard_files", seed=seed, budget=shard_tokens,
+    return artifacts.ensure(
+        EPOCH_SHARD_FILES.path(sf_dir, seed=seed, budget=shard_tokens),
+        lambda: _shard_assignments(spark, sf_dir, seed, shard_tokens),
+        partition_by="shard_id",
     )
-    path = artifacts._path("epoch_shard_files", fp)
-    if not os.path.exists(path):
-        artifacts.save_frame(
-            _shard_assignments(spark, sf_dir, seed, shard_tokens),
-            "epoch_shard_files",
-            fp,
-            partition_by="shard_id",
-        )
-    return path
 
 
 def serve_epoch_shard_manifest(
@@ -886,16 +881,9 @@ def serve_epoch_shard_manifest(
     (curation_epoch_shards is hash-checked against the corpus-derived
     SQL), so serving it loses no verification: C55 pins
     corpus ≡ manifest, C55b pins manifest ≡ bytes-on-disk."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="epoch_shard_manifest", seed=seed, budget=shard_tokens,
-    )
     return artifacts.serve_frame(
         spark,
-        "epoch_shard_manifest",
-        fp,
+        EPOCH_SHARD_MANIFEST.path(sf_dir, seed=seed, budget=shard_tokens),
         lambda: curation_epoch_shards(spark, sf_dir, seed, shard_tokens),
     )
 
@@ -981,24 +969,9 @@ def curation_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_shard_roundtrip(sf_dir: str) -> str:
-    import os as _os
-
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="epoch_shard_files", seed=EPOCH_SEED, budget=SHARD_TOKENS,
-    )
-    path = _os.path.join(
-        artifacts.artifact_dir(), f"epoch_shard_files_{fp}.parquet"
-    )
-    mfp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="epoch_shard_manifest", seed=EPOCH_SEED, budget=SHARD_TOKENS,
-    )
-    mpath = _os.path.join(
-        artifacts.artifact_dir(), f"epoch_shard_manifest_{mfp}.parquet"
-    )
+    axes = dict(seed=EPOCH_SEED, budget=SHARD_TOKENS)
+    path = EPOCH_SHARD_FILES.path(sf_dir, **axes)
+    mpath = EPOCH_SHARD_MANIFEST.path(sf_dir, **axes)
     # An empty corpus writes a manifest but no shard_id=K directories,
     # and DuckDB's read_parquet errors on a glob with zero matches while
     # the Spark face handles the missing partition column and returns 0
@@ -1008,6 +981,8 @@ def _oracle_shard_roundtrip(sf_dir: str) -> str:
     # doc_id, ≥1 token), not from the layout on disk: the generator may
     # run before the face has written the layout (the null-crosscheck
     # ordering), so a disk stat would pick the empty branch spuriously.
+    import os as _os
+
     import duckdb as _duck
 
     docs = f"{sf_dir}/documents.parquet"

@@ -31,6 +31,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from euclid_spark import artifacts
 from euclid_spark.catalog import cached_parquet
 
 from euclid_spark.cache import persist_tracked
@@ -102,6 +103,12 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     return hashed.groupBy("doc_id").agg(*aggs)
 
 
+MINHASH_SIGS = artifacts.Artifact(
+    "minhash_sigs", "documents",
+    dict(op="minhash_sigs", shingle_k=3, n_hashes=N_HASHES),
+)
+
+
 def signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus MinHash signature table as a fingerprint-keyed DISK
     ARTIFACT (euclid_spark/artifacts.py): computed once per corpus
@@ -110,16 +117,10 @@ def signature_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     incrementally (its signature store is this index's streaming twin;
     signatures are a MIN-monoid, so the two maintenance modes agree).
     Deterministic (md5-based), so build-then-serve equals recompute."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="minhash_sigs",
-        shingle_k=3,
-        n_hashes=N_HASHES,
-    )
     return artifacts.serve_frame(
-        spark, "minhash_sigs", fp, lambda: minhash_signatures(_docs(spark, sf_dir))
+        spark,
+        MINHASH_SIGS.path(sf_dir),
+        lambda: minhash_signatures(_docs(spark, sf_dir)),
     )
 
 
@@ -136,6 +137,18 @@ def band_table(sigs: DataFrame) -> DataFrame:
     )
 
 
+MINHASH_PAIRS = artifacts.Artifact(
+    "minhash_pairs",
+    "documents",
+    dict(
+        op="minhash_pair_ledger",
+        n_hashes=N_HASHES,
+        band=BAND_SIZE,
+        cap=MAX_BUCKET,
+    ),
+)
+
+
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C2 — MinHash + LSH candidate pairs (doc_a < doc_b).
 
@@ -145,17 +158,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     deployment builds it once per corpus version and every consumer
     (this face, C37's calibration, the component labeling) reads the
     served scan instead of re-running the bucket join."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="minhash_pair_ledger",
-        n_hashes=N_HASHES,
-        band=BAND_SIZE,
-        cap=MAX_BUCKET,
-    )
     return artifacts.serve_frame(
-        spark, "minhash_pairs", fp, lambda: _build_minhash_pairs(spark, sf_dir)
+        spark, MINHASH_PAIRS.path(sf_dir), lambda: _build_minhash_pairs(spark, sf_dir)
     )
 
 
@@ -184,6 +188,12 @@ def _build_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+CAPPED_SHINGLES = artifacts.Artifact(
+    "capped_shingles", "documents",
+    dict(op="capped_shingles", shingle_k=3, max_df=MAX_SHINGLE_DF),
+)
+
+
 def _capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle universe with the document-frequency skew guard: drop any
     shingle appearing in > MAX_SHINGLE_DF docs BEFORE the self-join. The
@@ -195,14 +205,6 @@ def _capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers (exact Jaccard, embedding-cosine candidates, and through
     them the component labeling build) read one parquet instead of
     re-running shingle → window per process."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="capped_shingles",
-        shingle_k=3,
-        max_df=MAX_SHINGLE_DF,
-    )
 
     def build() -> DataFrame:
         sh = _doc_shingles(spark, sf_dir)
@@ -213,7 +215,13 @@ def _capped_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .drop("df")
         )
 
-    return artifacts.serve_frame(spark, "capped_shingles", fp, build)
+    return artifacts.serve_frame(spark, CAPPED_SHINGLES.path(sf_dir), build)
+
+
+JACCARD_PAIRS = artifacts.Artifact(
+    "jaccard_pairs", "documents",
+    dict(op="jaccard_pairs", cap=MAX_SHINGLE_DF, thr=JACCARD_THRESHOLD),
+)
 
 
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -224,16 +232,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     artifact (the C2 pair-ledger precedent): deterministic corpus
     state, built once per corpus version; the component labeling
     (C14/C16) reads the served scan."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="jaccard_pairs",
-        cap=MAX_SHINGLE_DF,
-        thr=JACCARD_THRESHOLD,
-    )
     return artifacts.serve_frame(
-        spark, "jaccard_pairs", fp, lambda: _build_jaccard_pairs(spark, sf_dir)
+        spark, JACCARD_PAIRS.path(sf_dir), lambda: _build_jaccard_pairs(spark, sf_dir)
     )
 
 
@@ -271,6 +271,11 @@ N_FEAT = 16  # hashed bag-of-words dimensions
 COSINE_DUP_THRESHOLD = 0.9
 
 
+WORD_FEATURES = artifacts.Artifact(
+    "word_features", "documents", dict(op="word_features", n_feat=N_FEAT)
+)
+
+
 def _word_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sparse signed-hash bag-of-words features (the feature-hashing
     trick, Weinberger et al., public): (doc_id, dim, cnt) with dim an
@@ -284,13 +289,8 @@ def _word_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     the layout that scales and that plain SQL can mirror exactly (the
     hashes are ascii-of-md5-hex arithmetic, byte-identical in DuckDB).
     Served as an artifact like every other corpus-level dedup index."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"], op="word_features", n_feat=N_FEAT
-    )
     return artifacts.serve_frame(
-        spark, "word_features", fp, lambda: _word_features_build(spark, sf_dir)
+        spark, WORD_FEATURES.path(sf_dir), lambda: _word_features_build(spark, sf_dir)
     )
 
 
@@ -405,18 +405,20 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
     return per_doc.select("doc_id", simhash.alias("simhash"))
 
 
+SIMHASH_SIGS = artifacts.Artifact(
+    "simhash_sigs", "documents", dict(op="simhash_sigs", bits=63)
+)
+
+
 def simhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus SimHash signature table as a fingerprint-keyed DISK
     ARTIFACT — same build-once-serve contract as signature_index
     (MinHash) and _capped_shingles: the 63-vote aggregate runs once per
     corpus version; every later process reads two parquet columns."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"], op="simhash_sigs", bits=63
-    )
     return artifacts.serve_frame(
-        spark, "simhash_sigs", fp, lambda: simhash_signatures(_docs(spark, sf_dir))
+        spark,
+        SIMHASH_SIGS.path(sf_dir),
+        lambda: simhash_signatures(_docs(spark, sf_dir)),
     )
 
 
@@ -480,6 +482,12 @@ SPAN_W = 8  # duplicated-substring window width (tokens)
 SPAN_DUP_FRAC = 0.2  # flag docs whose duplicated-token share exceeds this
 
 
+SUBSTRING_SPANS = artifacts.Artifact(
+    "substring_spans", "documents",
+    dict(op="substring_spans", w=SPAN_W, frac=SPAN_DUP_FRAC),
+)
+
+
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C28 — EXACT substring-span dedup, the distributed form of the
     suffix-array substring dedup of Lee et al. 2022 ("Deduplicating
@@ -511,18 +519,9 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition (C32) then reads a dimension-thin parquet instead of
     re-screening.
     """
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="substring_spans",
-        w=SPAN_W,
-        frac=SPAN_DUP_FRAC,
-    )
     return artifacts.serve_frame(
         spark,
-        "substring_spans",
-        fp,
+        SUBSTRING_SPANS.path(sf_dir),
         lambda: _substring_spans_build(_docs(spark, sf_dir)),
     )
 
@@ -591,6 +590,18 @@ SEMDEDUP_TAU = 0.95  # within-cluster cosine above which vectors are dups
 SEMDEDUP_TARGET_CLUSTER = 400  # k = ceil(n/target) → pair work ≈ n·target
 
 
+SEMDEDUP_VERDICTS = artifacts.Artifact(
+    "semdedup_verdicts",
+    "embeddings",
+    dict(
+        op="semdedup_verdicts",
+        tau=SEMDEDUP_TAU,
+        target=SEMDEDUP_TARGET_CLUSTER,
+        seed=42,
+    ),
+)
+
+
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C31 — SemDeDup (Abbas et al. 2023, public): semantic dedup over
     LEARNED embeddings — k-means cluster the corpus, compare vectors
@@ -615,22 +626,18 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     (seeded Lloyd ⇒ deterministic output — same precedent as the
     component labels): screened once per corpus version, then read
     thin."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/embeddings.parquet"],
-        op="semdedup_verdicts",
-        tau=SEMDEDUP_TAU,
-        target=SEMDEDUP_TARGET_CLUSTER,
-        seed=42,
-    )
     return artifacts.serve_frame(
-        spark, "semdedup_verdicts", fp, lambda: _semdedup_build(spark, sf_dir)
+        spark, SEMDEDUP_VERDICTS.path(sf_dir), lambda: _semdedup_build(spark, sf_dir)
     )
+
+
+# keyed by the centroid count k, which the build derives from the corpus
+SEMDEDUP_CENTROIDS = artifacts.Artifact(
+    "semdedup_centroids", "embeddings", dict(op="semdedup_centroids", seed=42)
+)
 
 
 def _semdedup_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from euclid_spark import artifacts
     from euclid_spark.functions.vectors import cosine
     from euclid_spark.operators.similarity import (
         _nearest_centroids,
@@ -642,13 +649,9 @@ def _semdedup_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_vec = emb.count()  # one scalar job — orchestration, like components
     k = max(4, -(-n_vec // SEMDEDUP_TARGET_CLUSTER))
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/embeddings.parquet"], op="semdedup_centroids", k=k, seed=42
-    )
     cent = artifacts.serve_frame(
         spark,
-        "semdedup_centroids",
-        fp,
+        SEMDEDUP_CENTROIDS.path(sf_dir, k=k),
         lambda: kmeans_centroids(
             cached_parquet(spark, f"{sf_dir}/embeddings.parquet"), k=k, seed=42
         ),
@@ -720,20 +723,20 @@ def dedup_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+FULL_SHINGLE_SIZES = artifacts.Artifact(
+    "full_shingle_sizes", "documents",
+    dict(op="full_shingle_sizes", shingle_k=3),
+)
+
+
 def _full_shingle_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_f): each document's FULL (uncapped) distinct-shingle
     count — the containment denominators and the hot-shingle bound's
     input. A corpus-level stat, fingerprint-keyed like the capped
     index it sits beside."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"], op="full_shingle_sizes", shingle_k=3
-    )
     return artifacts.serve_frame(
         spark,
-        "full_shingle_sizes",
-        fp,
+        FULL_SHINGLE_SIZES.path(sf_dir),
         lambda: _doc_shingles(spark, sf_dir)
         .groupBy("doc_id")
         .agg(F.count("*").alias("n_f")),
@@ -741,6 +744,19 @@ def _full_shingle_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CONTAINMENT_THRESHOLD = 0.8
+
+
+CONTAINMENT_PAIRS = artifacts.Artifact(
+    "containment_pairs",
+    "documents",
+    dict(
+        op="containment_pairs",
+        shingle_k=3,
+        max_df=MAX_SHINGLE_DF,
+        thr=CONTAINMENT_THRESHOLD,
+        jt=JACCARD_THRESHOLD,
+    ),
+)
 
 
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -782,20 +798,9 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     precedent — the flagged containment relationships are deterministic
     corpus state): consumers like C51's provenance report read a scan
     instead of re-running the candidate join + exact side per query."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="containment_pairs",
-        shingle_k=3,
-        max_df=MAX_SHINGLE_DF,
-        thr=CONTAINMENT_THRESHOLD,
-        jt=JACCARD_THRESHOLD,
-    )
     return artifacts.serve_frame(
         spark,
-        "containment_pairs",
-        fp,
+        CONTAINMENT_PAIRS.path(sf_dir),
         lambda: _build_containment(spark, sf_dir),
     )
 
@@ -890,6 +895,12 @@ def _build_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+MINHASH_CALIBRATION = artifacts.Artifact(
+    "minhash_calibration", "documents",
+    dict(op="minhash_calibration", n_hashes=N_HASHES, band=BAND_SIZE),
+)
+
+
 def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C37 — MinHash SKETCH CALIBRATION: for every LSH candidate pair,
     the sketch's Jaccard estimate (matching signature components / k —
@@ -925,18 +936,9 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per (corpus version, k, band shape) to pick the sketch
     parameters — per-query recompute is precisely what it does not
     need."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="minhash_calibration",
-        n_hashes=N_HASHES,
-        band=BAND_SIZE,
-    )
     return artifacts.serve_frame(
         spark,
-        "minhash_calibration",
-        fp,
+        MINHASH_CALIBRATION.path(sf_dir),
         lambda: _build_minhash_estimate(spark, sf_dir),
     )
 
@@ -1414,19 +1416,9 @@ def _oracle_dedup_semantic(sf_dir: str) -> str:
     (planted-duplicate gated). k is recomputed from the corpus row
     count exactly as _semdedup_build does, via parquet metadata — no
     Spark needed to derive the artifact key."""
-    import os as _os
-
-    from euclid_spark import artifacts
-
-    emb_path = f"{sf_dir}/embeddings.parquet"
-    n_vec = artifacts.footer_stats(emb_path).num_rows
+    n_vec = artifacts.footer_stats(f"{sf_dir}/embeddings.parquet").num_rows
     k = max(4, -(-n_vec // SEMDEDUP_TARGET_CLUSTER))
-    fp = artifacts.corpus_fingerprint(
-        [emb_path], op="semdedup_centroids", k=k, seed=42
-    )
-    path = _os.path.join(
-        artifacts.artifact_dir(), f"semdedup_centroids_{fp}.parquet"
-    )
+    path = SEMDEDUP_CENTROIDS.path(sf_dir, k=k)
     dot_ec = (
         "list_sum(list_transform(range(1, len(e) + 1),"
         " i -> CAST(e[i] AS DOUBLE) * CAST(cemb[i] AS DOUBLE)))"

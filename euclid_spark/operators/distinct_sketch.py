@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from euclid_spark import artifacts
 from euclid_spark.catalog import cached_parquet
 from euclid_spark.monoid import Monoid
 
@@ -112,8 +113,9 @@ LC_DAY_TILES = Monoid(
     "lc_distinct_tiles",
     _lc_partial,
     _lc_merge,
-    artifact="lc_day_tiles",
-    fp=dict(op="lc_day_tiles", m=LC_BITS),
+    artifact=artifacts.Artifact(
+        "lc_day_tiles", "events", dict(op="lc_day_tiles", m=LC_BITS)
+    ),
 )
 
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from euclid_spark import artifacts
 from euclid_spark.catalog import cached_parquet, load_events
 from euclid_spark.functions.hashing import DIGEST_PRIME, MIX, digest_agg, digest_term
 from euclid_spark.monoid import Monoid
@@ -437,6 +438,11 @@ def q2_batch_revelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topl.crossJoin(F.broadcast(_range_provenance(spark, sf_dir)))
 
 
+KECCAK_KEY_MAP = artifacts.Artifact(
+    "keccak_key_map", "events", dict(op="keccak_key_map", slot=MAPPING_SLOT)
+)
+
+
 def _keccak_key_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(token_id, location, mpt_key) for EVERY distinct mapping key in
     the corpus — the REAL-keccak storage-location index
@@ -446,13 +452,7 @@ def _keccak_key_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexing time, never over the event rows and never per query —
     at 100 TB the map is |keys| rows, orders of magnitude smaller
     than the entry stream that references them."""
-    from euclid_spark import artifacts
     from euclid_spark.functions.mpt import keccak256_hex
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="keccak_key_map",
-        slot=MAPPING_SLOT,
-    )
 
     def build() -> DataFrame:
         from euclid_spark.catalog import load_events
@@ -473,7 +473,7 @@ def _keccak_key_map(spark: SparkSession, sf_dir: str) -> DataFrame:
             "location", keccak256_hex(F.concat(key32, slot32))
         ).withColumn("mpt_key", keccak256_hex(F.unhex(F.col("location"))))
 
-    return artifacts.serve_frame(spark, "keccak_key_map", fp, build)
+    return artifacts.serve_frame(spark, KECCAK_KEY_MAP.path(sf_dir), build)
 
 
 def mapping_extract_keccak(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -506,17 +506,7 @@ def mapping_extract_keccak(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _oracle_mapping_extract_keccak(sf_dir: str) -> str:
     """A14's replay: read the served keccak key map, re-derive the
     extraction in SQL."""
-    import os as _os
-
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="keccak_key_map",
-        slot=MAPPING_SLOT,
-    )
-    path = _os.path.join(
-        artifacts.artifact_dir(), f"keccak_key_map_{fp}.parquet"
-    )
+    path = KECCAK_KEY_MAP.path(sf_dir)
     return f"""
         SELECT e.event_id, e.user_id AS owner, {_TOKEN} AS token_id,
                km.location, km.mpt_key

@@ -50,6 +50,7 @@ import math
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from euclid_spark import artifacts
 from euclid_spark.catalog import cached_parquet
 
 
@@ -182,18 +183,22 @@ def merkle_roots(
     )
 
 
-def _served_depth(name: str, fp: str) -> "int | None":
+def _served_depth(path: str) -> "int | None":
     """Tree depth (max level) of a SERVED node artifact from its parquet
     FOOTER statistics — O(row groups) metadata reads, no Spark job (the
     previous `agg(max(level))` here scanned every node row on EVERY
     query call, a per-call job whose cost grows with the corpus). Call
     it after the artifact is served."""
-    from euclid_spark import artifacts
-
-    ml = artifacts.footer_stats(artifacts._path(name, fp)).span(
-        "level"
-    )[1]
+    ml = artifacts.footer_stats(path).span("level")[1]
     return None if ml is None else int(ml)
+
+
+MERKLE_LEAVES_CUSTOMER = artifacts.Artifact(
+    "merkle_leaves_customer", "customer", dict(op="merkle_tree_customer")
+)
+MERKLE_NODES_CUSTOMER = artifacts.Artifact(
+    "merkle_nodes_customer", "customer", dict(op="merkle_tree_customer")
+)
 
 
 def merkle_membership_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -210,11 +215,6 @@ def merkle_membership_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
     builder, then every proof query is the n·log n sibling join against
     two parquet scans. Deterministic (sha2 over canonical order), so
     build-then-serve equals recompute."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/customer.parquet"], op="merkle_tree_customer"
-    )
 
     def build_leaves() -> DataFrame:
         cust = cached_parquet(spark, f"{sf_dir}/customer.parquet")
@@ -229,14 +229,14 @@ def merkle_membership_proof(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("node_hash"),
         )
 
-    leaves = artifacts.serve_frame(spark, "merkle_leaves_customer", fp, build_leaves)
-    nodes = artifacts.serve_frame(
-        spark,
-        "merkle_nodes_customer",
-        fp,
-        lambda: merkle_levels(leaves)[0],
+    leaves = artifacts.serve_frame(
+        spark, MERKLE_LEAVES_CUSTOMER.path(sf_dir), build_leaves
     )
-    depth = _served_depth("merkle_nodes_customer", fp)
+    nodes_at = MERKLE_NODES_CUSTOMER.path(sf_dir)
+    nodes = artifacts.serve_frame(
+        spark, nodes_at, lambda: merkle_levels(leaves)[0]
+    )
+    depth = _served_depth(nodes_at)
     return merkle_opening_paths(
         leaves, entry_cols=["c_custkey"], nodes=nodes, depth=depth
     )
@@ -519,12 +519,20 @@ def _owner_clustered(
     """An owner-keyed store's write form: equal-width group_key (owner)
     buckets over the events' user_id span, each file sorted by
     (group_key, *cols) (`artifacts.clustered`)."""
-    from euclid_spark import artifacts
     from euclid_spark.operators.range_tree import _events_span
 
     return artifacts.clustered(
         spark, df, "group_key", _events_span(spark, sf_dir, "user_id"), *cols
     )
+
+
+# keyed by contract, the request axis
+OWNER_TOKEN_LEAVES = artifacts.Artifact(
+    "owner_token_leaves", "events", dict(op="owner_token_tree", layout="owner_v3")
+)
+OWNER_TOKEN_NODES = artifacts.Artifact(
+    "owner_token_nodes", "events", dict(op="owner_token_tree", layout="owner_v3")
+)
 
 
 def _owner_token_tree(
@@ -537,7 +545,6 @@ def _owner_token_tree(
     per-contract store (each contract has its own storage DB —
     query2/api.rs CircuitInput binds which one). Returns
     (leaves, nodes, depth)."""
-    from euclid_spark import artifacts
     from euclid_spark.operators.euclid import CONTRACT, q2_distinct_keys
 
     contract = CONTRACT if contract is None else contract
@@ -546,10 +553,6 @@ def _owner_token_tree(
     # so the single-owner faces' group_key filter prunes parquet row
     # groups — a one-owner response reads that owner's slice, not every
     # tree
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="owner_token_tree",
-        layout="owner_v3", contract=contract,
-    )
 
     def build_leaves() -> DataFrame:
         keys = q2_distinct_keys(spark, sf_dir, contract=contract).filter(
@@ -569,16 +572,18 @@ def _owner_token_tree(
             "pos",
         )
 
-    leaves = artifacts.serve_frame(spark, "owner_token_leaves", fp, build_leaves)
+    leaves = artifacts.serve_frame(
+        spark, OWNER_TOKEN_LEAVES.path(sf_dir, contract=contract), build_leaves
+    )
+    nodes_at = OWNER_TOKEN_NODES.path(sf_dir, contract=contract)
     nodes = artifacts.serve_frame(
         spark,
-        "owner_token_nodes",
-        fp,
+        nodes_at,
         lambda: _owner_clustered(
             spark, sf_dir, merkle_levels(leaves)[0], "level", "pos"
         ),
     )
-    depth = _served_depth("owner_token_nodes", fp)
+    depth = _served_depth(nodes_at)
     return leaves, nodes, depth
 
 
@@ -656,22 +661,26 @@ def _oracle_batch_responses() -> str:
     """
 
 
-def _erc20_fp(
-    sf_dir: str,
-    rewards_rate: "int | None" = None,
-    contract: "str | None" = None,
-) -> str:
-    from euclid_spark import artifacts
+# the ERC-20 entry tree's stores and its published response share one
+# key; rate AND contract are baked into the leaf rewards (exactly as the
+# reference bakes them into the leaf proofs — each contract has its own
+# storage DB), so each (rate, contract) keys its own artifacts
+_ERC20_TREE = dict(op="erc20_entry_tree", v=2, layout="owner_v3")
+ERC20_ENTRY_LEAVES = artifacts.Artifact("erc20_entry_leaves", "events", _ERC20_TREE)
+ERC20_ENTRY_NODES = artifacts.Artifact("erc20_entry_nodes", "events", _ERC20_TREE)
+ERC20_RESPONSE = artifacts.Artifact("erc20_response", "events", _ERC20_TREE)
+
+
+def _erc20_axes(
+    rewards_rate: "int | None" = None, contract: "str | None" = None
+) -> dict:
+    """The (rate, contract) fingerprint axes, defaults filled in."""
     from euclid_spark.operators.euclid import CONTRACT, REWARDS_RATE
 
-    rate = REWARDS_RATE if rewards_rate is None else int(rewards_rate)
-    # rate AND contract are baked into the leaf rewards (exactly as the
-    # reference bakes them into the leaf proofs — each contract has its
-    # own storage DB), so each (rate, contract) keys its own artifact
-    return artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="erc20_entry_tree", v=2, rate=rate,
-        layout="owner_v3", contract=CONTRACT if contract is None else contract,
-    )
+    return {
+        "rate": REWARDS_RATE if rewards_rate is None else int(rewards_rate),
+        "contract": CONTRACT if contract is None else contract,
+    }
 
 
 def erc20_entry_leaves(
@@ -691,7 +700,6 @@ def erc20_entry_leaves(
     response faces and A13's total fold read them from here, so the
     Arrow u256 leaf stage runs once at ARTIFACT BUILD, never per
     query."""
-    from euclid_spark import artifacts
     from euclid_spark.functions.u256 import u256_to_hex
     from euclid_spark.operators.euclid import erc20_entry_rows
 
@@ -721,8 +729,8 @@ def erc20_entry_leaves(
         return _owner_clustered(spark, sf_dir, out, "pos")
 
     return artifacts.serve_frame(
-        spark, "erc20_entry_leaves",
-        _erc20_fp(sf_dir, rewards_rate, contract),
+        spark,
+        ERC20_ENTRY_LEAVES.path(sf_dir, **_erc20_axes(rewards_rate, contract)),
         build_leaves,
     )
 
@@ -735,20 +743,18 @@ def _erc20_entry_tree(
 ):
     """Leaves + all tree levels (the query_erc20 twin of
     _owner_token_tree). Returns (leaves, nodes, depth)."""
-    from euclid_spark import artifacts
-
     leaves = erc20_entry_leaves(spark, sf_dir, rewards_rate, contract)
+    nodes_at = ERC20_ENTRY_NODES.path(
+        sf_dir, **_erc20_axes(rewards_rate, contract)
+    )
     nodes = artifacts.serve_frame(
         spark,
-        "erc20_entry_nodes",
-        _erc20_fp(sf_dir, rewards_rate, contract),
+        nodes_at,
         lambda: _owner_clustered(
             spark, sf_dir, merkle_levels(leaves)[0], "level", "pos"
         ),
     )
-    depth = _served_depth(
-        "erc20_entry_nodes", _erc20_fp(sf_dir, rewards_rate, contract)
-    )
+    depth = _served_depth(nodes_at)
     return leaves, nodes, depth
 
 
@@ -1027,17 +1033,10 @@ def _refold_to_root(leaf: F.Column, path: F.Column) -> F.Column:
     return F.aggregate(steps, leaf, one)
 
 
-def _q2_fp(sf_dir: str, contract: "str | None" = None) -> str:
-    """q2 pinned-response key — contract is baked in EXACTLY like
-    `_erc20_fp` does (one keying schema across both response families;
-    each contract's published response is its own artifact)."""
-    from euclid_spark import artifacts
-    from euclid_spark.operators.euclid import CONTRACT
-
-    return artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="q2_response",
-        contract=CONTRACT if contract is None else contract,
-    )
+# q2 pinned-response key — contract is a fingerprint axis EXACTLY as
+# for the ERC-20 stores (one keying schema across both response
+# families; each contract's published response is its own artifact)
+Q2_RESPONSE = artifacts.Artifact("q2_response", "events", dict(op="q2_response"))
 
 
 def _serve_q2_response(
@@ -1047,38 +1046,29 @@ def _serve_q2_response(
     response once; verifiers consume the published rows (the
     groth16-framework tests' fixture shape). Publishing writes a
     MANIFEST (family, params, path) that the standalone verifier's
-    discovery reads — the keying logic lives HERE only."""
-    from euclid_spark import artifacts
+    discovery reads — the keying logic lives in Q2_RESPONSE only."""
     from euclid_spark.operators.euclid import CONTRACT
 
     contract = CONTRACT if contract is None else contract
-    ev = f"{sf_dir}/events.parquet"
-    fp = _q2_fp(sf_dir, contract)
+    path = Q2_RESPONSE.path(sf_dir, contract=contract)
     out = artifacts.serve_frame(
-        spark, "q2_response", fp,
+        spark, path,
         lambda: verifiable_query_response(spark, sf_dir, contract=contract),
     )
     artifacts.publish_manifest(
-        "q2_response", fp, "q2", [ev], {"contract": contract}
+        path, "q2", [f"{sf_dir}/events.parquet"], {"contract": contract}
     )
     return out
 
 
 def _serve_erc20_response(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from euclid_spark import artifacts
-    from euclid_spark.operators.euclid import CONTRACT, REWARDS_RATE
-
-    ev = f"{sf_dir}/events.parquet"
-    fp = _erc20_fp(sf_dir)
+    axes = _erc20_axes()
+    path = ERC20_RESPONSE.path(sf_dir, **axes)
     out = artifacts.serve_frame(
-        spark,
-        "erc20_response",
-        fp,
-        lambda: erc20_verifiable_response(spark, sf_dir),
+        spark, path, lambda: erc20_verifiable_response(spark, sf_dir)
     )
     artifacts.publish_manifest(
-        "erc20_response", fp, "erc20", [ev],
-        {"contract": CONTRACT, "rate": REWARDS_RATE},
+        path, "erc20", [f"{sf_dir}/events.parquet"], axes
     )
     return out
 

@@ -41,6 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from euclid_spark import artifacts
 from euclid_spark.cache import local_checkpoint_tracked, persist_tracked
 from euclid_spark.operators.euclid import _range, _token_id
 
@@ -412,6 +413,11 @@ def mpt_node_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+MPT_BLOCK_DB = artifacts.Artifact(
+    "mpt_block_db", "events", dict(op="mpt_block_db")
+)
+
+
 def decoded_node_db(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The INGESTED BLOCK DB — synthesized trie nodes, decoded and
     root-flagged — as a fingerprint-keyed DISK ARTIFACT
@@ -423,11 +429,6 @@ def decoded_node_db(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs once per events-table version and every later walk reads one
     parquet. Deterministic end-to-end (synthetic entries + canonical
     trie encoding), so build-then-serve equals recompute."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="mpt_block_db"
-    )
 
     def build() -> DataFrame:
         # nodes feeds BOTH the decoder and the root flag — persist so the
@@ -443,7 +444,7 @@ def decoded_node_db(spark: SparkSession, sf_dir: str) -> DataFrame:
             "is_root", F.coalesce("is_root", F.lit(False))
         )
 
-    return artifacts.serve_frame(spark, "mpt_block_db", fp, build)
+    return artifacts.serve_frame(spark, MPT_BLOCK_DB.path(sf_dir), build)
 
 
 def mpt_reassemble_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -491,16 +492,7 @@ def _oracle_mpt_node_decode(sf_dir: str) -> str:
     """A15's replay: the per-owner node census over the served node DB
     (the artifact IS the stored ingestion output; only RLP/keccak
     decode is engine-side, spec-vector pinned)."""
-    import os as _os
-
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="mpt_block_db"
-    )
-    path = _os.path.join(
-        artifacts.artifact_dir(), f"mpt_block_db_{fp}.parquet"
-    )
+    path = MPT_BLOCK_DB.path(sf_dir)
     return f"""
         SELECT owner,
                CAST(COUNT(*) AS BIGINT) AS n_nodes,

@@ -24,6 +24,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from euclid_spark import artifacts
 from euclid_spark.catalog import cached_parquet
 
 from euclid_spark.functions.imaging import decode_image
@@ -275,16 +276,16 @@ def mm_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return binary.mapInPandas(_audio_batches, schema=AUDIO_SCHEMA)
 
 
+MM_AUDIO = artifacts.Artifact(
+    "mm_audio", "documents", dict(op="mm_audio", v=1)
+)
+
+
 def _mm_audio_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The C40 audio-energy output as a fingerprint-keyed artifact —
     the mm_features discipline applied to the audio triage signals."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"], op="mm_audio", v=1
-    )
     return artifacts.serve_frame(
-        spark, "mm_audio", fp, lambda: mm_audio_energy(spark, sf_dir)
+        spark, MM_AUDIO.path(sf_dir), lambda: mm_audio_energy(spark, sf_dir)
     )
 
 
@@ -329,14 +330,7 @@ def mm_audio_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_mm_audio_triage(sf_dir: str) -> str:
-    import os as _os
-
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"], op="mm_audio", v=1
-    )
-    path = _os.path.join(artifacts.artifact_dir(), f"mm_audio_{fp}.parquet")
+    path = MM_AUDIO.path(sf_dir)
 
     def avg(c):
         return (f"ROUND(CAST(SUM(CAST({c} AS DECIMAL(38,9))) AS DOUBLE)"
@@ -354,17 +348,17 @@ def _oracle_mm_audio_triage(sf_dir: str) -> str:
     """
 
 
+MM_FEATURES = artifacts.Artifact(
+    "mm_features", "documents", dict(op="mm_features", v=1)
+)
+
+
 def _mm_features_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The C11 extractor output as a fingerprint-keyed artifact —
     extract once per corpus version, serve every consumer (the BPE /
     doc_signals discipline applied to the multimodal features)."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"], op="mm_features", v=1
-    )
     return artifacts.serve_frame(
-        spark, "mm_features", fp, lambda: mm_binary_pipeline(spark, sf_dir)
+        spark, MM_FEATURES.path(sf_dir), lambda: mm_binary_pipeline(spark, sf_dir)
     )
 
 
@@ -414,14 +408,7 @@ def mm_feature_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_mm_feature_census(sf_dir: str) -> str:
-    import os as _os
-
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"], op="mm_features", v=1
-    )
-    path = _os.path.join(artifacts.artifact_dir(), f"mm_features_{fp}.parquet")
+    path = MM_FEATURES.path(sf_dir)
 
     def avg(c):
         return (f"ROUND(CAST(SUM(CAST({c} AS DECIMAL(38,9))) AS DOUBLE)"
@@ -595,24 +582,26 @@ def _dhash_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
+IMAGE_DHASHES = artifacts.Artifact(
+    "image_dhashes",
+    "documents",
+    dict(
+        op="image_dhashes",
+        h=IMG_H,
+        w=IMG_W,
+        v=2,  # v2: quarantine column (decode_error) in the signature schema
+    ),
+)
+
+
 def image_dhashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, dhash, w, h): the per-image signature table — REAL BMP
     decode + dHash per row inside Arrow batches, served as a
     fingerprint-keyed artifact (the signature-index precedent: hash a
     corpus version once, match against it forever)."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="image_dhashes",
-        h=IMG_H,
-        w=IMG_W,
-        v=2,  # v2: quarantine column (decode_error) in the signature schema
-    )
     return artifacts.serve_frame(
         spark,
-        "image_dhashes",
-        fp,
+        IMAGE_DHASHES.path(sf_dir),
         lambda: with_image_payload(
             cached_parquet(spark, f"{sf_dir}/documents.parquet")
         ).mapInPandas(_dhash_batches, schema=DHASH_SCHEMA),
@@ -695,17 +684,7 @@ def _oracle_mm_image_dhash(sf_dir: str) -> str:
     part: both engines' `>>` on a signed 64-bit dhash is arithmetic,
     and the `& 65535` mask makes the band value identical either
     way."""
-    import os as _os
-
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="image_dhashes", h=IMG_H, w=IMG_W, v=2,
-    )
-    path = _os.path.join(
-        artifacts.artifact_dir(), f"image_dhashes_{fp}.parquet"
-    )
+    path = IMAGE_DHASHES.path(sf_dir)
     return f"""
     WITH sig AS (
         SELECT doc_id, dhash FROM read_parquet('{path}/*.parquet')

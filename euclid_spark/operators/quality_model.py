@@ -65,6 +65,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from euclid_spark import artifacts
 from euclid_spark.catalog import cached_parquet
 
 from euclid_spark.cache import persist_tracked
@@ -247,22 +248,25 @@ def _residuals(
     )
 
 
-def quality_model_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fitted model as a served artifact: (b, w, m) — bucket weight
-    and bucket mean in micros; b = −1 is the bias row (m = XBIAS). This
-    is what an online consumer (the D22 streaming curation stage)
-    scores against — offline-trained, online-served."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
+QUALITY_MODEL = artifacts.Artifact(
+    "quality_model",
+    "documents",
+    dict(
         op="quality_model",
         b=QM_BUCKETS,
         iters=QM_ITERS,
         lr=QM_LR,
         xbias=QM_XBIAS,
         qmin=QM_QUALITY_MIN,
-    )
+    ),
+)
+
+
+def quality_model_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The fitted model as a served artifact: (b, w, m) — bucket weight
+    and bucket mean in micros; b = −1 is the bias row (m = XBIAS). This
+    is what an online consumer (the D22 streaming curation stage)
+    scores against — offline-trained, online-served."""
 
     def build() -> DataFrame:
         feats = persist_tracked(
@@ -277,7 +281,7 @@ def quality_model_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append((-1, w_bias, QM_XBIAS))
         return spark.createDataFrame(rows, "b long, w long, m long")
 
-    return artifacts.serve_frame(spark, "quality_model", fp, build)
+    return artifacts.serve_frame(spark, QUALITY_MODEL.path(sf_dir), build)
 
 
 def model_verdicts(
@@ -316,23 +320,26 @@ def model_verdicts(
     ).select("doc_id", "zp", (F.col("zp") > 0).alias("model_keep"))
 
 
-def text_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C61 — per-doc output of the learned filter: heuristic label,
-    final logit (micros, as a 6-dp double), hard-sigmoid probability,
-    and the keep verdict. Served as a fingerprint-keyed artifact (the
-    repetition-verdict pattern): the fit runs once per corpus version;
-    C25/C35 consumers read the stored verdict column."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
+QUALITY_MODEL_SCORES = artifacts.Artifact(
+    "quality_model_scores",
+    "documents",
+    dict(
         op="quality_model_scores",
         b=QM_BUCKETS,
         iters=QM_ITERS,
         lr=QM_LR,
         xbias=QM_XBIAS,
         qmin=QM_QUALITY_MIN,
-    )
+    ),
+)
+
+
+def text_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """C61 — per-doc output of the learned filter: heuristic label,
+    final logit (micros, as a 6-dp double), hard-sigmoid probability,
+    and the keep verdict. Served as a fingerprint-keyed artifact (the
+    repetition-verdict pattern): the fit runs once per corpus version;
+    C25/C35 consumers read the stored verdict column."""
 
     def build() -> DataFrame:
         feats = persist_tracked(
@@ -365,7 +372,7 @@ def text_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("zp") > 0).alias("model_keep"),
         )
 
-    return artifacts.serve_frame(spark, "quality_model_scores", fp, build)
+    return artifacts.serve_frame(spark, QUALITY_MODEL_SCORES.path(sf_dir), build)
 
 
 def _oracle_quality_model() -> str:

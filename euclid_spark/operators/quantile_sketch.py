@@ -36,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from euclid_spark import artifacts
 from euclid_spark.catalog import cached_parquet
 from euclid_spark.monoid import Monoid
 
@@ -203,8 +204,9 @@ HDR_DAY_TILES = Monoid(
     "hdr_quantile_tiles",
     _hdr_partial,
     _hdr_merge,
-    artifact="hdr_day_tiles",
-    fp=dict(op="hdr_day_tiles", sb=SUB_BITS),
+    artifact=artifacts.Artifact(
+        "hdr_day_tiles", "events", dict(op="hdr_day_tiles", sb=SUB_BITS)
+    ),
 )
 
 

@@ -63,8 +63,10 @@ Construction — the reference's own aggregation shape, hash-only:
   store and its keyed tree), the owner's O(log range) cover-tile
   digests, its entry rows in the two < TILE_SIZE edge windows (read
   once; a Q2 response's key fold reuses them), the revealed rows, the
-  entry rows of the ≤ L touched cells (one event_id window per cell,
-  ≤ TILE_SIZE rows each) and the ≤ L·depth cell-tree siblings, each
+  entry rows of the ≤ L touched cells (≤ TILE_SIZE rows each: Q2 reads
+  one event_id window per cell, ERC-20 takes them from its revealed-row
+  read, which holds every covered cell) and the ≤ L·depth cell-tree
+  siblings, each
   tree node matching the one chain row that holds it
   (`chain_filter`), a Q2 response's cover keys in the same read;
   Python ranks each opened cell's leaves, spells the ERC-20 rewards in
@@ -104,6 +106,7 @@ from pyspark.sql import functions as F
 from euclid_spark import artifacts
 from euclid_spark.catalog import local_frame
 from euclid_spark.functions.u256 import u256_to_hex
+from euclid_spark.operators.euclid import CONTRACT, REWARDS_RATE
 from euclid_spark.operators.merkle import (
     merkle_levels,
     merkle_levels_local,
@@ -135,17 +138,19 @@ CELL_LVL_OFF = 100
 # --------------------------------------------------------------------------
 
 
-def _fp(sf_dir: str, family: str, rate, contract) -> str:
-    """The published response family's fingerprint."""
-    from euclid_spark.operators.euclid import CONTRACT, REWARDS_RATE
-
-    params = {"op": f"range_response_{family}", "tile": TILE_SIZE,
-              "contract": CONTRACT if contract is None else contract}
-    if family == "erc20":
-        params["rate"] = REWARDS_RATE if rate is None else int(rate)
-    return artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], **params
-    )
+# each family's published pinned-face response: the default contract
+# (and, for ERC-20, rewards rate) are its fingerprint's query params
+RESPONSES = {
+    "q2": artifacts.Artifact(
+        "rr_q2_response", "events",
+        dict(op="range_response_q2", tile=TILE_SIZE, contract=CONTRACT),
+    ),
+    "erc20": artifacts.Artifact(
+        "rr_erc20_response", "events",
+        dict(op="range_response_erc20", tile=TILE_SIZE, contract=CONTRACT,
+             rate=REWARDS_RATE),
+    ),
+}
 
 
 # each family's keyed tile tree, whose entry store holds its leaves
@@ -419,8 +424,6 @@ def _response_root(
     the element sequence folded onto the header, skipping revealed rows
     and opening paths entirely. The verifier faces' commit_ok recompute:
     same independence (served commitments → elements → fold)."""
-    from euclid_spark.operators.euclid import REWARDS_RATE
-
     rate = (
         (REWARDS_RATE if rewards_rate is None else int(rewards_rate))
         if family == "erc20"
@@ -514,7 +517,7 @@ def _range_response(
     rewards_rate: "int | None",
     contract: "str | None",
 ) -> DataFrame:
-    from euclid_spark.operators.euclid import OWNER, REWARDS_RATE, TOP_L
+    from euclid_spark.operators.euclid import OWNER, TOP_L
 
     owner = OWNER if owner is None else int(owner)
     L = TOP_L if L is None else int(L)
@@ -569,16 +572,17 @@ def _range_response(
         # the owner's entries in the range, first L in block order: a
         # read bounded by the owner's rows in the range (no structural
         # cap — the same rows the Spark limit(L) scan read)
+        in_range = sorted(
+            artifacts.read_rows(
+                entries,
+                [[own, ("event_id", ">=", b_min), ("event_id", "<", b_max)]],
+                _entry_cols(family),
+            ),
+            key=lambda r: r["event_id"],
+        )
         rev_rows = [
             {**_payload(family, r), "cell": r["event_id"] // TILE_SIZE}
-            for r in sorted(
-                artifacts.read_rows(
-                    entries,
-                    [[own, ("event_id", ">=", b_min), ("event_id", "<", b_max)]],
-                    _entry_cols(family),
-                ),
-                key=lambda r: r["event_id"],
-            )[:L]
+            for r in in_range[:L]
         ]
         for r in rev_rows:
             r["node_hash"] = _leaf_hex(family, r)
@@ -590,10 +594,12 @@ def _range_response(
 
     # ---- opening paths, assembled DRIVER-SIDE: a response is ≤ L
     # revealed rows by construction, so every path is built in Python
-    # from two bounded reads — the entry-store rows of the ≤ L touched
-    # cells (one event_id window per cell, ≤ TILE_SIZE rows each), each
-    # cell's leaves ranked and refolded into its in-cell tree, and the
-    # ≤ L·depth cell-tree siblings ((level, pos) IN-lists)
+    # from bounded reads — the entry-store rows of the ≤ L touched cells
+    # (≤ TILE_SIZE rows each), each cell's leaves ranked and refolded
+    # into its in-cell tree, and the ≤ L·depth cell-tree siblings
+    # ((level, pos) IN-lists). A covered cell lies inside [b_min, b_max),
+    # so ERC-20 takes its rows from the range read above; Q2 reads one
+    # event_id window per cell.
     if family == "q2":
         def _is_cov(r):
             return r["cell"] >= 0
@@ -621,7 +627,7 @@ def _range_response(
                 return k, c, i
         return None
 
-    touched = sorted({int(r["cell"]) for r in cov_rows})
+    touched = {int(r["cell"]) for r in cov_rows}
     need: "set[tuple[int, int]]" = set()
     for r in cov_rows:
         t = _tile_for(int(r["cell"]))
@@ -629,10 +635,14 @@ def _range_response(
             for j in range(t[0]):
                 anc = int(r["cell"]) >> j
                 need.add((j, anc + 1 if anc % 2 == 0 else anc - 1))
-    opened = cell_leaves(family, artifacts.read_rows(
-        entries, _cells_filter(owner, [(c, c) for c in touched]),
-        _entry_cols(family),
-    )) if touched else {}
+    if family == "erc20":
+        cell_rows = [r for r in in_range if r["event_id"] // TILE_SIZE in touched]
+    else:
+        cell_rows = artifacts.read_rows(
+            entries, _cells_filter(owner, [(c, c) for c in sorted(touched)]),
+            _entry_cols(family),
+        ) if touched else []
+    opened = cell_leaves(family, cell_rows)
     in_nodes = {
         c: merkle_levels_local([_leaf_hex(family, lf) for lf in lv])
         for (_, c), lv in opened.items()
@@ -745,21 +755,17 @@ def _serve_range_response(
 ) -> DataFrame:
     """The pinned-face range response as a published artifact (the
     A27/A28 pattern: the prover publishes once, verifiers consume)."""
-    from euclid_spark.operators.euclid import CONTRACT, REWARDS_RATE
-
-    fp = _fp(sf_dir, family, None, None)
+    decl = RESPONSES[family]
+    path = decl.path(sf_dir)
     build = (
         (lambda: erc20_range_response(spark, sf_dir))
         if family == "erc20"
         else (lambda: q2_range_response(spark, sf_dir))
     )
-    out = artifacts.serve_frame(spark, f"rr_{family}_response", fp, build)
-    params: "dict[str, object]" = {"tile": TILE_SIZE, "contract": CONTRACT}
-    if family == "erc20":
-        params["rate"] = REWARDS_RATE
+    out = artifacts.serve_frame(spark, path, build)
     artifacts.publish_manifest(
-        f"rr_{family}_response", fp, f"{family}_range",
-        [f"{sf_dir}/events.parquet"], params,
+        path, f"{family}_range", [f"{sf_dir}/events.parquet"],
+        {k: v for k, v in decl.params.items() if k != "op"},
     )
     return out
 
@@ -884,11 +890,7 @@ def _oracle_range_response(family: str):
     def gen(sf_dir: str) -> str:
         import duckdb
 
-        from euclid_spark.operators.euclid import (
-            OWNER,
-            REWARDS_RATE,
-            _TOKEN,
-        )
+        from euclid_spark.operators.euclid import OWNER, _TOKEN
         from euclid_spark.operators.merkle import merkle_proof_sql
 
         import os as _os
@@ -1134,15 +1136,9 @@ def _oracle_verify_range(family: str):
     a scalar subquery)."""
 
     def gen(sf_dir: str) -> str:
-        import os as _os
-
-        from euclid_spark import artifacts
         from euclid_spark.operators.merkle import _REFOLD_SQL
 
-        fp = _fp(sf_dir, family, None, None)
-        path = _os.path.join(
-            artifacts.artifact_dir(), f"rr_{family}_response_{fp}.parquet"
-        )
+        path = RESPONSES[family].path(sf_dir)
         resp_sql = _oracle_range_response(family)(sf_dir)
         idc = "event_id" if family == "erc20" else "token_id"
         payload = (

@@ -351,8 +351,7 @@ class TileTree:
     arithmetic (`edge_rows` is None when the request has no edge
     window)."""
 
-    name: str  # artifact name
-    fp: dict  # fixed fingerprint params
+    tiles: artifacts.Artifact  # the tree's own store, over the events
     axes: tuple  # request params in the fingerprint: "contract", "rate"
     keys: tuple  # key columns beside (level, cell)
     # (events, contract, rate) → input rows (event_id, keys, measures)
@@ -362,9 +361,9 @@ class TileTree:
     cols: tuple  # partial columns
     edge_cols: tuple  # input-row columns the driver fold reads
     fold: Callable[[list, "list | None"], object]
-    # (name, fixed fingerprint params) of the owner-clustered input-row
-    # store the edge windows read; None reads the events table itself
-    store: "tuple[str, dict] | None" = None
+    # the owner-clustered input-row store the edge windows read; None
+    # reads the events table itself
+    store: "artifacts.Artifact | None" = None
     # projection of a streaming partial onto its split-invariant fields
     invariant: "Callable[[DataFrame], DataFrame] | None" = None
     commit: "str | None" = None  # range_response family of `node_hash`
@@ -372,20 +371,22 @@ class TileTree:
     key_col = "day"
     finalize = None
 
+    @property
+    def name(self) -> str:
+        return self.tiles.name
+
     def _spec(
         self, spark: SparkSession, sf_dir: str, contract, rate, store: bool
     ) -> tuple:
-        """(name, fingerprint, build, options) of the tree or, with
-        `store`, of its input-row store — the one definition the path
-        and frame forms share."""
+        """(path, build, options) of the tree or, with `store`, of its
+        input-row store — the one definition the path and frame forms
+        share."""
         vals = {
             "contract": CONTRACT if contract is None else contract,
             "rate": REWARDS_RATE if rate is None else int(rate),
         }
-        name, fixed = self.store if store else (self.name, self.fp)
-        fp = artifacts.corpus_fingerprint(
-            [f"{sf_dir}/events.parquet"],
-            **fixed, **{a: vals[a] for a in self.axes},
+        path = (self.store if store else self.tiles).path(
+            sf_dir, **{a: vals[a] for a in self.axes}
         )
         if store:
             def build() -> DataFrame:
@@ -413,10 +414,10 @@ class TileTree:
                 )
         else:
             # one file, in the (level, cell) order the cover read filters on
-            return name, fp, lambda: self.levels(spark, sf_dir).orderBy(
+            return path, lambda: self.levels(spark, sf_dir).orderBy(
                 "level", "cell"
             ), None
-        return name, fp, build, artifacts.FINE_ROW_GROUPS
+        return path, build, artifacts.FINE_ROW_GROUPS
 
     def path(
         self, spark: SparkSession, sf_dir: str, contract=None, rate=None,
@@ -639,8 +640,9 @@ def _rt_fold(tiles: list, ev: "list | None") -> tuple:
 
 
 RANGE_TREE = TileTree(
-    name="range_tree_tiles",
-    fp=dict(op="range_tree", tile=TILE_SIZE),
+    tiles=artifacts.Artifact(
+        "range_tree_tiles", "events", dict(op="range_tree", tile=TILE_SIZE)
+    ),
     axes=(),
     keys=(),
     rows=lambda ev, contract, rate: ev.select("event_id", "user_id", "value"),
@@ -735,8 +737,10 @@ def _q2_fold(tiles: list, ev: "list | None") -> "list[dict]":
 
 
 Q2_KEY_TREE = TileTree(
-    name="q2_key_tiles",
-    fp=dict(op="q2_key_tree", tile=TILE_SIZE, L=Q2_L, layout="chain_v2"),
+    tiles=artifacts.Artifact(
+        "q2_key_tiles", "events",
+        dict(op="q2_key_tree", tile=TILE_SIZE, L=Q2_L, layout="chain_v2"),
+    ),
     axes=("contract",),
     keys=("owner",),
     rows=lambda ev, contract, rate: _q2_entries(ev, contract),
@@ -748,7 +752,9 @@ Q2_KEY_TREE = TileTree(
     # (owner, event_id, token_id) by owner: an owner's edge windows and
     # a response's opened cells prune to its row groups instead of
     # re-scanning and re-parsing the raw events table
-    store=("q2_entry_store", dict(op="q2_entry_store", layout="owner_v1")),
+    store=artifacts.Artifact(
+        "q2_entry_store", "events", dict(op="q2_entry_store", layout="owner_v1")
+    ),
     # a batch cannot know a key's rank in its whole leaf cell: the
     # stream keeps the earliest leaf cell and no position
     invariant=lambda df: df.withColumn(
@@ -831,8 +837,10 @@ def _erc20_fold(tiles: list, ev: "list | None") -> "tuple | None":
 
 
 ERC20_REWARD_TREE = TileTree(
-    name="erc20_reward_tiles",
-    fp=dict(op="erc20_reward_tree", tile=TILE_SIZE, layout="chain_v2"),
+    tiles=artifacts.Artifact(
+        "erc20_reward_tiles", "events",
+        dict(op="erc20_reward_tree", tile=TILE_SIZE, layout="chain_v2"),
+    ),
     axes=("rate", "contract"),
     keys=("owner",),
     rows=_erc20_rows,
@@ -843,8 +851,8 @@ ERC20_REWARD_TREE = TileTree(
     fold=_erc20_fold,
     # the un-range-restricted sibling of merkle.erc20_entry_leaves: the
     # leaf circuit runs once per corpus version, here
-    store=(
-        "erc20_all_entry_leaves",
+    store=artifacts.Artifact(
+        "erc20_all_entry_leaves", "events",
         dict(op="erc20_all_entry_leaves", tile=TILE_SIZE, layout="owner_v1"),
     ),
     commit="erc20",

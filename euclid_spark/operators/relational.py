@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from euclid_spark import artifacts
 from euclid_spark.catalog import load_events
 
 
@@ -1052,6 +1053,11 @@ _PARTSUPP_CTE = f"""partsupp AS (
                               l_suppkey AS ps_suppkey FROM lineitem))"""
 
 
+PARTSUPP_SYNTH = artifacts.Artifact(
+    "partsupp_synth", "lineitem", dict(op="partsupp_synth")
+)
+
+
 def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The synthesized partsupp: one row per distinct (part, supplier)
     pair in lineitem, costs/quantities a pure function of the keys.
@@ -1063,13 +1069,8 @@ def _partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     a dimension-sized parquet. Deterministic (pure key arithmetic), so
     build-then-serve equals recompute; the DuckDB oracles keep the same
     derivation inline as a CTE."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/lineitem.parquet"], op="partsupp_synth"
-    )
     return artifacts.serve_frame(
-        spark, "partsupp_synth", fp, lambda: _partsupp_build(spark, sf_dir)
+        spark, PARTSUPP_SYNTH.path(sf_dir), lambda: _partsupp_build(spark, sf_dir)
     )
 
 

@@ -21,10 +21,11 @@ codegen, double precision, no Python UDF, no Arrow transfer.
 
 from __future__ import annotations
 
-import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from euclid_spark import artifacts
 from euclid_spark.catalog import cached_parquet
 
 from euclid_spark.functions.vectors import cosine, dot
@@ -238,35 +239,23 @@ def kmeans_centroids(emb: DataFrame, k: int = N_CENTROIDS, seed: int = 42) -> Da
     return emb.sparkSession.createDataFrame(rows, "cid int, cemb array<double>")
 
 
-# Fitted-centroid artifact store — TWO tiers, both keyed by the CORPUS
-# FINGERPRINT (file stats of the embeddings parquet + model params):
-#   1. in-process dict (k×DIM doubles of driver memory);
-#   2. an on-disk parquet artifact (VERDICT r4 #8), so a FRESH process
-#      probes without ever refitting — the model-registry pattern: train
-#      once, persist, serve. Atomic write-to-temp-then-rename; a corpus
-#      or parameter change changes the fingerprint, never overwrites.
-_CENTROIDS: "dict[str, list[tuple[int, list[float]]]]" = {}
-
-# artifact root: repo-local by default (this environment must not write
-# outside the repo), overridable for a real deployment's registry path.
-# (Kept as a module attribute — tests re-point it — but resolved the
-# same way as the shared store in euclid_spark/artifacts.py.)
-_ARTIFACT_DIR = os.environ.get(
-    "EUCLID_SPARK_ARTIFACTS",
-    os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-                 ".artifacts"),
+# The fitted IVF model and its corpus→list assignment, both keyed by the
+# embeddings corpus + model params (k/seed/query-split included so a
+# parameter change refits under a new key). v=2: the centroids are a
+# Spark-written directory (until v=2, one pandas file).
+IVF_CENTROIDS = artifacts.Artifact(
+    "ivf_centroids", "embeddings", dict(k=N_CENTROIDS, q=N_QUERIES, seed=42, v=2)
+)
+IVF_LISTS = artifacts.Artifact(
+    "ivf_lists", "embeddings", dict(k=N_CENTROIDS, q=N_QUERIES, seed=42)
 )
 
-
-def _corpus_fingerprint(sf_dir: str) -> str:
-    """Fingerprint of the embeddings corpus + IVF model params (shared
-    stat-based scheme: euclid_spark/artifacts.py) — k/seed/query-split
-    included so a parameter change refits under a new key."""
-    from euclid_spark import artifacts
-
-    return artifacts.corpus_fingerprint(
-        [f"{sf_dir}/embeddings.parquet"], k=N_CENTROIDS, q=N_QUERIES, seed=42
-    )
+# Fitted-centroid store — TWO tiers: this in-process dict (k×DIM
+# doubles of driver memory, keyed by the artifact path) over the
+# on-disk IVF_CENTROIDS artifact, so a FRESH process probes without
+# ever refitting — the model-registry pattern: train once, persist,
+# serve.
+_CENTROIDS: "dict[str, list[tuple[int, list[float]]]]" = {}
 
 
 def ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -276,33 +265,21 @@ def ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     every later process (bench runs, driver gates) is probe-only.
     Callers with an externally-trained model bypass this entirely by
     passing `centroids=` to sim_ivf_topk."""
-    import pandas as pd
-
-    fp = _corpus_fingerprint(sf_dir)
-    if fp not in _CENTROIDS:
-        artifact = os.path.join(_ARTIFACT_DIR, f"ivf_centroids_{fp}.parquet")
-        if os.path.exists(artifact):
-            pdf = pd.read_parquet(artifact)
-            _CENTROIDS[fp] = [
-                (int(c), [float(x) for x in e])
-                for c, e in zip(pdf["cid"], pdf["cemb"])
-            ]
-        else:
-            emb = _emb(spark, sf_dir)
-            cent = kmeans_centroids(emb.filter(F.col("vec_id") >= N_QUERIES))
-            _CENTROIDS[fp] = [(r["cid"], list(r["cemb"])) for r in cent.collect()]
-            os.makedirs(_ARTIFACT_DIR, exist_ok=True)
-            tmp = f"{artifact}.tmp.{os.getpid()}"
-            pd.DataFrame(
-                {
-                    "cid": [c for c, _ in _CENTROIDS[fp]],
-                    "cemb": [e for _, e in _CENTROIDS[fp]],
-                }
-            ).to_parquet(tmp, index=False)
-            os.replace(tmp, artifact)  # atomic: concurrent fitters agree
     from euclid_spark.catalog import local_frame
 
-    return local_frame(spark, _CENTROIDS[fp], "cid int, cemb array<double>")
+    path = IVF_CENTROIDS.path(sf_dir)
+    if path not in _CENTROIDS:
+        artifacts.ensure(
+            path,
+            lambda: kmeans_centroids(
+                _emb(spark, sf_dir).filter(F.col("vec_id") >= N_QUERIES)
+            ),
+        )
+        _CENTROIDS[path] = sorted(
+            (int(r["cid"]), [float(x) for x in r["cemb"]])
+            for r in artifacts.read_rows(path)
+        )
+    return local_frame(spark, _CENTROIDS[path], "cid int, cemb array<double>")
 
 
 def _nearest_centroids(
@@ -342,8 +319,6 @@ def ivf_inverted_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings stay in the corpus parquet, never duplicated."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _IVF_LISTS:
-        fp = _corpus_fingerprint(sf_dir)
-        artifact = os.path.join(_ARTIFACT_DIR, f"ivf_lists_{fp}.parquet")
         corpus_emb = (
             _emb(spark, sf_dir)
             .filter(F.col("vec_id") >= N_QUERIES)
@@ -351,24 +326,15 @@ def ivf_inverted_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce")
             )
         )
-        if os.path.exists(artifact):
-            assign = cached_parquet(spark, artifact)
-            corpus = corpus_emb.join(assign, "neighbor_id")
-        else:
-            cent = ivf_centroids(spark, sf_dir)
-            corpus = _nearest_centroids(
-                corpus_emb, cent, "neighbor_id", "ce", keep=1
-            )
-            os.makedirs(_ARTIFACT_DIR, exist_ok=True)
-            tmp = f"{artifact}.tmp.{os.getpid()}"
-            corpus.select("neighbor_id", "cid").write.parquet(tmp)
-            try:
-                os.rename(tmp, artifact)  # atomic when no concurrent winner
-            except OSError:
-                import shutil
-
-                shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-        corpus = corpus.persist()
+        assign = artifacts.serve_frame(
+            spark,
+            IVF_LISTS.path(sf_dir),
+            lambda: _nearest_centroids(
+                corpus_emb, ivf_centroids(spark, sf_dir), "neighbor_id", "ce",
+                keep=1,
+            ).select("neighbor_id", "cid"),
+        )
+        corpus = corpus_emb.join(assign, "neighbor_id").persist()
         corpus.count()
         _IVF_LISTS[key] = corpus
     return _IVF_LISTS[key]
@@ -456,6 +422,11 @@ def quantize_int8(vec: F.Column) -> F.Column:
     )
 
 
+INT8_CORPUS = artifacts.Artifact(
+    "int8_corpus", "embeddings", dict(op="int8_layout", q=N_QUERIES)
+)
+
+
 def sim_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C24 — top-k cosine over int8-QUANTIZED vectors on both sides.
     The per-vector scale cancels out of the cosine
@@ -483,15 +454,9 @@ def sim_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # layout ("computed once at ingest"): a fingerprint-keyed disk
     # artifact — every query batch scans the 4×-smaller int8 parquet and
     # never re-quantizes the corpus
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/embeddings.parquet"], op="int8_layout", q=N_QUERIES
-    )
     c = artifacts.serve_frame(
         spark,
-        "int8_corpus",
-        fp,
+        INT8_CORPUS.path(sf_dir),
         lambda: emb.filter(F.col("vec_id") >= N_QUERIES)
         .select(
             F.col("vec_id").alias("neighbor_id"),
@@ -515,6 +480,12 @@ def sim_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SEED_K = 8  # pinned seed-model centroid count (shared with D27's face)
+
+
+IVF_PINNED_ASSIGN = artifacts.Artifact(
+    "ivf_pinned_assign", "embeddings",
+    dict(op="ivf_pinned_assign", seed_k=SEED_K, nq=N_QUERIES),
+)
 
 
 def sim_ivf_pinned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -544,16 +515,9 @@ def sim_ivf_pinned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ce").cast("array<double>").alias("cemb"),
     )
 
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/embeddings.parquet"],
-        op="ivf_pinned_assign", seed_k=SEED_K, nq=N_QUERIES,
-    )
     assign = artifacts.serve_frame(
         spark,
-        "ivf_pinned_assign",
-        fp,
+        IVF_PINNED_ASSIGN.path(sf_dir),
         lambda: _nearest_centroids(corpus, seed, "neighbor_id", "ce", keep=1),
     )
     probes = _nearest_centroids(
@@ -891,15 +855,13 @@ def _oracle_ivf_topk(sf_dir: str) -> str:
     corpus file stats, so it is computable before the artifact exists;
     the gate's contract runs the Spark side (which serves the
     artifact) before the SQL."""
-    path = os.path.join(
-        _ARTIFACT_DIR, f"ivf_centroids_{_corpus_fingerprint(sf_dir)}.parquet"
-    )
+    path = IVF_CENTROIDS.path(sf_dir)
     return f"""
     WITH q AS (SELECT vec_id AS query_id, embedding AS qe
                FROM embeddings WHERE vec_id < {N_QUERIES}),
     c AS (SELECT vec_id AS neighbor_id, embedding AS ce
           FROM embeddings WHERE vec_id >= {N_QUERIES}),
-    cent AS (SELECT cid, cemb FROM read_parquet('{path}')),
+    cent AS (SELECT cid, cemb FROM read_parquet('{path}/*.parquet')),
     asg AS (SELECT neighbor_id, ce, cid,
                    ROW_NUMBER() OVER (PARTITION BY neighbor_id ORDER BY
                        ROUND(CASE WHEN {_NC} * {_N_CEMB} = 0 THEN 0.0
@@ -940,20 +902,28 @@ RECALL_METHODS = (
 )
 
 
-def _recall_fp(sf_dir: str, op: str) -> str:
-    """One fingerprint scheme for every served retrieval RESULT SET
-    (the exact baseline and each method's (query_id, neighbor_id)
-    table). Every parameter that changes any method's answer is keyed
-    so a tuning change re-derives under a new key; the corpus identity
-    comes from the shared stat-based scheme (artifacts.py)."""
-    from euclid_spark import artifacts
-
-    return artifacts.corpus_fingerprint(
-        [f"{sf_dir}/embeddings.parquet"],
-        op=op, q=N_QUERIES, k=TOP_K, tables=N_TABLES, bits=BITS_PER_TABLE,
-        planes=N_PLANES, pfx=PREFIX_DIMS, pool=RERANK_POOL,
-        cent=N_CENTROIDS, probe=N_PROBE, seed_k=SEED_K, seed=42,
-        fit_iters=IVF_FIT_ITERS,
+def _serve_result(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """One served retrieval RESULT SET, `ann_result_<name>`: the exact
+    baseline's or a method's (query_id, neighbor_id) table. One
+    declaration scheme for all of them: every parameter that changes
+    any method's answer is keyed, so a tuning change re-derives under a
+    new key."""
+    decl = artifacts.Artifact(
+        f"ann_result_{name}",
+        "embeddings",
+        dict(
+            op=f"ann_result_{name}", q=N_QUERIES, k=TOP_K, tables=N_TABLES,
+            bits=BITS_PER_TABLE, planes=N_PLANES, pfx=PREFIX_DIMS,
+            pool=RERANK_POOL, cent=N_CENTROIDS, probe=N_PROBE, seed_k=SEED_K,
+            seed=42, fit_iters=IVF_FIT_ITERS,
+        ),
+    )
+    return artifacts.serve_frame(
+        spark,
+        decl.path(sf_dir),
+        lambda: build().select("query_id", "neighbor_id"),
     )
 
 
@@ -969,14 +939,7 @@ def ann_method_results(
     per-call recomputes (query2/revelation/circuit.rs binds served
     commitments). Methods are deterministic (each is itself an
     oracle-checked face), so serving loses nothing."""
-    from euclid_spark import artifacts
-
-    return artifacts.serve_frame(
-        spark,
-        f"ann_result_{name}",
-        _recall_fp(sf_dir, op=f"ann_result_{name}"),
-        lambda: QUERIES[key](spark, sf_dir).select("query_id", "neighbor_id"),
-    )
+    return _serve_result(spark, sf_dir, name, lambda: QUERIES[key](spark, sf_dir))
 
 
 def sim_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -998,15 +961,11 @@ def sim_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     trees and MinHash ledgers."""
     from functools import reduce
 
-    from euclid_spark import artifacts
-
-    exact = artifacts.serve_frame(
-        spark,
-        "ann_result_exact",
-        _recall_fp(sf_dir, op="ann_result_exact"),
-        lambda: sim_topk_cosine(spark, sf_dir).select(
-            "query_id", "neighbor_id"
-        ),
+    # the fitted IVF model is the oracle's input table: serve it even
+    # when every result set below is already served
+    ivf_centroids(spark, sf_dir)
+    exact = _serve_result(
+        spark, sf_dir, "exact", lambda: sim_topk_cosine(spark, sf_dir)
     )
     qn = exact.groupBy("query_id").agg(F.count(F.lit(1)).alias("k_exact"))
     # one TAGGED union instead of five independent join+agg branches:
@@ -1136,19 +1095,18 @@ _FIT_MEAN = (
 )
 
 
+IVF_EXACT_MODEL = artifacts.Artifact(
+    "ivf_exact_model", "embeddings",
+    dict(op="ivf_exact_fit", k=N_CENTROIDS, q=N_QUERIES, iters=IVF_FIT_ITERS),
+)
+
+
 def ivf_exact_fit_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The decimal-exact Lloyd model, served once per corpus version
     (cid, cemb). Each iteration: one broadcast assignment scan, one
     bounded (cid, dim) aggregate (≤ k·DIM groups whatever the corpus
     size), one ≤k-row driver fetch (the documented model-row collect
     class) to rebuild the broadcastable centroid literal."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/embeddings.parquet"],
-        op="ivf_exact_fit", k=N_CENTROIDS, q=N_QUERIES,
-        iters=IVF_FIT_ITERS,
-    )
 
     def build() -> DataFrame:
         corpus = (
@@ -1193,7 +1151,19 @@ def ivf_exact_fit_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         return spark.createDataFrame(cent_rows, schema)
 
-    return artifacts.serve_frame(spark, "ivf_exact_model", fp, build)
+    return artifacts.serve_frame(spark, IVF_EXACT_MODEL.path(sf_dir), build)
+
+
+IVF_EXACT_ASSIGN = artifacts.Artifact(
+    "ivf_exact_assign",
+    "embeddings",
+    dict(
+        op="ivf_exact_assign",
+        k=N_CENTROIDS,
+        q=N_QUERIES,
+        iters=IVF_FIT_ITERS,
+    ),
+)
 
 
 def sim_ivf_exact_fit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1204,8 +1174,6 @@ def sim_ivf_exact_fit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     fit itself oracle-replayed, this is the first fully hash-checked
     train→serve ANN path in the registry (C48 verifies the machinery
     over a seed model; C12 keeps the real Spark-ML fit, recall-gated)."""
-    from euclid_spark import artifacts
-
     cent = ivf_exact_fit_centroids(spark, sf_dir)
     corpus = (
         _emb(spark, sf_dir)
@@ -1215,15 +1183,9 @@ def sim_ivf_exact_fit_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("embedding").alias("ce"),
         )
     )
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/embeddings.parquet"],
-        op="ivf_exact_assign", k=N_CENTROIDS, q=N_QUERIES,
-        iters=IVF_FIT_ITERS,
-    )
     assign = artifacts.serve_frame(
         spark,
-        "ivf_exact_assign",
-        fp,
+        IVF_EXACT_ASSIGN.path(sf_dir),
         lambda: _nearest_centroids(corpus, cent, "neighbor_id", "ce", keep=1),
     )
     probes = _nearest_centroids(
@@ -1372,34 +1334,18 @@ def sim_matryoshka_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint-keyed artifacts (the C59 economics); recall math is the
     C59 micro-average. The raw rows reuse C59's `ann_result_exact` /
     `ann_result_prefix_rerank` artifacts unchanged."""
-    from euclid_spark import artifacts
-
-    exact_raw = artifacts.serve_frame(
-        spark,
-        "ann_result_exact",
-        _recall_fp(sf_dir, op="ann_result_exact"),
-        lambda: sim_topk_cosine(spark, sf_dir).select(
-            "query_id", "neighbor_id"
-        ),
+    exact_raw = _serve_result(
+        spark, sf_dir, "exact", lambda: sim_topk_cosine(spark, sf_dir)
     )
     pr_raw = ann_method_results(
         spark, sf_dir, "prefix_rerank", "sim_prefix_rerank"
     )
-    exact_mrl = artifacts.serve_frame(
-        spark,
-        "ann_result_mrl_exact",
-        _recall_fp(sf_dir, op="ann_result_mrl_exact"),
-        lambda: _topk_over(_mrl_emb(spark, sf_dir)).select(
-            "query_id", "neighbor_id"
-        ),
+    exact_mrl = _serve_result(
+        spark, sf_dir, "mrl_exact", lambda: _topk_over(_mrl_emb(spark, sf_dir))
     )
-    pr_mrl = artifacts.serve_frame(
-        spark,
-        "ann_result_mrl_prefix",
-        _recall_fp(sf_dir, op="ann_result_mrl_prefix"),
-        lambda: _prefix_rerank_over(_mrl_emb(spark, sf_dir)).select(
-            "query_id", "neighbor_id"
-        ),
+    pr_mrl = _serve_result(
+        spark, sf_dir, "mrl_prefix",
+        lambda: _prefix_rerank_over(_mrl_emb(spark, sf_dir)),
     )
     frames = []
     for name, exact, got in (

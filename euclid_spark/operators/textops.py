@@ -14,6 +14,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+from euclid_spark import artifacts
 from euclid_spark.catalog import cached_parquet
 
 from euclid_spark.cache import persist_tracked
@@ -352,6 +353,11 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     )
 
 
+REPETITION_VERDICTS = artifacts.Artifact(
+    "repetition_verdicts", "documents", dict(op="repetition_verdicts")
+)
+
+
 def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C21 — within-document repetition signals (the Gopher/MassiveText
     repetition rules, public: Rae et al. 2021): duplicate-line fraction
@@ -364,15 +370,9 @@ def text_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     dsir/ppl/substring precedent) — a production pipeline stores the
     per-doc verdicts beside the corpus and C25 composes the stored
     column."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"], op="repetition_verdicts"
-    )
     return artifacts.serve_frame(
         spark,
-        "repetition_verdicts",
-        fp,
+        REPETITION_VERDICTS.path(sf_dir),
         lambda: repetition_stats(_docs(spark, sf_dir)),
     )
 
@@ -425,6 +425,12 @@ CONTAM_MIN_SHARED = 2
 CONTAM_SHINGLE_K = 8
 
 
+BENCH_OVERLAP = artifacts.Artifact(
+    "bench_overlap", "documents",
+    dict(op="bench_overlap", k=CONTAM_SHINGLE_K, m=CONTAM_MIN_SHARED),
+)
+
+
 def text_benchmark_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C23 — train/test contamination screen (the n-gram overlap check of
     GPT-3/PaLM data cards, public: Brown et al. 2020 app. C): flag
@@ -447,8 +453,6 @@ def text_benchmark_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     r7: served as a quality-signal ARTIFACT (the repetition-verdict
     precedent) — contamination flags are corpus-version state a
     production pipeline stores once and composes from."""
-    from euclid_spark import artifacts
-
     def build() -> DataFrame:
         docs = _docs(spark, sf_dir)
         is_bench = F.col("source").isin(*BENCH_SOURCES)
@@ -456,13 +460,7 @@ def text_benchmark_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs.filter(~is_bench), benchmark_shingles(docs.filter(is_bench))
         )
 
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="bench_overlap",
-        k=CONTAM_SHINGLE_K,
-        m=CONTAM_MIN_SHARED,
-    )
-    return artifacts.serve_frame(spark, "bench_overlap", fp, build)
+    return artifacts.serve_frame(spark, BENCH_OVERLAP.path(sf_dir), build)
 
 
 def _per_doc_distinct_shingles(df: DataFrame) -> DataFrame:
@@ -650,6 +648,12 @@ DSIR_BUCKETS = 128  # hashed n-gram feature space
 DSIR_TARGET_LANG = "en"  # target distribution: the English slice
 
 
+DSIR_WEIGHTS = artifacts.Artifact(
+    "dsir_weights", "documents",
+    dict(op="dsir_weights", b=DSIR_BUCKETS, target=DSIR_TARGET_LANG),
+)
+
+
 def text_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C29 — DSIR-style importance resampling (Xie et al. 2023, "Data
     Selection for Language Models via Importance Resampling", public):
@@ -677,16 +681,8 @@ def text_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the served-quality-signal pattern of dedup_substring_spans):
     deterministic, computed once per corpus version, read thin by the
     C32 composition."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="dsir_weights",
-        b=DSIR_BUCKETS,
-        target=DSIR_TARGET_LANG,
-    )
     return artifacts.serve_frame(
-        spark, "dsir_weights", fp, lambda: _dsir_build(spark, sf_dir)
+        spark, DSIR_WEIGHTS.path(sf_dir), lambda: _dsir_build(spark, sf_dir)
     )
 
 
@@ -740,6 +736,11 @@ def _dsir_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+PPL_BUCKETS = artifacts.Artifact(
+    "ppl_buckets", "documents", dict(op="ppl_buckets")
+)
+
+
 def text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C30 — CCNet-style perplexity bucketing (Wenzek et al. 2020,
     public): split each language's documents into head/middle/tail
@@ -762,13 +763,8 @@ def text_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Served as a fingerprint-keyed DISK ARTIFACT like the other per-doc
     quality-signal tables (deterministic; C32 reads it thin)."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"], op="ppl_buckets"
-    )
     return artifacts.serve_frame(
-        spark, "ppl_buckets", fp, lambda: _ppl_buckets_build(spark, sf_dir)
+        spark, PPL_BUCKETS.path(sf_dir), lambda: _ppl_buckets_build(spark, sf_dir)
     )
 
 
@@ -923,6 +919,11 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------ C35: data card
+DOC_SIGNALS = artifacts.Artifact(
+    "doc_signals", "documents", dict(op="doc_signals")
+)
+
+
 def doc_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-doc QUALITY-SIGNAL table as ONE served artifact
     (VERDICT r7 #6 — the C51/repetition-verdict pattern applied to the
@@ -933,12 +934,7 @@ def doc_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of re-running the scorers. This is how a production
     pipeline stores signals beside the corpus; at 100 TB the build is
     the ingest job and the consumers never touch the text."""
-    from euclid_spark import artifacts
     from euclid_spark.functions.text import normalized_text
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"], op="doc_signals"
-    )
 
     def build() -> DataFrame:
         docs = _docs(spark, sf_dir)
@@ -964,7 +960,7 @@ def doc_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(pii, "doc_id")
         )
 
-    return artifacts.serve_frame(spark, "doc_signals", fp, build)
+    return artifacts.serve_frame(spark, DOC_SIGNALS.path(sf_dir), build)
 
 
 def text_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1096,6 +1092,11 @@ def _winnow_select_batches(it):
         )
 
 
+WINNOW_FPS = artifacts.Artifact(
+    "winnow_fps", "documents", dict(op="winnow_fps", k=WINNOW_K, w=WINNOW_W)
+)
+
+
 def text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C41 — WINNOWING fingerprint selection (Schleimer, Wilkerson &
     Aiken 2003 — the MOSS scheme, the local-sampling guarantee MinHash
@@ -1111,16 +1112,8 @@ def text_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint table is a fingerprint-keyed DISK ARTIFACT (the
     MinHash-signature precedent — a winnowing index is what MOSS
     stores per corpus version)."""
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="winnow_fps",
-        k=WINNOW_K,
-        w=WINNOW_W,
-    )
     return artifacts.serve_frame(
-        spark, "winnow_fps", fp, lambda: _winnow_build(spark, sf_dir)
+        spark, WINNOW_FPS.path(sf_dir), lambda: _winnow_build(spark, sf_dir)
     )
 
 
@@ -1158,6 +1151,12 @@ BPE_N_MERGES = 256   # learned merge-table size
 BPE_VOCAB_TOP = 10_000  # histogram rows the trainer sees (scale-invariant)
 
 
+BPE_MERGES = artifacts.Artifact(
+    "bpe_merges", "documents",
+    dict(op="bpe_merges", n=BPE_N_MERGES, v=BPE_VOCAB_TOP),
+)
+
+
 def bpe_merges_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned BPE merge table (rank, left, right) as a
     fingerprint-keyed DISK ARTIFACT — a tokenizer vocabulary is
@@ -1171,15 +1170,7 @@ def bpe_merges_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     no full sort). The merge loop itself is inherently sequential
     (each merge conditions on the last) and runs driver-side over that
     bounded histogram — orchestration on ~10⁴ rows, not data work."""
-    from euclid_spark import artifacts
     from euclid_spark.functions.bpe import train_bpe
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="bpe_merges",
-        n=BPE_N_MERGES,
-        v=BPE_VOCAB_TOP,
-    )
 
     def build() -> DataFrame:
         hist = (
@@ -1197,7 +1188,13 @@ def bpe_merges_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank int, left string, right string",
         )
 
-    return artifacts.serve_frame(spark, "bpe_merges", fp, build)
+    return artifacts.serve_frame(spark, BPE_MERGES.path(sf_dir), build)
+
+
+BPE_TOKEN_COUNTS = artifacts.Artifact(
+    "bpe_token_counts", "documents",
+    dict(op="bpe_token_counts", n=BPE_N_MERGES, v=BPE_VOCAB_TOP),
+)
 
 
 def _bpe_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1208,15 +1205,7 @@ def _bpe_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch word→count memo does a dict hit for all but first
     sightings — the A13/C41 documented Python-boundary case (a merge
     loop is not expressible as efficient column expressions)."""
-    from euclid_spark import artifacts
     from euclid_spark.functions.bpe import count_tokens, merge_ranks
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="bpe_token_counts",
-        n=BPE_N_MERGES,
-        v=BPE_VOCAB_TOP,
-    )
 
     def build() -> DataFrame:
         import pandas as pd
@@ -1244,7 +1233,7 @@ def _bpe_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             _count(F.col("text")).alias("n_bpe_tokens"),
         )
 
-    return artifacts.serve_frame(spark, "bpe_token_counts", fp, build)
+    return artifacts.serve_frame(spark, BPE_TOKEN_COUNTS.path(sf_dir), build)
 
 
 def text_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1310,19 +1299,7 @@ def text_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fertility_oracle(sf_dir: str) -> str:
-    import os as _os
-
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
-        op="bpe_token_counts",
-        n=BPE_N_MERGES,
-        v=BPE_VOCAB_TOP,
-    )
-    path = _os.path.join(
-        artifacts.artifact_dir(), f"bpe_token_counts_{fp}.parquet"
-    )
+    path = BPE_TOKEN_COUNTS.path(sf_dir)
     return f"""
         SELECT d.lang,
                CAST(COUNT(*) AS BIGINT) AS n_docs,

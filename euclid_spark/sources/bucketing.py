@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from euclid_spark import artifacts
+
 
 def write_bucketed(
     df: DataFrame, table: str, key: str, n_buckets: int = 16
@@ -32,6 +34,14 @@ def bucketed_join(
     return spark.table(left_table).join(spark.table(right_table), on=key)
 
 
+# the bucketed tables are per-process managed tables, each named by its
+# declaration's name and a fingerprint prefix of its source table
+_BUCKETED = (
+    artifacts.Artifact("li_bkt", "lineitem", dict(op="bucketed_join")),
+    artifacts.Artifact("ord_bkt", "orders", dict(op="bucketed_join")),
+)
+
+
 def rel_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D10's registry face — the SHUFFLE-FREE FACT-FACT JOIN: lineitem
     and orders are persisted once as bucketed+sorted tables on the
@@ -48,17 +58,11 @@ def rel_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL revenue so the total is addition-order independent."""
     from pyspark.sql import functions as F
 
-    from euclid_spark import artifacts
-
     import os
     import shutil
     from urllib.parse import urlparse
 
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/lineitem.parquet", f"{sf_dir}/orders.parquet"],
-        op="bucketed_join",
-    )[:12]
-    li_t, o_t = f"li_bkt_{fp}", f"ord_bkt_{fp}"
+    li_t, o_t = (f"{a.name}_{a.fingerprint(sf_dir)[:12]}" for a in _BUCKETED)
     # bucketing metadata lives in the session catalog; with no external
     # metastore a fresh process must re-register. A warehouse directory
     # left by a previous process is an orphan (its bucketing metadata

@@ -52,6 +52,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from euclid_spark import artifacts
 from euclid_spark.cache import persist_tracked, scope
 from euclid_spark.functions.keccak import keccak256
 from euclid_spark.functions.rlp import (
@@ -280,13 +281,15 @@ _STAGE2_SCHEMA = (
 )
 
 
-def _fixture_fp(sf_dir: str) -> str:
-    from euclid_spark import artifacts
-
-    return artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="eth_proof_fixture",
-        slot=MAPPING_SLOT, v=3,  # v3: rebalanced (size-proportional) layout
-    )
+ETH_PROOF_FIXTURE = artifacts.Artifact(
+    "eth_proof_fixture",
+    "events",
+    dict(
+        op="eth_proof_fixture",
+        slot=MAPPING_SLOT,
+        v=3,  # v3: rebalanced (size-proportional) layout
+    ),
+)
 
 
 def eth_proof_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -295,9 +298,7 @@ def eth_proof_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     CAPTURE-MANIFEST sidecar (which test identity produced the
     address) — verification never reads it; the oracle uses it to join
     expectations."""
-    from euclid_spark import artifacts
-
-    fp = _fixture_fp(sf_dir)
+    path = ETH_PROOF_FIXTURE.path(sf_dir)
 
     def build() -> DataFrame:
         from euclid_spark.catalog import load_events
@@ -527,10 +528,9 @@ def eth_proof_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     with scope():  # the build's pins go once serve_frame has written
-        out = artifacts.serve_frame(spark, "eth_proof_fixture", fp, build)
+        out = artifacts.serve_frame(spark, path, build)
     artifacts.publish_manifest(
-        "eth_proof_fixture", fp, "eth_state",
-        [f"{sf_dir}/events.parquet"],
+        path, "eth_state", [f"{sf_dir}/events.parquet"],
         {"slot": MAPPING_SLOT, "v": 2},
     )
     return out
@@ -770,14 +770,7 @@ def _oracle_eth_proof_verify(sf_dir: str) -> str:
     distinct in-corpus mapping-key count, balance = storage_sum = the
     sum of those keys; every verdict TRUE. The fixture artifact supplies
     only the address↔identity manifest (the sidecar column)."""
-    import os as _os
-
-    from euclid_spark import artifacts
-
-    path = _os.path.join(
-        artifacts.artifact_dir(),
-        f"eth_proof_fixture_{_fixture_fp(sf_dir)}.parquet",
-    )
+    path = ETH_PROOF_FIXTURE.path(sf_dir)
     tok = "CAST(json_extract_string(props, '$.k') AS BIGINT)"
     return f"""
         WITH d AS (

@@ -21,13 +21,10 @@ Scale shape: JSONL is line-splittable, so the read parallelizes by
 byte ranges like any text source; the parse is per-partition JVM code
 (Jackson), no Python; the summary is one groupBy on (bool, source) —
 bounded keys. The fixture build is a one-time fingerprint-keyed
-artifact (artifacts.py discipline: atomic temp+rename publish).
+artifact, written through `artifacts.ensure` like every other.
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,40 +46,39 @@ _DOC_SCHEMA = T.StructType(
 )
 
 
+# .jsonl suffix: the payload is text lines, not parquet
+JSONL_DOCS = artifacts.Artifact(
+    "jsonl_docs",
+    "documents",
+    dict(corrupt_mod=CORRUPT_MOD, v=1),
+    suffix=".jsonl",
+)
+
+
 def jsonl_fixture_path(spark: SparkSession, sf_dir: str) -> str:
     """Serve the damaged-JSONL fixture for this corpus (build once per
     corpus version, the artifact discipline). Lines are to_json of the
     document struct — newlines in text are escaped by JSON, so the
     file stays one record per line."""
-    src = f"{sf_dir}/documents.parquet"
-    fp = artifacts.corpus_fingerprint([src], corrupt_mod=CORRUPT_MOD, v=1)
-    # .jsonl suffix: the payload is text lines, not parquet (ADVICE r13)
-    path = artifacts._path("jsonl_docs", fp, suffix=".jsonl")
-    if os.path.exists(path):
-        return path
-    docs = spark.read.parquet(src).withColumn(
-        "line",
-        F.to_json(F.struct("doc_id", "text", "lang", "source", "n_chars")),
-    )
-    # truncation only when doc_id is present and divisible — a NULL
-    # doc_id row is never damaged (and its damaged line could have been
-    # empty: to_json of an all-NULL struct is '{}')
-    bad = F.col("doc_id").isNotNull() & (F.col("doc_id") % CORRUPT_MOD == 0)
-    out = docs.select(
-        F.when(
-            bad, F.col("line").substr(F.lit(1), F.length("line") - F.lit(5))
+
+    def build() -> DataFrame:
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").withColumn(
+            "line",
+            F.to_json(F.struct("doc_id", "text", "lang", "source", "n_chars")),
         )
-        .otherwise(F.col("line"))
-        .alias("value")
-    )
-    os.makedirs(artifacts.artifact_dir(), exist_ok=True)
-    tmp = f"{path}.tmp.{os.getpid()}"
-    out.write.mode("overwrite").text(tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError:  # concurrent builder won — deterministic bytes
-        shutil.rmtree(tmp, ignore_errors=True)
-    return path
+        # truncation only when doc_id is present and divisible — a NULL
+        # doc_id row is never damaged (and its damaged line could have
+        # been empty: to_json of an all-NULL struct is '{}')
+        bad = F.col("doc_id").isNotNull() & (F.col("doc_id") % CORRUPT_MOD == 0)
+        return docs.select(
+            F.when(
+                bad, F.col("line").substr(F.lit(1), F.length("line") - F.lit(5))
+            )
+            .otherwise(F.col("line"))
+            .alias("value")
+        )
+
+    return artifacts.ensure(JSONL_DOCS.path(sf_dir), build)
 
 
 def src_jsonl_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:

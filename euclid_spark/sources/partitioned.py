@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from euclid_spark import artifacts
+
 
 def write_events_partitioned(spark: SparkSession, sf_dir: str, out_dir: str) -> None:
     """events → parquet partitioned by event day (one directory per
@@ -39,33 +41,24 @@ def read_events_range(
     return ev.filter((F.col("day") >= day_from) & (F.col("day") < day_to))
 
 
+EVENTS_BY_DAY = artifacts.Artifact(
+    "events_by_day", "events", dict(op="events_by_day")
+)
+
+
 def serve_partitioned_events(spark: SparkSession, sf_dir: str) -> str:
     """The day-partitioned layout as a fingerprint-keyed DISK ARTIFACT
     directory (the ingest-time rewrite a production deployment runs
-    once per corpus version): built with the same atomic temp+rename
-    discipline as artifacts.save_frame, returned as the directory path
-    the partition-pruned reads point at."""
-    import os
-    import shutil
-
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="events_by_day"
-    )
-    path = os.path.join(artifacts.artifact_dir(), f"events_by_day_{fp}.parquet")
-    if not os.path.exists(path):
-        os.makedirs(artifacts.artifact_dir(), exist_ok=True)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
+    once per corpus version), built through `artifacts.ensure` and
+    returned as the directory path the partition-pruned reads point
+    at."""
+    return artifacts.ensure(
+        EVENTS_BY_DAY.path(sf_dir),
+        lambda: spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
             "day", F.to_date("ts")
-        )
-        ev.write.mode("overwrite").partitionBy("day").parquet(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:  # concurrent builder won — identical bytes
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
+        ),
+        partition_by="day",
+    )
 
 
 def day_partitioned_range(spark: SparkSession, sf_dir: str) -> DataFrame:

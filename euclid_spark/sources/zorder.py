@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from euclid_spark import artifacts
+
 ZBITS = 16  # 16 bits per dimension → 32-bit z-value
 
 
@@ -62,16 +64,16 @@ def _bucket16(col: Column, lo: Column, hi: Column) -> Column:
     )
 
 
-def write_zordered(
-    df: DataFrame, out_dir: str, dim_a: str, dim_b: str, n_files: int = 16
-) -> None:
-    """Rewrite `df` into `n_files` parquet files clustered by the
+def zordered(
+    df: DataFrame, dim_a: str, dim_b: str, n_files: int = 16
+) -> DataFrame:
+    """`df` in its write layout: `n_files` partitions clustered by the
     z-order of (dim_a, dim_b) — both must be numeric (cast timestamps
     to epoch first). Layout cost: one stats row (broadcast), one range
     exchange, one local sort; every later 2-D box query pays
     proportionally fewer file opens (tests/test_zorder.py measures
-    it). The z column is dropped on write — the layout is invisible to
-    readers except through the parquet min/max footers."""
+    it). The z column is dropped — the layout is invisible to readers
+    except through the parquet min/max footers."""
     stats = df.agg(
         F.min(dim_a).alias("a_lo"),
         F.max(dim_a).alias("a_hi"),
@@ -82,14 +84,12 @@ def write_zordered(
         _bucket16(F.col(dim_a), F.col("a_lo"), F.col("a_hi")),
         _bucket16(F.col(dim_b), F.col("b_lo"), F.col("b_hi")),
     )
-    (
+    return (
         df.join(F.broadcast(stats))
         .withColumn("_z", z)
         .repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")
         .drop("_z", "a_lo", "a_hi", "b_lo", "b_hi")
-        .write.mode("overwrite")
-        .parquet(out_dir)
     )
 
 
@@ -100,33 +100,27 @@ def write_zordered(
 Z_USER_LO, Z_USER_HI = 3, 11
 
 
+EVENTS_ZORDER = artifacts.Artifact(
+    "events_zorder", "events", dict(op="events_zorder", bits=ZBITS)
+)
+
+
 def serve_zordered_events(spark, sf_dir: str) -> str:
     """The z-ordered events layout as a fingerprint-keyed ARTIFACT
     directory (the ingest/OPTIMIZE-time rewrite, built once per corpus
     version — the day-partitioned layout's 2-D sibling). Clustered on
     (user_id, event time): the (owner, block-range) box every
     reference query scopes."""
-    import os
-    import shutil
-
-    from euclid_spark import artifacts
-
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="events_zorder", bits=ZBITS
+    return artifacts.ensure(
+        EVENTS_ZORDER.path(sf_dir),
+        lambda: zordered(
+            spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
+                "ts_epoch", F.col("ts").cast("timestamp").cast("long")
+            ),
+            "user_id",
+            "ts_epoch",
+        ),
     )
-    path = os.path.join(artifacts.artifact_dir(), f"events_zorder_{fp}.parquet")
-    if not os.path.exists(path):
-        os.makedirs(artifacts.artifact_dir(), exist_ok=True)
-        tmp = f"{path}.tmp.{os.getpid()}"
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
-            "ts_epoch", F.col("ts").cast("timestamp").cast("long")
-        )
-        write_zordered(ev, tmp, "user_id", "ts_epoch")
-        try:
-            os.rename(tmp, path)
-        except OSError:  # concurrent builder won — identical bytes
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
 
 
 def zorder_box_scan(spark, sf_dir: str) -> DataFrame:

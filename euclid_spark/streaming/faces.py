@@ -21,8 +21,8 @@ declares the query, the engine owns the incremental run):
   `ivm.MaintainedAggregate`. A row references its monoid's declaration
   (a monoid.Monoid or range_tree.TileTree: partial, merge, partition
   key — declared once, next to what reads it, and the same object
-  parity.SPECS tests) and adds only the face: artifact name,
-  fingerprint params, source frame, split key, feed format, optional
+  parity.SPECS tests) and adds only the face: its artifact
+  declaration, source frame, split key, feed format, optional
   up-front model, empty-result DDL and read transform; the row comment
   says why the face is shaped the way it is. `_serve_maintained` is the
   one builder that runs a row.
@@ -90,19 +90,29 @@ from euclid_spark.streaming.sink import drain, read_feed
 N_SPLITS = 3
 
 
+def _streamed(
+    name: str, table: str = "events", **params: object
+) -> artifacts.Artifact:
+    """A streamed face's final-state artifact over the corpus `table`:
+    `params` plus the feed's split count."""
+    return artifacts.Artifact(name, table, dict(params, n=N_SPLITS))
+
+
 def _serve_streamed(
     spark: SparkSession,
-    name: str,
-    fp: str,
+    sf_dir: str,
+    decl: artifacts.Artifact,
     build: "Callable[[str], DataFrame]",
 ) -> DataFrame:
     """`artifacts.serve_frame` around a scratch dir: `build(tmp)` may use
     `tmp` for the feed files / checkpoint / view; the directory is
     removed once the result is committed to the artifact store."""
     with tempfile.TemporaryDirectory(
-        prefix=f"euclid_{name}_", ignore_cleanup_errors=True
+        prefix=f"euclid_{decl.name}_", ignore_cleanup_errors=True
     ) as tmp:
-        return artifacts.serve_frame(spark, name, fp, lambda: build(tmp))
+        return artifacts.serve_frame(
+            spark, decl.path(sf_dir), lambda: build(tmp)
+        )
 
 
 def _write_feed(
@@ -173,12 +183,10 @@ class Maintained:
     then `read` the face's rows off the maintained view (default: the
     `empty` DDL's columns)."""
 
-    name: str  # artifact name
-    params: dict  # fingerprint params (op, v, ...); n=N_SPLITS is added
+    artifact: artifacts.Artifact  # the final state's, from `_streamed`
     monoid: "Monoid | TileTree"
     empty: str  # result DDL when nothing was merged (empty corpus)
     read: "Callable[[DataFrame], DataFrame] | None" = None
-    table: str = "events"  # the fingerprinted corpus table
     # resolved at CALL time, cached or not — so a fixture an oracle
     # reads (the eth capture) is served even when the face is cached
     source: Callable[[SparkSession, str], DataFrame] = load_events
@@ -194,9 +202,6 @@ def _serve_maintained(spark: SparkSession, sf_dir: str, face: Maintained) -> Dat
     IVM sink to quiescence, read the face's rows off the view, and serve
     the result as a fingerprint-keyed artifact."""
     src = face.source(spark, sf_dir)
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/{face.table}.parquet"], n=N_SPLITS, **face.params
-    )
 
     def build(tmp: str) -> DataFrame:
         feed, view, ck = (os.path.join(tmp, d) for d in ("feed", "view", "ck"))
@@ -220,7 +225,7 @@ def _serve_maintained(spark: SparkSession, sf_dir: str, face: Maintained) -> Dat
             return face.read(v)
         return v.select(*(c.split()[0] for c in face.empty.split(",")))
 
-    return _serve_streamed(spark, face.name, fp, build)
+    return _serve_streamed(spark, sf_dir, face.artifact, build)
 
 
 _PSI_DDL = (
@@ -409,8 +414,12 @@ MAINTAINED: "dict[str, Maintained]" = {
     # from its key set (the level-batched keccak builder the batch
     # capture uses), and the roots must equal the capture's storageHash.
     "stream_eth_account_state": Maintained(
-        "stream_eth_state",
-        dict(op="stream_eth_state", slot=eth_proof.MAPPING_SLOT, v=1),
+        _streamed(
+            "stream_eth_state",
+            op="stream_eth_state",
+            slot=eth_proof.MAPPING_SLOT,
+            v=1,
+        ),
         _p.ETH_ACCOUNT_STATE,
         "address string, nonce long, balance long, storage_root string",
         read=lambda v: eth_proof.account_state_rows(
@@ -423,8 +432,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     # drift a float at a rounding boundary; served as double, as the
     # oracle computes it.
     "stream_ivm_view": Maintained(
-        "stream_ivm_view",
-        dict(op="stream_ivm_view", v=2),
+        _streamed("stream_ivm_view", op="stream_ivm_view", v=2),
         _p.IVM_VIEW,
         "user_id long, day date, n_events bigint, total_value double, "
         "digest bigint",
@@ -439,8 +447,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     # v=3: r8 changed the NULL-write semantics (skip-NULL argmax,
     # last_nn_id state column) — caches of the old monoid rebuild.
     "stream_state_rollup": Maintained(
-        "stream_state_rollup",
-        dict(op="stream_state_rollup", v=3),
+        _streamed("stream_state_rollup", op="stream_state_rollup", v=3),
         _p.STATE_ROLLUP,
         "user_id long, day date, last_value double, last_event_id bigint, "
         "n_events bigint",
@@ -452,8 +459,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     # gate compares the FULL tile store with every (chunk, level, cell)
     # tile computed from raw events.
     "stream_range_tree_tiles": Maintained(
-        "stream_range_tree_tiles",
-        dict(op="stream_range_tree", v=1),
+        _streamed("stream_range_tree_tiles", op="stream_range_tree", v=1),
         RANGE_TREE,
         "day int, level int, cell long, n_events bigint, sum_value double, "
         "min_block long, max_block long, digest bigint",
@@ -471,8 +477,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     # it); read explodes the token ids to (tile, pos, token_id) so the
     # oracle's ROW_NUMBER compares exactly.
     "stream_q2_key_tiles": Maintained(
-        "stream_q2_key_tiles",
-        dict(op="stream_q2_key_tiles", v=1),
+        _streamed("stream_q2_key_tiles", op="stream_q2_key_tiles", v=1),
         Q2_KEY_TREE,
         "day int, level int, cell long, owner long, pos int, token_id long",
         read=lambda v: v.select(
@@ -487,16 +492,14 @@ MAINTAINED: "dict[str, Maintained]" = {
     # B47's per-day integer log-histogram tiles — the mergeable-sketch
     # path a 100 TB deployment serves quantiles from.
     "stream_hdr_quantile_tiles": Maintained(
-        "stream_hdr_quantile_tiles",
-        dict(op="stream_hdr_tiles", v=1),
+        _streamed("stream_hdr_quantile_tiles", op="stream_hdr_tiles", v=1),
         HDR_DAY_TILES,
         "day date, nbits int, sub long, cnt bigint",
     ),
     # B48's per-day distinct-user bitmaps: bit_or is idempotent, so
     # replay is free.
     "stream_lc_distinct_tiles": Maintained(
-        "stream_lc_distinct_tiles",
-        dict(op="stream_lc_tiles", v=1),
+        _streamed("stream_lc_distinct_tiles", op="stream_lc_tiles", v=1),
         LC_DAY_TILES,
         "day date, word_idx int, word bigint",
     ),
@@ -507,8 +510,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     # v=2 (r14): the RESERVED UNDERFLOW bucket (nbits=0, sub=0) joined
     # the tiles, so batch B59 and the streamed monitor bin the same rows.
     "stream_drift_psi": Maintained(
-        "stream_drift_psi",
-        dict(op="stream_drift_psi", v=2),
+        _streamed("stream_drift_psi", op="stream_drift_psi", v=2),
         DRIFT_TILES,
         _PSI_DDL,
         read=_psi_from_tiles,
@@ -518,8 +520,9 @@ MAINTAINED: "dict[str, Maintained]" = {
     # flag. Same oracle as D31, so the gate binds stream parse →
     # quarantine → merge against the parquet ground truth.
     "stream_jsonl_ingest": Maintained(
-        "stream_jsonl_ingest",
-        dict(op="stream_jsonl_ingest", v=1),
+        _streamed(
+            "stream_jsonl_ingest", "documents", op="stream_jsonl_ingest", v=1
+        ),
         Monoid(
             "jsonl_ingest", _jsonl_partial, _jsonl_merge, key_col="quarantined"
         ),
@@ -530,7 +533,6 @@ MAINTAINED: "dict[str, Maintained]" = {
             F.col("quarantined").cast("boolean").alias("quarantined"),
             "source", "n_rows", "sum_chars",
         ),
-        table="documents",
         source=_jsonl_source,
         split="value",
         fmt="text",
@@ -539,8 +541,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     # circuit runs per micro-batch, per-owner limb sums form a plain
     # monoid, and the carry normalizes at read into A13's reward_hex.
     "stream_erc20_rewards": Maintained(
-        "stream_erc20_rewards",
-        dict(op="stream_erc20_rewards", v=1),
+        _streamed("stream_erc20_rewards", op="stream_erc20_rewards", v=1),
         _p.ERC20_REWARD_VIEW,
         "owner long, reward_hex string, n_zero_supply long, n_overflow long",
         read=_erc20_read,
@@ -549,8 +550,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     # leaf sets of the rr_erc20 trees, folded to CELL ROOTS at read —
     # a live ingest maintains the structure responses open into.
     "stream_erc20_cell_roots": Maintained(
-        "stream_erc20_cell_roots",
-        dict(op="stream_erc20_cell_roots", v=1),
+        _streamed("stream_erc20_cell_roots", op="stream_erc20_cell_roots", v=1),
         _p.RR_CELL_LEAVES,
         "owner long, cell long, n_entries long, root string",
         read=lambda v: _cell_roots(
@@ -563,8 +563,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     # reference query families' response commitments have gate-checked
     # incremental maintenance.
     "stream_q2_cell_roots": Maintained(
-        "stream_q2_cell_roots",
-        dict(op="stream_q2_cell_roots", v=1),
+        _streamed("stream_q2_cell_roots", op="stream_q2_cell_roots", v=1),
         _p.RR_Q2_CELL_LEAVES,
         "owner long, cell long, n_keys long, root string",
         read=lambda v: _cell_roots(
@@ -575,8 +574,7 @@ MAINTAINED: "dict[str, Maintained]" = {
     # carries each selection's (ts, event_id) order key beside its
     # value, so the argmin/argmax lattice re-merges under any split.
     "stream_ohlc_bars": Maintained(
-        "stream_ohlc_bars",
-        dict(op="stream_ohlc_bars", v=1),
+        _streamed("stream_ohlc_bars", op="stream_ohlc_bars", v=1),
         _p.OHLC_BARS,
         "user_id long, hour_start timestamp, open double, high double, "
         "low double, close double, n_ticks bigint",
@@ -593,11 +591,15 @@ MAINTAINED: "dict[str, Maintained]" = {
     # the store; vec_ids are disjoint across batches, so the merge is a
     # plain union (replays are excluded by the per-cid watermark).
     "stream_ivf_assign": Maintained(
-        "stream_ivf_assign",
-        dict(op="stream_ivf_assign", k=IVF_FACE_K, v=1),
+        _streamed(
+            "stream_ivf_assign",
+            "embeddings",
+            op="stream_ivf_assign",
+            k=IVF_FACE_K,
+            v=1,
+        ),
         Monoid("ivf_assign", _ivf_assign, DataFrame.unionByName, key_col="cid"),
         "cid long, neighbor_id long, csim double",
-        table="embeddings",
         source=_ivf_corpus,
         split="vec_id",
         model=_ivf_seed,
@@ -614,9 +616,7 @@ def stream_block_db_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (mod P), because the fold is associative and commutative."""
     from euclid_spark.streaming.block_db import IncrementalDigest, read_event_stream
 
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="stream_block_db_chain", n=N_SPLITS, v=2
-    )
+    decl = _streamed("stream_block_db_chain", op="stream_block_db_chain", v=2)
 
     def build(tmp: str) -> DataFrame:
         feed = os.path.join(tmp, "feed")
@@ -630,7 +630,7 @@ def stream_block_db_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, [(sink.chain, sink.n_rows)], "chain_digest long, n_rows long"
         )
 
-    return _serve_streamed(spark, "stream_block_db_chain", fp, build)
+    return _serve_streamed(spark, sf_dir, decl, build)
 
 
 def _streamed_dedup_state(
@@ -643,19 +643,19 @@ def _streamed_dedup_state(
     from euclid_spark.operators import dedup as _d
     from euclid_spark.streaming.dedup_stream import DOCS_SCHEMA, IncrementalDedupIndex
 
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
+    state = dict(
         op="stream_dedup_state",
-        n=N_SPLITS,
         n_hashes=_d.N_HASHES,
         band=_d.BAND_SIZE,
         cap=_d.MAX_BUCKET,
         v=1,
     )
-    pairs = artifacts.load_frame(spark, "stream_dedup_pairs", fp)
-    labels = artifacts.load_frame(spark, "stream_dedup_labels", fp)
-    if pairs is not None and labels is not None:
-        return pairs, labels
+    pairs_at, labels_at = (
+        _streamed(name, "documents", **state).path(sf_dir)
+        for name in ("stream_dedup_pairs", "stream_dedup_labels")
+    )
+    if os.path.exists(pairs_at) and os.path.exists(labels_at):
+        return cached_parquet(spark, pairs_at), cached_parquet(spark, labels_at)
     with tempfile.TemporaryDirectory(
         prefix="euclid_stream_dedup_state_", ignore_cleanup_errors=True
     ) as tmp:
@@ -670,11 +670,8 @@ def _streamed_dedup_state(
         sink = IncrementalDedupIndex(spark, os.path.join(tmp, "state"))
         q = sink.start(read_feed(spark, feed, DOCS_SCHEMA), os.path.join(tmp, "ck"))
         drain(q, n_files, sink)
-        artifacts.save_frame(sink.pairs(), "stream_dedup_pairs", fp)
-        artifacts.save_frame(sink.labels(), "stream_dedup_labels", fp)
-    pairs = artifacts.load_frame(spark, "stream_dedup_pairs", fp)
-    labels = artifacts.load_frame(spark, "stream_dedup_labels", fp)
-    assert pairs is not None and labels is not None
+        pairs = artifacts.serve_frame(spark, pairs_at, sink.pairs)
+        labels = artifacts.serve_frame(spark, labels_at, sink.labels)
     return pairs, labels
 
 
@@ -775,10 +772,10 @@ def stream_curation_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     from euclid_spark.operators.textops import BENCH_SOURCES, benchmark_shingles
     from euclid_spark.streaming.curation_stream import StreamingCuration
 
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
+    decl = _streamed(
+        "stream_curation_kept",
+        "documents",
         op="stream_curation_kept",
-        n=N_SPLITS,
         n_hashes=_d.N_HASHES,
         band=_d.BAND_SIZE,
         cap=_d.MAX_BUCKET,
@@ -804,7 +801,7 @@ def stream_curation_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
         drain(q, n_files, sink)
         return sink.kept()
 
-    return _serve_streamed(spark, "stream_curation_kept", fp, build)
+    return _serve_streamed(spark, sf_dir, decl, build)
 
 
 def stream_substring_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -817,10 +814,10 @@ def stream_substring_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from euclid_spark.streaming.dedup_stream import DOCS_SCHEMA
     from euclid_spark.streaming.spans_stream import IncrementalSpanIndex
 
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
+    decl = _streamed(
+        "stream_substring_verdicts",
+        "documents",
         op="stream_substring_verdicts",
-        n=N_SPLITS,
         w=_d.SPAN_W,
         frac=_d.SPAN_DUP_FRAC,
         v=2,
@@ -840,7 +837,7 @@ def stream_substring_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
         drain(q, n_files, sink)
         return sink.verdicts()
 
-    return _serve_streamed(spark, "stream_substring_verdicts", fp, build)
+    return _serve_streamed(spark, sf_dir, decl, build)
 
 
 def stream_mpt_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -853,9 +850,7 @@ def stream_mpt_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     from euclid_spark.operators.mpt_ingest import NODE_SCHEMA, synthesize_owner_tries
     from euclid_spark.streaming.mpt_stream import IncrementalMptReassembly
 
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="stream_mpt_entries", n=N_SPLITS, v=2
-    )
+    decl = _streamed("stream_mpt_entries", op="stream_mpt_entries", v=2)
 
     def build(tmp: str) -> DataFrame:
         feed = os.path.join(tmp, "feed")
@@ -871,7 +866,7 @@ def stream_mpt_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise RuntimeError("stream_mpt_entries: cursors still parked")
         return sink.entries()
 
-    return _serve_streamed(spark, "stream_mpt_entries", fp, build)
+    return _serve_streamed(spark, sf_dir, decl, build)
 
 
 def stream_ss_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -885,9 +880,7 @@ def stream_ss_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from euclid_spark.streaming.block_db import read_event_stream
     from euclid_spark.streaming.joins import purchases_with_clicks
 
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="stream_ss_join", n=N_SPLITS, v=3
-    )
+    decl = _streamed("stream_ss_join", op="stream_ss_join", v=3)
 
     def build(tmp: str) -> DataFrame:
         feed = os.path.join(tmp, "feed")
@@ -917,7 +910,7 @@ def stream_ss_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             return spark.createDataFrame([], schema)
         return spark.read.schema(schema).parquet(out)
 
-    return _serve_streamed(spark, "stream_ss_join", fp, build)
+    return _serve_streamed(spark, sf_dir, decl, build)
 
 
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -929,9 +922,7 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     streamed partial merges and the one-pass oracle agree exactly."""
     from euclid_spark.streaming.block_db import read_event_stream
 
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/events.parquet"], op="stream_windowed_counts", n=N_SPLITS, v=1
-    )
+    decl = _streamed("stream_windowed_counts", op="stream_windowed_counts", v=1)
 
     def build(tmp: str) -> DataFrame:
         feed = os.path.join(tmp, "feed")
@@ -950,7 +941,7 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("total_value"),
             )
         )
-        qname = f"wc_{fp[:12]}"
+        qname = os.path.basename(tmp)  # a fresh name per run
         q = (
             agg.writeStream.outputMode("complete")
             .format("memory")
@@ -967,7 +958,7 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("total_value").cast("double").alias("total_value"),
         )
 
-    return _serve_streamed(spark, "stream_windowed_counts", fp, build)
+    return _serve_streamed(spark, sf_dir, decl, build)
 
 
 def stream_epoch_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -983,10 +974,10 @@ def stream_epoch_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     from euclid_spark.streaming.dedup_stream import DOCS_SCHEMA
     from euclid_spark.streaming.shard_stream import StreamingShardIndex
 
-    fp = artifacts.corpus_fingerprint(
-        [f"{sf_dir}/documents.parquet"],
+    decl = _streamed(
+        "stream_epoch_shards",
+        "documents",
         op="stream_epoch_shards",
-        n=N_SPLITS,
         seed=EPOCH_SEED,
         budget=SHARD_TOKENS,
         v=1,
@@ -1001,7 +992,7 @@ def stream_epoch_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         drain(q, n_files, sink)
         return sink.manifest()
 
-    return _serve_streamed(spark, "stream_epoch_shards", fp, build)
+    return _serve_streamed(spark, sf_dir, decl, build)
 
 
 # ---------------------------------------------------------------- oracles
@@ -1407,10 +1398,7 @@ def _eth_state_sql(sf_dir: str) -> str:
     """Oracle: the BATCH capture's commitments joined to relational
     expectations — streamed trie roots must equal the from-scratch
     capture's storageHash (the IVC gate)."""
-    path = os.path.join(
-        artifacts.artifact_dir(),
-        f"eth_proof_fixture_{eth_proof._fixture_fp(sf_dir)}.parquet",
-    )
+    path = eth_proof.ETH_PROOF_FIXTURE.path(sf_dir)
     tok = "CAST(json_extract_string(props, '$.k') AS BIGINT)"
     return f"""
         WITH d AS (

@@ -171,7 +171,7 @@ def test_ivf_centroid_artifact_survives_process_restart(spark, tmp_path, monkeyp
     tier) without refitting — kmeans must not run again."""
     from euclid_spark.operators import similarity as sim
 
-    monkeypatch.setattr(sim, "_ARTIFACT_DIR", str(tmp_path))
+    monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path))
     sim._CENTROIDS.clear()
     first = sim.ivf_centroids(spark, SF_ORACLE).collect()
     assert len(first) == sim.N_CENTROIDS

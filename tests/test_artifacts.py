@@ -5,28 +5,79 @@ leave a readable winner."""
 
 from __future__ import annotations
 
+import ast
 import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
+import euclid_spark
 from euclid_spark import artifacts
 from tests.conftest import SF_SMOKE
 
+# the keying and writing internals only artifacts.py may name: every
+# other module takes an artifact's path from its `artifacts.Artifact`
+# declaration and writes it through `artifacts.ensure`
+KEYING_NAMES = {
+    "corpus_fingerprint",
+    "artifact_dir",
+    "_path",
+    "save_frame",
+    "load_frame",
+    "EUCLID_SPARK_ARTIFACTS",
+}
+
+
+def test_artifact_paths_come_from_declarations():
+    """No module but artifacts.py names a fingerprint, the artifact
+    root, a path builder, the raw writer/reader or the root's env var —
+    as a name, an attribute, an import or a string."""
+    root = Path(euclid_spark.__file__).parent
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "artifacts.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = (
+                getattr(node, "id", None)  # ast.Name
+                or getattr(node, "attr", None)  # ast.Attribute
+                or (node.name if isinstance(node, ast.alias) else None)
+                or (node.value if isinstance(node, ast.Constant) else None)
+            )
+            if isinstance(name, str) and name in KEYING_NAMES:
+                found.add((rel, name))
+    assert found == set(), "declare an artifacts.Artifact; write via ensure"
+
+
+def _at(root, stem: str) -> str:
+    """A hand-named artifact path under the test's artifact root."""
+    return os.path.join(str(root), f"{stem}.parquet")
+
 
 def test_serve_frame_builds_once_then_loads(spark, tmp_path, monkeypatch):
-    monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path))
+    monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path / "store"))
+    (tmp_path / "data.parquet").write_bytes(b"x" * 16)
+    decl = artifacts.Artifact("t", "data", dict(op="t"))
+    path = decl.path(str(tmp_path))
+    assert path == os.path.join(
+        str(tmp_path / "store"),
+        "t_%s.parquet" % artifacts.corpus_fingerprint(
+            [str(tmp_path / "data.parquet")], op="t"
+        ),
+    )
     calls = []
 
     def build():
         calls.append(1)
         return spark.range(5).select(F.col("id"), (F.col("id") * 2).alias("v"))
 
-    a = artifacts.serve_frame(spark, "t", "fp0", build)
-    b = artifacts.serve_frame(spark, "t", "fp0", build)
+    a = artifacts.serve_frame(spark, path, build)
+    b = artifacts.serve_frame(spark, decl.path(str(tmp_path)), build)
     assert len(calls) == 1  # second call served from disk
     assert sorted(r["v"] for r in a.collect()) == sorted(r["v"] for r in b.collect())
-    assert os.path.exists(os.path.join(str(tmp_path), "t_fp0.parquet"))
+    assert os.path.exists(path)
 
 
 def test_fingerprint_rekeys_on_params_and_files(tmp_path):
@@ -42,10 +93,10 @@ def test_fingerprint_rekeys_on_params_and_files(tmp_path):
 def test_save_frame_lost_race_keeps_winner(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path))
     df = spark.range(3)
-    artifacts.save_frame(df, "w", "fp")
-    artifacts.save_frame(df, "w", "fp")  # rename onto existing dir → lost race
-    out = artifacts.load_frame(spark, "w", "fp")
-    assert out is not None and out.count() == 3
+    artifacts.save_frame(df, _at(tmp_path, "w_fp"))
+    # rename onto existing dir → lost race
+    artifacts.save_frame(df, _at(tmp_path, "w_fp"))
+    assert spark.read.parquet(_at(tmp_path, "w_fp")).count() == 3
     assert not [p for p in os.listdir(tmp_path) if ".tmp." in p]  # temp cleaned
 
 
@@ -86,16 +137,16 @@ def test_gc_removes_superseded_and_tmp_only(spark, tmp_path, monkeypatch):
 
     monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path))
     df = spark.range(2)
-    artifacts.save_frame(df, "idx", "old")
-    artifacts.save_frame(df, "idx", "new")
-    artifacts.save_frame(df, "other", "fp")  # foreign name: untouched
+    artifacts.save_frame(df, _at(tmp_path, "idx_old"))
+    artifacts.save_frame(df, _at(tmp_path, "idx_new"))
+    artifacts.save_frame(df, _at(tmp_path, "other_fp"))  # foreign name: untouched
     os.makedirs(tmp_path / "idx_x.parquet.tmp.123")  # orphaned build
 
     removed = artifacts.gc({"idx": "new"})
     names = sorted(os.listdir(tmp_path))
     assert names == ["idx_new.parquet", "other_fp.parquet"]
     assert len(removed) == 2
-    assert artifacts.load_frame(spark, "idx", "new").count() == 2
+    assert spark.read.parquet(_at(tmp_path, "idx_new")).count() == 2
 
 
 def test_simhash_index_artifact_equals_direct(spark, tmp_path, monkeypatch):
@@ -193,7 +244,9 @@ def test_publish_and_read_manifests(spark, tmp_path, monkeypatch):
     identity) and read back; unreadable files are skipped."""
     monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path))
     src = os.path.join(SF_SMOKE, "events.parquet")
-    artifacts.publish_manifest("resp", "abc123", "q2", [src], {"contract": "purchase"})
+    artifacts.publish_manifest(
+        _at(tmp_path, "resp_abc123"), "q2", [src], {"contract": "purchase"}
+    )
     (tmp_path / "junk_x.manifest.json").write_text("{not json")
     ms = artifacts.read_manifests()
     assert len(ms) == 1
@@ -211,10 +264,9 @@ def test_gc_keeps_current_manifest_drops_superseded(spark, tmp_path, monkeypatch
     monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path))
     src = os.path.join(SF_SMOKE, "events.parquet")
     df = spark.range(2)
-    artifacts.save_frame(df, "resp", "old")
-    artifacts.publish_manifest("resp", "old", "q2", [src], {})
-    artifacts.save_frame(df, "resp", "new")
-    artifacts.publish_manifest("resp", "new", "q2", [src], {})
+    for fp in ("old", "new"):
+        artifacts.save_frame(df, _at(tmp_path, f"resp_{fp}"))
+        artifacts.publish_manifest(_at(tmp_path, f"resp_{fp}"), "q2", [src], {})
 
     artifacts.gc({"resp": "new"})
     names = sorted(os.listdir(tmp_path))
@@ -232,9 +284,8 @@ def test_gc_keeps_every_fingerprint_of_a_parameterized_name(
 
     monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path))
     df = spark.range(2)
-    artifacts.save_frame(df, "resp", "contract_a")
-    artifacts.save_frame(df, "resp", "contract_b")
-    artifacts.save_frame(df, "resp", "superseded")
+    for fp in ("contract_a", "contract_b", "superseded"):
+        artifacts.save_frame(df, _at(tmp_path, f"resp_{fp}"))
 
     removed = artifacts.gc({"resp": {"contract_a", "contract_b"}})
     names = sorted(os.listdir(tmp_path))

@@ -239,23 +239,20 @@ def test_manifest_discovery_matches_prover_paths(spark, responses, range_respons
     — a prover keying change either re-publishes a manifest (and this
     still passes) or breaks the serve side loudly; it can never
     silently un-verify a published response again."""
-    from euclid_spark.operators.merkle import _erc20_fp, _q2_fp
-    from euclid_spark.operators.range_response import _fp
-    from euclid_spark.sources.eth_proof import _fixture_fp, eth_proof_fixture
+    from euclid_spark.operators.euclid import CONTRACT, REWARDS_RATE
+    from euclid_spark.operators.merkle import ERC20_RESPONSE, Q2_RESPONSE
+    from euclid_spark.operators.range_response import RESPONSES
+    from euclid_spark.sources.eth_proof import ETH_PROOF_FIXTURE, eth_proof_fixture
 
     eth_proof_fixture(spark, SF_SMOKE).count()
     expected = {
-        "q2": artifacts._path("q2_response", _q2_fp(SF_SMOKE)),
-        "erc20": artifacts._path("erc20_response", _erc20_fp(SF_SMOKE)),
-        "q2_range": artifacts._path(
-            "rr_q2_response", _fp(SF_SMOKE, "q2", None, None)
+        "q2": Q2_RESPONSE.path(SF_SMOKE, contract=CONTRACT),
+        "erc20": ERC20_RESPONSE.path(
+            SF_SMOKE, rate=REWARDS_RATE, contract=CONTRACT
         ),
-        "erc20_range": artifacts._path(
-            "rr_erc20_response", _fp(SF_SMOKE, "erc20", None, None)
-        ),
-        "eth_state": artifacts._path(
-            "eth_proof_fixture", _fixture_fp(SF_SMOKE)
-        ),
+        "q2_range": RESPONSES["q2"].path(SF_SMOKE),
+        "erc20_range": RESPONSES["erc20"].path(SF_SMOKE),
+        "eth_state": ETH_PROOF_FIXTURE.path(SF_SMOKE),
     }
     got = dict(
         (k, p) for p, k in vr._discover(artifacts.artifact_dir(), SF_SMOKE)

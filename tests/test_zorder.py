@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from euclid_spark.sources.zorder import write_zordered, zvalue
+from euclid_spark.sources.zorder import zordered, zvalue
 from tests.conftest import SF_SMOKE
 
 N_FILES = 16
@@ -72,7 +72,7 @@ def test_zorder_prunes_2d_box(spark, tmp_path):
         .write.parquet(lin)
     )
     zo = str(tmp_path / "zordered")
-    write_zordered(ev, zo, "user_id", "epoch", n_files=N_FILES)
+    zordered(ev, "user_id", "epoch", n_files=N_FILES).write.parquet(zo)
 
     lin_files = _files_touched(spark, lin, pred)
     zo_files = _files_touched(spark, zo, pred)
@@ -92,7 +92,7 @@ def test_zorder_prunes_2d_box(spark, tmp_path):
 def test_zorder_layout_preserves_rows(spark, tmp_path):
     ev = _events(spark)
     zo = str(tmp_path / "zordered")
-    write_zordered(ev, zo, "user_id", "epoch", n_files=N_FILES)
+    zordered(ev, "user_id", "epoch", n_files=N_FILES).write.parquet(zo)
     back = spark.read.parquet(zo)
     assert back.count() == ev.count()
     assert sorted(back.columns) == sorted(ev.columns)
