@@ -2,15 +2,21 @@
 
 `__spark_entry__.py` (the driver contract) is a thin shim over this.
 Every key in SURVEY.md §2 appears here once its module lands.
+
+`run_face` is the one face runner: every tool and bench pass that
+builds a face, acts on it and times it goes through it, and gets back
+the same record.
 """
 
 from __future__ import annotations
 
 import logging
-from collections.abc import Callable
+import time
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from euclid_spark import cache
 from euclid_spark.sources import bucketing, eth_proof, jsonl, partitioned, zorder
 from euclid_spark.streaming import faces
 from euclid_spark.operators import (
@@ -205,3 +211,128 @@ def oracle_lookup(sf_dir: str) -> "tuple[dict[str, str], dict[str, str]]":
                     k, degraded[k],
                 )
     return out, degraded
+
+
+def noop(df: DataFrame) -> None:
+    """Execute `df`'s full physical plan into the noop sink: the engine's
+    cost, without moving rows to the driver."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def to_pandas(df: DataFrame):
+    return df.toPandas()
+
+
+class StatusStore:
+    """Jobs and stages in Spark's status store past an id mark.
+
+    Status updates arrive on the listener bus asynchronously, so each
+    read drains it first. The store's job and stage views are iterated
+    newest-first and stop at the mark, so a read costs O(new entries);
+    the retention limit (spark.ui.retainedJobs/Stages) matters only if
+    one call runs more jobs than the store retains."""
+
+    def __init__(self, spark: SparkSession) -> None:
+        sc = spark.sparkContext
+        self._sc = sc._jsc.sc()
+        self._kv = self._sc.statusStore().store()
+        cls = sc._jvm.java.lang.Class.forName
+        self._jobs = cls("org.apache.spark.status.JobDataWrapper")
+        self._stages = cls("org.apache.spark.status.StageDataWrapper")
+
+    def _newest(self, cls) -> Iterator:
+        it = self._kv.view(cls).reverse().closeableIterator()
+        try:
+            while it.hasNext():
+                yield it.next().info()
+        finally:
+            it.close()
+
+    def mark(self) -> "tuple[int, int]":
+        """(newest job id, newest stage id), -1 when there is none."""
+        self._sc.listenerBus().waitUntilEmpty()
+        job = next((j.jobId() for j in self._newest(self._jobs)), -1)
+        stage = next((s.stageId() for s in self._newest(self._stages)), -1)
+        return job, stage
+
+    def since(self, mark: "tuple[int, int]") -> dict:
+        """Counts of the jobs and (not skipped) stages past `mark`, and
+        `submitted_ms`: each such job's submission time, epoch ms."""
+        self._sc.listenerBus().waitUntilEmpty()
+        out = dict.fromkeys(
+            ("jobs", "stages", "input_records", "input_bytes",
+             "shuffle_write_bytes", "spill_bytes"), 0,
+        )
+        submitted: "list[int]" = []
+        for j in self._newest(self._jobs):
+            if j.jobId() <= mark[0]:
+                break
+            out["jobs"] += 1
+            t = j.submissionTime()
+            if t.isDefined():
+                submitted.append(t.get().getTime())
+        for s in self._newest(self._stages):
+            if s.stageId() <= mark[1]:
+                break
+            if s.status().toString() == "SKIPPED":
+                continue
+            out["stages"] += 1
+            out["input_records"] += s.inputRecords()
+            out["input_bytes"] += s.inputBytes()
+            out["shuffle_write_bytes"] += s.shuffleWriteBytes()
+            out["spill_bytes"] += s.memoryBytesSpilled() + s.diskBytesSpilled()
+        out["submitted_ms"] = submitted
+        return out
+
+
+def run_face(
+    spark: SparkSession,
+    key: str,
+    sf_dir: str,
+    act: Callable[[DataFrame], object] = noop,
+) -> dict:
+    """Build face `key` over `sf_dir`, act on the frame (`noop`,
+    `to_pandas`, or any frame → value callable) and release the face's
+    pins, all inside one `cache.scope()`; return the run's record.
+
+    `wall_s` is the timed region, from the face call to the act's
+    return (the release is not in it). It splits into `construct_s`
+    (until the face returns its frame: driver-side plan building,
+    bounded fetches, eager pins), `plan_s` (from the act's start to the
+    submission of its first Spark job, or the whole act when it runs
+    none) and `exec_s` (the rest). `jobs`, `stages`, `input_records`,
+    `input_bytes`, `shuffle_write_bytes` and `spill_bytes` count every
+    job and stage the call ran, construct included; they are read from
+    the status store after the timed region, so the record adds no work
+    to it. The act's return value, when not None, is under `result`."""
+    fn = queries()[key]
+    status = StatusStore(spark)
+    mark = status.mark()
+    with cache.scope():
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        act_epoch = time.time()
+        out = act(df)
+        t2 = time.perf_counter()
+    counts = status.since(mark)
+    # a job the act submitted; construct's jobs all ended before it began
+    in_act = [
+        ms / 1000 - act_epoch
+        for ms in counts.pop("submitted_ms")
+        if ms >= int(act_epoch * 1000)
+    ]
+    act_s = t2 - t1
+    plan_s = min(max(min(in_act, default=act_s), 0.0), act_s)
+    rec = {
+        "key": key,
+        "act": getattr(act, "__name__", "act"),
+        "wall_s": round(t2 - t0, 6),
+        "construct_s": round(t1 - t0, 6),
+        "plan_s": round(plan_s, 6),
+        "exec_s": round(act_s - plan_s, 6),
+        **counts,
+    }
+    if out is not None:
+        rec["result"] = out
+    return rec

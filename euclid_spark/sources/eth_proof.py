@@ -531,7 +531,7 @@ def eth_proof_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = artifacts.serve_frame(spark, path, build)
     artifacts.publish_manifest(
         path, "eth_state", [f"{sf_dir}/events.parquet"],
-        {"slot": MAPPING_SLOT, "v": 2},
+        {k: v for k, v in ETH_PROOF_FIXTURE.params.items() if k != "op"},
     )
     return out
 

@@ -6,10 +6,12 @@ node name can appear inside an expression's text)."""
 from __future__ import annotations
 
 
-def physical_nodes(df) -> list:
+def physical_nodes(df, initial: bool = True) -> list:
     """Every node of `df`'s EXECUTED plan tree: children, inner
     children (a cached relation's plan, subqueries) and AQE's current
-    and initial plans — every node the rendered plan prints."""
+    and initial plans — every node the rendered plan prints. With
+    `initial=False` an AQE plan contributes its current plan only, so
+    each node of a plan not yet run is seen once (for counting)."""
     out: list = []
 
     def walk(node) -> None:
@@ -21,7 +23,8 @@ def physical_nodes(df) -> list:
         ]
         if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
             # a leaf that prints its plans
-            kids += [node.executedPlan(), node.initialPlan()]
+            kids += [node.executedPlan()]
+            kids += [node.initialPlan()] if initial else []
         for k in kids:
             walk(k)
 
@@ -29,10 +32,10 @@ def physical_nodes(df) -> list:
     return out
 
 
-def physical_node_counts(df) -> "dict[str, int]":
+def physical_node_counts(df, initial: bool = True) -> "dict[str, int]":
     """Class-name counts over `physical_nodes`."""
     counts: "dict[str, int]" = {}
-    for node in physical_nodes(df):
+    for node in physical_nodes(df, initial):
         name = node.getClass().getSimpleName()
         counts[name] = counts.get(name, 0) + 1
     return counts
@@ -45,6 +48,16 @@ def exchange_partitionings(df) -> "list[str]":
         node.outputPartitioning().getClass().getSimpleName().rstrip("$")
         for node in physical_nodes(df)
         if node.getClass().getSimpleName() == "ShuffleExchangeExec"
+    ]
+
+
+def join_types(df) -> "list[str]":
+    """The join type ("Inner", "LeftSemi", "LeftAnti", …) of every join
+    node in the executed plan tree, read from its `joinType()`."""
+    return [
+        node.joinType().toString()
+        for node in physical_nodes(df)
+        if node.getClass().getSimpleName().endswith("JoinExec")
     ]
 
 

@@ -5,51 +5,13 @@ leave a readable winner."""
 
 from __future__ import annotations
 
-import ast
 import os
-from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
-import euclid_spark
 from euclid_spark import artifacts
 from tests.conftest import SF_SMOKE
-
-# the keying and writing internals only artifacts.py may name: every
-# other module takes an artifact's path from its `artifacts.Artifact`
-# declaration and writes it through `artifacts.ensure`
-KEYING_NAMES = {
-    "corpus_fingerprint",
-    "artifact_dir",
-    "_path",
-    "save_frame",
-    "load_frame",
-    "EUCLID_SPARK_ARTIFACTS",
-}
-
-
-def test_artifact_paths_come_from_declarations():
-    """No module but artifacts.py names a fingerprint, the artifact
-    root, a path builder, the raw writer/reader or the root's env var —
-    as a name, an attribute, an import or a string."""
-    root = Path(euclid_spark.__file__).parent
-    found = set()
-    for path in sorted(root.rglob("*.py")):
-        rel = path.relative_to(root).as_posix()
-        if rel == "artifacts.py":
-            continue
-        for node in ast.walk(ast.parse(path.read_text())):
-            name = (
-                getattr(node, "id", None)  # ast.Name
-                or getattr(node, "attr", None)  # ast.Attribute
-                or (node.name if isinstance(node, ast.alias) else None)
-                or (node.value if isinstance(node, ast.Constant) else None)
-            )
-            if isinstance(name, str) and name in KEYING_NAMES:
-                found.add((rel, name))
-    assert found == set(), "declare an artifacts.Artifact; write via ensure"
-
 
 def _at(root, stem: str) -> str:
     """A hand-named artifact path under the test's artifact root."""

@@ -1,12 +1,14 @@
 """The driver-side read layer: one footer reader and one row reader
-(euclid_spark/artifacts.py), the loud local-frame fallback every
-owner-scoped answer goes through, and the deploy knobs get_session
-checks before the JVM starts."""
+(euclid_spark/artifacts.py), one way to key an artifact, one face
+runner, the loud local-frame fallback every owner-scoped answer goes
+through, and the deploy knobs get_session checks before the JVM
+starts."""
 
 from __future__ import annotations
 
 import ast
 import logging
+from collections.abc import Iterator
 
 import pytest
 
@@ -34,6 +36,61 @@ def test_pyarrow_parquet_readers_live_in_artifacts():
             if banned & set(names):
                 offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
     assert not offenders, offenders
+
+
+def _names(path) -> "Iterator[tuple[str, int]]":
+    """(name, line) for every name, attribute, import alias and string
+    constant in a module."""
+    for node in ast.walk(ast.parse(path.read_text())):
+        name = (
+            getattr(node, "id", None)  # ast.Name
+            or getattr(node, "attr", None)  # ast.Attribute
+            or (node.name if isinstance(node, ast.alias) else None)
+            or (node.value if isinstance(node, ast.Constant) else None)
+        )
+        if isinstance(name, str):
+            yield name, getattr(node, "lineno", 0)
+
+
+# the keying and writing internals only artifacts.py may name: every
+# other module takes an artifact's path from its `artifacts.Artifact`
+# declaration and writes it through `artifacts.ensure`
+KEYING_NAMES = {
+    "corpus_fingerprint",
+    "artifact_dir",
+    "_path",
+    "save_frame",
+    "load_frame",
+    "EUCLID_SPARK_ARTIFACTS",
+}
+
+
+def test_artifact_paths_come_from_declarations():
+    """No module but artifacts.py names a fingerprint, the artifact
+    root, a path builder, the raw writer/reader or the root's env var —
+    as a name, an attribute, an import or a string."""
+    root = REPO / "euclid_spark"
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "artifacts.py":
+            continue
+        found |= {(rel, n) for n, _ in _names(path) if n in KEYING_NAMES}
+    assert found == set(), "declare an artifacts.Artifact; write via ensure"
+
+
+def test_faces_run_through_run_face():
+    """No tool and no line of bench.py releases a face's pins or writes
+    the noop sink itself: building a face, acting on it, timing it and
+    releasing it is `registry.run_face`'s job."""
+    paths = [REPO / "bench.py", *sorted((REPO / "tools").glob("*.py"))]
+    found = [
+        f"{path.relative_to(REPO)}:{line} {n}"
+        for path in paths
+        for n, line in _names(path)
+        if n in ("release_all", "noop")
+    ]
+    assert not found, found
 
 
 def test_footer_stats_and_read_rows_agree_with_the_data():

@@ -9,23 +9,10 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from euclid_spark import registry
 from euclid_spark.cache import release_all
 from tests.conftest import SF_SMOKE
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-# deterministic 10% null mask per (table, column)
-NULLABLE = {
-    "documents": ["text", "lang", "source"],
-    "events": ["event_type", "value", "props"],
-    "lineitem": ["l_returnflag", "l_discount"],
-}
+from tools.crosscheck import TABLES, compare, inject_nulls, normalize
 
 OPS = [
     "dedup_exact",
@@ -53,13 +40,7 @@ OPS = [
 def nully_sf(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("nully_sf"))
     for t in TABLES:
-        df = spark.read.parquet(f"{SF_SMOKE}/{t}.parquet")
-        for c in NULLABLE.get(t, []):
-            key = df.columns[0]
-            mask = F.pmod(F.xxhash64(F.col(key), F.lit(c)), F.lit(10)) == 0
-            df = df.withColumn(
-                c, F.when(mask, F.lit(None)).otherwise(F.col(c))
-            )
+        df = inject_nulls(spark.read.parquet(f"{SF_SMOKE}/{t}.parquet"), t)
         df.write.mode("overwrite").parquet(f"{out}/{t}.parquet")
     return out
 
@@ -132,26 +113,6 @@ CROSSCHECK_OPS = [
 ]
 
 
-def _canon_pdf(pdf):
-    import pandas as pd
-
-    pdf = pdf[sorted(pdf.columns)].copy()
-    for c in pdf.columns:
-        k = pdf[c].dtype.kind
-        if k == "M":
-            s = pdf[c].dt.strftime("%Y-%m-%d %H:%M:%S.%f")
-            pdf[c] = s.str.replace(" 00:00:00.000000", "", regex=False)
-        elif k in "iub":
-            pdf[c] = pdf[c].astype("float64")  # int cols may go NULL->float
-        elif k == "f":
-            pdf[c] = pdf[c].round(6)
-        elif pdf[c].dtype == object:
-            # unify missing markers first: Spark surfaces None, DuckDB
-            # NaN — both are SQL NULL, stringify identically
-            pdf[c] = pdf[c].where(pdf[c].notna(), None).astype(str)
-    return pdf.sort_values(by=list(pdf.columns), ignore_index=True)
-
-
 def test_null_injected_oracle_crosscheck(spark, nully_sf, monkeypatch, tmp_path):
     """The driver's row/schema/value comparison, run on the 10%-null
     corpus for every representative: Spark and DuckDB must agree on the
@@ -169,20 +130,11 @@ def test_null_injected_oracle_crosscheck(spark, nully_sf, monkeypatch, tmp_path)
     failures = []
     for name in CROSSCHECK_OPS:
         try:
-            got = _canon_pdf(qs[name](spark, nully_sf).toPandas())
-            want = _canon_pdf(con.execute(os_[name]).fetchdf())
-            if list(got.columns) != list(want.columns):
-                failures.append(f"{name}: columns {list(got.columns)} vs "
-                                f"{list(want.columns)}")
-            elif len(got) != len(want):
-                failures.append(f"{name}: rows {len(got)} vs {len(want)}")
-            elif not got.equals(want):
-                neq = (got.fillna("~N") != want.fillna("~N")).any(axis=1)
-                failures.append(
-                    f"{name}: {int(neq.sum())}/{len(got)} rows differ; "
-                    f"first got={got[neq].head(1).to_dict('records')} "
-                    f"want={want[neq].head(1).to_dict('records')}"
-                )
+            got = normalize(qs[name](spark, nully_sf).toPandas(), nulls=True)
+            want = normalize(con.execute(os_[name]).fetchdf(), nulls=True)
+            err = compare(got, want)
+            if err is not None:
+                failures.append(f"{name}: {err}")
         except Exception as ex:  # noqa: BLE001
             failures.append(f"{name}: raised {type(ex).__name__}: {ex}"[:300])
         finally:

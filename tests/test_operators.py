@@ -8,6 +8,7 @@ import pandas as pd
 import pytest
 
 from tests.conftest import SF_ORACLE, SF_SMOKE
+from tools.crosscheck import normalize
 
 import __spark_entry__ as entrymod
 
@@ -22,22 +23,6 @@ MAY_BE_EMPTY = {
     "tpch_q7_nation_volume",  # narrow nation pair: empty at sf0.001
     "dedup_components",  # clusters exist only where near-dup pairs do
 }
-
-
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        k = df[c].dtype.kind
-        if k == "M":
-            s = df[c].dt.strftime("%Y-%m-%d %H:%M:%S.%f")
-            df[c] = s.str.replace(" 00:00:00.000000", "", regex=False)
-        elif k in "iub":
-            df[c] = df[c].astype("int64")
-        elif k == "f":
-            df[c] = df[c].round(6)
-        elif df[c].dtype == object:
-            df[c] = df[c].astype(str)
-    return df.sort_values(by=list(df.columns), ignore_index=True)
 
 
 def test_entry_smoke(spark):
@@ -57,8 +42,8 @@ def test_query_runs_at_smoke_sf(spark, name):
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(spark, duck, name):
-    sdf = _normalize(QUERIES[name](spark, SF_ORACLE).toPandas())
-    ddf = _normalize(duck.execute(ORACLES[name]).fetchdf())
+    sdf = normalize(QUERIES[name](spark, SF_ORACLE).toPandas())
+    ddf = normalize(duck.execute(ORACLES[name]).fetchdf())
     assert list(sdf.columns) == list(ddf.columns)
     assert len(sdf) == len(ddf)
     pd.testing.assert_frame_equal(sdf, ddf, check_dtype=False)

@@ -306,6 +306,16 @@ def eth_fixture(spark):
     return targets["eth_state"]
 
 
+def test_eth_manifest_states_the_declared_version(eth_fixture):
+    """The published manifest records the fixture version its
+    fingerprint is keyed on, not a stale one."""
+    from euclid_spark.sources.eth_proof import ETH_PROOF_FIXTURE
+
+    with open(f"{os.path.splitext(eth_fixture)[0]}.manifest.json") as f:
+        manifest = json.load(f)
+    assert manifest["params"]["v"] == ETH_PROOF_FIXTURE.params["v"]
+
+
 def test_eth_capture_verifies(eth_fixture):
     v = vr.verify_eth(eth_fixture)
     assert v["verdict"] == "VALID", v

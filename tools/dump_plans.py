@@ -18,9 +18,13 @@ from euclid_spark.session import get_session
 SF = "/root/testdata/sf0.01"
 
 
+def _executed_plan(df) -> str:
+    df.collect()  # execute THIS QueryExecution so AQE finalizes it
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def main() -> None:
     spark = get_session("dump_plans")
-    qs = registry.queries()
     out = [
         "# PLANS — executed physical plans (sf0.01, local[32], AQE final)\n",
         "Generated by tools/dump_plans.py. `*(n)` = whole-stage codegen "
@@ -57,15 +61,10 @@ def main() -> None:
         "build, and every query folds the served leaves with column "
         "expressions (plan-asserted in tests/test_plans.py).\n",
     ]
-    from euclid_spark.cache import release_all
-
     for name in HEADLINE:
-        df = qs[name](spark, SF)
-        df.collect()  # execute THIS QueryExecution so AQE finalizes it
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = registry.run_face(spark, name, SF, _executed_plan)["result"]
         plan = plan.split("+- == Initial Plan ==")[0].rstrip()
         out.append(f"\n## {name}\n\n```\n{plan}\n```\n")
-        release_all()
     with open("PLANS.md", "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md with {len(HEADLINE)} plans")

@@ -2,23 +2,25 @@
 
 Usage: python tools/probe_face.py <key> [sf_dir] [reps]
 
-One process = one session: warmup rep, then `reps` timed reps
-(construct + noop exec + release), printing each and min/median.
-Interleave processes of old/new code (git stash) to cancel host drift —
-the SURVEY §6 r12 protocol for per-query claims.
+One process = one session: a warmup rep, then `reps` timed reps through
+`registry.run_face` (construct + noop exec, then release). Prints each
+rep's record (wall split into construct / plan / exec, jobs, stages,
+input, shuffle and spill counts) as one JSON line, then
+`RESULT <key> min= median=` over the walls. Interleave processes of
+old/new code (git stash) to cancel host drift — the SURVEY §6 r12
+protocol for per-query claims.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from euclid_spark import registry
-from euclid_spark.cache import release_all
 from euclid_spark.session import get_session
 
 
@@ -32,18 +34,12 @@ def main() -> None:
     qs["tpch_q1_pricing_summary"](spark, "/root/testdata/sf0.001").count()
     qs["euclid_erc20_weighted_sum_u256"](spark, "/root/testdata/sf0.001").count()
 
-    def run() -> float:
-        t0 = time.perf_counter()
-        qs[key](sf_dir=sf_dir, spark=spark).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        dt = time.perf_counter() - t0
-        release_all()
-        return dt
-
-    run()  # warmup
-    walls = [run() for _ in range(reps)]
-    print(f"{key}: " + " ".join(f"{w:.3f}" for w in walls))
+    registry.run_face(spark, key, sf_dir)  # warmup
+    walls = []
+    for _ in range(reps):
+        rec = registry.run_face(spark, key, sf_dir)
+        walls.append(rec["wall_s"])
+        print(json.dumps(rec), flush=True)
     print(
         f"RESULT {key} min={min(walls):.3f} "
         f"median={statistics.median(walls):.3f}"

@@ -36,14 +36,12 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F
 
 from euclid_spark import artifacts, registry
-from euclid_spark.cache import release_all
 from euclid_spark.session import get_session
 
 SF = "/root/testdata/sf0.1"
@@ -119,16 +117,6 @@ def build_10x(
         os.symlink(f"{SF}/{t}.parquet", os.path.join(out_dir, f"{t}.parquet"))
 
 
-def _time(qs, name: str, sf_dir: str) -> float:
-    t0 = time.perf_counter()
-    qs[name](sf_dir=sf_dir, spark=_time.spark).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    dt = time.perf_counter() - t0
-    release_all()
-    return round(dt, 2)
-
-
 def _served(run):
     """(run(), {artifact name: {"bytes", "row_groups", "rows"}}) for every
     artifact path `artifacts.ensure` returns while `run` runs."""
@@ -163,36 +151,6 @@ def _served(run):
     return out, arts
 
 
-def _counted(spark, run):
-    """(run(), inputRecords) — the Spark stage input records of every
-    stage `run` runs (skipped stages excluded), read from the status
-    store after the listener bus drains: the rows a face decodes, which
-    grow with the corpus when a read stops pruning."""
-    jsc = spark.sparkContext._jsc.sc()
-    cls = spark.sparkContext._jvm.java.lang.Class.forName(
-        "org.apache.spark.status.StageDataWrapper"
-    )
-
-    def stages():
-        jsc.listenerBus().waitUntilEmpty()
-        it = jsc.statusStore().store().view(cls).reverse().closeableIterator()
-        try:
-            while it.hasNext():
-                yield it.next().info()
-        finally:
-            it.close()
-
-    mark = next((s.stageId() for s in stages()), -1)
-    out = run()
-    records = 0
-    for s in stages():
-        if s.stageId() <= mark:
-            break
-        if s.status().toString() != "SKIPPED":
-            records += s.inputRecords()
-    return out, records
-
-
 def main() -> None:
     args = sys.argv[1:]
     scale_events = "--events" in args
@@ -206,8 +164,15 @@ def main() -> None:
         args = args[:i] + args[i + 2 :]
     ops = args or (ACCOUNT_OPS if scale_accounts else DEFAULT_OPS)
     spark = get_session("scale_probe")
-    _time.spark = spark
-    qs = registry.queries()
+
+    def wall(name: str, sf_dir: str) -> float:
+        return round(registry.run_face(spark, name, sf_dir)["wall_s"], 2)
+
+    def warm(name: str, sf_dir: str) -> "tuple[float, int, dict]":
+        """(wall, Spark stage input records, served artifacts): the rows
+        a face decodes grow with the corpus when a read stops pruning."""
+        rec, arts = _served(lambda: registry.run_face(spark, name, sf_dir))
+        return round(rec["wall_s"], 2), rec["input_records"], arts
 
     tmp = tempfile.mkdtemp(prefix="euclid_10x_")
     # keep 10× artifacts out of the repo store: they key on the temp
@@ -228,14 +193,10 @@ def main() -> None:
         out = {"sf": "0.1", "replicas": replicas, "axis": axis,
                "mutate": mutate_docs, "ops": {}}
         for name in ops:
-            one_cold = _time(qs, name, SF)
-            (one_warm, one_arts), one_rec = _counted(
-                spark, lambda: _served(lambda: _time(qs, name, SF))
-            )
-            ten_cold = _time(qs, name, tmp)
-            (ten_warm, ten_arts), ten_rec = _counted(
-                spark, lambda: _served(lambda: _time(qs, name, tmp))
-            )
+            one_cold = wall(name, SF)
+            one_warm, one_rec, one_arts = warm(name, SF)
+            ten_cold = wall(name, tmp)
+            ten_warm, ten_rec, ten_arts = warm(name, tmp)
             out["ops"][name] = {
                 "x1_cold": one_cold,
                 "x1_warm": one_warm,
