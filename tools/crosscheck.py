@@ -15,8 +15,8 @@ since an int column may come back as float once it holds a NULL.
 
 Usage: python tools/crosscheck.py [sf_dir] [--nulls] [--json OUT] [key ...]
 
-sf_dir defaults to /root/testdata/sf0.01, or /root/testdata/sf0.001
-with --nulls. Every face runs through `registry.run_face`. Output lines:
+sf_dir defaults to the sf0.01 test corpus, or the sf0.001 one with
+--nulls. Every face runs through `registry.run_face`. Output lines:
 OK / OK? (rows-only by design) / DEGRADED (a dynamic oracle generator
 raised) / FAIL. Exit code 1 when any face fails.
 """
