@@ -278,12 +278,14 @@ def _calibrate(spark) -> "dict[str, float]":
     for _ in range(200_000):
         h = hashlib.md5(h).digest()
     py_ms = round((time.perf_counter() - t0) * 1000, 1)
-    # untimed warmup + min-of-2 so the probe's own codegen/JIT and a
-    # transient stall don't pollute the measurement (the probe exists
-    # to measure the HOST, not the session's first-job costs)
-    spark.range(5_000_000).selectExpr("sum(id)").collect()
+    # an untimed warmup at the probe's own size + min-of-3, so the
+    # probe's own codegen/JIT, a JVM still settling after the session's
+    # first faces and a transient stall don't pollute the measurement
+    # (the probe exists to measure the HOST, not the session's
+    # first-job costs)
+    spark.range(50_000_000).selectExpr("sum(id)").collect()
     reps = []
-    for _ in range(2):
+    for _ in range(3):
         t0 = time.perf_counter()
         spark.range(50_000_000).selectExpr("sum(id)").collect()
         reps.append((time.perf_counter() - t0) * 1000)

@@ -24,11 +24,11 @@ Construction — the reference's own aggregation shape, hash-only:
       (owner, event_id, payload), owner-clustered and sorted by
       (owner, event_id), which the tree build and the edge windows
       read too. A cell holds ≤ TILE_SIZE rows, so its leaf order
-      (`pos`), the ERC-20 reward hex, the leaf hashes and the in-cell
-      nodes are derived wherever they are needed — by a window in the
-      tree build (`cell_tree`), and on the driver (`cell_leaves`,
-      `merkle.merkle_levels_local`) for the ≤ L cells a response
-      opens into;
+      (`pos`), the ERC-20 reward hex, the leaf hashes, the in-cell
+      nodes and the cell roots are derived wherever they are needed —
+      by a window in the tree build (`cell_tree`), and on the driver
+      (`cell_leaves`, `merkle.merkle_levels_local`) for the ≤ L cells
+      a response opens into and the leaf chains it reads;
     * a "cell tree" above them: level 0 holds the cell roots, and node
       (level k, pos c) commits cells [c·2^k, (c+1)·2^k) —
       merkle_levels' pairing: one grouped pass per owner over its
@@ -37,7 +37,11 @@ Construction — the reference's own aggregation shape, hash-only:
       occupied cell space degrades to identity promotions, never
       self-concats. Its nodes are those of the family's keyed tile
       tree, which stores each node's digest as `node_hash` beside its
-      aggregate, one row per chain (range_tree.chains).
+      aggregate, one row per chain (range_tree.chains) — except a leaf
+      chain's: its nodes' digest is its cell's root, so the row holds
+      null and a response refolds that root from the cell's ≤
+      TILE_SIZE entry rows (`_set_cell_roots`), as the reference's
+      leaf circuits derive a leaf's node from its raw entries.
 
 - **The response for [b_min, b_max)**: the canonical segment-tree
   cover (≤ 2 tiles/level, range_tree.tile_cover) plus the two
@@ -63,23 +67,27 @@ Construction — the reference's own aggregation shape, hash-only:
   store and its keyed tree), the owner's O(log range) cover-tile
   digests, its entry rows in the two < TILE_SIZE edge windows (read
   once; a Q2 response's key fold reuses them), the revealed rows, the
-  entry rows of the ≤ L touched cells (≤ TILE_SIZE rows each: Q2 reads
-  one event_id window per cell, ERC-20 takes them from its revealed-row
-  read, which holds every covered cell) and the ≤ L·depth cell-tree
-  siblings, each
-  tree node matching the one chain row that holds it
-  (`chain_filter`), a Q2 response's cover keys in the same read;
-  Python ranks each opened cell's leaves, spells the ERC-20 rewards in
-  hex, hashes the leaves, refolds the touched cells and returns one
-  local frame, so no Spark job runs until the caller acts on it.
-  Nothing reads the range interior (asserted by the --events scale
-  probe) except the two reads bounded only by the owner's rows in the
-  range: the ERC-20 revealed rows and the q2 L > Q2_L fallback. The
-  stores hold no value a bounded read can recompute (no cell, leaf
-  position, reward hex, leaf hash or in-cell node; no promotion copy
-  — an owner's tree is O(its cells) rows, not O(cells × depth)), and
-  every stored digest as its 32 raw bytes (half the bytes of its hex
-  spelling); hex appears only in responses — the builds and the
+  ≤ L·depth cell-tree siblings, each tree node matching the one chain
+  row that holds it (`chain_filter`), a Q2 response's cover keys in
+  the same read, and the entry rows of the cells it opens (≤
+  TILE_SIZE rows each): the ≤ L touched cells and the cell of each
+  cover or sibling leaf chain, whose root is refolded. ERC-20 takes
+  them all from its revealed-row read, which holds every covered
+  cell; Q2's cover leaf chains ride its edge read, and one event_id
+  window per cell it has not read yet rides one read after the
+  sibling read. No request reads more often than when the leaf chains
+  stored their digests. Python ranks each opened cell's leaves, spells
+  the ERC-20 rewards in hex, hashes the leaves, refolds the opened
+  cells and returns one local frame, so no Spark job runs until the
+  caller acts on it. Nothing reads the range interior (asserted by the
+  --events scale probe) except the two reads bounded only by the
+  owner's rows in the range: the ERC-20 revealed rows and the q2
+  L > Q2_L fallback. The stores hold no value a bounded read can
+  recompute (no cell, leaf position, reward hex, leaf hash, in-cell
+  node or cell root — a leaf chain stores no digest; no promotion
+  copy — an owner's tree is O(its cells) rows, not O(cells × depth)),
+  and every stored digest as its 32 raw bytes (half the bytes of its
+  hex spelling); hex appears only in responses — the builds and the
   driver reads turn the bytes back into the lowercase hex the hashes
   are defined over.
 
@@ -226,8 +234,10 @@ def range_commitment_paths(
     zs, of), sorted by (owner, event_id) — whose rows are the in-cell
     trees' leaves (`cell_leaves`), the family's keyed tile tree —
     (owner, level, top, lo, <payload cols>, node_hash), one row per
-    chain (range_tree.chains), node_hash the node's cell-tree digest —
-    each built on a miss, and the response's cover depth,
+    chain (range_tree.chains), node_hash the node's cell-tree digest,
+    null on a leaf chain (level 0), whose digest is the root of its
+    cell's entry rows — each built on a miss, and the response's cover
+    depth,
     tree_depth(max qualifying cell + 1) from the entry store's event_id
     footer. The tree is built to the events' depth, never smaller, so
     it holds every node such a cover names."""
@@ -298,8 +308,10 @@ def _tree_nodes(
 ) -> "dict[tuple[int, int], dict]":
     """{(level, cell): chain row} of `owner`'s `nodes` in a keyed tree,
     `cols` beside node_hash: one `chain_filter` read. The tree stores
-    each digest as its 32 raw bytes; the hash definition concatenates
-    lowercase hex (A18's wire format), so the read hexes it back."""
+    each two-child chain's digest as its 32 raw bytes; the hash
+    definition concatenates lowercase hex (A18's wire format), so the
+    read hexes it back. A leaf chain (level 0) comes back with
+    node_hash None: its digest is its cell's root (`_set_cell_roots`)."""
     if not nodes:
         return {}
     rows = artifacts.read_rows(
@@ -307,8 +319,38 @@ def _tree_nodes(
         ["level", "top", "lo", *cols, "node_hash"],
     )
     for r in rows:
-        r["node_hash"] = r["node_hash"].hex()
+        if r["node_hash"] is not None:
+            r["node_hash"] = r["node_hash"].hex()
     return chain_match(rows, nodes)
+
+
+def _leaf_cells(nodes: "dict[tuple[int, int], dict]") -> "set[int]":
+    """The cells of the leaf chains among `_tree_nodes` rows."""
+    return {r["lo"] for r in nodes.values() if r["level"] == 0}
+
+
+def _cell_trees(
+    family: str, opened: "dict[tuple[int, int], list[dict]]"
+) -> "dict[int, tuple[dict[tuple[int, int], str], int]]":
+    """{cell: (nodes, depth)}: the in-cell tree of each of one owner's
+    opened cells (`cell_leaves`), refolded from its leaves
+    (`merkle.merkle_levels_local`)."""
+    return {
+        c: merkle_levels_local([_leaf_hex(family, lf) for lf in lv])
+        for (_, c), lv in opened.items()
+    }
+
+
+def _set_cell_roots(
+    nodes: "dict[tuple[int, int], dict]",
+    trees: "dict[int, tuple[dict[tuple[int, int], str], int]]",
+) -> None:
+    """Give each leaf chain among `nodes` its digest: the root of its
+    cell's in-cell tree in `trees` (`_cell_trees`)."""
+    for r in nodes.values():
+        if r["level"] == 0:
+            t, d = trees[r["lo"]]
+            r["node_hash"] = t[(d, 0)]
 
 
 # --------------------------------------------------------------------------
@@ -358,16 +400,28 @@ def _path_steps(
 
 
 def _edge_rows(
-    entries: str, family: str, owner: int, edges: "list[tuple[int, int]]"
-) -> "list[dict] | None":
-    """`owner`'s entry-store rows in the two < TILE_SIZE edge windows
-    (None without edges): one `artifacts.read_rows` that the element
-    sequence and a Q2 response's key fold share."""
-    if not edges:
-        return None
-    return artifacts.read_rows(
-        entries, _edge_filter(edges, ("owner", "=", owner)),
+    entries: str, family: str, owner: int, edges: "list[tuple[int, int]]",
+    cells: "set[int]" = frozenset(),
+) -> "tuple[list[dict] | None, list[dict]]":
+    """(`owner`'s entry-store rows in the two < TILE_SIZE edge windows
+    (None without edges), its rows in the whole `cells`): one
+    `artifacts.read_rows` that the element sequence and a Q2 response's
+    key fold share. The cells — leaf chains whose roots are refolded —
+    ride the edge read; without edges they need a read of their own."""
+    if not edges and not cells:
+        return None, []
+    rows = artifacts.read_rows(
+        entries,
+        _edge_filter(
+            [*edges, *((c * TILE_SIZE, (c + 1) * TILE_SIZE) for c in sorted(cells))],
+            ("owner", "=", owner),
+        ),
         _entry_cols(family),
+    )
+    at_edge = [any(lo <= r["event_id"] < hi for lo, hi in edges) for r in rows]
+    return (
+        [r for r, e in zip(rows, at_edge) if e] if edges else None,
+        [r for r, e in zip(rows, at_edge) if not e],
     )
 
 
@@ -435,10 +489,12 @@ def _response_root(
     cover, edges = tile_cover(int(b_min), int(b_max), depth)
     if not cover and not edges:
         return None
-    elems = _element_sequence(
-        family, _edge_rows(entries, family, int(owner), edges),
-        _tree_nodes(tree, cover, int(owner)), cover,
+    tiles = _tree_nodes(tree, cover, int(owner))
+    edge_rows, cell_rows = _edge_rows(
+        entries, family, int(owner), edges, _leaf_cells(tiles)
     )
+    _set_cell_roots(tiles, _cell_trees(family, cell_leaves(family, cell_rows)))
+    elems = _element_sequence(family, edge_rows, tiles, cover)
     return _fold(
         _hdr(int(b_min), int(b_max), int(owner), rate),
         [h for _, h, _ in elems],
@@ -456,9 +512,10 @@ def _q2_revealed(
     edge_rows: "list[dict] | None",
     req: "tuple | None",
     tiles: "list[dict] | None",
-) -> "list[dict]":
-    """The q2 response's revealed rows: the first-L distinct keys over
-    the range in key order, each opening at its smallest covering
+) -> "tuple[list[dict], list[dict]]":
+    """(revealed rows, the entry rows it read): the q2 response's
+    first-L distinct keys over the range in key order, each opening at
+    its smallest covering
     element — (cell, pos) of its first covered occurrence, or
     cell = -1 when an edge occurrence opens it — with its leaf hash.
 
@@ -469,9 +526,11 @@ def _q2_revealed(
     baked reveal width, so the keys come from the owner's entry-store
     rows in the covered cells: that read is bounded only by the
     owner's rows in the range, the honest cost of over-asking the
-    circuit setup."""
+    circuit setup; its rows hold every covered cell whole, so the
+    response opens cells from them."""
     edge_toks = {r["token_id"] for r in edge_rows or []}
     cand: "dict[int, dict]" = {}
+    rows: "list[dict]" = []
     if L <= Q2_L:
         key_rows = [] if req is None else Q2_KEY_TREE.driver_fold(
             spark, sf_dir, req[2], req[3], owner, contract, tiles=tiles,
@@ -503,7 +562,7 @@ def _q2_revealed(
         else {"token_id": t, "cell": cand[t]["cell"],
               "pos": cand[t]["pos"], "node_hash": _sha(t)}
         for t in keys
-    ]
+    ], rows
 
 
 def _range_response(
@@ -559,20 +618,21 @@ def _range_response(
     tiles = _tree_nodes(
         tree, cover, owner, *(Q2_KEY_TREE.cols if shared else ())
     )
-
-    # ---- element sequence (bounded: O(log range) tiles + 2 edge slices)
-    edge_rows = _edge_rows(entries, family, owner, edges)
-    elems = _element_sequence(family, edge_rows, tiles, cover)
-    element_hashes = [h for _, h, _ in elems]
-    elements_str = "/".join(element_hashes)
-    root = _fold(_hdr(b_min, b_max, owner, rate), element_hashes)
+    # the cover's leaf chains store no digest: their cells' rows ride
+    # a Q2 edge read, or else the whole-cell read below (ERC-20 reads
+    # every covered cell below)
+    edge_rows, cell_rows = _edge_rows(
+        entries, family, owner, edges,
+        _leaf_cells(tiles) if family == "q2" and edges else frozenset(),
+    )
 
     # ---- revealed rows: first L results in canonical order
     if family == "erc20":
         # the owner's entries in the range, first L in block order: a
         # read bounded by the owner's rows in the range (no structural
-        # cap — the same rows the Spark limit(L) scan read)
-        in_range = sorted(
+        # cap — the same rows the Spark limit(L) scan read), which holds
+        # every covered cell whole
+        cell_rows = sorted(
             artifacts.read_rows(
                 entries,
                 [[own, ("event_id", ">=", b_min), ("event_id", "<", b_max)]],
@@ -582,24 +642,28 @@ def _range_response(
         )
         rev_rows = [
             {**_payload(family, r), "cell": r["event_id"] // TILE_SIZE}
-            for r in in_range[:L]
+            for r in cell_rows[:L]
         ]
         for r in rev_rows:
             r["node_hash"] = _leaf_hex(family, r)
     else:
-        rev_rows = _q2_revealed(
+        rev_rows, fallback_rows = _q2_revealed(
             spark, sf_dir, owner, L, contract, entries, cover, edge_rows,
             req, list(tiles.values()) if shared else None,
         )
+        cell_rows += fallback_rows
+    if not rev_rows:  # nothing to open: the root appears in no row
+        return local_frame(spark, [], ddl)
 
     # ---- opening paths, assembled DRIVER-SIDE: a response is ≤ L
     # revealed rows by construction, so every path is built in Python
-    # from bounded reads — the entry-store rows of the ≤ L touched cells
-    # (≤ TILE_SIZE rows each), each cell's leaves ranked and refolded
-    # into its in-cell tree, and the ≤ L·depth cell-tree siblings
-    # ((level, pos) IN-lists). A covered cell lies inside [b_min, b_max),
-    # so ERC-20 takes its rows from the range read above; Q2 reads one
-    # event_id window per cell.
+    # from bounded reads — the ≤ L·depth cell-tree siblings ((level,
+    # pos) IN-lists), then the entry-store rows of the ≤ L touched
+    # cells and of the cover's and the siblings' leaf chains (≤
+    # TILE_SIZE rows each), each cell's leaves ranked and refolded into
+    # its in-cell tree. A covered cell lies inside [b_min, b_max), so
+    # ERC-20 has every such cell from its range read; Q2 reads one
+    # event_id window per cell it has not read yet, in one read.
     if family == "q2":
         def _is_cov(r):
             return r["cell"] >= 0
@@ -615,16 +679,10 @@ def _range_response(
     cov_rows = [r for r in rev_rows if _is_cov(r)]
     edge_rev = [r for r in rev_rows if not _is_cov(r)]
 
-    cover_tiles = [
-        (m["k"], m["c"], i)
-        for i, (_, _, m) in enumerate(elems)
-        if "k" in m
-    ]
-
     def _tile_for(cell: int):
-        for k, c, i in cover_tiles:
-            if (c << k) <= cell <= ((c + 1) << k) - 1:
-                return k, c, i
+        for k, c in cover:
+            if (k, c) in tiles and (c << k) <= cell <= ((c + 1) << k) - 1:
+                return k, c
         return None
 
     touched = {int(r["cell"]) for r in cov_rows}
@@ -635,26 +693,32 @@ def _range_response(
             for j in range(t[0]):
                 anc = int(r["cell"]) >> j
                 need.add((j, anc + 1 if anc % 2 == 0 else anc - 1))
-    if family == "erc20":
-        cell_rows = [r for r in in_range if r["event_id"] // TILE_SIZE in touched]
-    else:
-        cell_rows = artifacts.read_rows(
-            entries, _cells_filter(owner, [(c, c) for c in sorted(touched)]),
+    sibs = _tree_nodes(tree, sorted(need), owner)
+    want = touched | _leaf_cells(tiles) | _leaf_cells(sibs)
+    missing = want - {r["event_id"] // TILE_SIZE for r in cell_rows}
+    if missing:
+        cell_rows += artifacts.read_rows(
+            entries, _cells_filter(owner, [(c, c) for c in sorted(missing)]),
             _entry_cols(family),
-        ) if touched else []
-    opened = cell_leaves(family, cell_rows)
-    in_nodes = {
-        c: merkle_levels_local([_leaf_hex(family, lf) for lf in lv])
-        for (_, c), lv in opened.items()
-    }
+        )
+    opened = cell_leaves(
+        family, [r for r in cell_rows if r["event_id"] // TILE_SIZE in want]
+    )
+    in_nodes = _cell_trees(family, opened)
+    _set_cell_roots(tiles, in_nodes)
+    _set_cell_roots(sibs, in_nodes)
+    cell_sibs = {kc: n["node_hash"] for kc, n in sibs.items()}
     if family == "erc20":  # a revealed entry's pos is its rank in its cell
         at = {lf["event_id"]: lf["pos"] for lv in opened.values() for lf in lv}
         for r in cov_rows:
             r["pos"] = at[r["event_id"]]
-    cell_sibs = {
-        kc: n["node_hash"]
-        for kc, n in _tree_nodes(tree, sorted(need), owner).items()
-    }
+
+    # ---- element sequence (bounded: O(log range) tiles + 2 edge slices)
+    elems = _element_sequence(family, edge_rows, tiles, cover)
+    element_hashes = [h for _, h, _ in elems]
+    elements_str = "/".join(element_hashes)
+    root = _fold(_hdr(b_min, b_max, owner, rate), element_hashes)
+    at_elem = {(m["k"], m["c"]): i for i, (_, _, m) in enumerate(elems) if "k" in m}
 
     out_rows: "list[tuple]" = []
     for r in cov_rows:
@@ -663,11 +727,10 @@ def _range_response(
         t = _tile_for(cell)
         # an occupied leaf's cell always has an occupied cover tile
         assert t is not None, (family, owner, cell)
-        k, _, eidx = t
-        steps += _path_steps(cell_sibs, k, cell, CELL_LVL_OFF)
+        steps += _path_steps(cell_sibs, t[0], cell, CELL_LVL_OFF)
         out_rows.append(
             tuple(r[c] for c in payload_cols)
-            + (r["node_hash"], "/".join(steps), eidx)
+            + (r["node_hash"], "/".join(steps), at_elem[t])
         )
     if edges and edge_rev:
         # edge rows: the leaf IS its element — empty path

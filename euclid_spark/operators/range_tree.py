@@ -39,7 +39,10 @@ rows), and the driver fold. Everything else derives from it:
   family's range-response cell tree (`commit`), so one read serves a
   tree answer and a response — most owners hold a few cells, so the
   copies would be most of the rows, O(entries × depth) instead of
-  O(entries). It is written owner-clustered by (owner, lo, level)
+  O(entries). A leaf chain (level 0) stores a null node_hash: its
+  digest is its cell's root, which a response refolds from the
+  ≤ TILE_SIZE entry rows of that cell (`range_response.cell_roots`),
+  so only the two-child chains carry a digest. It is written owner-clustered by (owner, lo, level)
   with fine row groups, so one owner's cover read prunes to its rows.
 - **Streaming upkeep** (`TileTree.partial` / `merge`, the D19 monoid
   pair with monoid.Monoid's surface, so the tree itself is its
@@ -398,7 +401,9 @@ class TileTree:
                 )
         elif self.keys:
             # the keyed trees key on the owner, the events' user_id, and
-            # store one row per chain, with the cell tree's digests
+            # store one row per chain, with the cell tree's digests of
+            # the two-child chains: a leaf chain's digest is its cell
+            # root, which a response refolds from the cell's entry rows
             def build() -> DataFrame:
                 from euclid_spark.operators.range_response import cell_tree
 
@@ -408,7 +413,11 @@ class TileTree:
                     ["owner", "level", "cell"],
                 )
                 return artifacts.clustered(
-                    spark, chains(nodes, depth),
+                    spark,
+                    chains(nodes, depth).withColumn(
+                        "node_hash",
+                        F.when(F.col("level") > 0, F.col("node_hash")),
+                    ),
                     "owner", _events_span(spark, sf_dir, "user_id"),
                     "lo", "level",
                 )
@@ -739,7 +748,7 @@ def _q2_fold(tiles: list, ev: "list | None") -> "list[dict]":
 Q2_KEY_TREE = TileTree(
     tiles=artifacts.Artifact(
         "q2_key_tiles", "events",
-        dict(op="q2_key_tree", tile=TILE_SIZE, L=Q2_L, layout="chain_v2"),
+        dict(op="q2_key_tree", tile=TILE_SIZE, L=Q2_L, layout="chain_v3"),
     ),
     axes=("contract",),
     keys=("owner",),
@@ -839,7 +848,7 @@ def _erc20_fold(tiles: list, ev: "list | None") -> "tuple | None":
 ERC20_REWARD_TREE = TileTree(
     tiles=artifacts.Artifact(
         "erc20_reward_tiles", "events",
-        dict(op="erc20_reward_tree", tile=TILE_SIZE, layout="chain_v2"),
+        dict(op="erc20_reward_tree", tile=TILE_SIZE, layout="chain_v3"),
     ),
     axes=("rate", "contract"),
     keys=("owner",),

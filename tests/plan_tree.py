@@ -51,6 +51,21 @@ def exchange_partitionings(df) -> "list[str]":
     ]
 
 
+def hash_exchange_keys(df) -> "list[list[str]]":
+    """The key expressions, as Catalyst prints them (`name#id`), of
+    every hash-partitioned shuffle exchange in the executed plan tree,
+    read from its `outputPartitioning()`."""
+    out = []
+    for node in physical_nodes(df):
+        if node.getClass().getSimpleName() != "ShuffleExchangeExec":
+            continue
+        part = node.outputPartitioning()
+        if part.getClass().getSimpleName() == "HashPartitioning":
+            keys = part.expressions()
+            out.append([keys.apply(i).toString() for i in range(keys.size())])
+    return out
+
+
 def join_types(df) -> "list[str]":
     """The join type ("Inner", "LeftSemi", "LeftAnti", …) of every join
     node in the executed plan tree, read from its `joinType()`."""

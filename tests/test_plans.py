@@ -22,6 +22,7 @@ from tests.plan_tree import (
     assert_no_python_eval,
     assert_no_single_partition,
     exchange_partitionings,
+    hash_exchange_keys,
     join_types,
     physical_node_counts,
     physical_nodes,
@@ -342,9 +343,9 @@ def test_winnowing_only_selected_fingerprints_shuffle(spark):
     """C41: the only exchange is the final distinct over the SELECTED
     fingerprints (sampled density), never the token stream."""
     df = textops.text_winnowing(spark, SF_SMOKE)
-    plan = _plan(df)
-    n_shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
-    assert n_shuffles <= 1, plan
+    nodes = physical_node_counts(df, initial=False)
+    n_shuffles = nodes.get("ShuffleExchangeExec", 0) + nodes.get("ReusedExchangeExec", 0)
+    assert n_shuffles <= 1, nodes
     assert_no_python_eval(df)
 
 
@@ -360,9 +361,11 @@ def test_state_diff_broadcasts_heights(spark):
 
 def test_unpivot_is_single_rollup(spark):
     """B45: stack is row-local — exactly the rollup's exchange."""
-    plan = _plan(relational.unpivot_measures(spark, SF_SMOKE))
-    n_shuffles = plan.count("Exchange") - plan.count("BroadcastExchange")
-    assert n_shuffles <= 1, plan
+    nodes = physical_node_counts(
+        relational.unpivot_measures(spark, SF_SMOKE), initial=False
+    )
+    n_shuffles = nodes.get("ShuffleExchangeExec", 0) + nodes.get("ReusedExchangeExec", 0)
+    assert n_shuffles <= 1, nodes
 
 
 @pytest.mark.parametrize(
@@ -419,14 +422,19 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
     opening-path siblings of ≤ L revealed rows ≤ L per level, and no
     tree read returns a row that answers no requested node, every
     edge read returns only rows inside the two < TILE_SIZE edge
-    windows and no request reads the same (store, owner, edge window)
-    twice (a Q2 response's key fold takes the edge rows its element
-    sequence read), every other read of an entry store is the ERC-20
-    response's revealed rows or the Q2 response's one read of its
-    ≤ TOP_L touched cells, one whole-cell event_id window each, with
-    ≤ TILE_SIZE rows per (owner, cell) (the ERC-20 response opens its
-    cells from its revealed-row read), and no Spark job runs before
-    the returned frame is acted on — nothing reads the range
+    windows and the whole cells beside them and no request reads the
+    same (store, owner, edge window) twice (a Q2 response's key fold
+    takes the edge rows its element sequence read), every other read
+    of an entry store is the ERC-20 response's revealed rows or the
+    Q2 response's one read of the cells it has not read yet, one
+    whole-cell event_id window each, with ≤ TILE_SIZE rows per
+    (owner, cell) (the ERC-20 response opens its cells from its
+    revealed-row read); no cell is read twice, and each whole cell is
+    either the cell of a leaf chain a chain read returned (a leaf
+    chain stores no digest: its cell root is refolded; a Q2
+    response's cover leaf chains ride its edge read) or one of
+    ≤ TOP_L cells holding a revealed row; and no Spark job runs
+    before the returned frame is acted on — nothing reads the range
     interior."""
     from collections import Counter
 
@@ -487,6 +495,8 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
         assert reads, f"{name} read nothing through artifacts.read_rows"
         cell_reads = cover_reads = 0
         edge_reads: "set[tuple]" = set()
+        leaf_chains: "set[int]" = set()  # the lo of each leaf chain read
+        opened: "dict[int, list]" = {}  # whole-cell window → its rows
         for path, flt, rows in reads:
             base = path.rstrip("/").rsplit("/", 1)[-1]
             if base.startswith(tile_trees) or id(flt) in requested:
@@ -501,6 +511,8 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
                     assert name.endswith("_range_response"), (name, base)
                     cap = max(2, TOP_L)
                 assert max(per_level.values(), default=0) <= cap, (name, base)
+                leaf_chains |= {r["lo"] for r in rows if r.get("top") is not None
+                                and r["level"] == 0}
                 continue
             # every other read is of an entry store (or, for A25, the
             # events) and filters on event_id windows
@@ -510,32 +522,42 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
                 for conj in flt or []
             ]
             assert windows and all(len(w) == 2 for w in windows), (name, flt)
-            if all(lo % TILE_SIZE == 0 and hi - lo == TILE_SIZE
-                   for lo, hi in windows):
+            cells = [
+                lo // TILE_SIZE for lo, hi in windows
+                if lo % TILE_SIZE == 0 and hi - lo == TILE_SIZE
+            ]
+            rest = [w for w in windows if w[1] - w[0] != TILE_SIZE
+                    or w[0] % TILE_SIZE]
+            in_cells = [r for r in rows if r["event_id"] // TILE_SIZE in cells
+                        and not any(lo <= r["event_id"] < hi for lo, hi in rest)]
+            if cells:
                 # the opened cells' entries, ranked and refolded on the
-                # driver: ≤ TOP_L whole cells
-                cell_reads += 1
-                assert len(windows) <= TOP_L, name
+                # driver: a revealed row's cell or a leaf chain's
                 per_cell = Counter(
-                    (r["owner"], r["event_id"] // TILE_SIZE) for r in rows
+                    (r["owner"], r["event_id"] // TILE_SIZE) for r in in_cells
                 )
                 assert all(o == owner for o, _ in per_cell), name
-                assert {c for _, c in per_cell} <= {
-                    lo // TILE_SIZE for lo, _ in windows
-                }, name
+                assert {c for _, c in per_cell} <= set(cells), name
                 assert max(per_cell.values(), default=0) <= TILE_SIZE, name
-            elif windows == [(b_min, b_max)]:
+                for c in cells:
+                    assert c not in opened, (name, "cell read twice", c)
+                    opened[c] = [r for r in in_cells
+                                 if r["event_id"] // TILE_SIZE == c]
+            if not rest:
+                cell_reads += 1
+            elif rest == [(b_min, b_max)]:
                 # the ERC-20 revealed rows: the owner's rows in range
                 assert name == "erc20_range_response", name
+                assert not cells, name
                 assert all(r["owner"] == owner for r in rows), name
             else:
-                assert sorted(windows) == sorted(edges), (name, base, windows)
+                assert sorted(rest) == sorted(edges), (name, base, windows)
                 assert all(
                     any(lo <= r["event_id"] < hi for lo, hi in edges)
-                    for r in rows
+                    for r in rows if r not in in_cells
                 ), (name, base)
                 who = [v for conj in flt for c, _, v in conj if c == "owner"]
-                for w in windows:  # each edge window read once
+                for w in rest:  # each edge window read once
                     key = (base, who[0] if who else None, w)
                     assert key not in edge_reads, (name, "read twice", key)
                     edge_reads.add(key)
@@ -547,6 +569,17 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
         assert cover_reads == 1, (name, cover_reads)
         assert df.count() > 0
         assert _newest_job_id(spark) > before  # the action is the first job
+        # every whole cell read is the cell of a leaf chain a chain read
+        # returned (its digest is the cell's root, refolded) or holds a
+        # revealed row (≤ TOP_L of those)
+        for_rows = sorted(set(opened) - leaf_chains)
+        if for_rows:
+            key = df.columns[0]  # the payload id: token_id / event_id
+            revealed = {r[0] for r in df.select(key).collect()}
+            assert all(
+                any(r[key] in revealed for r in opened[c]) for c in for_rows
+            ), (name, for_rows)
+        assert len(for_rows) <= TOP_L, name
 
 
 def test_empty_answers_run_no_spark_job(spark):
@@ -700,11 +733,10 @@ def test_preprocessing_shares_one_day_owner_exchange(spark):
     assert "REPARTITION_BY_COL" in plan
     # an Expand: the acct counters regressed to a multi-distinct
     assert_no_nodes(df, "ExpandExec")
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line and "_groupingexpression" in line:
-            raise AssertionError(
-                f"partials re-shuffled despite shared exchange: {line}"
-            )
+    keyed = [k for k in hash_exchange_keys(df)
+             if any("_groupingexpression" in e for e in k)]
+    assert hash_exchange_keys(df), "the plan walk saw no hash exchange"
+    assert not keyed, f"partials re-shuffled despite shared exchange: {keyed}"
 
 
 def _logical_node_counts(df) -> "dict[str, int]":
@@ -772,11 +804,10 @@ def test_preprocessing_shared_exchange_survives_disk_only_pin(spark, monkeypatch
     plan = _plan(df)
     assert "REPARTITION_BY_COL" in plan
     assert_no_nodes(df, "ExpandExec")
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line and "_groupingexpression" in line:
-            raise AssertionError(
-                f"partials re-shuffled despite shared exchange: {line}"
-            )
+    keyed = [k for k in hash_exchange_keys(df)
+             if any("_groupingexpression" in e for e in k)]
+    assert hash_exchange_keys(df), "the plan walk saw no hash exchange"
+    assert not keyed, f"partials re-shuffled despite shared exchange: {keyed}"
     rdds = spark.sparkContext._jsc.getPersistentRDDs()
     levels = [rdd.getStorageLevel() for rdd in rdds.values()]
     assert any(

@@ -259,15 +259,23 @@ def test_cold_store_first_call_equals_second(spark, tmp_path, monkeypatch, famil
     assert cold and cold == warm
 
 
-def _store_rows(path: str) -> "list[dict]":
-    """Every row of a keyed tree, its node_hash turned back into the
-    lowercase hex the hash definition concatenates."""
+def _store_rows(path: str, roots: "dict[tuple, str]") -> "list[dict]":
+    """Every row of a keyed tree with its digest as the lowercase hex
+    the hash definition concatenates: a two-child chain's stored 32
+    raw bytes hexed, a leaf chain's (stored null) its cell's root in
+    `roots` ({(owner, cell): root}, refolded from the in-cell
+    leaves)."""
     from euclid_spark import artifacts
 
     rows = artifacts.read_rows(path)
     for r in rows:
-        assert isinstance(r["node_hash"], bytes) and len(r["node_hash"]) == 32
-        r["node_hash"] = r["node_hash"].hex()
+        if r["level"] == 0:
+            assert r["node_hash"] is None, r
+            r["node_hash"] = roots[(r["owner"], r["lo"])]
+        else:
+            assert isinstance(r["node_hash"], bytes), r
+            assert len(r["node_hash"]) == 32, r
+            r["node_hash"] = r["node_hash"].hex()
     return rows
 
 
@@ -389,11 +397,12 @@ def _norm(v):
 def test_stores_hold_binary_digests_and_answers_match_a_hex_recompute(spark):
     """The entry stores hold only (owner, event_id, payload) — no
     node_hash, pos, cell or hex column — the keyed trees hold every
-    cell-tree node_hash as 32 raw bytes, and the driver answers of
+    two-child chain's node_hash as 32 raw bytes and none for a leaf
+    chain, whose digest is its cell root, and the driver answers of
     both response faces equal a recompute over the trees' hexed rows
     and the in-cell leaves: leaf hashes from payloads, each (owner,
-    cell)'s in-cell tree level by level from them, the cell tree's
-    level 0 from those roots and each stored cell-tree level from the
+    cell)'s in-cell tree level by level from them, the leaf chains at
+    exactly the occupied cells, each stored cell-tree level from the
     one below, and each response root from its cover tiles and edge
     leaves."""
     import pyarrow as pa
@@ -418,10 +427,10 @@ def test_stores_hold_binary_digests_and_answers_match_a_hex_recompute(spark):
         # the chain rows expanded to every (owner, level, pos) node
         tree = {
             k: h for k, (h,) in _expand_chains(
-                _store_rows(cells), ["node_hash"]
+                _store_rows(cells, roots), ["node_hash"]
             )[0].items()
         }
-        # cell-tree level 0 = the refolded cell roots, and nothing else
+        # cell-tree level 0: a leaf chain at each occupied cell, no other
         assert {
             (o, p): h for (o, k, p), h in tree.items() if k == 0
         } == roots
@@ -507,11 +516,11 @@ def _chain_stores(spark, monkeypatch, corpus, deep_corpus) -> list:
         cols = list(tree.cols)
         path = range_commitment_paths(spark, sf, family)[1]
         assert path == tree.path(spark, sf)
-        nodes, bottoms = _expand_chains(_store_rows(path), [*cols, "node_hash"])
-        digest = _cell_tree(
-            _cell_roots(_spark_leaf_rows(spark, sf, family), family),
-            _depth(spark, sf),
+        roots = _cell_roots(_spark_leaf_rows(spark, sf, family), family)
+        nodes, bottoms = _expand_chains(
+            _store_rows(path, roots), [*cols, "node_hash"]
         )
+        digest = _cell_tree(roots, _depth(spark, sf))
         full = {
             (r["owner"], r["level"], r["cell"]): _norm([r[c] for c in cols])
             + (digest[(r["owner"], r["level"], r["cell"])],)
@@ -559,6 +568,160 @@ def test_chain_stores_hold_no_copies(spark, monkeypatch, deep_corpus, corpus):
         assert len(bottoms) == len(real), name
         if corpus == "deep":
             assert len(bottoms) < len(full) / 2, (name, len(bottoms), len(full))
+
+
+@pytest.mark.parametrize("corpus", ["smoke", "deep"])
+def test_leaf_chains_store_no_digest(spark, monkeypatch, deep_corpus, corpus):
+    """Every leaf-chain row (level 0) of both keyed trees has a null
+    node_hash — its digest is its cell's root, which a response
+    refolds from the cell's entry rows — and every other row holds its
+    digest as 32 raw bytes, at SF_SMOKE and on a ≥ 10-level tree."""
+    from euclid_spark import artifacts
+    from euclid_spark.operators.range_response import range_commitment_paths
+
+    sf = SF_SMOKE
+    if corpus == "deep":
+        sf, arts = deep_corpus
+        monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", arts)
+    for family in ("q2", "erc20"):
+        path = range_commitment_paths(spark, sf, family)[1]
+        rows = artifacts.read_rows(path, None, ["level", "node_hash"])
+        leaf = [r["node_hash"] for r in rows if r["level"] == 0]
+        inner = [r["node_hash"] for r in rows if r["level"] > 0]
+        assert leaf and inner, family
+        assert all(h is None for h in leaf), family
+        assert all(isinstance(h, bytes) and len(h) == 32 for h in inner), family
+
+
+def test_refolded_leaf_chains_match_standalone_recompute(spark, monkeypatch):
+    """At SF_ORACLE, for each family, a response whose cover holds a
+    promoted leaf chain (a node above level 0 with one occupied cell),
+    whose opening paths take a sibling from a leaf chain, and one of
+    whose leaf chains has a cell of ≥ 2 leaves: its root, and
+    `_response_root`'s (the verifier faces' commit check), equal the
+    standalone tool's from-raw-rows recompute, and its rows
+    self-verify."""
+    import sys
+
+    from euclid_spark import artifacts
+    from euclid_spark.operators import range_response
+    from euclid_spark.operators.euclid import REWARDS_RATE
+    from tests.conftest import REPO, SF_ORACLE
+
+    sys.path.insert(0, str(REPO / "tools"))
+    import verify_response as vr
+
+    calls: "list[dict]" = []
+    tree_nodes = range_response._tree_nodes
+
+    def spy(tree, nodes, owner, *cols):
+        calls.append(tree_nodes(tree, nodes, owner, *cols))
+        return calls[-1]
+
+    monkeypatch.setattr(range_response, "_tree_nodes", spy)
+    mb = artifacts.footer_stats(f"{SF_ORACLE}/events.parquet").span("event_id")[1]
+    rng = random.Random(3)
+    for family, fn, L in (
+        ("q2", q2_range_response, None),  # the key fold's reveal bound
+        ("q2", q2_range_response, 20),  # past it: the covered cells' rows
+        ("erc20", erc20_range_response, 20),
+    ):
+        entries = range_response.range_commitment_paths(
+            spark, SF_ORACLE, family
+        )[0]
+        found = None
+        for _ in range(300):
+            b_min = rng.randrange(0, mb // 2)
+            b_max = b_min + rng.randrange(2_000, mb)
+            owner = rng.randrange(1, 40)
+            calls.clear()
+            rows = fn(spark, SF_ORACLE, owner=owner, b_min=b_min,
+                      b_max=b_max, L=L).collect()
+            if len(calls) < 2 or not rows:
+                continue
+            cover, sibs = calls
+            leaves = range_response.cell_leaves(family, artifacts.read_rows(
+                entries, [[("owner", "=", owner)]],
+                range_response._entry_cols(family),
+            ))
+            chains = [*cover.values(), *sibs.values()]
+            if (
+                any(r["level"] == 0 < k for (k, _), r in cover.items())
+                and any(r["level"] == 0 for r in sibs.values())
+                and any(len(leaves[(owner, r["lo"])]) > 1
+                        for r in chains if r["level"] == 0)
+            ):
+                found = (owner, b_min, b_max, rows)
+                break
+        assert found, (family, L)
+        owner, b_min, b_max, rows = found
+        rate = REWARDS_RATE if family == "erc20" else None
+        want = vr._recompute_range_root(
+            f"{SF_ORACLE}/events.parquet", family, owner, b_min, b_max, rate
+        )
+        assert {r["response_root"] for r in rows} == {want}, (family, found[:3])
+        assert range_response._response_root(
+            spark, SF_ORACLE, family, owner, b_min, b_max
+        ) == want, (family, found[:3])
+        _check_rows(rows, family)
+
+
+def test_edge_only_reveal_reads_its_cover_leaf_chains_with_the_edges(
+    spark, monkeypatch
+):
+    """A Q2 response whose revealed keys all open at edge elements
+    opens no cell, yet its root needs the cell root of each leaf chain
+    in its cover: those cells ride its edge read, so it reads its
+    entry store once — the edge read — as it did when the leaf chains
+    stored their digests, and its root equals the standalone
+    recompute."""
+    import sys
+
+    from euclid_spark import artifacts
+    from euclid_spark.operators import range_response
+    from tests.conftest import REPO, SF_ORACLE
+
+    sys.path.insert(0, str(REPO / "tools"))
+    import verify_response as vr
+
+    calls: "list[dict]" = []
+    tree_nodes = range_response._tree_nodes
+
+    def spy(tree, nodes, owner, *cols):
+        calls.append(tree_nodes(tree, nodes, owner, *cols))
+        return calls[-1]
+
+    reads: "list[str]" = []
+    read_rows = artifacts.read_rows
+
+    def read_spy(path, filter=None, columns=None):
+        reads.append(path)
+        return read_rows(path, filter, columns)
+
+    monkeypatch.setattr(range_response, "_tree_nodes", spy)
+    monkeypatch.setattr(artifacts, "read_rows", read_spy)
+    mb = artifacts.footer_stats(f"{SF_ORACLE}/events.parquet").span("event_id")[1]
+    rng = random.Random(11)
+    for _ in range(300):
+        b_min = rng.randrange(0, mb - 600)
+        b_max = b_min + rng.randrange(600, 3_000)
+        owner = rng.randrange(1, 40)
+        calls.clear()
+        reads.clear()
+        rows = q2_range_response(
+            spark, SF_ORACLE, owner=owner, b_min=b_min, b_max=b_max, L=1
+        ).collect()
+        if rows and all(r["path"] == "" for r in rows) and any(
+            r["level"] == 0 for r in calls[0].values()
+        ):
+            break
+    else:
+        pytest.fail("no edge-only reveal over a leaf-chain cover found")
+    entry_reads = [p for p in reads if "q2_entry_store_" in p]
+    assert len(entry_reads) == 1, (owner, b_min, b_max, reads)
+    assert rows[0]["response_root"] == vr._recompute_range_root(
+        f"{SF_ORACLE}/events.parquet", "q2", owner, b_min, b_max, None
+    ), (owner, b_min, b_max)
 
 
 @pytest.mark.parametrize("corpus", ["smoke", "deep"])

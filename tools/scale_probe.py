@@ -25,8 +25,10 @@ Writes one JSON line; temp corpus lives under /tmp and is removed.
 Per op and scale it also records, from the warm run, the Spark stages'
 input records and each artifact the face served (every path
 `artifacts.ensure` returned) with its bytes on disk, its parquet
-row-group count and its row count — the bytes a bounded read can
-decode grow with these, not with the rows it returns.
+row-group count, its row count and the compressed bytes of each of its
+columns — the bytes a bounded read can decode grow with these, not
+with the rows it returns, and the column split says which column a
+store cut would shrink.
 """
 
 from __future__ import annotations
@@ -117,11 +119,41 @@ def build_10x(
         os.symlink(f"{SF}/{t}.parquet", os.path.join(out_dir, f"{t}.parquet"))
 
 
-def _served(run):
-    """(run(), {artifact name: {"bytes", "row_groups", "rows"}}) for every
-    artifact path `artifacts.ensure` returns while `run` runs."""
+def artifact_stats(path: str) -> dict:
+    """{"bytes", "row_groups", "rows", "column_bytes"} of a parquet
+    artifact (one file or a directory of part files): its bytes on
+    disk, row groups and rows, and per column (its dotted schema path)
+    the compressed bytes of its chunks over every row group — what a
+    store cut would save, read from the footers."""
     import pyarrow.parquet as pq
 
+    files = [
+        os.path.join(r, f)
+        for r, _, fs in os.walk(path)
+        for f in fs
+        if not f.startswith(("_", "."))
+    ] if os.path.isdir(path) else [path]
+    mds = [pq.ParquetFile(f).metadata for f in files]
+    cols: "dict[str, int]" = {}
+    for md in mds:
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            for j in range(rg.num_columns):
+                c = rg.column(j)
+                cols[c.path_in_schema] = (
+                    cols.get(c.path_in_schema, 0) + c.total_compressed_size
+                )
+    return {
+        "bytes": sum(os.path.getsize(f) for f in files),
+        "row_groups": sum(md.num_row_groups for md in mds),
+        "rows": sum(md.num_rows for md in mds),
+        "column_bytes": cols,
+    }
+
+
+def _served(run):
+    """(run(), {artifact name: `artifact_stats`}) for every artifact
+    path `artifacts.ensure` returns while `run` runs."""
     paths: "list[str]" = []
     orig = artifacts.ensure
 
@@ -134,21 +166,10 @@ def _served(run):
         out = run()
     finally:
         artifacts.ensure = orig
-    arts = {}
-    for path in dict.fromkeys(paths):
-        files = [
-            os.path.join(r, f)
-            for r, _, fs in os.walk(path)
-            for f in fs
-            if not f.startswith(("_", "."))
-        ] if os.path.isdir(path) else [path]
-        mds = [pq.ParquetFile(f).metadata for f in files]
-        arts[os.path.basename(path).rsplit("_", 1)[0]] = {
-            "bytes": sum(os.path.getsize(f) for f in files),
-            "row_groups": sum(md.num_row_groups for md in mds),
-            "rows": sum(md.num_rows for md in mds),
-        }
-    return out, arts
+    return out, {
+        os.path.basename(path).rsplit("_", 1)[0]: artifact_stats(path)
+        for path in dict.fromkeys(paths)
+    }
 
 
 def main() -> None:
