@@ -123,16 +123,28 @@ class Artifact:
         )
 
 
-# Write option for artifacts whose queries read a PREDICATE-PRUNED
-# sliver (a tile cover, an edge window): small parquet row groups give
-# the min/max stats enough resolution that the scan reads O(selected)
-# row groups instead of whole 128 MB defaults — measured 0.69→0.25 s on
-# a 12 M-row tile cover and 4.4→0.28 s on an edge window at 100× events.
-FINE_ROW_GROUPS = {"parquet.block.size": 4 * 1024 * 1024}
+# The one parquet write layout: every parquet artifact `save_frame`
+# writes has zstd pages and row groups of at most ROW_GROUP_ROWS rows.
+# zstd: the served stores are sums and 32-byte digests, and zstd took
+# the sf0.1 serving store 19-21% under snappy with owner reads no
+# slower. The row cap bounds a bounded read in bytes as well as rows:
+# a read filtered on an artifact's sort columns decodes at most
+# ⌈matching rows / ROW_GROUP_ROWS⌉ + 1 row groups, whatever the store's
+# size. Each row group costs its own footer entry and page headers:
+# 2 048-row groups measured +5.8% bytes and 512-row groups +21%, so the
+# cap stays at 4 096. `.jsonl` text artifacts take no codec.
+ROW_GROUP_ROWS = 4096
+_PARQUET_LAYOUT = {
+    "compression": "zstd",
+    "parquet.block.row.count.limit": str(ROW_GROUP_ROWS),
+}
 
-# files per key-clustered artifact: bucket i of the key span is written
-# by task i (see `clustered`)
-CLUSTER_PARTS = 8
+# A key-clustered store (`clustered`) is written as one file per
+# INPUT_ROWS_PER_FILE rows of its input table, from the table's footer
+# row count: one file at sf0.1 (10^5 events), more as the corpus grows.
+# The largest clustered store, `erc20_reward_tiles`, holds ~11 B per
+# events row (1.11 MB at sf0.1), so its files stay near 90 MB.
+INPUT_ROWS_PER_FILE = 1 << 23
 
 
 @functools.lru_cache(maxsize=None)
@@ -150,41 +162,44 @@ def _bucket_keys(spark: SparkSession, n: int) -> "tuple[int, ...]":
 
 
 def clustered(
-    spark: SparkSession, df: DataFrame, key: str, span: tuple, *cols: str
+    spark: SparkSession, df: DataFrame, key: str, footer: tuple, *cols: str
 ) -> DataFrame:
-    """`df` in its write layout: CLUSTER_PARTS files of equal-width
-    buckets of the long column `key` over `span`, the (MIN, MAX) of the
-    corpus column `key` is drawn from (footer statistics), each file
-    sorted by (key, *cols). A function of the data alone, where
-    `repartitionByRange` samples its bounds: two builds of the same
-    rows write the same bytes."""
-    lo, hi = (int(v or 0) for v in span)
-    width = (hi - lo) // CLUSTER_PARTS + 1
-    keys = F.array(
-        *(F.lit(k).cast("long") for k in _bucket_keys(spark, CLUSTER_PARTS))
-    )
-    bucket = F.expr(f"({key} - ({lo})) div {width}")  # 0..CLUSTER_PARTS-1
+    """`df` in its write layout: equal-width buckets of the long column
+    `key`, bucket i written by task i as one file sorted by
+    (key, *cols). `footer` is (MIN, MAX, rows) from the input table's
+    footers: the span the corpus column `key` is drawn from, and the
+    table's row count, which sets the file count
+    (⌈rows / INPUT_ROWS_PER_FILE⌉). The buckets are a function of those
+    footers alone, where `repartitionByRange` samples its bounds, so
+    two builds of the same rows in one process write the same bytes;
+    across processes parquet-mr may order a column chunk's encoding
+    list differently, so a few bytes per file can differ while the
+    rows and row groups match."""
+    lo, hi, rows = (int(v or 0) for v in footer)
+    n = max(1, -(-rows // INPUT_ROWS_PER_FILE))
+    width = (hi - lo) // n + 1
+    keys = F.array(*(F.lit(k).cast("long") for k in _bucket_keys(spark, n)))
+    bucket = F.expr(f"({key} - ({lo})) div {width}")  # 0..n-1
     return df.repartition(
-        CLUSTER_PARTS, F.element_at(keys, (bucket + 1).cast("int"))
+        n, F.element_at(keys, (bucket + 1).cast("int"))
     ).sortWithinPartitions(key, *cols)
 
 
 def save_frame(
-    df: DataFrame,
-    path: str,
-    options: "dict | None" = None,
-    partition_by: "str | None" = None,
+    df: DataFrame, path: str, partition_by: "str | None" = None
 ) -> str:
-    """Write `df` as the artifact at `path` in its suffix's format
-    (atomic temp+rename; a lost race keeps the winner's output — the
-    same rows, possibly different bytes). `partition_by` writes a
-    Hive-style partitioned layout (the D18/D26/C55b shard precedent)
-    under the same atomicity contract. Returns `path`."""
+    """Write `df` as the artifact at `path` in its suffix's format,
+    parquet in the one write layout (`ROW_GROUP_ROWS`); atomic
+    temp+rename, and a lost race keeps the winner's output — the same
+    rows, possibly different bytes. `partition_by` writes a Hive-style
+    partitioned layout (the D18/D26/C55b shard precedent) under the same
+    atomicity contract. Returns `path`."""
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = f"{path}.tmp.{os.getpid()}"
-    w = df.write.mode("overwrite").format(_FORMATS[os.path.splitext(path)[1]])
-    for k, v in (options or {}).items():
-        w = w.option(k, v)
+    fmt = _FORMATS[os.path.splitext(path)[1]]
+    w = df.write.mode("overwrite").format(fmt)
+    if fmt == "parquet":
+        w = w.options(**_PARQUET_LAYOUT)
     if partition_by:
         w = w.partitionBy(partition_by)
     w.save(tmp)
@@ -198,7 +213,6 @@ def save_frame(
 def ensure(
     path: str,
     build: Callable[[], DataFrame],
-    options: "dict | None" = None,
     partition_by: "str | None" = None,
 ) -> str:
     """`path` (an `Artifact.path`), building it on a miss (build →
@@ -207,15 +221,12 @@ def ensure(
     so footer statistics are only ever read from an artifact that
     exists."""
     if not os.path.exists(path):
-        save_frame(build(), path, options, partition_by)
+        save_frame(build(), path, partition_by)
     return path
 
 
 def serve_frame(
-    spark: SparkSession,
-    path: str,
-    build: Callable[[], DataFrame],
-    options: "dict | None" = None,
+    spark: SparkSession, path: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
     """The artifact at `path` as a Spark scan, built first on a miss.
     The scan is the point: every consumer gets a short-lineage parquet
@@ -226,7 +237,7 @@ def serve_frame(
     consumer (catalog.cached_parquet; no data is cached)."""
     from euclid_spark.catalog import cached_parquet
 
-    return cached_parquet(spark, ensure(path, build, options))
+    return cached_parquet(spark, ensure(path, build))
 
 
 # --------------------------------------------------------------------------

@@ -107,6 +107,22 @@ def collect_all(*dfs: DataFrame) -> "list[list]":
     return list(_FETCH_POOL.map(lambda d: d.collect(), dfs))
 
 
+# fallback path → the times this process took it. Each path also logs a
+# WARNING; `registry.run_face`'s record carries a run's delta of every
+# counter under `fallbacks`, so a degraded run shows in its record.
+FALLBACKS: "dict[str, int]" = {
+    "local_frame_rows": 0,  # local_frame: Arrow → row path
+    "footer_span_fold": 0,  # range_tree._events_footer: footers → fold
+}
+_FALLBACKS_LOCK = threading.Lock()  # a stream's sink thread counts too
+
+
+def count_fallback(path: str) -> None:
+    """Count one taking of the fallback `path` (a FALLBACKS key)."""
+    with _FALLBACKS_LOCK:
+        FALLBACKS[path] += 1
+
+
 def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
     """A SMALL local relation (driver-held rows → DataFrame) through the
     pandas/Arrow path: `createDataFrame(list, ddl)` serializes rows via
@@ -135,6 +151,7 @@ def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
             "local_frame: Arrow path fell back to the row path for %r (%s)",
             ddl, ex,
         )
+        count_fallback("local_frame_rows")
         return spark.createDataFrame(list(rows), ddl)
 
 

@@ -519,19 +519,19 @@ def _owner_clustered(
     """An owner-keyed store's write form: equal-width group_key (owner)
     buckets over the events' user_id span, each file sorted by
     (group_key, *cols) (`artifacts.clustered`)."""
-    from euclid_spark.operators.range_tree import _events_span
+    from euclid_spark.operators.range_tree import _events_footer
 
     return artifacts.clustered(
-        spark, df, "group_key", _events_span(spark, sf_dir, "user_id"), *cols
+        spark, df, "group_key", _events_footer(spark, sf_dir, "user_id"), *cols
     )
 
 
 # keyed by contract, the request axis
 OWNER_TOKEN_LEAVES = artifacts.Artifact(
-    "owner_token_leaves", "events", dict(op="owner_token_tree", layout="owner_v3")
+    "owner_token_leaves", "events", dict(op="owner_token_tree", layout="owner_v4")
 )
 OWNER_TOKEN_NODES = artifacts.Artifact(
-    "owner_token_nodes", "events", dict(op="owner_token_tree", layout="owner_v3")
+    "owner_token_nodes", "events", dict(op="owner_token_tree", layout="owner_v4")
 )
 
 
@@ -665,7 +665,7 @@ def _oracle_batch_responses() -> str:
 # key; rate AND contract are baked into the leaf rewards (exactly as the
 # reference bakes them into the leaf proofs — each contract has its own
 # storage DB), so each (rate, contract) keys its own artifacts
-_ERC20_TREE = dict(op="erc20_entry_tree", v=2, layout="owner_v3")
+_ERC20_TREE = dict(op="erc20_entry_tree", v=2, layout="owner_v4")
 ERC20_ENTRY_LEAVES = artifacts.Artifact("erc20_entry_leaves", "events", _ERC20_TREE)
 ERC20_ENTRY_NODES = artifacts.Artifact("erc20_entry_nodes", "events", _ERC20_TREE)
 ERC20_RESPONSE = artifacts.Artifact("erc20_response", "events", _ERC20_TREE)

@@ -618,20 +618,14 @@ def _range_response(
     tiles = _tree_nodes(
         tree, cover, owner, *(Q2_KEY_TREE.cols if shared else ())
     )
-    # the cover's leaf chains store no digest: their cells' rows ride
-    # a Q2 edge read, or else the whole-cell read below (ERC-20 reads
-    # every covered cell below)
-    edge_rows, cell_rows = _edge_rows(
-        entries, family, owner, edges,
-        _leaf_cells(tiles) if family == "q2" and edges else frozenset(),
-    )
 
     # ---- revealed rows: first L results in canonical order
     if family == "erc20":
         # the owner's entries in the range, first L in block order: a
         # read bounded by the owner's rows in the range (no structural
         # cap — the same rows the Spark limit(L) scan read), which holds
-        # every covered cell whole
+        # every covered cell whole and both edge windows, so the edge
+        # rows come out of it and the cover's leaf chains open from it
         cell_rows = sorted(
             artifacts.read_rows(
                 entries,
@@ -640,6 +634,10 @@ def _range_response(
             ),
             key=lambda r: r["event_id"],
         )
+        edge_rows = [
+            r for r in cell_rows
+            if any(lo <= r["event_id"] < hi for lo, hi in edges)
+        ] if edges else None
         rev_rows = [
             {**_payload(family, r), "cell": r["event_id"] // TILE_SIZE}
             for r in cell_rows[:L]
@@ -647,6 +645,12 @@ def _range_response(
         for r in rev_rows:
             r["node_hash"] = _leaf_hex(family, r)
     else:
+        # the cover's leaf chains store no digest: their cells' rows
+        # ride the edge read, or else the whole-cell read below
+        edge_rows, cell_rows = _edge_rows(
+            entries, family, owner, edges,
+            _leaf_cells(tiles) if edges else frozenset(),
+        )
         rev_rows, fallback_rows = _q2_revealed(
             spark, sf_dir, owner, L, contract, entries, cover, edge_rows,
             req, list(tiles.values()) if shared else None,

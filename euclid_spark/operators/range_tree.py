@@ -42,8 +42,10 @@ rows), and the driver fold. Everything else derives from it:
   O(entries). A leaf chain (level 0) stores a null node_hash: its
   digest is its cell's root, which a response refolds from the
   ≤ TILE_SIZE entry rows of that cell (`range_response.cell_roots`),
-  so only the two-child chains carry a digest. It is written owner-clustered by (owner, lo, level)
-  with fine row groups, so one owner's cover read prunes to its rows.
+  so only the two-child chains carry a digest. It is written
+  owner-clustered by (owner, lo, level) in row groups of at most
+  `artifacts.ROW_GROUP_ROWS` rows, so one owner's cover read prunes to
+  the row groups that hold its rows.
 - **Streaming upkeep** (`TileTree.partial` / `merge`, the D19 monoid
   pair with monoid.Monoid's surface, so the tree itself is its
   `parity.SPECS` entry and the declaration its `faces.MAINTAINED` row
@@ -79,7 +81,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from euclid_spark import artifacts
-from euclid_spark.catalog import load_events, local_frame
+from euclid_spark.catalog import count_fallback, load_events, local_frame
 from euclid_spark.functions.hashing import (
     DIGEST_PRIME,
     MIX,
@@ -301,29 +303,32 @@ def _probe_range(
     )
 
 
-def _events_span(spark: SparkSession, sf_dir: str, column: str) -> tuple:
-    """(MIN, MAX) of an events column from its parquet FOOTERS. Falls
-    back to a one-row Spark fold, logged at WARNING, when the footers
+def _events_footer(spark: SparkSession, sf_dir: str, column: str) -> tuple:
+    """(MIN, MAX) of an events column and the table's row count, from
+    its parquet FOOTERS. Falls back to a one-row Spark fold, logged at
+    WARNING and counted (`catalog.count_fallback`), when the footers
     cannot answer (a non-local path, or a row group without
     statistics)."""
     path = f"{sf_dir}/events.parquet"
     try:
-        return artifacts.footer_stats(path).span(column)
+        st = artifacts.footer_stats(path)
+        return (*st.span(column), st.num_rows)
     except Exception as ex:  # noqa: BLE001 — same value from one fold
         logging.getLogger(__name__).warning(
             "range_tree: no footer span(%s) for %s (%s); one-row fold",
             column, path, ex,
         )
+        count_fallback("footer_span_fold")
         return tuple(
             load_events(spark, sf_dir)
-            .agg(F.min(column), F.max(column))
+            .agg(F.min(column), F.max(column), F.count(F.lit(1)))
             .collect()[0]
         )
 
 
 def _max_event_id(spark: SparkSession, sf_dir: str) -> int:
     """The events table's max event_id (0 when it has none)."""
-    return int(_events_span(spark, sf_dir, "event_id")[1] or 0)
+    return int(_events_footer(spark, sf_dir, "event_id")[1] or 0)
 
 
 def _depth(spark: SparkSession, sf_dir: str) -> int:
@@ -381,7 +386,7 @@ class TileTree:
     def _spec(
         self, spark: SparkSession, sf_dir: str, contract, rate, store: bool
     ) -> tuple:
-        """(path, build, options) of the tree or, with `store`, of its
+        """(path, build) of the tree or, with `store`, of its
         input-row store — the one definition the path and frame forms
         share."""
         vals = {
@@ -396,7 +401,7 @@ class TileTree:
                 return artifacts.clustered(
                     spark,
                     self.rows(load_events(spark, sf_dir), contract, rate),
-                    "owner", _events_span(spark, sf_dir, "user_id"),
+                    "owner", _events_footer(spark, sf_dir, "user_id"),
                     "event_id",
                 )
         elif self.keys:
@@ -418,15 +423,15 @@ class TileTree:
                         "node_hash",
                         F.when(F.col("level") > 0, F.col("node_hash")),
                     ),
-                    "owner", _events_span(spark, sf_dir, "user_id"),
+                    "owner", _events_footer(spark, sf_dir, "user_id"),
                     "lo", "level",
                 )
         else:
             # one file, in the (level, cell) order the cover read filters on
             return path, lambda: self.levels(spark, sf_dir).orderBy(
                 "level", "cell"
-            ), None
-        return path, build, artifacts.FINE_ROW_GROUPS
+            )
+        return path, build
 
     def path(
         self, spark: SparkSession, sf_dir: str, contract=None, rate=None,
@@ -650,7 +655,8 @@ def _rt_fold(tiles: list, ev: "list | None") -> tuple:
 
 RANGE_TREE = TileTree(
     tiles=artifacts.Artifact(
-        "range_tree_tiles", "events", dict(op="range_tree", tile=TILE_SIZE)
+        "range_tree_tiles", "events",
+        dict(op="range_tree", tile=TILE_SIZE, layout="dense_v1"),
     ),
     axes=(),
     keys=(),
@@ -748,7 +754,7 @@ def _q2_fold(tiles: list, ev: "list | None") -> "list[dict]":
 Q2_KEY_TREE = TileTree(
     tiles=artifacts.Artifact(
         "q2_key_tiles", "events",
-        dict(op="q2_key_tree", tile=TILE_SIZE, L=Q2_L, layout="chain_v3"),
+        dict(op="q2_key_tree", tile=TILE_SIZE, L=Q2_L, layout="chain_v4"),
     ),
     axes=("contract",),
     keys=("owner",),
@@ -762,7 +768,7 @@ Q2_KEY_TREE = TileTree(
     # a response's opened cells prune to its row groups instead of
     # re-scanning and re-parsing the raw events table
     store=artifacts.Artifact(
-        "q2_entry_store", "events", dict(op="q2_entry_store", layout="owner_v1")
+        "q2_entry_store", "events", dict(op="q2_entry_store", layout="owner_v2")
     ),
     # a batch cannot know a key's rank in its whole leaf cell: the
     # stream keeps the earliest leaf cell and no position
@@ -848,7 +854,7 @@ def _erc20_fold(tiles: list, ev: "list | None") -> "tuple | None":
 ERC20_REWARD_TREE = TileTree(
     tiles=artifacts.Artifact(
         "erc20_reward_tiles", "events",
-        dict(op="erc20_reward_tree", tile=TILE_SIZE, layout="chain_v3"),
+        dict(op="erc20_reward_tree", tile=TILE_SIZE, layout="chain_v4"),
     ),
     axes=("rate", "contract"),
     keys=("owner",),
@@ -862,7 +868,7 @@ ERC20_REWARD_TREE = TileTree(
     # leaf circuit runs once per corpus version, here
     store=artifacts.Artifact(
         "erc20_all_entry_leaves", "events",
-        dict(op="erc20_all_entry_leaves", tile=TILE_SIZE, layout="owner_v1"),
+        dict(op="erc20_all_entry_leaves", tile=TILE_SIZE, layout="owner_v2"),
     ),
     commit="erc20",
 )

@@ -17,6 +17,7 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 
 from euclid_spark import cache
+from euclid_spark.catalog import FALLBACKS
 from euclid_spark.sources import bucketing, eth_proof, jsonl, partitioned, zorder
 from euclid_spark.streaming import faces
 from euclid_spark.operators import (
@@ -304,10 +305,13 @@ def run_face(
     `input_bytes`, `shuffle_write_bytes` and `spill_bytes` count every
     job and stage the call ran, construct included; they are read from
     the status store after the timed region, so the record adds no work
-    to it. The act's return value, when not None, is under `result`."""
+    to it. `fallbacks` counts, per `catalog.FALLBACKS` path, the times
+    the call took it. The act's return value, when not None, is under
+    `result`."""
     fn = queries()[key]
     status = StatusStore(spark)
     mark = status.mark()
+    taken = dict(FALLBACKS)
     with cache.scope():
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
@@ -332,6 +336,7 @@ def run_face(
         "plan_s": round(plan_s, 6),
         "exec_s": round(act_s - plan_s, 6),
         **counts,
+        "fallbacks": {k: n - taken[k] for k, n in FALLBACKS.items()},
     }
     if out is not None:
         rec["result"] = out

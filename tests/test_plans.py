@@ -433,7 +433,9 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
     either the cell of a leaf chain a chain read returned (a leaf
     chain stores no digest: its cell root is refolded; a Q2
     response's cover leaf chains ride its edge read) or one of
-    ≤ TOP_L cells holding a revealed row; and no Spark job runs
+    ≤ TOP_L cells holding a revealed row; no entry-store row comes
+    back from two reads of one request (the ERC-20 response takes its
+    edge rows from its revealed-row read); and no Spark job runs
     before the returned frame is acted on — nothing reads the range
     interior."""
     from collections import Counter
@@ -497,6 +499,7 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
         edge_reads: "set[tuple]" = set()
         leaf_chains: "set[int]" = set()  # the lo of each leaf chain read
         opened: "dict[int, list]" = {}  # whole-cell window → its rows
+        entry_rows: "set[tuple]" = set()  # (store, row) of every entry read
         for path, flt, rows in reads:
             base = path.rstrip("/").rsplit("/", 1)[-1]
             if base.startswith(tile_trees) or id(flt) in requested:
@@ -517,6 +520,9 @@ def test_query_phase_reads_bounded_rows_without_spark_jobs(spark, monkeypatch):
             # every other read is of an entry store (or, for A25, the
             # events) and filters on event_id windows
             assert base.startswith(edge_stores), (name, base, flt)
+            got = {(base, tuple(sorted(r.items()))) for r in rows}
+            assert not got & entry_rows, (name, "entry row read twice", base)
+            entry_rows |= got
             windows = [
                 tuple(v for c, op, v in conj if c == "event_id")
                 for conj in flt or []

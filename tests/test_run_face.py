@@ -61,3 +61,48 @@ def test_run_face_record_matches_the_status_store(spark, monkeypatch, act):
     assert during and during[0] >= base + 2  # the face's two pins were live
     assert _n_persistent(spark) == base
     assert ("result" in rec) == (act is not registry.noop)
+
+
+def _run_fallback_face(spark, monkeypatch, face) -> dict:
+    fake = types.SimpleNamespace(QUERIES={"fallback_face": face}, ORACLES={})
+    monkeypatch.setattr(registry, "_MODULES", [fake])
+    return registry.run_face(spark, "fallback_face", "/nonexistent")
+
+
+def test_local_frame_fallback_is_counted_in_the_record(spark, monkeypatch):
+    """A face whose local frame falls back from Arrow to the row path
+    carries that fallback in its run_face record."""
+    import pandas as pd
+
+    from euclid_spark.catalog import local_frame
+
+    def broken(*_a, **_k):
+        raise ValueError("forced arrow failure")
+
+    monkeypatch.setattr(pd.DataFrame, "from_records", broken)
+    rec = _run_fallback_face(
+        spark, monkeypatch,
+        lambda s, _sf: local_frame(s, [(1, "a")], "k long, v string"),
+    )
+    assert rec["fallbacks"] == {"local_frame_rows": 1, "footer_span_fold": 0}
+
+
+def test_footer_fold_fallback_is_counted_in_the_record(spark, monkeypatch):
+    """A face whose events span falls back from the footers to a
+    one-row fold carries that fallback in its run_face record; a face
+    that takes no fallback carries zeros."""
+    from euclid_spark import artifacts
+    from euclid_spark.operators.range_tree import _max_event_id
+    from tests.conftest import SF_SMOKE
+
+    def face(s, _sf):
+        return s.range(_max_event_id(s, SF_SMOKE))
+
+    assert set(_run_fallback_face(spark, monkeypatch, face)["fallbacks"].values()) == {0}
+
+    def no_footers(path):
+        raise ValueError("no footer statistics for column 'event_id'")
+
+    monkeypatch.setattr(artifacts, "footer_stats", no_footers)
+    rec = _run_fallback_face(spark, monkeypatch, face)
+    assert rec["fallbacks"] == {"local_frame_rows": 0, "footer_span_fold": 1}

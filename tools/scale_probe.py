@@ -24,11 +24,14 @@ Usage: python tools/scale_probe.py [op ...]   (default: the linear set)
 Writes one JSON line; temp corpus lives under /tmp and is removed.
 Per op and scale it also records, from the warm run, the Spark stages'
 input records and each artifact the face served (every path
-`artifacts.ensure` returned) with its bytes on disk, its parquet
-row-group count, its row count and the compressed bytes of each of its
-columns — the bytes a bounded read can decode grow with these, not
-with the rows it returns, and the column split says which column a
-store cut would shrink.
+`artifacts.ensure` returned) with its bytes on disk, its files, its
+parquet row-group count, the rows of its largest row group, its row
+count, its codec and the compressed bytes of each of its columns — the
+bytes a bounded read can decode grow with these, not with the rows it
+returns, and the column split says which column a store cut would
+shrink. An owner-keyed store also records the most row groups one
+owner's read touches (`owner_reads`), which the row cap keeps flat
+while the store grows.
 """
 
 from __future__ import annotations
@@ -119,35 +122,97 @@ def build_10x(
         os.symlink(f"{SF}/{t}.parquet", os.path.join(out_dir, f"{t}.parquet"))
 
 
-def artifact_stats(path: str) -> dict:
-    """{"bytes", "row_groups", "rows", "column_bytes"} of a parquet
-    artifact (one file or a directory of part files): its bytes on
-    disk, row groups and rows, and per column (its dotted schema path)
-    the compressed bytes of its chunks over every row group — what a
-    store cut would save, read from the footers."""
-    import pyarrow.parquet as pq
-
-    files = [
+def parquet_files(path: str) -> "list[str]":
+    """The data files of a parquet artifact: one file or a directory of
+    part files."""
+    return sorted(
         os.path.join(r, f)
         for r, _, fs in os.walk(path)
         for f in fs
         if not f.startswith(("_", "."))
-    ] if os.path.isdir(path) else [path]
+    ) if os.path.isdir(path) else [path]
+
+
+# the owner column of the owner-keyed stores (the tile trees and entry
+# stores; merkle.py's stores call it group_key)
+OWNER_KEYS = ("owner", "group_key")
+
+
+def artifact_stats(path: str) -> dict:
+    """{"bytes", "files", "row_groups", "max_row_group_rows", "rows",
+    "codec", "column_bytes"[, "owner_reads"]} of a parquet artifact:
+    its bytes on disk, files, row groups, the rows of its largest row
+    group, its rows, the compression codecs of its column chunks and,
+    per column (its dotted schema path), the compressed bytes of its
+    chunks over every row group — what a store cut would save, read
+    from the footers. An owner-keyed store also gets `owner_reads`."""
+    import pyarrow.parquet as pq
+
+    files = parquet_files(path)
     mds = [pq.ParquetFile(f).metadata for f in files]
     cols: "dict[str, int]" = {}
+    codecs: "set[str]" = set()
+    rg_rows = [0]
     for md in mds:
         for i in range(md.num_row_groups):
             rg = md.row_group(i)
+            rg_rows.append(rg.num_rows)
             for j in range(rg.num_columns):
                 c = rg.column(j)
+                codecs.add(c.compression)
                 cols[c.path_in_schema] = (
                     cols.get(c.path_in_schema, 0) + c.total_compressed_size
                 )
-    return {
+    out = {
         "bytes": sum(os.path.getsize(f) for f in files),
+        "files": len(files),
         "row_groups": sum(md.num_row_groups for md in mds),
+        "max_row_group_rows": max(rg_rows),
         "rows": sum(md.num_rows for md in mds),
+        "codec": sorted(codecs),
         "column_bytes": cols,
+    }
+    key = next((k for k in OWNER_KEYS if k in cols), None)
+    if key is not None:
+        out["owner_reads"] = owner_reads(path, key)
+    return out
+
+
+def row_groups_touched(dataset, filter) -> "list[int]":
+    """The rows of each row group a read of `dataset` (a
+    `pyarrow.dataset`) filtered by `filter` (a pyarrow expression)
+    decodes: those whose footer statistics `split_by_row_group` cannot
+    rule out."""
+    return [
+        rg.num_rows
+        for frag in dataset.get_fragments()
+        for part in frag.split_by_row_group(filter)
+        for rg in part.row_groups
+    ]
+
+
+def owner_reads(path: str, key: str = "owner") -> dict:
+    """For an owner-keyed store, over its owners (`key` = owner reads):
+    `max_row_groups` and `max_rows_decoded`, the most row groups and
+    rows one owner's read decodes; `max_owner_rows`, the most rows one
+    owner holds; and `over_bound`, the owners whose read touches more
+    than ⌈owner rows / artifacts.ROW_GROUP_ROWS⌉ + 1 row groups."""
+    from collections import Counter
+
+    import pyarrow.dataset as pds
+
+    ds = pds.dataset(path, format="parquet")
+    rows = Counter(ds.to_table(columns=[key]).column(key).to_pylist())
+    touched = {o: row_groups_touched(ds, pds.field(key) == o) for o in rows}
+    cap = artifacts.ROW_GROUP_ROWS
+    return {
+        "owners": len(rows),
+        "max_row_groups": max(map(len, touched.values()), default=0),
+        "max_rows_decoded": max(map(sum, touched.values()), default=0),
+        "max_owner_rows": max(rows.values(), default=0),
+        "over_bound": sum(
+            len(touched[o]) > -(-n // cap) + 1 for o, n in rows.items()
+        ),
     }
 
 
