@@ -92,6 +92,40 @@ def corpus_fingerprint(paths: "list[str]", **params: object) -> str:
 # payload format of an artifact, by its path suffix
 _FORMATS = {".parquet": "parquet", ".jsonl": "text"}
 
+# The parquet write layout. Every parquet artifact `save_frame` writes
+# has zstd pages: the served stores are sums, ids and 32-byte digests,
+# and zstd took the sf0.1 serving store ~20% under snappy with owner
+# reads no slower. `.jsonl` text artifacts take no codec.
+_PARQUET_LAYOUT = {"compression": "zstd"}
+
+# Write option of a store that bounded reads serve (a tile cover, an
+# owner's rows of a key-clustered store): row groups of at most
+# ROW_GROUP_ROWS rows, so a read filtered on the store's sort columns
+# decodes at most ⌈matching rows / ROW_GROUP_ROWS⌉ + 1 row groups,
+# whatever the store's size. Each row group costs its own footer entry
+# and page headers (2 048-row groups measured +5.8% bytes, 512-row
+# groups +21%), so the cap stays at 4 096. An artifact that is only
+# ever scanned whole keeps parquet's 128 MB row groups: the cap would
+# buy it nothing and cost a footer entry per 4 096 rows.
+ROW_GROUP_ROWS = 4096
+ROW_CAPPED = {"parquet.block.row.count.limit": str(ROW_GROUP_ROWS)}
+
+# Part of every parquet artifact's fingerprint, so a change of the
+# write layout rebuilds each stored artifact once.
+_WRITE_LAYOUT = ",".join(
+    f"{k}={v}" for k, v in sorted({**_PARQUET_LAYOUT, **ROW_CAPPED}.items())
+)
+
+# A key-clustered store (`clustered`) is written as one file per
+# INPUT_ROWS_PER_FILE rows of its input table (the table's footer row
+# count), and as no fewer than CLUSTER_FILES files, so that a small
+# corpus keeps CLUSTER_FILES write tasks and files of a few thousand
+# rows. The files outnumber CLUSTER_FILES above 8 · 2^23 ≈ 6.7·10^7
+# input rows. The largest clustered store, `erc20_reward_tiles`, holds
+# ~11 B per events row, so its files stay under ~90 MB at any size.
+CLUSTER_FILES = 8
+INPUT_ROWS_PER_FILE = 1 << 23
+
 
 @dataclass(frozen=True)
 class Artifact:
@@ -108,10 +142,12 @@ class Artifact:
     suffix: str = ".parquet"
 
     def fingerprint(self, sf_dir: str, **axes: object) -> str:
-        """md5 over the table's file stats, `params` and `axes`, the
-        per-call keys of a parameterized artifact (a contract, a rate)."""
+        """md5 over the table's file stats, `params`, the parquet write
+        layout and `axes`, the per-call keys of a parameterized artifact
+        (a contract, a rate)."""
+        layout = {"write": _WRITE_LAYOUT} if self.suffix == ".parquet" else {}
         return corpus_fingerprint(
-            [f"{sf_dir}/{self.table}.parquet"], **self.params, **axes
+            [f"{sf_dir}/{self.table}.parquet"], **self.params, **layout, **axes
         )
 
     def path(self, sf_dir: str, **axes: object) -> str:
@@ -121,30 +157,6 @@ class Artifact:
             artifact_dir(),
             f"{self.name}_{self.fingerprint(sf_dir, **axes)}{self.suffix}",
         )
-
-
-# The one parquet write layout: every parquet artifact `save_frame`
-# writes has zstd pages and row groups of at most ROW_GROUP_ROWS rows.
-# zstd: the served stores are sums and 32-byte digests, and zstd took
-# the sf0.1 serving store 19-21% under snappy with owner reads no
-# slower. The row cap bounds a bounded read in bytes as well as rows:
-# a read filtered on an artifact's sort columns decodes at most
-# ⌈matching rows / ROW_GROUP_ROWS⌉ + 1 row groups, whatever the store's
-# size. Each row group costs its own footer entry and page headers:
-# 2 048-row groups measured +5.8% bytes and 512-row groups +21%, so the
-# cap stays at 4 096. `.jsonl` text artifacts take no codec.
-ROW_GROUP_ROWS = 4096
-_PARQUET_LAYOUT = {
-    "compression": "zstd",
-    "parquet.block.row.count.limit": str(ROW_GROUP_ROWS),
-}
-
-# A key-clustered store (`clustered`) is written as one file per
-# INPUT_ROWS_PER_FILE rows of its input table, from the table's footer
-# row count: one file at sf0.1 (10^5 events), more as the corpus grows.
-# The largest clustered store, `erc20_reward_tiles`, holds ~11 B per
-# events row (1.11 MB at sf0.1), so its files stay near 90 MB.
-INPUT_ROWS_PER_FILE = 1 << 23
 
 
 @functools.lru_cache(maxsize=None)
@@ -169,14 +181,15 @@ def clustered(
     (key, *cols). `footer` is (MIN, MAX, rows) from the input table's
     footers: the span the corpus column `key` is drawn from, and the
     table's row count, which sets the file count
-    (⌈rows / INPUT_ROWS_PER_FILE⌉). The buckets are a function of those
-    footers alone, where `repartitionByRange` samples its bounds, so
-    two builds of the same rows in one process write the same bytes;
-    across processes parquet-mr may order a column chunk's encoding
-    list differently, so a few bytes per file can differ while the
-    rows and row groups match."""
+    (⌈rows / INPUT_ROWS_PER_FILE⌉, at least CLUSTER_FILES). The buckets
+    are a function of those footers alone, where `repartitionByRange`
+    samples its bounds, so two builds of the same rows in one process
+    write the same bytes; across processes parquet-mr may order a
+    column chunk's encoding list differently, so a few bytes per file
+    can differ while the rows and row groups match. Write it with
+    `ROW_CAPPED`, as every store that bounded reads serve."""
     lo, hi, rows = (int(v or 0) for v in footer)
-    n = max(1, -(-rows // INPUT_ROWS_PER_FILE))
+    n = max(CLUSTER_FILES, -(-rows // INPUT_ROWS_PER_FILE))
     width = (hi - lo) // n + 1
     keys = F.array(*(F.lit(k).cast("long") for k in _bucket_keys(spark, n)))
     bucket = F.expr(f"({key} - ({lo})) div {width}")  # 0..n-1
@@ -186,20 +199,22 @@ def clustered(
 
 
 def save_frame(
-    df: DataFrame, path: str, partition_by: "str | None" = None
+    df: DataFrame,
+    path: str,
+    options: "dict | None" = None,
+    partition_by: "str | None" = None,
 ) -> str:
     """Write `df` as the artifact at `path` in its suffix's format,
-    parquet in the one write layout (`ROW_GROUP_ROWS`); atomic
-    temp+rename, and a lost race keeps the winner's output — the same
-    rows, possibly different bytes. `partition_by` writes a Hive-style
-    partitioned layout (the D18/D26/C55b shard precedent) under the same
-    atomicity contract. Returns `path`."""
+    parquet with zstd pages plus the write `options` (`ROW_CAPPED`);
+    atomic temp+rename, and a lost race keeps the winner's output — the
+    same rows, possibly different bytes. `partition_by` writes a
+    Hive-style partitioned layout (the D18/D26/C55b shard precedent)
+    under the same atomicity contract. Returns `path`."""
     os.makedirs(os.path.dirname(path), exist_ok=True)
     tmp = f"{path}.tmp.{os.getpid()}"
     fmt = _FORMATS[os.path.splitext(path)[1]]
-    w = df.write.mode("overwrite").format(fmt)
-    if fmt == "parquet":
-        w = w.options(**_PARQUET_LAYOUT)
+    layout = {**(_PARQUET_LAYOUT if fmt == "parquet" else {}), **(options or {})}
+    w = df.write.mode("overwrite").format(fmt).options(**layout)
     if partition_by:
         w = w.partitionBy(partition_by)
     w.save(tmp)
@@ -213,6 +228,7 @@ def save_frame(
 def ensure(
     path: str,
     build: Callable[[], DataFrame],
+    options: "dict | None" = None,
     partition_by: "str | None" = None,
 ) -> str:
     """`path` (an `Artifact.path`), building it on a miss (build →
@@ -221,12 +237,15 @@ def ensure(
     so footer statistics are only ever read from an artifact that
     exists."""
     if not os.path.exists(path):
-        save_frame(build(), path, partition_by)
+        save_frame(build(), path, options, partition_by)
     return path
 
 
 def serve_frame(
-    spark: SparkSession, path: str, build: Callable[[], DataFrame]
+    spark: SparkSession,
+    path: str,
+    build: Callable[[], DataFrame],
+    options: "dict | None" = None,
 ) -> DataFrame:
     """The artifact at `path` as a Spark scan, built first on a miss.
     The scan is the point: every consumer gets a short-lineage parquet
@@ -237,7 +256,7 @@ def serve_frame(
     consumer (catalog.cached_parquet; no data is cached)."""
     from euclid_spark.catalog import cached_parquet
 
-    return cached_parquet(spark, ensure(path, build))
+    return cached_parquet(spark, ensure(path, build, options))
 
 
 # --------------------------------------------------------------------------

@@ -518,7 +518,8 @@ def _owner_clustered(
 ) -> DataFrame:
     """An owner-keyed store's write form: equal-width group_key (owner)
     buckets over the events' user_id span, each file sorted by
-    (group_key, *cols) (`artifacts.clustered`)."""
+    (group_key, *cols) (`artifacts.clustered`); its `serve_frame` writes
+    it `artifacts.ROW_CAPPED`."""
     from euclid_spark.operators.range_tree import _events_footer
 
     return artifacts.clustered(
@@ -528,10 +529,10 @@ def _owner_clustered(
 
 # keyed by contract, the request axis
 OWNER_TOKEN_LEAVES = artifacts.Artifact(
-    "owner_token_leaves", "events", dict(op="owner_token_tree", layout="owner_v4")
+    "owner_token_leaves", "events", dict(op="owner_token_tree", layout="owner_v3")
 )
 OWNER_TOKEN_NODES = artifacts.Artifact(
-    "owner_token_nodes", "events", dict(op="owner_token_tree", layout="owner_v4")
+    "owner_token_nodes", "events", dict(op="owner_token_tree", layout="owner_v3")
 )
 
 
@@ -573,7 +574,8 @@ def _owner_token_tree(
         )
 
     leaves = artifacts.serve_frame(
-        spark, OWNER_TOKEN_LEAVES.path(sf_dir, contract=contract), build_leaves
+        spark, OWNER_TOKEN_LEAVES.path(sf_dir, contract=contract), build_leaves,
+        artifacts.ROW_CAPPED,
     )
     nodes_at = OWNER_TOKEN_NODES.path(sf_dir, contract=contract)
     nodes = artifacts.serve_frame(
@@ -582,6 +584,7 @@ def _owner_token_tree(
         lambda: _owner_clustered(
             spark, sf_dir, merkle_levels(leaves)[0], "level", "pos"
         ),
+        artifacts.ROW_CAPPED,
     )
     depth = _served_depth(nodes_at)
     return leaves, nodes, depth
@@ -665,7 +668,7 @@ def _oracle_batch_responses() -> str:
 # key; rate AND contract are baked into the leaf rewards (exactly as the
 # reference bakes them into the leaf proofs — each contract has its own
 # storage DB), so each (rate, contract) keys its own artifacts
-_ERC20_TREE = dict(op="erc20_entry_tree", v=2, layout="owner_v4")
+_ERC20_TREE = dict(op="erc20_entry_tree", v=2, layout="owner_v3")
 ERC20_ENTRY_LEAVES = artifacts.Artifact("erc20_entry_leaves", "events", _ERC20_TREE)
 ERC20_ENTRY_NODES = artifacts.Artifact("erc20_entry_nodes", "events", _ERC20_TREE)
 ERC20_RESPONSE = artifacts.Artifact("erc20_response", "events", _ERC20_TREE)
@@ -732,6 +735,7 @@ def erc20_entry_leaves(
         spark,
         ERC20_ENTRY_LEAVES.path(sf_dir, **_erc20_axes(rewards_rate, contract)),
         build_leaves,
+        artifacts.ROW_CAPPED,
     )
 
 
@@ -753,6 +757,7 @@ def _erc20_entry_tree(
         lambda: _owner_clustered(
             spark, sf_dir, merkle_levels(leaves)[0], "level", "pos"
         ),
+        artifacts.ROW_CAPPED,
     )
     depth = _served_depth(nodes_at)
     return leaves, nodes, depth

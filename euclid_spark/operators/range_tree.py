@@ -386,9 +386,10 @@ class TileTree:
     def _spec(
         self, spark: SparkSession, sf_dir: str, contract, rate, store: bool
     ) -> tuple:
-        """(path, build) of the tree or, with `store`, of its
+        """(path, build, options) of the tree or, with `store`, of its
         input-row store — the one definition the path and frame forms
-        share."""
+        share. Every tree store serves bounded reads, so each is written
+        `ROW_CAPPED`."""
         vals = {
             "contract": CONTRACT if contract is None else contract,
             "rate": REWARDS_RATE if rate is None else int(rate),
@@ -428,10 +429,9 @@ class TileTree:
                 )
         else:
             # one file, in the (level, cell) order the cover read filters on
-            return path, lambda: self.levels(spark, sf_dir).orderBy(
-                "level", "cell"
-            )
-        return path, build
+            def build() -> DataFrame:
+                return self.levels(spark, sf_dir).orderBy("level", "cell")
+        return path, build, artifacts.ROW_CAPPED
 
     def path(
         self, spark: SparkSession, sf_dir: str, contract=None, rate=None,
@@ -655,8 +655,7 @@ def _rt_fold(tiles: list, ev: "list | None") -> tuple:
 
 RANGE_TREE = TileTree(
     tiles=artifacts.Artifact(
-        "range_tree_tiles", "events",
-        dict(op="range_tree", tile=TILE_SIZE, layout="dense_v1"),
+        "range_tree_tiles", "events", dict(op="range_tree", tile=TILE_SIZE)
     ),
     axes=(),
     keys=(),
@@ -754,7 +753,7 @@ def _q2_fold(tiles: list, ev: "list | None") -> "list[dict]":
 Q2_KEY_TREE = TileTree(
     tiles=artifacts.Artifact(
         "q2_key_tiles", "events",
-        dict(op="q2_key_tree", tile=TILE_SIZE, L=Q2_L, layout="chain_v4"),
+        dict(op="q2_key_tree", tile=TILE_SIZE, L=Q2_L, layout="chain_v3"),
     ),
     axes=("contract",),
     keys=("owner",),
@@ -768,7 +767,7 @@ Q2_KEY_TREE = TileTree(
     # a response's opened cells prune to its row groups instead of
     # re-scanning and re-parsing the raw events table
     store=artifacts.Artifact(
-        "q2_entry_store", "events", dict(op="q2_entry_store", layout="owner_v2")
+        "q2_entry_store", "events", dict(op="q2_entry_store", layout="owner_v1")
     ),
     # a batch cannot know a key's rank in its whole leaf cell: the
     # stream keeps the earliest leaf cell and no position
@@ -854,7 +853,7 @@ def _erc20_fold(tiles: list, ev: "list | None") -> "tuple | None":
 ERC20_REWARD_TREE = TileTree(
     tiles=artifacts.Artifact(
         "erc20_reward_tiles", "events",
-        dict(op="erc20_reward_tree", tile=TILE_SIZE, layout="chain_v4"),
+        dict(op="erc20_reward_tree", tile=TILE_SIZE, layout="chain_v3"),
     ),
     axes=("rate", "contract"),
     keys=("owner",),
@@ -868,7 +867,7 @@ ERC20_REWARD_TREE = TileTree(
     # leaf circuit runs once per corpus version, here
     store=artifacts.Artifact(
         "erc20_all_entry_leaves", "events",
-        dict(op="erc20_all_entry_leaves", tile=TILE_SIZE, layout="owner_v2"),
+        dict(op="erc20_all_entry_leaves", tile=TILE_SIZE, layout="owner_v1"),
     ),
     commit="erc20",
 )

@@ -306,8 +306,10 @@ def run_face(
     job and stage the call ran, construct included; they are read from
     the status store after the timed region, so the record adds no work
     to it. `fallbacks` counts, per `catalog.FALLBACKS` path, the times
-    the call took it. The act's return value, when not None, is under
-    `result`."""
+    the process took it during the call: process-wide, as the status
+    store's counts are, so a fallback another thread takes meanwhile (a
+    stream's sink thread) is counted too. The act's return value, when
+    not None, is under `result`."""
     fn = queries()[key]
     status = StatusStore(spark)
     mark = status.mark()
