@@ -411,6 +411,26 @@ def publish_manifest(
     with open(tmp, "w") as f:
         json.dump(meta, f, indent=1, sort_keys=True, default=str)
     os.replace(tmp, path)
+    # retire this name's manifests of older fingerprints for the same
+    # corpus version and params (a keying change re-keys a response
+    # without changing either): discovery must find only this one
+    live = json.loads(json.dumps(meta, default=str))
+    root = os.path.dirname(path)
+    for old in glob.glob(os.path.join(root, f"{name}_*.manifest.json")):
+        if old == path:
+            continue
+        try:
+            with open(old) as f:
+                m = json.load(f)
+        except (OSError, json.JSONDecodeError):
+            continue
+        if m.get("name") == name and all(
+            m.get(k) == live[k] for k in ("sources", "params")
+        ):
+            try:
+                os.remove(old)
+            except OSError:
+                pass
     return path
 
 
@@ -434,7 +454,7 @@ def gc(keep: "dict[str, str | set[str] | list[str]]") -> "list[str]":
     """Garbage-collect the artifact root: for every name in `keep`
     (name → current fingerprint, or a set/list of them when an
     artifact family is parameter-keyed — e.g. q2_response and
-    owner_token_tree carry one live fingerprint PER CONTRACT under one
+    q2_entry_store carry one live fingerprint PER CONTRACT under one
     name prefix), delete that name's OTHER fingerprints — superseded
     corpus versions with no readers — plus any orphaned `.tmp.*` build
     directories (a builder that died mid-write). Names not in `keep`

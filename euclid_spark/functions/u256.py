@@ -347,8 +347,10 @@ def u256_carry_hex(s0: Column, s1: Column, s2: Column, s3: Column) -> Column:
     first), each possibly exceeding 2⁶⁴ (the limb-wise aggregation
     trick: SUM each limb independently — map-side combinable — then
     carry-normalize ONCE here, mod 2²⁵⁶). Shared by A13's total fold
-    (operators/merkle._owner_rewards_from_leaves) and the streaming
-    reward view (the stream_erc20_rewards row of streaming/faces.py)."""
+    (operators/euclid.erc20_weighted_sum_u256), the A29 all-owner tree
+    answer (operators/range_tree.erc20_range_tree_reward) and the
+    streaming reward view (the stream_erc20_rewards row of
+    streaming/faces.py)."""
     two64 = F.lit(str(2**64)).cast(DEC38)
     limbs: list[Column] = []
     carry: Column = F.lit(0).cast(DEC38)

@@ -92,8 +92,8 @@ ORACLES = {
 
 def verifiable_response_alt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A20 with contract='click': the single-owner VERIFIABLE RESPONSE
-    answered from THAT contract's OWN owner-token tree artifact
-    (merkle._owner_token_tree is fingerprint-keyed by contract, r11) —
+    answered from THAT contract's OWN Q2 entry store (the store of
+    range_tree.Q2_KEY_TREE is fingerprint-keyed by contract) —
     the pinned-response path gate-checked end to end for a non-default
     contract, so a second contract's published response can never
     collide with the default's (VERDICT r10 #4)."""

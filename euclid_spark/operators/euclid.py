@@ -23,7 +23,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from euclid_spark import artifacts
-from euclid_spark.catalog import cached_parquet, load_events
+from euclid_spark.catalog import (
+    _ntz_lit,
+    _path_signature,
+    cached_parquet,
+    load_events,
+    local_frame,
+)
 from euclid_spark.functions.hashing import DIGEST_PRIME, MIX, digest_agg, digest_term
 from euclid_spark.monoid import Monoid
 
@@ -156,6 +162,78 @@ def _range_provenance(
         F.min("event_id").alias("min_block"),
         F.max("event_id").alias("max_block"),
         digest_agg(term).alias("range_digest"),
+    )
+
+
+# events path signature → its pinned window (`pinned_window`)
+_WINDOWS: "dict[tuple, tuple]" = {}
+
+
+def pinned_window(
+    spark: SparkSession, sf_dir: str
+) -> "tuple[int | None, int | None, int | None]":
+    """(min_block, max_block, range_digest) of the pinned range
+    [T_MIN, T_MAX) — `_range_provenance`'s values as Python scalars,
+    all None when no event falls in it.
+
+    The pinned verifiable responses (A20/A21/A23/A24) and A13 read the
+    owner-clustered entry stores over the event_id window [min_block,
+    max_block] in place of the ts range. That is exact under the
+    CORPUS RULE, the reference's own (blocks are numbered in time
+    order), which the same one-row aggregate checks: every event
+    before T_MIN has a smaller event_id, and every event from T_MAX on
+    a larger one, than any event in the range, and no event lacks its
+    ts (nor, in the range, its event_id). So every event whose
+    event_id lies in the window has its ts in the range. A corpus that
+    breaks the rule raises ValueError rather than answer wrongly.
+    Memoized per corpus version on the events path signature, as
+    `catalog.cached_parquet` memoizes readers."""
+    path = f"{sf_dir}/events.parquet"
+    sig = _path_signature(path)
+    if sig is not None and sig in _WINDOWS:
+        return _WINDOWS[sig]
+    eid, ts = F.col("event_id"), F.col("ts")
+    lo, hi = _ntz_lit(T_MIN), _ntz_lit(T_MAX)
+    inside = (ts >= lo) & (ts < hi)
+    min_b, max_b, digest, before, after, unplaced = cached_parquet(
+        spark, path
+    ).agg(
+        F.min(F.when(inside, eid)),
+        F.max(F.when(inside, eid)),
+        digest_agg(F.when(inside, digest_term(eid, F.col("user_id")))),
+        F.max(F.when(ts < lo, eid)),
+        F.min(F.when(ts >= hi, eid)),
+        F.count(F.when(ts.isNull() | (inside & eid.isNull()), 1)),
+    ).collect()[0]
+    if unplaced or min_b is not None and (
+        (before is not None and before >= min_b)
+        or (after is not None and after <= max_b)
+    ):
+        raise ValueError(
+            f"{path} breaks the corpus rule the pinned faces read by: "
+            f"events outside [{T_MIN}, {T_MAX}) must have event_ids "
+            f"outside [{min_b}, {max_b}] (max before: {before}, min "
+            f"after: {after}) and none may lack its ts ({unplaced} do)"
+        )
+    window = (min_b, max_b, digest)
+    if sig is not None:
+        _WINDOWS[sig] = window
+    return window
+
+
+def pinned_entries(
+    spark: SparkSession, sf_dir: str, tree, window: tuple, contract=None,
+    rate=None,
+) -> "DataFrame | None":
+    """The rows of `tree`'s (a keyed range_tree.TileTree's) entry store
+    in the event_id span of `window` (`pinned_window`'s) — the pinned
+    range's entries under the corpus rule — or None when the window is
+    empty."""
+    min_b, max_b, _ = window
+    if min_b is None:
+        return None
+    return tree.frame(spark, sf_dir, contract, rate, store=True).filter(
+        F.col("event_id").between(min_b, max_b)
     )
 
 
@@ -582,20 +660,6 @@ def erc20_leaf_rows(
     )
 
 
-def erc20_entry_rows(
-    spark: SparkSession,
-    sf_dir: str,
-    rewards_rate: "int | None" = None,
-    contract: "str | None" = None,
-) -> DataFrame:
-    """Per-entry ERC-20 u256 leaf rewards over the in-range entry scan
-    of ONE contract — shared leaf stage of A13 (which limb-sums it per
-    owner) and the ERC-20 verifiable response (which commits the
-    entries to a Merkle tree; operators/merkle.py)."""
-    ev = _qualifying(spark, sf_dir, contract=contract)
-    return erc20_leaf_rows(ev, rewards_rate)
-
-
 def erc20_weighted_sum_u256(
     spark: SparkSession,
     sf_dir: str,
@@ -629,23 +693,34 @@ def erc20_weighted_sum_u256(
     limb-wise SUMs are map-side combinable, so the shuffle carries one
     partial per (owner, partition), not rows.
 
-    r7: the per-entry leaf outputs are a SERVED ARTIFACT shared with
-    the ERC-20 verifiable-response faces (merkle.erc20_entry_leaves —
-    the reference's own shape: the leaf proofs are committed storage,
-    queries aggregate them). The Arrow leaf pass runs once per corpus
-    version at artifact build; this query is then the pure-column
-    limb fold (hex → conv → decimal limb sums + one carry
-    normalization mod 2²⁵⁶, merkle._owner_rewards_from_leaves) —
-    deterministic, so serve ≡ recompute, asserted by the same HUGEINT
+    The entries are the ERC-20 tree's entry store (the Arrow leaf pass
+    runs once per corpus version, at its build), read over the pinned
+    window (`pinned_entries`); this query is then the tree's `leaf`
+    per owner — the four limb-wise decimal sums — and one carry
+    normalization mod 2²⁵⁶ (`u256_carry_hex`), as
+    `range_tree.erc20_range_tree_reward` finishes its all-owner answer.
+    Deterministic, so serve ≡ recompute, asserted by the same HUGEINT
     oracle."""
-    from euclid_spark.operators.merkle import (
-        _owner_rewards_from_leaves,
-        erc20_entry_leaves,
+    from euclid_spark.functions.u256 import u256_carry_hex
+    from euclid_spark.operators.range_tree import ERC20_REWARD_TREE
+
+    rows = pinned_entries(
+        spark, sf_dir, ERC20_REWARD_TREE, pinned_window(spark, sf_dir),
+        contract, rewards_rate,
+    )
+    if rows is None:
+        return local_frame(spark, [], _A13_DDL)
+    return ERC20_REWARD_TREE.leaf(rows, ["owner"]).select(
+        "owner",
+        u256_carry_hex(
+            F.col("s0"), F.col("s1"), F.col("s2"), F.col("s3")
+        ).alias("reward_hex"),
+        F.col("zs").alias("n_zero_supply"),
+        F.col("of").alias("n_overflow"),
     )
 
-    return _owner_rewards_from_leaves(
-        erc20_entry_leaves(spark, sf_dir, rewards_rate, contract=contract)
-    )
+
+_A13_DDL = "owner long, reward_hex string, n_zero_supply long, n_overflow long"
 
 
 def block_linking(spark: SparkSession, sf_dir: str) -> DataFrame:

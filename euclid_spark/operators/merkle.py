@@ -51,7 +51,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from euclid_spark import artifacts
-from euclid_spark.catalog import cached_parquet
+from euclid_spark.catalog import cached_parquet, local_frame
 
 
 # Supports groups up to 2^16 = 65,536 entries; raise for bigger groups
@@ -87,6 +87,18 @@ def _parents(cur: Column) -> Column:
         )
 
     return F.filter(F.transform(cur, parent), lambda y: y.isNotNull())
+
+
+def _tree(level0: Column, folds: Column) -> Column:
+    """One group's tree as an array of levels, level k its element k:
+    `level0`, an array of (pos, node_hash) sorted by pos, and `folds`
+    levels above it, each folded from the one below by `_parents` (the
+    repeated zeros only count the folds)."""
+    return F.aggregate(
+        F.array_repeat(F.lit(0), folds),
+        F.array(level0),
+        lambda acc, _: F.concat(acc, F.array(_parents(F.element_at(acc, -1)))),
+    )
 
 
 def merkle_levels(
@@ -131,12 +143,9 @@ def merkle_levels(
                 f"oracle bound LEVELS={LEVELS}; raise merkle.LEVELS so the "
                 "chained-CTE oracles stay in sync"
             )
-    # level k of the group is element k of `tree`; the repeated zeros
-    # only count the folds
-    tree = F.aggregate(
-        F.array_repeat(F.lit(0), levels),
-        F.array(F.array_sort(F.collect_list(F.struct("pos", "node_hash")))),
-        lambda acc, _: F.concat(acc, F.array(_parents(F.element_at(acc, -1)))),
+    tree = _tree(
+        F.array_sort(F.collect_list(F.struct("pos", "node_hash"))),
+        F.lit(levels),
     )
     nodes = (
         lv.groupBy(*keys)
@@ -167,6 +176,37 @@ def merkle_levels_local(
         k += 1
         nodes.update(((k, p), h) for p, h in enumerate(lvl))
     return nodes, k
+
+
+def _path_steps(
+    nodes: "dict[tuple[int, int], str]", depth: int, pos: int, off: int = 0
+) -> "list[str]":
+    """The A18 opening steps of node `pos` of level 0 through levels
+    0..depth-1 of `nodes` (`merkle_levels_local`'s): the sibling of its
+    ancestor at each level, tagged `<off + level><side>`, and no step
+    at a promotion (absent sibling)."""
+    steps = []
+    for j in range(depth):
+        anc = pos >> j
+        h = nodes.get((j, anc ^ 1))
+        if h is not None:
+            steps.append(f"{off + j}{'R' if anc % 2 == 0 else 'L'}:{h}")
+    return steps
+
+
+def _openings(hashes: "list[str]", L: int) -> "list[tuple[int, str, str, str]]":
+    """(leaf_pos, leaf_hash, path, root) of the first L leaves of one
+    group, `hashes` its leaves in pos order: `merkle_opening_paths` for
+    one group on the driver — the tree folded by `merkle_levels_local`,
+    each path spelled by `_path_steps`."""
+    if not hashes:
+        return []
+    nodes, depth = merkle_levels_local(hashes)
+    root = nodes[(depth, 0)]
+    return [
+        (p, hashes[p], "/".join(_path_steps(nodes, depth, p)), root)
+        for p in range(min(L, len(hashes)))
+    ]
 
 
 def merkle_roots(
@@ -404,6 +444,103 @@ def _oracle_merkle(levels: int = LEVELS) -> str:
     return merkle_proof_sql(_CUSTOMER_L0, "c_custkey", levels)
 
 
+# --- the pinned-range verifiable responses (A20/A21, A23/A24) ---------------
+#
+# Each family's leaves are the rows of its keyed tile tree's entry store
+# (range_tree.Q2_KEY_TREE, range_tree.ERC20_REWARD_TREE) in the pinned
+# window's event_id span, the pinned range's entries under the corpus
+# rule (euclid.pinned_window): Q2 an owner's distinct keys by token_id,
+# ERC-20 its entries by event_id with the reward hex spelled from the
+# limbs — the in-cell trees' leaves, ranked over the window instead of
+# a cell. No tree is stored: one owner's is folded on the driver from
+# one bounded read, every owner's in one grouped pass (_window_openings).
+
+_PROV = ("min_block", "max_block", "range_digest")
+_Q2_DDL = (
+    "token_id long, leaf_pos int, leaf_hash string, path string, "
+    "root string, min_block long, max_block long, range_digest long"
+)
+_ERC20_DDL = (
+    "event_id long, entry_reward_hex string, leaf_pos int, leaf_hash "
+    "string, path string, root string, reward_hex string, n_zero_supply "
+    "long, n_overflow long, min_block long, max_block long, range_digest "
+    "long, rewards_rate int"
+)
+
+
+def _owner_window(
+    spark: SparkSession, sf_dir: str, tree, owner: int, window: tuple,
+    cols: "list[str]", contract=None, rate=None,
+) -> "list[dict]":
+    """`owner`'s rows of `tree`'s entry store in the event_id span of
+    `window` (euclid.pinned_window's), `cols` of them: one
+    `artifacts.read_rows`, bounded to the owner and the window; none
+    when the window is empty."""
+    min_b, max_b, _ = window
+    if min_b is None:
+        return []
+    return artifacts.read_rows(
+        tree.path(spark, sf_dir, contract, rate, store=True),
+        [[("owner", "=", owner), ("event_id", ">=", min_b),
+          ("event_id", "<=", max_b)]],
+        cols,
+    )
+
+
+def _window_openings(
+    entries: DataFrame, entry_cols: "list[str]", leaf_hash: Column, L: int
+) -> DataFrame:
+    """(owner, *entry_cols, leaf_pos, leaf_hash, path, root) of the
+    first L leaves of every owner's tree over the distinct rows of
+    `entries` (owner, *entry_cols, …), its leaves ranked by
+    `entry_cols`, the first one deciding: one grouped pass — each
+    owner's distinct leaves collected and sorted (the one shuffle), its
+    tree folded in the row up to its own root (`_tree`, merkle_levels'
+    fold), and the first L leaves' paths read off its levels in the A18
+    wire format — level j's array index is its pos, since the leaves'
+    are 0..n-1. Like merkle_levels, an owner of more than 2^LEVELS
+    leaves raises instead of outgrowing the chained-CTE oracles."""
+    leaves = F.array_sort(
+        F.collect_set(F.struct(*entry_cols, leaf_hash.alias("h")))
+    )
+    n = F.size("lv")
+    depth = F.when(
+        n > 2**LEVELS, F.raise_error(F.lit(f"an owner has over 2^{LEVELS} leaves"))
+    ).otherwise(F.when(n > 1, F.ceil(F.log2(n))).otherwise(0)).cast("int")
+    level0 = F.transform(
+        "lv", lambda x, i: F.struct(i.alias("pos"), x["h"].alias("node_hash"))
+    )
+    # the sibling of the leaf's level-j ancestor, when it is not promoted
+    sib = "get(tree[j], shiftright(p, j) ^ 1)"
+    path = F.expr(
+        f"array_join(transform(filter(sequence(0, d - 1), j -> d > 0 AND "
+        f"{sib} IS NOT NULL), j -> concat(j, IF(shiftright(p, j) % 2 = 0, "
+        f"'R', 'L'), ':', {sib}.node_hash)), '/')"
+    )
+    return (
+        entries.groupBy("owner").agg(leaves.alias("lv"))
+        .select("owner", "lv", depth.alias("d"))
+        .select("owner", "lv", "d", _tree(level0, F.col("d")).alias("tree"))
+        .select(
+            "owner", "d", "tree",
+            F.posexplode(F.slice("lv", 1, L)).alias("p", "x"),
+        )
+        .select(
+            "owner",
+            *[F.col("x")[c].alias(c) for c in entry_cols],
+            F.col("p").alias("leaf_pos"),
+            F.col("x.h").alias("leaf_hash"),
+            path.alias("path"),
+            F.element_at(F.element_at("tree", -1), 1)["node_hash"].alias("root"),
+        )
+    )
+
+
+def _prov_cols(window: tuple) -> "list[Column]":
+    """The window's provenance binding as literal columns."""
+    return [F.lit(v).cast("long").alias(c) for c, v in zip(_PROV, window)]
+
+
 def verifiable_query_response(
     spark: SparkSession,
     sf_dir: str,
@@ -427,22 +564,21 @@ def verifiable_query_response(
       - every row carries the provenance binding (min_block, max_block,
         range_digest — A3's public inputs).
 
-    Composition shape (the C25/A19 pattern): the distinct-key
-    aggregation, the one-pass tree build, and the path join all key
-    on the same owner/token columns; provenance is a broadcast one-row
-    aggregate; the top-L is ORDER BY + LIMIT (TakeOrderedAndProject).
-    Oracle: the A3 result CTE plugged into the generic chained-CTE
-    merkle construction (merkle_proof_sql), provenance cross-joined.
+    Answered on the driver, as the range responses are: one
+    `artifacts.read_rows` of the owner's rows of the contract's Q2
+    entry store in the pinned window, the tree folded over its
+    distinct keys, the paths in the A18 wire format, one local frame —
+    no Spark job runs until it is acted on. Oracle: the A3 result CTE
+    plugged into the generic chained-CTE merkle construction
+    (merkle_proof_sql), provenance cross-joined.
 
     r9: pass (b_min, b_max) to get the ARBITRARY-RANGE verifiable
     response instead — answered in O(log range + |result|) from the
     per-tile subtree-root commitments (operators/range_response.py,
     which documents the element/fold schema that response carries)."""
-    from euclid_spark.operators.euclid import (
-        OWNER,
-        TOP_L,
-        _range_provenance,
-    )
+    from euclid_spark.operators.euclid import OWNER, TOP_L, pinned_window
+    from euclid_spark.operators.range_response import _leaf_hex
+    from euclid_spark.operators.range_tree import Q2_KEY_TREE
 
     if b_min is not None or b_max is not None:
         from euclid_spark.operators.range_response import q2_range_response
@@ -453,36 +589,17 @@ def verifiable_query_response(
         )
     owner = OWNER if owner is None else int(owner)
     L = TOP_L if L is None else int(L)
-    # the single-owner response is a FILTER of the all-owner tree
-    # artifact (A21's store): same leaf numbering, same per-owner
-    # subtree, so the served tree answers both faces — and any
-    # (owner, L) parameterization reads the same stored tree
-    leaves, nodes, depth = _owner_token_tree(spark, sf_dir, contract)
-    owner_leaves = leaves.filter(F.col("group_key") == owner)
-    owner_nodes = nodes.filter(F.col("group_key") == owner)
-    # reveal the first L only — leaf numbering IS the canonical token
-    # order, so `pos < L` selects exactly the rows the orderBy+limit
-    # below keeps. The limit itself CANNOT push through the path
-    # aggregation (Catalyst pushes filters on grouping keys, not
-    # limits), so without this predicate the ×depth explode + sibling
-    # join built openings for the owner's whole token set; with it the
-    # leaf scan prunes to pos < L (PushedFilters, plans/r15).
-    paths = merkle_opening_paths(
-        owner_leaves.filter(F.col("pos") < L),
-        entry_cols=["token_id"], nodes=owner_nodes, depth=depth,
-    )
-    revealed = paths.orderBy("token_id").limit(L)
-    return revealed.crossJoin(
-        F.broadcast(_range_provenance(spark, sf_dir))
-    ).select(
-        "token_id",
-        "leaf_pos",
-        "leaf_hash",
-        "path",
-        "root",
-        "min_block",
-        "max_block",
-        "range_digest",
+    window = pinned_window(spark, sf_dir)
+    toks = sorted({
+        r["token_id"] for r in _owner_window(
+            spark, sf_dir, Q2_KEY_TREE, owner, window, ["token_id"], contract
+        )
+    })
+    hashes = [_leaf_hex("q2", {"token_id": t}) for t in toks]
+    return local_frame(
+        spark,
+        [(toks[p], p, *op, *window) for p, *op in _openings(hashes, L)],
+        _Q2_DDL,
     )
 
 
@@ -513,83 +630,6 @@ def _oracle_verifiable_response(contract: "str | None" = None) -> str:
     """
 
 
-def _owner_clustered(
-    spark: SparkSession, sf_dir: str, df: DataFrame, *cols: str
-) -> DataFrame:
-    """An owner-keyed store's write form: equal-width group_key (owner)
-    buckets over the events' user_id span, each file sorted by
-    (group_key, *cols) (`artifacts.clustered`); its `serve_frame` writes
-    it `artifacts.ROW_CAPPED`."""
-    from euclid_spark.operators.range_tree import _events_footer
-
-    return artifacts.clustered(
-        spark, df, "group_key", _events_footer(spark, sf_dir, "user_id"), *cols
-    )
-
-
-# keyed by contract, the request axis
-OWNER_TOKEN_LEAVES = artifacts.Artifact(
-    "owner_token_leaves", "events", dict(op="owner_token_tree", layout="owner_v3")
-)
-OWNER_TOKEN_NODES = artifacts.Artifact(
-    "owner_token_nodes", "events", dict(op="owner_token_tree", layout="owner_v3")
-)
-
-
-def _owner_token_tree(
-    spark: SparkSession, sf_dir: str, contract: "str | None" = None
-):
-    """The all-owner token-set Merkle tree (leaves + levels) as a
-    fingerprint-keyed DISK ARTIFACT — the stored state DB both
-    response faces (A20 single-owner, A21 all-owner) answer from;
-    only the path joins run live. Keyed by CONTRACT like every other
-    per-contract store (each contract has its own storage DB —
-    query2/api.rs CircuitInput binds which one). Returns
-    (leaves, nodes, depth)."""
-    from euclid_spark.operators.euclid import CONTRACT, q2_distinct_keys
-
-    contract = CONTRACT if contract is None else contract
-    # owner-clustered layout (the q2_key_tiles story): both stores are
-    # written in owner buckets sorted on group_key (`_owner_clustered`),
-    # so the single-owner faces' group_key filter prunes parquet row
-    # groups — a one-owner response reads that owner's slice, not every
-    # tree
-
-    def build_leaves() -> DataFrame:
-        keys = q2_distinct_keys(spark, sf_dir, contract=contract).filter(
-            F.col("token_id").isNotNull()
-        )
-        w = Window.partitionBy("owner").orderBy("token_id")
-        return _owner_clustered(
-            spark, sf_dir,
-            keys.select(
-                F.col("owner").alias("group_key"),
-                "token_id",
-                (F.row_number().over(w) - 1).alias("pos"),
-                F.sha2(F.col("token_id").cast("string"), 256).alias(
-                    "node_hash"
-                ),
-            ),
-            "pos",
-        )
-
-    leaves = artifacts.serve_frame(
-        spark, OWNER_TOKEN_LEAVES.path(sf_dir, contract=contract), build_leaves,
-        artifacts.ROW_CAPPED,
-    )
-    nodes_at = OWNER_TOKEN_NODES.path(sf_dir, contract=contract)
-    nodes = artifacts.serve_frame(
-        spark,
-        nodes_at,
-        lambda: _owner_clustered(
-            spark, sf_dir, merkle_levels(leaves)[0], "level", "pos"
-        ),
-        artifacts.ROW_CAPPED,
-    )
-    depth = _served_depth(nodes_at)
-    return leaves, nodes, depth
-
-
 def batch_verifiable_responses(
     spark: SparkSession,
     sf_dir: str,
@@ -600,44 +640,35 @@ def batch_verifiable_responses(
     revealed tokens each carrying its opening path to that OWNER'S OWN
     commitment root over their full in-range token set, plus the range
     provenance. This is the reference's batched revelation surface
-    made verifiable end-to-end — the multi-group case the generic
-    merkle machinery (group_key = owner) exists for.
+    made verifiable end-to-end.
 
-    The revelation bound needs no window: leaf_pos IS the canonical
-    rank (leaves are numbered in token order per owner), so revealed =
-    leaf_pos < TOP_L — a row-local filter after the path join.
-
-    The per-owner token TREE (leaves + levels) is a fingerprint-keyed
-    DISK ARTIFACT like the customer tree: the reference STORES its
-    state DB and answers proofs as lookups (mrp2-utils/src/
-    merkle_tree/mod.rs); only the path join runs live."""
-    from euclid_spark.operators.euclid import TOP_L, _range_provenance
+    The Q2 entry store's window read in Spark, its distinct keys per
+    owner folded into the owner's tree in one grouped pass, and the
+    first L keys — leaf_pos IS the canonical rank — opened in the same
+    row (`_window_openings`)."""
+    from euclid_spark.operators.euclid import (
+        TOP_L,
+        pinned_entries,
+        pinned_window,
+    )
+    from euclid_spark.operators.range_response import q2_leaf_hash
+    from euclid_spark.operators.range_tree import Q2_KEY_TREE
 
     L = TOP_L if L is None else int(L)
-    leaves, nodes, depth = _owner_token_tree(spark, sf_dir)
-    # revealed = leaf_pos < L, and leaf_pos IS the stored pos column:
-    # filter the leaves at the source. Catalyst already pushes the
-    # post-aggregation leaf_pos filter through the groupBy + explode
-    # (it is a grouping-key predicate), so this is shape-equivalent —
-    # stated explicitly so the n_owners·L bound on the path build is
-    # structural, not an optimizer obligation
-    paths = merkle_opening_paths(
-        leaves.filter(F.col("pos") < L),
-        entry_cols=["token_id"], nodes=nodes, depth=depth,
-    )
-    revealed = paths
-    return revealed.crossJoin(
-        F.broadcast(_range_provenance(spark, sf_dir))
+    window = pinned_window(spark, sf_dir)
+    ents = pinned_entries(spark, sf_dir, Q2_KEY_TREE, window)
+    if ents is None:
+        return local_frame(spark, [], "owner long, " + _Q2_DDL)
+    return _window_openings(
+        ents, ["token_id"], q2_leaf_hash(F.col("token_id")), L
     ).select(
-        F.col("group_key").alias("owner"),
+        "owner",
         "token_id",
         "leaf_pos",
         "leaf_hash",
         "path",
         "root",
-        "min_block",
-        "max_block",
-        "range_digest",
+        *_prov_cols(window),
     )
 
 
@@ -664,135 +695,15 @@ def _oracle_batch_responses() -> str:
     """
 
 
-# the ERC-20 entry tree's stores and its published response share one
-# key; rate AND contract are baked into the leaf rewards (exactly as the
-# reference bakes them into the leaf proofs — each contract has its own
-# storage DB), so each (rate, contract) keys its own artifacts
-_ERC20_TREE = dict(op="erc20_entry_tree", v=2, layout="owner_v3")
-ERC20_ENTRY_LEAVES = artifacts.Artifact("erc20_entry_leaves", "events", _ERC20_TREE)
-ERC20_ENTRY_NODES = artifacts.Artifact("erc20_entry_nodes", "events", _ERC20_TREE)
-ERC20_RESPONSE = artifacts.Artifact("erc20_response", "events", _ERC20_TREE)
-
-
-def _erc20_axes(
-    rewards_rate: "int | None" = None, contract: "str | None" = None
-) -> dict:
-    """The (rate, contract) fingerprint axes, defaults filled in."""
-    from euclid_spark.operators.euclid import CONTRACT, REWARDS_RATE
-
-    return {
-        "rate": REWARDS_RATE if rewards_rate is None else int(rewards_rate),
-        "contract": CONTRACT if contract is None else contract,
-    }
-
-
-def erc20_entry_leaves(
-    spark: SparkSession,
-    sf_dir: str,
-    rewards_rate: "int | None" = None,
-    contract: "str | None" = None,
-) -> DataFrame:
-    """The per-owner ERC-20 CONTRIBUTING-ENTRY leaf table as a
-    fingerprint-keyed DISK ARTIFACT. Each leaf commits one in-range
-    purchase entry of its owner: sha256(event_id ':' entry_reward_hex),
-    where entry_reward_hex is the leaf circuit's own output
-    ⌊balance·rate/supply⌋ (query_erc20/storage/leaf.rs:88-106) — the
-    commitment binds the per-entry REWARDS, exactly as the reference's
-    leaf proof does. Canonical pos = event_id (block) order per owner.
-    zs/of ride along uncommitted (owner-level audit counters): both the
-    response faces and A13's total fold read them from here, so the
-    Arrow u256 leaf stage runs once at ARTIFACT BUILD, never per
-    query."""
-    from euclid_spark.functions.u256 import u256_to_hex
-    from euclid_spark.operators.euclid import erc20_entry_rows
-
-    def build_leaves() -> DataFrame:
-        rows = erc20_entry_rows(spark, sf_dir, rewards_rate, contract)
-        entry_hex = u256_to_hex(
-            (F.col("l3"), F.col("l2"), F.col("l1"), F.col("l0"))
-        )
-        w = Window.partitionBy("owner").orderBy("event_id")
-        out = rows.select(
-            F.col("owner").alias("group_key"),
-            "event_id",
-            entry_hex.alias("entry_reward_hex"),
-            "zs",
-            "of",
-            (F.row_number().over(w) - 1).alias("pos"),
-        ).withColumn(
-            "node_hash",
-            F.sha2(
-                F.concat_ws(
-                    ":", F.col("event_id").cast("string"), "entry_reward_hex"
-                ),
-                256,
-            ),
-        )
-        # owner-clustered write: single-owner faces prune row groups
-        return _owner_clustered(spark, sf_dir, out, "pos")
-
-    return artifacts.serve_frame(
-        spark,
-        ERC20_ENTRY_LEAVES.path(sf_dir, **_erc20_axes(rewards_rate, contract)),
-        build_leaves,
-        artifacts.ROW_CAPPED,
-    )
-
-
-def _erc20_entry_tree(
-    spark: SparkSession,
-    sf_dir: str,
-    rewards_rate: "int | None" = None,
-    contract: "str | None" = None,
-):
-    """Leaves + all tree levels (the query_erc20 twin of
-    _owner_token_tree). Returns (leaves, nodes, depth)."""
-    leaves = erc20_entry_leaves(spark, sf_dir, rewards_rate, contract)
-    nodes_at = ERC20_ENTRY_NODES.path(
-        sf_dir, **_erc20_axes(rewards_rate, contract)
-    )
-    nodes = artifacts.serve_frame(
-        spark,
-        nodes_at,
-        lambda: _owner_clustered(
-            spark, sf_dir, merkle_levels(leaves)[0], "level", "pos"
-        ),
-        artifacts.ROW_CAPPED,
-    )
-    depth = _served_depth(nodes_at)
-    return leaves, nodes, depth
-
-
-def _owner_rewards_from_leaves(leaves: DataFrame) -> DataFrame:
-    """Per-owner TOTAL u256 reward folded from the served entry leaves
-    — pure column expressions (hex → 4 decimal limbs via conv, limb-
-    wise map-side-combinable sums, one carry normalization mod 2²⁵⁶),
-    value-identical to A13's aggregate because the leaf hex IS the A13
-    leaf output. This keeps the query path free of the Arrow u256
-    stage: Python runs once at artifact build, never per response."""
-    from pyspark.sql.types import DecimalType
-
-    from euclid_spark.functions.u256 import u256_carry_hex
-
-    DEC38 = DecimalType(38, 0)
-    # entry_reward_hex concatenates limbs HIGH→LOW (u256_to_hex), so
-    # substring 1..16 is l3 (highest) … 49..64 is l0 (lowest)
-    limb = lambda i: F.conv(  # noqa: E731
-        F.substring("entry_reward_hex", 1 + 16 * (3 - i), 16), 16, 10
-    ).cast(DEC38)
-    agged = leaves.groupBy(F.col("group_key").alias("owner")).agg(
-        *[F.sum(limb(i)).alias(f"s{i}") for i in range(4)],
-        F.sum("zs").cast("long").alias("n_zero_supply"),
-        F.sum("of").cast("long").alias("n_overflow"),
-    )
-    return agged.select(
-        "owner",
-        u256_carry_hex(
-            F.col("s0"), F.col("s1"), F.col("s2"), F.col("s3")
-        ).alias("reward_hex"),
-        "n_zero_supply",
-        "n_overflow",
-    )
+# the published ERC-20 response's key: rate AND contract are baked into
+# the leaf rewards (exactly as the reference bakes them into the leaf
+# proofs — each contract has its own storage DB), so each (rate,
+# contract) keys its own response; the params are those the entry tree
+# it was once served from carried, kept so its path stays put
+ERC20_RESPONSE = artifacts.Artifact(
+    "erc20_response", "events",
+    dict(op="erc20_entry_tree", v=2, layout="owner_v3"),
+)
 
 
 def erc20_verifiable_response(
@@ -821,9 +732,11 @@ def erc20_verifiable_response(
         limb-sum) and the public-input binding
         (min_block, max_block, range_digest, rewards_rate).
 
-    The single-owner response is a FILTER of the all-owner entry-tree
-    artifact (per-owner subtrees share nothing), so the served tree
-    answers both this and the batched face. Oracle: the per-entry
+    Answered on the driver like A20: one `artifacts.read_rows` of the
+    owner's rows of the ERC-20 entry store in the pinned window, the
+    leaves in block order with their reward hex, the tree and the
+    paths folded as A20 folds them, and the owner's total
+    `ERC20_REWARD_TREE.fold` of the same rows. Oracle: the per-entry
     HUGEINT leaf CTE plugged into the leaf-pluggable merkle_proof_sql
     + A13's reward oracle + the provenance cross join.
 
@@ -834,8 +747,10 @@ def erc20_verifiable_response(
         OWNER,
         REWARDS_RATE,
         TOP_L,
-        _range_provenance,
+        pinned_window,
     )
+    from euclid_spark.operators.range_response import _leaf_hex, _payload
+    from euclid_spark.operators.range_tree import ERC20_REWARD_TREE
 
     if b_min is not None or b_max is not None:
         from euclid_spark.operators.range_response import (
@@ -849,39 +764,27 @@ def erc20_verifiable_response(
     owner = OWNER if owner is None else int(owner)
     L = TOP_L if L is None else int(L)
     rate = REWARDS_RATE if rewards_rate is None else int(rewards_rate)
-    leaves, nodes, depth = _erc20_entry_tree(spark, sf_dir, rewards_rate, contract)
-    owner_leaves = leaves.filter(F.col("group_key") == owner)
-    # leaf numbering IS the canonical (block-order) rank — no window.
-    # pos < L at the source is shape-equivalent to filtering leaf_pos
-    # after the path build (Catalyst pushes grouping-key predicates),
-    # stated explicitly so the L-bound is structural; the total-reward
-    # branch below still folds the owner's FULL leaf set
-    paths = merkle_opening_paths(
-        owner_leaves.filter(F.col("pos") < L).drop("zs", "of"),
-        entry_cols=["event_id", "entry_reward_hex"],
-        nodes=nodes.filter(F.col("group_key") == owner),
-        depth=depth,
+    window = pinned_window(spark, sf_dir)
+    rows = sorted(
+        _owner_window(
+            spark, sf_dir, ERC20_REWARD_TREE, owner, window,
+            ["event_id", "l0", "l1", "l2", "l3", "zs", "of"], contract, rate,
+        ),
+        key=lambda r: r["event_id"],
     )
-    revealed = paths
-    reward = _owner_rewards_from_leaves(owner_leaves).drop("owner")
-    return (
-        revealed.crossJoin(F.broadcast(reward))
-        .crossJoin(F.broadcast(_range_provenance(spark, sf_dir)))
-        .select(
-            "event_id",
-            "entry_reward_hex",
-            "leaf_pos",
-            "leaf_hash",
-            "path",
-            "root",
-            "reward_hex",
-            "n_zero_supply",
-            "n_overflow",
-            "min_block",
-            "max_block",
-            "range_digest",
-            F.lit(rate).alias("rewards_rate"),
-        )
+    if not rows:
+        return local_frame(spark, [], _ERC20_DDL)
+    reward_hex, n_zero_supply, n_overflow, _ = ERC20_REWARD_TREE.fold([], rows)
+    leaves = [_payload("erc20", r) for r in rows]
+    hashes = [_leaf_hex("erc20", lf) for lf in leaves]
+    return local_frame(
+        spark,
+        [
+            (leaves[p]["event_id"], leaves[p]["entry_reward_hex"], p, *op,
+             reward_hex, n_zero_supply, n_overflow, *window, rate)
+            for p, *op in _openings(hashes, L)
+        ],
+        _ERC20_DDL,
     )
 
 
@@ -895,49 +798,50 @@ def erc20_batch_verifiable_responses(
     family): per owner, the first-L contributing entries in block order
     each with its opening path to that OWNER'S commitment root, the
     owner's total u256 reward, and the shared range/rate binding. The
-    reward join keys on the same owner column the tree is grouped by;
-    provenance is one broadcast row."""
+    ERC-20 entry store's window read in Spark and folded per owner in
+    one grouped pass (`_window_openings`); the totals are A13's frame,
+    joined on the owner."""
     from euclid_spark.operators.euclid import (
         REWARDS_RATE,
         TOP_L,
-        _range_provenance,
+        erc20_weighted_sum_u256,
+        pinned_entries,
+        pinned_window,
     )
+    from euclid_spark.operators.range_response import (
+        erc20_entry_hex,
+        erc20_leaf_hash,
+    )
+    from euclid_spark.operators.range_tree import ERC20_REWARD_TREE
 
     L = TOP_L if L is None else int(L)
     rate = REWARDS_RATE if rewards_rate is None else int(rewards_rate)
-    leaves, nodes, depth = _erc20_entry_tree(spark, sf_dir, rewards_rate)
-    # pos < L at the source (see A23): openings are built for the
-    # n_owners·L revealed rows only — shape-equivalent to the prior
-    # post-build filter, stated structurally; the per-owner reward
-    # fold below still reads every leaf
-    paths = merkle_opening_paths(
-        leaves.filter(F.col("pos") < L).drop("zs", "of"),
-        entry_cols=["event_id", "entry_reward_hex"],
-        nodes=nodes, depth=depth,
+    window = pinned_window(spark, sf_dir)
+    ents = pinned_entries(spark, sf_dir, ERC20_REWARD_TREE, window, rate=rate)
+    if ents is None:
+        return local_frame(spark, [], "owner long, " + _ERC20_DDL)
+    paths = _window_openings(
+        ents.select(
+            "owner", "event_id", erc20_entry_hex().alias("entry_reward_hex")
+        ),
+        ["event_id", "entry_reward_hex"],
+        erc20_leaf_hash(F.col("event_id"), F.col("entry_reward_hex")),
+        L,
     )
-    revealed = paths
-    rewards = _owner_rewards_from_leaves(leaves)
-    return (
-        revealed.join(
-            rewards, revealed.group_key == rewards.owner
-        )
-        .crossJoin(F.broadcast(_range_provenance(spark, sf_dir)))
-        .select(
-            "owner",
-            "event_id",
-            "entry_reward_hex",
-            "leaf_pos",
-            "leaf_hash",
-            "path",
-            "root",
-            "reward_hex",
-            "n_zero_supply",
-            "n_overflow",
-            "min_block",
-            "max_block",
-            "range_digest",
-            F.lit(rate).alias("rewards_rate"),
-        )
+    rewards = erc20_weighted_sum_u256(spark, sf_dir, rate)
+    return paths.join(rewards, "owner").select(
+        "owner",
+        "event_id",
+        "entry_reward_hex",
+        "leaf_pos",
+        "leaf_hash",
+        "path",
+        "root",
+        "reward_hex",
+        "n_zero_supply",
+        "n_overflow",
+        *_prov_cols(window),
+        F.lit(rate).alias("rewards_rate"),
     )
 
 
@@ -1056,9 +960,12 @@ def _serve_q2_response(
 
     contract = CONTRACT if contract is None else contract
     path = Q2_RESPONSE.path(sf_dir, contract=contract)
+    # a response is ≤ TOP_L rows, published as one file
     out = artifacts.serve_frame(
         spark, path,
-        lambda: verifiable_query_response(spark, sf_dir, contract=contract),
+        lambda: verifiable_query_response(
+            spark, sf_dir, contract=contract
+        ).coalesce(1),
     )
     artifacts.publish_manifest(
         path, "q2", [f"{sf_dir}/events.parquet"], {"contract": contract}
@@ -1067,10 +974,12 @@ def _serve_q2_response(
 
 
 def _serve_erc20_response(spark: SparkSession, sf_dir: str) -> DataFrame:
-    axes = _erc20_axes()
+    from euclid_spark.operators.euclid import CONTRACT, REWARDS_RATE
+
+    axes = {"rate": REWARDS_RATE, "contract": CONTRACT}
     path = ERC20_RESPONSE.path(sf_dir, **axes)
-    out = artifacts.serve_frame(
-        spark, path, lambda: erc20_verifiable_response(spark, sf_dir)
+    out = artifacts.serve_frame(  # ≤ TOP_L rows: one file, as for Q2
+        spark, path, lambda: erc20_verifiable_response(spark, sf_dir).coalesce(1)
     )
     artifacts.publish_manifest(
         path, "erc20", [f"{sf_dir}/events.parquet"], axes

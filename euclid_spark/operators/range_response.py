@@ -116,6 +116,7 @@ from euclid_spark.catalog import local_frame
 from euclid_spark.functions.u256 import u256_to_hex
 from euclid_spark.operators.euclid import CONTRACT, REWARDS_RATE
 from euclid_spark.operators.merkle import (
+    _path_steps,
     merkle_levels,
     merkle_levels_local,
     merkle_roots,
@@ -381,22 +382,6 @@ def _leaf_hex(family: str, r: dict) -> str:
     if family == "erc20":
         return _sha(f"{r['event_id']}:{r['entry_reward_hex']}")
     return _sha(r["token_id"])
-
-
-def _path_steps(
-    nodes: "dict[tuple[int, int], str]", depth: int, pos: int, off: int = 0
-) -> "list[str]":
-    """The A18 opening steps of node `pos` of level 0 through levels
-    0..depth-1 of `nodes`: the sibling of its ancestor at each level,
-    tagged `<off + level><side>`, and no step at a promotion (absent
-    sibling)."""
-    steps = []
-    for j in range(depth):
-        anc = pos >> j
-        h = nodes.get((j, anc ^ 1))
-        if h is not None:
-            steps.append(f"{off + j}{'R' if anc % 2 == 0 else 'L'}:{h}")
-    return steps
 
 
 def _edge_rows(

@@ -863,8 +863,9 @@ ERC20_REWARD_TREE = TileTree(
     cols=_ERC20_SUMS,
     edge_cols=("l0", "l1", "l2", "l3", "zs", "of"),
     fold=_erc20_fold,
-    # the un-range-restricted sibling of merkle.erc20_entry_leaves: the
-    # leaf circuit runs once per corpus version, here
+    # the leaf circuit runs once per corpus version, here: the tree
+    # build, its edge windows, the range responses, and the pinned A13,
+    # A23 and A24 (over the pinned window) all read these rows
     store=artifacts.Artifact(
         "erc20_all_entry_leaves", "events",
         dict(op="erc20_all_entry_leaves", tile=TILE_SIZE, layout="owner_v1"),

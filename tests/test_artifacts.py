@@ -238,7 +238,7 @@ def test_gc_keeps_current_manifest_drops_superseded(spark, tmp_path, monkeypatch
 def test_gc_keeps_every_fingerprint_of_a_parameterized_name(
     spark, tmp_path, monkeypatch
 ):
-    """Contract-keyed artifact families (q2_response, owner_token_tree)
+    """Contract-keyed artifact families (q2_response, q2_entry_store)
     hold MULTIPLE live fingerprints under one name prefix — gc with a
     set keeps them all; the r11 trap was gc(default-contract fp)
     deleting the alt contract's current artifact."""

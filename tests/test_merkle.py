@@ -292,3 +292,51 @@ def test_verify_response_rejects_tampering(spark):
     # forged provenance: binding check fails
     t4 = verdicts(resp.withColumn("range_digest", F.col("range_digest") + 1))
     assert all(not r["binding_ok"] for r in t4)
+
+
+def test_pinned_faces_refuse_a_corpus_out_of_block_order(
+    spark, tmp_path, monkeypatch
+):
+    """The pinned faces read the entry stores over the pinned range's
+    event_id window, which is exact only when blocks are numbered in
+    time order across the range's edges (euclid.pinned_window's corpus
+    rule). On a copy of the corpus where one event inside the window's
+    event_id span has its ts moved past T_MAX, every such face raises
+    instead of answering from the window."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from euclid_spark import registry
+    from euclid_spark.operators.euclid import T_MAX, pinned_window
+
+    monkeypatch.setenv("EUCLID_SPARK_ARTIFACTS", str(tmp_path / "_arts"))
+    min_b, max_b, _ = pinned_window(spark, SF_SMOKE)
+    t = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    ids = t["event_id"].to_pylist()
+    inside = sorted(e for e in ids if min_b < e < max_b)
+    ts = t["ts"].to_pylist()
+    ts[ids.index(inside[len(inside) // 2])] = (
+        dt.datetime.fromisoformat(T_MAX) + dt.timedelta(days=1)
+    )
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    pq.write_table(
+        t.set_column(
+            t.schema.get_field_index("ts"), "ts",
+            pa.array(ts, t.schema.field("ts").type),
+        ),
+        corpus / "events.parquet",
+    )
+    qs = registry.queries()
+    for name in (
+        "euclid_erc20_weighted_sum_u256",
+        "euclid_verifiable_response",
+        "euclid_batch_verifiable_responses",
+        "euclid_erc20_verifiable_response",
+        "euclid_erc20_batch_responses",
+    ):
+        with pytest.raises(ValueError, match="corpus rule"):
+            qs[name](spark, str(corpus))

@@ -712,16 +712,48 @@ def test_no_keyed_sort_aggregate_in_events_rollups(spark):
         assert not m, f"{fn.__name__} plans a keyed SortAggregate"
 
 
-def test_a20_reveal_bound_reaches_leaf_scan(spark):
-    """r15: A20's orderBy+limit reveal bound cannot push through the
-    path aggregation, so the face filters pos < L at the leaf source —
-    the served leaf scan must carry the LessThan(pos) pushed filter
-    (openings are built for revealed rows only, never the owner's
-    whole token set)."""
-    from euclid_spark.operators import merkle
+def test_pinned_responses_make_one_bounded_entry_store_read(
+    spark, monkeypatch
+):
+    """A warm A20 or A23 call (one owner over the pinned range) makes
+    exactly one `artifacts.read_rows` call: of its family's entry store,
+    filtered to the owner and the pinned window's event_id span; and it
+    runs no Spark job before it is acted on."""
+    import os
 
-    plan = _plan(merkle.verifiable_query_response(spark, SF_SMOKE))
-    assert "LessThan(pos" in plan, "reveal bound not pushed to leaf scan"
+    from euclid_spark import artifacts
+    from euclid_spark.operators import merkle
+    from euclid_spark.operators.euclid import OWNER, pinned_window
+
+    faces = {
+        merkle.verifiable_query_response: "q2_entry_store_",
+        merkle.erc20_verifiable_response: "erc20_all_entry_leaves_",
+    }
+    for fn in faces:  # warm: build the stores, resolve the window
+        assert fn(spark, SF_SMOKE).count() > 0
+    min_b, max_b, _ = pinned_window(spark, SF_SMOKE)
+    reads = []
+    orig = artifacts.read_rows
+
+    def spy(path, filter=None, columns=None):
+        reads.append((path, filter))
+        return orig(path, filter, columns)
+
+    monkeypatch.setattr(artifacts, "read_rows", spy)
+    for fn, store in faces.items():
+        reads.clear()
+        before = _newest_job_id(spark)
+        df = fn(spark, SF_SMOKE)
+        assert _newest_job_id(spark) == before, f"{fn.__name__} ran a Spark job"
+        assert len(reads) == 1, (fn.__name__, reads)
+        path, flt = reads[0]
+        assert os.path.basename(path).startswith(store), (fn.__name__, path)
+        assert flt == [[
+            ("owner", "=", OWNER),
+            ("event_id", ">=", min_b),
+            ("event_id", "<=", max_b),
+        ]], (fn.__name__, flt)
+        assert df.count() > 0
 
 
 def test_preprocessing_shares_one_day_owner_exchange(spark):

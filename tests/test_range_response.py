@@ -847,23 +847,18 @@ def test_commitment_stores_are_byte_identical_across_builds(
     spark, tmp_path, monkeypatch
 ):
     """Building the two keyed tile trees (each node's aggregate and its
-    cell-tree digest), their two entry stores (the in-cell trees'
-    leaves too) and merkle.py's owner-token and ERC-20 entry trees
-    (leaves and nodes) twice, each time into an empty artifact root,
-    writes the same part files byte for byte: the owner and event_id
+    cell-tree digest) and their two entry stores (the leaves of the
+    in-cell trees and of the pinned responses) twice, each time into an
+    empty artifact root, writes the same part files byte for byte: the
+    owner and event_id
     clustering is a function of the data, not of a sampled bound, and
     each store's sort is a total order. The two owner-keyed trees are
     in the chain layout and carry both their payload columns and
     `node_hash`."""
-    import glob
     import os
 
     from euclid_spark import artifacts
     from euclid_spark.cache import release_all
-    from euclid_spark.operators.merkle import (
-        _erc20_entry_tree,
-        _owner_token_tree,
-    )
     from euclid_spark.operators.range_tree import (
         ERC20_REWARD_TREE,
         Q2_KEY_TREE,
@@ -876,11 +871,6 @@ def test_commitment_stores_are_byte_identical_across_builds(
             for tree in (Q2_KEY_TREE, ERC20_REWARD_TREE)
             for store in (True, False)
         ]
-        _owner_token_tree(spark, SF_SMOKE)
-        _erc20_entry_tree(spark, SF_SMOKE)
-        for name in ("owner_token", "erc20_entry"):
-            for kind in ("leaves", "nodes"):
-                paths += glob.glob(str(root / f"{name}_{kind}_*.parquet"))
         parts: "dict[tuple, bytes]" = {}
         for path in paths:
             store = os.path.basename(path).rsplit("_", 1)[0]
@@ -902,8 +892,6 @@ def test_commitment_stores_are_byte_identical_across_builds(
     assert {k[0] for k in first} == {
         "q2_key_tiles", "q2_entry_store",
         "erc20_reward_tiles", "erc20_all_entry_leaves",
-        "owner_token_leaves", "owner_token_nodes",
-        "erc20_entry_leaves", "erc20_entry_nodes",
     }
     assert first.keys() == second.keys()
     assert all(first[k] == second[k] for k in first), sorted(
@@ -924,11 +912,12 @@ def test_incell_refold_equals_merkle_levels(spark):
     import sys
 
     from euclid_spark.operators.merkle import (
+        _path_steps,
         merkle_levels,
         merkle_levels_local,
         merkle_opening_paths,
     )
-    from euclid_spark.operators.range_response import _path_steps, _sha
+    from euclid_spark.operators.range_response import _sha
     from tests.conftest import REPO
 
     sys.path.insert(0, str(REPO / "tools"))

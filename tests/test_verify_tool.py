@@ -291,6 +291,34 @@ def test_discovery_skips_other_corpus_manifests(responses, tmp_path):
     assert vr._discover(alt, SF_SMOKE) == []
 
 
+def test_republish_under_a_new_fingerprint_retires_the_old_manifest(tmp_path):
+    """A response re-keyed for the same corpus version and params (a
+    prover keying change) is discovered at its NEW path only: publishing
+    retires the name's older manifests with equal sources and params.
+    A manifest for another contract or another corpus survives."""
+    root = tmp_path / "artifacts"
+    root.mkdir()
+    other_corpus = tmp_path / "events.parquet"
+    other_corpus.write_bytes(b"x")
+
+    def publish(fp: str, src: str, contract: str) -> str:
+        path = str(root / f"q2_response_{fp}.parquet")
+        os.makedirs(path)
+        artifacts.publish_manifest(path, "q2", [src], {"contract": contract})
+        return path
+
+    publish("a", _events(), vr.CONTRACT)
+    publish("click", _events(), "click")
+    publish("other", str(other_corpus), vr.CONTRACT)
+    b = publish("b", _events(), vr.CONTRACT)
+    assert vr._discover(str(root), SF_SMOKE) == [(b, "q2")]
+    assert sorted(p.name for p in root.glob("*.manifest.json")) == [
+        "q2_response_b.manifest.json",
+        "q2_response_click.manifest.json",
+        "q2_response_other.manifest.json",
+    ]
+
+
 # ---- eth_getProof capture: the fifth family through the same tool -------
 
 

@@ -133,11 +133,6 @@ def parquet_files(path: str) -> "list[str]":
     ) if os.path.isdir(path) else [path]
 
 
-# the owner column of the owner-keyed stores (the tile trees and entry
-# stores; merkle.py's stores call it group_key)
-OWNER_KEYS = ("owner", "group_key")
-
-
 def artifact_stats(path: str) -> dict:
     """{"bytes", "files", "row_groups", "max_row_group_rows", "rows",
     "codec", "column_bytes"[, "owner_reads"]} of a parquet artifact:
@@ -172,9 +167,8 @@ def artifact_stats(path: str) -> dict:
         "codec": sorted(codecs),
         "column_bytes": cols,
     }
-    key = next((k for k in OWNER_KEYS if k in cols), None)
-    if key is not None:
-        out["owner_reads"] = owner_reads(path, key)
+    if "owner" in cols:  # the tile trees and the entry stores
+        out["owner_reads"] = owner_reads(path)
     return out
 
 
@@ -191,8 +185,8 @@ def row_groups_touched(dataset, filter) -> "list[int]":
     ]
 
 
-def owner_reads(path: str, key: str = "owner") -> dict:
-    """For an owner-keyed store, over its owners (`key` = owner reads):
+def owner_reads(path: str) -> dict:
+    """For an owner-keyed store, over its owners (`owner` reads):
     `max_row_groups` and `max_rows_decoded`, the most row groups and
     rows one owner's read decodes; `max_owner_rows`, the most rows one
     owner holds; and `over_bound`, the owners whose read touches more
@@ -202,8 +196,8 @@ def owner_reads(path: str, key: str = "owner") -> dict:
     import pyarrow.dataset as pds
 
     ds = pds.dataset(path, format="parquet")
-    rows = Counter(ds.to_table(columns=[key]).column(key).to_pylist())
-    touched = {o: row_groups_touched(ds, pds.field(key) == o) for o in rows}
+    rows = Counter(ds.to_table(columns=["owner"]).column("owner").to_pylist())
+    touched = {o: row_groups_touched(ds, pds.field("owner") == o) for o in rows}
     cap = artifacts.ROW_GROUP_ROWS
     return {
         "owners": len(rows),
